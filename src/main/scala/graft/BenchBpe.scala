@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Production-scale BPE evidence — the round-4 verdict's "BPE is
@@ -24,17 +23,8 @@ object BenchBpe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val numMerges = args.lift(1).map(_.toInt).getOrElse(2000)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-bpe")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, "graft-bench-bpe",
+      GraftSession.ScanSplits)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))

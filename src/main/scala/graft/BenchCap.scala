@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,15 +26,8 @@ object BenchCap {
     val hotPct = args.lift(1).map(_.toInt).getOrElse(50)
     val cores = args.lift(2).map(_.toInt).getOrElse(16)
     val maxBucket = 1000
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores * 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.SessionTuning(spark)
+    val spark = GraftSession.local(cores, "graft-bench-cap",
+      "spark.sql.shuffle.partitions" -> (cores * 2).toString)
 
     // hotPct% of rows land in ONE (band, bucket) — the viral
     // boilerplate page every real crawl has; the rest spread over

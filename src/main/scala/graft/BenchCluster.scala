@@ -50,23 +50,10 @@ object BenchCluster {
   val ShmLocalDir = "/dev/shm/spark-tmp"
 
   def childMain(pagesPath: String, threads: Int, slice: Int, of: Int): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName(s"graft-exec-$slice")
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", ShmLocalDir)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      // OFF: alias-substitution in constraint propagation goes
-      // exponential on deep multi-referenced text-feature projections
-      // (e.g. the curation gate) and we never benefit from inferred
-      // filters; see Curation.curate scaladoc
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(threads, s"graft-exec-$slice",
+      GraftSession.ScanSplits, "spark.local.dir" -> ShmLocalDir,
+      GraftSession.unpinnedZone)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.ops.SessionTuning(spark)
     import spark.implicits._
     // disjoint slice: files are bucketed by directory (bucket=<id>)
     val dirs = new File(pagesPath).listFiles()
@@ -133,19 +120,9 @@ object BenchCluster {
     val path =
       s"/dev/shm/graft_bench_bucketed_${nPages}_${boost}_v${graft.gen.PagesGen.Version}"
     if (!new File(path + "/_SUCCESS").exists()) {
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.host", "localhost")
-        // OFF: alias-substitution in constraint propagation goes
-        // exponential on deep multi-referenced text-feature projections
-        // (e.g. the curation gate) and we never benefit from inferred
-        // filters; see Curation.curate scaladoc
-        .config("spark.sql.constraintPropagation.enabled", "false")
-        .getOrCreate()
+      val spark = GraftSession.local(32, "graft-bench-table",
+        "spark.sql.shuffle.partitions" -> "64", GraftSession.unpinnedZone)
       spark.sparkContext.setLogLevel("ERROR")
-      graft.ops.SessionTuning(spark)
       import org.apache.spark.sql.functions._
       graft.gen.PagesGen.pages(spark, nPages, 42, 64, boost)
         .withColumn("bucket", pmod(xxhash64(col("url")), lit(64)))

@@ -27,22 +27,9 @@ import scala.sys.process._
 object BenchCurateScale {
 
   def childMain(cpus: Int, nDocs: Long): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-curate-scale-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", BenchCluster.ShmLocalDir)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      // OFF: alias-substitution in constraint propagation goes
-      // exponential on deep multi-referenced text-feature projections
-      // (e.g. the curation gate) and we never benefit from inferred
-      // filters; see Curation.curate scaladoc
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus, s"graft-curate-scale-$cpus",
+      "spark.local.dir" -> BenchCluster.ShmLocalDir, GraftSession.unpinnedZone)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.ops.SessionTuning(spark)
     def job(n: Long): Long =
       graft.ops.Curation.curate(
         gen.DocsGen.docs(spark, n), "doc_id", "text").count()

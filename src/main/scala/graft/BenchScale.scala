@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** 10×-scale evidence harness — the round-4 verdict's top gap:
   * `/root/testdata` stops at sf0.1 (5k docs / 2k vectors), so every
@@ -47,20 +46,8 @@ object BenchScale {
     val n1 = sys.env.getOrElse("SPARK_GRAFT_SCALE_N1", "5000").toLong
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-scale")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.SessionTuning(spark)
+    val spark = GraftSession.local(cpus, "graft-bench-scale",
+      GraftSession.SplitRules: _*)
 
     val scales = Seq(1, factor)
     val dirs = scales.map { s =>

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Curation
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,14 +20,8 @@ object BenchShard {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(5000000L)
     val cores = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores * 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cores, "graft-bench-shard",
+      "spark.sql.shuffle.partitions" -> (cores * 2).toString)
 
     // 90% of the corpus in one stratum ("en") — the web reality
     val docs = spark.range(0, rows, 1, cores * 2)

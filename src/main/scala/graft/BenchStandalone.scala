@@ -185,37 +185,25 @@ object BenchStandalone {
     val ws = startWorkers(workers, cores, "3g")
     try {
       waitForAliveWorkers(workers)
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master(masterUrl)
-        .appName(s"graft-standalone-$workers")
-        .config("spark.executor.cores", cores.toString)
-        .config("spark.executor.memory", "2g")
+      val spark = GraftSession.local(workers * cores,
+        s"graft-standalone-$workers",
+        "spark.master" -> masterUrl,
+        "spark.executor.cores" -> cores.toString,
+        "spark.executor.memory" -> "2g",
         // ship the app jar exactly as spark-submit would (running the
         // classes dir via executor extraClassPath instead trips lambda
         // deserialization: SerializedLambda → Function3 cast failures)
-        .config("spark.jars", appJar)
-        .config("spark.executor.extraJavaOptions",
+        "spark.jars" -> appJar,
+        "spark.executor.extraJavaOptions" ->
           ("-Xmn1500m -XX:+AlwaysPreTouch " +
             s"-XX:ActiveProcessorCount=$cores " +
-            addOpens.mkString(" ")))
-        .config("spark.cores.max", (workers * cores).toString)
-        .config("spark.sql.shuffle.partitions", (workers * cores).toString)
-        .config("spark.sql.files.maxPartitionBytes",
-          (8 * 1024 * 1024).toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.local.dir", BenchCluster.ShmLocalDir)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.host", "localhost")
+            addOpens.mkString(" ")),
+        "spark.cores.max" -> (workers * cores).toString,
+        GraftSession.ScanSplits,
+        "spark.local.dir" -> BenchCluster.ShmLocalDir,
         // all executors must be up before the first measured pass
-        .config("spark.scheduler.minRegisteredResourcesRatio", "1.0")
-        .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "60s")
-        // OFF: alias-substitution in constraint propagation goes
-        // exponential on deep multi-referenced text-feature projections
-        // (e.g. the curation gate) and we never benefit from inferred
-        // filters; see Curation.curate scaladoc
-        .config("spark.sql.constraintPropagation.enabled", "false")
-        .getOrCreate()
+        "spark.scheduler.minRegisteredResourcesRatio" -> "1.0",
+        "spark.scheduler.maxRegisteredResourcesWaitingTime" -> "60s")
       spark.sparkContext.setLogLevel("ERROR")
       try {
         import spark.implicits._

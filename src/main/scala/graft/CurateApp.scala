@@ -2,7 +2,6 @@ package graft
 
 import graft.io.StagedJob
 import graft.ops.Curation
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point for the corpus-curation pipeline (the
@@ -57,21 +56,7 @@ object CurateApp {
     val idCol = opts.getOrElse("id", "doc_id")
     val textCol = opts.getOrElse("text", "text")
 
-    val spark = SparkSession.builder()
-      .config("spark.master",
-        sys.props.getOrElse("spark.master",
-          sys.env.getOrElse("SPARK_MASTER", "local[*]")))
-      .appName("graft-curate")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // OFF: alias-substitution in constraint propagation goes
-      // exponential on deep multi-referenced text-feature projections
-      // (e.g. the curation gate) and we never benefit from inferred
-      // filters; see Curation.curate scaladoc
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.SessionTuning(spark)
+    val spark = GraftSession.submit("graft-curate")
 
     val (docs, idCol0, textCol0) =
       if (input.startsWith("pages:") || input.startsWith("warc:")) {

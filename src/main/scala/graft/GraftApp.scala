@@ -5,7 +5,7 @@ import graft.io.TableIO
 import graft.model.Page
 import graft.pipeline.ExtractionPipeline
 import graft.rules.RuleSets
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point (north_rule: "run via spark-submit").
@@ -32,23 +32,7 @@ object GraftApp {
     val rs = if (opts.getOrElse("variant", "plugin") == "soa") RuleSets.soa
       else RuleSets.plugin
 
-    // spark-submit provides spark.master; bare `runMain` falls back to
-    // local[*] so the app is drivable in this sandbox too
-    val spark = SparkSession.builder()
-      .config("spark.master",
-        sys.props.getOrElse("spark.master",
-          sys.env.getOrElse("SPARK_MASTER", "local[*]")))
-      .appName("graft-extract")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // OFF: alias-substitution in constraint propagation goes
-      // exponential on deep multi-referenced text-feature projections
-      // (e.g. the curation gate) and we never benefit from inferred
-      // filters; see Curation.curate scaladoc
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.SessionTuning(spark)
+    val spark = GraftSession.submit("graft-extract")
     import spark.implicits._
 
     val pages: Dataset[Page] =

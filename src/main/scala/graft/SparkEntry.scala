@@ -342,31 +342,13 @@ object SparkEntry {
       concat_ws("\n", header, rowA, lit("| Balance |  |  |  |"), rowC))
   }
 
-  /** Session tuning applied by every catalog query before it builds a
-    * plan (idempotent, runtime-settable conf — the frozen harness
-    * builders cannot carry it the way they carry
-    * spark.sql.constraintPropagation).
-    *
-    * InferFiltersFromGenerate synthesizes `size(arr) > 0 AND
-    * isnotnull(arr)` above every non-outer explode; filter pushdown
-    * then SUBSTITUTES the generator's full expression tree through the
-    * projection chain down to the scan, so a DERIVED array (tokenize →
-    * shingle → hash, the shape of every explode in this engine) is
-    * recomputed wholesale inside the scan's Filter — and single-
-    * threaded when the scan is one row group. Measured on the q95
-    * thin-table build at sf0.1: 3.3 s → 0.26 s (13×) with the rule
-    * excluded; the inferred predicate can never reach parquet
-    * (PushedFilters stays empty — it references computed columns), so
-    * at ANY scale it is pure duplicated CPU on the hottest per-row
-    * kernels. No catalog query explodes a stored array column, so the
-    * rule has nothing to offer here.
+  /** Every query applies [[graft.ops.SessionTuning]] before it builds a
+    * plan, so sessions built outside [[GraftSession]] (Bench, Verify)
+    * run the catalog tuned too.
     */
-  private def tuneSession(s: SparkSession): Unit =
-    graft.ops.SessionTuning(s)
-
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (n, f) =>
-      n -> { (s: SparkSession, d: String) => tuneSession(s); f(s, d) }
+      n -> { (s: SparkSession, d: String) => graft.ops.SessionTuning(s); f(s, d) }
     }
 
   private def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(

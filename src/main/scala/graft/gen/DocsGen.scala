@@ -85,7 +85,7 @@ object DocsGen {
     * (did%17), exact-dup decade groups (did%10<2), near-dup pairs
     * (did%10∈{4,5}, one-token difference), a PII contact line, and
     * shared boilerplate paragraphs. Shared by [[docs]] and the
-    * stage-timing profiler (BenchCurate) so both measure the same
+    * benchmark's `curate` workload (perfbench) so both measure the same
     * workload shape; q43's inline twin is the oracle-pinned spec.
     */
   def plantedText(did: Column, base: Column): Column = {

@@ -590,11 +590,11 @@ object Curation {
 
   // ---- composed curation pipeline ----
 
-  /** The conf every entry point in this repo sets (see curate's
-    * scaladoc); a user embedding the library in their own session can
-    * miss it, and the failure mode is a driver OOM minutes later with
-    * no pointer back to the cause — so the pipeline checks and warns
-    * loudly up front.
+  /** The conf `GraftSession`, Bench and Verify set on every session
+    * (see curate's scaladoc); a user embedding the library in their
+    * own session can miss it, and the failure mode is a driver OOM
+    * minutes later with no pointer back to the cause — so the
+    * pipeline checks and warns loudly up front.
     */
   private def warnIfConstraintPropagation(df: DataFrame): Unit =
     if (df.sparkSession.conf
@@ -619,7 +619,7 @@ object Curation {
     * Returns (idCol, lang, n_tokens, clean_text) for surviving docs.
     *
     * REQUIRED SESSION CONF: `spark.sql.constraintPropagation.enabled=
-    * false` (set by every entry point in this repo). The gate filter's
+    * false` (GraftSession, Bench and Verify set it). The gate filter's
     * condition sits above several levels of multi-referenced text-
     * feature projections; constraint propagation substitutes aliases
     * into the constraint set level by level, which materializes the
@@ -2164,7 +2164,7 @@ object Curation {
       .select(col("id"), col("_tk"),
         // outer + null-filter: the filter inferred above a non-outer
         // generate re-runs the whole boundary computation inside the
-        // scan (SparkEntry.tuneSession); the span array is never empty
+        // scan (SessionTuning); the span array is never empty
         // (_starts always holds position 0)
         posexplode_outer(zip_with(col("_starts"), col("_ends"),
           (s, e) => struct(s.as("s"), e.as("e"))))

@@ -436,7 +436,7 @@ object Dedup {
     // hash) table — the corpus is tokenized exactly once.
     // explode_outer + null-filter: the filter the optimizer would infer
     // above a plain explode re-runs the whole tokenize+shingle chain
-    // inside the scan (SparkEntry.tuneSession documents the 13×
+    // inside the scan (SessionTuning documents the 13×
     // measurement); shingle arrays carry no null elements, so this is
     // explode's exact row set
     val thin = sh.select(col("id"), explode_outer(col("sh")).as("_s"))
@@ -534,7 +534,7 @@ object Dedup {
     })
     // outer + null-filter: the inferred-filter pushdown of a plain
     // explode re-runs the whole O(m·w) winnow map inside the scan
-    // (SparkEntry.tuneSession); sels is never empty (m ≥ 1 after the
+    // (SessionTuning); sels is never empty (m ≥ 1 after the
     // size filter) and carries no null elements
     grams.select(col(idCol),
         explode_outer(array_distinct(sels)).as("_sel"))

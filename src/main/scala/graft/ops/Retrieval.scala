@@ -49,7 +49,7 @@ object Retrieval {
     // explode_outer + null-filter, NOT explode: the optimizer infers a
     // `size(arr) > 0` filter above a non-outer explode and pushes the
     // generator's whole derived expression (the tokenize) into the
-    // scan, recomputing it per row — see SparkEntry.tuneSession. The
+    // scan, recomputing it per row — see SessionTuning. The
     // outer form plans no inferred filter in ANY session; token arrays
     // carry no null elements, so dropping the empty-array marker row
     // is exactly explode's semantics.

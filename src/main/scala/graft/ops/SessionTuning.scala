@@ -3,9 +3,9 @@ package graft.ops
 import org.apache.spark.sql.SparkSession
 
 /** Idempotent, runtime-settable session tuning every entry point in
-  * this repo applies (the catalog wraps it around each query —
-  * SparkEntry.tuneSession — and the operator-driving mains call it
-  * right after building their session).
+  * this repo applies: `GraftSession` calls it on every session it
+  * builds, and `SparkEntry.queries` calls it before each catalog query,
+  * which covers the `Bench` and `Verify` sessions.
   *
   * InferFiltersFromGenerate synthesizes `size(arr) > 0 AND
   * isnotnull(arr)` above every non-outer explode; filter pushdown then
@@ -19,7 +19,8 @@ import org.apache.spark.sql.SparkSession
   * containment thin-table build at sf0.1: 3.3 s → 0.26 s (13×) with
   * the rule excluded. The hottest operators additionally use
   * explode_outer + null-filter so they stay safe in sessions that
-  * never saw this conf.
+  * never saw this conf. No catalog query explodes a stored array
+  * column, so the rule has nothing to offer here.
   */
 object SessionTuning {
   private val Key = "spark.sql.optimizer.excludedRules"

@@ -42,7 +42,7 @@ object SuffixArray {
     // posexplode_outer + null-filter, not posexplode: a non-outer
     // generate gets a `size(arr) > 0` filter inferred above it, and its
     // pushdown recomputes the whole tokenize inside the scan
-    // (SparkEntry.tuneSession has the measurement); empty docs drop via
+    // (SessionTuning has the measurement); empty docs drop via
     // the null marker row exactly as posexplode dropped them
     df.select(col(idCol).cast("long").as("id"),
         Dedup.tokens(col(textCol)).as("_tk"))

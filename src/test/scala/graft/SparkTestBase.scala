@@ -2,22 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole test JVM. */
+/** One shared local SparkSession for the whole test JVM, built the way
+  * the shipped entry points build theirs.
+  */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.host", "localhost")
+  lazy val spark: SparkSession = GraftSession.local(4, "graft-test",
     // bucketed-table tests (BucketingSpec) write managed tables here
-    .config("spark.sql.warehouse.dir",
+    "spark.sql.warehouse.dir" ->
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    // OFF: alias-substitution in constraint propagation goes
-    // exponential on deep multi-referenced text-feature projections
-    // (e.g. the curation gate) and we never benefit from inferred
-    // filters; see Curation.curate scaladoc
-    .config("spark.sql.constraintPropagation.enabled", "false")
-    .getOrCreate()
 }
