@@ -105,7 +105,7 @@ object CurateApp {
     val t0 = System.nanoTime()
     // --span-scrub-n 8: corpus-level exact-substring scrub stage
     // (single parse: the curateStaged call and the stage accounting
-    // below must agree on the stage names it implies).
+    // below both take their stage names from Curation.curateStages).
     // --sa-scrub-n 8: the suffix-array EXACT form of the same stage
     // (any-repeat semantics, no gram-hash space to saturate) — the
     // two are mutually exclusive spellings of stage 2b
@@ -369,25 +369,14 @@ object CurateApp {
     val sec = (System.nanoTime() - t0) / 1e9
 
     val in = docs.count()
-    // must mirror curateStaged's config-coded stage names exactly
-    val sfx = (if (spanScrubN > 0)
-        (if (scrubSa) s"_sa$spanScrubN" else s"_s$spanScrubN") else "") +
-      (if (maxRare >= 0) s"_f$maxRare" else "") +
-      freBand.map { case (lo, hi) => s"_r${lo}_$hi" }.getOrElse("")
-    val stageNames = Seq("1_gate", "2_deboil") ++
-      (if (spanScrubN > 0)
-        Seq(if (scrubSa) s"2b_sascrub$spanScrubN"
-          else s"2b_spanscrub$spanScrubN") else Nil) ++
-      (if (maxRare >= 0) Seq(s"2c_fluency$maxRare") else Nil) ++
-      freBand.map { case (lo, hi) => s"2d_read${lo}_$hi" }.toSeq ++
-      Seq(s"3_exact$sfx", s"4_neardup$sfx")
-    val stages = stageNames
+    val names = Curation.curateStages(spanScrubN, scrubSa, maxRare, freBand)
+    val stages = names.run
       .map(s => s""""$s":${StagedJob.readRows(output, s).getOrElse(-1L)}""")
       .mkString("{", ",", "}")
     val leakJson =
       if (!auditLeakage) ""
       else {
-        val aud = spark.read.parquet(s"$output/stage_5_leakage$sfx")
+        val aud = spark.read.parquet(s"$output/stage_${names.leakage}")
         def leaks(scope: String): Long = aud
           .filter(col("scope") === scope && col("leaks"))
           .agg(coalesce(sum("n_pairs"), lit(0L))).collect()(0).getLong(0)

@@ -6,7 +6,6 @@ import graft.model.Page
 import graft.pipeline.ExtractionPipeline
 import graft.rules.RuleSets
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions._
 
 /** spark-submit entry point (north_rule: "run via spark-submit").
   *

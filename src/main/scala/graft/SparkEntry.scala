@@ -1,71 +1,16 @@
 package graft
 
-import graft.extract.{CharsetSniffer, ErrorPages, LinkExtractor, MetaExtractor}
+import graft.catalog._
 import graft.gen.PagesGen
-import graft.ops.{Bpe, Curation, Dedup, Layout, Multimodal, Retrieval, Robots, SimSearch, Sketch, Skew, TextAnalysis, WebGraph}
 import graft.pipeline.ExtractionPipeline
-import graft.rules.{PageRule, PluginHeader, RecordRule, RuleCompiler, RuleSet, RuleSets}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract: one query per implemented operator (SURVEY §2), each
   * with a DuckDB-runnable oracle where the operator is SQL-expressible.
-  *
-  * Oracle-parity rules used throughout:
-  *  - every query ends in a deterministic total ORDER BY (both sides);
-  *  - money sums go through DECIMAL(18,2) (exact) then cast to DOUBLE;
-  *  - ratios are integer ppm (×1e6, integer division) — no float rounding;
-  *  - the only cross-engine hash is md5 (identical hex both sides);
-  *  - timestamps compared as integer microseconds (unix_micros/epoch_us).
+  * Each query and its oracle live together as one [[catalog.QuerySpec]]
+  * in the `graft.catalog` file of its operator family.
   */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** One suffix-array construction per (session, corpus dir), fenced
-    * by localCheckpoint — the SA is a build-once artifact consumed by
-    * multiple downstream queries (the production shape), so q156
-    * derives from this cached table instead of re-running the doubling
-    * chain q155 already times.
-    */
-  private val saMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private def sharedSa(s: SparkSession, d: String): DataFrame = {
-    // a localCheckpoint'd frame whose blocks were unpersisted (e.g. a
-    // harness that clears all persistent RDDs between queries) cannot
-    // be recomputed — lineage is truncated — so a stale memo hit would
-    // fail its next action; detect eviction and rebuild instead.
-    // Probe the LogicalRDD's OWN rdd: `hit.rdd` would wrap the
-    // checkpoint in a fresh deserialization RDD whose storage level is
-    // always NONE, which would misread every hit as evicted and
-    // silently rebuild the SA per call (measured: q156 0.35 → 11 s)
-    val hit = saMemo.get((s, d))
-    val evicted = hit != null && (hit.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.getStorageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE
-      case _ => false
-    })
-    if (evicted) saMemo.remove((s, d))
-    saMemo.computeIfAbsent((s, d), _ =>
-      ops.SuffixArray.saWithLcp(t(s, d, "documents"), "doc_id", "text")
-        .localCheckpoint())
-  }
-
-  /** [[t]] rebalanced to session parallelism — for queries whose first
-    * stage is a CPU-heavy per-row text kernel (shingling, winnowing,
-    * the curation gate). The sf test tables are single-row-group
-    * parquet, so their scan is ONE task no matter how
-    * maxPartitionBytes is set, serializing the kernel on an artifact
-    * of the tiny fixture files; a production pages table arrives in
-    * thousands of row groups and this exchange is a no-op-sized
-    * rebalance of one linear pass.
-    */
-  private def tSpread(s: SparkSession, dir: String, name: String): DataFrame =
-    t(s, dir, name).repartition(s.sparkContext.defaultParallelism)
 
   /** Flagship: the full web-page extraction pipeline on synthetic pages
     * (driver smoke-checks rows > 0).
@@ -73,273 +18,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ExtractionPipeline.records(PagesGen.pages(spark, 200, 42, 8))
 
-  // ---- shared SQL fragments (DuckDB) ----
-  /** DuckDB cosine over two double-list expressions. */
-  private def cosSql(ae: String, be: String): String =
-    s"""list_sum(list_transform(generate_series(1, len($ae)),
-        i -> $ae[i] * $be[i])) /
-      (sqrt(list_sum(list_transform(generate_series(1, len($ae)),
-        i -> $ae[i] * $ae[i]))) *
-       sqrt(list_sum(list_transform(generate_series(1, len($be)),
-        i -> $be[i] * $be[i]))))"""
-
-  /** Shared IVF CTE chain (q42/q51): v = double embeddings, cents = 16
-    * deterministically sampled centroids, sims = all cosines, cell =
-    * the argmax-cosine assignment (min index on ties — same rule as
-    * SimSearch.ivfCellRanking).
-    */
-  private lazy val ivfCellSqlCtes: String =
-    s"""v AS (SELECT vec_id,
-        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings),
-      cents AS (SELECT ci, e FROM (
-        SELECT row_number() OVER (
-            ORDER BY md5(concat(CAST(vec_id AS VARCHAR), ':42')),
-              CAST(vec_id AS VARCHAR)) - 1 AS ci, e
-        FROM v) WHERE ci < 16),
-      sims AS (SELECT v.vec_id, c.ci, ${cosSql("v.e", "c.e")} AS s
-        FROM v CROSS JOIN cents c),
-      cell AS (SELECT vec_id, min(ci) AS cell FROM (
-        SELECT *, max(s) OVER (PARTITION BY vec_id) AS mx FROM sims)
-        WHERE s = mx GROUP BY vec_id)"""
-
-  /** q103 oracle: the full IVF-PQ chain in SQL — codebook rows sampled
-    * by md5(id:43) exactly as SimSearch.pqCodebooks, per-subspace
-    * encode by squared-L2 argmin (ties to the smaller centroid index),
-    * the per-vector code row pivoted WIDE so the reconstructed norm
-    * and the ADC dot are written as eight explicit left-associated
-    * terms — matching the Spark side's reduce(_ + _) fold order; a
-    * GROUP BY j SUM would add in engine-chosen order and can differ in
-    * the last ulp, flipping the prank boundary — then exact-cosine
-    * re-rank of the top 50 per query.
-    */
-  private lazy val q103Sql: String = {
-    val m = 8; val dsub = 8; val ksub = 16; val nProbe = 4
-    val rerank = 50
-    val js = 0 until m
-    def n2(e: String) =
-      s"list_sum(list_transform(generate_series(1, $dsub), " +
-        s"i -> $e[i] * $e[i]))"
-    val codePivot = js.map(j =>
-      s"max(CASE WHEN j = $j THEN ci END) AS c$j").mkString(", ")
-    val subJoins = js.map(j =>
-      s"JOIN cbsub s$j ON s$j.j = $j AND s$j.ci = w.c$j").mkString(" ")
-    val subCols = js.map(j => s"s$j.ce AS e$j").mkString(", ")
-    val rn2 = js.map(j => n2(s"e$j")).mkString(" + ")
-    val adcTerms = js.map(j =>
-      s"list_sum(list_transform(generate_series(1, $dsub), " +
-        s"i -> vq.e[${j * dsub} + i] * e2.e$j[i]))").mkString(" + ")
-    val qnorm = "sqrt(list_sum(list_transform(" +
-      "generate_series(1, len(vq.e)), i -> vq.e[i] * vq.e[i])))"
-    s"""WITH $ivfCellSqlCtes,
-      cbrows AS (SELECT ci, e FROM (
-        SELECT row_number() OVER (
-            ORDER BY md5(concat(CAST(vec_id AS VARCHAR), ':43')),
-              CAST(vec_id AS VARCHAR)) - 1 AS ci, e
-        FROM v) WHERE ci < $ksub),
-      cbsub AS (SELECT js.j, ci,
-          list_slice(e, js.j * $dsub + 1, js.j * $dsub + $dsub) AS ce
-        FROM cbrows CROSS JOIN
-          (SELECT unnest(generate_series(0, ${m - 1})) AS j) js),
-      enc0 AS (SELECT vv.vec_id, s.j, s.ci,
-          list_sum(list_transform(generate_series(1, $dsub),
-            i -> (vv.e[s.j * $dsub + i] - s.ce[i])
-               * (vv.e[s.j * $dsub + i] - s.ce[i]))) AS d2
-        FROM v vv CROSS JOIN cbsub s),
-      codes AS (SELECT vec_id, j, ci FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, j
-          ORDER BY d2, ci) AS pr FROM enc0) WHERE pr = 1),
-      codesw AS (SELECT vec_id, $codePivot FROM codes GROUP BY vec_id),
-      enc2 AS (SELECT w.vec_id, $subCols FROM codesw w $subJoins),
-      rn2t AS (SELECT vec_id, $rn2 AS rn2 FROM enc2),
-      qp AS (SELECT vec_id AS query_id, ci AS cell FROM (
-        SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-          ORDER BY s DESC, ci) AS pr FROM sims WHERE vec_id < 10)
-        WHERE pr <= $nProbe),
-      cand AS (SELECT qp.query_id, e2.vec_id AS corpus_id,
-          ($adcTerms) / ($qnorm * sqrt(r2.rn2)) AS adc
-        FROM qp JOIN cell cl ON cl.cell = qp.cell
-        JOIN enc2 e2 ON e2.vec_id = cl.vec_id
-        JOIN rn2t r2 ON r2.vec_id = cl.vec_id
-        JOIN v vq ON vq.vec_id = qp.query_id
-        WHERE qp.query_id != cl.vec_id),
-      topc AS (SELECT query_id, corpus_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-          ORDER BY adc DESC, corpus_id) AS prank FROM cand)
-        WHERE prank <= $rerank),
-      ex AS (SELECT t.query_id, t.corpus_id,
-          ${cosSql("vq.e", "vc.e")} AS cosine
-        FROM topc t JOIN v vq ON vq.vec_id = t.query_id
-        JOIN v vc ON vc.vec_id = t.corpus_id),
-      r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, corpus_id) AS rank FROM ex)
-      SELECT query_id, corpus_id, round(cosine, 6) AS cosine, rank
-      FROM r WHERE rank <= 5 ORDER BY query_id, rank"""
-  }
-
-  private val toksSql =
-    """list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), t -> t != '')"""
-  private def tokHashSql(width: Int) =
-    s"CAST(('0x' || substr(md5(t), 1, $width)) AS BIGINT)"
-
-  /** DuckDB twin of TextAnalysis.stopwordHits: tokenize once, count
-    * list membership (same split regex, same IN list).
-    */
-  private def stopHitsSql(words: Seq[String], textExpr: String): String = {
-    val inList = words.map(w => s"'${sqlLit(w)}'").mkString(", ")
-    s"len(list_filter(regexp_split_to_array($textExpr, '\\s+'), " +
-      s"t -> t IN ($inList)))"
-  }
-
-  private def stopHitsCol(words: Seq[String], text: Column): Column =
-    TextAnalysis.stopwordHits(text, words)
-
-  /** Rule set for the documents-table classification demo (q10) — same
-    * compiler as the page classifier, domain-specific keywords.
-    */
-  private val docRules = RuleSet("docs", PluginHeader,
-    pageRules = Seq(
-      PageRule(10, "QueryDoc", Seq("join", "group")),
-      PageRule(8, "StreamDoc", Seq("stream", "window")),
-      PageRule(5, "StorageDoc", Seq("parquet", "scan", "column")),
-      PageRule(0, "OtherDoc", fallback = true)),
-    recordRules = RuleSets.plugin.recordRules,
-    txnTypeRules = RuleSets.plugin.txnTypeRules)
-
-  /** Booking texts for the q31 synthesized routing pages — exercises the
-    * record-rule space (FX, Sell, Buy, UBS, Positions-increase, fallback).
-    */
-  private val RouteBookings = Seq(
-    "FX FORWARD deal", "FX SPOT conversion", "SPOT conversion deal",
-    "YOUR SALE of units", "NEW ISSUE PURCHASE", "REDUCTION of deposit",
-    "Portfolio increase booked", "new investment subscription",
-    "Coupon payment received")
-
-  /** q36 synthesized validator inputs — each list mixes valid, invalid,
-    * and empty shapes so every code of the reference VAL taxonomy
-    * (error_system.py:37-43) fires deterministically on the documents
-    * table. Selected per row by (doc_id + shift) % len, identically in
-    * the Spark query and the generated oracle SQL.
-    */
-  private val ValTradeDates = Seq("15.03.2024", "29.02.2024", "30.02.2024",
-    "31.04.2023", "29.02.2023", "10/11/2023", "2024-13-05", "",
-    "03.07.2025")
-  private val ValSettleDates = Seq("18.03.2024", "01.01.2024", "31.12.2023",
-    "29.02.2024", "31.04.2024", "", "2024-02-30", "05.05.2024")
-  private val ValCurrencies = Seq("USD", "EUR", "XBT", "usd", "", "CHF",
-    "Fee", "JPY")
-  private val ValNets = Seq("1'234.56", "(2'500.00)",
-    "1'000'000'000'000.00", "12.345", "abc", "999'999'999'999.99", "-42",
-    "")
-  private val ValMvs = Seq("500.25", "(0.10)", "9'999'999'999'999.99",
-    "77.777", "12 345.00", "", "n/a", "1.00")
-  private val ValIsins = Seq("", "US0378331005", "US0378331004",
-    "ABCDEFGHIJKL", "CH0012032048", "ZZ9999999990", "BAD", "")
-
-  /** q37 synthesized multi-script texts (one per script family the
-    * langId classifier recognizes, plus Latin controls and a
-    * latin-dominant mixed case). Everything BMP, so char counts agree
-    * across UTF-16 (Spark) and codepoints (DuckDB).
-    */
-  private val ScriptSnippets = Seq(
-    "the quick brown fox jumps over the lazy dog and the cat",
-    "der hund und die katze ist nicht ein pferd",
-    "这是一个简单的中文句子没有任何其他文字",
-    "これは簡単な日本語の文です",
-    "한국어로 된 간단한 문장입니다",
-    "это простое предложение на русском языке",
-    "هذه جملة بسيطة باللغة العربية",
-    "αυτή είναι μια απλή ελληνική πρόταση",
-    "זהו משפט פשוט בעברית",
-    "यह हिंदी में एक सरल वाक्य है",
-    "นี่คือประโยคง่ายๆในภาษาไทย",
-    "mixed 中文 with mostly english words around it")
-
-  private def pickCol(did: Column, vals: Seq[String], shift: Int): Column =
-    vals.zipWithIndex.foldRight(lit("")) { case ((v, i), els) =>
-      when(pmod(did + shift, lit(vals.length)) === i, lit(v)).otherwise(els)
-    }
-
-  /** q30 synthesized event-page inputs — mixes of valid and invalid
-    * shapes so the full event vocabulary (page events, route events
-    * incl. the fallback, every VAL_* code, stitch events) fires
-    * deterministically from `documents` rows. Trade/settle entries are
-    * all DD.MM.YYYY-SHAPED (the row-validity filter requires a shaped
-    * first cell) but mix calendar-valid and impossible dates; selected
-    * per row by (doc_id + shift) % len, identically in the Spark query
-    * and the generated oracle SQL (q30Sql).
-    */
-  private val EvTradeDates = Seq("15.03.2024", "29.02.2024", "30.02.2024",
-    "31.04.2023", "01.01.2024", "29.02.2023")
-  private val EvSettleDates = Seq("18.03.2024", "30.02.2024", "01.01.2020",
-    "29.02.2024", "31.12.2023")
-  private val EvCurrencies = Seq("USD", "EUR", "XBT", "usd", "CHF", "Fee",
-    "JPY")
-  private val EvNets = Seq("1'234.56", "(2'500.00)", "1'000'000'000'000.00",
-    "12.345", "abc", "999'999'999'999.99", "-42", "12 345.00")
-
-  /** S8 sheet-name mapping (run_hard_core.py:47-54), section → sheet. */
-  private val SheetNames = Seq(
-    "Trade" -> "Trade", "Trade information" -> "Trade",
-    "FXTF" -> "FX & TF", "FX & TF" -> "FX & TF",
-    "Others" -> "Others", "Positions" -> "Positions")
-
-  private def sheetNameCol(section: Column): Column =
-    SheetNames.foldRight(section) { case ((from, to), els) =>
-      when(section === lit(from), lit(to)).otherwise(els)
-    }
-
-  /** q31 synthesized page text, shared construction (see oracle twin):
-    * one '#' header line (did%5 selects the page family) + three
-    * markdown pipe rows (two routable, one noise).
-    */
-  private def routePageCol(did: Column, booking1: Column,
-      booking2: Column): Column = {
-    val header = when(pmod(did, lit(5)) === 0, lit("# Transaction list"))
-      .when(pmod(did, lit(5)) === 1, lit("# Trade information"))
-      .when(pmod(did, lit(5)) === 2, lit("# FX & TF"))
-      .when(pmod(did, lit(5)) === 3, lit("# Account summary")) // Others fallback
-      .otherwise(lit("# Table of contents")) // excluded → Ignore
-    concat_ws("\n", header,
-      concat(lit("| 01.02.2024 | "), booking1,
-        lit(" | USD 1'250.00 | ISIN US0000000001 |")),
-      lit("| Balance |  |  |  |"),
-      concat(lit("| 15.03.2024 | "), booking2,
-        lit(" | EUR 900.00 | note text |")))
-  }
-
-  /** q30 synthesized page text: the five q31 routing families plus a
-    * Positions family whose continuation row exercises segment
-    * stitching; the two transaction rows mix the Ev* validation pools
-    * so every VAL_* code fires. The oracle twin (q30Sql) reconstructs
-    * the identical rows and re-derives classification, routing,
-    * extraction and validation in SQL.
-    */
-  private def eventPageCol(did: Column): Column = {
-    val fam = pmod(did, lit(6))
-    val header = when(fam === 0, lit("# Transaction list"))
-      .when(fam === 1, lit("# Trade information"))
-      .when(fam === 2, lit("# FX & TF"))
-      .when(fam === 3, lit("# Account summary")) // Others fallback
-      .when(fam === 4, lit("# Table of contents")) // excluded → Ignore
-      .otherwise(lit("# Statement of assets")) // Positions
-    def booking(shift: Int): Column =
-      RouteBookings.zipWithIndex.foldRight(lit("")) { case ((b, i), els) =>
-        when(pmod(did + shift, lit(RouteBookings.length)) === i, lit(b))
-          .otherwise(els)
-      }
-    val rowA = concat(lit("| "), pickCol(did, EvTradeDates, 0), lit(" | "),
-      booking(0), lit(" | "), pickCol(did, EvCurrencies, 2), lit(" "),
-      pickCol(did, EvNets, 3), lit(" | ISIN "), pickCol(did, ValIsins, 5),
-      lit(" due "), pickCol(did, EvSettleDates, 1), lit(" |"))
-    val rowC = concat(lit("| "), pickCol(did, EvTradeDates, 4), lit(" | "),
-      booking(3), lit(" | "), pickCol(did, EvCurrencies, 6), lit(" "),
-      pickCol(did, EvNets, 7), lit(" | note text |"))
-    val posPage = concat_ws("\n", header,
-      lit("| USD 100 Apple Inc ISIN US0378331005 | 250.00 | note |"),
-      lit("| quarterly continuation note |  |  |"))
-    when(fam === 5, posPage).otherwise(
-      concat_ws("\n", header, rowA, lit("| Balance |  |  |  |"), rowC))
+  private lazy val specs: Seq[QuerySpec] = {
+    val all = Seq(RelationalQueries.specs, CurationQueries.specs,
+      DedupQueries.specs, TextQueries.specs, WebGraphQueries.specs,
+      RetrievalQueries.specs, SimSearchQueries.specs, CrawlQueries.specs,
+      ExtractionQueries.specs).flatten
+    val dups = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate catalog names: ${dups.mkString(", ")}")
+    all
   }
 
   /** Every query applies [[graft.ops.SessionTuning]] before it builds a
@@ -347,7996 +33,10 @@ object SparkEntry {
     * run the catalog tuned too.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rawQueries.map { case (n, f) =>
-      n -> { (s: SparkSession, d: String) => graft.ops.SessionTuning(s); f(s, d) }
-    }
-
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // A1: grouped aggregation with partial/final hash agg
-    "q01_agg" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double")
-            .as("sum_qty"),
-          count(lit(1)).as("n"),
-          sum(col("l_extendedprice").cast(DecimalType(18, 2))).cast("double")
-            .as("sum_price"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-    // J: multi-way broadcast join
-    "q02_join" -> ((s, d) => {
-      val o = t(s, d, "orders")
-      val c = t(s, d, "customer")
-      val n = t(s, d, "nation")
-      val r = t(s, d, "region")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2))).cast("double")
-            .as("revenue"))
-        .orderBy(col("r_name"), col("n_name"))
-    }),
-    // O4: top-k with deterministic tie-break
-    "q03_topk" -> ((s, d) =>
-      t(s, d, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)),
-    // W: window functions (row_number, lag)
-    "q04_window" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      t(s, d, "events")
-        .select(col("event_id"), col("user_id"),
-          row_number().over(w).as("rn"),
-          lag(col("value"), 1).over(w).as("prev_value"))
-        .orderBy(col("event_id"))
-    }),
-    // J: left semi (EXISTS)
-    "q05_semijoin" -> ((s, d) => {
-      val c = t(s, d, "customer")
-      val o = t(s, d, "orders").filter(col("o_totalprice") > 100.0)
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name").orderBy("c_custkey")
-    }),
-    // J: left anti (NOT EXISTS)
-    "q06_antijoin" -> ((s, d) => {
-      val c = t(s, d, "customer")
-      val o = t(s, d, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name").orderBy("c_custkey")
-    }),
-    // O3: union + distinct
-    "q07_union" -> ((s, d) => {
-      val a = t(s, d, "events").select(col("event_type").as("label"))
-        .distinct().withColumn("src", lit("events"))
-      val b = t(s, d, "part").select(col("p_brand").as("label"))
-        .distinct().withColumn("src", lit("part"))
-      a.unionByName(b).orderBy("label", "src")
-    }),
-    // A: rollup with grouping nulls
-    "q08_rollup" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("yr", year(col("ts")))
-        .rollup(col("yr"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 2))).cast("double")
-            .as("sum_value"))
-        .orderBy(col("yr").asc_nulls_first,
-          col("event_type").asc_nulls_first)),
-    // A4: exact dedup via content grouping
-    "q09_dedup_exact" -> ((s, d) =>
-      t(s, d, "documents")
-        .groupBy(md5(col("text")).as("fp"))
-        .agg(min(col("doc_id")).as("canonical_id"),
-          count(lit(1)).as("n_copies"))
-        .select("canonical_id", "n_copies", "fp")
-        .orderBy("canonical_id")),
-    // C1/X3: rule-compiled classification (when-chain) over documents
-    "q10_classify" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          RuleCompiler.classifyPage(col("text"), docRules).as("doc_class"))
-        .orderBy("doc_id")),
-    // N5-N9: regex field extraction
-    "q11_regex" -> ((s, d) =>
-      t(s, d, "events")
-        .select(col("event_id"),
-          regexp_extract(col("props"), "\"k\": (\\d+)", 1).cast("int")
-            .as("k_val"))
-        .orderBy("event_id")),
-    // G2/A5: window segmentation + segment fold (the stitching primitive)
-    "q12_segment" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "events")
-        .withColumn("seg_id",
-          sum(when(col("event_type") === "signup", 1).otherwise(0)).over(w))
-        .groupBy(col("user_id"), col("seg_id"))
-        .agg(count(lit(1)).as("n"),
-          min(col("event_id")).as("first_ev"),
-          max(col("event_id")).as("last_ev"),
-          sum(col("value").cast(DecimalType(18, 2))).cast("double")
-            .as("sum_value"))
-        .orderBy("user_id", "seg_id")
-    }),
-    // A: conditional aggregation (pivot-shaped)
-    "q13_pivot" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(col("user_id"))
-        .agg(
-          sum(when(col("event_type") === "click", 1).otherwise(0)).as("n_click"),
-          sum(when(col("event_type") === "view", 1).otherwise(0)).as("n_view"),
-          sum(when(col("event_type") === "purchase", 1).otherwise(0))
-            .as("n_purchase"),
-          sum(when(col("event_type") === "signup", 1).otherwise(0))
-            .as("n_signup"),
-          sum(when(col("event_type") === "error", 1).otherwise(0)).as("n_error"),
-          count(lit(1)).as("n_total"))
-        .orderBy("user_id")),
-    // dedup: MinHash signatures (portable LCG over md5-prefix hashes)
-    "q14_minhash" -> ((s, d) =>
-      Dedup.withMinhash(t(s, d, "documents").select("doc_id", "text"),
-        col("text"), 8)
-        .drop("text").orderBy("doc_id")),
-    // dedup: SimHash (16-bit portable variant)
-    "q15_simhash" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"), Dedup.simhash16(col("text")).as("simhash"))
-        .orderBy("doc_id")),
-    // dedup: exact n-gram Jaccard via shingle self-join
-    "q16_jaccard_pairs" -> ((s, d) =>
-      Dedup.ngramJaccardPairs(t(s, d, "documents"), "doc_id", "text", 3)
-        .orderBy(col("jaccard").desc, col("a"), col("b"))
-        .limit(20)),
-    // simsearch: brute-force cosine top-k (baseline)
-    "q17_cosine_topk" -> ((s, d) => {
-      val v = t(s, d, "embeddings")
-      SimSearch.bruteForceTopK(v, v.filter(col("vec_id") < 10), "vec_id",
-        "embedding", 5)
-        .withColumn("cosine", round(col("cosine"), 6))
-        .orderBy("query_id", "rank")
-    }),
-    // simsearch: LSH-bucketed ANN (scale path); oracle = the full
-    // multi-table multi-probe candidate generation + cosine rank as SQL
-    "q18_ann_lsh" -> ((s, d) => {
-      val v = t(s, d, "embeddings")
-      SimSearch.lshTopK(v, v.filter(col("vec_id") < 10), "vec_id",
-        "embedding", 5)
-        .withColumn("cosine", round(col("cosine"), 6))
-        .orderBy("query_id", "rank")
-    }),
-    // simsearch: IVF-Flat ANN (sampled-centroid inverted file) — the
-    // clustered-corpus scale path; fully oracle-checked (sampling,
-    // assignment, probing, scoring are all relational)
-    "q42_ann_ivf" -> ((s, d) => {
-      val v = t(s, d, "embeddings")
-      SimSearch.ivfTopK(v, v.filter(col("vec_id") < 10), "vec_id",
-        "embedding", k = 5, nCells = 16, nProbe = 4)
-        .withColumn("cosine", round(col("cosine"), 6))
-        .orderBy("query_id", "rank")
-    }),
-    // simsearch: IVF-PQ compressed ANN (Jégou et al. 2011) — the
-    // memory-scale path: corpus vectors quantized to m=8 subspace
-    // codes + one reconstructed norm, ADC approximate-cosine candidate
-    // ranking inside the probed cells, exact re-rank of the top 50;
-    // sampling, encoding, probing, ADC and re-rank all oracle-checked
-    "q103_ann_ivfpq" -> ((s, d) => {
-      val v = t(s, d, "embeddings")
-      SimSearch.ivfPqTopK(v, v.filter(col("vec_id") < 10), "vec_id",
-        "embedding", k = 5, nCells = 16, nProbe = 4, m = 8, ksub = 16,
-        rerank = 50)
-        .withColumn("cosine", round(col("cosine"), 6))
-        .orderBy("query_id", "rank")
-    }),
-    // text analysis: quality features as exact integer ppm
-    "q19_quality" -> ((s, d) => {
-      val txt = col("text")
-      val len = length(txt).cast("long")
-      val toks = TextAnalysis.tokenCount(txt).cast("long")
-      val letters = length(regexp_replace(lower(txt), "[^a-z]", ""))
-        .cast("long")
-      val digits = length(regexp_replace(txt, "[^0-9]", "")).cast("long")
-      val stops = stopHitsCol(TextAnalysis.StopEn, lower(txt)).cast("long")
-      t(s, d, "documents").select(
-        col("doc_id"),
-        toks.as("n_tokens"),
-        expr("CAST(length(text) AS LONG)").as("n_chars_m"),
-        when(toks > 0, (len * 100L) / toks).otherwise(lit(0L))
-          .cast("long").as("chars_per_100tok"),
-        when(len > 0, (letters * 1000000L) / len).otherwise(lit(0L))
-          .cast("long").as("alpha_ppm"),
-        when(len > 0, (digits * 1000000L) / len).otherwise(lit(0L))
-          .cast("long").as("digit_ppm"),
-        when(toks > 0, (stops * 1000000L) / toks).otherwise(lit(0L))
-          .cast("long").as("stopword_ppm"))
-        .orderBy("doc_id")
-    }),
-    // text analysis: heuristic language ID
-    "q20_langid" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"), col("lang"),
-          TextAnalysis.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")),
-    // language ID over non-Latin scripts (CJK/Hangul/Cyrillic/Arabic/
-    // Greek/Hebrew/Devanagari/Thai) — same classifier, synthesized
-    // multi-script corpus
-    "q37_langid_scripts" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          pickCol(col("doc_id").cast("long"), ScriptSnippets, 0).as("text"))
-        .withColumn("lang_pred", TextAnalysis.langId(col("text")))
-        .select("doc_id", "text", "lang_pred")
-        .orderBy("doc_id")),
-    // text analysis: document fingerprint + dup grouping
-    "q21_fingerprint" -> ((s, d) =>
-      t(s, d, "documents")
-        .groupBy(TextAnalysis.fingerprint(col("text")).as("fp"))
-        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("min_doc"))
-        .orderBy("min_doc")),
-    // the full extraction pipeline (not SQL-expressible; rows-only)
-    "q22_pipeline_extract" -> ((s, d) =>
-      ExtractionPipeline.records(PagesGen.pages(s, 600, 42, 8))
-        .groupBy(col("target_section"), col("txn_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("net_consideration_num")).as("sum_net"))
-        .orderBy("target_section", "txn_type")),
-    // byte-identity artifact summary (rows-only)
-    "q23_pipeline_bytes" -> ((s, d) =>
-      ExtractionPipeline.mainTexts(PagesGen.pages(s, 600, 42, 8))
-        .groupBy(col("content_kind"))
-        .agg(count(lit(1)).as("n_pages"),
-          sum(length(col("main_text"))).as("total_chars"),
-          sum(size(col("spans"))).as("total_spans"))
-        .orderBy("content_kind")),
-    // sessionization: gap-based (30 min) session windows
-    "q24_sessionize" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "events")
-        .withColumn("us", unix_micros(col("ts").cast("timestamp")))
-        .withColumn("new_sess",
-          when(col("us") - lag(col("us"), 1).over(w) > 1800000000L ||
-            lag(col("us"), 1).over(w).isNull, 1).otherwise(0))
-        .withColumn("session_id", sum(col("new_sess")).over(wRun))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("event_id")).as("first_ev"),
-          max(col("event_id")).as("last_ev"))
-        .orderBy("user_id", "session_id")
-    }),
-    // X4: salted two-stage aggregation (skew-safe; same result as plain)
-    "q25_salted_agg" -> ((s, d) =>
-      Skew.saltedSum(t(s, d, "events"),
-        col("user_id"), col("value").cast(DecimalType(18, 2)), 8, "sum_value")
-        .select(col("_k").as("user_id"),
-          col("sum_value").cast("double").as("sum_value"),
-          col("sum_value_n").as("n"))
-        .orderBy("user_id")),
-    // multimodal plumbing: synth → batched decode stub → resize plan
-    "q26_media" -> ((s, d) =>
-      Multimodal.withResizePlan(
-        Multimodal.decodeStub(Multimodal.synth(s, 500)).toDF())
-        .groupBy(col("kind"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("n_bytes")).as("total_bytes"),
-          sum(col("resize_w")).as("sum_resize_w"))
-        .orderBy("kind")),
-    // multimodal: frame sampling via posexplode(sequence)
-    "q27_frames" -> ((s, d) =>
-      Multimodal.sampleFrames(
-        Multimodal.decodeStub(Multimodal.synth(s, 500)).toDF(), 10000)
-        .groupBy(col("kind"))
-        .agg(count(lit(1)).as("n_frames"),
-          max(col("frame_idx")).as("max_frame_idx"))
-        .orderBy("kind")),
-    // dedup: MinHash-LSH candidate pairs (banded; rows-only)
-    // dedup: minhash-LSH candidate pairs. Token-unigram shingles over
-    // shared-vocabulary text are the DEGENERATE configuration (most
-    // docs collide into a few buckets → quadratic within-bucket join:
-    // measured 250+ s at sf0.1 uncapped) — exactly what maxBucket is
-    // for, so this query runs it capped and the oracle verifies the
-    // cap semantics, not just the happy path.
-    "q28_minhash_lsh" -> ((s, d) =>
-      Dedup.minhashLshPairs(t(s, d, "documents"), "doc_id", "text",
-        k = 16, bands = 8, minEstJaccard = 0.25, maxBucket = 64)
-        .orderBy(col("est_jaccard").desc, col("a"), col("b"))
-        .limit(50)),
-    // dedup: embedding-cosine near-dup pairs (LSH-bucketed; rows-only)
-    "q29_embed_neardup" -> ((s, d) =>
-      Dedup.embeddingNearDupPairs(t(s, d, "embeddings"), "vec_id",
-        "embedding", threshold = 0.2, planes = 4)
-        .withColumn("cosine", round(col("cosine"), 6))
-        .orderBy(col("cosine").desc, col("a"), col("b"))
-        .limit(50)),
-    // dedup: SemDeDup-style semantic dedup — IVF-cell partition +
-    // within-cell cosine, keep-lowest-id per-document verdicts (the
-    // curation-flow form of embedding near-dup; cross-cell misses are
-    // the paper's documented recall trade)
-    "q69_semantic_dedup" -> ((s, d) =>
-      Dedup.semanticDedup(t(s, d, "embeddings"), "vec_id", "embedding",
-        nCells = 16, threshold = 0.3)
-        .withColumn("cell", col("cell").cast("long"))
-        .orderBy("id")),
-    // A3: error statistics by code/stage over the pipeline event log —
-    // page + record (route/validate) + stitch events from ONE
-    // checkpointed extraction pass (eventLog) over pages synthesized
-    // from `documents` rows; the oracle re-derives every count
-    // (classification, routing, extraction, the full VAL taxonomy,
-    // stitching) in SQL
-    "q30_event_stats" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val isEmptyPage = pmod(did, lit(7)) === 3
-      val pt = t(s, d, "documents").select(
-        concat(lit("doc://"), col("doc_id").cast("string")).as("url"),
-        when(isEmptyPage, lit("")).otherwise(eventPageCol(did))
-          .as("page_md"),
-        when(isEmptyPage, lit("empty")).otherwise(lit("html"))
-          .as("content_kind"),
-        lit("").as("error"))
-      ExtractionPipeline.eventLog(ExtractionPipeline.classifyPagesDf(pt))
-        .groupBy(col("level"), col("code"), col("stage"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("level", "code", "stage")
-    }),
-    // C1+C3+C10+P1+S8 routing, oracle-checked: pages synthesized from
-    // `documents` rows (identical construction in the oracle), classified
-    // by the COMPILED rule chains incl. the Others fallback, pipe rows
-    // exploded, routed per row, counted per (page_type, sheet)
-    "q31_route_records" -> ((s, d) => {
-      val rs = RuleSets.plugin
-      val did = col("doc_id").cast("long")
-      def booking(shift: Int): Column =
-        RouteBookings.zipWithIndex.foldRight(lit("")) { case ((b, i), els) =>
-          when(pmod(did + shift, lit(RouteBookings.length)) === i, lit(b))
-            .otherwise(els)
-        }
-      val page = routePageCol(did, booking(0), booking(3))
-      val isOth = col("page_type") === "Others"
-      val lineArr = split(col("page"), "\n", -1)
-      val cellsOf = (line: Column) => {
-        val parts = split(line, "\\|", -1)
-        transform(slice(parts, lit(2), size(parts) - 2), c => trim(c))
-      }
-      t(s, d, "documents")
-        .select(col("doc_id"), page.as("page"))
-        .withColumn("_pt", RuleCompiler.classifyPage(col("page"), rs))
-        .withColumn("page_type",
-          RuleCompiler.othersFallbackCol(col("_pt"), col("page"), rs))
-        .filter(col("page_type")
-          .isin("Transaction", "Trade", "FXTF", "Others"))
-        .withColumn("line", explode(
-          filter(lineArr, l => l.startsWith("|") && l.endsWith("|"))))
-        .withColumn("cells", cellsOf(col("line")))
-        .withColumn("keep",
-          when(isOth,
-            size(filter(col("cells"), c =>
-              c =!= "" && c.rlike("[a-zA-Z0-9]"))) >= 2)
-            .otherwise(
-              element_at(col("cells"), 1).rlike("^\\d{2}\\.\\d{2}\\.\\d{4}") &&
-                size(col("cells")) > 1 && element_at(col("cells"), 2) =!= ""))
-        .filter(col("keep"))
-        .withColumn("section",
-          when(isOth, lit("Others"))
-            .otherwise(RuleCompiler
-              .classifyRecord(concat_ws(" ", col("cells")), rs)
-              .getField("txn_group")))
-        .withColumn("sheet", sheetNameCol(col("section")))
-        .groupBy(col("page_type"), col("section"), col("sheet"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("page_type", "section")
-    }),
-    // dedup end-game: LSH candidate pairs → connected components →
-    // canonical survivor (min id). Oracle = recursive CTE in DuckDB.
-    "q32_dedup_cluster" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // maxBucket=64: clustering rides the same capped candidate
-      // generation as q28 (mirrored in the oracle CTE chain) — at 20x
-      // generated scale the uncapped pair volume grew ~quadratically
-      // in template-sharing dup-group count (BenchScale: 20.6x time
-      // growth uncapped vs capped q28's 2.8x on the same corpus)
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        k = 16, bands = 8, minEstJaccard = 0.5, shingleN = 3,
-        maxBucket = 64)
-      Dedup.canonicalize(docs, "doc_id", pairs)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    }),
-    // dedup clustering, star-contraction path: same components as q32
-    // through large-star/small-star rounds (O(log n) convergence on
-    // adversarial chain-shaped clusters vs label propagation's
-    // diameter rounds) — same recursive-CTE oracle pins equality
-    "q62_dedup_star" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // maxBucket=64 — same capped chain as q32 (shared oracle)
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        k = 16, bands = 8, minEstJaccard = 0.5, shingleN = 3,
-        maxBucket = 64)
-      Dedup.canonicalizeStar(docs, "doc_id", pairs)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    }),
-    // dedup at scale: exact n-gram Jaccard restricted to LSH candidates
-    // (the composed operator — no all-pairs shingle self-join)
-    "q34_jaccard_lsh" -> ((s, d) =>
-      Dedup.ngramJaccardLsh(t(s, d, "documents"), "doc_id", "text",
-        n = 3, k = 16, bands = 8, minEstJaccard = 0.25, minJaccard = 0.1)
-        .withColumn("inter", col("inter").cast("long"))
-        .orderBy(col("jaccard").desc, col("a"), col("b"))
-        .limit(50)),
-    // P3: bbox output parse (app.py:200-215) — detections extracted,
-    // coordinates stripped from the text, image refs kept
-    "q35_bbox" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val p = "!\\[image\\]\\((image_\\d+\\.png)\\)\\s*(\\d+),(\\d+),(\\d+),(\\d+)"
-      val synth = concat(substring(col("text"), 1, 30),
-        lit(" ![image](image_"), pmod(did, lit(7)), lit(".png)"),
-        pmod(did, lit(5)) * 100, lit(","), pmod(did, lit(4)) * 100,
-        lit(","), pmod(did, lit(5)) * 100 + 200, lit(","),
-        pmod(did, lit(4)) * 100 + 150,
-        lit(" more ![image](image_9.png)10,20,110,220"))
-      t(s, d, "documents")
-        .select(col("doc_id"), synth.as("t"))
-        .withColumn("cleaned", regexp_replace(col("t"), p, "![image]($1)"))
-        .withColumn("dets", regexp_extract_all(col("t"), lit(p), lit(0)))
-        .withColumn("n_det", size(col("dets")).cast("long"))
-        .withColumn("sum_w", aggregate(transform(col("dets"),
-          m => regexp_extract(m, p, 4).cast("long") -
-            regexp_extract(m, p, 2).cast("long")), lit(0L), (a, x) => a + x))
-        .withColumn("sum_h", aggregate(transform(col("dets"),
-          m => regexp_extract(m, p, 5).cast("long") -
-            regexp_extract(m, p, 3).cast("long")), lit(0L), (a, x) => a + x))
-        .select("doc_id", "cleaned", "n_det", "sum_w", "sum_h")
-        .orderBy("doc_id")
-    }),
-    // full reference validator taxonomy (error_system.py:37-43:
-    // VAL_ISIN/NUM/RANGE/DATE/CURR/CONFLICT) over documents-synthesized
-    // field values; the same validationErrorsCol the extraction
-    // pipeline's Stage 7 uses
-    "q36_validate" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          pickCol(did, ValTradeDates, 0).as("trade_date"),
-          pickCol(did, ValSettleDates, 1).as("settlement_date"),
-          pickCol(did, ValCurrencies, 2).as("currency"),
-          pickCol(did, ValNets, 3).as("net_consideration"),
-          pickCol(did, ValMvs, 4).as("market_value"),
-          pickCol(did, ValIsins, 5).as("securities_id"))
-        .withColumn("trade_date_iso",
-          ExtractionPipeline.normalizeDateCol(col("trade_date")))
-        .withColumn("settlement_date_iso",
-          ExtractionPipeline.normalizeDateCol(col("settlement_date")))
-        .withColumn("net_num",
-          ExtractionPipeline.normalizeNumberCol(col("net_consideration"))
-            .cast("double"))
-        .withColumn("errs", array_join(
-          ExtractionPipeline.validationErrorsCol(
-            col("securities_id"),
-            col("net_consideration"),
-            ExtractionPipeline.normalizeNumberCol(col("net_consideration")),
-            col("market_value"),
-            ExtractionPipeline.normalizeNumberCol(col("market_value")),
-            col("trade_date"), col("trade_date_iso"),
-            col("settlement_date"), col("settlement_date_iso"),
-            col("currency")), ","))
-        .select("doc_id", "trade_date_iso", "settlement_date_iso",
-          "net_num", "errs")
-        .orderBy("doc_id")
-    }),
-    // N4: JSON code-fence strip (validator.py:5-17) — fenced body else
-    // passthrough, over fenced strings synthesized from documents
-    "q33_code_fence" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val snippet = substring(col("text"), 1, 40)
-      val fenced = when(pmod(did, lit(3)) === 0,
-        concat(lit("```json\n"), snippet, lit("\n```")))
-        .when(pmod(did, lit(3)) === 1,
-          concat(lit("```\n"), snippet, lit("\n```")))
-        .otherwise(snippet)
-      val body = regexp_extract(col("fenced"),
-        "(?s)```(?:json)?\\s*(.*?)\\s*```", 1)
-      t(s, d, "documents")
-        .select(col("doc_id"), fenced.as("fenced"))
-        .withColumn("stripped",
-          when(col("fenced").rlike("(?s)```(?:json)?\\s*.*?\\s*```"), body)
-            .otherwise(col("fenced")))
-        .select("doc_id", "stripped")
-        .orderBy("doc_id")
-    }),
-    // curation: PII redaction (emails/IPs/phones synthesized onto the
-    // text deterministically; counts on raw, redaction chained)
-    "q38_pii" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val aug = concat(col("text"),
-        lit(" Contact user"), pmod(did, lit(7)).cast("string"),
-        lit("@example."),
-        when(pmod(did, lit(2)) === 0, lit("com")).otherwise(lit("org")),
-        lit(" from "), pmod(did, lit(256)).cast("string"), lit("."),
-        pmod(did * 7, lit(256)).cast("string"), lit(".0.1"),
-        when(pmod(did, lit(4)) === 0,
-          concat(lit(" tel +41 44 "),
-            lpad(pmod(did, lit(10000)).cast("string"), 4, "0"),
-            lit(" 00"))).otherwise(lit("")))
-      val base = t(s, d, "documents").select(col("doc_id"), aug.as("aug"))
-      val counted = Curation.piiCounts(col("aug"))
-        .foldLeft(base) { case (df, (n, c)) => df.withColumn(n, c) }
-      counted
-        .withColumn("redacted", Curation.piiRedact(col("aug")))
-        .select(col("doc_id"), col("n_email").cast("long").as("n_email"),
-          col("n_ip").cast("long").as("n_ip"),
-          col("n_phone").cast("long").as("n_phone"),
-          length(col("redacted")).cast("long").as("red_len"),
-          md5(col("redacted")).as("red_md5"))
-        .orderBy("doc_id")
-    }),
-    // curation: Gopher-style repetition/symbol features (integer ppm)
-    // over multi-line text synthesized with a deterministic dup line
-    "q39_repetition" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val promo = "Click here to read more..."
-      val aug = concat_ws("\n", col("text"),
-        lit("- first point"), lit("- second point"), lit(promo),
-        when(pmod(did, lit(2)) === 0, lit(promo)),
-        when(pmod(did, lit(3)) === 0, lit("# heading " + promo)))
-      val base = t(s, d, "documents").select(col("doc_id"), aug.as("aug"))
-      Curation.repetitionFeatures(col("aug"))
-        .foldLeft(base) { case (df, (n, c)) => df.withColumn(n, c) }
-        .withColumn("top2gram_ppm", Curation.topNgramCharPpm(col("aug"), 2))
-        .drop("aug")
-        .orderBy("doc_id")
-    }),
-    // curation: corpus-level duplicated-paragraph removal — boilerplate
-    // paragraphs injected into every 3rd/5th doc are detected by exact
-    // hash across >= 3 distinct docs and stripped; only (id,pos,hash)
-    // rows shuffle
-    "q40_para_dedup" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val aug = concat_ws("\n\n",
-        when(pmod(did, lit(3)) === 0,
-          lit("Subscribe to our newsletter for updates.")),
-        col("text"),
-        when(pmod(did, lit(5)) === 0,
-          lit("All rights reserved. Terms of use apply.")))
-      val docs = t(s, d, "documents").select(col("doc_id"), aug.as("aug"))
-      Curation.dropDuplicatedParagraphs(docs, "doc_id", "aug", minDocs = 3)
-        .select(col("doc_id"), col("n_paras").cast("long").as("n_paras"),
-          col("n_dropped").cast("long").as("n_dropped"),
-          length(col("clean_text")).cast("long").as("clean_len"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-    // curation: the COMPOSED end-to-end pipeline (quality gate → PII
-    // redact → corpus paragraph dedup → exact dedup → minhash near-dup
-    // dedup) over a corpus synthesized to exercise every stage:
-    // repetition-spam docs (%17), exact-dup pairs (%10<2), near-dup
-    // pairs (%10∈{4,5}), shared boilerplate paragraphs and per-doc PII
-    // lines that become identical — and droppable — only after
-    // redaction. Fully oracle-checked, including the recursive
-    // component fold.
-    "q43_curate" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val promoLine = "Click here to read more about this offer now"
-      val promoDoc = Seq.fill(8)(promoLine).mkString("\n")
-      // the group token is INTERLEAVED through the bodies (not a
-      // suffix) so different groups share almost no shingles —
-      // otherwise every group lands in the same LSH buckets and the
-      // within-bucket join goes quadratic (the q28 degenerate case)
-      val gt = concat(lit("g"), expr("CAST(doc_id AS BIGINT) DIV 10")
-        .cast("string"))
-      val body = when(pmod(did, lit(17)) === 0, lit(promoDoc))
-        .when(pmod(did, lit(10)) < 2,
-          concat(lit("the shared body "), gt, lit(" of group "), gt,
-            lit(" is exactly "), gt, lit(" the same here "), gt))
-        .when(pmod(did, lit(10)).isin(4, 5),
-          concat(lit("the near duplicate body "), gt, lit(" one two "),
-            gt, lit(" three four "), gt, lit(" five six "), gt, lit(" "),
-            when(pmod(did, lit(10)) === 4, lit("alpha"))
-              .otherwise(lit("beta"))))
-        .otherwise(col("text"))
-      val pii = concat(lit("Contact user"), pmod(did, lit(7)).cast("string"),
-        lit("@example.com from "), pmod(did, lit(256)).cast("string"),
-        lit(".0.0.1"))
-      val aug = concat_ws("\n\n",
-        when(pmod(did, lit(3)) === 0,
-          lit("Subscribe to our newsletter for updates.")),
-        body, pii,
-        when(pmod(did, lit(5)) === 0,
-          lit("All rights reserved. Terms of use apply.")))
-      val docs = tSpread(s, d, "documents").select(col("doc_id"), aug.as("aug"))
-      Curation.curate(docs, "doc_id", "aug")
-        .select(col("doc_id"), col("lang"), col("n_tokens"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-    // curation: deterministic hash-based train/val/test split + sample
-    // (stable across runs/partitionings/engines, unlike rand())
-    "q44_hash_split" -> ((s, d) =>
-      t(s, d, "documents")
-        .withColumn("split", Curation.hashSplit(col("doc_id"),
-          Seq("train" -> 8, "val" -> 1, "test" -> 1)))
-        .withColumn("sampled",
-          Curation.sampledByHash(col("doc_id"), 0.25))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("sampled"), 1L).otherwise(0L)).as("n_sampled"))
-        .orderBy("split", "lang")),
-    // curation: benchmark decontamination — n-gram overlap of every
-    // corpus doc against a synthesized eval set. Contamination is
-    // PLANTED deterministically (docs %11==3 get eval item id%10
-    // appended); the digit-interleaved phrases cannot occur in the
-    // synthetic word-salad text, so expected hits are exactly the
-    // planted spans. Fully oracle-checked.
-    "q45_decontam" -> ((s, d) => {
-      val (corpus, bench) = decontamInput(s, d)
-      Curation.contaminationStats(corpus, bench, "doc_id", "text",
-        "btext", n = 8)
-        .select(col("doc_id"), col("n_grams"), col("n_hit"),
-          col("contamination_ppm"))
-        .orderBy("doc_id")
-    }),
-    // curation: the 100 TB decontamination shape — the benchmark gram
-    // set compressed to a driver-built Bloom filter evaluated MAP-SIDE
-    // on every corpus gram (pure-Column bit probes, no UDF), exact
-    // broadcast-join confirm removes false positives. Same planted
-    // contamination as q45; the oracle pins the output to the exact
-    // semantics, proving the prefilter costs nothing.
-    "q59_bloom_decontam" -> ((s, d) => {
-      val (corpus, bench) = decontamInput(s, d)
-      Curation.decontaminateExact(corpus, bench, "doc_id", "text",
-        "btext", n = 8, bloomBits = 1 << 16)
-        .orderBy("doc_id")
-    }),
-    // curation: surgical decontamination — the planted benchmark spans
-    // are REMOVED in place (doc kept), boundary-straddling grams stay
-    // because they never occur in the benchmark itself
-    "q63_scrub_contam" -> ((s, d) => {
-      val (corpus, bench) = decontamInput(s, d)
-      Curation.removeBenchmarkSpans(corpus, bench, "doc_id", "text",
-        "btext", n = 8, bloomBits = 1 << 16)
-        .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-          col("removed_ppm"), md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-    // curation: sequence packing — concat-then-chunk assignment of
-    // every doc to (shard, seq, offset) training-sequence slots
-    "q46_pack" -> ((s, d) =>
-      Curation.packSequences(t(s, d, "documents"), "doc_id", "text",
-        seqLen = 512, shards = 8)
-        .orderBy("doc_id")),
-    // curation: deterministic per-language token-budget sampling (the
-    // data-mixing step: each language contributes at most N tokens,
-    // chosen as a stable hash-order prefix)
-    "q47_token_budget" -> ((s, d) =>
-      Curation.tokenBudgetAssign(
-        t(s, d, "documents").withColumn("n_toks",
-          TextAnalysis.tokenCount(col("text"))),
-        "doc_id", "lang", "n_toks",
-        budgets = Map("en" -> 3000L, "zh" -> 800L),
-        defaultBudget = 1000L)
-        .orderBy("doc_id")),
-    // curation: temperature-scaled language rebalancing (share^0.5
-    // mixing rule, integer-quantized weights for engine-exact parity)
-    "q49_temp_resample" -> ((s, d) =>
-      Curation.temperatureResample(
-        t(s, d, "documents").select(col("doc_id"), col("lang")),
-        "doc_id", "lang", alpha = 0.5, keepFraction = 0.5)
-        .select(col("doc_id"), col("lang"), col("keep_slots"),
-          col("kept"))
-        .orderBy("doc_id")),
-    // curation: URL canonicalization + URL-level dedup (tracking-param
-    // strip, scheme/host case, default ports, param sort; rep = min
-    // doc_id per canonical group)
-    "q48_url_canon" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val scheme = when(pmod(did, lit(2)) === 0, lit("HTTP://"))
-        .otherwise(lit("https://"))
-      val port = when(pmod(did, lit(4)) === 0, lit(":80"))
-        .when(pmod(did, lit(4)) === 1, lit(":8080"))
-        .otherwise(lit(""))
-      val query = when(pmod(did, lit(3)) === 0,
-          lit("?utm_source=feed&z=1&a=2"))
-        .when(pmod(did, lit(3)) === 1, lit("?fbclid=XYZ"))
-        .otherwise(lit(""))
-      val frag = when(pmod(did, lit(5)) === 0, lit("#Section2"))
-        .otherwise(lit(""))
-      val url = concat(scheme, lit("WWW"), pmod(did, lit(5)).cast("string"),
-        lit(".Example"), pmod(did, lit(3)).cast("string"), lit(".COM"),
-        port, lit("/Doc/"), pmod(did, lit(25)).cast("string"), query, frag)
-      val w = Window.partitionBy(col("canon_url")).orderBy(col("doc_id"))
-      t(s, d, "documents").select(col("doc_id"), url.as("url"))
-        .withColumn("canon_url", Curation.canonicalUrl(col("url")))
-        .withColumn("is_rep", row_number().over(w) === 1)
-        .orderBy("doc_id")
-    }),
-    // ANN: one exact distributed Lloyd refinement pass over the IVF
-    // coarse quantizer (decimal-exact component sums -> refined
-    // centroid means, the quantizer-training step)
-    "q51_ivf_refine" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val cents = SimSearch.ivfCentroids(emb, "vec_id", "embedding", 16)
-      SimSearch.ivfRefineSums(emb, "embedding", cents)
-        .withColumn("cell", col("cell").cast("long"))
-        .withColumn("pos", col("pos").cast("long"))
-        .orderBy("cell", "pos")
-    }),
-    // curation: top-50 word 2-grams by document frequency (vocabulary
-    // induction / boilerplate-phrase report; deterministic tie-break)
-    "q54_vocab" -> ((s, d) =>
-      Curation.topNgrams(t(s, d, "documents"), "text", n = 2, k = 50,
-        hashPrefilter = true)),
-    // curation: corpus token document frequencies + per-doc rare-token
-    // ratio (OOV/garble profiling; text never shuffles, hashes do)
-    "q53_token_df" -> ((s, d) =>
-      Curation.tokenDfStats(t(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    // curation: sliding-window passage chunking (embedding/RAG
-    // preprocessing; 64-token windows, 48-token stride)
-    "q52_chunk" -> ((s, d) =>
-      Curation.chunkPassages(t(s, d, "documents"), "doc_id", "text",
-        winTokens = 64, stepTokens = 48)
-        .orderBy("doc_id", "chunk_id")),
-    // curation: per-language token-count distribution profile (exact
-    // rank-based percentiles over thin rows — the monitoring table)
-    "q50_profile" -> ((s, d) =>
-      Curation.corpusProfile(
-        t(s, d, "documents").withColumn("n_toks",
-          TextAnalysis.tokenCount(col("text"))),
-        "lang", "n_toks")
-        .orderBy("lang")),
-    // curation: log2-bucket distribution profile — the unbounded-domain
-    // monitoring variant (exact count/sum/min/max, percentile upper
-    // bounds with the ≤2× log-bucket guarantee)
-    "q67_profile_approx" -> ((s, d) =>
-      Curation.corpusProfileApprox(
-        t(s, d, "documents").withColumn("n_toks",
-          TextAnalysis.tokenCount(col("text"))),
-        "lang", "n_toks")
-        .orderBy("lang")),
-    // curation: unsupervised bigram-fluency score (the integer-exact
-    // CCNet-perplexity analogue: corpus-conditional mean transition
-    // probability per document)
-    "q68_bigram_fluency" -> ((s, d) =>
-      Curation.bigramFluency(
-        t(s, d, "documents").select(col("doc_id"), col("text")),
-        "doc_id", "text")
-        .select(col("doc_id"), col("n_bigrams"),
-          col("rare_bigram_ppm"), col("fluency_ppm"))
-        .orderBy("doc_id")),
-    // curation: CCNet head/middle/tail buckets — per-language
-    // descending-fluency layout cut into thirds by token mass
-    // (Wenzek et al. 2020), the bigram fluency score standing in for
-    // the KenLM perplexity; sharded running sums, no per-language
-    // window task
-    "q88_ccnet_buckets" -> ((s, d) =>
-      Curation.perplexityBuckets(
-        Curation.bigramFluency(
-          t(s, d, "documents").select(col("doc_id"), col("lang"),
-            col("text")),
-          "doc_id", "text")
-          .withColumn("n_toks", TextAnalysis.tokenCount(col("text"))),
-        "doc_id", "lang", "fluency_ppm", "n_toks")
-        .orderBy("doc_id")),
-    // curation: BPE tokenizer training, round-0 pair counts — the
-    // quantity the first merge argmaxes over (the full loop is
-    // golden-tested against a scalar reference in BpeSpec; this pins
-    // the corpus-sized pass + the per-iteration aggregate in SQL)
-    "q70_bpe_pairs" -> ((s, d) =>
-      Bpe.pairCounts(Bpe.initialSymbolTable(t(s, d, "documents"), "text"))
-        .orderBy(col("cnt").desc, col("pa"), col("pb"))
-        .limit(100)),
-    // curation: per-host document cap (C4/RefinedWeb-style anti-
-    // domination gate) — keep the 5 longest docs per host, exact
-    // sharded ranks, ties by doc_id
-    "q71_host_cap" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val host = concat(col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com"))
-      Curation.keepTopNPerStratum(
-        t(s, d, "documents")
-          .select(col("doc_id"), host.as("host"), col("n_chars")),
-        "doc_id", "host", "n_chars", n = 5L)
-        .orderBy("doc_id")
-    }),
-    // curation: classifier evaluation — exact tie-aware rank AUC of
-    // doc length against the is-English label, per source (the gate
-    // check a quality classifier passes before it may cut the corpus)
-    "q72_rank_auc" -> ((s, d) =>
-      Curation.rankAuc(
-        t(s, d, "documents")
-          .withColumn("is_en", col("lang") === "en"),
-        "is_en", "n_chars", strataCols = Seq("source"))
-        .orderBy("source")),
-    // web graph: host-level degree profile over a deterministic
-    // synthesized link table (the fan-out stats a link-spam gate reads)
-    "q73_web_degrees" -> ((s, d) =>
-      WebGraph.degreeStats(webEdges(s, d), "src", "dst")
-        .orderBy("node")),
-    // web graph: 3 rounds of exact integer-ppb damped PageRank over
-    // the same host-level link table (crawl-priority / host-quality
-    // centrality signal)
-    "q74_pagerank" -> ((s, d) =>
-      WebGraph.pageRank(webEdges(s, d), "src", "dst", iterations = 3)
-        .orderBy("node")),
-    // source: WARC-style archive round trip — documents serialized as
-    // a multi-file WARC subset archive, then re-read through the
-    // SPLITTABLE lineSep text scan and the Content-Length-bounded
-    // parser; output is the CDX-style digest row (url, length, md5).
-    // The oracle computes the same rows directly from documents, so
-    // writer, record splitter and parser must all be exact
-    "q77_warc" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val url = concat(lit("http://"), col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com/docs/d"),
-        col("doc_id").cast("string"), lit(".html"))
-      val payload = concat(lit("<html><body><p>"), col("text"),
-        lit("</p></body></html>"))
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_warc_q77_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      graft.io.Warc.writeWarc(
-        t(s, d, "documents").select(url.as("url"), payload.as("payload"))
-          .repartition(4, col("url")),
-        "url", "payload", dir)
-      graft.io.Warc.readWarc(s, dir)
-        .select(col("url"), col("content_length"),
-          md5(col("payload")).as("payload_md5"))
-        .orderBy("url")
-    }),
-    // extraction: hyperlink extraction from raw page HTML (WAT-record
-    // surface) — href parse across quote styles + RFC 3986 reference
-    // resolution with dot-segment removal; the oracle re-derives every
-    // expected row from the synthesis formulas, so the Spark side must
-    // actually parse and resolve
-    "q75_link_extract" -> ((s, d) =>
-      LinkExtractor.extractLinks(linkPages(s, d), "url", "html")
-        .orderBy("url", "link_pos")),
-    // web graph end-to-end: raw HTML → extracted links → host-level
-    // edge table (nofollow and non-http dropped, multi-edges kept) →
-    // degree stats + 2 rounds of exact integer-ppb PageRank — the full
-    // crawl-analytics composition from page bytes to centrality
-    "q76_link_graph" -> ((s, d) => {
-      val edges = LinkExtractor.hostEdges(
-        LinkExtractor.extractLinks(linkPages(s, d), "url", "html"))
-        .localCheckpoint()
-      WebGraph.degreeStats(edges, "src", "dst")
-        .join(WebGraph.pageRank(edges, "src", "dst", iterations = 2),
-          Seq("node"))
-        .orderBy("node")
-    }),
-    // crawl politeness: robots.txt parsing (group-exact * selection,
-    // shared headers, empty-rule no-ops) + URL admission (longest
-    // prefix wins, Allow beats Disallow on ties). The robots files are
-    // synthesized per host with decoy groups for other agents; the
-    // oracle knows the planted decisions, so the Spark side must
-    // genuinely parse the files and apply RFC 9309 precedence
-    "q80_robots" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val host = concat(col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com"))
-      val docs = t(s, d, "documents")
-      val hosts = docs.select(host.as("host"),
-        pmod(did, lit(7)).cast("string").as("k")).distinct()
-      val robots = hosts.select(col("host"), concat(
-        lit("User-agent: googlebot\nDisallow: /\n\nUser-agent: *\n" +
-          "Disallow: /private\nAllow: /private/pub\nDisallow: /tmp"),
-        col("k"),
-        lit("\nDisallow:\n\nUser-agent: other\nDisallow: /docs\n"))
-        .as("txt"))
-      val urls = docs
-        .select(host.as("h"), did.as("id"))
-        .select(explode(array(
-          concat(lit("http://"), col("h"), lit("/docs/d"),
-            col("id").cast("string"), lit(".html")),
-          concat(lit("http://"), col("h"), lit("/private/f"),
-            pmod(col("id"), lit(5)).cast("string")),
-          concat(lit("http://"), col("h"), lit("/private/pub/x"),
-            pmod(col("id"), lit(5)).cast("string")),
-          concat(lit("http://"), col("h"), lit("/tmp"),
-            pmod(col("id"), lit(3)).cast("string"), lit("/y"))))
-          .as("url"))
-      Robots.allowedByRobots(urls, "url",
-          Robots.parseRobots(robots, "host", "txt"))
-        .orderBy("url")
-    }),
-    // extraction: WAT-style page metadata (title with markup/entities,
-    // meta description across attribute orders + quote styles,
-    // keywords, Open Graph, canonical link resolved against <base>,
-    // robots noindex/nofollow directives). The oracle re-derives every
-    // field from the synthesis formulas, so the Spark side must
-    // actually parse the tags and resolve the canonical URL
-    "q81_page_meta" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      def m(mod: Long): Column = pmod(did, lit(mod))
-      def ms(mod: Long): Column = m(mod).cast("string")
-      val host = concat(col("source"), lit("-"), ms(7),
-        lit(".example.com"))
-      val url = concat(lit("http://"), host, lit("/docs/d"),
-        col("doc_id").cast("string"), lit(".html"))
-      val baseTag = when(m(5) === 0, concat(
-        lit("<base href=\"http://base"), ms(3),
-        lit(".example.org/dir/sub/\">"))).otherwise(lit(""))
-      val desc = when(m(2) === 0, concat(
-          lit("<meta name=\"description\" content=\"Summary &lt;"),
-          ms(10), lit("&gt; of doc "), did.cast("string"), lit("\">")))
-        .otherwise(concat(lit("<meta content='Alt summary "), ms(10),
-          lit("' name='description'>")))
-      val kw = when(m(3) === 0, concat(
-        lit("<meta name=\"keywords\" content=\"k"), ms(4), lit(", k"),
-        ms(6), lit("\">"))).otherwise(lit(""))
-      val og1 = when(m(2) === 0, concat(
-        lit("<meta property=\"og:title\" content=\"OG d"),
-        did.cast("string"), lit("\">"))).otherwise(lit(""))
-      val canon = when(m(4) === 0, concat(
-          lit("<link rel=\"canonical\" href=\"http://canon.example.com/c"),
-          ms(10), lit("\">")))
-        .when(m(4) === 1, concat(lit("<link href='../c/p"), ms(5),
-          lit("' rel='canonical'>")))
-        .when(m(4) === 2, concat(
-          lit("<link rel=\"canonical\" href=\"/canon/"), ms(7),
-          lit("\">")))
-        .otherwise(lit(""))
-      val rob = when(m(6) === 0,
-          lit("<meta name=\"robots\" content=\"noindex, nofollow\">"))
-        .when(m(6) === 1, lit("<meta name=\"robots\" content=\"NOINDEX\">"))
-        .otherwise(lit(""))
-      val html = concat(lit("<html><head><title> Doc &amp; d"),
-        col("doc_id").cast("string"), lit(" <b>x</b> </title>"),
-        baseTag, desc, kw, og1,
-        lit("<meta property=\"og:type\" content=\"article\">"),
-        canon, rob, lit("</head><body><p>body</p></body></html>"))
-      MetaExtractor.pageMeta(
-        t(s, d, "documents").select(url.as("url"), html.as("html")),
-        "url", "html")
-        .withColumn("n_meta_tags", col("n_meta_tags").cast("long"))
-        .orderBy("url")
-    }),
-    // extraction: JSON-LD (schema.org) structured data — one row per
-    // ld+json script block in document order: Article headline /
-    // datePublished / author (object AND plain-string forms), Product
-    // offer price, @graph entity count, malformed-JSON blocks as
-    // valid=false rows, non-ld scripts ignored. The oracle re-derives
-    // every field and block position from the synthesis formulas, so
-    // the Spark side must genuinely find the typed script tags and
-    // parse the JSON
-    "q104_jsonld" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      def m(mod: Long): Column = pmod(did, lit(mod))
-      def ms(mod: Long): Column = m(mod).cast("string")
-      val host = concat(col("source"), lit("-"), ms(7),
-        lit(".example.com"))
-      val url = concat(lit("http://"), host, lit("/docs/d"),
-        col("doc_id").cast("string"), lit(".html"))
-      val authorJson = when(m(4) === 0,
-          concat(lit("\"Plain "), ms(5), lit("\"")))
-        .otherwise(concat(lit("{\"@type\":\"Person\",\"name\":\"Author "),
-          ms(5), lit("\"}")))
-      val blockA = concat(
-        when(m(2) === 0, lit("<script type=\"application/ld+json\">"))
-          .otherwise(lit("<script async type='application/ld+json' id='ld'>")),
-        lit("{\"@context\":\"https://schema.org\",\"@type\":\"Article\"," +
-          "\"headline\":\"Doc "),
-        did.cast("string"),
-        lit(" headline\",\"datePublished\":\"2024-0"),
-        (m(9) + 1).cast("string"),
-        lit("-15\",\"author\":"), authorJson, lit("}</script>"))
-      val blockB = when(m(3) === 0, concat(
-        lit("<script type=\"application/ld+json\">{\"@type\":\"Product\"," +
-          "\"name\":\"P"), ms(7),
-        lit("\",\"offers\":{\"@type\":\"Offer\",\"price\":\""), ms(100),
-        lit(".99\"}}</script>"))).otherwise(lit(""))
-      val blockC = when(m(5) === 0, lit(
-        "<script type=\"application/ld+json\">{\"@context\":" +
-          "\"https://schema.org\",\"@graph\":[{\"@type\":\"WebPage\"}," +
-          "{\"@type\":\"BreadcrumbList\"}]}</script>")).otherwise(lit(""))
-      val blockD = when(m(11) === 0, lit(
-        "<script type=\"application/ld+json\">{\"@type\":\"Broken\"," +
-          "</script>")).otherwise(lit(""))
-      val html = concat(
-        lit("<html><head><script>var x=1;</script>" +
-          "<script type=\"text/javascript\">ignore()</script>"),
-        blockA, blockB, blockC, blockD,
-        lit("</head><body>b</body></html>"))
-      MetaExtractor.jsonLd(
-        t(s, d, "documents").select(url.as("url"), html.as("html")),
-        "url", "html")
-        .orderBy("url", "block_pos")
-    }),
-    // extraction: hreflang alternate links — publisher-declared
-    // translation graph rows across tag/quote/attribute-order and
-    // relative/absolute href variants; alternate links WITHOUT
-    // hreflang (RSS feed, stylesheet) ignored. The oracle re-derives
-    // the RESOLVED absolute urls, so all plant variants must normalize
-    // to the same output
-    "q105_hreflang" -> ((s, d) =>
-      MetaExtractor.hreflangLinks(hreflangPages(s, d), "url", "html")
-        .orderBy("url", "link_pos")),
-    // composition: hreflang rows → translation clusters via the star
-    // contraction (min-url component label). Pages that declare no
-    // alternates themselves (every 7th doc) must still cluster through
-    // their siblings' references — the oracle knows the planted
-    // triples, so the contraction must agree with transitive closure
-    // over the declared graph
-    "q106_translation_clusters" -> ((s, d) =>
-      WebGraph.translationClusters(
-        MetaExtractor.hreflangLinks(hreflangPages(s, d), "url", "html"))
-        .orderBy("url")),
-    // web graph: connected components of the host graph via
-    // O(log n)-round star contraction (the same Kiveris et al.
-    // machinery dedup clustering uses, on web topology) — mirror
-    // groups / link farms / crawl-frontier islands fall out as
-    // components; the oracle re-derives the labeling with a recursive
-    // CTE, so the contraction must agree with transitive closure
-    "q82_host_components" -> ((s, d) => {
-      val e = webEdges(s, d).filter(col("src") =!= col("dst"))
-        .select(col("src").as("a"), col("dst").as("b")).distinct()
-      val hosts = webEdges(s, d)
-        .select(explode(array(col("src"), col("dst"))).as("host"))
-        .distinct()
-      // fenced: the component-size self-join reads `lab` twice, and
-      // unfenced each branch re-runs the contraction's final join
-      // over the webEdges scan (the translationClusters discipline)
-      val lab = Dedup.canonicalizeStar(hosts, "host", e).localCheckpoint()
-      lab.join(
-          lab.groupBy(col("canonical_id").as("component"))
-            .agg(count(lit(1)).as("component_size")),
-          lab("canonical_id") === col("component"))
-        .select(col("id").as("host"), col("component"),
-          col("component_size").cast("long").as("component_size"))
-        .orderBy("host")
-    }),
-    // crawl scheduling: the frontier composition — candidate URLs
-    // gated by robots.txt admission (q80 machinery), prioritized by
-    // host PageRank (q74 machinery), politeness-capped to the top 3
-    // per host via the sharded rank (q71 machinery, no per-host single
-    // window task). The oracle re-derives admission by construction
-    // and re-runs the rank + row_number in SQL
-    "q83_crawl_frontier" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val host = concat(col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com"))
-      val docs = t(s, d, "documents")
-      val hosts = docs.select(host.as("host"),
-        pmod(did, lit(7)).cast("string").as("k")).distinct()
-      val robots = hosts.select(col("host"), concat(
-        lit("User-agent: googlebot\nDisallow: /\n\nUser-agent: *\n" +
-          "Disallow: /private\nAllow: /private/pub\nDisallow: /tmp"),
-        col("k"),
-        lit("\nDisallow:\n\nUser-agent: other\nDisallow: /docs\n"))
-        .as("txt"))
-      val urls = docs
-        .select(host.as("h"), did.as("id"))
-        .select(explode(array(
-          concat(lit("http://"), col("h"), lit("/docs/d"),
-            col("id").cast("string"), lit(".html")),
-          concat(lit("http://"), col("h"), lit("/private/f"),
-            pmod(col("id"), lit(5)).cast("string")),
-          concat(lit("http://"), col("h"), lit("/private/pub/x"),
-            pmod(col("id"), lit(5)).cast("string")),
-          concat(lit("http://"), col("h"), lit("/tmp"),
-            pmod(col("id"), lit(3)).cast("string"), lit("/y"))))
-          .as("url"))
-        .distinct()
-      val admitted = Robots.allowedByRobots(urls, "url",
-          Robots.parseRobots(robots, "host", "txt"))
-        .filter(col("allowed")).select(col("url"))
-      val ranked = WebGraph.pageRank(webEdges(s, d), "src", "dst",
-        iterations = 2)
-      val scored = admitted
-        .withColumn("host", Curation.matchHost(col("url")))
-        .join(ranked.select(col("node").as("host"),
-          col("rank_ppb").cast("long").as("rank_ppb")), "host")
-      Curation.keepTopNPerStratum(scored, "url", "host", "rank_ppb",
-          n = 3L)
-        .filter(col("kept"))
-        .select(col("url"), col("host"), col("rank_ppb"),
-          col("stratum_rank"))
-        .orderBy("host", "stratum_rank")
-    }),
-    // crawl seeding: sitemap-XML parsing (urlset subset) — loc-less
-    // blocks dropped with their positions preserved as audit gaps,
-    // lastmod verbatim-trimmed, priority → integer ppm with the spec's
-    // 0.5 default. Case-mixed tags + padded values exercise the
-    // (?is)/trim contract
-    "q84_sitemap" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val host = concat(col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com"))
-      val k = pmod(did, lit(7)).cast("string")
-      // host-determined (one sitemap per host): month digit = k+1
-      val km = (pmod(did, lit(7)) + 1).cast("string")
-      val hosts = t(s, d, "documents")
-        .select(host.as("host"), k.as("k"), km.as("km"))
-        .distinct()
-      val xml = concat(
-        lit("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<urlset " +
-          "xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n" +
-          "<url><loc> http://"), col("host"), lit("/docs/a"),
-        col("k"), lit(".html </loc><lastmod>2026-0"), col("km"),
-        lit("-01</lastmod><priority>0."), col("k"),
-        lit("</priority></url>\n<url><LOC>http://"), col("host"),
-        lit("/docs/b"), col("k"),
-        lit(".html</LOC></url>\n<url><loc></loc></url>\n" +
-          "<url><!-- no loc --></url>\n<url><loc>http://"),
-        col("host"),
-        lit("/c</loc><lastmod> 2025-12-31 </lastmod></url>\n</urlset>"))
-      Robots.parseSitemap(
-          hosts.select(col("host"), xml.as("xml")), "host", "xml")
-        .withColumn("entry_pos", col("entry_pos").cast("long"))
-        .orderBy("host", "entry_pos")
-    }),
-    // crawl discovery: RSS 2.0 / Atom feed parsing — per-host feeds
-    // (RSS on even hosts, Atom on odd), CDATA + markup titles, items
-    // without links dropped with position gaps, Atom alternate-link
-    // selection skipping rel=self, published falling back to updated.
-    // The oracle re-derives every row from the plant formulas
-    "q107_feeds" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val host = concat(col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com"))
-      val hosts = t(s, d, "documents")
-        .select(host.as("host"), pmod(did, lit(7)).as("k"))
-        .distinct()
-        .withColumn("ks", col("k").cast("string"))
-        .withColumn("k1", (col("k") + 1).cast("string"))
-      val rssXml = concat(
-        lit("<?xml version=\"1.0\"?><rss version=\"2.0\"><channel>" +
-          "<title>Feed</title><link>http://"), col("host"),
-        lit("/</link>\n<item><title><![CDATA[First <b>story</b> "),
-        col("ks"), lit("]]></title><link> http://"), col("host"),
-        lit("/news/a-"), col("ks"),
-        lit(".html </link><pubDate>Mon, 0"), col("k1"),
-        lit(" Jan 2026 10:00:00 GMT</pubDate></item>\n" +
-          "<item><title>No link item</title><pubDate>x</pubDate>" +
-          "</item>\n<item><link>http://"), col("host"),
-        lit("/news/b-"), col("ks"),
-        lit(".html</link></item>\n</channel></rss>"))
-      val atomXml = concat(
-        lit("<?xml version=\"1.0\"?>" +
-          "<feed xmlns=\"http://www.w3.org/2005/Atom\">" +
-          "<title>AF</title><link rel=\"self\" href=\"http://"),
-        col("host"),
-        lit("/feed\"/>\n<entry><title>Entry one "), col("ks"),
-        lit("</title><link rel=\"self\" href=\"http://"), col("host"),
-        lit("/feed#1\"/><link rel=\"alternate\" href=\"http://"),
-        col("host"), lit("/posts/p-"), col("ks"),
-        lit(".html\"/><published>2026-02-0"), col("k1"),
-        lit("</published></entry>\n<entry><title>E2</title>" +
-          "<link href='http://"), col("host"), lit("/posts/q-"),
-        col("ks"), lit(".html'/><updated>2026-03-0"), col("k1"),
-        lit("</updated></entry>\n<entry><title>No link</title>" +
-          "<published>z</published></entry>\n</feed>"))
-      val xml = when(pmod(col("k"), lit(2)) === 0, rssXml)
-        .otherwise(atomXml)
-      Robots.parseFeed(
-          hosts.select(col("host"), xml.as("xml")), "host", "xml")
-        .orderBy("host", "entry_pos")
-    }),
-    // storage layout: Z-order (Morton) clustering key for data-skipping
-    // file layouts — exact [min,max]→[0,2^8) integral codes per column,
-    // bit-interleaved so one sort key gives BOTH columns per-file
-    // min/max locality (the key Delta OPTIMIZE ZORDER / Iceberg
-    // z-ordered rewrites sort by). The oracle re-derives the bounds,
-    // the clamped integral-DIV codes and the interleave in SQL
-    "q108_zorder" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val bounds = Layout.columnBounds(docs, Seq("n_chars", "doc_id"))
-      val bits = 8
-      val codeChars =
-        Layout.rangeCode(col("n_chars"), bounds(0)._1, bounds(0)._2, bits)
-      val codeId =
-        Layout.rangeCode(col("doc_id"), bounds(1)._1, bounds(1)._2, bits)
-      docs.select(col("doc_id").cast("long").as("doc_id"),
-          codeChars.as("code_chars"), codeId.as("code_id"),
-          Layout.zValue(Seq(codeChars, codeId), bits).as("z"))
-        .orderBy(col("z"), col("doc_id"))
-        .limit(256)
-    }),
-    // skew: bounded-shuffle heavy-hitter detection — viral paragraphs
-    // (the %3 promo + %5 footer plants, q40's corpus) found via
-    // width-bounded bucket counts + broadcast-filtered exact confirm,
-    // never a corpus-wide one-row-per-distinct-paragraph shuffle. The
-    // oracle is the PLAIN exact groupBy-HAVING — pinning that the
-    // two-pass bounded form returns exactly the exact answer
-    "q109_heavy_hitters" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val aug = concat_ws("\n\n",
-        when(pmod(did, lit(3)) === 0,
-          lit("Subscribe to our newsletter for updates.")),
-        col("text"),
-        when(pmod(did, lit(5)) === 0,
-          lit("All rights reserved. Terms of use apply.")))
-      val paras = t(s, d, "documents")
-        .select(posexplode(Curation.paragraphs(aug)).as(Seq("_p", "para")))
-      Skew.heavyHitters(paras, col("para"), minCount = 50L,
-          width = 1 << 12, out = "para")
-        .select(md5(col("para")).as("para_md5"),
-          length(col("para")).cast("long").as("para_len"), col("n"))
-        .orderBy(desc("n"), col("para_md5"))
-    }),
-    // crawl ops: recrawl scheduling from observed snapshot churn —
-    // per-url change ratio over a planted snapshot history (2-5 weekly
-    // snapshots, content version bumps on (did+i)%3==0 steps, %7 urls
-    // have a single snapshot = maximum-ignorance default) interpolates
-    // the revisit interval; overdue days = the recrawl priority
-    "q110_recrawl" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val k = when(pmod(did, lit(7)) === 0, lit(1L))
-        .otherwise(lit(2L) + pmod(did, lit(4)))
-      val snaps = t(s, d, "documents")
-        .select(concat(lit("http://"), col("source"),
-            lit(".example.com/d"), col("doc_id").cast("string")).as("url"),
-          did.as("did"), explode(sequence(lit(0L), k - 1)).as("i"))
-        .select(col("url"),
-          (pmod(col("did"), lit(30)) + col("i") * 7).as("day"),
-          concat(lit("v"),
-            (call_function("div", col("did") + col("i"), lit(3L)) -
-              call_function("div", col("did"), lit(3L)))
-              .cast("string")).as("h"))
-      Robots.revisitSchedule(snaps, "url", "day", "h", nowDay = 90L,
-          minDays = 2L, maxDays = 45L)
-        .orderBy("url")
-    }),
-    // dedup refinement: duplicate-cluster survivor by QUALITY — the
-    // q32 near-dup clusters, but keeping each cluster's longest doc
-    // (max n_chars, ties to min id) instead of the arbitrary min-id
-    // canonical; two thin agg passes, never a per-cluster window
-    "q111_keep_best" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        k = 16, bands = 8, minEstJaccard = 0.5, shingleN = 3,
-        maxBucket = 64) // same capped chain as q32 (shared CTEs)
-      val labels = Dedup.canonicalize(docs, "doc_id", pairs)
-      Dedup.keepBestPerCluster(labels,
-          docs.select(col("doc_id"), col("n_chars")), "doc_id", "n_chars")
-        .withColumnRenamed("id", "doc_id")
-        .withColumn("score", col("score").cast("long"))
-        .orderBy("doc_id")
-    }),
-    // text hygiene: Unicode NFC normalization (native codegen
-    // expression) — composed U+00E9 and decomposed e+U+0301 render
-    // identically but defeat every hash-based dedup stage; the plant
-    // puts composed/decomposed twins in each id-group and the md5 of
-    // the normalized text collapses them (checked row-exactly by the
-    // DuckDB nfc_normalize twin)
-    "q112_nfc" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val g = call_function("div", did, lit(3L)).cast("string")
-      val v = pmod(did, lit(3))
-      val raw = concat(
-        when(v === 0, lit("caf\u00e9 menu "))
-          .when(v === 1, lit("cafe\u0301 menu "))
-          .otherwise(lit("A\u030a resort ")), lit("g"), g)
-      t(s, d, "documents").select(did.as("doc_id"), raw.as("_raw"))
-        .select(col("doc_id"),
-          length(col("_raw")).cast("long").as("raw_cp"),
-          length(graft.functions.UnicodeNormalize(col("_raw")))
-            .cast("long").as("nfc_cp"),
-          md5(graft.functions.UnicodeNormalize(col("_raw")))
-            .as("nfc_md5"))
-        .orderBy("doc_id")
-    }),
-    // sampling: deterministic EXACT-k per-stratum sample (eval-set
-    // carving: exactly 40 docs per language by md5-hash order, strata
-    // smaller than k keep everything) — global rank via the sharded
-    // window, no per-stratum window partition
-    "q113_strat_sample" -> ((s, d) =>
-      Curation.stratifiedSampleExact(
-          t(s, d, "documents").select(col("doc_id").cast("long")
-            .as("doc_id"), col("lang")),
-          "doc_id", "lang", k = 40)
-        .select(col("doc_id"), col("lang"), col("sample_rank"))
-        .orderBy("lang", "sample_rank")),
-    // URL-quality features: depth / digit-heavy slugs / dynamic-param
-    // counts / tracking params — the pre-fetch URL gate signals; the
-    // plant spans no-path, deep-path, date-slug, tracking,
-    // fragment-bearing and '?'-inside-fragment shapes (the last one
-    // must yield ZERO params — a fragment '?' is not a query)
-    "q114_url_features" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val v = pmod(did, lit(6))
-      val ds = did.cast("string")
-      val url = when(v === 0, concat(lit("http://"), col("source"),
-          lit(".example.com/a/b/c/page"), ds, lit(".html")))
-        .when(v === 1, concat(lit("https://"), col("source"),
-          lit(".Example.COM/p?id="), ds, lit("&utm_source=feed&x=1")))
-        .when(v === 2, concat(lit("http://"), col("source"),
-          lit(".example.com/2024/01/"), ds))
-        .when(v === 3, concat(lit("http://"), col("source"),
-          lit(".example.com")))
-        .when(v === 4, concat(lit("http://"), col("source"),
-          lit(".example.com/search?q=a&page=2&fbclid=zz#frag")))
-        .otherwise(concat(lit("http://"), col("source"),
-          lit(".example.com/page"), ds, lit("#sec?utm_source=x")))
-      Curation.urlFeatures(
-          t(s, d, "documents").select(did.as("doc_id"), url.as("url")),
-          "url")
-        .select(col("doc_id"), col("url_host"), col("path_depth"),
-          col("path_digit_ppm"), col("n_params"), col("has_tracking"),
-          col("url_len"))
-        .orderBy("doc_id")
-    }),
-    // crawl politeness: Crawl-delay parsing (the non-RFC directive a
-    // polite fetch scheduler budgets on) + per-host hourly fetch
-    // budget. Plant spans: no delay, first-wins double delay, a
-    // non-numeric value, a foreign (googlebot-only) group, a
-    // fractional value, an explicit 0, and a delay BEFORE any group
-    // header (all ignored except the valid in-group firsts)
-    "q115_crawl_delay" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val k = pmod(did, lit(7))
-      val host = concat(col("source"), lit("-"), k.cast("string"),
-        lit(".example.com"))
-      val txt = when(k === 0, lit("User-agent: *\nDisallow: /a\n"))
-        .when(k === 1,
-          lit("User-agent: *\nCrawl-delay: 10\nCrawl-delay: 99\n"))
-        .when(k === 2, lit("User-agent: *\nCrawl-delay: abc\n"))
-        .when(k === 3, lit("User-agent: googlebot\nCrawl-delay: 3\n\n" +
-          "User-agent: *\nDisallow: /y\n"))
-        .when(k === 4, lit("User-agent: *\nCrawl-delay: 2.5\n"))
-        .when(k === 5, lit("User-agent: *\nCrawl-delay: 0\n"))
-        .otherwise(lit("Crawl-delay: 7\nUser-agent: *\nDisallow: /z\n"))
-      t(s, d, "documents").select(host.as("host"), txt.as("txt"))
-        .distinct()
-        .select(col("host"),
-          Robots.crawlDelay(col("txt")).as("crawl_delay"),
-          Robots.fetchBudget(Robots.crawlDelay(col("txt")), 3600L, 5L)
-            .as("fetches_per_hour"))
-        .orderBy("host")
-    }),
-    // crawl discovery: RSS/Atom feed AUTODISCOVERY from page HTML —
-    // the step that finds parseFeed's (q107) inputs. Plant per page:
-    // stylesheet link (no), absolute rss feed (yes), hreflang
-    // alternate (no), attribute-order-swapped single-quoted atom feed
-    // with a RELATIVE href (yes, resolved), hrefless feed link
-    // (dropped) — positions keep the gaps
-    "q116_feed_discovery" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val url = concat(lit("http://"), col("source"),
-        lit(".example.com/blog/post"), did.cast("string"), lit(".html"))
-      val html = concat(
-        lit("<html><head><link rel=\"stylesheet\" href=\"/s.css\">" +
-          "<link rel=\"alternate\" type=\"application/rss+xml\" " +
-          "href=\"/feed.xml\">" +
-          "<link rel=\"alternate\" hreflang=\"de\" href=\"/de/p.html\">" +
-          "<link type='application/atom+xml' rel='alternate' " +
-          "href='atom"), did.cast("string"),
-        lit(".xml'><link rel=\"alternate\" " +
-          "type=\"application/rss+xml\"></head></html>"))
-      MetaExtractor.feedLinks(
-          t(s, d, "documents").select(url.as("url"), html.as("html")),
-          "url", "html")
-        .orderBy("url", "link_pos")
-    }),
-    // crawl index: SURT sort keys (host labels reversed — one host =
-    // one contiguous key range). Plant spans: uppercase www host +
-    // default :443 + unsorted query, http :80 default port, deep
-    // subdomain, schemeless fallback, www2 + NON-default port kept,
-    // trailing-dot FQDN, mixed-case path+query lowering, and a
-    // tracking param that SURT keeps (unlike canonicalUrl)
-    "q117_surt" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val v = pmod(did, lit(8))
-      val ds = did.cast("string")
-      val url = when(v === 0, concat(lit("https://WWW.News."), col("source"),
-          lit(".COM:443/Path/Article"), ds, lit("?b=2&a=1")))
-        .when(v === 1, lit("http://example.com:80/"))
-        .when(v === 2, concat(lit("http://sub.blog."), col("source"),
-          lit(".org/p/"), ds))
-        .when(v === 3, concat(lit("not a url "), ds))
-        .when(v === 4, concat(lit("http://www2."), col("source"),
-          lit(".net:8080/x?z=1#frag")))
-        .when(v === 5, concat(lit("https://"), col("source"),
-          lit(".com./a"), ds))
-        .when(v === 6, lit("HTTP://EXAMPLE.COM/MiXeD/CaSe?Q=V"))
-        .otherwise(concat(lit("https://"), col("source"),
-          lit(".example.com/dup?utm_source=x&b=1")))
-      t(s, d, "documents").select(did.as("doc_id"), url.as("url"))
-        .withColumn("surt_key", Curation.surtKey(col("url")))
-        .orderBy("doc_id")
-    }),
-    // crawl discovery: robots.txt Sitemap: directives — the
-    // autodiscovery step that feeds the sitemap parser (q84) its fetch
-    // frontier. Cross-group semantics: a directive inside a FOREIGN
-    // agent's group still applies (unlike Allow/Crawl-delay). Plant
-    // spans: in-group, two directives (both kept, in order), foreign
-    // group, commented-out + relative value (both dropped), case
-    // variant with padding, and no directive at all
-    "q119_sitemap_directive" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val k = pmod(did, lit(6))
-      val host = concat(col("source"), lit("-"), k.cast("string"),
-        lit(".example.com"))
-      val txt = when(k === 0, concat(
-          lit("User-agent: *\nDisallow: /a\nSitemap: https://"), host,
-          lit("/s.xml\n")))
-        .when(k === 1, concat(lit("Sitemap: https://"), host,
-          lit("/a.xml\nUser-agent: *\nDisallow: /b\nSitemap: https://"),
-          host, lit("/b.xml\n")))
-        .when(k === 2, concat(
-          lit("User-agent: googlebot\nDisallow: /\nSitemap: http://"),
-          host, lit("/g.xml\n")))
-        .when(k === 3, concat(lit("# Sitemap: https://"), host,
-          lit("/x.xml\nSitemap: /local.xml\n")))
-        .when(k === 4, concat(lit("SITEMAP:   https://"), host,
-          lit("/S2.XML  \n")))
-        .otherwise(lit("User-agent: *\nDisallow: /z\n"))
-      Robots.sitemapDirectives(
-          t(s, d, "documents").select(host.as("host"), txt.as("txt"))
-            .distinct(),
-          "host", "txt")
-        .orderBy("host", "map_pos")
-    }),
-    // internationalized domains: punycode/ACE hosts decoded to Unicode
-    // (native IdnToUnicode expression) + the UTS#39 single-label
-    // mixed-script homograph flag. Plant spans: German umlaut label,
-    // Han TLD label, plain ASCII (fast path), the Cyrillic-а "аpple"
-    // homograph (the one that must flag), and a second Latin-script
-    // decode that must NOT flag
-    "q120_idn" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val k = pmod(did, lit(5))
-      val host = concat(col("source"), lit("."),
-        when(k === 0, lit("www.xn--mnchen-3ya.example.com"))
-          .when(k === 1, lit("xn--fiqs8s.cn"))
-          .when(k === 2, lit("plain.example.com"))
-          .when(k === 3, lit("xn--pple-43d.com"))
-          .otherwise(lit("xn--bcher-kva.org")))
-      t(s, d, "documents").select(did.as("doc_id"), host.as("host"))
-        .withColumn("host_unicode",
-          graft.functions.IdnToUnicode(col("host")))
-        .withColumn("mixed_script",
-          Curation.mixedScriptHost(col("host_unicode")))
-        .orderBy("doc_id")
-    }),
-    // term-lexicon gate: banned-word / policy-phrase stats in ONE text
-    // pass (native Aho-Corasick kernel) — overlap-inclusive occurrence
-    // count + distinct-terms-hit + the C4-style >= k distinct gate.
-    // The term set nests on purpose ("scan"/"can"/"an",
-    // "window"/"win"/"ndo") to exercise fail-chain output folding, and
-    // includes one absent term that must count zero everywhere
-    "q121_term_gate" -> ((s, d) =>
-      TextAnalysis.termGate(
-          t(s, d, "documents").select(col("doc_id").cast("long")
-            .as("doc_id"), col("text")),
-          "text", Q121Terms, minDistinct = 4)
-        .select(col("doc_id"), col("term_matches"), col("n_terms_hit"),
-          col("term_flagged"))
-        .orderBy("doc_id")),
-    // cross-corpus overlap sketch: KMV bottom-k estimates of
-    // |A ∪ B| / Jaccard / |A ∩ B| from k 32-bit hashes per side —
-    // the planning query BEFORE an ingestion dedup (a full answer is
-    // a distinct-join over both corpora; the decision needs ~percent
-    // accuracy). Plant: A = 350 keys, B = the same shifted by 100
-    // (true union 450 / intersection 250); k=64 forces the estimator
-    // path, and the exact counts ride along so estimate quality is
-    // visible in the result itself
-    "q122_kmv_overlap" -> ((s, d) => {
-      val base = t(s, d, "documents")
-        .select(pmod(col("doc_id").cast("long"), lit(350)).as("v"))
-      val a = base.select(concat(lit("e"), col("v").cast("string"))
-        .as("key"))
-      val b = base.select(concat(lit("e"), (col("v") + 100)
-        .cast("string")).as("key"))
-      val sk = Sketch.kmvOverlap(a, b, "key", k = 64)
-      val exact = a.distinct().select(col("key"), lit(1).as("ia"))
-        .join(b.distinct().select(col("key"), lit(1).as("ib")),
-          Seq("key"), "full")
-        .agg(count(lit(1)).cast("long").as("exact_union"),
-          sum(when(col("ia") === 1 && col("ib") === 1, 1L)
-            .otherwise(0L)).cast("long").as("exact_inter"))
-      sk.crossJoin(exact)
-    }),
-    // phrase induction: top-50 adjacent-token bigrams by PMI over the
-    // corpus — ranked by the exact lift ratio c_xy·N/(c_x·c_y) in
-    // decimal ppm (log-free: log is monotone, so lift order IS PMI
-    // order), min-count 5 against hapax-pair degeneracy
-    "q123_collocations" -> ((s, d) =>
-      TextAnalysis.collocations(
-        t(s, d, "documents").select(col("text")),
-        "text", minCount = 5, topK = 50)),
-    // classifier calibration: exact F1 sweep over every observed score
-    // threshold + the argmax cut — the step between rankAuc (q73:
-    // "the ranking is good") and gating the corpus ("cut HERE").
-    // Plant: score = (7919·id mod 1000)·1000 ppm; label = score plus
-    // bounded md5 noise clears 900000 — correlated but imperfect, so
-    // the sweep has a real interior maximum
-    "q124_f1_threshold" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val score = pmod(did * 7919, lit(1000)) * 1000
-      val noise = pmod(graft.functions.Md5Prefix32(
-        concat(did.cast("string"), lit(":lab"))), lit(400000))
-      Curation.f1Sweep(
-        t(s, d, "documents").select(score.as("score_ppm"),
-          (score + noise >= 900000L).cast("int").as("label")),
-        "score_ppm", "label")
-    }),
-    // weight-proportional sampling: sequential Poisson (k smallest
-    // (u+1)/w priorities) — token-mass-weighted carving with zero
-    // rand(); the float priority is ONE IEEE division of exact-double
-    // integers, so the sample is bit-reproducible across engines
-    "q125_weighted_sample" -> ((s, d) =>
-      Curation.weightedSample(
-          t(s, d, "documents").select(col("doc_id").cast("long")
-            .as("doc_id"), coalesce(col("n_chars"), lit(0L)).as("w")),
-          "doc_id", "w", k = 50)
-        .select(col("doc_id"), col("w"), col("sample_rank"))
-        .orderBy("sample_rank")),
-    // RFC 9309 wildcard robots gate: `*` / trailing-`$` patterns with
-    // most-octets precedence. Plant spans: star-suffix disallow, an
-    // anchored Allow that outranks it, the star-leading .php$
-    // extension form, /p* outranking Allow /p by one octet, a literal
-    // mid-pattern $, and a no-match path
-    "q126_robots_wildcards" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val k = pmod(did, lit(6))
-      val host = concat(col("source"), lit(".example.com"))
-      val path = when(k === 0, lit("/fish/deep/x"))
-        .when(k === 1, lit("/fish/ok"))
-        .when(k === 2, lit("/site/index.php"))
-        .when(k === 3, lit("/pq"))
-        .when(k === 4, lit("/a$b/z"))
-        .otherwise(lit("/zzz"))
-      val urls = t(s, d, "documents").select(did.as("doc_id"),
-        concat(lit("http://"), host, path).as("url"))
-      val txt = "User-agent: *\nDisallow: /fish*\nAllow: /fish/ok$\n" +
-        "Disallow: /*.php$\nAllow: /p\nDisallow: /p*\nDisallow: /a$b\n"
-      val robots = t(s, d, "documents").select(host.as("host"))
-        .distinct().withColumn("txt", lit(txt))
-      Robots.allowedByRobots(urls, "url",
-          Robots.parseRobots(robots, "host", "txt"),
-          rfcWildcards = true)
-        .select(col("doc_id"), col("url"), col("matched_prefix"),
-          col("allowed"))
-        .orderBy("doc_id")
-    }),
-    // Luhn-validated card redaction: a bare 13-19-digit regex is
-    // mostly false positives; the checksum gate redacts only real
-    // card shapes. Plant spans: spaced valid Visa, the SAME number
-    // off by one (Luhn fail — must stay), compact valid Amex, dashed
-    // valid Discover, a 12-digit too-short run, and a 24-digit run
-    // (every interior cut fails the word boundary — no partial match)
-    "q127_cc_redact" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val k = pmod(did, lit(6))
-      val txt = when(k === 0, lit("call 4539 1488 0343 6467 now"))
-        .when(k === 1, lit("call 4539 1488 0343 6468 now"))
-        .when(k === 2, lit("amex 378282246310005 ok"))
-        .when(k === 3, lit("disc 6011-1111-1111-1117 end"))
-        .when(k === 4, lit("short 601111111111 end"))
-        .otherwise(lit("run 123456789012345678901234 x"))
-      t(s, d, "documents").select(did.as("doc_id"), txt.as("text"))
-        .withColumn("cc_redacted", Curation.ccRedact(col("text")))
-        .withColumn("n_cc",
-          size(Curation.ccValidSpans(col("text"))).cast("long"))
-        .orderBy("doc_id")
-    }),
-    // JL sign projection: 64-dim embeddings shrunk to 16 dims with a
-    // deterministic ±1 matrix; 50 pairs report original vs projected
-    // cosine side by side — the dimensionality-reduction step that
-    // runs candidate generation at d/m the FLOPs before exact re-rank
-    "q128_jl_project" -> ((s, d) => {
-      val signs = SimSearch.jlSigns(16, 64)
-      val e = t(s, d, "embeddings").select(
-        col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      val p = e.withColumn("pv",
-        SimSearch.signProject(col("v"), signs))
-      val a = p.where(col("vec_id") < 50).select(
-        col("vec_id").as("pair_id"), col("v").as("va"),
-        col("pv").as("pa"))
-      val b = p.select((col("vec_id") - 250).as("pair_id"),
-        col("v").as("vb"), col("pv").as("pb"))
-        .where(col("pair_id") >= 0 && col("pair_id") < 50)
-      a.join(b, "pair_id")
-        .select(col("pair_id"),
-          round(SimSearch.cosine(col("va"), col("vb")), 6)
-            .as("cos_orig"),
-          round(SimSearch.cosine(col("pa"), col("pb")), 6)
-            .as("cos_proj"))
-        .orderBy("pair_id")
-    }),
-    // quality signals: character- and token-level Shannon entropy per
-    // document — the compressibility/garble proxy (base64 blobs score
-    // high char entropy, repeated-phrase spam scores low token
-    // entropy); pure per-row Columns
-    "q129_entropy" -> ((s, d) =>
-      t(s, d, "documents").select(
-        col("doc_id").cast("long").as("doc_id"),
-        TextAnalysis.charEntropy(col("text")).as("char_entropy"),
-        TextAnalysis.tokenEntropy(col("text")).as("token_entropy"))
-        .orderBy("doc_id")),
-    // clustering-quality metrics: pairwise P/R/F1 + B-cubed (integer
-    // ppm, one floor per group) grading one partition of the corpus
-    // against another — here the lang partition scored against source
-    // as reference (the dedup-clustering report card, exercised on
-    // real columns)
-    "q130_cluster_eval" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Curation.clusterEval(
-        docs.select(col("doc_id"), col("lang")),
-        docs.select(col("doc_id"), col("source")),
-        "doc_id", "lang", "source")
-    }),
-    // HyperLogLog distinct-count sketch: 2^8 registers estimate the
-    // corpus 3-gram vocabulary in one scan (no distinct(), register
-    // sums exact-integer so agg order can't move the estimate); exact
-    // count and error ride along as the accuracy report
-    "q131_hll" -> ((s, d) => {
-      val keys = t(s, d, "documents")
-        .select(Dedup.tokens(col("text")).as("tk"))
-        .select(explode(Dedup.shinglesOf(col("tk"), 3)).as("key"))
-        .where(length(col("key")) > 0)
-      val est = Sketch.hllEstimate(Sketch.hllRegisters(keys, "key"), 8)
-      val exact = keys.agg(
-        countDistinct(col("key")).cast("long").as("exact_distinct"))
-      est.crossJoin(exact).select(
-        col("m"), col("n_nonzero"), col("est"), col("exact_distinct"),
-        floor(abs(col("est") - col("exact_distinct")) * 1000000.0 /
-          col("exact_distinct")).cast("long").as("err_ppm"))
-    }),
-    // mixture design: exact water-filling allocation of a 15k-token
-    // budget across languages toward target weights (de's 35% target
-    // exceeds its supply -> capped, surplus redistributes; es absent
-    // from the target map -> zero); closed form, stratum-histogram
-    // windows only
-    "q132_mix_waterfill" -> ((s, d) =>
-      Curation.mixWaterFill(
-        t(s, d, "documents").select(col("lang"),
-          TextAnalysis.tokenCount(col("text")).as("n_toks")),
-        "lang", "n_toks",
-        Map("en" -> 250000L, "de" -> 350000L, "fr" -> 200000L,
-          "zh" -> 200000L),
-        budget = 15000L).orderBy("stratum")),
-    // file skipping: relational per-shard Bloom index — 20 present +
-    // 20 absent probe keys report candidate-shard counts and the
-    // no-false-negative hit flag (present keys MUST surface their
-    // true shard; absent keys measure the fp rate)
-    "q133_bloom_index" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        concat(lit("doc:"), col("doc_id")).as("key"),
-        pmod(col("doc_id"), lit(8)).cast("long").as("shard"))
-      val idx = Curation.bloomShardIndex(docs, "shard", "key", 4096)
-      val probes = docs.where(col("doc_id") < 20)
-        .select(col("key"), col("shard").as("true_shard"))
-        .unionByName(docs.where(col("doc_id") < 20)
-          .select(concat(lit("missing:"), col("doc_id")).as("key"),
-            lit(null).cast("long").as("true_shard")))
-      val cands = Curation.bloomShardLookup(idx, probes, "key", 4096)
-      probes.join(cands, Seq("key"), "left")
-        .groupBy(col("key"), col("true_shard"))
-        .agg(count(col("shard")).as("n_cand"),
-          max(when(col("shard") === col("true_shard"), 1L)
-            .otherwise(0L)).as("hit"))
-        .select(col("key"), col("n_cand"), col("hit"))
-        .orderBy("key")
-    }),
-    // hybrid retrieval: reciprocal-rank fusion of the BM25 ranking
-    // with the plain-TF ranking over the same query workload — the
-    // calibration-free list merge (ranks meet, scores never do)
-    "q134_rrf_fusion" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // ONE corpus tokenize pass serves both rankers (matchedPostings
-      // materializes the query-term-restricted postings once)
-      val m = Retrieval.matchedPostings(docs, "doc_id", "text",
-        bm25Queries(s))
-      val bm = Retrieval.bm25(docs, "doc_id", "text", bm25Queries(s),
-          topK = 10, precomputedMatched = Some(m))
-        .select(col("query_id"), col("doc_id"), col("rank"))
-      val tf = Retrieval.tfTopK(docs, "doc_id", "text", bm25Queries(s),
-          topK = 10, precomputedMatched = Some(m))
-        .select(col("query_id"), col("doc_id"), col("rank"))
-      Retrieval.rrfFuse(Seq(bm, tf), kRrf = 60, topK = 5)
-        .orderBy("query_id", "rank")
-    }),
-    // homoglyph spoof gate: hosts fold to their UTS#39-subset skeleton
-    // and hit a trusted list — Cyrillic paypal/google/apple and Greek
-    // amazon plants flag, the EXACT trusted spelling and clean hosts
-    // pass (k=3 pins the skeleton-equal-but-identical case)
-    "q135_homoglyph" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val k = pmod(did, lit(6))
-      val host = when(k === 0, lit("pаypal.com"))
-        .when(k === 1, lit("gооgle.com"))
-        .when(k === 2, lit("amazοn.com"))
-        .when(k === 3, lit("paypal.com"))
-        .when(k === 5, lit("аррӏе.com"))
-        .otherwise(concat(lit("host"), did, lit(".com")))
-      val hosts = t(s, d, "documents").select(did.as("doc_id"),
-        host.as("host"))
-      Curation.spoofedHosts(hosts, "host",
-          Seq("paypal.com", "google.com", "amazon.com", "apple.com"))
-        .select(col("doc_id"), col("host"), col("skeleton"),
-          col("spoof_of"), col("spoofed"))
-        .orderBy("doc_id")
-    }),
-    // zone-map pruning: per-shard min/max sidecars answer a 2-D box
-    // predicate for a LINEAR layout vs the z-ordered one — the
-    // planner-side file-skipping decision, measured as shards touched
-    // (z-order wins because every z-contiguous shard spans a small box
-    // in BOTH dimensions)
-    "q136_zone_maps" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(
-        col("doc_id").cast("long").as("doc_id"),
-        col("n_chars").cast("long").as("n_chars"))
-      val bounds = Layout.columnBounds(docs, Seq("doc_id", "n_chars"))
-      val mx = bounds(0)._2
-      val nSh = 16L
-      val linear = docs.withColumn("shard", least(lit(nSh - 1),
-        call_function("div", col("doc_id") * nSh, lit(mx + 1))))
-      val zed = Layout.withZValue(docs, Seq("doc_id", "n_chars"),
-          bounds, bits = 8)
-        .withColumn("shard",
-          call_function("div", col("_z") * nSh, lit(65536L)))
-      val (loId, hiId) = ((mx + 1) / 5, 2 * (mx + 1) / 5)
-      // three predicate shapes: the first column (linear's home turf),
-      // the SECOND column alone (where a linear sort prunes nothing),
-      // and the 2-D box
-      val preds = Seq(
-        ("id_only", Seq(("doc_id", loId, hiId))),
-        ("chars_only", Seq(("n_chars", 150L, 250L))),
-        ("box", Seq(("doc_id", loId, hiId), ("n_chars", 150L, 250L))))
-      def one(name: String, sharded: DataFrame) = {
-        val zones = Layout.zoneMaps(sharded, "shard",
-          Seq("doc_id", "n_chars"))
-        preds.map { case (p, rs) =>
-          Layout.zonesTouched(zones, rs)
-            .agg(count(lit(1)).cast("long").as("shards_touched"))
-            .withColumn("layout", lit(name))
-            .withColumn("predicate", lit(p))
-        }.reduce(_ unionByName _)
-      }
-      val matched = preds.map { case (p, rs) =>
-        docs.where(rs.map { case (c, lo, hi) =>
-            col(c).between(lo, hi) }.reduce(_ && _))
-          .agg(count(lit(1)).cast("long").as("rows_matched"))
-          .withColumn("predicate", lit(p))
-      }.reduce(_ unionByName _)
-      one("linear", linear).unionByName(one("zorder", zed))
-        .join(matched, "predicate")
-        .select(col("layout"), col("predicate"),
-          lit(nSh).as("shards_total"), col("shards_touched"),
-          col("rows_matched"))
-        .orderBy("layout", "predicate")
-    }),
-    // resharding: rendezvous (HRW) assignment at 8 and 9 shards —
-    // the minimal-movement property measured: every moved key moves
-    // TO the new shard, ~1/9 of keys total (mod-9 would move 8/9)
-    "q137_rendezvous" -> ((s, d) => {
-      val a = t(s, d, "documents")
-        .select(concat(lit("doc:"), col("doc_id")).as("key"))
-        .withColumn("s8", Layout.rendezvousShard(col("key"), 8))
-        .withColumn("s9", Layout.rendezvousShard(col("key"), 9))
-      val occ = a.groupBy("s8").agg(count(lit(1)).as("c"))
-        .agg(min("c").cast("long").as("min_shard8"),
-          max("c").cast("long").as("max_shard8"))
-      a.agg(count(lit(1)).cast("long").as("n_keys"),
-          sum(when(col("s8") =!= col("s9"), 1L).otherwise(0L))
-            .cast("long").as("n_moved"),
-          sum(when(col("s8") =!= col("s9") && col("s9") === 8L, 1L)
-            .otherwise(0L)).cast("long").as("n_moved_to_new"))
-        .withColumn("moved_ppm",
-          expr("n_moved * 1000000 div n_keys"))
-        .crossJoin(occ)
-    }),
-    // phrase search: exact consecutive-token occurrences over the
-    // positional index — incl. the repeated-term phrase ("table
-    // table") the distinct-offset count exists for, and a
-    // guaranteed-absent phrase as the negative
-    "q138_phrase" -> ((s, d) =>
-      Retrieval.phraseMatch(t(s, d, "documents"), "doc_id", "text",
-          Seq(("p1_value_table", "value table"),
-            ("p2_fast_table", "fast table"),
-            ("p3_absent", "slow query nevermatches"),
-            ("p4_repeat", "table table")))
-        .select(col("phrase_id"), col("id").cast("long").as("doc_id"),
-          col("n_occurrences"))
-        .orderBy("phrase_id", "doc_id")),
-    // count-min sketch: 4x256 counters answer token frequencies
-    // without a frequency table; every probe reports estimate vs exact
-    // (overestimate >= 0 ALWAYS — the CMS invariant), absent probes
-    // included
-    "q139_cms" -> ((s, d) => {
-      val toks = t(s, d, "documents")
-        .select(explode(Dedup.tokens(col("text"))).as("key"))
-      val cms = Sketch.cmsTable(toks, "key", d = 4, w = 256)
-      val probes = toks.groupBy("key")
-        .agg(count(lit(1)).cast("long").as("exact"))
-        .unionByName(t(s, d, "documents").where(col("doc_id") < 5)
-          .select(concat(lit("zz"), col("doc_id")).as("key"),
-            lit(0L).as("exact")))
-      Sketch.cmsLookup(cms, probes, "key", d = 4, w = 256)
-        .join(probes, "key")
-        .select(col("key"), col("est"), col("exact"),
-          (col("est") - col("exact")).as("overestimate"))
-        .orderBy("key")
-    }),
-    // keyword extraction: TextRank — PageRank over the adjacent-token
-    // co-occurrence graph (vocabulary-sized, undirected); top-20
-    // central words of the corpus topology
-    "q140_textrank" -> ((s, d) =>
-      TextAnalysis.textRankKeywords(t(s, d, "documents"), "text",
-        iterations = 3, topK = 20)),
-    // related pages without content: co-citation counts (common
-    // in-linkers, the off-diagonal of A^T A) over a planted two-
-    // generator link graph (40 sources x 97 pages, counts 1..11 — the
-    // q71-family graph is functional, one dst per src, so it plants
-    // its own), hub-capped like every bounded-blocking op
-    "q141_cocitation" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val docs = t(s, d, "documents")
-      def e(dst: Column) = docs.select(
-        concat(lit("s"), pmod(did, lit(40))).as("src"),
-        concat(lit("p"), dst).as("dst"))
-      val edges = e(pmod(did, lit(97)))
-        .unionByName(e(pmod(did * 5L + 2L, lit(97))))
-      WebGraph.coCitation(edges, "src", "dst",
-          minCount = 3, maxOutDeg = 64)
-        .orderBy("a", "b")
-    }),
-    // search-result highlighting: KWIC context windows around phrase
-    // occurrences, capped at 2 per (phrase, doc); text rejoins only
-    // for matched docs
-    "q142_kwic" -> ((s, d) =>
-      Retrieval.kwicSnippets(t(s, d, "documents"), "doc_id", "text",
-          Seq(("p1", "value table"), ("p4", "table table")),
-          window = 2, maxPerDoc = 2)
-        .select(col("phrase_id"), col("id").cast("long").as("doc_id"),
-          col("start").cast("long").as("start"), col("snippet"))
-        .orderBy("phrase_id", "doc_id", "start")),
-    // graph density: exact triangle count + global clustering
-    // coefficient via degree-ordered orientation (each doc plants a
-    // 3-clique on a 30-node graph, so the count is rich and exact)
-    "q143_triangles" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val a = pmod(did, lit(30))
-      val b = pmod(did * 7L + 1L, lit(30))
-      val c = pmod(did * 13L + 5L, lit(30))
-      val docs = t(s, d, "documents")
-      val edges = docs.select(a.as("x"), b.as("y"))
-        .unionByName(docs.select(a.as("x"), c.as("y")))
-        .unionByName(docs.select(b.as("x"), c.as("y")))
-      WebGraph.triangleStats(edges, "x", "y")
-    }),
-    // dense-community core: 5-core of the planted graph (3-clique
-    // hub layer + two pendant tail layers) — the tails peel away in
-    // 3 rounds, the 30-node dense core survives intact
-    "q144_kcore" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val docs = t(s, d, "documents")
-      def e(x: Column, y: Column) =
-        docs.select(x.as("x"), y.as("y"))
-      val a = pmod(did, lit(30))
-      val b = pmod(did * 7L + 1L, lit(30))
-      val c = pmod(did * 13L + 5L, lit(30))
-      val p1 = pmod(did, lit(100)) + 30L
-      val p2 = pmod(did, lit(200)) + 130L
-      val edges = e(a, b).unionByName(e(a, c)).unionByName(e(b, c))
-        .unionByName(e(a, p1)).unionByName(e(p1, p2))
-      WebGraph.kCore(edges, "x", "y", k = 5)
-        .orderBy("u", "v")
-    }),
-    // neighborhood function: HyperANF over the planted pendant graph
-    // (HLL sketch per node, 4 merge rounds) — per-round mean estimated
-    // ball size, the average-distance/effective-diameter input a
-    // 10^12-page graph cannot BFS
-    "q145_hyperanf" -> ((s, d) => {
-      val edges = hyperAnfEdges(s, d)
-      WebGraph.hyperAnf(edges, "x", "y", p = 5, rounds = 4)
-        .groupBy("round")
-        .agg(count(lit(1)).cast("long").as("n_nodes"),
-          sum(round(col("est") * 1000000.0, 0).cast("long"))
-            .cast("long").as("sum_est_micro"))
-        .withColumn("mean_est_micro",
-          expr("sum_est_micro div n_nodes"))
-        .orderBy("round")
-    }),
-    // per-source cardinality monitor: keyed HLL — one scan gives every
-    // source its distinct-3-gram estimate (the per-tenant/per-day
-    // rollup shape); exact counts + error ride along
-    "q146_hll_by_source" -> ((s, d) => {
-      val keys = t(s, d, "documents")
-        .select(col("source"), Dedup.tokens(col("text")).as("tk"))
-        .select(col("source"),
-          explode(Dedup.shinglesOf(col("tk"), 3)).as("key"))
-        .where(length(col("key")) > 0)
-      val regs = Sketch.hllRegistersBy(keys, Seq("source"), "key", 8)
-      val est = Sketch.hllEstimateBy(regs, Seq("source"), 8)
-      val exact = keys.groupBy("source")
-        .agg(countDistinct(col("key")).cast("long").as("exact_distinct"))
-      est.join(exact, "source")
-        .select(col("source"), col("n_nonzero"), col("est"),
-          col("exact_distinct"),
-          floor(abs(col("est") - col("exact_distinct")) * 1000000.0 /
-            col("exact_distinct")).cast("long").as("err_ppm"))
-        .orderBy("source")
-    }),
-    // host-graph centrality with link multiplicities: weighted
-    // PageRank over the two-generator graph where an edge's weight is
-    // its link count — ten links to a host count ten times one
-    "q147_pagerank_weighted" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val docs = t(s, d, "documents")
-      def e(dst: Column) = docs.select(
-        concat(lit("s"), pmod(did, lit(40))).as("src"),
-        concat(lit("p"), dst).as("dst"))
-      val edges = e(pmod(did, lit(97)))
-        .unionByName(e(pmod(did * 5L + 2L, lit(97))))
-        .groupBy("src", "dst").agg(count(lit(1)).cast("long").as("w"))
-      WebGraph.pageRankWeighted(edges, "src", "dst", "w",
-          iterations = 3)
-        .select(col("node"), col("rank_ppb").cast("long")
-          .as("rank_ppb"))
-        .orderBy("node")
-    }),
-    // code-switch detection: three planted script-snippet sentences
-    // per doc, language-ID'd individually — mixed-language pages
-    // (partial translations, foreign boilerplate) that a whole-doc
-    // language ID averages away
-    "q148_code_switch" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val txt = concat(
-        pickCol(did, ScriptSnippets, 0), lit(". "),
-        pickCol(did, ScriptSnippets, 1), lit(". "),
-        pickCol(did, ScriptSnippets, 2))
-      TextAnalysis.codeSwitchStats(
-          t(s, d, "documents").select(did.as("doc_id"), txt.as("text")),
-          "doc_id", "text")
-        .select(col("id").as("doc_id"), col("n_sents"), col("n_langs"),
-          col("major_lang"), col("mixed"))
-        .orderBy("doc_id")
-    }),
-    // graded ranking evaluation: nDCG@10 of the BM25 ranking against
-    // planted integer relevance grades — the judged-retrieval metric
-    // completing rankAuc (binary AUC) and f1Sweep (binary cut)
-    "q149_ndcg" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val ranking = Retrieval.bm25(docs, "doc_id", "text",
-          bm25Queries(s), topK = 10)
-        .select(col("query_id"), col("doc_id"), col("rank"))
-      val labels = docs.select(col("doc_id").cast("long").as("doc_id"))
-        .crossJoin(bm25Queries(s).select("query_id").distinct())
-        .select(col("query_id"), col("doc_id"),
-          pmod(col("doc_id") * 3L + length(col("query_id")), lit(4L))
-            .as("rel"))
-      Retrieval.ndcgAtK(ranking, labels, k = 10)
-        .orderBy("query_id")
-    }),
-    // field-weighted retrieval: simple BM25F with title (first five
-    // tokens, weight 3) and body (weight 1) — a title hit counts like
-    // three body hits under one global length saturation
-    "q150_bm25f" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        col("text"),
-        array_join(slice(Dedup.tokens(col("text")), 1, 5), " ")
-          .as("title"))
-      Retrieval.bm25f(docs, "doc_id",
-          Seq(("title", 3L), ("text", 1L)), bm25Queries(s), topK = 10)
-        .orderBy("query_id", "rank")
-    }),
-    // pseudo-relevance feedback: the 3 heaviest non-query terms of
-    // each query's BM25 top-5 become expansion terms — the relational
-    // Rocchio loop (the expanded workload feeds bm25 again with no
-    // driver round-trip)
-    "q151_prf_expand" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val ranking = Retrieval.bm25(docs, "doc_id", "text",
-        bm25Queries(s), topK = 10)
-      Retrieval.expandQueries(docs, "doc_id", "text", bm25Queries(s),
-          ranking, k = 5, m = 3)
-        .orderBy("query_id", "exp_rank")
-    }),
-    // known-item retrieval metric: reciprocal rank of the first
-    // relevant doc per query (same planted grades as q149, rel >= 2)
-    "q152_mrr" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val ranking = Retrieval.bm25(docs, "doc_id", "text",
-          bm25Queries(s), topK = 10)
-        .select(col("query_id"), col("doc_id"), col("rank"))
-      val labels = docs.select(col("doc_id").cast("long").as("doc_id"))
-        .crossJoin(bm25Queries(s).select("query_id").distinct())
-        .select(col("query_id"), col("doc_id"),
-          pmod(col("doc_id") * 3L + length(col("query_id")), lit(4L))
-            .as("rel"))
-      Retrieval.mrrAtK(ranking, labels, k = 10, minRel = 2L)
-        .orderBy("query_id")
-    }),
-    // near-dup candidates without MinHash: pigeonhole-blocked simhash
-    // pairs (Manku et al., WWW 2007) — exact recall for hamming <= 1
-    // on the portable 16-bit fingerprint (2 blocks x 8 bits); the
-    // production path is 64-bit / 4 blocks / hamming <= 3 (OpsSpec)
-    "q153_simhash_pairs" -> ((s, d) =>
-      Dedup.simhashNearDupPairs(
-          t(s, d, "documents").select(
-            col("doc_id").cast("long").as("doc_id"), col("text")),
-          "doc_id", "text", bits = 16, nBlocks = 2, maxHamming = 1)
-        .orderBy("a", "b")),
-    // the language-modeling ranker next to BM25: Dirichlet-smoothed
-    // query likelihood (Zhai & Lafferty 2001), matched-terms form,
-    // round-6 scores, rank on the rounded score
-    "q154_query_likelihood" -> ((s, d) =>
-      Retrieval.queryLikelihood(t(s, d, "documents"), "doc_id", "text",
-          bm25Queries(s), topK = 10, mu = 2000L)
-        .orderBy("query_id", "rank")),
-    // off-page relevance: BM25 over virtual per-target-host anchor
-    // documents (weighted postings — no concatenated hub strings)
-    "q157_anchor_bm25" -> ((s, d) => {
-      import s.implicits._
-      val qs = Seq(("qa", "news"), ("qa", "item"), ("qb", "section"),
-        ("qb", "index"), ("qc", "relative"), ("qc", "link"))
-        .toDF("query_id", "term")
-      Retrieval.anchorRetrieval(
-          LinkExtractor.extractLinks(linkPages(s, d), "url", "html"),
-          qs, topK = 10)
-        .orderBy("query_id", "rank")
-    }),
-    // extractive summarization: LexRank — PageRank centrality over
-    // within-doc sentence-similarity graphs; sentence-bearing docs
-    // synthesized from each doc's own tokens by modular picks (the
-    // corpus text has no punctuation, the q148 discipline)
-    "q158_lexrank" -> ((s, d) =>
-      TextAnalysis.lexRankSummary(sentenceDocs(s, d), "doc_id", "text",
-          iterations = 3, topPerDoc = 2)
-        .orderBy("id", "rnk")),
-    // readability gates: Flesch reading ease + FK grade level in
-    // exact integer milli-points over the same sentence-bearing docs
-    "q159_readability" -> ((s, d) =>
-      TextAnalysis.readability(sentenceDocs(s, d), "doc_id", "text")
-        .orderBy("doc_id")),
-    // chunk-overlap near-dup pairs: CDC's payoff — insertion-robust
-    // shared-span detection over chunk-hash sets, df-capped join
-    "q168_chunk_neardup" -> ((s, d) =>
-      Curation.chunkNearDupPairs(
-          t(s, d, "documents").select(
-            col("doc_id").cast("long").as("doc_id"), col("text")),
-          "doc_id", "text", minJaccard = 0.05, maxChunkDf = 64)
-        .orderBy("a", "b")),
-    // storage-dedup ratio: CDC chunks → exact hash dedup → one
-    // accounting row (the "how much would chunk-level dedup save")
-    "q166_chunk_dedup" -> ((s, d) => {
-      val ch = Curation.cdcChunks(
-        t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("text")),
-        "doc_id", "text")
-        .localCheckpoint() // two aggregation branches below
-      val a1 = ch.agg(count(lit(1)).as("n_chunks"),
-        countDistinct(col("chunk_hash")).as("n_unique"),
-        sum(col("chunk_len")).as("total_tokens"))
-      val a2 = ch.select("chunk_hash", "chunk_len").distinct()
-        .agg(sum(col("chunk_len")).as("unique_tokens"))
-      a1.crossJoin(a2).select(col("n_chunks"), col("n_unique"),
-        col("total_tokens"), col("unique_tokens"),
-        call_function("div",
-          (col("total_tokens") - col("unique_tokens")) * lit(1000000L),
-          col("total_tokens")).as("savings_ppm"))
-    }),
-    // near-dup clustering through the simhash pigeonhole pairs — the
-    // one-long-per-doc alternative to the minhash path (q32/q62).
-    // STAR contraction, not label propagation: the 16-bit portable
-    // fingerprint's random hamming-collisions chain into
-    // long-diameter components — the adversarial shape whose round
-    // count star bounds at O(log n) where label prop pays diameter
-    // (q62's rationale; both paths pinned equal by this oracle, and
-    // at the production 64 bits the spurious chains vanish entirely)
-    "q167_simhash_cluster" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(
-        col("doc_id").cast("long").as("doc_id"), col("text"))
-      val pairs = Dedup.simhashNearDupPairs(docs, "doc_id", "text",
-        bits = 16, nBlocks = 2, maxHamming = 1)
-      Dedup.canonicalizeStar(docs, "doc_id", pairs)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    }),
-    // storage dedup: content-defined chunking — boundaries from a
-    // 4-token window hash mod 16; chunk rows with portable hashes
-    "q165_cdc_chunks" -> ((s, d) =>
-      Curation.cdcChunks(
-          t(s, d, "documents").select(
-            col("doc_id").cast("long").as("doc_id"), col("text")),
-          "doc_id", "text")
-        .orderBy("id", "chunk_idx")),
-    // keyword extraction: RAKE — stopword-delimited candidate runs,
-    // deg/freq word scores, integer-ppm phrase scoring
-    "q164_rake" -> ((s, d) =>
-      TextAnalysis.rakeKeywords(t(s, d, "documents"), "doc_id", "text",
-        stopwords = Seq("the", "a", "of", "and"), maxPhraseLen = 4,
-        topK = 30)),
-    // targeted selection: Moore-Lewis cross-entropy difference — rank
-    // by in-domain (source=src0) vs general bigram likelihood ratio
-    "q163_moore_lewis" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Curation.mooreLewis(docs, "doc_id", "text",
-          docs.filter(col("source") === "src0"))
-        .orderBy("doc_id")
-    }),
-    // retrieval: term-proximity ranking — bottleneck/best pair
-    // distances over capped positional postings, all terms required
-    "q162_proximity" -> ((s, d) =>
-      Retrieval.termProximity(t(s, d, "documents"), "doc_id", "text",
-          bm25Queries(s), topK = 10)
-        .orderBy("query_id", "rank")),
-    // graph: effective diameter from the q145 neighborhood function —
-    // 90% threshold of final reach, first crossing + interpolation
-    "q161_eff_diameter" -> ((s, d) => {
-      val edges = hyperAnfEdges(s, d)
-      WebGraph.effectiveDiameter(
-        WebGraph.hyperAnf(edges, "x", "y", p = 5, rounds = 4))
-    }),
-    // drift monitoring: per-term Jensen-Shannon contributions between
-    // two sources — names the DRIVERS of a distribution shift
-    // margin mining over IVF candidates — the scale path of q102's
-    // brute baseline (nothing quadratic materializes: x probes 4 of
-    // 16 cells, pairs only with the right-side vectors there); margin
-    // statistics exact over the candidate graph, quantizer shared
-    // with q42/q103's oracle chain
-    "q181_margin_ann" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val cents = SimSearch.ivfCentroids(emb, "vec_id", "embedding", 16)
-      SimSearch.marginMiningCandidates(
-          emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-          emb.filter(pmod(col("vec_id"), lit(2)) === 1),
-          "vec_id", "embedding", cents, k = 4,
-          minMarginPpm = 1000000L, nProbe = 4)
-        .orderBy("x")
-    }),
-    // BPE encode with a FIXED 3-merge table — the native kernel
-    // (functions.BpeEncodeWords) checked against an INDEPENDENT
-    // DuckDB implementation of the sequential merge semantics. The
-    // planted merges chain (t+h -> th, th+e -> the, e+</w>) so apply
-    // order is observable; each has left != right, which makes
-    // matches non-overlapping and greedy == simultaneous replacement
-    // (the form SQL can express)
-    "q180_bpe_encode" -> ((s, d) => {
-      val merges = Seq(
-        ops.Bpe.Merge(0, "t", "h", "th", 0L),
-        ops.Bpe.Merge(1, "th", "e", "the", 0L),
-        ops.Bpe.Merge(2, "e", ops.Bpe.EndOfWord,
-          "e" + ops.Bpe.EndOfWord, 0L))
-      ops.Bpe.encode(
-          t(s, d, "documents").select(col("doc_id"), col("text")),
-          "text", merges)
-        .select(col("doc_id"),
-          col("n_bpe_tokens"),
-          md5(array_join(col("bpe_tokens"), " ")).as("bpe_md5"))
-        .orderBy("doc_id")
-    }),
-    // suffix-array exact-substring scrub (the --sa-scrub curation
-    // stage): scrub every token inside a >=8-token span occurring at
-    // least TWICE anywhere — ANY-repeat semantics, so the planted
-    // per-doc-unique span repeated twice WITHIN one document is
-    // scrubbed (q55's cross-doc form would keep it). Spark runs the
-    // real SA machinery (doubling + LCP walk); the oracle replays the
-    // n-gram-window occurrence-count form, equal by the
-    // dropDuplicatedSpans window-union proof applied to occurrence
-    // counts
-    "q179_sa_scrub" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val intra = concat(
-        lit("intra span alpha beta gamma delta epsilon zeta d"),
-        did.cast("string"))
-      val aug = concat_ws(" ",
-        when(pmod(did, lit(13)) === 5, lit(PlantCookie)),
-        col("text"),
-        when(pmod(did, lit(11)) === 3,
-          concat_ws(" ", intra, lit("mid"), intra)))
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        aug.as("text"))
-      Curation.dropDuplicatedSpansSa(docs, "doc_id", "text", n = 8)
-        .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-          col("removed_ppm"), md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-    "q178_term_drift" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      TextAnalysis.termDrift(
-          docs.filter(col("source") === "src0"),
-          docs.filter(col("source") === "src1"), "text")
-        .orderBy(col("jsd_contrib").desc, col("term"))
-        .limit(20)
-    }),
-    // lexical repetitiveness: per-doc Yule's K — the length-robust
-    // diversity gate (template spam recycles a tiny vocabulary)
-    "q177_yule_k" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"),
-          TextAnalysis.yuleK(col("text")).as("yule_k_milli"))
-        .orderBy("doc_id")),
-    // list-free stopword induction: frequent + non-bursty + evenly
-    // dispersed — the automatic replacement for hand-curated lists
-    "q176_stopword_induction" -> ((s, d) =>
-      TextAnalysis.induceStopwords(t(s, d, "documents"), "doc_id",
-          "text", topK = 30)
-        .orderBy(col("cf").desc, col("term"))),
-    // corpus linguistics: Gries DP dispersion over 10 hash-deciles —
-    // across-corpus evenness, the complement of q174's burstiness
-    "q175_dispersion" -> ((s, d) =>
-      TextAnalysis.termDispersion(t(s, d, "documents"), "doc_id",
-        "text", parts = 10, topK = 20)),
-    // corpus linguistics: term burstiness (VMR) — content terms clump,
-    // function words spread; exact one-floor staging, top-20 by cf
-    "q174_burstiness" -> ((s, d) =>
-      TextAnalysis.termBurstiness(t(s, d, "documents"), "doc_id",
-        "text", topK = 20)),
-    // semantic split leakage: the EMBEDDING twin of q65's lexical
-    // audit — near-dup vector pairs crossing deterministic split
-    // boundaries (one audit shape, two similarity modalities)
-    "q173_semantic_leakage" -> ((s, d) => {
-      val pairs = Dedup.embeddingNearDupPairs(t(s, d, "embeddings"),
-        "vec_id", "embedding", threshold = 0.2, planes = 4)
-      Curation.splitLeakageAuditFromPairs(pairs,
-          Seq("train" -> 8, "val" -> 1, "test" -> 1))
-        .orderBy("split_lo", "split_hi")
-    }),
-    // eval: Cohen's kappa — chance-corrected agreement between two
-    // deterministic quality gates, per source
-    "q171_kappa" -> ((s, d) =>
-      Curation.cohensKappa(
-          t(s, d, "documents")
-            .withColumn("long_doc", col("n_chars") >= 300)
-            .withColumn("tok_rich",
-              TextAnalysis.tokenCount(col("text")) >= 55),
-          "long_doc", "tok_rich", strataCols = Seq("source"))
-        .orderBy("source")),
-    // corpus concentration: exact Gini over per-host document counts
-    // — "how dominated is the crawl by its biggest hosts"
-    "q172_host_gini" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val host = concat(col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com"))
-      val hw = t(s, d, "documents").select(host.as("host"))
-        .groupBy("host").agg(count(lit(1)).cast("long").as("w"))
-      Curation.giniConcentration(hw, "host", "w")
-    }),
-    // eval: expected calibration error per source — does the
-    // length-derived confidence MEAN its probability of is_en
-    "q170_calibration" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val mx = docs.agg(max(col("n_chars")).cast("long").as("_mx"))
-      Curation.calibrationError(
-          docs.crossJoin(broadcast(mx))
-            .withColumn("conf_ppm",
-              expr("(CAST(n_chars AS BIGINT) * 1000000) div _mx"))
-            .withColumn("is_en", col("lang") === "en"),
-          "is_en", "conf_ppm", bins = 10, strataCols = Seq("source"))
-        .orderBy("source")
-    }),
-    // eval: Spearman rho over the same two rankers — in-subset
-    // re-ranks, integer 1 - 6Σd²/(n(n²-1)) ppm
-    "q169_spearman" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // ONE corpus tokenize pass serves both ranker arms (the q134
-      // matchedPostings discipline): matched postings and corpus
-      // stats are computed once and fed to bm25 AND queryLikelihood —
-      // identical tables to what each arm would derive on its own
-      val m = Retrieval.matchedPostings(docs, "doc_id", "text",
-        bm25Queries(s))
-      val st = Retrieval.corpusStats(docs, "text").localCheckpoint()
-      Retrieval.spearmanRho(
-          Retrieval.bm25(docs, "doc_id", "text", bm25Queries(s),
-            topK = 10, precomputedMatched = Some(m),
-            precomputedStats = Some(st)),
-          Retrieval.queryLikelihood(docs, "doc_id", "text",
-            bm25Queries(s), topK = 10, precomputedMatched = Some(m),
-            precomputedStats = Some(st)))
-        .orderBy("query_id")
-    }),
-    // eval: ranker agreement — Kendall tau between the BM25 and
-    // Dirichlet-QL orderings of the same workload's common docs
-    "q160_kendall_tau" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      // shared matched postings + stats across both arms (see q169)
-      val m = Retrieval.matchedPostings(docs, "doc_id", "text",
-        bm25Queries(s))
-      val st = Retrieval.corpusStats(docs, "text").localCheckpoint()
-      Retrieval.kendallTau(
-          Retrieval.bm25(docs, "doc_id", "text", bm25Queries(s),
-            topK = 10, precomputedMatched = Some(m),
-            precomputedStats = Some(st)),
-          Retrieval.queryLikelihood(docs, "doc_id", "text",
-            bm25Queries(s), topK = 10, precomputedMatched = Some(m),
-            precomputedStats = Some(st)))
-        .orderBy("query_id")
-    }),
-    // suffix-array-grade exact-substring machinery (the round-3
-    // deferred item): Manber-Myers prefix doubling as relational
-    // rounds + the LCP array from the doubling tables
-    "q155_suffix_array" -> ((s, d) =>
-      ops.SuffixArray.saWithLcp(t(s, d, "documents"), "doc_id", "text")
-        .orderBy("sa_rank")),
-    // exact duplicated spans from the SA: positions whose suffix
-    // shares >= 8 leading tokens with an SA neighbor = 8-gram occurs
-    // twice anywhere in the corpus, with the MAXIMAL repeat length.
-    // Derives from the SHARED memoized SA artifact (sharedSa) — the
-    // production build-once-persist shape: q155 times the
-    // construction itself; this query times the derive pass over the
-    // materialized (id, pos, sa_rank, lcp) table, so a bench run pays
-    // the doubling chain once, not twice
-    "q156_sa_dup_spans" -> ((s, d) =>
-      ops.SuffixArray.duplicatedPositionsFromSa(sharedSa(s, d),
-          minTokens = 8)
-        .orderBy("id", "pos")),
-    // output layout: byte-balanced shard assignment — cumulative-weight
-    // bins over a deterministic hash order (a row-count split skews
-    // wildly when document sizes do); cum/total ride along so the
-    // oracle pins the running sum itself, not just the bin id
-    "q118_balanced_shards" -> ((s, d) =>
-      Layout.balancedShards(
-          t(s, d, "documents").select(col("doc_id").cast("long")
-            .as("doc_id"), coalesce(col("n_chars"), lit(0L)).as("w")),
-          "doc_id", col("w"), nShards = 8)
-        .select(col("doc_id"), col("cum_bytes"), col("total_bytes"),
-          col("shard"))
-        .orderBy("doc_id")),
-    // corpus gating: soft-error-page detection (HTTP-200 "not found"
-    // shells) — error tokens in the title / error phrases in the body
-    // gate ONLY together with a short body (a long article ABOUT 404s
-    // survives); link density reported as a ppm feature
-    "q85_soft_errors" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val url = concat(lit("http://"), col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com/docs/d"),
-        col("doc_id").cast("string"), lit(".html"))
-      val c = pmod(did, lit(9))
-      // digit-fused title ("Doc n404", not "Doc 404"): ids 404/410
-      // must not trip the \b404\b error token
-      val title = when(c === 0, lit("404 Not Found"))
-        .when(c === 1, lit("Error log archive"))
-        .when(c === 2, lit("Tiny stub"))
-        .otherwise(concat(lit("Doc n"), col("doc_id").cast("string")))
-      val body = when(c === 0,
-          lit("the page you requested does not exist"))
-        .when(c === 1, repeat(lit("w "), 150))
-        .when(c === 2,
-          lit("just a stub here <a href=/x>x</a> <a href=/y>y</a>"))
-        .otherwise(repeat(lit("tok "), (lit(20) + pmod(did, lit(30)))
-          .cast("int")))
-      val html = concat(lit("<html><head><title>"), title,
-        lit("</title></head><body>"), body, lit("</body></html>"))
-      ErrorPages.softErrorSignals(
-        t(s, d, "documents").select(url.as("url"), html.as("html")),
-        "url", "html")
-        .orderBy("url")
-    }),
-    // ingestion: charset sniff (BOM, meta declaration over a Latin-1
-    // view, utf-8 default) + decode normalization of raw page bytes.
-    // text_utf8 is oracle-compared only where DuckDB can decode (the
-    // utf-8 family); the utf-16/latin-1 decode paths are pinned by
-    // CharsetSnifferSpec goldens
-    "q86_charset" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val url = concat(lit("http://"), col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com/docs/d"),
-        col("doc_id").cast("string"), lit(".html"))
-      val c = pmod(did, lit(5))
-      val ids = col("doc_id").cast("string")
-      val bin = when(c === 0, encode(concat(
-          lit("<html><head><meta charset=\"UTF-8\"></head><body>ascii d"),
-          ids, lit("</body></html>")), "UTF-8"))
-        .when(c === 1, concat(unhex(lit("EFBBBF")),
-          encode(concat(lit("<html>bom d"), ids, lit("</html>")),
-            "UTF-8")))
-        .when(c === 2, unhex(lit("FFFE680069002100")))
-        .when(c === 3, concat(
-          encode(lit("<meta http-equiv=\"Content-Type\" content=" +
-            "\"text/html; charset=latin1\"><body>caf"), "UTF-8"),
-          unhex(lit("E9")), encode(lit("</body>"), "UTF-8")))
-        .otherwise(encode(concat(lit("<html>plain d"), ids,
-          lit("</html>")), "UTF-8"))
-      CharsetSniffer.decodePages(
-          t(s, d, "documents").select(url.as("url"), bin.as("bin")),
-          "url", "bin")
-        .withColumn("text_utf8",
-          when(col("charset").isin("utf-8", "utf-8-bom"), col("text"))
-            .otherwise(lit("")))
-        .drop("text")
-        .orderBy("url")
-    }),
-    // corpus hygiene composition: publisher-signal dedup BEFORE any
-    // content dedup — noindex'd pages dropped (opt-out), syndicated
-    // copies collapsed onto their canonical URL (self-canonical when
-    // the tag is absent), min-url representative per canonical group.
-    // Reuses the q81 metadata plant so the oracle re-derives
-    // canonical_abs/noindex by construction
-    "q87_canonical_collapse" -> ((s, d) => {
-      val meta = queries("q81_page_meta")(s, d)
-      val kept = meta.filter(!col("noindex"))
-        .withColumn("canonical_key",
-          when(col("canonical_abs") =!= "", col("canonical_abs"))
-            .otherwise(col("url")))
-      val groups = kept.groupBy("canonical_key")
-        .agg(min(col("url")).as("_rep"),
-          count(lit(1)).cast("long").as("n_group"))
-      kept.join(groups, "canonical_key")
-        .select(col("url"), col("canonical_key"), col("n_group"),
-          (col("url") === col("_rep")).as("is_representative"))
-        .orderBy("url")
-    }),
-    // curation: Public-Suffix-List registrable-domain extraction —
-    // the publicsuffix.org algorithm (normal/wildcard/exception rules,
-    // exception-beats-all then longest-match then implicit "*") over
-    // per-depth broadcast rule joins; the key per-site caps and
-    // politeness budgets group on
-    "q89_reg_domain" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val m = pmod(did, lit(6))
-      val sub = pmod(did, lit(3)).cast("string")
-      val host =
-        when(m === 0, concat(lit("a"), sub, lit(".example.com")))
-          .when(m === 1, concat(lit("b"), sub, lit(".foo.co.uk")))
-          .when(m === 2, concat(lit("c"), sub, lit(".weird.ck")))
-          .when(m === 3, lit("www.ck"))
-          .when(m === 4, lit("com"))
-          .otherwise(concat(lit("d"), sub, lit(".github.io")))
-      Curation.registrableDomain(
-        t(s, d, "documents").select(col("doc_id"), host.as("host")),
-        "host",
-        rules = Seq("com", "uk", "co.uk", "*.ck", "!www.ck", "io",
-          "github.io"))
-        .orderBy("doc_id")
-    }),
-    // dedup: asymmetric containment near-dup via rare-shingle blocking
-    // — planted excerpt docs (first 12 tokens of every id%10==5 doc,
-    // re-keyed +1e6) must surface with contain_b = 1e6 even though
-    // their Jaccard vs the parent is low; blocking shuffles 32-bit
-    // shingle hashes only, exact re-check per candidate pair
-    "q95_containment" -> ((s, d) => {
-      val base = tSpread(s, d, "documents")
-        .select(col("doc_id").cast("long").as("id"), col("text"))
-      val subs = base.filter(pmod(col("id"), lit(10)) === 5)
-        .select((col("id") + 1000000L).as("id"),
-          array_join(slice(graft.ops.Dedup.tokens(col("text")), 1, 12),
-            " ").as("text"))
-      graft.ops.Dedup.containmentPairs(base.union(subs), "id", "text",
-        n = 3, maxShingleDf = 16, minContainPpm = 900000L)
-        .orderBy("a", "b")
-    }),
-    // curation: collision-proof exact-substring scrub — the q55
-    // semantics confirmed on the gram TEXT, so the result is exact
-    // string-level span dedup at any corpus size (the 32-bit portable
-    // hash q55 compares on saturates at 10^12 grams). The oracle
-    // computes the string semantics DIRECTLY (no hashes at all):
-    // matching it proves the xxhash64-prefilter + string-confirm plan
-    // equals pure string semantics.
-    "q96_span_dedup_confirmed" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val aug = concat_ws(" ",
-        when(pmod(did, lit(13)) === 5, lit(PlantCookie)),
-        col("text"),
-        when(pmod(did, lit(7)) === 2, lit(PlantSubscribe)))
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        aug.as("text"))
-      Curation.dropDuplicatedSpansConfirmed(docs, "doc_id", "text",
-        n = 8, minDocs = 2)
-        .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-          col("removed_ppm"), md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-    // retrieval: inverted-index build + BM25-style top-k search —
-    // postings filtered map-side by a broadcast query-term set,
-    // integer-ppm scoring (rational idf surrogate, real k1/b length
-    // saturation), sharded per-query rank; the oracle recomputes the
-    // whole formula in SQL, so tokenize, tf/df/dl stats, every
-    // truncating division and the tie-break must all match exactly
-    "q97_bm25" -> ((s, d) => {
-      Retrieval.bm25(t(s, d, "documents"), "doc_id", "text",
-        bm25Queries(s), topK = 10)
-        .orderBy("query_id", "rank")
-    }),
-    // dedup: edit-distance verification of LSH candidates — MinHash
-    // est_jaccard is order-blind (word-salads over one vocabulary can
-    // score ≈1), levenshtein on the raw text is the order-sensitive
-    // confirmation; planted one-token-prefix mutants survive the gate,
-    // set-similar-but-reordered organic pairs die. Text moves only for
-    // candidate pairs (two id-keyed joins), never corpus-wide
-    "q98_edit_verified" -> ((s, d) => {
-      val base = t(s, d, "documents")
-        .select(col("doc_id").cast("long").as("id"), col("text"))
-      val mut = base.filter(pmod(col("id"), lit(17)) === 4)
-        .select((col("id") + 2000000L).as("id"),
-          concat(lit("zqx "), col("text")).as("text"))
-      Dedup.editVerifiedPairs(base.union(mut), "id", "text",
-        k = 16, bands = 8, minEstJaccard = 0.5, maxBucket = 64,
-        maxDistPpm = 200000L)
-        .orderBy("a", "b")
-    }),
-    // web graph: 3 rounds of integer-exact TrustRank — the seeded
-    // teleport walk (trust decays with link distance from vetted
-    // seeds; link farms PageRank rewards score ~0 here). Seeds = the
-    // "-0" host family of the q73/q74 link table
-    "q99_trustrank" -> ((s, d) => {
-      val e = webEdges(s, d)
-      val seeds = WebGraph.nodes(e, "src", "dst")
-        .filter(col("node").endsWith("-0.example.com"))
-      WebGraph.trustRank(e, "src", "dst", seeds, iterations = 3)
-        .orderBy("node")
-    }),
-    // curation: DSIR importance resampling (Xie et al. 2023) — hashed
-    // n-gram (uni+bi) bucket weights = Laplace-smoothed target/raw
-    // probability ratio in integer ppm; target sample = the src0
-    // domain; deterministic Bernoulli keep at 1.2x scale
-    "q100_dsir" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val w = Curation.dsirWeights(docs.filter(col("source") === "src0"),
-        docs, "doc_id", "text", buckets = 1 << 16)
-      Curation.dsirResample(docs, w, "doc_id", "text",
-        buckets = 1 << 16, scalePpm = 1200000L)
-        .select(col("doc_id"), col("n_features"),
-          col("importance_ppm"), col("kept"))
-        .orderBy("doc_id")
-    }),
-    // dedup: winnowed-fingerprint passage overlap (Schleimer et al.
-    // 2003, MOSS) — docs with doc_id%23==7 get a 24-token passage
-    // appended; the winnowing local guarantee (shared run ≥ w+k-1 =
-    // 11 tokens ⇒ ≥1 shared fingerprint) makes every planted pair
-    // surface even though whole-doc Jaccard is low — the case the
-    // global MinHash sketch (q28) structurally misses
-    "q101_winnow" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val docs = tSpread(s, d, "documents").select(did.as("id"),
-        when(pmod(did, lit(23)) === 7,
-          concat_ws(" ", col("text"), lit(PlantPassage)))
-          .otherwise(col("text")).as("text"))
-      graft.ops.Dedup.winnowPairs(docs, "id", "text",
-        k = 4, w = 8, maxFpDf = 64, minOverlapPpm = 50000L)
-        .orderBy("a", "b")
-    }),
-    // similarity: margin-based NN mining (Artetxe & Schwenk 2019 — the
-    // LASER/CCMatrix bitext-mining criterion): even-id vectors mine
-    // their forward-best odd-id neighbor, scored by the ratio margin
-    // over both endpoints' top-4 neighborhood means; one cosine pass,
-    // then pure integer arithmetic (exact in any execution order)
-    "q102_margin_mining" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      SimSearch.marginMining(
-        emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-        emb.filter(pmod(col("vec_id"), lit(2)) === 1),
-        "vec_id", "embedding", k = 4, minMarginPpm = 1000000L)
-        .orderBy("x")
-    }),
-    // web graph: 2 rounds of integer-exact HITS hubs/authorities over
-    // the q73 host-level link table — the directory-vs-destination
-    // centrality pair a link-farm gate reads alongside PageRank
-    "q94_hits" -> ((s, d) =>
-      WebGraph.hits(webEdges(s, d), "src", "dst", iterations = 2)
-        .orderBy("node")),
-    // web graph: redirect-chain resolution by pointer doubling —
-    // chains of up to 10 hops collapse to their terminal URL in
-    // O(log maxHops) thin self-joins; planted 2-cycles and
-    // duplicate-source diversions come back unresolved / min-collapsed
-    "q90_redirects" -> ((s, d) =>
-      WebGraph.resolveRedirects(redirectEdges(s, d), "src", "dst",
-        maxHops = 32)
-        .orderBy("url")),
-    // curation: the C4 cleaning pass (terminal-punctuation line keep,
-    // ≥3-word lines, javascript-line drop; page-level lorem-ipsum /
-    // curly-brace / min-sentence gate) — planted lines exercise every
-    // rule; pure per-row Columns, no shuffle
-    "q91_c4_clean" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val planted = concat(col("text"),
-        lit("\nshort line\nThis planted line has five words here." +
-          "\nEnable javascript to view this page today.\n   " +
-          "\nAnother good sentence with plenty of words in it!"),
-        when(pmod(did, lit(7)) === 0,
-          lit("\nLorem Ipsum dolor sit amet.")).otherwise(lit("")),
-        when(pmod(did, lit(11)) === 3,
-          lit("\nfunction f() { return 1; }")).otherwise(lit("")))
-      Curation.c4Clean(
-        t(s, d, "documents").select(col("doc_id"), planted.as("text")),
-        "doc_id", "text")
-        .withColumn("clean_md5", md5(col("clean_text")))
-        .drop("clean_text")
-        .orderBy("doc_id")
-    }),
-    // crawl analytics: snapshot-churn diff — per URL new / gone /
-    // changed / unchanged between two synthesized crawl snapshots
-    // (prev lacks id%10==0, cur lacks id%10==1, id%5==2 re-renders);
-    // thin (url, md5) full-outer join, page bytes never move
-    "q92_snapshot_diff" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val url = concat(lit("http://s.example.com/u"),
-        col("doc_id").cast("string"))
-      val docs = t(s, d, "documents")
-      val prev = docs.filter(pmod(did, lit(10)) =!= 0)
-        .select(url.as("url"), md5(col("text")).as("h"))
-      val cur = docs.filter(pmod(did, lit(10)) =!= 1)
-        .select(url.as("url"),
-          md5(when(pmod(did, lit(5)) === 2,
-            concat(col("text"), lit(" re-rendered")))
-            .otherwise(col("text"))).as("h"))
-      Curation.snapshotDiff(prev, cur, "url", "h")
-        .orderBy("url")
-    }),
-    // extraction grading: token-level precision/recall/F1 of a
-    // predicted extraction vs gold (CleanEval-style) — pred plants
-    // recall loss (first 3 tokens cut, id%4==0) and precision loss
-    // (boilerplate tokens appended, id%3==0); thin (id, tokHash, cnt)
-    // shuffle only
-    "q93_extract_score" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val docs = t(s, d, "documents")
-      val toks = graft.ops.Dedup.tokens(col("text"))
-      val base = when(pmod(did, lit(4)) === 0,
-        slice(toks, 4, 1000000)).otherwise(toks)
-      val app = when(pmod(did, lit(3)) === 0,
-        concat(base, array(lit("nav"), lit("menu"), lit("footer"),
-          lit("nav")))).otherwise(base)
-      TextAnalysis.extractionScore(
-        docs.select(col("doc_id"), col("text")),
-        docs.select(col("doc_id"), array_join(app, " ").as("pred_text")),
-        "doc_id", "text", "pred_text")
-        .orderBy("doc_id")
-    }),
-    // curation: per-HOST boilerplate line scrub (site templates — nav
-    // menus / footers repeating across a host's pages — removed by
-    // document-frequency threshold; capped + accounted template sets;
-    // untouched docs keep their original text byte-for-byte)
-    "q79_host_boilerplate" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val host = concat(col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com"))
-      val t0 = concat(lit("NAV MENU "), host, lit("\n"), col("text"),
-        lit("\nCOPYRIGHT "), host)
-      Curation.hostBoilerplateScrub(
-        t(s, d, "documents")
-          .select(col("doc_id"), host.as("host"), t0.as("text")),
-        "doc_id", "host", "text")
-        .orderBy("doc_id")
-    }),
-    // web graph: per-target-host anchor-text aggregation (the off-page
-    // relevance signal) — inbound link count, distinct referrers, and
-    // the modal anchor text via min_by partial aggregation (no per-host
-    // window — a hot host stays many tasks' work)
-    "q78_anchor_stats" -> ((s, d) =>
-      WebGraph.anchorStats(
-        LinkExtractor.extractLinks(linkPages(s, d), "url", "html"))
-        .orderBy("dst_host")),
-    // curation: host extraction + per-host corpus stats (the host-level
-    // grouping a domain-blocklist / per-host quality filter runs on)
-    "q41_host_stats" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val url = concat(lit("https://"), col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example.com/doc/"),
-        col("doc_id").cast("string"))
-      t(s, d, "documents")
-        .withColumn("host", Curation.hostOf(url))
-        .groupBy(col("host"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextAnalysis.tokenCount(col("text")).cast("long"))
-            .as("total_tokens"),
-          countDistinct(col("lang")).as("n_langs"),
-          sum(col("n_chars")).as("total_chars"))
-        .orderBy("host")
-    }),
-    // curation: corpus-level exact-substring scrub — tokens covered by
-    // a cross-document duplicated word 8-gram are removed (Lee et al.
-    // 2022 at n-gram granularity). Two boilerplate sentences are
-    // PLANTED (appended for doc_id%7==2, prepended for %13==5); the
-    // word-salad context makes boundary-straddling grams unique, so
-    // the expected removal is exactly the planted spans.
-    "q55_span_dedup" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val aug = concat_ws(" ",
-        when(pmod(did, lit(13)) === 5, lit(PlantCookie)),
-        col("text"),
-        when(pmod(did, lit(7)) === 2, lit(PlantSubscribe)))
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        aug.as("text"))
-      Curation.dropDuplicatedSpans(docs, "doc_id", "text",
-        n = 8, minDocs = 2)
-        .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-          col("removed_ppm"), md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-    // curation: within-document repeated-line removal (first occurrence
-    // kept) — the intra-doc half of a RefinedWeb-style line dedup.
-    // Nav/cookie lines are planted to repeat inside the synthesized doc.
-    "q56_line_dedup" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val nav = lit("home about contact navigation")
-      val aug = concat_ws("\n",
-        nav,
-        substring(col("text"), 1, 80),
-        when(pmod(did, lit(3)) === 0, nav),
-        substring(col("text"), 81, 80),
-        when(pmod(did, lit(4)) === 1, lit("accept cookies")),
-        when(pmod(did, lit(4)) === 1, lit("accept cookies")))
-      Curation.dedupLinesWithinDoc(
-        t(s, d, "documents").select(col("doc_id"), aug.as("text")),
-        "text")
-        .select(col("doc_id"), col("n_lines"), col("n_line_dupes"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-    // curation: hashed bag-of-tokens linear classifier — TRAINED
-    // relationally on the hash-split train docs (weak label:
-    // lang == 'en'), then scores the whole corpus. The fastText/CCNet
-    // quality-model pattern with integer-ppm document-frequency odds
-    // as weights, so training AND serving are engine-exact.
-    "q57_token_clf" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val train = docs
-        .withColumn("_split", Curation.hashSplit(col("doc_id"),
-          Seq("train" -> 8, "val" -> 1, "test" -> 1)))
-        .filter(col("_split") === "train")
-        .withColumn("label", col("lang") === "en")
-      val w = Curation.tokenClassWeights(train, "doc_id", "text",
-        "label", buckets = 1 << 16)
-      Curation.scoreByTokenWeights(docs, w, "doc_id", "text",
-        buckets = 1 << 16)
-        .select(col("doc_id"), col("n_tokens_scored"), col("score_sum"),
-          col("score_mean_ppm"), col("pred"))
-        .orderBy("doc_id")
-    }),
-    // curation: domain-blocklist URL filtering — an entry blocks the
-    // domain and every subdomain via the bounded host-suffix set (no
-    // endsWith theta-join). Both the zero-shuffle literal path and the
-    // blocklist-table join path are emitted; the oracle pins both.
-    "q58_blocklist" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val url = concat(lit("https://"), col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"), lit(".example"),
-        pmod(did, lit(3)).cast("string"), lit(".com/doc/"),
-        col("doc_id").cast("string"))
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        url.as("url"))
-      import s.implicits._
-      Curation.markBlockedByDomainList(
-        docs.withColumn("blocked_lit",
-          Curation.blockedByDomains(col("url"), BlockedDomains)),
-        "doc_id", "url", BlockedDomains.toDF("domain"))
-        .select(col("doc_id"), col("url"), col("blocked_lit"),
-          col("blocked"))
-        .orderBy("doc_id")
-    }),
-    // curation: ADAPTIVE host blocklist — the production URL-filter
-    // maintenance loop in one relational plan. Spam vocabulary is
-    // PLANTED on five sources; only two are seed-labeled bad in
-    // training; the classifier learns the spam tokens from the seeds,
-    // its scores GENERALIZE to the other three spammy sources, and
-    // host-mean scoring induces a blocklist covering all five (the
-    // host mean averages per-doc boundary noise away). The oracle
-    // retrains, rescores and re-derives the blocklist in SQL.
-    "q61_host_blocklist" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val corpus = t(s, d, "documents").select(col("doc_id"),
-        col("source"),
-        when(col("source").isin(SpamSources: _*),
-          concat(col("text"), lit(" " + SpamPhrase)))
-          .otherwise(col("text")).as("text"))
-      val train = corpus
-        .withColumn("_split", Curation.hashSplit(col("doc_id"),
-          Seq("train" -> 8, "val" -> 1, "test" -> 1)))
-        .filter(col("_split") === "train")
-        .withColumn("label", col("source").isin(SeedBadSources: _*))
-      val w = Curation.tokenClassWeights(train, "doc_id", "text",
-        "label", buckets = 1 << 16)
-      val url = concat(lit("https://"), col("source"), lit("-"),
-        pmod(did, lit(3)).cast("string"), lit(".example.com/doc/"),
-        col("doc_id").cast("string"))
-      val scored = Curation.scoreByTokenWeights(corpus, w, "doc_id",
-          "text", buckets = 1 << 16)
-        .withColumn("url", url)
-      val bl = Curation.induceHostBlocklistByScore(scored, "url",
-        col("score_mean_ppm"), minDocs = 3L, minMeanPpm = BlockMeanPpm)
-      Curation.markBlockedByDomainList(scored, "doc_id", "url",
-        bl.select(col("domain")))
-        .select(col("doc_id"), Curation.hostOf(col("url")).as("host"),
-          col("score_mean_ppm"), col("blocked"))
-        .orderBy("doc_id")
-    }),
-    // dedup: incremental ingestion — classify the new batch (doc_id >=
-    // 400) against the existing corpus (< 400): planted shared bodies
-    // make 10 exact dups (%10==0) and 10 near dups (%10==1, one extra
-    // trailing clause); everything else is `new`
-    "q66_incr_dedup" -> ((s, d) => {
-      val corpus = incrCorpus(s, d)
-      val index = corpus.filter(col("doc_id") < 400)
-      val fresh = corpus.filter(col("doc_id") >= 400)
-      Dedup.dedupAgainstIndex(fresh, index, "doc_id", "text",
-        k = 16, bands = 8, minEstJaccard = 0.5, shingleN = 3)
-        .orderBy("doc_id")
-    }),
-    // curation: rank-based quality gate — keep the best 30% of each
-    // language by token count (the distribution-adaptive alternative
-    // to a hard score threshold); exact integer ranks, ties by id
-    "q64_top_quantile" -> ((s, d) =>
-      Curation.keepTopQuantile(
-        t(s, d, "documents")
-          .withColumn("n_toks",
-            TextAnalysis.tokenCount(col("text")).cast("long"))
-          .select(col("doc_id"), col("lang"), col("n_toks")),
-        "doc_id", "lang", "n_toks", keepPpm = 300000L)
-        .orderBy("doc_id")),
-    // curation: eval-integrity audit — MinHash-LSH near-dup pairs that
-    // straddle the train/val/test hash split (cross-split rows = test
-    // leakage the dedup-before-split discipline must eliminate)
-    // maxBucket=64: the audit's candidate generation rides the same
-    // big-bucket guard as q28 — at 10× generated scale the uncapped
-    // form's bucket fan-out grew ~quadratically in template-sharing
-    // dup-group count (BenchScale measured 14×); the cap is mirrored
-    // in the oracle CTE chain, so the guard itself stays verified
-    "q65_split_leakage" -> ((s, d) =>
-      Curation.splitLeakageAudit(t(s, d, "documents"), "doc_id", "text",
-        Seq("train" -> 8, "val" -> 1, "test" -> 1), maxBucket = 64)
-        .orderBy("split_lo", "split_hi")),
-    // curation: per-URL latest-snapshot (as-of) selection — the
-    // keep-newest-crawl dedup over multi-snapshot web corpora, with a
-    // historical cutoff (point-in-time reconstruction). Snapshots are
-    // synthesized: 50 URL keys × pseudo-random crawl hours; cutoff at
-    // hour 800 (boundary inclusive); ties break by ascending doc_id.
-    "q60_snapshot" -> ((s, d) => {
-      val did = col("doc_id").cast("long")
-      val key = concat(lit("https://example.com/page/"),
-        pmod(did, lit(50)).cast("string"))
-      val ts = timestamp_seconds(
-        lit(1600000000L) + pmod(did * 37L, lit(1000L)) * 3600L)
-      val snaps = t(s, d, "documents")
-        .select(col("doc_id"), key.as("url_key"), ts.as("warc_ts"))
-      Curation.latestSnapshotAsOf(snaps, "url_key", "warc_ts",
-        timestamp_seconds(lit(1600000000L + 800L * 3600L)), "doc_id")
-        .select(col("doc_id"), col("url_key"),
-          unix_micros(col("warc_ts")).as("ts_us"))
-        .orderBy("url_key", "doc_id")
-    })
-  )
-
-  /** Blocklist used by q58 (shared with its oracle): one whole-domain
-    * entry and one exact-host entry.
-    */
-  private val BlockedDomains =
-    Seq("example0.com", "src3-2.example1.com")
-
-  /** q61's planted-spam construction (shared with its oracle): spam
-    * vocabulary (digit-interleaved, cannot occur in the word salad) on
-    * five sources, seed bad labels on two, host-mean block threshold
-    * between the clean baseline (~500k ppm) and the spam lift.
-    */
-  private val SpamSources = Seq("src0", "src1", "src2", "src3", "src4")
-  private val SeedBadSources = Seq("src0", "src1")
-  private val SpamPhrase =
-    "caszino b0nus fr3e p1lls w1nner jackp0t 0ffer cl1ck"
-  private val BlockMeanPpm = 515000L
-
-  /** q66's synthesized incremental-ingestion corpus: index docs
-    * (doc_id < 400, every 40th) carry a shared archived body k; new
-    * docs (>= 400) replant body (did-400)/10 verbatim for %10==0
-    * (exact dups) and with an extra trailing clause for %10==1 (near
-    * dups). Everything else keeps its word-salad text.
-    */
-  private def incrCorpus(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id").cast("long")
-    def body(kc: Column): Column = concat(
-      lit("the archived corpus body "), kc.cast("string"),
-      lit(" alpha bravo charlie delta echo foxtrot golf hotel india" +
-        " juliet kilo lima mike november oscar papa"))
-    t(s, d, "documents").select(col("doc_id"),
-      when(did < 400 && pmod(did, lit(40)) === 0,
-        body(expr("CAST(doc_id AS BIGINT) DIV 40")))
-        .when(did >= 400 && pmod(did, lit(10)) === 0,
-          body(expr("(CAST(doc_id AS BIGINT) - 400) DIV 10")))
-        .when(did >= 400 && pmod(did, lit(10)) === 1,
-          concat(body(expr("(CAST(doc_id AS BIGINT) - 401) DIV 10")),
-            lit(" with one extra trailing clause appended here")))
-        .otherwise(col("text")).as("text"))
-  }
-
-  /** Deterministic host-level link table for q73/q74: each document
-    * contributes one edge from its q41-style host
-    * (`source-(id%7).example.com`) to a pseudo-randomly chosen other
-    * host (`src{(7id+3)%20}-{(3id+1)%7}.example.com`) — 140 nodes,
-    * multi-edges and dangling hosts included, so degree stats and
-    * PageRank exercise their full contract.
-    */
-  private def webEdges(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id").cast("long")
-    t(s, d, "documents").select(
-      concat(col("source"), lit("-"),
-        pmod(did, lit(7)).cast("string"),
-        lit(".example.com")).as("src"),
-      concat(lit("src"),
-        pmod(did * 7L + 3L, lit(20)).cast("string"), lit("-"),
-        pmod(did * 3L + 1L, lit(7)).cast("string"),
-        lit(".example.com")).as("dst"))
-  }
-
-  /** Shared retrieval workload for q97 — queries over the synthetic
-    * vocabulary, incl. a stopword-ish high-df term ("the"), a
-    * multi-term mid-frequency mix, and a no-hit term (empty result).
-    */
-  private val bm25QueryRows: Seq[(String, String)] = Seq(
-    ("qa", "sort"), ("qa", "merge"), ("qa", "join"),
-    ("qb", "window"), ("qb", "filter"),
-    ("qc", "customer"), ("qc", "batch"), ("qc", "stream"),
-    ("qd", "the"), ("qd", "scan"), ("qe", "zzznope"))
-
-  private def bm25Queries(s: SparkSession): DataFrame = {
-    import s.implicits._
-    bm25QueryRows.toDF("query_id", "term")
-  }
-
-  private def bm25QueriesSql: String =
-    bm25QueryRows.map { case (q, t) => s"('$q', '$t')" }.mkString(", ")
-
-  /** Shared BM25 oracle CTE chain (q97 + the q134 fusion oracle):
-    * ends in `bm25r` = (query_id, doc_id, score_ppm, rank), unbounded
-    * rank — consumers apply their own rank cut. `mt`/`q` stay visible
-    * for the TF arm.
-    */
-  private def bm25CtesSql: String =
-    s"""q(query_id, term) AS (VALUES $bm25QueriesSql),
-        d AS (SELECT CAST(doc_id AS BIGINT) AS id, $toksSql AS tk
-          FROM documents),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(SUM(len(tk)) AS BIGINT) AS sum_dl FROM d),
-        post AS (SELECT id, CAST(dl AS BIGINT) AS dl, term,
-            CAST(COUNT(*) AS BIGINT) AS tf
-          FROM (SELECT id, len(tk) AS dl, unnest(tk) AS term FROM d)
-          GROUP BY id, dl, term),
-        mt AS (SELECT * FROM post
-          WHERE term IN (SELECT DISTINCT term FROM q)),
-        dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS dfc
-          FROM mt GROUP BY term),
-        sc AS (SELECT q.query_id, m.id,
-            CAST(SUM((CAST(((2*n_docs - 2*dfc + 1) * 1000000)
-                // (2*dfc + 1) AS HUGEINT) *
-              ((CAST(m.tf AS HUGEINT) * 2200000 * 1000000) //
-                (m.tf * 1000000 + (1200000 * ((1000000 - 750000) +
-                  (750000 * m.dl * 1000) //
-                    ((sum_dl * 1000) // n_docs))) // 1000000)))
-              // 1000000) AS BIGINT) AS score_ppm
-          FROM mt m JOIN dft USING (term) JOIN q USING (term)
-          CROSS JOIN stats
-          GROUP BY q.query_id, m.id),
-        bm25r AS (SELECT query_id, id AS doc_id, score_ppm,
-          CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY score_ppm DESC, id) AS BIGINT) AS rank
-          FROM sc)"""
-
-  /** Deterministic redirect map for q90: each document is one source
-    * URL `u{id}` redirecting up the decade — u(10k+j) → u(10k+j+1) for
-    * j<9, u(10k+9) → f{k} (terminal) — so chains run 1..10 hops; docs
-    * with id%20==7 get a SECOND edge to a terminal `dup` URL that wins
-    * the min-collapse (duplicate-source determinism); docs with
-    * id%25==13 plant a detached 2-cycle c{id}a ⇄ c{id}b (unresolvable).
-    */
-  private def redirectEdges(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id").cast("long")
-    val docs = t(s, d, "documents")
-    def u(n: Column): Column =
-      concat(lit("http://r.example.com/u"), n.cast("string"))
-    val chain = docs.select(u(did).as("src"),
-      when(pmod(did, lit(10)) === 9,
-        concat(lit("http://final.example.com/f"),
-          expr("CAST(doc_id AS BIGINT) DIV 10").cast("string")))
-        .otherwise(u(did + 1L)).as("dst"))
-    val dup = docs.filter(pmod(did, lit(20)) === 7)
-      .select(u(did).as("src"),
-        concat(lit("http://dup.example.com/x"), did.cast("string"))
-          .as("dst"))
-    val cyc = docs.filter(pmod(did, lit(25)) === 13)
-    def c(suffix: String): Column =
-      concat(lit("http://cyc.example.com/c"), did.cast("string"),
-        lit(suffix))
-    chain.union(dup)
-      .union(cyc.select(c("a").as("src"), c("b").as("dst")))
-      .union(cyc.select(c("b").as("src"), c("a").as("dst")))
-  }
-
-  /** Deterministic synthesized pages-with-links table for q75/q76:
-    * each document becomes one page at
-    * `http://{source}-{id%7}.example.com/docs/d{id}.html` whose HTML
-    * carries four-to-five anchor tags exercising the whole
-    * [[graft.extract.LinkExtractor]] contract — an absolute
-    * double-quoted href, a single-quoted relative href with dot
-    * segments and a fragment, a root-relative href, an href-less named
-    * anchor, and (id%3==0) an UNQUOTED scheme-relative rel=nofollow
-    * href in an uppercase tag. The oracle re-derives every expected
-    * row from the same modular formulas — the Spark side must actually
-    * parse and resolve.
-    */
-  /** Synthesized hreflang pages for q105/q106: docs grouped in
-    * translation triples g = doc_id/3 with langs en/de/fr by doc_id%3;
-    * every non-omitting page (doc_id%7 != 0) declares all three
-    * language alternates — tag quote style/attribute order varies by
-    * doc_id%2, href absolute vs path-absolute by doc_id%4 — plus an
-    * x-default pointing at the en member. Every page also carries a
-    * stylesheet link and an alternate-WITHOUT-hreflang RSS link that
-    * the extractor must ignore. Every 7th doc declares nothing and
-    * must still cluster through its siblings' references.
-    */
-  private def hreflangPages(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id").cast("long")
-    // integer division: Column./ is double division
-    val g = ((did - pmod(did, lit(3))) / 3L).cast("long")
-    val gs = g.cast("string")
-    val lang = element_at(array(lit("en"), lit("de"), lit("fr")),
-      (pmod(did, lit(3)) + 1).cast("int"))
-    val host = concat(lit("t"), pmod(g, lit(13)).cast("string"),
-      lit(".example.com"))
-    val url = concat(lit("http://"), host, lit("/"), lang, lit("/p"),
-      gs, lit(".html"))
-    def tag(l: String): Column = {
-      val href = when(pmod(did, lit(4)) === 0,
-          concat(lit(s"/$l/p"), gs, lit(".html")))
-        .otherwise(concat(lit("http://"), host, lit(s"/$l/p"), gs,
-          lit(".html")))
-      when(pmod(did, lit(2)) === 0,
-        concat(lit(s"""<link rel="alternate" hreflang="$l" href=""""),
-          href, lit("\">")))
-        .otherwise(concat(lit("<link href='"), href,
-          lit(s"' hreflang='$l' rel='alternate'>")))
-    }
-    val xdef = concat(
-      lit("<link rel=\"alternate\" hreflang=\"x-default\" href=\"http://"),
-      host, lit("/en/p"), gs, lit(".html\">"))
-    val links = when(pmod(did, lit(7)) === 0, lit(""))
-      .otherwise(concat(tag("en"), tag("de"), tag("fr"), xdef))
-    val html = concat(
-      lit("<html><head><link rel=\"stylesheet\" href=\"/s.css\">" +
-        "<link rel=\"alternate\" type=\"application/rss+xml\" " +
-        "href=\"/feed.xml\">"),
-      links, lit("</head><body>x</body></html>"))
-    t(s, d, "documents").select(url.as("url"), html.as("html"))
-  }
-
-  /** The q144/q145/q161 synthetic pendant graph (30-node dense core +
-    * two pendant layers), shared so the Spark twins cannot drift from
-    * the single hyperAnfCtesSql oracle graph.
-    */
-  private def hyperAnfEdges(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id").cast("long")
-    val docs = t(s, d, "documents")
-    def e(x: Column, y: Column) = docs.select(x.as("x"), y.as("y"))
-    val a = pmod(did, lit(30))
-    val b = pmod(did * 7L + 1L, lit(30))
-    val c = pmod(did * 13L + 5L, lit(30))
-    val p1 = pmod(did, lit(100)) + 30L
-    val p2 = pmod(did, lit(200)) + 130L
-    e(a, b).unionByName(e(a, c)).unionByName(e(b, c))
-      .unionByName(e(a, p1)).unionByName(e(p1, p2))
-  }
-
-  /** Sentence-bearing docs synthesized from each document's own
-    * tokens by modular picks (5 sentences × 6 tokens, stride 3 from
-    * offset 7j mod doc length) — the corpus text has no punctuation,
-    * so q148/q158/q159 plant their own sentence structure this way;
-    * [[sentenceDocsSql]] is the byte-identical DuckDB twin.
-    */
-  private def sentenceDocs(s: SparkSession, d: String): DataFrame = {
-    val based = t(s, d, "documents")
-      .select(col("doc_id").cast("long").as("doc_id"),
-        Dedup.tokens(col("text")).as("tk"))
-    val sent = (0 until 5).map(j =>
-      array_join(transform(sequence(lit(0), lit(5)),
-        i => element_at(col("tk"),
-          pmod(lit(j * 7) + i * lit(3), size(col("tk"))) + 1)), " "))
-    based.select(col("doc_id"), concat_ws(". ", sent: _*).as("text"))
-  }
-
-  /** Dirichlet-QL oracle chain (q154/q160 twin of
-    * Retrieval.queryLikelihood): builds on bm25CtesSql's q/mt/stats;
-    * yields `qlr(query_id, doc_id, score, rank)`. One definition so
-    * the two oracles cannot drift (mu = 2000, round-6 staging).
-    */
-  private lazy val qlCtesSql: String =
-    """cf AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS cf
-          FROM mt GROUP BY term),
-        nq AS (SELECT query_id,
-            CAST(COUNT(DISTINCT term) AS BIGINT) AS n_terms
-          FROM q GROUP BY 1),
-        pt AS (SELECT q.query_id, m.id, m.dl,
-            round(ln(1.0 + (CAST(m.tf AS DOUBLE) * sum_dl) /
-              (2000.0 * cf.cf)), 6) AS w
-          FROM mt m JOIN cf USING (term) JOIN q USING (term)
-          CROSS JOIN stats),
-        sc2 AS (SELECT query_id, id, dl, round(SUM(w), 6) AS s_match
-          FROM pt GROUP BY 1, 2, 3),
-        scored AS (SELECT query_id, id,
-            round(s_match + round(n_terms *
-              ln(2000.0 / (dl + 2000.0)), 6), 6) AS score
-          FROM sc2 JOIN nq USING (query_id)),
-        qlr AS (SELECT query_id, id AS doc_id, score,
-          CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY score DESC, id) AS BIGINT) AS rank
-          FROM scored)"""
-
-  /** Suffix-sort oracle chain (q155/q156 twin of SuffixArray): sorts
-    * the actual suffix token-lists; yields `w(id, pos, sa_rank, suf,
-    * psuf)`. One definition so the two oracles cannot drift.
-    */
-  private lazy val saCtesSql: String =
-    s"""d AS (SELECT CAST(doc_id AS BIGINT) AS id, $toksSql AS tk
-          FROM documents),
-        p0 AS (SELECT id, CAST(len(tk) AS BIGINT) AS dl, tk,
-            unnest(generate_series(1, len(tk))) AS i FROM d),
-        p AS (SELECT id, dl, CAST(i - 1 AS BIGINT) AS pos,
-            tk[i:] AS suf FROM p0),
-        o AS (SELECT id, pos, dl, suf,
-            CAST(ROW_NUMBER() OVER (ORDER BY suf, id, pos) AS BIGINT)
-              AS sa_rank
-          FROM p),
-        w AS (SELECT id, pos, sa_rank, suf,
-            lag(suf) OVER (ORDER BY sa_rank) AS psuf
-          FROM o)"""
-
-  /** CTE fragment twin of [[sentenceDocs]]: yields `src0(id, t)`. */
-  private lazy val sentenceDocsSql: String =
-    s"""d AS (SELECT CAST(doc_id AS BIGINT) AS id, $toksSql AS tk
-          FROM documents),
-        sy AS (SELECT id, list_transform(generate_series(0, 4), j ->
-            array_to_string(list_transform(generate_series(0, 5),
-              i -> tk[(j*7 + i*3) % len(tk) + 1]), ' ')) AS sl FROM d),
-        src0 AS (SELECT id, array_to_string(sl, '. ') AS t FROM sy)"""
-
-  private def linkPages(s: SparkSession, d: String): DataFrame = {
-    val did = col("doc_id").cast("long")
-    def m(k: Long, a: Long, mod: Long): Column =
-      pmod(did * k + a, lit(mod)).cast("string")
-    val host = concat(col("source"), lit("-"), m(1, 0, 7),
-      lit(".example.com"))
-    val url = concat(lit("http://"), host, lit("/docs/d"),
-      col("doc_id").cast("string"), lit(".html"))
-    val a1 = concat(lit("<a href=\"http://src"), m(7, 3, 20), lit("-"),
-      m(3, 1, 7), lit(".example.com/p"), m(1, 0, 13),
-      lit(".html\">news item "), m(1, 0, 10), lit("</a>"))
-    val a2 = concat(lit("<a class='m' href='../sub/page"), m(5, 2, 17),
-      lit(".html#sec"), m(1, 0, 3), lit("'>relative <b>link</b> "),
-      m(1, 0, 10), lit("</a>"))
-    val a3 = concat(lit("<a href=\"/idx/"), m(1, 0, 5),
-      lit("\">section index</a>"))
-    val a4 = lit("<a name=\"top\">no link here</a>")
-    val a5 = when(pmod(did, lit(3)) === 0,
-      concat(lit("<A rel=\"nofollow\" href=//cdn-"), m(1, 0, 4),
-        lit(".example.net/lib.js>cdn asset</A>"))).otherwise(lit(""))
-    t(s, d, "documents").select(url.as("url"),
-      concat(lit("<html><head><title>d"), col("doc_id").cast("string"),
-        lit("</title></head><body>\n<p>page body filler</p>\n"),
-        a1, lit("\n"), a2, lit("\n"), a3, lit("\n"), a4, lit("\n"),
-        a5, lit("\n</body></html>")).as("html"))
-  }
-
-  /** DuckDB fragments for the q75/q76 oracles: page url and host from
-    * the [[linkPages]] formulas.
-    */
-  private val linkHostSql: String =
-    """source || '-' || CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR)
-      || '.example.com'"""
-  private val linkUrlSql: String =
-    s"""'http://' || $linkHostSql || '/docs/d'
-      || CAST(doc_id AS VARCHAR) || '.html'"""
-
-  /** q75 oracle: the four expected link rows per document, re-derived
-    * from the [[linkPages]] plant (positions skip the href-less tag at
-    * 3; the nofollow row exists only for id%3==0).
-    */
-  private lazy val q75Sql: String = {
-    val id = "CAST(doc_id AS BIGINT)"
-    s"""WITH p AS (SELECT $id AS id, $linkUrlSql AS url,
-        'http://' || $linkHostSql AS hroot FROM documents),
-      l AS (
-        SELECT url, 0 AS link_pos,
-          'http://src' || CAST((id*7+3) % 20 AS VARCHAR) || '-'
-            || CAST((id*3+1) % 7 AS VARCHAR) || '.example.com/p'
-            || CAST(id % 13 AS VARCHAR) || '.html' AS href_raw,
-          'http://src' || CAST((id*7+3) % 20 AS VARCHAR) || '-'
-            || CAST((id*3+1) % 7 AS VARCHAR) || '.example.com/p'
-            || CAST(id % 13 AS VARCHAR) || '.html' AS href_abs,
-          'news item ' || CAST(id % 10 AS VARCHAR) AS anchor,
-          FALSE AS nofollow FROM p
-        UNION ALL
-        SELECT url, 1,
-          '../sub/page' || CAST((id*5+2) % 17 AS VARCHAR) || '.html#sec'
-            || CAST(id % 3 AS VARCHAR),
-          hroot || '/sub/page' || CAST((id*5+2) % 17 AS VARCHAR)
-            || '.html',
-          'relative link ' || CAST(id % 10 AS VARCHAR), FALSE FROM p
-        UNION ALL
-        SELECT url, 2, '/idx/' || CAST(id % 5 AS VARCHAR),
-          hroot || '/idx/' || CAST(id % 5 AS VARCHAR),
-          'section index', FALSE FROM p
-        UNION ALL
-        SELECT url, 4,
-          '//cdn-' || CAST(id % 4 AS VARCHAR) || '.example.net/lib.js',
-          'http://cdn-' || CAST(id % 4 AS VARCHAR)
-            || '.example.net/lib.js',
-          'cdn asset', TRUE FROM p WHERE id % 3 = 0)
-      SELECT url, link_pos, href_raw, href_abs, anchor, nofollow
-      FROM l ORDER BY url, link_pos"""
-  }
-
-  /** q76 oracle: host edges re-derived from the plant (the absolute
-    * link's cross-host edge plus two self-loops from the relative and
-    * root-relative links; the nofollow cdn link contributes nothing),
-    * then the same degree stats and 2 unrolled PageRank rounds as
-    * q73/q74.
-    */
-  private lazy val q76Sql: String = {
-    val id = "CAST(doc_id AS BIGINT)"
-    s"""WITH p AS (SELECT $id AS id, $linkHostSql AS h FROM documents),
-      e AS (
-        SELECT h AS src,
-          'src' || CAST((id*7+3) % 20 AS VARCHAR) || '-'
-            || CAST((id*3+1) % 7 AS VARCHAR) || '.example.com' AS dst
-          FROM p
-        UNION ALL SELECT h, h FROM p
-        UNION ALL SELECT h, h FROM p),
-      nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-      dg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-        FROM e GROUP BY src),
-      r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank_ppb
-        FROM nd)${prRoundsSql(2)},
-      o AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS out_degree,
-        CAST(COUNT(DISTINCT dst) AS BIGINT) AS n_dst_hosts
-        FROM e GROUP BY src),
-      i AS (SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS in_degree
-        FROM e GROUP BY dst)
-      SELECT nd.node,
-        CAST(COALESCE(out_degree, 0) AS BIGINT) AS out_degree,
-        CAST(COALESCE(n_dst_hosts, 0) AS BIGINT) AS n_dst_hosts,
-        CAST(COALESCE(in_degree, 0) AS BIGINT) AS in_degree,
-        r2.rank_ppb
-      FROM nd LEFT JOIN o ON o.node = nd.node
-      LEFT JOIN i ON i.node = nd.node
-      JOIN r2 ON r2.node = nd.node
-      ORDER BY nd.node"""
-  }
-
-  /** q78 oracle: the three non-nofollow (dst_host, src_host, anchor)
-    * rows per document from the [[linkPages]] plant, aggregated the
-    * classic way (window rank in SQL; the Spark side must get there
-    * via min_by partial aggregation).
-    */
-  private lazy val q78Sql: String = {
-    val id = "CAST(doc_id AS BIGINT)"
-    s"""WITH p AS (SELECT $id AS id, $linkHostSql AS h FROM documents),
-      l AS (
-        SELECT 'src' || CAST((id*7+3) % 20 AS VARCHAR) || '-'
-            || CAST((id*3+1) % 7 AS VARCHAR) || '.example.com'
-            AS dst_host, h AS src_host,
-          'news item ' || CAST(id % 10 AS VARCHAR) AS anchor FROM p
-        UNION ALL SELECT h, h,
-          'relative link ' || CAST(id % 10 AS VARCHAR) FROM p
-        UNION ALL SELECT h, h, 'section index' FROM p),
-      ba AS (SELECT dst_host, anchor, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM l GROUP BY 1, 2),
-      tp AS (SELECT dst_host, anchor AS top_anchor,
-        CAST(SUM(cnt) OVER (PARTITION BY dst_host) AS BIGINT)
-          AS n_links,
-        ROW_NUMBER() OVER (PARTITION BY dst_host
-          ORDER BY cnt DESC, anchor) AS rn FROM ba),
-      rf AS (SELECT dst_host,
-        CAST(COUNT(DISTINCT src_host) AS BIGINT) AS n_src_hosts
-        FROM l GROUP BY 1)
-      SELECT tp.dst_host, n_links, n_src_hosts, top_anchor
-      FROM tp JOIN rf ON rf.dst_host = tp.dst_host
-      WHERE rn = 1 ORDER BY tp.dst_host"""
-  }
-
-  /** SQL twin of [[webEdges]]. */
-  private val webEdgesSql: String =
-    """SELECT concat(source, '-',
-        CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR),
-        '.example.com') AS src,
-      concat('src',
-        CAST((CAST(doc_id AS BIGINT) * 7 + 3) % 20 AS VARCHAR), '-',
-        CAST((CAST(doc_id AS BIGINT) * 3 + 1) % 7 AS VARCHAR),
-        '.example.com') AS dst
-      FROM documents"""
-
-  /** q74 oracle: the same 3 PageRank rounds unrolled as chained CTEs —
-    * one (contributions, rank-update) pair per iteration, identical
-    * integer arithmetic (`//` == Spark DIV on non-negative operands;
-    * DuckDB SUM(BIGINT) widens to HUGEINT, matching the Spark side's
-    * decimal(38,0) numerator).
-    */
-  private def prRoundsSql(n: Int): String =
-    (1 to n).map { i =>
-      s""", c$i AS (SELECT e.dst AS node,
-          SUM(r.rank_ppb // d.outdeg) AS s
-          FROM e JOIN dg d ON d.src = e.src
-          JOIN r${i - 1} r ON r.node = e.src
-          GROUP BY e.dst),
-        r$i AS (SELECT nd.node, CAST(150000000 +
-            (850000 * COALESCE(c.s, 0)) // 1000000 AS BIGINT)
-            AS rank_ppb
-          FROM nd LEFT JOIN c$i c ON c.node = nd.node)"""
-    }.mkString
-
-  /** TrustRank rounds: prRoundsSql's shape with the teleport gated on
-    * the seed flag (seeds-only teleport mass, non-seeds start at 0).
-    */
-  private def trRoundsSql(n: Int): String =
-    (1 to n).map { i =>
-      s""", c$i AS (SELECT e.dst AS node,
-          SUM(r.rank_ppb // d.outdeg) AS s
-          FROM e JOIN dg d ON d.src = e.src
-          JOIN r${i - 1} r ON r.node = e.src
-          GROUP BY e.dst),
-        r$i AS (SELECT sd.node, CAST(
-            (CASE WHEN sd.is_seed THEN 150000000 ELSE 0 END) +
-            (850000 * COALESCE(c.s, 0)) // 1000000 AS BIGINT)
-            AS rank_ppb
-          FROM sd LEFT JOIN c$i c ON c.node = sd.node)"""
-    }.mkString
-
-  private lazy val q99Sql: String = {
-    s"""WITH e AS ($webEdgesSql),
-      nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-      sd AS (SELECT node, node LIKE '%-0.example.com' AS is_seed
-        FROM nd),
-      dg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-        FROM e GROUP BY src),
-      r0 AS (SELECT node, CAST(CASE WHEN is_seed THEN 1000000000
-        ELSE 0 END AS BIGINT) AS rank_ppb FROM sd)${trRoundsSql(3)}
-      SELECT node, rank_ppb FROM r3 ORDER BY node"""
-  }
-
-  private lazy val q74Sql: String = {
-    val rounds = prRoundsSql(3)
-    s"""WITH e AS ($webEdgesSql),
-      nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-      dg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-        FROM e GROUP BY src),
-      r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank_ppb
-        FROM nd)$rounds
-      SELECT node, rank_ppb FROM r3 ORDER BY node"""
-  }
-
-  /** q94 oracle: HITS unrolled per round — authorities from the
-    * previous hubs, hubs from the NEW authorities, each max-normalized
-    * to 1e9 with integer division (HUGEINT in DuckDB, decimal(38,0)
-    * on the Spark side — identical truncation).
-    */
-  private lazy val q94Sql: String = {
-    val rounds = (1 to 2).map { i =>
-      s""",
-      a${i}r AS (SELECT e.dst AS node, SUM(hh.h) AS raw
-        FROM e JOIN h${i - 1} hh ON e.src = hh.node GROUP BY e.dst),
-      a$i AS (SELECT nd.node, CAST(COALESCE((raw * 1000000000)
-          // (SELECT MAX(raw) FROM a${i}r), 0) AS BIGINT) AS a
-        FROM nd LEFT JOIN a${i}r USING (node)),
-      h${i}r AS (SELECT e.src AS node, SUM(aa.a) AS raw
-        FROM e JOIN a$i aa ON e.dst = aa.node GROUP BY e.src),
-      h$i AS (SELECT nd.node, CAST(COALESCE((raw * 1000000000)
-          // (SELECT MAX(raw) FROM h${i}r), 0) AS BIGINT) AS h
-        FROM nd LEFT JOIN h${i}r USING (node))"""
-    }.mkString
-    s"""WITH e AS ($webEdgesSql),
-      nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-      h0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS h FROM nd)$rounds
-      SELECT nd.node, a2.a AS auth_ppb, h2.h AS hub_ppb
-      FROM nd JOIN a2 USING (node) JOIN h2 USING (node)
-      ORDER BY node"""
-  }
-
-  /** Shared planted-contamination input for q45/q59: docs %11==3 get
-    * eval item id%10 appended; the digit-interleaved phrases cannot
-    * occur in the synthetic word-salad text, so expected hits are
-    * exactly the planted spans.
-    */
-  private def decontamInput(s: SparkSession,
-      d: String): (DataFrame, DataFrame) = {
-    val did = col("doc_id").cast("long")
-    def item(i: Column): Column = concat(
-      lit("evaluation benchmark item "), i.cast("string"),
-      lit(" the quick brown fox number "), i.cast("string"),
-      lit(" jumps over the lazy dog "), i.cast("string"))
-    val docs = t(s, d, "documents")
-    val bench = docs.filter(col("doc_id") < 10)
-      .select(col("doc_id"), item(col("doc_id")).as("btext"))
-    val corpus = docs.select(col("doc_id"),
-      when(pmod(did, lit(11)) === 3,
-        concat(col("text"), lit(" "), item(pmod(did, lit(10)))))
-        .otherwise(col("text")).as("text"))
-    (corpus, bench)
-  }
-
-  /** Boilerplate sentences planted by q55 (shared with its oracle). */
-  private val PlantSubscribe = "please subscribe to our channel " +
-    "newsletter and enable notifications today thank you"
-  private val PlantCookie = "this website uses cookies to improve " +
-    "your experience accept all cookies to continue"
-
-  /** 24-token passage planted into q101 docs — longer than the
-    * winnowing guarantee length w + k - 1 = 11, so every pair of
-    * planted docs MUST share at least one fingerprint.
-    */
-  private val PlantPassage = "breaking exclusive report market " +
-    "regulators announced sweeping oversight changes late thursday " +
-    "affecting cross border settlement flows and custody reporting " +
-    "obligations effective next quarter pending review"
-
-  // ---- DuckDB oracles ----
-
-  private def minhashSqlCols(k: Int = 8): String =
-    Dedup.minhashParams(k).zipWithIndex.map { case ((a, b), i) =>
-      s"list_min(list_transform($toksSql, t -> ($a * ${tokHashSql(8)} + $b) % ${Dedup.MinhashP}))" +
-        s" AS m$i"
-    }.mkString(", ")
-
-  /** Shared CTE chain for the hashed-token-classifier oracles
-    * (q57/q61): train on the hash-split train docs of `src` with weak
-    * label `labelSql`, prior-centered clamped weights, score every
-    * document of `src`. Yields CTE `agg(doc_id, n, ss)` — token count
-    * and neutral-filled weight sum per doc.
-    */
-  private def clfSqlCtesOver(src: String, labelSql: String): String =
-    s"""tr AS (SELECT doc_id, $labelSql AS lb, text
-        FROM $src
-        WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)
-            || ':split'), 1, 8)) AS BIGINT) % 10000 < 8000
-          AND ($labelSql) IS NOT NULL),
-      prior AS (SELECT (SUM(CASE WHEN lb THEN 1 ELSE 0 END) * 1000000)
-          // COUNT(*) AS pp FROM tr),
-      thin AS (SELECT DISTINCT doc_id, lb,
-          CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT) % 65536
-            AS bucket
-        FROM (SELECT doc_id, lb, unnest(list_distinct($toksSql)) AS tk
-          FROM tr)),
-      wt AS (SELECT bucket, GREATEST(0, LEAST(1000000,
-          (SUM(CASE WHEN lb THEN 1 ELSE 0 END) * 1000000) // COUNT(*)
-            + 500000 - pp)) AS w
-        FROM thin, prior GROUP BY bucket, pp),
-      sc AS (SELECT doc_id,
-          CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT) % 65536
-            AS bucket
-        FROM (SELECT doc_id, unnest($toksSql) AS tk FROM $src)),
-      agg AS (SELECT sc.doc_id, COUNT(*) AS n,
-          SUM(COALESCE(w, 500000)) AS ss
-        FROM sc LEFT JOIN wt USING (bucket) GROUP BY sc.doc_id)"""
-
-  private lazy val clfSqlCtes: String =
-    clfSqlCtesOver("documents", "lang = 'en'")
-
-  /** Shared q32/q62 oracle: minhash-LSH pairs → recursive-CTE
-    * connected components → min-id canonical (both Spark component
-    * algorithms must produce this labeling).
-    */
-  private lazy val dedupClusterOracleSql: String =
-    s"""WITH RECURSIVE ${lshPairsCtesOver(3, maxBucket = 64)},
-      edges AS (SELECT a, b FROM pairs WHERE est_jaccard >= 0.5
-        UNION SELECT b, a FROM pairs WHERE est_jaccard >= 0.5),
-      comp(id, canon) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.a, c.canon FROM edges e JOIN comp c ON c.id = e.b)
-      SELECT id AS doc_id, MIN(canon) AS canonical_id
-      FROM comp GROUP BY 1 ORDER BY 1"""
-
-  /** Shingle-array SQL (mirrors Dedup.shingles + empty filter). */
-  private def shingleSql(n: Int): String =
-    s"""list_filter(list_distinct(list_transform(
-      generate_series(0, greatest(len($toksSql) - $n, 0)),
-      i -> array_to_string(($toksSql)[i+1:i+$n], ' '))), s -> length(s) > 0)"""
-
-  private def minhashSqlColsOver(k: Int, unitsSql: String): String =
-    Dedup.minhashParams(k).zipWithIndex.map { case ((a, b), i) =>
-      s"list_min(list_transform($unitsSql, t -> ($a * ${tokHashSql(8)} + $b) % ${Dedup.MinhashP}))" +
-        s" AS m$i"
-    }.mkString(", ")
-
-  /** Banded MinHash-LSH candidate pairs as SQL CTEs (mirrors
-    * Dedup.minhashLshPairs with k=16, bands=8): yields CTE `pairs`
-    * with columns (a, b, est_jaccard). shingleN mirrors the Spark
-    * parameter (1 = unigram tokens).
-    */
-  /** Shared CTE chain for minhash-LSH pair oracles. `maxBucket > 0`
-    * replicates Dedup.minhashLshPairs' big-bucket cap (a window count
-    * per (band, bucket), oversized buckets contribute no pairs) so the
-    * cap itself is oracle-verified, not just unit-tested.
-    */
-  private def lshPairsCtesOver(shingleN: Int, maxBucket: Int = 0,
-      src: String = "documents"): String = {
-    val units = if (shingleN <= 1) toksSql else shingleSql(shingleN)
-    val sigArr = (0 until 16).map(i => s"m$i").mkString("[", ", ", "]")
-    val capCte =
-      if (maxBucket <= 0) "capped AS (SELECT * FROM banded)"
-      else s"""capped AS (SELECT id, sig, band, bucket FROM (
-          SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bsz
-          FROM banded) WHERE bsz <= $maxBucket)"""
-    s"""sig0 AS (SELECT doc_id AS id, ${minhashSqlColsOver(16, units)} FROM $src),
-      sig AS (SELECT id, $sigArr AS sig FROM sig0),
-      banded AS (
-        SELECT id, sig, r.range AS band,
-          md5(array_to_string(list_transform(
-            sig[r.range*2+1 : r.range*2+2], x -> CAST(x AS VARCHAR)), ','))
-            AS bucket
-        FROM sig CROSS JOIN range(8) r),
-      $capCte,
-      pairs AS (
-        SELECT DISTINCT l.id AS a, r.id AS b,
-          CAST(list_sum(list_transform(generate_series(1, 16),
-            i -> CASE WHEN l.sig[i] = r.sig[i] THEN 1 ELSE 0 END))
-            AS DOUBLE) / 16 AS est_jaccard
-        FROM capped l JOIN capped r
-          ON l.band = r.band AND l.bucket = r.bucket AND l.id < r.id)"""
-  }
-
-  private def lshPairsCtes: String = lshPairsCtesOver(1)
-
-  private def sqlLit(s: String): String = s.replace("'", "''")
-
-  /** q121 lexicon: nested terms ("scan"/"can"/"an", "window"/"win"/
-    * "ndo") exercise the automaton's fail-chain output folding;
-    * "zzzqq" is planted absent.
-    */
-  private val Q121Terms = Seq("scan", "can", "an", "window", "win",
-    "ndo", "join", "order", "rde", "zzzqq", "fast", "ast")
-
-  /** Page-classification CASE generated from the rule set (priority-desc
-    * when-chain, contains over the lowercased header expression).
-    */
-  private def pageClassifySql(hdrExpr: String, rs: RuleSet): String = {
-    val whens = rs.sortedPageRules.filterNot(_.fallback).map { r =>
-      val conds = r.containsAny
-        .map(k => s"contains($hdrExpr, '${sqlLit(k.toLowerCase)}')")
-        .mkString(" OR ")
-      s"WHEN $conds THEN '${sqlLit(r.pageType)}'"
-    }
-    s"CASE ${whens.mkString(" ")} ELSE '${sqlLit(rs.pageFallback)}' END"
-  }
-
-  /** Record-classification CASE (txn_group only). */
-  private def recordGroupSql(rlExpr: String, rs: RuleSet): String = {
-    val whens = rs.sortedRecordRules.filterNot(_.fallback).map { r =>
-      val conds = r.matchAny
-        .map(k => s"contains($rlExpr, '${sqlLit(k.toLowerCase)}')")
-        .mkString(" OR ")
-      s"WHEN $conds THEN '${sqlLit(r.outputGroup)}'"
-    }
-    s"CASE ${whens.mkString(" ")} ELSE '${sqlLit(rs.recordFallback._1)}' END"
-  }
-
-  /** Record-classification CASE (txn_type side). The same priority-desc
-    * whens as [[recordGroupSql]], so one rule decides both fields —
-    * exactly like classifyRecordFromLower's single find.
-    */
-  private def recordTxnSql(rlExpr: String, rs: RuleSet): String = {
-    val whens = rs.sortedRecordRules.filterNot(_.fallback).map { r =>
-      val conds = r.matchAny
-        .map(k => s"contains($rlExpr, '${sqlLit(k.toLowerCase)}')")
-        .mkString(" OR ")
-      s"WHEN $conds THEN '${sqlLit(r.output)}'"
-    }
-    s"CASE ${whens.mkString(" ")} ELSE '${sqlLit(rs.recordFallback._2)}' END"
-  }
-
-  private def sheetNameSql(sectionExpr: String): String = {
-    val whens = SheetNames.map { case (from, to) =>
-      s"WHEN $sectionExpr = '${sqlLit(from)}' THEN '${sqlLit(to)}'"
-    }
-    s"CASE ${whens.mkString(" ")} ELSE $sectionExpr END"
-  }
-
-  private def bookingSql(shift: Int): String = {
-    val whens = RouteBookings.zipWithIndex.map { case (b, i) =>
-      s"WHEN (CAST(doc_id AS BIGINT) + $shift) % ${RouteBookings.length} = $i THEN '${sqlLit(b)}'"
-    }
-    s"CASE ${whens.mkString(" ")} ELSE '' END"
-  }
-
-  private def routePageSql: String = {
-    val hdr = """CASE CAST(doc_id AS BIGINT) % 5
-      WHEN 0 THEN '# Transaction list'
-      WHEN 1 THEN '# Trade information'
-      WHEN 2 THEN '# FX & TF'
-      WHEN 3 THEN '# Account summary'
-      ELSE '# Table of contents' END"""
-    s"""concat_ws(chr(10), $hdr,
-      concat('| 01.02.2024 | ', ${bookingSql(0)}, ' | USD 1''250.00 | ISIN US0000000001 |'),
-      '| Balance |  |  |  |',
-      concat('| 15.03.2024 | ', ${bookingSql(3)}, ' | EUR 900.00 | note text |'))"""
-  }
-
-  /** Hyperplane literal as a DuckDB DOUBLE list. Each coefficient goes
-    * through CAST('<Double.toString>' AS DOUBLE): a bare decimal literal
-    * would be DECIMAL-typed in DuckDB, and Double.toString is the
-    * shortest round-trip form, so the parsed value is bit-identical to
-    * the Spark lit(d).
-    */
-  private def planeListSql(p: Seq[Double]): String =
-    p.map(d => s"CAST('$d' AS DOUBLE)").mkString("[", ",", "]")
-
-  /** q29 oracle CTEs: the SAME driver-side seeded hyperplanes as
-    * SimSearch.hyperplaneBucket (planes(4, 64, 42)), dot products as a
-    * left-to-right list_reduce fold (bit-identical to the Spark
-    * aggregate() fold — the bucket SIGN has no rounding tolerance),
-    * cosine as in the proven q17 twin.
-    */
-  private def embedNearDupCtes(nPlanes: Int, dim: Int): String = {
-    val planeRows = SimSearch.planes(nPlanes, dim).zipWithIndex
-      .map { case (p, i) => s"($i, ${planeListSql(p)})" }.mkString(", ")
-    s"""v AS (SELECT vec_id AS id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings),
-        planes(pi, pv) AS (VALUES $planeRows),
-        dots AS (SELECT v.id, v.e, p.pi,
-          list_reduce(list_transform(generate_series(1, $dim),
-            i -> v.e[i] * p.pv[i]), (acc, x) -> acc + x) AS dot
-          FROM v CROSS JOIN planes p),
-        b AS (SELECT id, e,
-          CAST(SUM(CASE WHEN dot > 0 THEN (1 << pi) ELSE 0 END) AS BIGINT)
-            AS bucket
-          FROM dots GROUP BY id, e),
-        pairs AS (SELECT l.id AS a, r.id AS b,
-          list_sum(list_transform(generate_series(1, $dim),
-            i -> l.e[i] * r.e[i])) /
-          (sqrt(list_sum(list_transform(generate_series(1, $dim),
-            i -> l.e[i] * l.e[i]))) *
-           sqrt(list_sum(list_transform(generate_series(1, $dim),
-            i -> r.e[i] * r.e[i])))) AS cosine
-          FROM b l JOIN b r ON l.bucket = r.bucket AND l.id < r.id)"""
-  }
-
-  private def embedNearDupSql(nPlanes: Int, dim: Int, threshold: Double)
-      : String =
-    s"""WITH ${embedNearDupCtes(nPlanes, dim)}
-        SELECT a, b, round(cosine, 6) AS cosine FROM pairs
-        WHERE cosine >= $threshold
-        ORDER BY cosine DESC, a, b LIMIT 50"""
-
-  /** q18 oracle CTEs: the full multi-table multi-probe LSH ANN as
-    * relational SQL — `tables` plane sets (seeds seed..seed+tables-1,
-    * the SAME driver-side constants SimSearch.lshTopK embeds), corpus
-    * bucket per (id, table), query buckets expanded by every probe mask
-    * with popcount <= probeHamming, DISTINCT candidates, cosine rank.
-    * Bucket sign bits use the left-to-right list_reduce fold
-    * (bit-identical to Spark's aggregate() fold — a sign flip has no
-    * rounding tolerance); the final cosine reuses the proven q17 twin.
-    */
-  private def annLshSql(tables: Int, nPlanes: Int, dim: Int, seed: Long,
-      probeHamming: Int, k: Int): String = {
-    val planeRows = (for {
-      l <- 0 until tables
-      (p, i) <- SimSearch.planes(nPlanes, dim, seed + l).zipWithIndex
-    } yield s"($l, $i, ${planeListSql(p)})").mkString(", ")
-    val maskRows = (0L until (1L << nPlanes))
-      .filter(m => java.lang.Long.bitCount(m) <= probeHamming)
-      .map(m => s"($m)").mkString(", ")
-    s"""WITH v AS (SELECT vec_id AS id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings),
-        planes(t, pi, pv) AS (VALUES $planeRows),
-        dots AS (SELECT v.id, p.t, p.pi,
-          list_reduce(list_transform(generate_series(1, $dim),
-            i -> v.e[i] * p.pv[i]), (acc, x) -> acc + x) AS dot
-          FROM v CROSS JOIN planes p),
-        b AS (SELECT id, t,
-          CAST(SUM(CASE WHEN dot > 0 THEN (1 << pi) ELSE 0 END) AS BIGINT)
-            AS bucket
-          FROM dots GROUP BY id, t),
-        masks(m) AS (VALUES $maskRows),
-        qb AS (SELECT id AS query_id, t,
-            xor(bucket, CAST(m AS BIGINT)) AS bucket
-          FROM b CROSS JOIN masks WHERE id < 10),
-        cand AS (SELECT DISTINCT qb.query_id, cb.id AS corpus_id
-          FROM qb JOIN b cb ON cb.t = qb.t AND cb.bucket = qb.bucket
-          WHERE cb.id != qb.query_id),
-        s AS (SELECT cand.query_id, cand.corpus_id,
-          list_sum(list_transform(generate_series(1, $dim),
-            i -> q.e[i] * c.e[i])) /
-          (sqrt(list_sum(list_transform(generate_series(1, $dim),
-            i -> q.e[i] * q.e[i]))) *
-           sqrt(list_sum(list_transform(generate_series(1, $dim),
-            i -> c.e[i] * c.e[i])))) AS cosine
-          FROM cand
-          JOIN v q ON q.id = cand.query_id
-          JOIN v c ON c.id = cand.corpus_id),
-        r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, corpus_id) AS rank FROM s)
-        SELECT query_id, corpus_id, round(cosine, 6) AS cosine, rank
-        FROM r WHERE rank <= $k ORDER BY query_id, rank"""
-  }
-
-  // ---- q36 oracle SQL (DuckDB twins of the validator kernels) ----
-
-  private def pickSql(vals: Seq[String], shift: Int): String = {
-    val whens = vals.zipWithIndex.map { case (v, i) =>
-      s"WHEN (CAST(doc_id AS BIGINT) + $shift) % ${vals.length} = $i " +
-        s"THEN '${sqlLit(v)}'"
-    }
-    s"(CASE ${whens.mkString(" ")} ELSE '' END)"
-  }
-
-  /** TextOps.normalizeDate twin. */
-  private def normDateSql(c: String): String =
-    s"""(CASE
-      WHEN regexp_matches(trim($c), '^[0-9]{2}[.][0-9]{2}[.][0-9]{4}$$')
-        THEN regexp_replace(trim($c),
-          '([0-9]{2})[.]([0-9]{2})[.]([0-9]{4})', '\\3-\\2-\\1')
-      WHEN regexp_matches(trim($c), '^[0-9]{2}/[0-9]{2}/[0-9]{4}$$')
-        THEN regexp_replace(trim($c),
-          '([0-9]{2})/([0-9]{2})/([0-9]{4})', '\\3-\\2-\\1')
-      WHEN regexp_matches(trim($c), '^[0-9]{4}-[0-9]{2}-[0-9]{2}$$')
-        THEN trim($c)
-      ELSE '' END)"""
-
-  /** TextOps.isValidCalendarDate twin (pure arithmetic; TRY_CAST is the
-    * DuckDB analogue of the when-guarded casts ANSI Spark needs).
-    */
-  private def calOkSql(iso: String): String = {
-    val y = s"TRY_CAST(substr($iso, 1, 4) AS INT)"
-    val m = s"TRY_CAST(substr($iso, 6, 2) AS INT)"
-    val d = s"TRY_CAST(substr($iso, 9, 2) AS INT)"
-    s"""coalesce(regexp_matches($iso, '^[0-9]{4}-[0-9]{2}-[0-9]{2}$$')
-      AND $m BETWEEN 1 AND 12 AND $d >= 1 AND $d <= (CASE
-        WHEN $m IN (1,3,5,7,8,10,12) THEN 31
-        WHEN $m IN (4,6,9,11) THEN 30
-        WHEN $m = 2 THEN (CASE WHEN ($y % 4 = 0 AND $y % 100 != 0)
-          OR $y % 400 = 0 THEN 29 ELSE 28 END)
-        ELSE 0 END), FALSE)"""
-  }
-
-  /** TextOps.cleanNumberString twin → (cleaned digits, negate?). */
-  private def cleanNumSql(c: String): (String, String) = {
-    val t = s"trim($c)"
-    val paren = s"(starts_with($t, '(') AND ends_with($t, ')'))"
-    val inner0 =
-      s"(CASE WHEN $paren THEN substr($t, 2, greatest(length($t) - 2, 0)) ELSE $t END)"
-    val negLead = s"starts_with($inner0, '-')"
-    val inner1 = s"(CASE WHEN $negLead THEN substr($inner0, 2) ELSE $inner0 END)"
-    (s"regexp_replace($inner1, '['',\\s]', '', 'g')",
-      s"($paren != $negLead)")
-  }
-
-  /** q30 oracle: reconstructs the synthesized event pages' rows and
-    * re-derives every event count in SQL. Page types come from the
-    * SCALAR rule engine evaluated at SQL-generation time over the six
-    * header constants (classification reads only the '#' header
-    * lines, so it is a pure function of the family); routing reuses
-    * the q31 record-rule CASE twins over the reconstructed row text;
-    * extraction is modeled field-for-field (the settlement date is the
-    * second DD.MM.YYYY in row A's text and the first in row C's, the
-    * currency/amount split takes cell 3's leading alpha token, the
-    * ISIN verdict per pool entry is precomputed with the same Luhn
-    * kernel as q36); validation reuses the q36 validator twins.
-    */
-  private lazy val q30Sql: String = {
-    val rs = RuleSets.plugin
-    val headers = Seq("# Transaction list", "# Trade information",
-      "# FX & TF", "# Account summary", "# Table of contents",
-      "# Statement of assets")
-    val ptWhens = headers.zipWithIndex.map { case (h, i) =>
-      val p = graft.rules.ScalarRules.effectivePageType(h + "\n| x |", rs)
-      s"WHEN $i THEN '${sqlLit(p)}'"
-    }.mkString(" ")
-    val ptCase = s"(CASE (did % 6) $ptWhens ELSE '' END)"
-    val isinWhens = ValIsins.zipWithIndex.flatMap { case (v, i) =>
-      val extracted = if (v.matches("[A-Z0-9]{12}")) v else ""
-      val err =
-        if (extracted.isEmpty) None
-        else if (!extracted.matches("[A-Z]{2}[A-Z0-9]{9}[0-9]"))
-          Some("VAL_ISIN_SHAPE")
-        else if (!graft.functions.IsinValid.check(extracted))
-          Some("VAL_ISIN_CHECKSUM")
-        else None
-      err.map(e =>
-        s"WHEN (CAST(doc_id AS BIGINT) + 5) % ${ValIsins.length} = $i " +
-          s"THEN '$e'")
-    }
-    val isinErr =
-      if (isinWhens.isEmpty) "CAST(NULL AS VARCHAR)"
-      else s"(CASE ${isinWhens.mkString(" ")} END)"
-    val currList = graft.textops.TextOps.Currencies
-      .map(c => s"'${sqlLit(c)}'").mkString(", ")
-    val numOk = "'^[0-9]+([.][0-9]+)?$'"
-    val rangeOk = "'^[0-9]{1,12}([.][0-9]{1,2})?$'"
-    val (netClean, _) = cleanNumSql("net")
-    val rlA = s"lower(concat(${pickSql(EvTradeDates, 0)}, ' ', " +
-      s"${bookingSql(0)}, ' ', ${pickSql(EvCurrencies, 2)}, ' ', " +
-      s"${pickSql(EvNets, 3)}, ' ISIN ', ${pickSql(ValIsins, 5)}, " +
-      s"' due ', ${pickSql(EvSettleDates, 1)}))"
-    val rlC = s"lower(concat(${pickSql(EvTradeDates, 4)}, ' ', " +
-      s"${bookingSql(3)}, ' ', ${pickSql(EvCurrencies, 6)}, ' ', " +
-      s"${pickSql(EvNets, 7)}, ' note text'))"
-    s"""WITH f AS (SELECT doc_id, CAST(doc_id AS BIGINT) AS did,
-        (CAST(doc_id AS BIGINT) % 7 = 3) AS isempty FROM documents),
-      pev AS (SELECT CASE WHEN isempty THEN 'WARN' ELSE 'INFO' END AS level,
-        CASE WHEN isempty THEN 'PAGE_EMPTY' ELSE 'PAGE_OK_HTML' END AS code,
-        'extract' AS stage FROM f),
-      pt AS (SELECT doc_id, did, $ptCase AS page_type FROM f
-        WHERE NOT isempty),
-      rowa AS (SELECT doc_id, did, page_type,
-          ${pickSql(EvTradeDates, 0)} AS td,
-          ${pickSql(EvSettleDates, 1)} AS sd,
-          ${pickSql(EvCurrencies, 2)} AS cur,
-          ${pickSql(EvNets, 3)} AS net,
-          $isinErr AS isin_err,
-          $rlA AS rl
-        FROM pt
-        WHERE page_type IN ('Transaction','Trade','FXTF','Others')),
-      rowc AS (SELECT doc_id, did, page_type,
-          ${pickSql(EvTradeDates, 4)} AS td,
-          ${pickSql(EvTradeDates, 4)} AS sd,
-          ${pickSql(EvCurrencies, 6)} AS cur,
-          ${pickSql(EvNets, 7)} AS net,
-          CAST(NULL AS VARCHAR) AS isin_err,
-          $rlC AS rl
-        FROM pt
-        WHERE page_type IN ('Transaction','Trade','FXTF','Others')),
-      recs AS (SELECT * FROM rowa UNION ALL SELECT * FROM rowc),
-      routed AS (SELECT *,
-          CASE WHEN page_type = 'Others' THEN 'Others'
-            ELSE ${recordGroupSql("rl", rs)} END AS section,
-          CASE WHEN page_type = 'Others' THEN 'Other'
-            ELSE ${recordTxnSql("rl", rs)} END AS txn
-        FROM recs),
-      rev AS (SELECT 'INFO' AS level,
-          CASE WHEN page_type IN ('Transaction','Trade','FXTF')
-            AND section = 'Others' AND txn = 'Other'
-            THEN 'REC_ROUTE_FALLBACK' ELSE 'REC_ROUTE_OK' END AS code,
-          'record_route' AS stage FROM routed
-        UNION ALL
-        SELECT 'INFO', 'REC_ROUTE_OK', 'record_route' FROM pt
-        WHERE page_type = 'Positions'),
-      vn AS (SELECT *,
-          $netClean AS net_clean,
-          ${normDateSql("td")} AS t_iso,
-          ${normDateSql("sd")} AS s_iso
-        FROM routed WHERE page_type IN ('Transaction','Trade','FXTF')),
-      v AS (SELECT *,
-          regexp_matches(net_clean, $numOk) AS net_ok,
-          ${calOkSql("t_iso")} AS t_ok,
-          ${calOkSql("s_iso")} AS s_ok
-        FROM vn),
-      vev AS (SELECT 'WARN' AS level, unnest(list_filter([
-          isin_err,
-          CASE WHEN net != '' AND NOT net_ok THEN 'VAL_NUM_NET' END,
-          CASE WHEN net_ok AND NOT regexp_matches(net_clean, $rangeOk)
-            THEN 'VAL_RANGE_NET' END,
-          CASE WHEN td != '' AND NOT t_ok THEN 'VAL_DATE_TRADE' END,
-          CASE WHEN sd != '' AND NOT s_ok THEN 'VAL_DATE_SETTLE' END,
-          CASE WHEN cur != '' AND cur NOT IN ($currList)
-            THEN 'VAL_CURR' END,
-          CASE WHEN t_ok AND s_ok AND s_iso < t_iso
-            THEN 'VAL_CONFLICT' END
-        ], x -> x IS NOT NULL)) AS code, 'validate' AS stage FROM v),
-      sev AS (SELECT 'INFO' AS level, 'REC_STITCH_MERGED' AS code,
-        'stitch' AS stage FROM pt WHERE page_type = 'Positions'),
-      ev AS (SELECT * FROM pev
-        UNION ALL SELECT level, code, stage FROM rev
-        UNION ALL SELECT * FROM vev
-        UNION ALL SELECT * FROM sev)
-      SELECT level, code, stage, CAST(COUNT(*) AS BIGINT) AS n
-      FROM ev GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""
-  }
-
-  private def q36Sql: String = {
-    val (netClean, netNeg) = cleanNumSql("net_consideration")
-    val (mvClean, mvNeg) = cleanNumSql("market_value")
-    // VAL_ISIN_CHECKSUM per synthesized value, precomputed at SQL-gen
-    // time with the same IsinValid kernel the Column uses (the Luhn
-    // expansion is golden/unit-tested elsewhere; the values here are
-    // driver-side constants, so this stays a pure-data CASE)
-    val checksumWhens = ValIsins.zipWithIndex.collect {
-      case (v, i) if v.nonEmpty && v.matches("[A-Z]{2}[A-Z0-9]{9}[0-9]") &&
-          !graft.functions.IsinValid.check(v) =>
-        s"WHEN (CAST(doc_id AS BIGINT) + 5) % ${ValIsins.length} = $i " +
-          "THEN 'VAL_ISIN_CHECKSUM'"
-    }
-    val checksumSql =
-      if (checksumWhens.isEmpty) "NULL"
-      else s"(CASE ${checksumWhens.mkString(" ")} END)"
-    val currList = graft.textops.TextOps.Currencies
-      .map(c => s"'${sqlLit(c)}'").mkString(", ")
-    val numOk = "'^[0-9]+([.][0-9]+)?$'"
-    val rangeOk = "'^[0-9]{1,12}([.][0-9]{1,2})?$'"
-    s"""WITH f AS (SELECT doc_id,
-        ${pickSql(ValTradeDates, 0)} AS trade_date,
-        ${pickSql(ValSettleDates, 1)} AS settlement_date,
-        ${pickSql(ValCurrencies, 2)} AS currency,
-        ${pickSql(ValNets, 3)} AS net_consideration,
-        ${pickSql(ValMvs, 4)} AS market_value,
-        ${pickSql(ValIsins, 5)} AS securities_id
-        FROM documents),
-      n AS (SELECT *,
-        $netClean AS net_clean, $netNeg AS net_neg,
-        $mvClean AS mv_clean,
-        ${normDateSql("trade_date")} AS trade_date_iso,
-        ${normDateSql("settlement_date")} AS settlement_date_iso
-        FROM f),
-      v AS (SELECT *,
-        regexp_matches(net_clean, $numOk) AS net_ok,
-        regexp_matches(mv_clean, $numOk) AS mv_ok,
-        ${calOkSql("trade_date_iso")} AS t_ok,
-        ${calOkSql("settlement_date_iso")} AS s_ok
-        FROM n)
-      SELECT doc_id, trade_date_iso, settlement_date_iso,
-        CASE WHEN net_ok THEN CAST(net_clean AS DOUBLE) *
-          (CASE WHEN net_neg THEN -1 ELSE 1 END) END AS net_num,
-        array_to_string(list_filter([
-          CASE WHEN securities_id != '' AND NOT regexp_matches(
-            securities_id, '^[A-Z]{2}[A-Z0-9]{9}[0-9]$$')
-            THEN 'VAL_ISIN_SHAPE' END,
-          $checksumSql,
-          CASE WHEN net_consideration != '' AND NOT net_ok
-            THEN 'VAL_NUM_NET' END,
-          CASE WHEN market_value != '' AND NOT mv_ok THEN 'VAL_NUM_MV' END,
-          CASE WHEN net_ok AND NOT regexp_matches(net_clean, $rangeOk)
-            THEN 'VAL_RANGE_NET' END,
-          CASE WHEN mv_ok AND NOT regexp_matches(mv_clean, $rangeOk)
-            THEN 'VAL_RANGE_MV' END,
-          CASE WHEN trade_date != '' AND NOT t_ok THEN 'VAL_DATE_TRADE' END,
-          CASE WHEN settlement_date != '' AND NOT s_ok
-            THEN 'VAL_DATE_SETTLE' END,
-          CASE WHEN currency != '' AND currency NOT IN ($currList)
-            THEN 'VAL_CURR' END,
-          CASE WHEN t_ok AND s_ok AND settlement_date_iso < trade_date_iso
-            THEN 'VAL_CONFLICT' END
-        ], x -> x IS NOT NULL), ',') AS errs
-      FROM v ORDER BY doc_id"""
-  }
-
-  /** DuckDB twin of TextAnalysis.langId: (inner script-count columns,
-    * decision CASE over them + the stopword vote). Same ranges, same
-    * family order, same tie-breaks — generated from the same constants.
-    */
-  private def langIdSqlParts: (String, String) = {
-    val scCols = TextAnalysis.ScriptRanges.map { case (k, r) =>
-      s"(length(text) - length(regexp_replace(text, '$r', '', 'g'))) AS s_$k"
-    }.mkString(", ")
-    val hits = TextAnalysis.StopLists.map { case (lang, words) =>
-      lang -> stopHitsSql(words, "lower(text)")
-    }
-    val mx = s"greatest(${hits.map(_._2).mkString(", ")})"
-    val latinBranches = hits.map { case (lang, h) =>
-      s"WHEN ($h) = $mx THEN '$lang'"
-    }.mkString(" ")
-    val latin = s"CASE WHEN $mx = 0 THEN 'und' $latinBranches " +
-      s"ELSE '${TextAnalysis.StopLists.last._1}' END"
-    val fams = Seq("cjk" -> "(s_han + s_kana)", "ko" -> "s_hangul",
-      "ru" -> "s_cyrillic", "ar" -> "s_arabic", "el" -> "s_greek",
-      "he" -> "s_hebrew", "hi" -> "s_devanagari", "th" -> "s_thai")
-    val mxS = s"greatest(${fams.map(_._2).mkString(", ")})"
-    val total = fams.map(_._2).mkString(" + ")
-    val pickBranches = fams.map { case (f, c) =>
-      val v =
-        if (f == "cjk") "(CASE WHEN s_kana > 0 THEN 'ja' ELSE 'zh' END)"
-        else s"'$f'"
-      s"WHEN $c = $mxS THEN $v"
-    }.mkString(" ")
-    val caseExpr = s"(CASE WHEN text IS NULL THEN 'und' " +
-      s"WHEN ($total) * 2 > length(text) " +
-      s"THEN (CASE $pickBranches ELSE 'und' END) ELSE ($latin) END)"
-    (scCols, caseExpr)
-  }
-
-  private def simhash16Sql: String = {
-    val h = tokHashSql(4)
-    (0 until 16).map { i =>
-      s"(CASE WHEN list_sum(list_transform($toksSql, t -> (($h >> $i) & 1) * 2 - 1)) > 0 THEN ${1L << i} ELSE 0 END)"
-    }.mkString("(", " + ", ")")
-  }
-
-  /** q145/q161 oracle fragment: the full HyperANF sketch-round chain
-    * (MATERIALIZED rounds, 60-bit hash, p=5 registers, per-node
-    * estimates) ending in `allr(round, node, est)`. One definition so
-    * the neighborhood-function and effective-diameter oracles cannot
-    * drift.
-    */
-  private lazy val hyperAnfCtesSql: String = {
-      val m = 32
-      val alpha = 0.697
-      val cc = alpha * m * m * 2305843009213693952.0d
-      val estCtes = (0 to 4).map { r =>
-        s"""est$r AS MATERIALIZED (SELECT $r AS round, node,
-          round(CASE WHEN ($cc / z) <= 80.0 AND nn < 32
-            THEN 32.0 * ln(32.0 / CAST(32 - nn AS DOUBLE))
-            ELSE $cc / z END, 6) AS est
-          FROM (SELECT node, COUNT(*) AS nn,
-            CAST(SUM(2305843009213693952 >> rho) +
-              CAST(32 - COUNT(*) AS HUGEINT) *
-              CAST(2305843009213693952 AS HUGEINT) AS DOUBLE) AS z
-            FROM sk$r GROUP BY node))"""
-      }.mkString(",\n        ")
-      val roundCtes = (1 to 4).map { r =>
-        s""",
-        sk$r AS MATERIALIZED (SELECT node, reg, MAX(rho) AS rho FROM (
-          SELECT node, reg, rho FROM sk${r - 1}
-          UNION ALL SELECT e.s AS node, k.reg, k.rho
-          FROM sk${r - 1} k JOIN e ON e.t = k.node)
-          GROUP BY node, reg)"""
-      }.mkString
-    s"""d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id
-          FROM documents),
-        raw AS (SELECT doc_id % 30 AS x, (doc_id * 7 + 1) % 30 AS y
-            FROM d
-          UNION ALL SELECT doc_id % 30, (doc_id * 13 + 5) % 30 FROM d
-          UNION ALL SELECT (doc_id * 7 + 1) % 30,
-            (doc_id * 13 + 5) % 30 FROM d
-          UNION ALL SELECT doc_id % 30, 30 + (doc_id % 100) FROM d
-          UNION ALL SELECT 30 + (doc_id % 100),
-            130 + (doc_id % 200) FROM d),
-        und AS MATERIALIZED (SELECT DISTINCT least(x, y) AS u,
-          greatest(x, y) AS v FROM raw WHERE x != y),
-        e AS MATERIALIZED (SELECT u AS s, v AS t FROM und
-          UNION SELECT v, u FROM und),
-        nd AS (SELECT DISTINCT s AS node FROM e),
-        h AS (SELECT node, CAST(('0x' ||
-          substr(md5(CAST(node AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-          FROM nd),
-        sk0 AS MATERIALIZED (SELECT node,
-          hv // 36028797018963968 AS reg,
-          CASE WHEN hv % 36028797018963968 = 0 THEN 56
-            ELSE 55 - (length(bin(hv % 36028797018963968)) - 1)
-            END AS rho FROM h)$roundCtes,
-        $estCtes,
-        allr AS (SELECT * FROM est0 UNION ALL SELECT * FROM est1
-          UNION ALL SELECT * FROM est2 UNION ALL SELECT * FROM est3
-          UNION ALL SELECT * FROM est4)"""
-  }
-
-  /** q153/q167 oracle fragment: pigeonhole-blocked simhash candidate
-    * pairs ending in `cand(a, b, hamming)`. One definition so the
-    * pair and clustering oracles cannot drift.
-    */
-  private lazy val simhashPairsCtesSql: String =
-    s"""sigs AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          $simhash16Sql AS sh FROM documents),
-        blk AS (SELECT id, sh, b AS band, (sh >> (b * 8)) & 255 AS bucket
-          FROM sigs, generate_series(0, 1) AS t(b)),
-        cand AS (SELECT DISTINCT l.id AS a, r.id AS b,
-            CAST(bit_count(xor(l.sh, r.sh)) AS INT) AS hamming
-          FROM blk l JOIN blk r ON l.band = r.band
-            AND l.bucket = r.bucket AND l.id < r.id)"""
-
-  /** q165/q166 oracle fragment: content-defined chunks ending in
-    * `chk(id, chunk_idx, start, chunk_len, chunk_hash)`.
-    */
-  private lazy val cdcChunksCtesSql: String =
-    s"""t AS (SELECT CAST(doc_id AS BIGINT) AS id, $toksSql AS tk
-          FROM documents),
-        h AS (SELECT id, tk, list_transform(tk,
-            tkx -> CAST(('0x' || substr(md5(tkx), 1, 8)) AS BIGINT))
-            AS th
-          FROM t),
-        b AS (SELECT id, tk, CASE WHEN len(tk) >= 5
-            THEN list_filter(generate_series(3, len(tk) - 2),
-              i -> (th[i + 1] * 3 + th[i] * 5 + th[i - 1] * 7 +
-                th[i - 2] * 11) % 16 = 0)
-            ELSE CAST([] AS BIGINT[]) END AS bs
-          FROM h),
-        se AS (SELECT id, tk,
-            [CAST(0 AS BIGINT)] || list_transform(bs, x -> x + 1)
-              AS starts,
-            list_transform(bs, x -> x + 1) ||
-              [CAST(len(tk) AS BIGINT)] AS ends
-          FROM b),
-        ch AS (SELECT id, u.p.j - 1 AS chunk_idx, starts[u.p.j] AS s,
-            ends[u.p.j] AS e, tk
-          FROM se, unnest(list_transform(generate_series(1, len(starts)),
-            j -> struct_pack(j := j))) u(p)),
-        chk AS (SELECT id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-          CAST(s AS BIGINT) AS start, CAST(e - s AS BIGINT)
-            AS chunk_len,
-          md5(array_to_string(tk[s + 1 : e], ' ')) AS chunk_hash
-          FROM ch WHERE e > s)"""
-
-  /** q174/q176 oracle fragment: posting counts ending in
-    * `st(term, cf, stf2, doc_freq)` + the corpus count `n(nd)`. */
-  private lazy val burstinessCtesSql: String =
-    s"""t AS (SELECT doc_id, $toksSql AS tk FROM documents),
-        n AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM documents),
-        post AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-          FROM (SELECT doc_id, unnest(tk) AS term FROM t)
-          GROUP BY 1, 2),
-        st AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS cf,
-            SUM(CAST(tf AS HUGEINT) * tf) AS stf2,
-            CAST(COUNT(*) AS BIGINT) AS doc_freq
-          FROM post GROUP BY 1)"""
-
-  /** q175/q176 oracle fragment: hash-decile part stats ending in
-    * `agg(term, cf, num, sdl)` (dispersion numerator). */
-  private lazy val dispersionCtesSql: String =
-    s"""td AS (SELECT CAST(('0x' || substr(md5(
-            CAST(doc_id AS VARCHAR) || ':disp'), 1, 8)) AS BIGINT)
-            % 10000 % 10 AS part, $toksSql AS tk FROM documents),
-        pd AS (SELECT part, CAST(SUM(len(tk)) AS BIGINT) AS dlp
-          FROM td GROUP BY 1),
-        totd AS (SELECT CAST(SUM(dlp) AS BIGINT) AS sdl FROM pd),
-        tfp AS (SELECT term, part, CAST(COUNT(*) AS BIGINT) AS tfp
-          FROM (SELECT part, unnest(tk) AS term FROM td) GROUP BY 1, 2),
-        cfq AS (SELECT term, CAST(SUM(tfp) AS BIGINT) AS cf
-          FROM tfp GROUP BY 1),
-        cells AS (SELECT cfq.term, cfq.cf, pd.part, pd.dlp,
-            COALESCE(tfp.tfp, 0) AS tfp
-          FROM cfq CROSS JOIN pd LEFT JOIN tfp
-            ON tfp.term = cfq.term AND tfp.part = pd.part),
-        agg AS (SELECT term, cf,
-            SUM(abs(CAST(tfp AS HUGEINT) * sdl -
-              CAST(dlp AS HUGEINT) * cf)) AS num, sdl
-          FROM cells, totd GROUP BY term, cf, sdl)"""
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        COUNT(*) AS n,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q02_join" ->
-      """SELECT r_name, n_name, COUNT(*) AS n_orders,
-        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        FROM orders
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q03_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""",
-    "q04_window" ->
-      """SELECT event_id, user_id,
-        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-        lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-          AS prev_value
-        FROM events ORDER BY event_id""",
-    "q05_semijoin" ->
-      """SELECT c_custkey, c_name FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o
-          WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100.0)
-        ORDER BY c_custkey""",
-    "q06_antijoin" ->
-      """SELECT c_custkey, c_name FROM customer c
-        WHERE NOT EXISTS (SELECT 1 FROM orders o
-          WHERE o.o_custkey = c.c_custkey)
-        ORDER BY c_custkey""",
-    "q07_union" ->
-      """SELECT label, src FROM (
-          SELECT DISTINCT event_type AS label, 'events' AS src FROM events
-          UNION ALL
-          SELECT DISTINCT p_brand AS label, 'part' AS src FROM part)
-        ORDER BY label, src""",
-    "q08_rollup" ->
-      """SELECT year(ts) AS yr, event_type, COUNT(*) AS n,
-        CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY ROLLUP(yr, event_type)
-        ORDER BY yr ASC NULLS FIRST, event_type ASC NULLS FIRST""",
-    "q09_dedup_exact" ->
-      """SELECT MIN(doc_id) AS canonical_id, COUNT(*) AS n_copies,
-        md5(text) AS fp
-        FROM documents GROUP BY md5(text) ORDER BY canonical_id""",
-    "q10_classify" -> {
-      // mirror the PluginHeader slice ('#'-prefixed lines, else first 10
-      // lines) instead of classifying over the full text — the two only
-      // coincide for short texts
-      val hdr = "lower(array_to_string(CASE WHEN len(list_filter(" +
-        "string_split(text, chr(10)), l -> starts_with(ltrim(l), '#'))) > 0 " +
-        "THEN list_filter(string_split(text, chr(10)), " +
-        "l -> starts_with(ltrim(l), '#')) " +
-        "ELSE string_split(text, chr(10))[1:10] END, chr(10)))"
-      s"""SELECT doc_id, ${pageClassifySql("hdr", docRules)} AS doc_class
-        FROM (SELECT doc_id, $hdr AS hdr FROM documents)
-        ORDER BY doc_id"""
-    },
-    "q11_regex" ->
-      """SELECT event_id,
-        CAST(regexp_extract(props, '"k": (\d+)', 1) AS INT) AS k_val
-        FROM events ORDER BY event_id""",
-    "q12_segment" ->
-      """SELECT user_id, seg_id, COUNT(*) AS n, MIN(event_id) AS first_ev,
-        MAX(event_id) AS last_ev,
-        CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        FROM (SELECT *,
-          CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-            OVER (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS seg_id
-          FROM events)
-        GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q13_pivot" ->
-      """SELECT user_id,
-        CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-        CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-        CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-        CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-        CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
-        COUNT(*) AS n_total
-        FROM events GROUP BY 1 ORDER BY 1""",
-    "q14_minhash" ->
-      s"SELECT doc_id, ${minhashSqlCols()} FROM documents ORDER BY doc_id",
-    "q15_simhash" ->
-      s"SELECT doc_id, $simhash16Sql AS simhash FROM documents ORDER BY doc_id",
-    "q16_jaccard_pairs" ->
-      s"""WITH toks AS (SELECT doc_id, $toksSql AS tk FROM documents),
-        sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(0, greatest(len(tk) - 3, 0)),
-            i -> array_to_string(tk[i+1:i+3], ' ')))) AS shingle
-          FROM toks),
-        sh2 AS (SELECT * FROM sh WHERE length(shingle) > 0),
-        sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh2 GROUP BY 1),
-        inter AS (SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS inter
-          FROM sh2 l JOIN sh2 r ON l.shingle = r.shingle
-            AND l.doc_id < r.doc_id
-          GROUP BY 1, 2)
-        SELECT a, b, inter,
-          CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) AS jaccard
-        FROM inter
-        JOIN sizes sa ON sa.doc_id = a
-        JOIN sizes sb ON sb.doc_id = b
-        ORDER BY jaccard DESC, a, b LIMIT 20""",
-    "q17_cosine_topk" ->
-      """WITH v AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings),
-        s AS (SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-          list_sum(list_transform(generate_series(1, len(q.e)),
-            i -> q.e[i] * c.e[i])) /
-          (sqrt(list_sum(list_transform(generate_series(1, len(q.e)),
-            i -> q.e[i] * q.e[i]))) *
-           sqrt(list_sum(list_transform(generate_series(1, len(c.e)),
-            i -> c.e[i] * c.e[i])))) AS cosine
-          FROM v q, v c
-          WHERE q.vec_id < 10 AND q.vec_id != c.vec_id),
-        r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, corpus_id) AS rank FROM s)
-        SELECT query_id, corpus_id, round(cosine, 6) AS cosine, rank
-        FROM r WHERE rank <= 5 ORDER BY query_id, rank""",
-    "q19_quality" ->
-      s"""SELECT doc_id,
-        len($toksSql) AS n_tokens,
-        CAST(length(text) AS BIGINT) AS n_chars_m,
-        CASE WHEN len($toksSql) > 0
-          THEN (length(text) * 100) // len($toksSql) ELSE 0 END
-          AS chars_per_100tok,
-        CASE WHEN length(text) > 0
-          THEN (length(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-            * 1000000) // length(text) ELSE 0 END AS alpha_ppm,
-        CASE WHEN length(text) > 0
-          THEN (length(regexp_replace(text, '[^0-9]', '', 'g'))
-            * 1000000) // length(text) ELSE 0 END AS digit_ppm,
-        CASE WHEN len($toksSql) > 0
-          THEN ((${stopHitsSql(TextAnalysis.StopEn, "lower(text)")})
-            * 1000000) // len($toksSql) ELSE 0 END AS stopword_ppm
-        FROM documents ORDER BY doc_id""",
-    "q20_langid" -> {
-      val (scCols, caseExpr) = langIdSqlParts
-      s"""SELECT doc_id, lang, $caseExpr AS lang_pred
-        FROM (SELECT doc_id, lang, text, $scCols FROM documents)
-        ORDER BY doc_id"""
-    },
-    "q37_langid_scripts" -> {
-      val (scCols, caseExpr) = langIdSqlParts
-      s"""SELECT doc_id, text, $caseExpr AS lang_pred
-        FROM (SELECT doc_id, text, $scCols FROM
-          (SELECT doc_id, ${pickSql(ScriptSnippets, 0)} AS text
-           FROM documents))
-        ORDER BY doc_id"""
-    },
-    "q21_fingerprint" ->
-      """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
-        COUNT(*) AS n, MIN(doc_id) AS min_doc
-        FROM documents GROUP BY 1 ORDER BY min_doc""",
-    "q24_sessionize" ->
-      """SELECT user_id, session_id, COUNT(*) AS n_events,
-        MIN(event_id) AS first_ev, MAX(event_id) AS last_ev
-        FROM (SELECT *,
-          CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-          FROM (SELECT *,
-            CASE WHEN epoch_us(ts) - lag(epoch_us(ts), 1)
-                OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                > 1800000000
-              OR lag(epoch_us(ts), 1)
-                OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_sess
-            FROM events))
-        GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q25_salted_agg" ->
-      """SELECT user_id,
-        CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        COUNT(*) AS n
-        FROM events GROUP BY 1 ORDER BY 1""",
-    "q28_minhash_lsh" ->
-      s"""WITH ${lshPairsCtesOver(1, maxBucket = 64)}
-        SELECT a, b, est_jaccard FROM pairs WHERE est_jaccard >= 0.25
-        ORDER BY est_jaccard DESC, a, b LIMIT 50""",
-    "q18_ann_lsh" -> annLshSql(tables = 4, nPlanes = 4, dim = 64,
-      seed = 42L, probeHamming = 1, k = 5),
-    "q29_embed_neardup" -> embedNearDupSql(4, 64, 0.2),
-    "q36_validate" -> q36Sql,
-    "q30_event_stats" -> q30Sql,
-    "q31_route_records" -> {
-      val rs = RuleSets.plugin
-      val hdrExpr = "lower(array_to_string(list_filter(" +
-        "string_split(page, chr(10)), l -> starts_with(ltrim(l), '#')), chr(10)))"
-      val excluded = rs.othersExcludedPrefixes
-        .map(p => "starts_with(regexp_replace(page, '^\\s+', ''), '" + sqlLit(p) + "')")
-        .mkString(" OR ")
-      s"""WITH pages AS (SELECT doc_id, $routePageSql AS page FROM documents),
-        cls0 AS (SELECT doc_id, page,
-          ${pageClassifySql(hdrExpr, rs)} AS pt0 FROM pages),
-        cls AS (SELECT doc_id, page,
-          CASE WHEN pt0 = '${sqlLit(rs.pageFallback)}' AND NOT ($excluded)
-            THEN 'Others' ELSE pt0 END AS page_type FROM cls0),
-        rows0 AS (SELECT doc_id, page_type,
-          unnest(list_filter(string_split(page, chr(10)),
-            l -> starts_with(l, '|') AND ends_with(l, '|'))) AS line
-          FROM cls
-          WHERE page_type IN ('Transaction', 'Trade', 'FXTF', 'Others')),
-        cellsT AS (SELECT doc_id, page_type,
-          list_transform(string_split(line, '|')[2:-2], c -> trim(c)) AS cells
-          FROM rows0),
-        kept AS (SELECT * FROM cellsT WHERE
-          CASE WHEN page_type = 'Others'
-            THEN len(list_filter(cells, c -> c != ''
-              AND regexp_matches(c, '[a-zA-Z0-9]'))) >= 2
-            ELSE regexp_matches(cells[1], '^[0-9]{2}[.][0-9]{2}[.][0-9]{4}')
-              AND len(cells) > 1 AND cells[2] != '' END),
-        routed AS (SELECT page_type,
-          CASE WHEN page_type = 'Others' THEN 'Others'
-            ELSE ${recordGroupSql("lower(array_to_string(cells, ' '))", rs)}
-          END AS section FROM kept)
-        SELECT page_type, section, ${sheetNameSql("section")} AS sheet,
-          COUNT(*) AS n
-        FROM routed GROUP BY 1, 2, 3 ORDER BY 1, 2"""
-    },
-    "q32_dedup_cluster" -> dedupClusterOracleSql,
-    // q111: the same recursive-CTE component labeling, then the
-    // argmax(score)/min-id survivor re-derived relationally
-    "q111_keep_best" ->
-      s"""WITH RECURSIVE ${lshPairsCtesOver(3, maxBucket = 64)},
-        edges AS (SELECT a, b FROM pairs WHERE est_jaccard >= 0.5
-          UNION SELECT b, a FROM pairs WHERE est_jaccard >= 0.5),
-        comp(id, canon) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.a, c.canon FROM edges e JOIN comp c ON c.id = e.b),
-        lab AS (SELECT id, MIN(canon) AS canonical_id
-          FROM comp GROUP BY 1),
-        sc AS (SELECT l.id, l.canonical_id,
-          CAST(d.n_chars AS BIGINT) AS score
-          FROM lab l JOIN documents d ON d.doc_id = l.id),
-        mx AS (SELECT canonical_id, max(score) AS ms FROM sc GROUP BY 1),
-        bid AS (SELECT s.canonical_id, min(s.id) AS bid
-          FROM sc s JOIN mx ON s.canonical_id = mx.canonical_id
-            AND s.score = mx.ms
-          GROUP BY 1)
-        SELECT s.id AS doc_id, s.canonical_id, s.score,
-          s.id = b.bid AS survivor
-        FROM sc s JOIN bid b ON s.canonical_id = b.canonical_id
-        ORDER BY doc_id""",
-    // q112: the same composed/decomposed plant rebuilt with chr()
-    // codepoints, normalized by DuckDB's own nfc_normalize — an
-    // INDEPENDENT ICU-class implementation agreeing byte-for-byte with
-    // the JDK Normalizer is the strongest cross-check available here
-    "q112_nfc" ->
-      """WITH p AS (SELECT CAST(doc_id AS BIGINT) AS did FROM documents),
-        r AS (SELECT did,
-          (CASE did % 3
-            WHEN 0 THEN 'caf' || chr(233) || ' menu '
-            WHEN 1 THEN 'cafe' || chr(769) || ' menu '
-            ELSE 'A' || chr(778) || ' resort ' END)
-            || 'g' || CAST(did // 3 AS VARCHAR) AS raw FROM p)
-        SELECT did AS doc_id,
-          CAST(length(raw) AS BIGINT) AS raw_cp,
-          CAST(length(nfc_normalize(raw)) AS BIGINT) AS nfc_cp,
-          md5(nfc_normalize(raw)) AS nfc_md5
-        FROM r ORDER BY doc_id""",
-    // q113: the oracle ranks with a plain per-language window over the
-    // same md5 sample hash — pinning that the sharded global rank
-    // equals the single-window rank
-    "q113_strat_sample" ->
-      """WITH h AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, lang,
-          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':strat'),
-            1, 8)) AS BIGINT) AS hh FROM documents),
-        r AS (SELECT doc_id, lang,
-          CAST(row_number() OVER (PARTITION BY lang
-            ORDER BY hh, doc_id) AS BIGINT) AS sample_rank FROM h)
-        SELECT doc_id, lang, sample_rank FROM r
-        WHERE sample_rank <= 40 ORDER BY lang, sample_rank""",
-    // q114: the same URL plant re-built in SQL; features re-derived
-    // with the identical regexes (over the fragment-stripped view,
-    // like the Scala side) and length-minus-replace arithmetic
-    "q114_url_features" ->
-      """WITH p AS (SELECT CAST(doc_id AS BIGINT) AS did, source
-          FROM documents),
-        u AS (SELECT did AS doc_id,
-          CASE did % 6
-            WHEN 0 THEN 'http://' || source || '.example.com/a/b/c/page'
-              || CAST(did AS VARCHAR) || '.html'
-            WHEN 1 THEN 'https://' || source || '.Example.COM/p?id='
-              || CAST(did AS VARCHAR) || '&utm_source=feed&x=1'
-            WHEN 2 THEN 'http://' || source || '.example.com/2024/01/'
-              || CAST(did AS VARCHAR)
-            WHEN 3 THEN 'http://' || source || '.example.com'
-            WHEN 4 THEN 'http://' || source
-              || '.example.com/search?q=a&page=2&fbclid=zz#frag'
-            ELSE 'http://' || source || '.example.com/page'
-              || CAST(did AS VARCHAR) || '#sec?utm_source=x'
-          END AS url FROM p),
-        nf AS (SELECT doc_id, url,
-          regexp_replace(url, '#.*$', '') AS nofrag FROM u),
-        f AS (SELECT doc_id, url,
-          lower(regexp_extract(nofrag,
-            '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)) AS url_host,
-          regexp_extract(nofrag,
-            '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS path,
-          list_filter(string_split(
-            regexp_extract(nofrag, '\?(.*)$', 1), '&'),
-            q -> q != '') AS params FROM nf)
-        SELECT doc_id, url_host,
-          CAST(length(path) - length(replace(path, '/', '')) AS BIGINT)
-            AS path_depth,
-          CAST(CASE WHEN length(path) = 0 THEN 0
-            ELSE ((length(path) -
-              length(regexp_replace(path, '[0-9]', '', 'g'))) * 1000000)
-              // length(path) END AS BIGINT) AS path_digit_ppm,
-          CAST(len(params) AS BIGINT) AS n_params,
-          len(list_filter(params, q -> regexp_matches(q,
-            '^(utm_[A-Za-z0-9_]*|gclid|fbclid|ref|mc_cid|mc_eid)(=|$)')))
-            > 0 AS has_tracking,
-          CAST(length(url) AS BIGINT) AS url_len
-        FROM f ORDER BY doc_id""",
-    // q115: expected delay/budget re-derived from the plant formula
-    // (valid in-group firsts: k=1 -> 10, k=4 -> 2 via leading digits,
-    // k=5 -> declared 0; everything else -1; budget = 3600 div
-    // max(delay if > 0 else default 5))
-    "q115_crawl_delay" ->
-      """WITH h AS (SELECT DISTINCT source || '-'
-          || CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR)
-          || '.example.com' AS host,
-          CAST(doc_id AS BIGINT) % 7 AS k FROM documents)
-        SELECT host,
-          CAST(CASE k WHEN 1 THEN 10 WHEN 4 THEN 2 WHEN 5 THEN 0
-            ELSE -1 END AS BIGINT) AS crawl_delay,
-          CAST(CASE k WHEN 1 THEN 360 WHEN 4 THEN 1800
-            ELSE 720 END AS BIGINT) AS fetches_per_hour
-        FROM h ORDER BY host""",
-    // q116: the two surviving feed rows per page re-derived from the
-    // plant (positions 1 and 3 — the stylesheet, hreflang and hrefless
-    // tags leave gaps; the atom href resolves relative to /blog/)
-    "q116_feed_discovery" ->
-      """WITH p AS (SELECT CAST(doc_id AS BIGINT) AS did, source
-          FROM documents),
-        u AS (SELECT
-          'http://' || source || '.example.com/blog/post'
-            || CAST(did AS VARCHAR) || '.html' AS url,
-          'http://' || source || '.example.com' AS origin,
-          'http://' || source || '.example.com/blog/' AS dir,
-          did FROM p),
-        r AS (
-          SELECT url, 1 AS link_pos, 'rss' AS kind,
-            origin || '/feed.xml' AS feed_url FROM u
-          UNION ALL
-          SELECT url, 3, 'atom',
-            dir || 'atom' || CAST(did AS VARCHAR) || '.xml' FROM u)
-        SELECT url, CAST(link_pos AS INTEGER) AS link_pos, kind, feed_url
-        FROM r ORDER BY url, link_pos""",
-    // q117: the same URL plant re-built in SQL; the SURT key re-derived
-    // with the identical regexes + list_reverse/list_sort in place of
-    // Spark's reverse/array_sort
-    "q117_surt" ->
-      """WITH p AS (SELECT CAST(doc_id AS BIGINT) AS did, source
-          FROM documents),
-        u AS (SELECT did AS doc_id,
-          CASE did % 8
-            WHEN 0 THEN 'https://WWW.News.' || source || '.COM:443'
-              || '/Path/Article' || CAST(did AS VARCHAR) || '?b=2&a=1'
-            WHEN 1 THEN 'http://example.com:80/'
-            WHEN 2 THEN 'http://sub.blog.' || source || '.org/p/'
-              || CAST(did AS VARCHAR)
-            WHEN 3 THEN 'not a url ' || CAST(did AS VARCHAR)
-            WHEN 4 THEN 'http://www2.' || source || '.net:8080/x?z=1#frag'
-            WHEN 5 THEN 'https://' || source || '.com./a'
-              || CAST(did AS VARCHAR)
-            WHEN 6 THEN 'HTTP://EXAMPLE.COM/MiXeD/CaSe?Q=V'
-            ELSE 'https://' || source || '.example.com/dup?utm_source=x&b=1'
-          END AS url FROM p),
-        nf AS (SELECT doc_id, url,
-          regexp_replace(url, '#.*$', '') AS nofrag FROM u),
-        f AS (SELECT doc_id, url, nofrag,
-          lower(regexp_extract(nofrag,
-            '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-          lower(regexp_extract(nofrag,
-            '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)) AS hostport,
-          lower(regexp_extract(nofrag,
-            '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1)) AS path0,
-          lower(regexp_extract(nofrag, '\?(.*)$', 1)) AS query0 FROM nf),
-        h AS (SELECT doc_id, url, scheme, path0, query0,
-          regexp_replace(regexp_replace(
-            CASE scheme
-              WHEN 'http' THEN regexp_replace(hostport, ':80$', '')
-              WHEN 'https' THEN regexp_replace(hostport, ':443$', '')
-              ELSE hostport END,
-            '\.$', ''), '^www[0-9]*\.', '') AS host FROM f),
-        k AS (SELECT doc_id, url, scheme,
-          array_to_string(list_reverse(string_split(host, '.')), ',')
-            AS revhost,
-          CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path,
-          coalesce(array_to_string(list_sort(list_filter(
-            string_split(query0, '&'), q -> q != '')), '&'), '') AS canonq
-          FROM h)
-        SELECT doc_id, url,
-          CASE WHEN scheme = '' THEN url
-            ELSE revhost || ')' || path ||
-              CASE WHEN canonq = '' THEN '' ELSE '?' || canonq END
-          END AS surt_key
-        FROM k ORDER BY doc_id""",
-    // q119: expected directive rows re-derived from the plant (k=0
-    // in-group, k=1 both in order, k=2 foreign group still applies,
-    // k=3 comment + relative both dropped, k=4 case/padding, k=5 none)
-    "q119_sitemap_directive" ->
-      """WITH h AS (SELECT DISTINCT source || '-'
-          || CAST(CAST(doc_id AS BIGINT) % 6 AS VARCHAR)
-          || '.example.com' AS host,
-          CAST(doc_id AS BIGINT) % 6 AS k FROM documents),
-        r AS (
-          SELECT host, 0 AS map_pos,
-            'https://' || host || '/s.xml' AS sitemap_url
-          FROM h WHERE k = 0
-          UNION ALL SELECT host, 0, 'https://' || host || '/a.xml'
-          FROM h WHERE k = 1
-          UNION ALL SELECT host, 1, 'https://' || host || '/b.xml'
-          FROM h WHERE k = 1
-          UNION ALL SELECT host, 0, 'http://' || host || '/g.xml'
-          FROM h WHERE k = 2
-          UNION ALL SELECT host, 0, 'https://' || host || '/S2.XML'
-          FROM h WHERE k = 4)
-        SELECT host, CAST(map_pos AS INTEGER) AS map_pos, sitemap_url
-        FROM r ORDER BY host, map_pos""",
-    // q120: DuckDB has no punycode decoder, so the oracle pins the
-    // expected Unicode forms as literals (the decode pairs are the
-    // canonical RFC 3492 examples, independently checked in
-    // FunctionsSpec against the JDK); mixed_script = exactly the
-    // Cyrillic-а homograph variant
-    "q120_idn" ->
-      ("""WITH p AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-          CAST(doc_id AS BIGINT) % 5 AS k FROM documents)
-        SELECT doc_id,
-          source || '.' || CASE k
-            WHEN 0 THEN 'www.xn--mnchen-3ya.example.com'
-            WHEN 1 THEN 'xn--fiqs8s.cn'
-            WHEN 2 THEN 'plain.example.com'
-            WHEN 3 THEN 'xn--pple-43d.com'
-            ELSE 'xn--bcher-kva.org' END AS host,
-          source || '.' || CASE k
-            WHEN 0 THEN 'www.m""" + "ü" + """nchen.example.com'
-            WHEN 1 THEN '""" + "中国" + """.cn'
-            WHEN 2 THEN 'plain.example.com'
-            WHEN 3 THEN '""" + "а" + """pple.com'
-            ELSE 'b""" + "ü" + """cher.org' END AS host_unicode,
-          k = 3 AS mixed_script
-        FROM p ORDER BY doc_id"""),
-    // q121: the oracle re-derives overlap-inclusive multi-pattern
-    // occurrence counts by brute force — a lateral position sweep per
-    // (doc, term) with substr equality (exactly the position-set
-    // semantics the one-pass automaton computes); fine at oracle scale
-    // (500 docs x ~300 chars x 12 terms), which is the POINT: this is
-    // the O(len x terms) plan the kernel replaces
-    "q121_term_gate" -> {
-      val termVals = Q121Terms.map(tm => s"('${sqlLit(tm)}')").mkString(", ")
-      s"""WITH t AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-          lower(text) AS tx FROM documents),
-        terms AS (SELECT term FROM (VALUES $termVals) v(term)),
-        pos AS (SELECT unnest(range(1,
-            (SELECT max(length(tx)) + 1 FROM t))) AS i),
-        m AS (SELECT t.doc_id, te.term FROM t, terms te, pos
-          WHERE pos.i <= length(t.tx) - length(te.term) + 1
-            AND substr(t.tx, CAST(pos.i AS INTEGER), length(te.term))
-              = te.term),
-        g AS (SELECT doc_id, count(*) AS tm,
-            count(DISTINCT term) AS nt FROM m GROUP BY doc_id)
-        SELECT t.doc_id,
-          CAST(coalesce(g.tm, 0) AS BIGINT) AS term_matches,
-          CAST(coalesce(g.nt, 0) AS BIGINT) AS n_terms_hit,
-          coalesce(g.nt, 0) >= 4 AS term_flagged
-        FROM t LEFT JOIN g ON g.doc_id = t.doc_id
-        ORDER BY t.doc_id"""
-    },
-    // q122: the oracle re-derives the KMV sketch and every estimator
-    // in SQL — same md5-prefix hashes, same bottom-64, same integer
-    // floor-division arithmetic (// in DuckDB, div in Spark)
-    "q122_kmv_overlap" ->
-      """WITH v AS (SELECT DISTINCT CAST(doc_id AS BIGINT) % 350 AS v
-          FROM documents),
-        a AS (SELECT DISTINCT 'e' || CAST(v AS VARCHAR) AS key FROM v),
-        b AS (SELECT DISTINCT 'e' || CAST(v + 100 AS VARCHAR) AS key
-          FROM v),
-        sa AS (SELECT CAST(('0x' || substr(md5(key), 1, 8)) AS BIGINT)
-          AS h FROM a ORDER BY h LIMIT 64),
-        sb AS (SELECT CAST(('0x' || substr(md5(key), 1, 8)) AS BIGINT)
-          AS h FROM b ORDER BY h LIMIT 64),
-        mg AS (SELECT coalesce(sa.h, sb.h) AS h,
-            CASE WHEN sa.h IS NOT NULL THEN 1 ELSE 0 END AS ia,
-            CASE WHEN sb.h IS NOT NULL THEN 1 ELSE 0 END AS ib
-          FROM sa FULL JOIN sb ON sa.h = sb.h),
-        mk AS (SELECT * FROM mg ORDER BY h LIMIT 64),
-        ag AS (SELECT count(*) AS nus, max(h) AS vk,
-            sum(CASE WHEN ia = 1 AND ib = 1 THEN 1 ELSE 0 END) AS sik
-          FROM mk),
-        ue AS (SELECT nus, vk, sik,
-            CASE WHEN nus < 64 THEN nus
-              ELSE (63 * 4294967296) // vk END AS uest,
-            CASE WHEN nus < 64 THEN nus ELSE 64 END AS denom FROM ag),
-        ex AS (SELECT count(*) AS exact_union,
-            sum(CASE WHEN a2.key IS NOT NULL AND b2.key IS NOT NULL
-              THEN 1 ELSE 0 END) AS exact_inter
-          FROM a a2 FULL JOIN b b2 ON a2.key = b2.key)
-        SELECT CAST(nus AS BIGINT) AS n_union_sketch,
-          CAST(vk AS BIGINT) AS vk,
-          CAST(sik AS BIGINT) AS shared_in_k,
-          CAST(uest AS BIGINT) AS union_est,
-          CAST((sik * 1000000) // denom AS BIGINT) AS jaccard_ppm,
-          CAST((sik * uest) // denom AS BIGINT) AS inter_est,
-          CAST(exact_union AS BIGINT) AS exact_union,
-          CAST(exact_inter AS BIGINT) AS exact_inter
-        FROM ue, ex""",
-    // q123: bigrams via zipped unnest + position self-join (fine at
-    // oracle scale; the Spark side builds them with per-row array
-    // arithmetic); lift in HUGEINT floor division = Spark's
-    // decimal(38) div, exactly
-    "q123_collocations" ->
-      s"""WITH t AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-          $toksSql AS tk FROM documents),
-        p AS (SELECT doc_id, unnest(tk) AS w,
-          unnest(range(1, len(tk) + 1)) AS pos FROM t),
-        uni AS (SELECT w, count(*) AS c_w FROM p GROUP BY w),
-        nt AS (SELECT CAST(sum(c_w) AS BIGINT) AS n_tok FROM uni),
-        b0 AS (SELECT a.w AS w1, b.w AS w2 FROM p a JOIN p b
-          ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
-        bi AS (SELECT w1, w2, count(*) AS c_xy FROM b0
-          GROUP BY w1, w2 HAVING count(*) >= 5),
-        sc AS (SELECT bi.w1, bi.w2, bi.c_xy, ux.c_w AS c_x,
-            uy.c_w AS c_y,
-            CAST((CAST(bi.c_xy AS HUGEINT) * nt.n_tok * 1000000)
-              // (CAST(ux.c_w AS HUGEINT) * uy.c_w) AS BIGINT)
-              AS lift_ppm
-          FROM bi JOIN uni ux ON ux.w = bi.w1
-          JOIN uni uy ON uy.w = bi.w2, nt),
-        r AS (SELECT *, row_number()
-          OVER (ORDER BY lift_ppm DESC, w1, w2) AS rank FROM sc)
-        SELECT CAST(rank AS BIGINT) AS rank, w1, w2,
-          CAST(c_xy AS BIGINT) AS c_xy, CAST(c_x AS BIGINT) AS c_x,
-          CAST(c_y AS BIGINT) AS c_y, lift_ppm
-        FROM r WHERE rank <= 50 ORDER BY rank""",
-    // q124: same plant, same histogram-then-cumulative sweep, HUGEINT
-    // floor division for the ppm ratios; best = max f1, tie to the
-    // highest threshold
-    "q124_f1_threshold" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS did FROM documents),
-        s AS (SELECT (did * 7919) % 1000 * 1000 AS score,
-          CASE WHEN (did * 7919) % 1000 * 1000
-            + (CAST(('0x' || substr(md5(CAST(did AS VARCHAR) || ':lab'),
-                1, 8)) AS BIGINT) % 400000) >= 900000
-            THEN 1 ELSE 0 END AS lab FROM d),
-        h AS (SELECT score, sum(lab) AS p_s, sum(1 - lab) AS m_s
-          FROM s GROUP BY score),
-        c AS (SELECT score,
-            sum(p_s) OVER (ORDER BY score DESC) AS tp,
-            sum(m_s) OVER (ORDER BY score DESC) AS fp FROM h),
-        t AS (SELECT sum(lab) AS ptot FROM s),
-        f AS (SELECT score AS threshold, tp, fp, t.ptot - tp AS fn,
-            (CAST(tp AS HUGEINT) * 1000000) // (tp + fp)
-              AS precision_ppm,
-            (CAST(tp AS HUGEINT) * 1000000) // t.ptot AS recall_ppm,
-            (2 * CAST(tp AS HUGEINT) * 1000000) // (tp + fp + t.ptot)
-              AS f1_ppm
-          FROM c, t)
-        SELECT CAST(threshold AS BIGINT) AS threshold,
-          CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-          CAST(fn AS BIGINT) AS fn,
-          CAST(precision_ppm AS BIGINT) AS precision_ppm,
-          CAST(recall_ppm AS BIGINT) AS recall_ppm,
-          CAST(f1_ppm AS BIGINT) AS f1_ppm,
-          row_number() OVER (ORDER BY f1_ppm DESC, threshold DESC) = 1
-            AS is_best
-        FROM f ORDER BY threshold""",
-    // q125: same hash, same single IEEE double division — the oracle
-    // pins that the float priority order is engine-identical
-    "q125_weighted_sample" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-          CAST(coalesce(n_chars, 0) AS BIGINT) AS w FROM documents),
-        p AS (SELECT doc_id, w,
-            (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)
-              || ':wps'), 1, 8)) AS BIGINT) + 1.0) / w AS pri
-          FROM d WHERE w > 0),
-        r AS (SELECT doc_id, w, CAST(row_number()
-            OVER (ORDER BY pri, doc_id) AS BIGINT) AS sample_rank
-          FROM p)
-        SELECT doc_id, w, sample_rank FROM r
-        WHERE sample_rank <= 50 ORDER BY sample_rank""",
-    // q126: DuckDB has no robots parser — the oracle re-derives every
-    // planted decision shape as literals (same protocol as q119/q120;
-    // the matching semantics themselves are pinned by RobotsSpec
-    // against hand-worked RFC examples)
-    "q126_robots_wildcards" ->
-      """WITH p AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-          CAST(doc_id AS BIGINT) % 6 AS k FROM documents)
-        SELECT doc_id,
-          'http://' || source || '.example.com' || CASE k
-            WHEN 0 THEN '/fish/deep/x' WHEN 1 THEN '/fish/ok'
-            WHEN 2 THEN '/site/index.php' WHEN 3 THEN '/pq'
-            WHEN 4 THEN '/a$b/z' ELSE '/zzz' END AS url,
-          CASE k WHEN 0 THEN '/fish*' WHEN 1 THEN '/fish/ok$'
-            WHEN 2 THEN '/*.php$' WHEN 3 THEN '/p*'
-            WHEN 4 THEN '/a$b' ELSE '' END AS matched_prefix,
-          k IN (1, 5) AS allowed
-        FROM p ORDER BY doc_id""",
-    // q127: the oracle pins each planted shape's redaction as
-    // literals (q120/q126 protocol; the Luhn math and the general
-    // multi-candidate fold are pinned by OpsSpec against a scalar
-    // reference — the four planted numbers are the published test
-    // vectors, checksum-verified out of band)
-    "q127_cc_redact" ->
-      """WITH p AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-          CAST(doc_id AS BIGINT) % 6 AS k FROM documents)
-        SELECT doc_id,
-          CASE k WHEN 0 THEN 'call 4539 1488 0343 6467 now'
-            WHEN 1 THEN 'call 4539 1488 0343 6468 now'
-            WHEN 2 THEN 'amex 378282246310005 ok'
-            WHEN 3 THEN 'disc 6011-1111-1111-1117 end'
-            WHEN 4 THEN 'short 601111111111 end'
-            ELSE 'run 123456789012345678901234 x' END AS text,
-          CASE k WHEN 0 THEN 'call <CC> now'
-            WHEN 1 THEN 'call 4539 1488 0343 6468 now'
-            WHEN 2 THEN 'amex <CC> ok'
-            WHEN 3 THEN 'disc <CC> end'
-            WHEN 4 THEN 'short 601111111111 end'
-            ELSE 'run 123456789012345678901234 x' END AS cc_redacted,
-          CAST(CASE WHEN k IN (0, 2, 3) THEN 1 ELSE 0 END AS BIGINT)
-            AS n_cc
-        FROM p ORDER BY doc_id""",
-    // q128: the oracle re-derives the SAME sign matrix (jlSigns is
-    // pure Scala — the literals below are its output) and both
-    // cosines with in-order double folds, rounded like every other
-    // cosine oracle
-    "q128_jl_project" -> {
-      val signs = graft.ops.SimSearch.jlSigns(16, 64)
-      def dotLit(e: String, row: Seq[Double]): String =
-        s"""list_sum(list_transform(generate_series(1, ${row.length}),
-           i -> $e[i] * (${row.mkString("[", ",", "]")})[i]))"""
-      val projExprs = signs.map(rw => dotLit("e", rw)).mkString(",\n ")
-      s"""WITH v AS (SELECT CAST(vec_id AS BIGINT) AS vid,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings),
-        pr AS (SELECT vid, e, [$projExprs] AS pe FROM v),
-        pairs AS (SELECT a.vid AS pair_id, a.e AS ea, b.e AS eb,
-            a.pe AS pa, b.pe AS pb
-          FROM pr a JOIN pr b ON b.vid = a.vid + 250
-          WHERE a.vid < 50)
-        SELECT pair_id,
-          round(${cosSql("ea", "eb")}, 6) AS cos_orig,
-          round(${cosSql("pa", "pb")}, 6) AS cos_proj
-        FROM pairs ORDER BY pair_id"""
-    },
-    // q129: char entropy replays the identical binary-sorted-alphabet
-    // summation order (replace-count per distinct char); token entropy
-    // counts by the same md5-prefix token hash, terms summed in hash
-    // order = the Spark side's sorted run-length fold; `+ 0.0`
-    // canonicalizes -0.0 on degenerate single-symbol docs
-    "q129_entropy" ->
-      s"""WITH t AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, text
-          FROM documents),
-        ch AS (SELECT doc_id, text, length(text) AS n,
-          list_sort(list_distinct(list_transform(
-            generate_series(1, greatest(length(text), 1)),
-            i -> substr(text, i, 1)))) AS ds FROM t),
-        ce AS (SELECT doc_id, CASE WHEN n IS NULL OR n <= 0 THEN 0.0
-          ELSE round(-list_sum(list_transform(ds, c ->
-            ((n - length(replace(text, c, ''))) / CAST(n AS DOUBLE)) *
-            log2((n - length(replace(text, c, ''))) /
-              CAST(n AS DOUBLE)))), 6) + 0.0 END AS char_entropy
-          FROM ch),
-        tok AS (SELECT doc_id,
-            CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT) AS th
-          FROM (SELECT doc_id, unnest($toksSql) AS tk FROM t)),
-        cnts AS (SELECT doc_id, th, COUNT(*) AS c
-          FROM tok GROUP BY doc_id, th),
-        tots AS (SELECT doc_id, SUM(c) AS n FROM cnts GROUP BY doc_id),
-        te AS (SELECT c.doc_id,
-            round(-list_sum(list_transform(
-              list(CAST(c.c AS DOUBLE) / tots.n ORDER BY c.th),
-              p -> p * log2(p))), 6) + 0.0 AS token_entropy
-          FROM cnts c JOIN tots USING (doc_id) GROUP BY c.doc_id)
-        SELECT t.doc_id, ce.char_entropy,
-          COALESCE(te.token_entropy, 0.0) AS token_entropy
-        FROM t JOIN ce USING (doc_id) LEFT JOIN te USING (doc_id)
-        ORDER BY t.doc_id""",
-    // q130: identical contingency arithmetic — HUGEINT floor division
-    // staged exactly like the Spark side (one floor per cluster/class,
-    // C(n,2) = n(n-1)//2)
-    "q130_cluster_eval" ->
-      """WITH j AS (SELECT doc_id, lang AS c, source AS t
-          FROM documents),
-        cells AS (SELECT c, t, COUNT(*) AS n_ct FROM j GROUP BY c, t),
-        perc AS (SELECT c, SUM(n_ct) AS n_c,
-            SUM(n_ct * (n_ct - 1) // 2) AS tp_c,
-            SUM(n_ct * n_ct) AS sq_c FROM cells GROUP BY c),
-        pert AS (SELECT t, SUM(n_ct) AS n_t,
-            SUM(n_ct * n_ct) AS sq_t FROM cells GROUP BY t),
-        a AS (SELECT SUM(n_c) AS n_items, COUNT(*) AS n_clusters,
-            SUM(tp_c) AS pair_tp,
-            SUM(n_c * (n_c - 1) // 2) AS pred_pairs,
-            SUM(sq_c * 1000000 // n_c) AS bp_sum FROM perc),
-        b AS (SELECT COUNT(*) AS n_classes,
-            SUM(n_t * (n_t - 1) // 2) AS truth_pairs,
-            SUM(sq_t * 1000000 // n_t) AS br_sum FROM pert)
-        SELECT CAST(n_items AS BIGINT) AS n_items,
-          CAST(n_clusters AS BIGINT) AS n_clusters,
-          CAST(n_classes AS BIGINT) AS n_classes,
-          CAST(pair_tp AS BIGINT) AS pair_tp,
-          CAST(pred_pairs AS BIGINT) AS pred_pairs,
-          CAST(truth_pairs AS BIGINT) AS truth_pairs,
-          CAST(CASE WHEN pred_pairs > 0
-            THEN pair_tp * 1000000 // pred_pairs END AS BIGINT)
-            AS pair_precision_ppm,
-          CAST(CASE WHEN truth_pairs > 0
-            THEN pair_tp * 1000000 // truth_pairs END AS BIGINT)
-            AS pair_recall_ppm,
-          CAST(CASE WHEN pred_pairs + truth_pairs > 0
-            THEN pair_tp * 2000000 // (pred_pairs + truth_pairs)
-            END AS BIGINT) AS pair_f1_ppm,
-          CAST(CASE WHEN n_items > 0 THEN bp_sum // n_items
-            END AS BIGINT) AS bcubed_precision_ppm,
-          CAST(CASE WHEN n_items > 0 THEN br_sum // n_items
-            END AS BIGINT) AS bcubed_recall_ppm
-        FROM a, b""",
-    // q131: registers re-derived from the same 60-bit md5-prefix hash
-    // and bit-length rho; the indicator sum replays the exact-integer
-    // 2^(61-rho) staging in HUGEINT, then one double division with the
-    // identical Scala-printed alpha*m^2*2^61 constant; shingle support
-    // mirrors shinglesOf (clamped slice, '' filtered)
-    "q131_hll" -> {
-      val m = 256
-      val alpha = 0.7213 / (1.0 + 1.079 / m)
-      val c = alpha * m * m * 2305843009213693952.0d
-      s"""WITH t AS (SELECT $toksSql AS tk FROM documents),
-        keys AS (SELECT unnest(list_transform(
-            generate_series(1, greatest(len(tk) - 2, 1)),
-            i -> array_to_string(tk[i:i+2], ' '))) AS key FROM t),
-        k AS (SELECT key FROM keys WHERE length(key) > 0),
-        h AS (SELECT CAST(('0x' || substr(md5(key), 1, 15)) AS BIGINT)
-          AS hv FROM k),
-        r AS (SELECT hv // 4503599627370496 AS reg,
-          hv % 4503599627370496 AS w FROM h),
-        rr AS (SELECT reg, MAX(CASE WHEN w = 0 THEN 53
-          ELSE 52 - (length(bin(w)) - 1) END) AS rho_max
-          FROM r GROUP BY reg),
-        agg AS (SELECT COUNT(*) AS n_nonzero,
-          SUM(2305843009213693952 >> rho_max) AS s_nz FROM rr),
-        z AS (SELECT n_nonzero, CAST(s_nz +
-          CAST($m - n_nonzero AS HUGEINT) *
-          CAST(2305843009213693952 AS HUGEINT) AS DOUBLE) AS z61
-          FROM agg),
-        e AS (SELECT CAST($m AS BIGINT) AS m,
-          CAST(n_nonzero AS BIGINT) AS n_nonzero,
-          round(CASE WHEN ($c / z61) <= ${2.5 * m} AND
-              ($m - n_nonzero) > 0
-            THEN $m.0 * ln($m.0 / CAST($m - n_nonzero AS DOUBLE))
-            ELSE $c / z61 END, 6) AS est FROM z),
-        x AS (SELECT COUNT(DISTINCT key) AS exact_distinct FROM k)
-        SELECT m, n_nonzero, est,
-          CAST(exact_distinct AS BIGINT) AS exact_distinct,
-          CAST(floor(abs(est - exact_distinct) * 1000000.0 /
-            exact_distinct) AS BIGINT) AS err_ppm
-        FROM e, x"""
-    },
-    // q132: the oracle replays the quantized-ratio sort, the HUGEINT
-    // cross-multiplication prefix test, and the same floor divisions
-    "q132_mix_waterfill" ->
-      s"""WITH sup AS (SELECT lang AS stratum,
-          CAST(SUM(len($toksSql)) AS BIGINT) AS supply
-          FROM documents GROUP BY lang),
-        w AS (SELECT stratum, supply,
-          CASE stratum WHEN 'en' THEN 250000 WHEN 'de' THEN 350000
-            WHEN 'fr' THEN 200000 WHEN 'zh' THEN 200000
-            ELSE 0 END AS weight_ppm FROM sup),
-        k AS (SELECT *, CASE WHEN weight_ppm > 0
-          THEN CAST(supply AS HUGEINT) * 1000000000000 // weight_ppm
-          ELSE CAST('1000000000000000000000000000000' AS HUGEINT)
-          END AS r FROM w),
-        st AS (SELECT *, COALESCE(SUM(supply) OVER (ORDER BY r, stratum
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            AS sb,
-          SUM(weight_ppm) OVER (ORDER BY r, stratum
-            ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS wf
-          FROM k),
-        t2 AS (SELECT *, CASE WHEN weight_ppm > 0 AND
-          CAST(supply AS HUGEINT) * wf <=
-          CAST(weight_ppm AS HUGEINT) * (15000 - sb)
-          THEN 1 ELSE 0 END AS t FROM st),
-        c AS (SELECT *, MIN(t) OVER (ORDER BY r, stratum
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
-          AS capped FROM t2),
-        g AS (SELECT *,
-          COALESCE(SUM(CASE WHEN capped THEN supply END) OVER (), 0)
-            AS scap,
-          COALESCE(SUM(CASE WHEN NOT capped THEN weight_ppm END)
-            OVER (), 0) AS wunc,
-          SUM(supply) OVER () AS stot FROM c),
-        a AS (SELECT stratum, supply,
-          CAST(weight_ppm AS BIGINT) AS weight_ppm,
-          CAST(CASE WHEN stot <= 15000 THEN supply
-            WHEN capped THEN supply
-            WHEN wunc > 0 THEN CAST(weight_ppm AS HUGEINT) *
-              greatest(0, 15000 - scap) // wunc
-            ELSE 0 END AS BIGINT) AS alloc FROM g)
-        SELECT stratum, supply, weight_ppm, alloc,
-          CAST(CASE WHEN supply > 0
-            THEN CAST(alloc AS HUGEINT) * 1000000 // supply
-            ELSE 0 END AS BIGINT) AS rate_ppm,
-          alloc = supply AS capped
-        FROM a ORDER BY stratum""",
-    // q133: full relational re-derivation — same md5-prefix hash, same
-    // Fibonacci probe pair, 32-bit words via bit_or, same two-probe
-    // lookup joins
-    "q133_bloom_index" ->
-      """WITH docs AS (SELECT doc_id, 'doc:' || doc_id AS key,
-          doc_id % 8 AS shard FROM documents),
-        hx AS (SELECT shard,
-          CAST(('0x' || substr(md5(key), 1, 8)) AS BIGINT) AS h
-          FROM docs),
-        pos AS (SELECT shard,
-          unnest([h & 4095, ((h * 40503) >> 13) & 4095]) AS p FROM hx),
-        idx AS (SELECT shard, p >> 5 AS word_idx,
-          bit_or(CAST(1 AS BIGINT) << CAST(p & 31 AS INT)) AS word
-          FROM pos GROUP BY shard, p >> 5),
-        pr0 AS (SELECT 'doc:' || doc_id AS key,
-            CAST(doc_id % 8 AS BIGINT) AS true_shard
-          FROM documents WHERE doc_id < 20
-          UNION ALL SELECT 'missing:' || doc_id, NULL
-          FROM documents WHERE doc_id < 20),
-        ph AS (SELECT key, true_shard,
-          CAST(('0x' || substr(md5(key), 1, 8)) AS BIGINT) AS h
-          FROM pr0),
-        pw AS (SELECT key, true_shard,
-          (h & 4095) >> 5 AS w1,
-          CAST(1 AS BIGINT) << CAST(h & 31 AS INT) AS b1,
-          (((h * 40503) >> 13) & 4095) >> 5 AS w2,
-          CAST(1 AS BIGINT) <<
-            CAST(((h * 40503) >> 13) & 31 AS INT) AS b2
-          FROM ph),
-        c1 AS (SELECT pw.key, pw.true_shard, i.shard, pw.w2, pw.b2
-          FROM pw JOIN idx i
-          ON i.word_idx = pw.w1 AND (i.word & pw.b1) != 0),
-        c2 AS (SELECT c1.key, c1.true_shard, c1.shard
-          FROM c1 JOIN idx i ON i.shard = c1.shard
-          AND i.word_idx = c1.w2 AND (i.word & c1.b2) != 0)
-        SELECT p.key, CAST(COUNT(c.shard) AS BIGINT) AS n_cand,
-          CAST(COALESCE(MAX(CASE WHEN c.shard = p.true_shard
-            THEN 1 ELSE 0 END), 0) AS BIGINT) AS hit
-        FROM pr0 p LEFT JOIN c2 c ON c.key = p.key
-        GROUP BY p.key, p.true_shard ORDER BY p.key""",
-    // q135: the oracle folds with the IDENTICAL translate map (the
-    // Scala constants interpolate into the SQL) and replays the
-    // trusted-list join + exact-spelling exemption
-    "q135_homoglyph" -> {
-      val from = graft.ops.Curation.ConfusableFrom
-      val to = graft.ops.Curation.ConfusableTo
-      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-          doc_id % 6 AS k FROM documents),
-        h AS (SELECT doc_id, CASE k
-          WHEN 0 THEN 'pаypal.com' WHEN 1 THEN 'gооgle.com'
-          WHEN 2 THEN 'amazοn.com' WHEN 3 THEN 'paypal.com'
-          WHEN 5 THEN 'аррӏе.com'
-          ELSE 'host' || doc_id || '.com' END AS host FROM d),
-        sk AS (SELECT doc_id, host,
-          translate(lower(host), '$from', '$to') AS skeleton FROM h),
-        tr AS (SELECT tr, translate(lower(tr), '$from', '$to') AS skel
-          FROM (VALUES ('paypal.com'), ('google.com'), ('amazon.com'),
-            ('apple.com')) t(tr)),
-        j AS (SELECT sk.doc_id, sk.host, sk.skeleton,
-          CASE WHEN tr.tr IS NOT NULL AND lower(sk.host) != tr.tr
-            THEN tr.tr END AS spoof_of
-          FROM sk LEFT JOIN tr ON sk.skeleton = tr.skel)
-        SELECT doc_id, host, skeleton, spoof_of,
-          spoof_of IS NOT NULL AS spoofed
-        FROM j ORDER BY doc_id"""
-    },
-    // q136: the oracle re-derives bounds, the clamped range codes, the
-    // Morton interleave (16 shift terms generated here — disjoint bits,
-    // so + is |), both shard layouts, the zone maps, and the box test
-    "q136_zone_maps" -> {
-      val interleave = (0 until 8).flatMap(b => Seq(
-        s"(((c1 >> $b) & 1) << ${2 * b + 1})",
-        s"(((c2 >> $b) & 1) << ${2 * b})")).mkString(" + ")
-      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-          CAST(n_chars AS BIGINT) AS n_chars FROM documents),
-        b AS (SELECT MAX(doc_id) AS mxd, MIN(doc_id) AS mnd,
-          MAX(n_chars) AS mxc, MIN(n_chars) AS mnc FROM d),
-        pr AS (SELECT (mxd + 1) // 5 AS lo_id,
-          2 * (mxd + 1) // 5 AS hi_id FROM b),
-        lin AS (SELECT doc_id, n_chars,
-          least(15, (doc_id * 16) // (mxd + 1)) AS shard FROM d, b),
-        zc AS (SELECT doc_id, n_chars,
-          least(255, greatest(0,
-            (doc_id - mnd) * 255 // greatest(1, mxd - mnd))) AS c1,
-          least(255, greatest(0,
-            (n_chars - mnc) * 255 // greatest(1, mxc - mnc))) AS c2
-          FROM d, b),
-        zs AS (SELECT doc_id, n_chars,
-          (($interleave) * 16) // 65536 AS shard FROM zc),
-        zl AS (SELECT 'linear' AS layout, shard,
-            MIN(doc_id) AS dmin, MAX(doc_id) AS dmax,
-            MIN(n_chars) AS cmin, MAX(n_chars) AS cmax
-          FROM lin GROUP BY shard
-          UNION ALL SELECT 'zorder', shard, MIN(doc_id), MAX(doc_id),
-            MIN(n_chars), MAX(n_chars) FROM zs GROUP BY shard),
-        touched AS (
-          SELECT layout, 'id_only' AS predicate,
-            CAST(COUNT(*) AS BIGINT) AS shards_touched
-          FROM zl, pr WHERE dmin <= hi_id AND dmax >= lo_id
-          GROUP BY layout
-          UNION ALL SELECT layout, 'chars_only', COUNT(*)
-          FROM zl WHERE cmin <= 250 AND cmax >= 150 GROUP BY layout
-          UNION ALL SELECT layout, 'box', COUNT(*)
-          FROM zl, pr WHERE dmin <= hi_id AND dmax >= lo_id
-            AND cmin <= 250 AND cmax >= 150
-          GROUP BY layout),
-        m AS (
-          SELECT 'id_only' AS predicate,
-            CAST(COUNT(*) AS BIGINT) AS rows_matched
-          FROM d, pr WHERE doc_id BETWEEN lo_id AND hi_id
-          UNION ALL SELECT 'chars_only', COUNT(*)
-          FROM d WHERE n_chars BETWEEN 150 AND 250
-          UNION ALL SELECT 'box', COUNT(*)
-          FROM d, pr WHERE doc_id BETWEEN lo_id AND hi_id
-            AND n_chars BETWEEN 150 AND 250)
-        SELECT layout, touched.predicate,
-          CAST(16 AS BIGINT) AS shards_total, shards_touched,
-          rows_matched
-        FROM touched JOIN m ON touched.predicate = m.predicate
-        ORDER BY layout, touched.predicate"""
-    },
-    // q137: argmax replayed as ROW_NUMBER over (h DESC, s DESC) — the
-    // same tie direction greatest(struct(h, s)) resolves to
-    "q137_rendezvous" ->
-      """WITH k AS (SELECT 'doc:' || doc_id AS key FROM documents),
-        e8 AS (SELECT key, g.s,
-          CAST(('0x' || substr(md5(key || ':rdv:' || g.s), 1, 8))
-            AS BIGINT) AS h
-          FROM k, generate_series(0, 7) g(s)),
-        s8 AS (SELECT key, s AS s8 FROM (SELECT key, s,
-          ROW_NUMBER() OVER (PARTITION BY key
-            ORDER BY h DESC, s DESC) AS rn FROM e8) WHERE rn = 1),
-        e9 AS (SELECT key, g.s,
-          CAST(('0x' || substr(md5(key || ':rdv:' || g.s), 1, 8))
-            AS BIGINT) AS h
-          FROM k, generate_series(0, 8) g(s)),
-        s9 AS (SELECT key, s AS s9 FROM (SELECT key, s,
-          ROW_NUMBER() OVER (PARTITION BY key
-            ORDER BY h DESC, s DESC) AS rn FROM e9) WHERE rn = 1),
-        j AS (SELECT s8.key, s8.s8, s9.s9 FROM s8 JOIN s9 USING (key)),
-        occ AS (SELECT CAST(MIN(c) AS BIGINT) AS min_shard8,
-          CAST(MAX(c) AS BIGINT) AS max_shard8
-          FROM (SELECT s8, COUNT(*) AS c FROM j GROUP BY s8)),
-        agg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
-          CAST(SUM(CASE WHEN s8 != s9 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_moved,
-          CAST(SUM(CASE WHEN s8 != s9 AND s9 = 8 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_moved_to_new FROM j)
-        SELECT n_keys, n_moved, n_moved_to_new,
-          CAST(n_moved * 1000000 // n_keys AS BIGINT) AS moved_ppm,
-          min_shard8, max_shard8
-        FROM agg, occ""",
-    // q138: positional index via indexed list expansion, the same
-    // start = pos − offset normalization and distinct-offset count
-    "q138_phrase" ->
-      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          $toksSql AS tk FROM documents),
-        post AS (SELECT id, u.p.pos AS pos, u.p.term AS term
-          FROM d, unnest(list_transform(generate_series(1, len(tk)),
-            i -> struct_pack(pos := i - 1, term := tk[i]))) u(p)),
-        pt(phrase_id, term, off, phrase_len) AS (VALUES
-          ('p1_value_table', 'value', 0, 2),
-          ('p1_value_table', 'table', 1, 2),
-          ('p2_fast_table', 'fast', 0, 2),
-          ('p2_fast_table', 'table', 1, 2),
-          ('p3_absent', 'slow', 0, 3),
-          ('p3_absent', 'query', 1, 3),
-          ('p3_absent', 'nevermatches', 2, 3),
-          ('p4_repeat', 'table', 0, 2),
-          ('p4_repeat', 'table', 1, 2)),
-        hits AS (SELECT phrase_id, id, pos - off AS start, off,
-            phrase_len
-          FROM post JOIN pt USING (term) WHERE pos - off >= 0),
-        occ AS (SELECT phrase_id, id, start
-          FROM hits GROUP BY phrase_id, id, start, phrase_len
-          HAVING COUNT(DISTINCT off) = phrase_len)
-        SELECT phrase_id, id AS doc_id,
-          CAST(COUNT(*) AS BIGINT) AS n_occurrences
-        FROM occ GROUP BY phrase_id, id
-        ORDER BY phrase_id, doc_id""",
-    // q139: same md5-prefix row hashes, same mod-w addressing, the
-    // min-over-rows with absent cells as 0
-    "q139_cms" ->
-      s"""WITH toks AS (SELECT unnest($toksSql) AS key FROM documents),
-        cells AS (SELECT g.r,
-            CAST(('0x' || substr(md5(key || ':cms:' || g.r), 1, 8))
-              AS BIGINT) % 256 AS c
-          FROM toks, generate_series(0, 3) g(r)),
-        cms AS (SELECT r, c, CAST(COUNT(*) AS BIGINT) AS cnt
-          FROM cells GROUP BY r, c),
-        probes AS (SELECT key, CAST(COUNT(*) AS BIGINT) AS exact
-            FROM toks GROUP BY key
-          UNION ALL SELECT 'zz' || doc_id, 0
-            FROM documents WHERE doc_id < 5),
-        pc AS (SELECT p.key, p.exact, g.r,
-            CAST(('0x' || substr(md5(p.key || ':cms:' || g.r), 1, 8))
-              AS BIGINT) % 256 AS c
-          FROM probes p, generate_series(0, 3) g(r)),
-        est AS (SELECT key, exact,
-            CAST(MIN(COALESCE(cms.cnt, 0)) AS BIGINT) AS est
-          FROM pc LEFT JOIN cms ON pc.r = cms.r AND pc.c = cms.c
-          GROUP BY key, exact)
-        SELECT key, est, exact, est - exact AS overestimate
-        FROM est ORDER BY key""",
-    // q140: co-occurrence edges in SQL + the SHARED PageRank round
-    // template (prRoundsSql) — same integral DIV per round
-    "q140_textrank" -> {
-      val rounds = prRoundsSql(3)
-      s"""WITH t AS (SELECT $toksSql AS tk FROM documents),
-        pr0 AS (SELECT tk[i] AS a, tk[i + 1] AS b
-          FROM (SELECT tk, unnest(generate_series(1, len(tk) - 1)) AS i
-            FROM t WHERE len(tk) >= 2)),
-        pu AS (SELECT a, b FROM pr0 WHERE a != b),
-        e AS (SELECT DISTINCT src, dst FROM (SELECT a AS src, b AS dst
-          FROM pu UNION ALL SELECT b, a FROM pu)),
-        nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        dg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-          FROM e GROUP BY src),
-        r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank_ppb
-          FROM nd)$rounds
-        SELECT node AS word, rank_ppb FROM r3
-        ORDER BY rank_ppb DESC, word LIMIT 20"""
-    },
-    // q141: the same planted two-generator graph and the distinct-
-    // edge, hub-cap, a<b self-join staging
-    "q141_cocitation" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id
-          FROM documents),
-        e AS (SELECT 's' || (doc_id % 40) AS src,
-            'p' || (doc_id % 97) AS dst FROM d
-          UNION ALL SELECT 's' || (doc_id % 40),
-            'p' || ((doc_id * 5 + 2) % 97) FROM d),
-        de AS (SELECT DISTINCT src AS s, dst AS dd FROM e),
-        dg AS (SELECT s, COUNT(*) AS od FROM de GROUP BY s),
-        kept AS (SELECT de.s, de.dd FROM de JOIN dg USING (s)
-          WHERE od <= 64)
-        SELECT l.dd AS a, r.dd AS b,
-          CAST(COUNT(*) AS BIGINT) AS cocitations
-        FROM kept l JOIN kept r ON l.s = r.s AND l.dd < r.dd
-        GROUP BY l.dd, r.dd HAVING COUNT(*) >= 3
-        ORDER BY a, b""",
-    // q142: q138's occurrence derivation + per-(phrase,doc) cap +
-    // the same clamped slice arithmetic
-    "q142_kwic" ->
-      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          $toksSql AS tk FROM documents),
-        post AS (SELECT id, u.p.pos AS pos, u.p.term AS term
-          FROM d, unnest(list_transform(generate_series(1, len(tk)),
-            i -> struct_pack(pos := i - 1, term := tk[i]))) u(p)),
-        pt(phrase_id, term, off, phrase_len) AS (VALUES
-          ('p1', 'value', 0, 2), ('p1', 'table', 1, 2),
-          ('p4', 'table', 0, 2), ('p4', 'table', 1, 2)),
-        occ AS (SELECT phrase_id, id, pos - off AS start, phrase_len
-          FROM post JOIN pt USING (term) WHERE pos - off >= 0
-          GROUP BY phrase_id, id, pos - off, phrase_len
-          HAVING COUNT(DISTINCT off) = phrase_len),
-        capped AS (SELECT * FROM (SELECT *, ROW_NUMBER() OVER
-            (PARTITION BY phrase_id, id ORDER BY start) AS rn
-          FROM occ) WHERE rn <= 2)
-        SELECT phrase_id, id AS doc_id, CAST(start AS BIGINT) AS start,
-          array_to_string(tk[greatest(start + 1 - 2, 1) :
-            least(start + phrase_len + 2, len(tk))], ' ') AS snippet
-        FROM capped JOIN d USING (id)
-        ORDER BY phrase_id, doc_id, start""",
-    // q143: same canonical edges, same (deg, node) orientation, the
-    // wedge join's head-rank ordering, and the closing-edge semi-join
-    "q143_triangles" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id
-          FROM documents),
-        raw AS (SELECT doc_id % 30 AS x, (doc_id * 7 + 1) % 30 AS y
-            FROM d
-          UNION ALL SELECT doc_id % 30, (doc_id * 13 + 5) % 30 FROM d
-          UNION ALL SELECT (doc_id * 7 + 1) % 30,
-            (doc_id * 13 + 5) % 30 FROM d),
-        und AS (SELECT DISTINCT least(x, y) AS u, greatest(x, y) AS v
-          FROM raw WHERE x != y),
-        deg AS (SELECT n, CAST(COUNT(*) AS BIGINT) AS dd
-          FROM (SELECT u AS n FROM und
-            UNION ALL SELECT v FROM und) GROUP BY n),
-        ore AS (SELECT
-            CASE WHEN du.dd <= dv.dd THEN und.u ELSE und.v END AS s,
-            CASE WHEN du.dd <= dv.dd THEN und.v ELSE und.u END AS t,
-            CASE WHEN du.dd <= dv.dd THEN dv.dd ELSE du.dd END AS dt
-          FROM und JOIN deg du ON du.n = und.u
-          JOIN deg dv ON dv.n = und.v),
-        wed AS (SELECT e1.t AS w1, e2.t AS w2
-          FROM ore e1 JOIN ore e2 ON e1.s = e2.s
-          AND (e1.dt < e2.dt OR (e1.dt = e2.dt AND e1.t < e2.t))),
-        tri AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-          FROM wed WHERE EXISTS (SELECT 1 FROM ore
-            WHERE ore.s = wed.w1 AND ore.t = wed.w2)),
-        base AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes,
-          CAST(SUM(dd * (dd - 1)) // 2 AS BIGINT) AS n_wedges
-          FROM deg),
-        ne AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM und)
-        SELECT n_nodes, n_edges, n_wedges, n_triangles,
-          CAST(CASE WHEN n_wedges > 0
-            THEN (n_triangles * 3000000) // n_wedges
-            ELSE 0 END AS BIGINT) AS global_cc_ppm
-        FROM base, ne, tri""",
-    // q144: the peel unrolled 6 rounds (the instance converges in 3;
-    // extra rounds are no-ops at the fixpoint, so the unroll depth
-    // only needs to be AT LEAST the peeling depth)
-    "q144_kcore" -> {
-      // MATERIALIZED is load-bearing: each round references the
-      // previous edge set four times (degree union + two IN probes),
-      // and CTE inlining would re-expand the whole upstream tree
-      // 4^rounds times — thousands of concurrent base-table scans
-      val rounds = (1 to 6).map { i =>
-        s""",
-        kp$i AS MATERIALIZED (SELECT n FROM
-            (SELECT n, COUNT(*) AS dd FROM
-            (SELECT u AS n FROM e${i - 1} UNION ALL
-             SELECT v FROM e${i - 1}) GROUP BY n) WHERE dd >= 5),
-        e$i AS MATERIALIZED (SELECT u, v FROM e${i - 1}
-          WHERE u IN (SELECT n FROM kp$i)
-            AND v IN (SELECT n FROM kp$i))"""
-      }.mkString
-      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id
-          FROM documents),
-        raw AS (SELECT doc_id % 30 AS x, (doc_id * 7 + 1) % 30 AS y
-            FROM d
-          UNION ALL SELECT doc_id % 30, (doc_id * 13 + 5) % 30 FROM d
-          UNION ALL SELECT (doc_id * 7 + 1) % 30,
-            (doc_id * 13 + 5) % 30 FROM d
-          UNION ALL SELECT doc_id % 30, 30 + (doc_id % 100) FROM d
-          UNION ALL SELECT 30 + (doc_id % 100),
-            130 + (doc_id % 200) FROM d),
-        e0 AS MATERIALIZED (SELECT DISTINCT least(x, y) AS u,
-          greatest(x, y) AS v FROM raw WHERE x != y)$rounds
-        SELECT u, v FROM e6 ORDER BY u, v"""
-    },
-    // q145: sketch rounds unrolled (MATERIALIZED — q144's inlining
-    // lesson), same 60-bit hash / p=5 register split, same per-node
-    // estimate arithmetic with the Scala-printed constant, integer
-    // micro-sums so the cross-node mean is order-free
-    "q145_hyperanf" ->
-      s"""WITH $hyperAnfCtesSql
-        SELECT CAST(round AS BIGINT) AS round,
-          CAST(COUNT(*) AS BIGINT) AS n_nodes,
-          CAST(SUM(CAST(round(est * 1000000, 0) AS BIGINT)) AS BIGINT)
-            AS sum_est_micro,
-          CAST(SUM(CAST(round(est * 1000000, 0) AS BIGINT)) //
-            COUNT(*) AS BIGINT) AS mean_est_micro
-        FROM allr GROUP BY round ORDER BY round""",
-    // q161: same chain; per-round reach totals, 90% threshold of the
-    // final total, first crossing + linear interpolation in milli
-    "q161_eff_diameter" ->
-      s"""WITH $hyperAnfCtesSql,
-        per AS (SELECT CAST(round AS BIGINT) AS r,
-            CAST(SUM(CAST(round(est * 1000000, 0) AS BIGINT))
-              AS BIGINT) AS reach
-          FROM allr GROUP BY round),
-        tot AS (SELECT MAX(reach) AS total_micro FROM per),
-        st AS (SELECT r, reach, lag(reach) OVER (ORDER BY r) AS prev,
-            total_micro, (900000 * total_micro) // 1000000 AS thr
-          FROM per, tot)
-        SELECT CAST(CASE WHEN prev IS NULL THEN 0
-            ELSE (r - 1) * 1000 + ((thr - prev) * 1000)
-              // (reach - prev) END AS BIGINT) AS eff_diameter_milli,
-          r AS crossing_round, CAST(thr AS BIGINT) AS thr_micro,
-          total_micro
-        FROM st WHERE reach >= thr AND (prev IS NULL OR prev < thr)
-        ORDER BY r LIMIT 1""",
-    // q146: q131's oracle grouped by source — same hash/register
-    // split, same exact-integer staging per group, same constant
-    "q146_hll_by_source" -> {
-      val m = 256
-      val alpha = 0.7213 / (1.0 + 1.079 / m)
-      val c = alpha * m * m * 2305843009213693952.0d
-      s"""WITH t AS (SELECT source, $toksSql AS tk FROM documents),
-        keys AS (SELECT source, unnest(list_transform(
-            generate_series(1, greatest(len(tk) - 2, 1)),
-            i -> array_to_string(tk[i:i+2], ' '))) AS key FROM t),
-        k AS (SELECT source, key FROM keys WHERE length(key) > 0),
-        h AS (SELECT source,
-          CAST(('0x' || substr(md5(key), 1, 15)) AS BIGINT) AS hv,
-          key FROM k),
-        r AS (SELECT source, hv // 4503599627370496 AS reg,
-          hv % 4503599627370496 AS w FROM h),
-        rr AS (SELECT source, reg, MAX(CASE WHEN w = 0 THEN 53
-          ELSE 52 - (length(bin(w)) - 1) END) AS rho_max
-          FROM r GROUP BY source, reg),
-        agg AS (SELECT source, COUNT(*) AS n_nonzero,
-          SUM(2305843009213693952 >> rho_max) AS s_nz
-          FROM rr GROUP BY source),
-        z AS (SELECT source, n_nonzero, CAST(s_nz +
-          CAST($m - n_nonzero AS HUGEINT) *
-          CAST(2305843009213693952 AS HUGEINT) AS DOUBLE) AS z61
-          FROM agg),
-        e AS (SELECT source, CAST(n_nonzero AS BIGINT) AS n_nonzero,
-          round(CASE WHEN ($c / z61) <= ${2.5 * m} AND
-              ($m - n_nonzero) > 0
-            THEN $m.0 * ln($m.0 / CAST($m - n_nonzero AS DOUBLE))
-            ELSE $c / z61 END, 6) AS est FROM z),
-        x AS (SELECT source, COUNT(DISTINCT key) AS exact_distinct
-          FROM k GROUP BY source)
-        SELECT e.source, n_nonzero, est,
-          CAST(exact_distinct AS BIGINT) AS exact_distinct,
-          CAST(floor(abs(est - exact_distinct) * 1000000.0 /
-            exact_distinct) AS BIGINT) AS err_ppm
-        FROM e JOIN x ON e.source = x.source ORDER BY e.source"""
-    },
-    // q147: the weighted round template — HUGEINT rank×w products,
-    // weight-sum denominators, same teleport constants
-    "q147_pagerank_weighted" -> {
-      val rounds = (1 to 3).map { i =>
-        s""", c$i AS (SELECT e.dst AS node,
-            SUM((CAST(r.rank_ppb AS HUGEINT) * e.w) // d.outw) AS s
-          FROM e JOIN dg d ON d.src = e.src
-          JOIN r${i - 1} r ON r.node = e.src
-          GROUP BY e.dst),
-        r$i AS (SELECT nd.node, CAST(150000000 +
-            (850000 * COALESCE(c.s, 0)) // 1000000 AS BIGINT)
-            AS rank_ppb
-          FROM nd LEFT JOIN c$i c ON c.node = nd.node)"""
-      }.mkString
-      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id
-          FROM documents),
-        raw AS (SELECT 's' || (doc_id % 40) AS src,
-            'p' || (doc_id % 97) AS dst FROM d
-          UNION ALL SELECT 's' || (doc_id % 40),
-            'p' || ((doc_id * 5 + 2) % 97) FROM d),
-        e AS (SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS w
-          FROM raw GROUP BY src, dst),
-        nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        dg AS (SELECT src, CAST(SUM(w) AS BIGINT) AS outw
-          FROM e GROUP BY src),
-        r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank_ppb
-          FROM nd)$rounds
-        SELECT node, rank_ppb FROM r3 ORDER BY node"""
-    },
-    // q148: same snippet picks, same RE2 sentence split, the SHARED
-    // langIdSqlParts case expression per sentence, and ROW_NUMBER
-    // (c DESC, lang) = the Spark min-of-(-c, lang) majority tie rule
-    "q148_code_switch" -> {
-      val (scCols, caseExpr) = langIdSqlParts
-      s"""WITH d AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          ${pickSql(ScriptSnippets, 0)} || '. ' ||
-          ${pickSql(ScriptSnippets, 1)} || '. ' ||
-          ${pickSql(ScriptSnippets, 2)} AS t FROM documents),
-        sents AS (SELECT id, unnest(list_filter(list_transform(
-            regexp_split_to_array(t, '[.!?]\\s+'), x -> trim(x)),
-            x -> x != '')) AS text FROM d),
-        sl AS (SELECT id, $caseExpr AS slang
-          FROM (SELECT id, text, $scCols FROM sents)),
-        pl AS (SELECT id, slang, COUNT(*) AS c
-          FROM sl GROUP BY id, slang),
-        agg AS (SELECT id, CAST(SUM(c) AS BIGINT) AS n_sents,
-          CAST(COUNT(*) AS BIGINT) AS n_langs FROM pl GROUP BY id),
-        mj AS (SELECT id, slang AS major_lang FROM
-          (SELECT id, slang, ROW_NUMBER() OVER (PARTITION BY id
-            ORDER BY c DESC, slang) AS rn FROM pl) WHERE rn = 1)
-        SELECT a.id AS doc_id, n_sents, n_langs, major_lang,
-          n_langs > 1 AS mixed
-        FROM agg a JOIN mj ON a.id = mj.id ORDER BY doc_id"""
-    },
-    // q149: BM25 CTEs reused; same planted grades, same integer gains
-    // over a log2 discount with the round-6 cosine protocol, the same
-    // ideal top-k tie rule
-    "q149_ndcg" ->
-      s"""WITH $bm25CtesSql,
-        qs AS (SELECT DISTINCT query_id FROM q),
-        lbl AS (SELECT qs.query_id, d.id AS doc_id,
-          (d.id * 3 + length(qs.query_id)) % 4 AS rel FROM qs, d),
-        rk AS (SELECT query_id, doc_id, rank FROM bm25r
-          WHERE rank <= 10),
-        dcg AS (SELECT rk.query_id, round(SUM(
-            ((1 << COALESCE(l.rel, 0)) - 1) / log2(rank + 1.0)), 6)
-            AS dcg
-          FROM rk LEFT JOIN lbl l ON rk.query_id = l.query_id
-            AND rk.doc_id = l.doc_id
-          GROUP BY rk.query_id),
-        ideal AS (SELECT query_id, round(SUM(
-            ((1 << rel) - 1) / log2(irank + 1.0)), 6) AS idcg
-          FROM (SELECT query_id, rel, ROW_NUMBER() OVER
-              (PARTITION BY query_id ORDER BY rel DESC, doc_id)
-              AS irank
-            FROM lbl WHERE rel > 0)
-          WHERE irank <= 10 GROUP BY query_id)
-        SELECT g.query_id, g.dcg, COALESCE(i.idcg, 0.0) AS idcg,
-          CASE WHEN COALESCE(i.idcg, 0) > 0
-            THEN round(g.dcg / i.idcg, 6) END AS ndcg
-        FROM dcg g LEFT JOIN ideal i ON g.query_id = i.query_id
-        ORDER BY g.query_id""",
-    // q150: weighted tf/dl staged in SQL (3x title + body), then
-    // q97's exact scoring nesting over the virtual postings
-    "q150_bm25f" ->
-      s"""WITH q(query_id, term) AS (VALUES $bm25QueriesSql),
-        d0 AS (SELECT CAST(doc_id AS BIGINT) AS id, $toksSql AS tk
-          FROM documents),
-        d AS (SELECT id, tk, tk[1:5] AS ttk FROM d0),
-        tp AS (SELECT id, term, CAST(3 * COUNT(*) AS BIGINT) AS tf
-          FROM (SELECT id, unnest(ttk) AS term FROM d)
-          GROUP BY id, term),
-        bp AS (SELECT id, term, CAST(COUNT(*) AS BIGINT) AS tf
-          FROM (SELECT id, unnest(tk) AS term FROM d)
-          GROUP BY id, term),
-        post AS (SELECT id, term, CAST(SUM(tf) AS BIGINT) AS tf
-          FROM (SELECT * FROM tp UNION ALL SELECT * FROM bp)
-          GROUP BY id, term),
-        dlt AS (SELECT id, CAST(3 * len(ttk) + len(tk) AS BIGINT)
-          AS dl FROM d),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(SUM(dl) AS BIGINT) AS sum_dl FROM dlt),
-        mt AS (SELECT post.id, post.term, post.tf, dlt.dl
-          FROM post JOIN dlt USING (id)
-          WHERE term IN (SELECT DISTINCT term FROM q)),
-        dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS dfc
-          FROM mt GROUP BY term),
-        sc AS (SELECT q.query_id, m.id,
-            CAST(SUM((CAST(((2*n_docs - 2*dfc + 1) * 1000000)
-                // (2*dfc + 1) AS HUGEINT) *
-              ((CAST(m.tf AS HUGEINT) * 2200000 * 1000000) //
-                (m.tf * 1000000 + (1200000 * ((1000000 - 750000) +
-                  (750000 * m.dl * 1000) //
-                    ((sum_dl * 1000) // n_docs))) // 1000000)))
-              // 1000000) AS BIGINT) AS score_ppm
-          FROM mt m JOIN dft USING (term) JOIN q USING (term)
-          CROSS JOIN stats
-          GROUP BY q.query_id, m.id)
-        SELECT query_id, doc_id, score_ppm, rank FROM (
-          SELECT query_id, id AS doc_id, score_ppm,
-            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY score_ppm DESC, id) AS BIGINT) AS rank
-          FROM sc)
-        WHERE rank <= 10 ORDER BY query_id, rank""",
-    // q151: BM25 CTEs reused for the top-5; expansion = full postings
-    // of those docs, len>=3, anti-joined against the original terms,
-    // top-3 by (tf desc, term)
-    "q151_prf_expand" ->
-      s"""WITH $bm25CtesSql,
-        top AS (SELECT query_id, doc_id AS id FROM bm25r
-          WHERE rank <= 5),
-        cand AS (SELECT t.query_id, p.term,
-            CAST(SUM(p.tf) AS BIGINT) AS exp_tf
-          FROM post p JOIN top t ON p.id = t.id
-          WHERE length(p.term) >= 3
-          GROUP BY t.query_id, p.term),
-        filt AS (SELECT c.query_id, c.term, c.exp_tf FROM cand c
-          WHERE NOT EXISTS (SELECT 1 FROM q
-            WHERE q.query_id = c.query_id AND q.term = c.term))
-        SELECT query_id, term, exp_tf,
-          CAST(exp_rank AS BIGINT) AS exp_rank
-        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY exp_tf DESC, term) AS exp_rank FROM filt)
-        WHERE exp_rank <= 3 ORDER BY query_id, exp_rank""",
-    // q152: BM25 CTEs + q149's planted grades; first relevant rank
-    // per query, rr = round(1/rank, 6), 0 when none in the top k
-    "q152_mrr" ->
-      s"""WITH $bm25CtesSql,
-        qs AS (SELECT DISTINCT query_id FROM q),
-        lbl AS (SELECT qs.query_id, d.id AS doc_id,
-          (d.id * 3 + length(qs.query_id)) % 4 AS rel FROM qs, d),
-        rk AS (SELECT query_id, doc_id, rank FROM bm25r
-          WHERE rank <= 10),
-        first AS (SELECT rk.query_id,
-            CAST(MIN(rank) AS BIGINT) AS first_rel_rank
-          FROM rk JOIN lbl ON rk.query_id = lbl.query_id
-            AND rk.doc_id = lbl.doc_id
-          WHERE lbl.rel >= 2 GROUP BY rk.query_id),
-        allq AS (SELECT DISTINCT query_id FROM bm25r)
-        SELECT a.query_id, f.first_rel_rank,
-          COALESCE(round(1.0 / f.first_rel_rank, 6), 0.0) AS rr
-        FROM allq a LEFT JOIN first f ON a.query_id = f.query_id
-        ORDER BY a.query_id""",
-    // q153: same pigeonhole construction — 2 bands of 8 bits over the
-    // portable 16-bit simhash, bucket self-join, exact popcount verify
-    "q153_simhash_pairs" ->
-      s"""WITH $simhashPairsCtesSql
-        SELECT a, b, hamming FROM cand WHERE hamming <= 1
-        ORDER BY a, b""",
-    // q167: the q153 pair chain + the q32 recursive component fold
-    "q167_simhash_cluster" ->
-      s"""WITH RECURSIVE $simhashPairsCtesSql,
-        edges AS (SELECT a, b FROM cand WHERE hamming <= 1
-          UNION SELECT b, a FROM cand WHERE hamming <= 1),
-        comp(id, canon) AS (
-          SELECT CAST(doc_id AS BIGINT), CAST(doc_id AS BIGINT)
-            FROM documents
-          UNION
-          SELECT e.a, c.canon FROM edges e JOIN comp c ON c.id = e.b)
-        SELECT id AS doc_id, MIN(canon) AS canonical_id
-        FROM comp GROUP BY 1 ORDER BY 1""",
-    // q154: Dirichlet QL in the matched-terms form; cf = collection
-    // frequency over queried-term postings; round-6 at the same three
-    // points as the Spark side (per-term, match-sum, final)
-    "q154_query_likelihood" ->
-      s"""WITH $bm25CtesSql,
-        $qlCtesSql
-        SELECT query_id, doc_id, score, rank FROM qlr
-        WHERE rank <= 10 ORDER BY query_id, rank""",
-    // q157: q78's anchor derivation + weighted postings (tf = Σ
-    // cnt·occurrences, dl = Σ cnt·len) + q97's exact scoring nesting
-    "q157_anchor_bm25" -> {
-      val id = "CAST(doc_id AS BIGINT)"
-      s"""WITH q(query_id, term) AS (VALUES ('qa','news'),('qa','item'),
-          ('qb','section'),('qb','index'),('qc','relative'),
-          ('qc','link')),
-        p AS (SELECT $id AS id, $linkHostSql AS h FROM documents),
-        l AS (
-          SELECT 'src' || CAST((id*7+3) % 20 AS VARCHAR) || '-'
-              || CAST((id*3+1) % 7 AS VARCHAR) || '.example.com'
-              AS dst_host,
-            'news item ' || CAST(id % 10 AS VARCHAR) AS anchor FROM p
-          UNION ALL SELECT h,
-            'relative link ' || CAST(id % 10 AS VARCHAR) FROM p
-          UNION ALL SELECT h, 'section index' FROM p),
-        ba AS (SELECT dst_host AS tid, anchor,
-            CAST(COUNT(*) AS BIGINT) AS cnt
-          FROM l GROUP BY 1, 2),
-        tkt AS (SELECT tid, cnt, list_filter(regexp_split_to_array(
-            lower(trim(anchor)), '\\s+'), t -> t != '') AS tk
-          FROM ba),
-        tkt2 AS (SELECT * FROM tkt WHERE len(tk) > 0),
-        dlt AS (SELECT tid, CAST(SUM(cnt * len(tk)) AS BIGINT) AS dl
-          FROM tkt2 GROUP BY tid),
-        post AS (SELECT term, tid, CAST(SUM(cnt) AS BIGINT) AS tf
-          FROM (SELECT tid, cnt, unnest(tk) AS term FROM tkt2)
-          GROUP BY 1, 2),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(SUM(dl) AS BIGINT) AS sum_dl FROM dlt),
-        mt AS (SELECT post.tid, post.term, post.tf, dlt.dl
-          FROM post JOIN dlt USING (tid)
-          WHERE term IN (SELECT DISTINCT term FROM q)),
-        dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS dfc
-          FROM mt GROUP BY term),
-        sc AS (SELECT q.query_id, m.tid,
-            CAST(SUM((CAST(((2*n_docs - 2*dfc + 1) * 1000000)
-                // (2*dfc + 1) AS HUGEINT) *
-              ((CAST(m.tf AS HUGEINT) * 2200000 * 1000000) //
-                (m.tf * 1000000 + (1200000 * ((1000000 - 750000) +
-                  (750000 * m.dl * 1000) //
-                    ((sum_dl * 1000) // n_docs))) // 1000000)))
-              // 1000000) AS BIGINT) AS score_ppm
-          FROM mt m JOIN dft USING (term) JOIN q USING (term)
-          CROSS JOIN stats
-          GROUP BY q.query_id, m.tid)
-        SELECT query_id, doc_id, score_ppm, rank FROM (
-          SELECT query_id, tid AS doc_id, score_ppm,
-            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY score_ppm DESC, tid) AS BIGINT) AS rank
-          FROM sc)
-        WHERE rank <= 10 ORDER BY query_id, rank"""
-    },
-    // q158: sentence synthesis + split round-trip, distinct-token
-    // overlap ppm edges, the SHARED prRoundsSql PageRank template
-    // over 'id:sidx' nodes, row_number top-2 per doc
-    "q158_lexrank" -> {
-      val rounds = prRoundsSql(3)
-      s"""WITH $sentenceDocsSql,
-        sp AS (SELECT id, list_filter(list_transform(
-            regexp_split_to_array(t, '[.!?]\\s+'), x -> trim(x)),
-            x -> x != '') AS ss FROM src0),
-        sents AS (SELECT id, u.p.i - 1 AS sidx, u.p.v AS sent
-          FROM sp, unnest(list_transform(generate_series(1, len(ss)),
-            i -> struct_pack(i := i, v := ss[i]))) u(p)
-          WHERE u.p.i - 1 < 50),
-        st AS (SELECT id, sidx, sent, list_distinct(list_filter(
-            regexp_split_to_array(lower(trim(sent)), '\\s+'),
-            x -> x != '')) AS tk2 FROM sents),
-        st2 AS (SELECT * FROM st WHERE len(tk2) > 0),
-        pr AS (SELECT a.id, a.sidx AS ai, b.sidx AS bi,
-            (CAST(len(list_intersect(a.tk2, b.tk2)) AS BIGINT)
-              * 1000000) // (len(a.tk2) + len(b.tk2)) AS sim
-          FROM st2 a JOIN st2 b ON a.id = b.id AND a.sidx < b.sidx),
-        pe AS (SELECT CAST(id AS VARCHAR) || ':' || CAST(ai AS VARCHAR)
-            AS src,
-            CAST(id AS VARCHAR) || ':' || CAST(bi AS VARCHAR) AS dst
-          FROM pr WHERE sim >= 200000),
-        e AS (SELECT src, dst FROM pe UNION ALL SELECT dst, src FROM pe),
-        nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        dg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-          FROM e GROUP BY src),
-        r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank_ppb
-          FROM nd)$rounds,
-        rk AS (SELECT st2.id, st2.sidx, st2.sent,
-            COALESCE(r3.rank_ppb, 0) AS rank_ppb
-          FROM st2 LEFT JOIN r3 ON r3.node =
-            CAST(st2.id AS VARCHAR) || ':' || CAST(st2.sidx AS VARCHAR)),
-        fin AS (SELECT id, sidx, sent, rank_ppb,
-            ROW_NUMBER() OVER (PARTITION BY id
-              ORDER BY rank_ppb DESC, sidx) AS rnk FROM rk)
-        SELECT id, CAST(sidx AS BIGINT) AS sidx, sent,
-          CAST(rank_ppb AS BIGINT) AS rank_ppb, CAST(rnk AS BIGINT)
-            AS rnk
-        FROM fin WHERE rnk <= 2 ORDER BY id, rnk"""
-    },
-    // q165: same window-hash boundaries + slice/md5 staging
-    "q165_cdc_chunks" ->
-      s"""WITH $cdcChunksCtesSql
-        SELECT id, chunk_idx, start, chunk_len, chunk_hash
-        FROM chk ORDER BY id, chunk_idx""",
-    // q168: same chunk chain + df cap + set-Jaccard staging
-    "q168_chunk_neardup" ->
-      s"""WITH $cdcChunksCtesSql,
-        thin AS (SELECT DISTINCT id, chunk_hash FROM chk),
-        sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS sz
-          FROM thin GROUP BY 1),
-        dfc AS (SELECT chunk_hash FROM (SELECT chunk_hash,
-            COUNT(*) AS dd FROM thin GROUP BY 1) WHERE dd <= 64),
-        kept AS (SELECT thin.* FROM thin JOIN dfc USING (chunk_hash)),
-        it AS (SELECT l.id AS a, r.id AS b,
-            CAST(COUNT(*) AS BIGINT) AS inter
-          FROM kept l JOIN kept r ON l.chunk_hash = r.chunk_hash
-            AND l.id < r.id
-          GROUP BY 1, 2),
-        scj AS (SELECT a, b, inter,
-            CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) AS j
-          FROM it JOIN sizes sa ON sa.id = a
-            JOIN sizes sb ON sb.id = b)
-        SELECT a, b, inter, round(j, 6) AS jaccard FROM scj
-        WHERE j >= 0.05 ORDER BY a, b""",
-    // q166: same chunk chain + the dedup-ratio accounting
-    "q166_chunk_dedup" ->
-      s"""WITH $cdcChunksCtesSql,
-        a1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_chunks,
-            CAST(COUNT(DISTINCT chunk_hash) AS BIGINT) AS n_unique,
-            CAST(SUM(chunk_len) AS BIGINT) AS total_tokens
-          FROM chk),
-        a2 AS (SELECT CAST(SUM(chunk_len) AS BIGINT) AS unique_tokens
-          FROM (SELECT DISTINCT chunk_hash, chunk_len FROM chk))
-        SELECT n_chunks, n_unique, total_tokens, unique_tokens,
-          CAST(((total_tokens - unique_tokens) * 1000000)
-            // total_tokens AS BIGINT) AS savings_ppm
-        FROM a1, a2""",
-    // q164: run split via the same per-doc running stopword count,
-    // identical deg/freq ppm staging
-    "q164_rake" ->
-      s"""WITH t AS (SELECT doc_id AS id, $toksSql AS tk FROM documents),
-        p AS (SELECT id, i - 1 AS pos, tk[i] AS tok
-          FROM (SELECT id, tk, unnest(generate_series(1, len(tk))) AS i
-            FROM t)),
-        st AS (SELECT id, pos, tok,
-            tok IN ('the', 'a', 'of', 'and') AS stp,
-            SUM(CASE WHEN tok IN ('the', 'a', 'of', 'and')
-              THEN 1 ELSE 0 END) OVER (PARTITION BY id ORDER BY pos
-              ROWS UNBOUNDED PRECEDING) AS seg
-          FROM p),
-        cand AS (SELECT id, seg, list(tok ORDER BY pos) AS ptoks
-          FROM st WHERE NOT stp GROUP BY id, seg),
-        cand2 AS (SELECT ptoks, len(ptoks) AS plen FROM cand
-          WHERE len(ptoks) <= 4),
-        ws AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq,
-            CAST(SUM(plen) AS BIGINT) AS deg
-          FROM (SELECT unnest(ptoks) AS w, plen FROM cand2)
-          GROUP BY w),
-        ws2 AS (SELECT w, (deg * 1000000) // freq AS wsc FROM ws),
-        ph AS (SELECT ptoks, CAST(COUNT(*) AS BIGINT) AS n_occurrences
-          FROM cand2 GROUP BY ptoks),
-        px AS (SELECT array_to_string(ptoks, ' ') AS phrase,
-            n_occurrences, unnest(ptoks) AS w FROM ph),
-        sc AS (SELECT phrase, n_occurrences,
-            CAST(SUM(wsc) AS BIGINT) AS score_ppm,
-            CAST(COUNT(*) AS BIGINT) AS n_words
-          FROM px JOIN ws2 USING (w) GROUP BY 1, 2)
-        SELECT phrase, n_occurrences, score_ppm, n_words FROM sc
-        ORDER BY score_ppm DESC, phrase LIMIT 30""",
-    // q163: q68's bigram-hash staging twice (general = all docs,
-    // in-domain = source src0), identical round-6 ln-ratio points
-    "q163_moore_lewis" ->
-      s"""WITH t AS (SELECT doc_id, source, list_transform($toksSql,
-          tk -> CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT)) AS hs
-          FROM documents),
-        pr AS (SELECT doc_id, source, hs[i] AS ph, hs[i + 1] AS ch
-          FROM (SELECT doc_id, source, hs,
-              unnest(generate_series(1, len(hs) - 1)) AS i
-            FROM t WHERE len(hs) >= 2)),
-        bcg AS (SELECT ph, ch, CAST(COUNT(*) AS BIGINT) AS bcg
-          FROM pr GROUP BY 1, 2),
-        pcg AS (SELECT ph, CAST(COUNT(*) AS BIGINT) AS pcg
-          FROM pr GROUP BY 1),
-        bct AS (SELECT ph, ch, CAST(COUNT(*) AS BIGINT) AS bct
-          FROM pr WHERE source = 'src0' GROUP BY 1, 2),
-        pct AS (SELECT ph, CAST(COUNT(*) AS BIGINT) AS pct
-          FROM pr WHERE source = 'src0' GROUP BY 1),
-        sc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-            round(SUM(round(
-              ln((COALESCE(bct, 0) + 1.0) /
-                (COALESCE(pct, 0) + 65536.0)) -
-              ln((COALESCE(bcg, 0) + 1.0) /
-                (COALESCE(pcg, 0) + 65536.0)), 6)), 6) AS s
-          FROM pr LEFT JOIN bct USING (ph, ch)
-            LEFT JOIN pct USING (ph)
-            JOIN bcg USING (ph, ch) JOIN pcg USING (ph)
-          GROUP BY doc_id)
-        SELECT d.doc_id, COALESCE(n_bigrams, 0) AS n_bigrams,
-          CASE WHEN COALESCE(n_bigrams, 0) > 0
-            THEN round(s / n_bigrams, 6) END AS celd
-        FROM documents d LEFT JOIN sc USING (doc_id)
-        ORDER BY d.doc_id""",
-    // q162: q142's positional-postings pattern + the 64-occurrence
-    // cap + pair minima + the all-pairs integer check
-    "q162_proximity" ->
-      s"""WITH q(query_id, term) AS (VALUES $bm25QueriesSql),
-        d AS (SELECT CAST(doc_id AS BIGINT) AS id, $toksSql AS tk
-          FROM documents),
-        post AS (SELECT id, u.p.pos AS pos, u.p.term AS term
-          FROM d, unnest(list_transform(generate_series(1, len(tk)),
-            i -> struct_pack(pos := i - 1, term := tk[i]))) u(p)),
-        qtd AS (SELECT DISTINCT term FROM q),
-        m0 AS (SELECT post.* FROM post JOIN qtd USING (term)),
-        cap AS (SELECT * FROM (SELECT m0.*, ROW_NUMBER() OVER
-            (PARTITION BY term, id ORDER BY pos) AS pr FROM m0)
-          WHERE pr <= 64),
-        mq AS (SELECT q.query_id, cap.id, cap.term, cap.pos
-          FROM cap JOIN q USING (term)),
-        pm AS (SELECT a.query_id, a.id, a.term AS ta, b.term AS tb,
-            CAST(MIN(abs(a.pos - b.pos)) AS BIGINT) AS md
-          FROM mq a JOIN mq b ON a.query_id = b.query_id
-            AND a.id = b.id AND a.term < b.term
-          GROUP BY 1, 2, 3, 4),
-        nt AS (SELECT query_id,
-            CAST(COUNT(DISTINCT term) AS BIGINT) AS ntm
-          FROM q GROUP BY 1),
-        pd AS (SELECT pm.query_id, id, COUNT(*) AS np,
-            CAST(MAX(md) AS BIGINT) AS bottleneck,
-            CAST(MIN(md) AS BIGINT) AS best
-          FROM pm GROUP BY 1, 2),
-        fd AS (SELECT pd.query_id, id, bottleneck, best
-          FROM pd JOIN nt USING (query_id)
-          WHERE np * 2 = ntm * (ntm - 1)),
-        rk AS (SELECT query_id, id AS doc_id, bottleneck, best,
-          CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY bottleneck, best, id) AS BIGINT) AS rank FROM fd)
-        SELECT query_id, doc_id, bottleneck, best, rank FROM rk
-        WHERE rank <= 10 ORDER BY query_id, rank""",
-    // q178: same full-outer counts + round-6 log2 contributions
-    // q181: the q102 margin tail over IVF-candidate pairs — cells and
-    // probe ranking from the SHARED ivfCellSqlCtes quantizer chain
-    // (same deterministic md5 sampling, same s DESC, ci tie rule)
-    "q181_margin_ann" ->
-      s"""WITH $ivfCellSqlCtes,
-        xs AS (SELECT vec_id AS x, e FROM v WHERE vec_id % 2 = 0),
-        ys AS (SELECT vec_id AS y, e FROM v WHERE vec_id % 2 = 1),
-        ycell AS (SELECT ys.y, cell.cell FROM cell
-          JOIN ys ON ys.y = cell.vec_id),
-        xprobe AS (SELECT vec_id AS x, ci AS cell FROM (
-            SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-              ORDER BY s DESC, ci) AS pr
-            FROM sims WHERE vec_id % 2 = 0) WHERE pr <= 4),
-        p AS (SELECT xp.x, yc.y,
-            CAST(floor((${cosSql("xs.e", "ys.e")}) * 1000000) AS BIGINT)
-              AS cos_ppm
-          FROM xprobe xp JOIN ycell yc ON yc.cell = xp.cell
-          JOIN xs ON xs.x = xp.x JOIN ys ON ys.y = yc.y),
-        rx AS (SELECT x, y, cos_ppm, row_number() OVER (
-            PARTITION BY x ORDER BY cos_ppm DESC, y) AS rk FROM p),
-        ry AS (SELECT x, y, cos_ppm, row_number() OVER (
-            PARTITION BY y ORDER BY cos_ppm DESC, x) AS rk FROM p),
-        ax AS (SELECT x, CAST(SUM(cos_ppm) // COUNT(*) AS BIGINT)
-            AS avg_x_ppm FROM rx WHERE rk <= 4 GROUP BY x),
-        ay AS (SELECT y, CAST(SUM(cos_ppm) // COUNT(*) AS BIGINT)
-            AS avg_y_ppm FROM ry WHERE rk <= 4 GROUP BY y),
-        best AS (SELECT x, y, cos_ppm FROM rx WHERE rk = 1)
-        SELECT best.x, best.y, best.cos_ppm, avg_x_ppm, avg_y_ppm,
-          CAST((cos_ppm * 2000000) // (avg_x_ppm + avg_y_ppm) AS BIGINT)
-            AS margin_ppm
-        FROM best JOIN ax USING (x) JOIN ay USING (y)
-        WHERE avg_x_ppm + avg_y_ppm > 0
-          AND (cos_ppm * 2000000) // (avg_x_ppm + avg_y_ppm) >= 1000000
-        ORDER BY best.x""",
-    // q180: per-word char+</w> symbols, three greedy merge layers
-    // (left != right makes matches non-overlapping, so one
-    // mark-and-drop list pass per merge IS the greedy semantics),
-    // flatten in word order
-    "q180_bpe_encode" -> {
-      def applyMergeSql(s: String, a: String, b: String,
-          m: String): String =
-        s"""list_filter(list_transform(generate_series(1, len($s)),
-           i -> CASE WHEN i < len($s) AND $s[i] = '$a'
-               AND $s[i + 1] = '$b' THEN '$m'
-             WHEN i > 1 AND $s[i - 1] = '$a' AND $s[i] = '$b' THEN NULL
-             ELSE $s[i] END), x -> x IS NOT NULL)"""
-      s"""WITH t AS (SELECT doc_id, $toksSql AS tk FROM documents),
-        w AS (SELECT doc_id, i AS wpos, tk[i] AS word
-          FROM (SELECT doc_id, tk,
-              unnest(generate_series(1, len(tk))) AS i FROM t)),
-        s0 AS (SELECT doc_id, wpos,
-          list_append(string_split(word, ''), '</w>') AS s FROM w),
-        s1 AS (SELECT doc_id, wpos,
-          ${applyMergeSql("s", "t", "h", "th")} AS s FROM s0),
-        s2 AS (SELECT doc_id, wpos,
-          ${applyMergeSql("s", "th", "e", "the")} AS s FROM s1),
-        s3 AS (SELECT doc_id, wpos,
-          ${applyMergeSql("s", "e", "</w>", "e</w>")} AS s FROM s2),
-        fl AS (SELECT doc_id, flatten(list(s ORDER BY wpos)) AS bt
-          FROM s3 GROUP BY doc_id)
-        SELECT d.doc_id,
-          CAST(coalesce(len(bt), 0) AS BIGINT) AS n_bpe_tokens,
-          md5(coalesce(array_to_string(bt, ' '), '')) AS bpe_md5
-        FROM documents d LEFT JOIN fl ON fl.doc_id = d.doc_id
-        ORDER BY d.doc_id"""
-    },
-    // q179: q55's window-mask chain with two swaps — gram TEXT (the
-    // SA compares content, no hash) and OCCURRENCE counts (count(*),
-    // within-doc repeats included) instead of distinct-doc counts
-    "q179_sa_scrub" ->
-      s"""WITH corpus AS (SELECT doc_id,
-          (CASE WHEN CAST(doc_id AS BIGINT) % 13 = 5
-            THEN '$PlantCookie ' ELSE '' END) || text ||
-          (CASE WHEN CAST(doc_id AS BIGINT) % 11 = 3
-            THEN ' intra span alpha beta gamma delta epsilon zeta d'
-              || CAST(CAST(doc_id AS BIGINT) AS VARCHAR) || ' mid '
-              || 'intra span alpha beta gamma delta epsilon zeta d'
-              || CAST(CAST(doc_id AS BIGINT) AS VARCHAR)
-            ELSE '' END) AS text
-          FROM documents),
-        t AS (SELECT doc_id, text, $toksSql AS toks FROM corpus),
-        g AS (SELECT doc_id, i - 1 AS pos,
-            array_to_string(toks[i : i + 7], ' ') AS gs
-          FROM (SELECT doc_id, toks,
-              unnest(generate_series(1, len(toks) - 7)) AS i
-            FROM t WHERE len(toks) >= 8)),
-        dup AS (SELECT gs FROM (SELECT gs, count(*) AS c
-            FROM g GROUP BY gs) WHERE c >= 2),
-        fp AS (SELECT doc_id, list(pos) AS fps
-          FROM g JOIN dup USING (gs) GROUP BY doc_id),
-        k AS (SELECT t.doc_id, text, toks,
-            list_filter(range(0, len(toks)), j -> len(list_filter(
-              coalesce(fps, CAST([] AS BIGINT[])),
-              p -> p <= j AND j < p + 8)) = 0) AS keep
-          FROM t LEFT JOIN fp ON t.doc_id = fp.doc_id)
-        SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-          CAST(len(toks) - len(keep) AS BIGINT) AS n_removed,
-          CAST(CASE WHEN len(toks) > 0
-            THEN ((len(toks) - len(keep)) * 1000000) // len(toks)
-            ELSE 0 END AS BIGINT) AS removed_ppm,
-          md5(CASE WHEN len(keep) = len(toks) THEN text
-            ELSE coalesce(array_to_string(list_transform(keep,
-              j -> toks[j + 1]), ' '), '') END) AS clean_md5
-        FROM k ORDER BY doc_id""",
-    "q178_term_drift" ->
-      s"""WITH ta AS (SELECT unnest($toksSql) AS term FROM documents
-          WHERE source = 'src0'),
-        tb AS (SELECT unnest($toksSql) AS term FROM documents
-          WHERE source = 'src1'),
-        ca AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS cnt_a
-          FROM ta GROUP BY 1),
-        cb AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS cnt_b
-          FROM tb GROUP BY 1),
-        jj AS (SELECT COALESCE(ca.term, cb.term) AS term,
-            COALESCE(cnt_a, 0) AS cnt_a, COALESCE(cnt_b, 0) AS cnt_b
-          FROM ca FULL OUTER JOIN cb ON ca.term = cb.term),
-        tt AS (SELECT CAST(SUM(cnt_a) AS BIGINT) AS na,
-            CAST(SUM(cnt_b) AS BIGINT) AS nb FROM jj),
-        sc AS (SELECT term, cnt_a, cnt_b,
-            CAST(cnt_a AS DOUBLE) / na AS p,
-            CAST(cnt_b AS DOUBLE) / nb AS q
-          FROM jj, tt),
-        fc AS (SELECT term, cnt_a, cnt_b, round(
-            ((CASE WHEN p > 0 THEN p * log2(p / ((p + q) / 2.0))
-              ELSE 0 END) +
-             (CASE WHEN q > 0 THEN q * log2(q / ((p + q) / 2.0))
-              ELSE 0 END)) / 2.0, 6) AS jsd_contrib
-          FROM sc)
-        SELECT term, cnt_a, cnt_b, jsd_contrib FROM fc
-        ORDER BY jsd_contrib DESC, term LIMIT 20""",
-    // q177: tf² per token HASH (mirrors the Spark fold's unit, the
-    // q53 collision discipline) + the single milli-K floor
-    "q177_yule_k" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS tk FROM documents),
-        tf AS (SELECT doc_id, h, CAST(COUNT(*) AS BIGINT) AS c
-          FROM (SELECT doc_id, CAST(('0x' || substr(md5(t2), 1, 8))
-              AS BIGINT) AS h
-            FROM (SELECT doc_id, unnest(tk) AS t2 FROM t))
-          GROUP BY 1, 2),
-        agg AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n,
-            CAST(SUM(c * c) AS BIGINT) AS ssq FROM tf GROUP BY 1)
-        SELECT d0.doc_id, CASE WHEN n IS NULL OR n = 0 THEN NULL
-          ELSE CAST(((ssq - n) * 10000000)
-            // (CAST(n AS HUGEINT) * n) AS BIGINT) END AS yule_k_milli
-        FROM documents d0 LEFT JOIN agg ON agg.doc_id = d0.doc_id
-        ORDER BY d0.doc_id""",
-    // q176: both shared chains, top-30 each, join + threshold flag
-    "q176_stopword_induction" ->
-      s"""WITH $burstinessCtesSql,
-        $dispersionCtesSql,
-        bz AS (SELECT term, cf, doc_freq,
-            CAST(((nd * stf2 - CAST(cf AS HUGEINT) * cf) * 1000000)
-              // (nd * CAST(cf AS HUGEINT)) AS BIGINT) AS vmr_ppm
-          FROM st, n ORDER BY cf DESC, term LIMIT 30),
-        dz AS (SELECT term, cf, CAST((num * 1000000)
-              // (2 * CAST(cf AS HUGEINT) * sdl) AS BIGINT) AS dp_ppm
-          FROM agg ORDER BY cf DESC, term LIMIT 30)
-        SELECT bz.term, bz.cf, doc_freq, vmr_ppm, dp_ppm,
-          (vmr_ppm <= 3000000 AND dp_ppm <= 300000) AS stopword
-        FROM bz JOIN dz ON bz.term = dz.term AND bz.cf = dz.cf
-        ORDER BY bz.cf DESC, bz.term""",
-    // q175: same hash-decile parts + common-denominator DP floor
-    "q175_dispersion" ->
-      s"""WITH $dispersionCtesSql
-        SELECT term, cf, CAST((num * 1000000)
-            // (2 * CAST(cf AS HUGEINT) * sdl) AS BIGINT) AS dp_ppm
-        FROM agg ORDER BY cf DESC, term LIMIT 20""",
-    // q174: posting counts + the telescoped VMR floor
-    "q174_burstiness" ->
-      s"""WITH $burstinessCtesSql
-        SELECT term, cf, doc_freq,
-          CAST(((nd * stf2 - CAST(cf AS HUGEINT) * cf) * 1000000)
-            // (nd * CAST(cf AS HUGEINT)) AS BIGINT) AS vmr_ppm
-        FROM st, n ORDER BY cf DESC, term LIMIT 20""",
-    // q173: q29's shared embedding-pair chain + q65's split staging
-    "q173_semantic_leakage" -> {
-      def slotSql(e: String) =
-        s"""CAST(('0x' || substr(md5(CAST($e AS VARCHAR) || ':split'),
-          1, 8)) AS BIGINT) % 10000"""
-      s"""WITH ${embedNearDupCtes(4, 64)},
-        e2 AS (SELECT a, b FROM pairs WHERE cosine >= 0.2),
-        sl AS (SELECT a, b, ${slotSql("a")} AS qa, ${slotSql("b")} AS qb
-          FROM e2),
-        sp AS (SELECT
-            (CASE WHEN qa < 8000 THEN 'train' WHEN qa < 9000 THEN 'val'
-              ELSE 'test' END) AS sa,
-            (CASE WHEN qb < 8000 THEN 'train' WHEN qb < 9000 THEN 'val'
-              ELSE 'test' END) AS sb
-          FROM sl)
-        SELECT least(sa, sb) AS split_lo, greatest(sa, sb) AS split_hi,
-          CAST(count(*) AS BIGINT) AS n_pairs,
-          least(sa, sb) != greatest(sa, sb) AS leaks
-        FROM sp GROUP BY 1, 2 ORDER BY 1, 2"""
-    },
-    // q171: closed-form kappa counts + the sign-first staging
-    "q171_kappa" ->
-      s"""WITH b AS (SELECT source, (n_chars >= 300) AS a,
-          (len($toksSql) >= 55) AS bb FROM documents),
-        c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS na,
-            CAST(SUM(CASE WHEN bb THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-            CAST(SUM(CASE WHEN a AND bb THEN 1 ELSE 0 END) AS BIGINT)
-              AS n11,
-            CAST(SUM(CASE WHEN NOT a AND NOT bb THEN 1 ELSE 0 END)
-              AS BIGINT) AS n00
-          FROM b GROUP BY 1)
-        SELECT source, n,
-          CAST(((n11 + n00) * 1000000) // n AS BIGINT) AS po_ppm,
-          CAST(CASE
-            WHEN (n*n - na*nb - (n-na)*(n-nb)) = 0 THEN NULL
-            WHEN (n*(n11+n00) - na*nb - (n-na)*(n-nb)) >= 0
-              THEN ((n*(n11+n00) - na*nb - (n-na)*(n-nb)) * 1000000)
-                // (n*n - na*nb - (n-na)*(n-nb))
-            ELSE -((-(n*(n11+n00) - na*nb - (n-na)*(n-nb)) * 1000000)
-                // (n*n - na*nb - (n-na)*(n-nb))) END AS BIGINT)
-            AS kappa_ppm
-        FROM c ORDER BY source""",
-    // q172: same rank construction (ROW_NUMBER over (w, host)) +
-    // the non-negative single-floor Gini staging
-    "q172_host_gini" ->
-      """WITH hw AS (SELECT source || '-' ||
-            CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR) ||
-            '.example.com' AS host, CAST(COUNT(*) AS BIGINT) AS w
-          FROM documents GROUP BY 1),
-        r AS (SELECT w, CAST(ROW_NUMBER() OVER (ORDER BY w, host)
-            AS BIGINT) AS i FROM hw)
-        SELECT CAST(COUNT(*) AS BIGINT) AS n,
-          CAST(SUM(w) AS BIGINT) AS total,
-          CAST(((2 * SUM(CAST(i AS HUGEINT) * w) -
-            (COUNT(*) + 1) * SUM(w)) * 1000000)
-            // (COUNT(*) * SUM(w)) AS BIGINT) AS gini_ppm,
-          CAST((SUM(CAST(w AS HUGEINT) * w) * 1000000)
-            // (SUM(w) * SUM(w)) AS BIGINT) AS hhi_ppm
-        FROM r""",
-    // q170: identical binning + telescoped one-floor ECE staging
-    "q170_calibration" ->
-      """WITH mx AS (SELECT CAST(MAX(n_chars) AS BIGINT) AS m
-          FROM documents),
-        b0 AS (SELECT source, (lang = 'en') AS lb,
-            (CAST(n_chars AS BIGINT) * 1000000) // m AS cf
-          FROM documents, mx),
-        b1 AS (SELECT source, lb, cf, (cf * 10) // 1000001 AS bin
-          FROM b0),
-        pb AS (SELECT source, bin, CAST(COUNT(*) AS BIGINT) AS nb,
-            CAST(SUM(CASE WHEN lb THEN 1 ELSE 0 END) AS BIGINT) AS sl,
-            CAST(SUM(cf) AS BIGINT) AS sc
-          FROM b1 GROUP BY 1, 2),
-        pg AS (SELECT source, nb, abs(1000000 * sl - sc) AS gap
-          FROM pb)
-        SELECT source, CAST(SUM(nb) AS BIGINT) AS n,
-          CAST(COUNT(*) AS BIGINT) AS n_bins_hit,
-          CAST(SUM(gap) // SUM(nb) AS BIGINT) AS ece_ppm,
-          CAST(MAX(gap // nb) AS BIGINT) AS max_bin_gap_ppm
-        FROM pg GROUP BY source ORDER BY source""",
-    // q169: same ra/rb arms; in-subset row_number re-ranks, the
-    // non-negative-numerator rho staging
-    "q169_spearman" ->
-      s"""WITH $bm25CtesSql,
-        $qlCtesSql,
-        ra AS (SELECT query_id, doc_id, rank FROM bm25r
-          WHERE rank <= 10),
-        rb AS (SELECT query_id, doc_id, rank FROM qlr
-          WHERE rank <= 10),
-        cm2 AS (SELECT ra.query_id, ra.doc_id, ra.rank AS r1o,
-            rb.rank AS r2o
-          FROM ra JOIN rb USING (query_id, doc_id)),
-        rr AS (SELECT query_id, doc_id,
-            ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY r1o, doc_id) AS r1,
-            ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY r2o, doc_id) AS r2
-          FROM cm2),
-        ag AS (SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_common,
-            CAST(SUM((r1 - r2) * (r1 - r2)) AS BIGINT) AS sum_d2
-          FROM rr GROUP BY 1)
-        SELECT query_id, n_common, sum_d2,
-          CAST(CASE WHEN n_common < 2 THEN NULL
-            ELSE 1000000 - (6000000 * sum_d2)
-              // (n_common * (n_common * n_common - 1)) END AS BIGINT)
-            AS rho_ppm
-        FROM ag ORDER BY query_id""",
-    // q160: bm25 CTEs + the q154 QL chain + integer tau with the
-    // sign-first magnitude staging (both engines floor non-negatives)
-    "q160_kendall_tau" ->
-      s"""WITH $bm25CtesSql,
-        $qlCtesSql,
-        ra AS (SELECT query_id, doc_id, rank FROM bm25r
-          WHERE rank <= 10),
-        rb AS (SELECT query_id, doc_id, rank FROM qlr
-          WHERE rank <= 10),
-        cm AS (SELECT ra.query_id, ra.doc_id, ra.rank AS r1,
-            rb.rank AS r2
-          FROM ra JOIN rb USING (query_id, doc_id)),
-        nn AS (SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_common
-          FROM cm GROUP BY 1),
-        pp AS (SELECT x.query_id,
-            CASE WHEN (x.r1 - y.r1) * (x.r2 - y.r2) > 0
-              THEN 1 ELSE 0 END AS conc
-          FROM cm x JOIN cm y ON x.query_id = y.query_id
-            AND x.doc_id < y.doc_id),
-        cd AS (SELECT query_id, CAST(SUM(conc) AS BIGINT) AS c,
-            CAST(COUNT(*) - SUM(conc) AS BIGINT) AS dd
-          FROM pp GROUP BY 1)
-        SELECT nn.query_id, n_common,
-          COALESCE(c, 0) AS concordant, COALESCE(dd, 0) AS discordant,
-          CAST(CASE WHEN n_common < 2 THEN NULL
-            WHEN COALESCE(c, 0) >= COALESCE(dd, 0)
-              THEN ((COALESCE(c, 0) - COALESCE(dd, 0)) * 2000000)
-                // (n_common * (n_common - 1))
-            ELSE -(((COALESCE(dd, 0) - COALESCE(c, 0)) * 2000000)
-                // (n_common * (n_common - 1))) END AS BIGINT)
-            AS tau_ppm
-        FROM nn LEFT JOIN cd USING (query_id) ORDER BY nn.query_id""",
-    // q159: same synthesized sentences; vowel-group syllables, the
-    // identical integer DIV milli staging
-    "q159_readability" ->
-      s"""WITH $sentenceDocsSql,
-        tk3 AS (SELECT id,
-            list_filter(regexp_split_to_array(lower(trim(t)), '\\s+'),
-              x -> x != '') AS tkx,
-            list_filter(list_transform(
-              regexp_split_to_array(t, '[.!?]\\s+'), x -> trim(x)),
-              x -> x != '') AS ss
-          FROM src0),
-        m AS (SELECT id, CAST(len(tkx) AS BIGINT) AS n_words,
-            CAST(greatest(len(ss), 1) AS BIGINT) AS n_sents,
-            CAST(list_sum(list_transform(tkx, w ->
-              greatest(len(regexp_extract_all(w, '[aeiouy]+')), 1)))
-              AS BIGINT) AS n_syllables
-          FROM tk3)
-        SELECT id AS doc_id, n_words, n_sents, n_syllables,
-          CAST(CASE WHEN n_words = 0 THEN 206835
-            ELSE 206835 - (1015 * n_words) // n_sents
-              - (84600 * n_syllables) // n_words END AS BIGINT)
-            AS fre_milli,
-          CAST(CASE WHEN n_words = 0 THEN -15590
-            ELSE (390 * n_words) // n_sents
-              + (11800 * n_syllables) // n_words - 15590 END AS BIGINT)
-            AS fkgl_milli
-        FROM m ORDER BY doc_id""",
-    // q155: the oracle sorts the ACTUAL suffix token-lists (DuckDB
-    // lexicographic list order = the doubling construction's order,
-    // shorter-prefix first) and takes lcp by direct prefix compare
-    "q155_suffix_array" ->
-      s"""WITH $saCtesSql,
-        w2 AS (SELECT id, pos, sa_rank, psuf,
-            least(len(suf), len(psuf)) AS mm,
-            list_position(list_transform(
-              generate_series(1, least(len(suf), len(psuf))),
-              j -> suf[j] = psuf[j]), false) AS fd
-          FROM w)
-        SELECT id, pos, sa_rank,
-          CAST(CASE WHEN psuf IS NULL THEN 0
-            WHEN COALESCE(fd, 0) = 0 THEN mm ELSE fd - 1 END AS BIGINT)
-            AS lcp
-        FROM w2 ORDER BY sa_rank""",
-    // q156: same SA chain; dup_len = greatest(lcp_prev, lcp_next)
-    // (max common prefix with ANY other suffix is with an SA neighbor)
-    "q156_sa_dup_spans" ->
-      s"""WITH $saCtesSql,
-        w2 AS (SELECT id, pos, sa_rank,
-            CASE WHEN psuf IS NULL THEN 0 ELSE (
-              CASE WHEN COALESCE(list_position(list_transform(
-                  generate_series(1, least(len(suf), len(psuf))),
-                  j -> suf[j] = psuf[j]), false), 0) = 0
-                THEN least(len(suf), len(psuf))
-                ELSE list_position(list_transform(
-                  generate_series(1, least(len(suf), len(psuf))),
-                  j -> suf[j] = psuf[j]), false) - 1 END) END AS lcp
-          FROM w),
-        nx AS (SELECT id, pos, lcp,
-            lead(lcp) OVER (ORDER BY sa_rank) AS lcp_next
-          FROM w2)
-        SELECT id, pos,
-          CAST(greatest(lcp, COALESCE(lcp_next, 0)) AS BIGINT) AS dup_len
-        FROM nx WHERE greatest(lcp, COALESCE(lcp_next, 0)) >= 8
-        ORDER BY id, pos""",
-    // q118: the running weight sum is a plain global window in SQL
-    // (fine at oracle scale — the Spark side shards it); shard id =
-    // exclusive-prefix DIV ceil(total/8), clamped to 7
-    "q118_balanced_shards" ->
-      """WITH d AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-          CAST(coalesce(n_chars, 0) AS BIGINT) AS w,
-          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':shard'),
-            1, 8)) AS BIGINT) AS hh FROM documents),
-        s AS (SELECT doc_id, w,
-          CAST(sum(w) OVER (ORDER BY hh, doc_id
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_bytes,
-          CAST(sum(w) OVER () AS BIGINT) AS total_bytes FROM d)
-        SELECT doc_id, cum_bytes, total_bytes,
-          CAST(least(7, (cum_bytes - w) //
-            greatest((total_bytes + 7) // 8, 1)) AS BIGINT) AS shard
-        FROM s ORDER BY doc_id""",
-    // q62: the star-contraction path must produce the identical
-    // component labeling — same oracle
-    "q62_dedup_star" -> dedupClusterOracleSql,
-    "q34_jaccard_lsh" ->
-      s"""WITH ${lshPairsCtesOver(3)},
-        cand AS (SELECT a, b FROM pairs WHERE est_jaccard >= 0.25),
-        sh AS (SELECT doc_id AS id,
-          list_filter(list_distinct(list_transform(
-            generate_series(0, greatest(len(tk) - 3, 0)),
-            i -> array_to_string(tk[i+1:i+3], ' '))), s -> length(s) > 0)
-            AS sh
-          FROM (SELECT doc_id, $toksSql AS tk FROM documents)),
-        scored AS (SELECT a, b,
-          CAST(len(list_intersect(sa.sh, sb.sh)) AS BIGINT) AS inter,
-          CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) /
-            (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-            AS jaccard
-          FROM cand JOIN sh sa ON sa.id = a JOIN sh sb ON sb.id = b)
-        SELECT a, b, inter, jaccard FROM scored WHERE jaccard >= 0.1
-        ORDER BY jaccard DESC, a, b LIMIT 50""",
-    "q35_bbox" ->
-      """WITH f AS (SELECT doc_id,
-          concat(substr(text, 1, 30),
-            ' ![image](image_', CAST(doc_id AS BIGINT) % 7, '.png)',
-            (CAST(doc_id AS BIGINT) % 5) * 100, ',',
-            (CAST(doc_id AS BIGINT) % 4) * 100, ',',
-            (CAST(doc_id AS BIGINT) % 5) * 100 + 200, ',',
-            (CAST(doc_id AS BIGINT) % 4) * 100 + 150,
-            ' more ![image](image_9.png)10,20,110,220') AS t
-          FROM documents),
-        d AS (SELECT doc_id, t,
-          regexp_extract_all(t, '!\[image\]\((image_\d+\.png)\)\s*(\d+),(\d+),(\d+),(\d+)') AS dets
-          FROM f)
-        SELECT doc_id,
-          regexp_replace(t, '!\[image\]\((image_\d+\.png)\)\s*(\d+),(\d+),(\d+),(\d+)', '![image](\1)', 'g') AS cleaned,
-          CAST(len(dets) AS BIGINT) AS n_det,
-          CAST(list_sum(list_transform(dets, m ->
-            CAST(regexp_extract(m, '!\[image\]\((image_\d+\.png)\)\s*(\d+),(\d+),(\d+),(\d+)', 4) AS BIGINT) -
-            CAST(regexp_extract(m, '!\[image\]\((image_\d+\.png)\)\s*(\d+),(\d+),(\d+),(\d+)', 2) AS BIGINT))) AS BIGINT) AS sum_w,
-          CAST(list_sum(list_transform(dets, m ->
-            CAST(regexp_extract(m, '!\[image\]\((image_\d+\.png)\)\s*(\d+),(\d+),(\d+),(\d+)', 5) AS BIGINT) -
-            CAST(regexp_extract(m, '!\[image\]\((image_\d+\.png)\)\s*(\d+),(\d+),(\d+),(\d+)', 3) AS BIGINT))) AS BIGINT) AS sum_h
-        FROM d ORDER BY doc_id""",
-    "q33_code_fence" ->
-      """WITH f AS (SELECT doc_id,
-          CASE CAST(doc_id AS BIGINT) % 3
-            WHEN 0 THEN concat('```json', chr(10), substr(text, 1, 40),
-              chr(10), '```')
-            WHEN 1 THEN concat('```', chr(10), substr(text, 1, 40),
-              chr(10), '```')
-            ELSE substr(text, 1, 40) END AS fenced
-          FROM documents)
-        SELECT doc_id,
-          CASE WHEN regexp_matches(fenced, '(?s)```(?:json)?\s*.*?\s*```')
-            THEN regexp_extract(fenced, '(?s)```(?:json)?\s*(.*?)\s*```', 1)
-            ELSE fenced END AS stripped
-        FROM f ORDER BY doc_id""",
-    "q38_pii" -> {
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val ip = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
-      val phone = "\\+[0-9][0-9 ()./-]{6,}[0-9]"
-      s"""WITH f AS (SELECT doc_id, concat(text,
-          ' Contact user', CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR),
-          '@example.',
-          CASE WHEN CAST(doc_id AS BIGINT) % 2 = 0 THEN 'com' ELSE 'org' END,
-          ' from ', CAST(CAST(doc_id AS BIGINT) % 256 AS VARCHAR), '.',
-          CAST((CAST(doc_id AS BIGINT) * 7) % 256 AS VARCHAR), '.0.1',
-          CASE WHEN CAST(doc_id AS BIGINT) % 4 = 0
-            THEN concat(' tel +41 44 ',
-              lpad(CAST(CAST(doc_id AS BIGINT) % 10000 AS VARCHAR), 4, '0'),
-              ' 00')
-            ELSE '' END) AS aug FROM documents),
-        r AS (SELECT doc_id, aug,
-          regexp_replace(regexp_replace(regexp_replace(aug,
-            '$email', '<EMAIL>', 'g'),
-            '$ip', '<IP>', 'g'),
-            '$phone', '<PHONE>', 'g') AS red FROM f)
-        SELECT doc_id,
-          CAST(len(regexp_extract_all(aug, '$email')) AS BIGINT) AS n_email,
-          CAST(len(regexp_extract_all(aug, '$ip')) AS BIGINT) AS n_ip,
-          CAST(len(regexp_extract_all(aug, '$phone')) AS BIGINT) AS n_phone,
-          CAST(length(red) AS BIGINT) AS red_len, md5(red) AS red_md5
-        FROM r ORDER BY doc_id"""
-    },
-    "q39_repetition" ->
-      """WITH f AS (SELECT doc_id, concat_ws(chr(10), text,
-          '- first point', '- second point', 'Click here to read more...',
-          CASE WHEN CAST(doc_id AS BIGINT) % 2 = 0
-            THEN 'Click here to read more...' END,
-          CASE WHEN CAST(doc_id AS BIGINT) % 3 = 0
-            THEN '# heading Click here to read more...' END) AS aug
-          FROM documents),
-        l AS (SELECT doc_id, aug,
-          list_filter(list_transform(string_split(aug, chr(10)),
-            x -> trim(x)), x -> x != '') AS ls FROM f),
-        m AS (SELECT doc_id, aug, ls,
-          CAST(len(ls) AS BIGINT) AS n,
-          CAST(len(ls) - len(list_distinct(ls)) AS BIGINT) AS ndup,
-          CAST(coalesce(list_sum(list_transform(ls, x -> length(x))), 0)
-            AS BIGINT) AS chars,
-          CAST(coalesce(list_sum(list_transform(list_distinct(ls),
-            x -> length(x))), 0) AS BIGINT) AS fchars,
-          CAST(len(list_filter(ls, x -> regexp_matches(x, '^[-*•]')))
-            AS BIGINT) AS bullets,
-          CAST(len(list_filter(ls, x -> regexp_matches(x, '\.\.\.$')))
-            AS BIGINT) AS ell_lines,
-          CAST(length(aug) - length(regexp_replace(aug, '#', '', 'g'))
-            AS BIGINT) AS hashes,
-          CAST(len(regexp_extract_all(aug, '\.\.\.')) AS BIGINT) AS ells,
-          CAST(len(list_filter(regexp_split_to_array(trim(aug), '\s+'),
-            t -> t != '')) AS BIGINT) AS toks FROM l),
-        gr AS (SELECT doc_id, unnest(list_transform(
-            generate_series(1, greatest(len(tk) - 1, 0)),
-            i -> array_to_string(tk[i:i+1], ' '))) AS g
-          FROM (SELECT doc_id, list_filter(regexp_split_to_array(
-            lower(trim(aug)), '\s+'), t -> t != '') AS tk FROM f)),
-        bt AS (SELECT doc_id, max(cnt * length(g)) AS best FROM
-          (SELECT doc_id, g, count(*) AS cnt FROM gr GROUP BY 1, 2)
-          GROUP BY 1)
-        SELECT doc_id, n AS n_lines,
-          CAST(CASE WHEN n > 0 THEN (ndup * 1000000) // n ELSE 0 END
-            AS BIGINT) AS dup_line_ppm,
-          CAST(CASE WHEN chars > 0
-            THEN ((chars - fchars) * 1000000) // chars ELSE 0 END
-            AS BIGINT) AS dup_char_ppm,
-          CAST(CASE WHEN n > 0 THEN (bullets * 1000000) // n ELSE 0 END
-            AS BIGINT) AS bullet_ppm,
-          CAST(CASE WHEN n > 0 THEN (ell_lines * 1000000) // n ELSE 0 END
-            AS BIGINT) AS ellipsis_ppm,
-          CAST(CASE WHEN toks > 0
-            THEN ((hashes + ells) * 1000000) // toks ELSE 0 END
-            AS BIGINT) AS symbol_ppm,
-          CAST(CASE WHEN length(aug) > 0
-            THEN (coalesce(best, 0) * 1000000) // length(aug) ELSE 0 END
-            AS BIGINT) AS top2gram_ppm
-        FROM m LEFT JOIN bt USING (doc_id) ORDER BY doc_id""",
-    "q40_para_dedup" ->
-      """WITH f AS (SELECT doc_id, concat_ws(chr(10)||chr(10),
-          CASE WHEN CAST(doc_id AS BIGINT) % 3 = 0
-            THEN 'Subscribe to our newsletter for updates.' END,
-          text,
-          CASE WHEN CAST(doc_id AS BIGINT) % 5 = 0
-            THEN 'All rights reserved. Terms of use apply.' END) AS aug
-          FROM documents),
-        p0 AS (SELECT doc_id,
-          list_filter(list_transform(regexp_split_to_array(aug, '\n{2,}'),
-            p -> trim(p)), p -> p != '') AS paras FROM f),
-        th AS (SELECT doc_id,
-          unnest(list_transform(paras, p -> md5(p))) AS ph,
-          unnest(range(1, len(paras) + 1)) AS pos FROM p0),
-        dup AS (SELECT ph FROM th GROUP BY ph
-          HAVING count(DISTINCT doc_id) >= 3),
-        dr AS (SELECT doc_id, list(pos) AS dp
-          FROM th JOIN dup USING (ph) GROUP BY doc_id),
-        cl AS (SELECT p0.doc_id, paras,
-          coalesce(dp, CAST([] AS BIGINT[])) AS dp
-          FROM p0 LEFT JOIN dr ON p0.doc_id = dr.doc_id),
-        fin AS (SELECT doc_id,
-          CAST(len(paras) AS BIGINT) AS n_paras,
-          CAST(len(dp) AS BIGINT) AS n_dropped,
-          array_to_string(list_filter(paras,
-            (p, i) -> NOT list_contains(dp, i)),
-            chr(10)||chr(10)) AS ct FROM cl)
-        SELECT doc_id, n_paras, n_dropped,
-          CAST(length(ct) AS BIGINT) AS clean_len, md5(ct) AS clean_md5
-        FROM fin ORDER BY doc_id""",
-    "q44_hash_split" ->
-      """WITH s AS (SELECT lang,
-          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':split'),
-            1, 8)) AS BIGINT) % 10000 AS slot,
-          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':sample'),
-            1, 8)) AS BIGINT) % 10000 AS sslot
-          FROM documents)
-        SELECT CASE WHEN slot < 8000 THEN 'train'
-            WHEN slot < 9000 THEN 'val' ELSE 'test' END AS split,
-          lang, CAST(count(*) AS BIGINT) AS n_docs,
-          CAST(sum(CASE WHEN sslot < 2500 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_sampled
-        FROM s GROUP BY 1, 2 ORDER BY 1, 2""",
-    // q45: same planted-benchmark construction, same shingle unit as
-    // the Spark side (distinct word 8-grams, md5-prefix-32 hashed),
-    // overlap counted over DISTINCT grams per doc
-    "q45_decontam" -> {
-      def itemSql(i: String): String =
-        s"""'evaluation benchmark item ' || $i ||
-          ' the quick brown fox number ' || $i ||
-          ' jumps over the lazy dog ' || $i"""
-      s"""WITH bench AS (SELECT
-          ${itemSql("CAST(doc_id AS VARCHAR)")} AS text
-          FROM documents WHERE doc_id < 10),
-        bg AS (SELECT DISTINCT
-            CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS gh
-          FROM (SELECT unnest(${shingleSql(8)}) AS g FROM bench)),
-        corpus AS (SELECT doc_id,
-          CASE WHEN doc_id % 11 = 3
-            THEN text || ' ' || (${itemSql("CAST(doc_id % 10 AS VARCHAR)")})
-            ELSE text END AS text
-          FROM documents),
-        cg AS (SELECT doc_id, ${shingleSql(8)} AS grams FROM corpus),
-        ex AS (SELECT doc_id,
-            CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS gh
-          FROM (SELECT doc_id, unnest(grams) AS g FROM cg)),
-        hits AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hit
-          FROM ex JOIN bg USING (gh) GROUP BY doc_id)
-        SELECT cg.doc_id, CAST(len(grams) AS BIGINT) AS n_grams,
-          CAST(COALESCE(n_hit, 0) AS BIGINT) AS n_hit,
-          CAST(CASE WHEN len(grams) > 0
-            THEN (COALESCE(n_hit, 0) * 1000000) // len(grams)
-            ELSE 0 END AS BIGINT) AS contamination_ppm
-        FROM cg LEFT JOIN hits ON cg.doc_id = hits.doc_id
-        ORDER BY cg.doc_id"""
-    },
-    // q46: per-shard running token offset (separator-inclusive), cut
-    // into 512-token sequences; // is DuckDB's integer DIV twin
-    "q46_pack" ->
-      """WITH thin AS (SELECT doc_id,
-          CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':pack'),
-            1, 8)) AS BIGINT) % 8 AS shard,
-          md5(CAST(doc_id AS VARCHAR) || ':pack:o') AS ord,
-          CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-            t -> t != '')) AS BIGINT) + 1 AS sz
-          FROM documents),
-        c AS (SELECT doc_id, shard, sz,
-          CAST(SUM(sz) OVER (PARTITION BY shard ORDER BY ord, doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum
-          FROM thin)
-        SELECT doc_id, shard, CAST(sz - 1 AS BIGINT) AS n_tokens,
-          CAST(cum - sz AS BIGINT) AS start_offset,
-          CAST((cum - sz) // 512 AS BIGINT) AS first_seq,
-          CAST((cum - 1) // 512 AS BIGINT) AS last_seq,
-          CAST((cum - 1) // 512 - (cum - sz) // 512 + 1 AS BIGINT)
-            AS n_chunks
-        FROM c ORDER BY doc_id""",
-    // q48: literally the same regexes/cases as Curation.canonicalUrl
-    "q48_url_canon" ->
-      """WITH u AS (SELECT doc_id,
-          (CASE WHEN doc_id % 2 = 0 THEN 'HTTP://' ELSE 'https://' END)
-          || 'WWW' || CAST(doc_id % 5 AS VARCHAR) || '.Example'
-          || CAST(doc_id % 3 AS VARCHAR) || '.COM'
-          || (CASE WHEN doc_id % 4 = 0 THEN ':80'
-              WHEN doc_id % 4 = 1 THEN ':8080' ELSE '' END)
-          || '/Doc/' || CAST(doc_id % 25 AS VARCHAR)
-          || (CASE WHEN doc_id % 3 = 0 THEN '?utm_source=feed&z=1&a=2'
-              WHEN doc_id % 3 = 1 THEN '?fbclid=XYZ' ELSE '' END)
-          || (CASE WHEN doc_id % 5 = 0 THEN '#Section2' ELSE '' END)
-            AS url
-          FROM documents),
-        p AS (SELECT doc_id, url, regexp_replace(url, '#.*$', '')
-            AS nofrag FROM u),
-        q AS (SELECT doc_id, url, nofrag,
-          lower(regexp_extract(nofrag,
-            '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-          lower(regexp_extract(nofrag,
-            '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)) AS hostport,
-          regexp_extract(nofrag,
-            '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS path0,
-          COALESCE(array_to_string(list_sort(list_filter(
-            string_split(regexp_extract(nofrag, '\?(.*)$', 1), '&'),
-            pp -> pp != '' AND NOT regexp_matches(pp,
-              '^(utm_[A-Za-z0-9_]*|gclid|fbclid|ref|mc_cid|mc_eid)(=|$)')
-            )), '&'), '') AS cq
-          FROM p),
-        c AS (SELECT doc_id, url,
-          CASE WHEN scheme = '' THEN url ELSE scheme || '://' ||
-            (CASE WHEN scheme = 'http'
-              THEN regexp_replace(hostport, ':80$', '')
-              WHEN scheme = 'https'
-              THEN regexp_replace(hostport, ':443$', '')
-              ELSE hostport END) ||
-            (CASE WHEN path0 = '' THEN '/' ELSE path0 END) ||
-            (CASE WHEN cq = '' THEN '' ELSE '?' || cq END) END
-            AS canon_url
-          FROM q)
-        SELECT doc_id, url, canon_url,
-          (row_number() OVER (PARTITION BY canon_url ORDER BY doc_id)
-            = 1) AS is_rep
-        FROM c ORDER BY doc_id""",
-    // q47: per-language cumulative token offsets in md5(id:budget)
-    // order; kept = the budgeted hash-order prefix (incl. straddler)
-    "q47_token_budget" ->
-      s"""WITH thin AS (SELECT doc_id, lang,
-          CAST(len($toksSql) AS BIGINT) AS n_tokens,
-          md5(CAST(doc_id AS VARCHAR) || ':budget') AS ord
-          FROM documents),
-        c AS (SELECT doc_id, lang, n_tokens,
-          CAST(SUM(n_tokens) OVER (PARTITION BY lang ORDER BY ord, doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            - n_tokens AS BIGINT) AS start_tok
-          FROM thin)
-        SELECT doc_id, lang, n_tokens, start_tok,
-          start_tok < (CASE lang WHEN 'en' THEN 3000 WHEN 'zh' THEN 800
-            ELSE 1000 END) AS kept
-        FROM c ORDER BY doc_id""",
-    // q54: same distinct-shingle unit as the dedup family
-    "q54_vocab" ->
-      s"""SELECT gram, CAST(COUNT(*) AS BIGINT) AS n_docs FROM (
-          SELECT doc_id, unnest(${shingleSql(2)}) AS gram
-          FROM documents)
-        GROUP BY gram ORDER BY n_docs DESC, gram LIMIT 50""",
-    // q53: same md5-prefix token hash both sides, so even
-    // hash-collision merges reproduce
-    "q53_token_df" ->
-      s"""WITH thin AS (SELECT DISTINCT doc_id,
-          CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT) AS th
-          FROM (SELECT doc_id, unnest(list_distinct($toksSql)) AS tk
-            FROM documents)),
-        dft AS (SELECT th, COUNT(*) AS df FROM thin GROUP BY th)
-        SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_distinct_tokens,
-          CAST(SUM(df) AS BIGINT) AS sum_df,
-          CAST(CASE WHEN COUNT(*) > 0
-            THEN (SUM(CASE WHEN df <= 2 THEN 1 ELSE 0 END) * 1000000)
-              // COUNT(*) ELSE 0 END AS BIGINT) AS rare_ppm
-        FROM thin t JOIN dft USING (th)
-        GROUP BY t.doc_id ORDER BY t.doc_id""",
-    // q52: identical integer window arithmetic; both engines' list
-    // slices are clamp-at-end
-    "q52_chunk" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-        nc AS (SELECT doc_id, toks,
-          CASE WHEN len(toks) <= 64 THEN 1
-            ELSE (len(toks) - 64 + 47) // 48 + 1 END AS n_chunks
-          FROM t),
-        ex AS (SELECT doc_id, toks,
-          unnest(generate_series(0, n_chunks - 1)) AS chunk_id
-          FROM nc)
-        SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-          CAST(len(toks[chunk_id*48 + 1 : chunk_id*48 + 64]) AS BIGINT)
-            AS n_chunk_tokens,
-          COALESCE(array_to_string(
-            toks[chunk_id*48 + 1 : chunk_id*48 + 64], ' '), '')
-            AS chunk_text
-        FROM ex ORDER BY doc_id, chunk_id""",
-    // q50: identical integer rank arithmetic; value-at-rank is
-    // deterministic under ties
-    "q50_profile" ->
-      s"""WITH thin AS (SELECT lang,
-          CAST(len($toksSql) AS BIGINT) AS v FROM documents),
-        r AS (SELECT lang, v,
-          CAST(row_number() OVER (PARTITION BY lang ORDER BY v)
-            AS BIGINT) AS rn,
-          CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n
-          FROM thin)
-        SELECT lang, max(n) AS n_rows,
-          CAST(sum(v) AS BIGINT) AS total,
-          min(v) AS v_min, max(v) AS v_max,
-          max(CASE WHEN rn = (50 * (n - 1)) // 100 + 1 THEN v END) AS p50,
-          max(CASE WHEN rn = (90 * (n - 1)) // 100 + 1 THEN v END) AS p90,
-          max(CASE WHEN rn = (99 * (n - 1)) // 100 + 1 THEN v END) AS p99
-        FROM r GROUP BY lang ORDER BY lang""",
-    // q68: same md5-prefix token hashes, same integer DIV arithmetic —
-    // both count tables and the per-doc mean reproduce exactly
-    "q68_bigram_fluency" ->
-      s"""WITH t AS (SELECT doc_id, list_transform($toksSql,
-          tk -> CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT)) AS hs
-          FROM documents),
-        pr AS (SELECT doc_id, hs[i] AS ph, hs[i + 1] AS ch
-          FROM (SELECT doc_id, hs,
-              unnest(generate_series(1, len(hs) - 1)) AS i
-            FROM t WHERE len(hs) >= 2)),
-        bc AS (SELECT ph, ch, CAST(COUNT(*) AS BIGINT) AS bcnt
-          FROM pr GROUP BY 1, 2),
-        pc AS (SELECT ph, CAST(COUNT(*) AS BIGINT) AS pcnt
-          FROM pr GROUP BY 1),
-        sc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-            CAST(SUM((bcnt * 1000000) // (pcnt + 8)) AS BIGINT) AS s,
-            CAST(SUM(CASE WHEN bcnt <= 2 THEN 1 ELSE 0 END) AS BIGINT)
-              AS nr
-          FROM pr JOIN bc USING (ph, ch) JOIN pc USING (ph)
-          GROUP BY doc_id)
-        SELECT d.doc_id, COALESCE(n_bigrams, 0) AS n_bigrams,
-          CAST(CASE WHEN COALESCE(n_bigrams, 0) > 0
-            THEN (nr * 1000000) // n_bigrams ELSE 0 END AS BIGINT)
-            AS rare_bigram_ppm,
-          CAST(CASE WHEN COALESCE(n_bigrams, 0) > 0
-            THEN s // n_bigrams ELSE 0 END AS BIGINT) AS fluency_ppm
-        FROM documents d LEFT JOIN sc USING (doc_id)
-        ORDER BY doc_id""",
-    // q88: q68's fluency pipeline verbatim, then the CCNet cut — the
-    // per-language token-mass running sum over (fluency desc, doc_id)
-    // and the integer start·3 tercile comparison reproduce exactly
-    "q88_ccnet_buckets" ->
-      s"""WITH t AS (SELECT doc_id, list_transform($toksSql,
-          tk -> CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT)) AS hs
-          FROM documents),
-        pr AS (SELECT doc_id, hs[i] AS ph, hs[i + 1] AS ch
-          FROM (SELECT doc_id, hs,
-              unnest(generate_series(1, len(hs) - 1)) AS i
-            FROM t WHERE len(hs) >= 2)),
-        bc AS (SELECT ph, ch, CAST(COUNT(*) AS BIGINT) AS bcnt
-          FROM pr GROUP BY 1, 2),
-        pc AS (SELECT ph, CAST(COUNT(*) AS BIGINT) AS pcnt
-          FROM pr GROUP BY 1),
-        sc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-            CAST(SUM((bcnt * 1000000) // (pcnt + 8)) AS BIGINT) AS s
-          FROM pr JOIN bc USING (ph, ch) JOIN pc USING (ph)
-          GROUP BY doc_id),
-        f AS (SELECT d.doc_id, d.lang,
-            CAST(len($toksSql) AS BIGINT) AS n_tokens,
-            CAST(CASE WHEN COALESCE(n_bigrams, 0) > 0
-              THEN s // n_bigrams ELSE 0 END AS BIGINT) AS fluency_ppm
-          FROM documents d LEFT JOIN sc USING (doc_id)),
-        r AS (SELECT *,
-            CAST(SUM(n_tokens) OVER (PARTITION BY lang
-              ORDER BY fluency_ppm DESC, doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              - n_tokens AS BIGINT) AS start_tok,
-            CAST(SUM(n_tokens) OVER (PARTITION BY lang) AS BIGINT)
-              AS total_tok
-          FROM f)
-        SELECT doc_id, lang, n_tokens, fluency_ppm, start_tok, total_tok,
-          CASE WHEN start_tok * 3 < total_tok THEN 'head'
-            WHEN start_tok * 3 < 2 * total_tok THEN 'middle'
-            ELSE 'tail' END AS bucket
-        FROM r ORDER BY doc_id""",
-    // q70: same whitespace tokenization, same char-level initial
-    // symbols + '</w>' marker, same exact long counts and total
-    // tie-break — the BPE trainer's round-0 argmax input
-    "q70_bpe_pairs" ->
-      s"""WITH wc AS (SELECT tk AS word, CAST(COUNT(*) AS BIGINT) AS n
-          FROM (SELECT unnest($toksSql) AS tk FROM documents)
-          GROUP BY tk),
-        syms AS (SELECT n, list_append(
-            list_transform(generate_series(1, length(word)),
-              i -> substr(word, i, 1)), '</w>') AS s
-          FROM wc),
-        pairs AS (SELECT n, s[i] AS pa, s[i + 1] AS pb
-          FROM (SELECT n, s,
-              unnest(generate_series(1, len(s) - 1)) AS i
-            FROM syms WHERE len(s) >= 2))
-        SELECT pa, pb, CAST(SUM(n) AS BIGINT) AS cnt
-        FROM pairs GROUP BY pa, pb
-        ORDER BY cnt DESC, pa, pb LIMIT 100""",
-    // q71: same host synthesis as q41; rank = row_number over
-    // (score desc, id) per host — identical tie-break contract
-    "q71_host_cap" ->
-      """WITH h AS (SELECT doc_id, concat(source, '-',
-          CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR),
-          '.example.com') AS host, n_chars FROM documents),
-        r AS (SELECT *,
-          CAST(row_number() OVER (PARTITION BY host
-            ORDER BY n_chars DESC, doc_id) AS BIGINT) AS stratum_rank,
-          CAST(count(*) OVER (PARTITION BY host) AS BIGINT) AS stratum_n
-          FROM h)
-        SELECT doc_id, host, n_chars, stratum_rank, stratum_n,
-          stratum_rank <= 5 AS kept
-        FROM r ORDER BY doc_id""",
-    // q72: the same distinct-score histogram construction; HUGEINT
-    // carries the numerator (DuckDB's native 128-bit twin of the
-    // Spark side's decimal(38,0)), final integral // then BIGINT
-    "q72_rank_auc" ->
-      """WITH d AS (SELECT source, CAST(n_chars AS BIGINT) AS s,
-          (lang = 'en') AS lb FROM documents
-          WHERE lang IS NOT NULL AND n_chars IS NOT NULL),
-        hist AS (SELECT source, s,
-          CAST(SUM(CASE WHEN lb THEN 1 ELSE 0 END) AS BIGINT) AS p,
-          CAST(SUM(CASE WHEN lb THEN 0 ELSE 1 END) AS BIGINT) AS m
-          FROM d GROUP BY source, s),
-        cum AS (SELECT *, SUM(m) OVER (PARTITION BY source ORDER BY s
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - m AS mb
-          FROM hist),
-        agg AS (SELECT source, CAST(SUM(p) AS BIGINT) AS n_pos,
-          CAST(SUM(m) AS BIGINT) AS n_neg,
-          SUM(CAST(p AS HUGEINT) * (2 * mb + m)) AS num2
-          FROM cum GROUP BY source)
-        SELECT source, n_pos, n_neg,
-          CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-            CAST((num2 * 1000000) //
-              (2 * CAST(n_pos AS HUGEINT) * n_neg) AS BIGINT)
-          ELSE NULL END AS auc_ppm
-        FROM agg ORDER BY source""",
-    // q73/q74: same synthesized edge table; `//` on non-negative
-    // operands == Spark's integral DIV
-    "q73_web_degrees" ->
-      s"""WITH e AS ($webEdgesSql),
-        nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        o AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS out_degree,
-          CAST(COUNT(DISTINCT dst) AS BIGINT) AS n_dst_hosts
-          FROM e GROUP BY src),
-        i AS (SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS in_degree
-          FROM e GROUP BY dst)
-        SELECT nd.node,
-          CAST(COALESCE(out_degree, 0) AS BIGINT) AS out_degree,
-          CAST(COALESCE(n_dst_hosts, 0) AS BIGINT) AS n_dst_hosts,
-          CAST(COALESCE(in_degree, 0) AS BIGINT) AS in_degree
-        FROM nd LEFT JOIN o ON o.node = nd.node
-        LEFT JOIN i ON i.node = nd.node
-        ORDER BY nd.node""",
-    "q74_pagerank" -> q74Sql,
-    "q94_hits" -> q94Sql,
-    "q99_trustrank" -> q99Sql,
-    // q100: the same hashed uni+bi feature stream, dense smoothed
-    // weight table (two truncating DIVs mirrored), mean-weight score
-    // and the md5-slot Bernoulli keep — every step integer-exact
-    "q100_dsir" ->
-      s"""WITH t AS (SELECT doc_id, source, list_transform($toksSql,
-          tk -> CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT)) AS hs
-          FROM documents),
-        feat AS (
-          SELECT doc_id, source, unnest(hs) % 65536 AS bucket FROM t
-          UNION ALL
-          SELECT doc_id, source, (hs[i] * 1000003 + hs[i + 1]) % 65536
-          FROM (SELECT doc_id, source, hs,
-              unnest(generate_series(1, len(hs) - 1)) AS i
-            FROM t WHERE len(hs) >= 2)),
-        tc AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS ct
-          FROM feat WHERE source = 'src0' GROUP BY 1),
-        rc AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS cr
-          FROM feat GROUP BY 1),
-        tot AS (SELECT
-          (SELECT COUNT(*) FROM feat WHERE source = 'src0') AS nt,
-          (SELECT COUNT(*) FROM feat) AS nr),
-        wt AS (SELECT b.range AS bucket,
-            LEAST(64000000, ((COALESCE(tc.ct, 0) + 1) *
-              (((nr + 65536) * 1000000) // (nt + 65536)))
-              // (COALESCE(rc.cr, 0) + 1)) AS w_ppm
-          FROM range(65536) b
-          LEFT JOIN tc ON tc.bucket = b.range
-          LEFT JOIN rc ON rc.bucket = b.range
-          CROSS JOIN tot),
-        sc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS nf,
-            CAST(SUM(w_ppm) AS BIGINT) AS ws
-          FROM feat JOIN wt USING (bucket) GROUP BY 1)
-        SELECT d.doc_id, COALESCE(nf, 0) AS n_features,
-          CAST(CASE WHEN COALESCE(nf, 0) > 0 THEN ws // nf
-            ELSE 0 END AS BIGINT) AS importance_ppm,
-          (CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)
-              || ':dsir'), 1, 8)) AS BIGINT) % 10000) * 100 <
-            LEAST(1000000, (CASE WHEN COALESCE(nf, 0) > 0
-              THEN ws // nf ELSE 0 END) * 1200000 // 1000000) AS kept
-        FROM documents d LEFT JOIN sc USING (doc_id)
-        ORDER BY d.doc_id""",
-    // q101: winnowing recomputed from scratch — word-4-gram 32-bit
-    // hashes, window-of-8 minima (distinct per doc; positions drop out
-    // of the pair semantics), rare-fp blocking in [2,64], exact
-    // distinct-fp intersection, min-normalized integer-ppm overlap
-    "q101_winnow" ->
-      s"""WITH b0 AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          CASE WHEN CAST(doc_id AS BIGINT) % 23 = 7
-            THEN text || ' ' || '${sqlLit(PlantPassage)}'
-            ELSE text END AS text
-          FROM documents),
-        tk AS (SELECT id, $toksSql AS tk FROM b0),
-        g AS (SELECT id, list_transform(
-            generate_series(0, len(tk) - 4),
-            i -> CAST(('0x' || substr(md5(
-              array_to_string(tk[i+1:i+4], ' ')), 1, 8)) AS BIGINT))
-            AS hs
-          FROM tk WHERE len(tk) >= 4),
-        w AS (SELECT id, hs, LEAST(8, len(hs)) AS ew FROM g),
-        fps AS (SELECT id, list_distinct(list_transform(
-            generate_series(1, len(hs) - ew + 1),
-            i -> list_min(hs[i:i+ew-1]))) AS fpl FROM w),
-        thin AS (SELECT id, unnest(fpl) AS fp FROM fps),
-        dft AS (SELECT fp FROM thin GROUP BY fp
-          HAVING COUNT(*) BETWEEN 2 AND 64),
-        blocked AS (SELECT id, thin.fp FROM thin JOIN dft USING (fp)),
-        cand AS (SELECT DISTINCT l.id AS a, r.id AS b
-          FROM blocked l JOIN blocked r
-            ON l.fp = r.fp AND l.id < r.id),
-        sc AS (SELECT a, b,
-            CAST(len(list_intersect(sa.fpl, sb.fpl)) AS BIGINT)
-              AS shared_fps,
-            CAST(len(sa.fpl) AS BIGINT) AS a_fps,
-            CAST(len(sb.fpl) AS BIGINT) AS b_fps
-          FROM cand JOIN fps sa ON cand.a = sa.id
-            JOIN fps sb ON cand.b = sb.id)
-        SELECT a, b, shared_fps, a_fps, b_fps,
-          shared_fps * 1000000 // LEAST(a_fps, b_fps) AS overlap_ppm
-        FROM sc
-        WHERE shared_fps * 1000000 // LEAST(a_fps, b_fps) >= 50000
-        ORDER BY a, b""",
-    // q102: the full margin criterion re-derived — same left-to-right
-    // double cosine (floored to ppm once), integer top-4 neighborhood
-    // means via truncating //, forward-best ranks, ratio margin.
-    // DuckDB's // and Spark's div both truncate toward zero, so the
-    // arithmetic agrees on negative cosines too.
-    "q102_margin_mining" ->
-      s"""WITH v AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings),
-        xs AS (SELECT vec_id AS x, e FROM v WHERE vec_id % 2 = 0),
-        ys AS (SELECT vec_id AS y, e FROM v WHERE vec_id % 2 = 1),
-        p AS (SELECT x, y,
-            CAST(floor((${cosSql("xs.e", "ys.e")}) * 1000000) AS BIGINT)
-              AS cos_ppm
-          FROM xs CROSS JOIN ys),
-        rx AS (SELECT x, y, cos_ppm, row_number() OVER (
-            PARTITION BY x ORDER BY cos_ppm DESC, y) AS rk FROM p),
-        ry AS (SELECT x, y, cos_ppm, row_number() OVER (
-            PARTITION BY y ORDER BY cos_ppm DESC, x) AS rk FROM p),
-        ax AS (SELECT x, CAST(SUM(cos_ppm) // COUNT(*) AS BIGINT)
-            AS avg_x_ppm FROM rx WHERE rk <= 4 GROUP BY x),
-        ay AS (SELECT y, CAST(SUM(cos_ppm) // COUNT(*) AS BIGINT)
-            AS avg_y_ppm FROM ry WHERE rk <= 4 GROUP BY y),
-        best AS (SELECT x, y, cos_ppm FROM rx WHERE rk = 1)
-        SELECT best.x, best.y, best.cos_ppm, avg_x_ppm, avg_y_ppm,
-          CAST((cos_ppm * 2000000) // (avg_x_ppm + avg_y_ppm) AS BIGINT)
-            AS margin_ppm
-        FROM best JOIN ax USING (x) JOIN ay USING (y)
-        WHERE avg_x_ppm + avg_y_ppm > 0
-          AND (cos_ppm * 2000000) // (avg_x_ppm + avg_y_ppm) >= 1000000
-        ORDER BY best.x""",
-    // q81: every metadata field re-derived from the synthesis formulas
-    // (title entity-decode + markup strip, description across attr
-    // orders/quote styles, canonical resolution incl. the <base href>
-    // shift and ../ dot-segment removal, robots directive tokens)
-    "q81_page_meta" ->
-      s"""WITH p AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          $linkUrlSql AS url, $linkHostSql AS h FROM documents)
-        SELECT url,
-          'Doc & d' || CAST(id AS VARCHAR) || ' x' AS title,
-          CASE WHEN id % 2 = 0 THEN 'Summary <' || CAST(id % 10 AS VARCHAR)
-              || '> of doc ' || CAST(id AS VARCHAR)
-            ELSE 'Alt summary ' || CAST(id % 10 AS VARCHAR) END
-            AS description,
-          CASE WHEN id % 3 = 0 THEN 'k' || CAST(id % 4 AS VARCHAR)
-              || ', k' || CAST(id % 6 AS VARCHAR)
-            ELSE '' END AS keywords,
-          CASE WHEN id % 2 = 0 THEN 'OG d' || CAST(id AS VARCHAR)
-            ELSE '' END AS og_title,
-          'article' AS og_type,
-          CASE CAST(id % 4 AS INTEGER)
-            WHEN 0 THEN 'http://canon.example.com/c'
-              || CAST(id % 10 AS VARCHAR)
-            WHEN 1 THEN '../c/p' || CAST(id % 5 AS VARCHAR)
-            WHEN 2 THEN '/canon/' || CAST(id % 7 AS VARCHAR)
-            ELSE '' END AS canonical_raw,
-          CASE CAST(id % 4 AS INTEGER)
-            WHEN 0 THEN 'http://canon.example.com/c'
-              || CAST(id % 10 AS VARCHAR)
-            WHEN 1 THEN CASE WHEN id % 5 = 0
-              THEN 'http://base' || CAST(id % 3 AS VARCHAR)
-                || '.example.org/dir/c/p' || CAST(id % 5 AS VARCHAR)
-              ELSE 'http://' || h || '/c/p' || CAST(id % 5 AS VARCHAR)
-              END
-            WHEN 2 THEN CASE WHEN id % 5 = 0
-              THEN 'http://base' || CAST(id % 3 AS VARCHAR)
-                || '.example.org/canon/' || CAST(id % 7 AS VARCHAR)
-              ELSE 'http://' || h || '/canon/' || CAST(id % 7 AS VARCHAR)
-              END
-            ELSE '' END AS canonical_abs,
-          CASE WHEN id % 5 = 0 THEN 'http://base'
-              || CAST(id % 3 AS VARCHAR) || '.example.org/dir/sub/'
-            ELSE '' END AS base_href,
-          id % 6 IN (0, 1) AS noindex,
-          id % 6 = 0 AS nofollow_meta,
-          CAST(2 + (CASE WHEN id % 3 = 0 THEN 1 ELSE 0 END)
-            + (CASE WHEN id % 2 = 0 THEN 1 ELSE 0 END)
-            + (CASE WHEN id % 6 < 2 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_meta_tags
-        FROM p ORDER BY url""",
-    // q104: every field + block position re-derived from the plant
-    // formulas; block order on the page is A (always), B (id%3=0),
-    // C (id%5=0), D (id%11=0)
-    "q104_jsonld" ->
-      s"""WITH p AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          $linkUrlSql AS url FROM documents),
-        a AS (SELECT url, 0 AS block_pos, TRUE AS valid,
-          'Article' AS ld_type,
-          'Doc ' || CAST(id AS VARCHAR) || ' headline' AS headline,
-          CAST(NULL AS VARCHAR) AS name,
-          CASE WHEN id % 4 = 0 THEN 'Plain ' || CAST(id % 5 AS VARCHAR)
-            ELSE 'Author ' || CAST(id % 5 AS VARCHAR) END AS author_name,
-          '2024-0' || CAST(id % 9 + 1 AS VARCHAR) || '-15'
-            AS date_published,
-          CAST(NULL AS VARCHAR) AS price, CAST(1 AS BIGINT) AS n_entities
-          FROM p),
-        bq AS (SELECT url, 1 AS block_pos, TRUE AS valid,
-          'Product' AS ld_type, CAST(NULL AS VARCHAR) AS headline,
-          'P' || CAST(id % 7 AS VARCHAR) AS name,
-          CAST(NULL AS VARCHAR) AS author_name,
-          CAST(NULL AS VARCHAR) AS date_published,
-          CAST(id % 100 AS VARCHAR) || '.99' AS price,
-          CAST(1 AS BIGINT) AS n_entities
-          FROM p WHERE id % 3 = 0),
-        cq AS (SELECT url,
-          1 + (CASE WHEN id % 3 = 0 THEN 1 ELSE 0 END) AS block_pos,
-          TRUE AS valid, 'WebPage' AS ld_type,
-          CAST(NULL AS VARCHAR) AS headline, CAST(NULL AS VARCHAR) AS name,
-          CAST(NULL AS VARCHAR) AS author_name,
-          CAST(NULL AS VARCHAR) AS date_published,
-          CAST(NULL AS VARCHAR) AS price, CAST(2 AS BIGINT) AS n_entities
-          FROM p WHERE id % 5 = 0),
-        dq AS (SELECT url,
-          1 + (CASE WHEN id % 3 = 0 THEN 1 ELSE 0 END)
-            + (CASE WHEN id % 5 = 0 THEN 1 ELSE 0 END) AS block_pos,
-          FALSE AS valid, CAST(NULL AS VARCHAR) AS ld_type,
-          CAST(NULL AS VARCHAR) AS headline, CAST(NULL AS VARCHAR) AS name,
-          CAST(NULL AS VARCHAR) AS author_name,
-          CAST(NULL AS VARCHAR) AS date_published,
-          CAST(NULL AS VARCHAR) AS price, CAST(0 AS BIGINT) AS n_entities
-          FROM p WHERE id % 11 = 0)
-        SELECT url, CAST(block_pos AS INTEGER) AS block_pos, valid,
-          ld_type, headline, name, author_name, date_published, price,
-          n_entities
-        FROM (SELECT * FROM a UNION ALL SELECT * FROM bq
-          UNION ALL SELECT * FROM cq UNION ALL SELECT * FROM dq)
-        ORDER BY url, block_pos""",
-    // q105: resolved-absolute rows re-derived from the plant — every
-    // tag/quote/relative-href variant must normalize to these
-    "q105_hreflang" ->
-      """WITH b AS (SELECT CAST(doc_id AS BIGINT) AS d FROM documents
-          WHERE CAST(doc_id AS BIGINT) % 7 <> 0),
-        u AS (SELECT d, d // 3 AS g,
-          CASE CAST(d % 3 AS INTEGER) WHEN 0 THEN 'en' WHEN 1 THEN 'de'
-            ELSE 'fr' END AS l FROM b),
-        u2 AS (SELECT d, g, l,
-          'http://t' || CAST(g % 13 AS VARCHAR) || '.example.com' AS base
-          FROM u)
-        SELECT base || '/' || l || '/p' || CAST(g AS VARCHAR) || '.html'
-            AS url,
-          CAST(v.pos AS INTEGER) AS link_pos, v.hl AS hreflang,
-          base || '/' || v.tl || '/p' || CAST(g AS VARCHAR) || '.html'
-            AS href_abs
-        FROM u2 CROSS JOIN (VALUES (0, 'en', 'en'), (1, 'de', 'de'),
-          (2, 'fr', 'fr'), (3, 'x-default', 'en')) v(pos, hl, tl)
-        ORDER BY url, link_pos""",
-    // q106: the planted triples ARE the components; label = min url
-    // (the de page — lexicographic), 3 members whenever any sibling
-    // declared the group
-    "q106_translation_clusters" ->
-      """WITH g0 AS (SELECT DISTINCT CAST(doc_id AS BIGINT) // 3 AS g
-          FROM documents WHERE CAST(doc_id AS BIGINT) % 7 <> 0),
-        urls AS (SELECT g,
-          'http://t' || CAST(g % 13 AS VARCHAR) || '.example.com/' || l
-            || '/p' || CAST(g AS VARCHAR) || '.html' AS url
-          FROM g0 CROSS JOIN (SELECT unnest(['en', 'de', 'fr']) AS l))
-        SELECT url, min(url) OVER (PARTITION BY g) AS cluster,
-          CAST(3 AS BIGINT) AS n_members
-        FROM urls ORDER BY url""",
-    "q75_link_extract" -> q75Sql,
-    "q76_link_graph" -> q76Sql,
-    // q82: transitive closure via recursive CTE = the ground truth the
-    // star contraction must reproduce; component label = min host
-    "q82_host_components" ->
-      s"""WITH RECURSIVE ew AS ($webEdgesSql),
-        e0 AS (SELECT DISTINCT src AS a, dst AS b FROM ew
-          WHERE src <> dst),
-        edges AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0),
-        nodes AS (SELECT src AS n FROM ew UNION SELECT dst FROM ew),
-        comp(id, canon) AS (
-          SELECT n, n FROM nodes
-          UNION
-          SELECT e.a, c.canon FROM edges e JOIN comp c ON c.id = e.b),
-        lab AS (SELECT id, MIN(canon) AS component FROM comp GROUP BY 1),
-        sz AS (SELECT component, CAST(COUNT(*) AS BIGINT)
-          AS component_size FROM lab GROUP BY 1)
-        SELECT lab.id AS host, lab.component, sz.component_size
-        FROM lab JOIN sz ON sz.component = lab.component
-        ORDER BY host""",
-    // q83: admission by construction (q80's planted decisions), host
-    // rank re-run with the q74 CTE chain, politeness cap via
-    // row_number — the Spark side must parse robots, run PageRank and
-    // rank shard-safely to agree
-    "q83_crawl_frontier" ->
-      s"""WITH e AS ($webEdgesSql),
-        nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        dg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-          FROM e GROUP BY src),
-        r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank_ppb
-          FROM nd)${prRoundsSql(2)},
-        p AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          $linkHostSql AS h FROM documents),
-        u AS (
-          SELECT DISTINCT 'http://' || h || '/docs/d'
-            || CAST(id AS VARCHAR) || '.html' AS url, h AS host FROM p
-          UNION
-          SELECT DISTINCT 'http://' || h || '/private/pub/x'
-            || CAST(id % 5 AS VARCHAR), h FROM p
-          UNION
-          SELECT DISTINCT 'http://' || h || '/tmp'
-            || CAST(id % 3 AS VARCHAR) || '/y', h FROM p
-          WHERE id % 3 <> id % 7),
-        sc AS (SELECT u.url, u.host,
-          CAST(r2.rank_ppb AS BIGINT) AS rank_ppb
-          FROM u JOIN r2 ON r2.node = u.host),
-        rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY host
-          ORDER BY rank_ppb DESC, url) AS BIGINT) AS stratum_rank
-          FROM sc)
-        SELECT url, host, rank_ppb, stratum_rank FROM rk
-        WHERE stratum_rank <= 3 ORDER BY host, stratum_rank""",
-    // q84: the three surviving blocks per host by construction
-    // (positions 0/1/4 — the loc-less blocks leave audit gaps);
-    // priority 0.k → k·100000 ppm, default 500000
-    "q84_sitemap" ->
-      """WITH h AS (SELECT DISTINCT concat(source, '-',
-          CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR),
-          '.example.com') AS host,
-          CAST(doc_id AS BIGINT) % 7 AS k FROM documents),
-        r AS (
-          SELECT host, CAST(0 AS BIGINT) AS entry_pos,
-            'http://' || host || '/docs/a' || CAST(k AS VARCHAR)
-              || '.html' AS loc,
-            '2026-0' || CAST(k + 1 AS VARCHAR) || '-01' AS lastmod,
-            CAST(k * 100000 AS BIGINT) AS priority_ppm FROM h
-          UNION ALL
-          SELECT host, 1, 'http://' || host || '/docs/b'
-              || CAST(k AS VARCHAR) || '.html',
-            '', 500000 FROM h
-          UNION ALL
-          SELECT host, 4, 'http://' || host || '/c',
-            '2025-12-31', 500000 FROM h)
-        SELECT host, entry_pos, loc, lastmod, priority_ppm FROM r
-        ORDER BY host, entry_pos""",
-    // q107: every feed row re-derived from the plant — RSS hosts emit
-    // item 0 (full) and item 2 (bare link; 1 dropped for no link),
-    // Atom hosts emit entry 0 (alternate link, published) and entry 1
-    // (no-rel link, updated fallback; 2 dropped)
-    "q107_feeds" ->
-      """WITH h AS (SELECT DISTINCT concat(source, '-',
-          CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR),
-          '.example.com') AS host,
-          CAST(doc_id AS BIGINT) % 7 AS k FROM documents),
-        r AS (
-          SELECT host, 0 AS entry_pos, 'rss' AS kind,
-            'http://' || host || '/news/a-' || CAST(k AS VARCHAR)
-              || '.html' AS link,
-            'First story ' || CAST(k AS VARCHAR) AS title,
-            'Mon, 0' || CAST(k + 1 AS VARCHAR)
-              || ' Jan 2026 10:00:00 GMT' AS published
-          FROM h WHERE k % 2 = 0
-          UNION ALL
-          SELECT host, 2, 'rss',
-            'http://' || host || '/news/b-' || CAST(k AS VARCHAR)
-              || '.html', '', ''
-          FROM h WHERE k % 2 = 0
-          UNION ALL
-          SELECT host, 0, 'atom',
-            'http://' || host || '/posts/p-' || CAST(k AS VARCHAR)
-              || '.html',
-            'Entry one ' || CAST(k AS VARCHAR),
-            '2026-02-0' || CAST(k + 1 AS VARCHAR)
-          FROM h WHERE k % 2 = 1
-          UNION ALL
-          SELECT host, 1, 'atom',
-            'http://' || host || '/posts/q-' || CAST(k AS VARCHAR)
-              || '.html', 'E2',
-            '2026-03-0' || CAST(k + 1 AS VARCHAR)
-          FROM h WHERE k % 2 = 1)
-        SELECT host, CAST(entry_pos AS INTEGER) AS entry_pos, kind,
-          link, title, published
-        FROM r ORDER BY host, entry_pos""",
-    // q108: bounds, clamped integral codes and the Morton interleave
-    // re-derived in SQL (DuckDB '//' is floor division; both operands
-    // are non-negative here, so it equals Spark's truncating div)
-    "q108_zorder" -> {
-      val inter = (0 until 8).flatMap(b => Seq(
-        s"(((code_chars >> $b) & 1) << ${2 * b + 1})",
-        s"(((code_id >> $b) & 1) << ${2 * b})")).mkString(" | ")
-      s"""WITH b AS (SELECT min(n_chars) AS lo1, max(n_chars) AS hi1,
-          min(CAST(doc_id AS BIGINT)) AS lo2,
-          max(CAST(doc_id AS BIGINT)) AS hi2 FROM documents),
-        c AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-          least(255, greatest(0,
-            ((n_chars - lo1) * 255) // greatest(1, hi1 - lo1)))
-            AS code_chars,
-          least(255, greatest(0,
-            ((CAST(doc_id AS BIGINT) - lo2) * 255)
-              // greatest(1, hi2 - lo2))) AS code_id
-          FROM documents, b)
-        SELECT doc_id, CAST(code_chars AS BIGINT) AS code_chars,
-          CAST(code_id AS BIGINT) AS code_id,
-          CAST($inter AS BIGINT) AS z
-        FROM c ORDER BY z, doc_id LIMIT 256"""
-    },
-    // q109: the oracle is the PLAIN exact groupBy-HAVING over the same
-    // paragraph plant — it never sees the hash buckets, so a green row
-    // proves the bounded two-pass form equals the exact answer
-    "q109_heavy_hitters" ->
-      """WITH f AS (SELECT concat_ws(chr(10)||chr(10),
-          CASE WHEN CAST(doc_id AS BIGINT) % 3 = 0
-            THEN 'Subscribe to our newsletter for updates.' END,
-          text,
-          CASE WHEN CAST(doc_id AS BIGINT) % 5 = 0
-            THEN 'All rights reserved. Terms of use apply.' END) AS aug
-          FROM documents),
-        p AS (SELECT unnest(list_filter(list_transform(
-            regexp_split_to_array(aug, '\n{2,}'), q -> trim(q)),
-            q -> q != '')) AS para FROM f),
-        e AS (SELECT para, count(*) AS n FROM p
-          GROUP BY para HAVING count(*) >= 50)
-        SELECT md5(para) AS para_md5,
-          CAST(length(para) AS BIGINT) AS para_len, CAST(n AS BIGINT) AS n
-        FROM e ORDER BY n DESC, para_md5""",
-    // q110: the oracle rebuilds the snapshot plant and re-derives the
-    // change ratio with its own lag window, then the same integral
-    // interval interpolation (45 - 43*ppm // 1e6, nowDay 90)
-    "q110_recrawl" ->
-      """WITH docs AS (SELECT CAST(doc_id AS BIGINT) AS did,
-          'http://' || source || '.example.com/d'
-            || CAST(doc_id AS VARCHAR) AS url FROM documents),
-        k AS (SELECT did, url,
-          CASE WHEN did % 7 = 0 THEN 1 ELSE 2 + did % 4 END AS k
-          FROM docs),
-        s AS (SELECT did, url, unnest(range(0, k)) AS i FROM k),
-        snap AS (SELECT url, did % 30 + i * 7 AS day,
-          'v' || CAST((did + i) // 3 - did // 3 AS VARCHAR) AS h FROM s),
-        st AS (SELECT url, day, h,
-          lag(h) OVER (PARTITION BY url ORDER BY day, h) AS prev
-            FROM snap),
-        agg AS (SELECT url, count(*) AS n_snaps,
-          sum(CASE WHEN prev IS NOT NULL AND h != prev
-            THEN 1 ELSE 0 END) AS n_changes,
-          max(day) AS last_day FROM st GROUP BY url),
-        c AS (SELECT url, n_snaps, n_changes, last_day,
-          CASE WHEN n_snaps < 2 THEN 500000
-            ELSE (n_changes * 1000000) // (n_snaps - 1) END AS change_ppm
-          FROM agg),
-        f AS (SELECT url, n_snaps, n_changes, change_ppm, last_day,
-          45 - (43 * change_ppm) // 1000000 AS interval_days FROM c)
-        SELECT url, CAST(n_snaps AS BIGINT) AS n_snaps,
-          CAST(n_changes AS BIGINT) AS n_changes,
-          CAST(change_ppm AS BIGINT) AS change_ppm,
-          CAST(interval_days AS BIGINT) AS interval_days,
-          CAST(last_day AS BIGINT) AS last_day,
-          CAST(last_day + interval_days AS BIGINT) AS next_due_day,
-          CAST(greatest(0, 90 - (last_day + interval_days)) AS BIGINT)
-            AS overdue_days
-        FROM f ORDER BY url""",
-    // q85: every signal re-derived from the plant's four page shapes;
-    // the long error-mentioning page (case 1) must NOT be flagged
-    "q85_soft_errors" ->
-      """WITH p AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          'http://' || source || '-'
-            || CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR)
-            || '.example.com/docs/d' || CAST(doc_id AS VARCHAR)
-            || '.html' AS url,
-          CAST(doc_id AS BIGINT) % 9 AS c FROM documents),
-        f AS (SELECT url,
-          CAST(CASE CAST(c AS INTEGER) WHEN 0 THEN 7 WHEN 1 THEN 150
-            WHEN 2 THEN 6 ELSE 20 + id % 30 END AS BIGINT) AS n_tokens,
-          CAST(CASE WHEN c = 2 THEN 2 ELSE 0 END AS BIGINT) AS n_links,
-          c IN (0, 1) AS title_error,
-          c = 0 AS body_error,
-          c = 0 AS soft_error
-          FROM p)
-        SELECT url, n_tokens, n_links,
-          CAST((n_links * 1000000) // n_tokens AS BIGINT)
-            AS link_density_ppm,
-          title_error, body_error, soft_error
-        FROM f ORDER BY url""",
-    // q86: charset labels + byte counts by construction (the DuckDB
-    // blob is built with the same encode/unhex concatenation); decoded
-    // text compared only where DuckDB can decode (utf-8 family)
-    "q86_charset" ->
-      """WITH p AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          CAST(doc_id AS VARCHAR) AS ids,
-          'http://' || source || '-'
-            || CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR)
-            || '.example.com/docs/d' || CAST(doc_id AS VARCHAR)
-            || '.html' AS url,
-          CAST(CAST(doc_id AS BIGINT) % 5 AS INTEGER) AS c
-          FROM documents),
-        b AS (SELECT url, c, ids,
-          CASE c
-            WHEN 0 THEN encode('<html><head><meta charset="UTF-8">'
-              || '</head><body>ascii d' || ids || '</body></html>')
-            WHEN 1 THEN unhex('EFBBBF')
-              || encode('<html>bom d' || ids || '</html>')
-            WHEN 2 THEN unhex('FFFE680069002100')
-            WHEN 3 THEN encode('<meta http-equiv="Content-Type" '
-              || 'content="text/html; charset=latin1"><body>caf')
-              || unhex('E9') || encode('</body>')
-            ELSE encode('<html>plain d' || ids || '</html>')
-          END AS bin FROM p)
-        SELECT url,
-          CASE c WHEN 0 THEN 'utf-8' WHEN 1 THEN 'utf-8-bom'
-            WHEN 2 THEN 'utf-16le' WHEN 3 THEN 'iso-8859-1'
-            ELSE 'utf-8' END AS charset,
-          TRUE AS charset_supported,
-          CAST(octet_length(bin) AS BIGINT) AS n_bytes,
-          CASE c
-            WHEN 0 THEN '<html><head><meta charset="UTF-8"></head>'
-              || '<body>ascii d' || ids || '</body></html>'
-            WHEN 1 THEN '<html>bom d' || ids || '</html>'
-            WHEN 2 THEN '' WHEN 3 THEN ''
-            ELSE '<html>plain d' || ids || '</html>'
-          END AS text_utf8
-        FROM b ORDER BY url""",
-    // q87: canonical_abs/noindex re-derived exactly as in q81, then
-    // the collapse re-run relationally (noindex out, group by
-    // canonical key, min-url representative)
-    "q87_canonical_collapse" ->
-      s"""WITH p AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          $linkUrlSql AS url, $linkHostSql AS h FROM documents),
-        m AS (SELECT url, id % 6 IN (0, 1) AS noindex,
-          CASE CAST(id % 4 AS INTEGER)
-            WHEN 0 THEN 'http://canon.example.com/c'
-              || CAST(id % 10 AS VARCHAR)
-            WHEN 1 THEN CASE WHEN id % 5 = 0
-              THEN 'http://base' || CAST(id % 3 AS VARCHAR)
-                || '.example.org/dir/c/p' || CAST(id % 5 AS VARCHAR)
-              ELSE 'http://' || h || '/c/p' || CAST(id % 5 AS VARCHAR)
-              END
-            WHEN 2 THEN CASE WHEN id % 5 = 0
-              THEN 'http://base' || CAST(id % 3 AS VARCHAR)
-                || '.example.org/canon/' || CAST(id % 7 AS VARCHAR)
-              ELSE 'http://' || h || '/canon/' || CAST(id % 7 AS VARCHAR)
-              END
-            ELSE '' END AS canonical_abs
-          FROM p),
-        k AS (SELECT url, CASE WHEN canonical_abs <> ''
-            THEN canonical_abs ELSE url END AS canonical_key
-          FROM m WHERE NOT noindex),
-        g AS (SELECT canonical_key, MIN(url) AS rep,
-          CAST(COUNT(*) AS BIGINT) AS n_group FROM k GROUP BY 1)
-        SELECT k.url, k.canonical_key, g.n_group,
-          k.url = g.rep AS is_representative
-        FROM k JOIN g ON g.canonical_key = k.canonical_key
-        ORDER BY k.url""",
-    "q78_anchor_stats" -> q78Sql,
-    // q80: the planted admission decisions re-derived from the
-    // synthesis formulas — /docs allowed (decoy groups must not
-    // apply), /private disallowed, /private/pub allowed by the longer
-    // Allow, /tmp{m} disallowed only on the host whose rule digit
-    // matches
-    "q80_robots" ->
-      s"""WITH p AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          $linkHostSql AS h,
-          CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR) AS k
-          FROM documents),
-        l AS (
-          SELECT 'http://' || h || '/docs/d' || CAST(id AS VARCHAR)
-              || '.html' AS url,
-            TRUE AS allowed, '' AS matched_prefix FROM p
-          UNION ALL SELECT 'http://' || h || '/private/f'
-              || CAST(id % 5 AS VARCHAR),
-            FALSE, '/private' FROM p
-          UNION ALL SELECT 'http://' || h || '/private/pub/x'
-              || CAST(id % 5 AS VARCHAR),
-            TRUE, '/private/pub' FROM p
-          UNION ALL SELECT 'http://' || h || '/tmp'
-              || CAST(id % 3 AS VARCHAR) || '/y',
-            CAST(id % 3 AS VARCHAR) <> k,
-            CASE WHEN CAST(id % 3 AS VARCHAR) = k
-              THEN '/tmp' || k ELSE '' END FROM p)
-        SELECT url, allowed, matched_prefix FROM l ORDER BY url""",
-    // q89: the PSL algorithm re-derived relationally — candidate
-    // suffixes join the rule VALUES table; exception MAX beats the
-    // longest normal/wildcard match, COALESCE supplies the implicit
-    // "*" default; both engines cut the same label slices
-    "q89_reg_domain" ->
-      """WITH h AS (SELECT doc_id, CASE CAST(doc_id AS BIGINT) % 6
-          WHEN 0 THEN 'a' || CAST(CAST(doc_id AS BIGINT) % 3 AS VARCHAR)
-            || '.example.com'
-          WHEN 1 THEN 'b' || CAST(CAST(doc_id AS BIGINT) % 3 AS VARCHAR)
-            || '.foo.co.uk'
-          WHEN 2 THEN 'c' || CAST(CAST(doc_id AS BIGINT) % 3 AS VARCHAR)
-            || '.weird.ck'
-          WHEN 3 THEN 'www.ck'
-          WHEN 4 THEN 'com'
-          ELSE 'd' || CAST(CAST(doc_id AS BIGINT) % 3 AS VARCHAR)
-            || '.github.io' END AS host
-          FROM documents),
-        rules(key, rlen, kind) AS (VALUES
-          ('com', 1, 'norm'), ('uk', 1, 'norm'), ('co.uk', 2, 'norm'),
-          ('ck', 1, 'wild'), ('www.ck', 2, 'exc'), ('io', 1, 'norm'),
-          ('github.io', 2, 'norm')),
-        lab AS (SELECT doc_id, host, string_split(host, '.') AS ls,
-          len(string_split(host, '.')) AS n FROM h),
-        cand AS (SELECT doc_id, n, i,
-            array_to_string(ls[n - i + 1 : n], '.') AS suf
-          FROM (SELECT doc_id, ls, n,
-              unnest(generate_series(1, least(n, 5))) AS i FROM lab)),
-        m AS (SELECT c.doc_id,
-            MAX(CASE WHEN r.kind = 'exc' THEN c.i - 1 END) AS exc_ps,
-            MAX(CASE WHEN r.kind = 'norm' THEN c.i
-              WHEN r.kind = 'wild' AND c.n >= c.i + 1 THEN c.i + 1 END)
-              AS best_ps
-          FROM cand c JOIN rules r ON c.suf = r.key AND r.rlen = c.i
-          GROUP BY c.doc_id),
-        ps AS (SELECT l.doc_id, l.host, l.ls, l.n,
-            COALESCE(m.exc_ps, m.best_ps, 1) AS p
-          FROM lab l LEFT JOIN m USING (doc_id))
-        SELECT doc_id, host,
-          CASE WHEN n >= p
-            THEN array_to_string(ls[n - p + 1 : n], '.') END
-            AS public_suffix,
-          CASE WHEN n > p
-            THEN array_to_string(ls[n - p : n], '.') END AS reg_domain
-        FROM ps ORDER BY doc_id""",
-    // q96: pure STRING-level duplicated-gram semantics — no hash
-    // anywhere in the oracle. The Spark side prefilters on xxhash64
-    // and confirms on the gram text; equality here proves the
-    // prefilter+confirm plan computes exact string semantics.
-    "q96_span_dedup_confirmed" ->
-      s"""WITH corpus AS (SELECT doc_id,
-          (CASE WHEN CAST(doc_id AS BIGINT) % 13 = 5
-            THEN '$PlantCookie ' ELSE '' END) || text ||
-          (CASE WHEN CAST(doc_id AS BIGINT) % 7 = 2
-            THEN ' $PlantSubscribe' ELSE '' END) AS text
-          FROM documents),
-        t AS (SELECT doc_id, text, $toksSql AS toks FROM corpus),
-        g AS (SELECT doc_id, i - 1 AS pos,
-            array_to_string(toks[i : i + 7], ' ') AS gs
-          FROM (SELECT doc_id, toks,
-              unnest(generate_series(1, len(toks) - 7)) AS i
-            FROM t WHERE len(toks) >= 8)),
-        dup AS (SELECT gs FROM (SELECT gs, count(DISTINCT doc_id) AS c
-            FROM g GROUP BY gs) WHERE c >= 2),
-        fp AS (SELECT doc_id, list(pos) AS fps
-          FROM g JOIN dup USING (gs) GROUP BY doc_id),
-        k AS (SELECT t.doc_id, text, toks,
-            list_filter(range(0, len(toks)), j -> len(list_filter(
-              coalesce(fps, CAST([] AS BIGINT[])),
-              p -> p <= j AND j < p + 8)) = 0) AS keep
-          FROM t LEFT JOIN fp ON t.doc_id = fp.doc_id)
-        SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-          CAST(len(toks) - len(keep) AS BIGINT) AS n_removed,
-          CAST(CASE WHEN len(toks) > 0
-            THEN ((len(toks) - len(keep)) * 1000000) // len(toks)
-            ELSE 0 END AS BIGINT) AS removed_ppm,
-          md5(CASE WHEN len(keep) = len(toks) THEN text
-            ELSE coalesce(array_to_string(list_transform(keep,
-              j -> toks[j + 1]), ' '), '') END) AS clean_md5
-        FROM k ORDER BY doc_id""",
-    // q98: the same LSH candidate CTEs over the mutant-augmented
-    // corpus, then DuckDB's own levenshtein + the same integer-ppm
-    // normalization — both engines' stock edit distance must agree
-    "q98_edit_verified" ->
-      s"""WITH aug AS (
-          SELECT CAST(doc_id AS BIGINT) AS doc_id, text FROM documents
-          UNION ALL
-          SELECT CAST(doc_id AS BIGINT) + 2000000, 'zqx ' || text
-          FROM documents WHERE CAST(doc_id AS BIGINT) % 17 = 4),
-        ${lshPairsCtesOver(1, maxBucket = 64, src = "aug")},
-        v AS (SELECT a, b, est_jaccard FROM pairs
-          WHERE est_jaccard >= 0.5),
-        j AS (SELECT v.a, v.b, v.est_jaccard,
-            CAST(levenshtein(da.text, db.text) AS BIGINT) AS edit_dist,
-            CAST(GREATEST(len(da.text), len(db.text)) AS BIGINT)
-              AS max_len
-          FROM v JOIN aug da ON da.doc_id = v.a
-          JOIN aug db ON db.doc_id = v.b)
-        SELECT a, b, est_jaccard, edit_dist, dist_ppm FROM (
-          SELECT a, b, est_jaccard, edit_dist,
-            CAST(CASE WHEN max_len > 0
-              THEN (edit_dist * 1000000) // max_len ELSE 0 END
-              AS BIGINT) AS dist_ppm
-          FROM j)
-        WHERE dist_ppm <= 200000 ORDER BY a, b""",
-    // q97: the full BM25 formula re-derived in SQL — same tokenize,
-    // same tf/df/dl/avgdl stats, the same truncating-division nesting
-    // at every step, the same (score desc, id) tie-break (CTE chain
-    // shared with the q134 fusion oracle)
-    "q97_bm25" ->
-      s"""WITH $bm25CtesSql
-        SELECT query_id, doc_id, score_ppm, rank FROM bm25r
-        WHERE rank <= 10 ORDER BY query_id, rank""",
-    // q134: BM25 CTEs reused verbatim; the TF arm ranks summed tf over
-    // the same matched postings; fusion = SUM(10^9 // (60 + rank))
-    // over both top-10 lists, top-5 by (fused desc, doc)
-    "q134_rrf_fusion" ->
-      s"""WITH $bm25CtesSql,
-        tfs AS (SELECT q.query_id, m.id,
-            CAST(SUM(m.tf) AS BIGINT) AS tf_sum
-          FROM mt m JOIN q USING (term) GROUP BY q.query_id, m.id),
-        tfr AS (SELECT query_id, id AS doc_id,
-            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY tf_sum DESC, id) AS BIGINT) AS rank
-          FROM tfs),
-        u AS (SELECT query_id, doc_id, rank FROM bm25r
-            WHERE rank <= 10
-          UNION ALL SELECT query_id, doc_id, rank FROM tfr
-            WHERE rank <= 10),
-        f AS (SELECT query_id, doc_id,
-            CAST(SUM(1000000000 // (60 + rank)) AS BIGINT)
-              AS rrf_score_ppb,
-            CAST(COUNT(*) AS BIGINT) AS n_lists
-          FROM u GROUP BY query_id, doc_id)
-        SELECT query_id, doc_id, rrf_score_ppb, n_lists, rank
-        FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY rrf_score_ppb DESC, doc_id) AS BIGINT) AS rank
-          FROM f)
-        WHERE rank <= 5 ORDER BY query_id, rank""",
-    // q95: the same rare-shingle blocking + exact list_intersect
-    // re-check in SQL; same 32-bit md5-prefix blocking hash, same
-    // integer-ppm truncation
-    "q95_containment" ->
-      s"""WITH b0 AS (SELECT CAST(doc_id AS BIGINT) AS id, text
-          FROM documents),
-        sub AS (SELECT id + 1000000 AS id,
-            array_to_string(($toksSql)[1:12], ' ') AS text
-          FROM b0 WHERE id % 10 = 5),
-        allr AS (SELECT id, text FROM b0
-          UNION ALL SELECT id, text FROM sub),
-        sh AS (SELECT id, ${shingleSql(3)} AS sh FROM allr),
-        thin AS (SELECT DISTINCT id,
-            CAST(('0x' || substr(md5(s), 1, 8)) AS BIGINT) AS h
-          FROM (SELECT id, unnest(sh) AS s FROM sh)),
-        hset AS (SELECT id, list(h) AS hs FROM thin GROUP BY id),
-        dft AS (SELECT h, COUNT(*) AS dfc FROM thin GROUP BY h
-          HAVING COUNT(*) BETWEEN 2 AND 16),
-        blocked AS (SELECT id, thin.h FROM thin JOIN dft USING (h)),
-        cand AS (SELECT DISTINCT l.id AS a, r.id AS b
-          FROM blocked l JOIN blocked r
-            ON l.h = r.h AND l.id < r.id),
-        sc AS (SELECT a, b,
-            CAST(len(list_intersect(sa.hs, sb.hs)) AS BIGINT) AS inter,
-            CAST(len(sa.hs) AS BIGINT) AS sza,
-            CAST(len(sb.hs) AS BIGINT) AS szb
-          FROM cand JOIN hset sa ON cand.a = sa.id
-            JOIN hset sb ON cand.b = sb.id),
-        f AS (SELECT a, b, inter, sza, szb,
-          CAST(CASE WHEN sza > 0 THEN (inter * 1000000) // sza
-            ELSE 0 END AS BIGINT) AS contain_a_ppm,
-          CAST(CASE WHEN szb > 0 THEN (inter * 1000000) // szb
-            ELSE 0 END AS BIGINT) AS contain_b_ppm FROM sc)
-        SELECT * FROM f
-        WHERE GREATEST(contain_a_ppm, contain_b_ppm) >= 900000
-        ORDER BY a, b""",
-    // q90: the oracle walks the same min-collapsed redirect map with a
-    // recursive CTE (per-hop sequential — fine at oracle scale; the
-    // Spark side must reach the identical terminals via pointer
-    // doubling); cycles exhaust the hop budget and come back NULL
-    "q90_redirects" ->
-      """WITH RECURSIVE ids AS (
-          SELECT CAST(doc_id AS BIGINT) AS did FROM documents),
-        e AS (
-          SELECT 'http://r.example.com/u' || CAST(did AS VARCHAR) AS src,
-            CASE WHEN did % 10 = 9
-              THEN 'http://final.example.com/f'
-                || CAST(did // 10 AS VARCHAR)
-              ELSE 'http://r.example.com/u' || CAST(did + 1 AS VARCHAR)
-            END AS dst FROM ids
-          UNION ALL
-          SELECT 'http://r.example.com/u' || CAST(did AS VARCHAR),
-            'http://dup.example.com/x' || CAST(did AS VARCHAR)
-          FROM ids WHERE did % 20 = 7
-          UNION ALL
-          SELECT 'http://cyc.example.com/c' || CAST(did AS VARCHAR) || 'a',
-            'http://cyc.example.com/c' || CAST(did AS VARCHAR) || 'b'
-          FROM ids WHERE did % 25 = 13
-          UNION ALL
-          SELECT 'http://cyc.example.com/c' || CAST(did AS VARCHAR) || 'b',
-            'http://cyc.example.com/c' || CAST(did AS VARCHAR) || 'a'
-          FROM ids WHERE did % 25 = 13),
-        m AS (SELECT src, MIN(dst) AS dst FROM e GROUP BY src),
-        walk(url, cur, hops) AS (
-          SELECT src, dst, CAST(1 AS BIGINT) FROM m
-          UNION ALL
-          SELECT w.url, m2.dst, w.hops + 1
-          FROM walk w JOIN m m2 ON w.cur = m2.src
-          WHERE w.hops <= 32),
-        term AS (SELECT w.url, w.cur AS final_url, w.hops
-          FROM walk w WHERE w.hops <= 32
-            AND NOT EXISTS (SELECT 1 FROM m WHERE m.src = w.cur))
-        SELECT m.src AS url, t.final_url, t.hops,
-          t.final_url IS NOT NULL AS resolved
-        FROM m LEFT JOIN term t ON m.src = t.url
-        ORDER BY url""",
-    // q91: the same line predicate as a DuckDB list_filter lambda and
-    // the same page gate re-derived over the planted text; sentence
-    // count = terminal-punct occurrences in the CLEANED text
-    "q91_c4_clean" ->
-      """WITH b AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          text || chr(10) || 'short line' || chr(10)
-            || 'This planted line has five words here.' || chr(10)
-            || 'Enable javascript to view this page today.' || chr(10)
-            || '   ' || chr(10)
-            || 'Another good sentence with plenty of words in it!'
-            || CASE WHEN CAST(doc_id AS BIGINT) % 7 = 0
-                 THEN chr(10) || 'Lorem Ipsum dolor sit amet.'
-                 ELSE '' END
-            || CASE WHEN CAST(doc_id AS BIGINT) % 11 = 3
-                 THEN chr(10) || 'function f() { return 1; }'
-                 ELSE '' END AS t
-          FROM documents),
-        l AS (SELECT id, t,
-          list_filter(string_split(t, chr(10)), x ->
-            regexp_matches(trim(x), '[.!?"]$')
-            AND len(regexp_split_to_array(trim(x), '\s+')) >= 3
-            AND NOT contains(lower(trim(x)), 'javascript')) AS kl,
-          len(string_split(t, chr(10))) AS nl FROM b),
-        c AS (SELECT id, t, nl, len(kl) AS nk,
-          array_to_string(list_transform(kl, x -> trim(x)), chr(10))
-            AS clean FROM l),
-        s AS (SELECT id, t, nk, nl, clean,
-          CAST(length(clean)
-            - length(regexp_replace(clean, '[.!?]', '', 'g'))
-            AS BIGINT) AS ns FROM c)
-        SELECT id AS doc_id,
-          CAST(nk AS BIGINT) AS n_lines_kept,
-          CAST(nl - nk AS BIGINT) AS n_lines_dropped,
-          ns AS n_sentences,
-          (ns >= 5 AND NOT contains(lower(t), 'lorem ipsum')
-            AND NOT contains(t, '{')) AS kept,
-          md5(clean) AS clean_md5
-        FROM s ORDER BY doc_id""",
-    // q92: the same thin-row full-outer join re-derived in SQL over
-    // the identical snapshot plants
-    "q92_snapshot_diff" ->
-      """WITH b AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          'http://s.example.com/u' || CAST(doc_id AS VARCHAR) AS url,
-          text FROM documents),
-        p AS (SELECT url, md5(text) AS prev_hash FROM b
-          WHERE id % 10 <> 0),
-        c AS (SELECT url, md5(CASE WHEN id % 5 = 2
-            THEN text || ' re-rendered' ELSE text END) AS cur_hash
-          FROM b WHERE id % 10 <> 1)
-        SELECT COALESCE(p.url, c.url) AS url, prev_hash, cur_hash,
-          CASE WHEN prev_hash IS NULL THEN 'new'
-            WHEN cur_hash IS NULL THEN 'gone'
-            WHEN prev_hash = cur_hash THEN 'unchanged'
-            ELSE 'changed' END AS status
-        FROM p FULL OUTER JOIN c ON p.url = c.url
-        ORDER BY url""",
-    // q93: gold/pred token bags re-derived from the same plant; the
-    // multiset overlap is SUM(LEAST(gc, pc)) over the full-outer
-    // (doc, tokHash) join, ppm with integer division — identical
-    // truncation both engines
-    "q93_extract_score" ->
-      s"""WITH b AS (SELECT CAST(doc_id AS BIGINT) AS id, doc_id,
-          $toksSql AS g FROM documents),
-        pr0 AS (SELECT id, doc_id, g,
-          CASE WHEN id % 4 = 0 THEN g[4:] ELSE g END AS p1 FROM b),
-        pr AS (SELECT id, doc_id, g,
-          CASE WHEN id % 3 = 0
-            THEN list_concat(p1, ['nav','menu','footer','nav'])
-            ELSE p1 END AS pt FROM pr0),
-        gc AS (SELECT doc_id, th, COUNT(*) AS gcnt FROM
-          (SELECT doc_id,
-             CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT) AS th
-           FROM (SELECT doc_id, unnest(g) AS tk FROM pr))
-          GROUP BY 1, 2),
-        pc AS (SELECT doc_id, th, COUNT(*) AS pcnt FROM
-          (SELECT doc_id,
-             CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT) AS th
-           FROM (SELECT doc_id, unnest(pt) AS tk FROM pr))
-          GROUP BY 1, 2),
-        j AS (SELECT COALESCE(gc.doc_id, pc.doc_id) AS doc_id,
-            COALESCE(gcnt, 0) AS gcnt, COALESCE(pcnt, 0) AS pcnt
-          FROM gc FULL OUTER JOIN pc
-            ON gc.doc_id = pc.doc_id AND gc.th = pc.th),
-        a AS (SELECT doc_id, CAST(SUM(gcnt) AS BIGINT) AS n_gold,
-            CAST(SUM(pcnt) AS BIGINT) AS n_pred,
-            CAST(SUM(LEAST(gcnt, pcnt)) AS BIGINT) AS n_overlap
-          FROM j GROUP BY 1),
-        f AS (SELECT *,
-          CAST(CASE WHEN n_pred > 0
-            THEN (n_overlap * 1000000) // n_pred ELSE 0 END AS BIGINT)
-            AS precision_ppm,
-          CAST(CASE WHEN n_gold > 0
-            THEN (n_overlap * 1000000) // n_gold ELSE 0 END AS BIGINT)
-            AS recall_ppm FROM a)
-        SELECT doc_id, n_gold, n_pred, n_overlap, precision_ppm,
-          recall_ppm,
-          CAST(CASE WHEN precision_ppm + recall_ppm > 0
-            THEN (2 * precision_ppm * recall_ppm)
-              // (precision_ppm + recall_ppm) ELSE 0 END AS BIGINT)
-            AS f1_ppm
-        FROM f ORDER BY doc_id""",
-    // q79: same df-threshold + top-64 cap + md5 line keys; the kept
-    // list is rebuilt only when something was removed, mirroring the
-    // Spark side's original-text preservation
-    "q79_host_boilerplate" ->
-      s"""WITH b AS (SELECT CAST(doc_id AS BIGINT) AS id,
-          $linkHostSql AS host, text FROM documents),
-        d AS (SELECT id, host, 'NAV MENU ' || host || chr(10) || text
-          || chr(10) || 'COPYRIGHT ' || host AS t FROM b),
-        lh AS (SELECT id, host, unnest(list_distinct(list_transform(
-          string_split(t, chr(10)), l -> md5(l)))) AS lhash FROM d),
-        c AS (SELECT host, lhash, CAST(COUNT(*) AS BIGINT) AS cnt
-          FROM lh GROUP BY 1, 2),
-        hd AS (SELECT host, CAST(COUNT(*) AS BIGINT) AS hn
-          FROM d GROUP BY 1),
-        blr AS (SELECT c.host, lhash, cnt,
-          ROW_NUMBER() OVER (PARTITION BY c.host
-            ORDER BY cnt DESC, lhash) AS rn,
-          COUNT(*) OVER (PARTITION BY c.host) AS nbl
-          FROM c JOIN hd ON hd.host = c.host
-          WHERE cnt * 1000000 >= 600000 * hn AND cnt >= 2),
-        bs AS (SELECT host, list(lhash) AS bls,
-          GREATEST(0, MAX(nbl) - 64) AS nbd
-          FROM blr WHERE rn <= 64 GROUP BY host),
-        f AS (SELECT id, d.host AS host, t,
-          COALESCE(nbd, 0) AS nbd,
-          list_filter(string_split(t, chr(10)),
-            l -> NOT list_contains(COALESCE(bls, []::VARCHAR[]), md5(l)))
-            AS kept
-          FROM d LEFT JOIN bs ON bs.host = d.host)
-        SELECT id AS doc_id, host,
-          CAST(len(string_split(t, chr(10))) AS BIGINT) AS n_lines,
-          CAST(len(string_split(t, chr(10))) - len(kept) AS BIGINT)
-            AS n_removed,
-          CAST(nbd AS BIGINT) AS n_bl_dropped,
-          CASE WHEN len(string_split(t, chr(10))) = len(kept) THEN t
-            ELSE array_to_string(kept, chr(10)) END AS clean_text
-        FROM f ORDER BY doc_id""",
-    // q77: the round trip must reproduce exactly what a direct scan of
-    // documents yields — url formula, payload char length, payload md5
-    "q77_warc" ->
-      s"""SELECT $linkUrlSql AS url,
-        CAST(length('<html><body><p>' || text || '</p></body></html>')
-          AS BIGINT) AS content_length,
-        md5('<html><body><p>' || text || '</p></body></html>')
-          AS payload_md5
-        FROM documents ORDER BY url""",
-    // q67: same log2 bucketing (DuckDB's bin() length = bit length,
-    // so length(bin(v))-1 = floor(log2 v) with no float log), same
-    // integer rank arithmetic, same bucket upper bounds
-    "q67_profile_approx" ->
-      s"""WITH thin AS (SELECT lang,
-          CAST(len($toksSql) AS BIGINT) AS v FROM documents),
-        bk AS (SELECT lang, v,
-          CASE WHEN v < 0 THEN -2 WHEN v = 0 THEN -1
-            ELSE length(bin(v)) - 1 END AS b FROM thin),
-        h AS (SELECT lang, b, CAST(COUNT(*) AS BIGINT) AS c,
-          CAST(SUM(v) AS BIGINT) AS s, MIN(v) AS mn, MAX(v) AS mx
-          FROM bk GROUP BY 1, 2),
-        r AS (SELECT *,
-          CAST(SUM(c) OVER (PARTITION BY lang ORDER BY b
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum,
-          CAST(SUM(c) OVER (PARTITION BY lang) AS BIGINT) AS n,
-          CASE WHEN b = -2 THEN CAST(-1 AS BIGINT)
-            WHEN b = -1 THEN CAST(0 AS BIGINT)
-            ELSE (CAST(1 AS BIGINT) << CAST(b + 1 AS INT)) - 1 END AS ub
-          FROM h)
-        SELECT lang, max(n) AS n_rows, CAST(sum(s) AS BIGINT) AS total,
-          min(mn) AS v_min, max(mx) AS v_max,
-          min(CASE WHEN cum >= (50 * (n - 1)) // 100 + 1 THEN ub END)
-            AS p50_ub,
-          min(CASE WHEN cum >= (90 * (n - 1)) // 100 + 1 THEN ub END)
-            AS p90_ub,
-          min(CASE WHEN cum >= (99 * (n - 1)) // 100 + 1 THEN ub END)
-            AS p99_ub
-        FROM r GROUP BY lang ORDER BY lang""",
-    // q49: same fixed float expression tree as temperatureResample —
-    // integer-quantized weights keep the cross-stratum sum exact in
-    // any accumulation order
-    "q49_temp_resample" ->
-      """WITH h AS (SELECT lang, count(*) AS n FROM documents
-          GROUP BY lang),
-        c AS (SELECT lang, n,
-          CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1048576.0) AS BIGINT)
-            AS wq FROM h),
-        tot AS (SELECT lang, n, wq, SUM(wq) OVER () AS w_tot,
-          SUM(n) OVER () AS n_tot FROM c),
-        cut AS (SELECT lang, CAST(floor(least(1.0,
-            (0.5 * (CAST(wq AS DOUBLE) / CAST(w_tot AS DOUBLE)))
-            * (CAST(n_tot AS DOUBLE) / CAST(n AS DOUBLE)))
-            * 10000.0) AS BIGINT) AS keep_slots
-          FROM tot)
-        SELECT d.doc_id, d.lang, cut.keep_slots,
-          (CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)
-            || ':resample'), 1, 8)) AS BIGINT) % 10000)
-            < cut.keep_slots AS kept
-        FROM documents d JOIN cut USING (lang) ORDER BY d.doc_id""",
-    "q51_ivf_refine" ->
-      s"""WITH $ivfCellSqlCtes,
-        ex AS (SELECT cl.cell, unnest(vv.e) AS x,
-            unnest(generate_series(1, len(vv.e))) AS gi
-          FROM cell cl JOIN v vv ON vv.vec_id = cl.vec_id),
-        sums AS (SELECT cell, CAST(gi - 1 AS BIGINT) AS pos,
-            COUNT(*) AS n, SUM(CAST(x AS DECIMAL(30,12))) AS s
-          FROM ex GROUP BY 1, 2)
-        SELECT cell, pos, CAST(n AS BIGINT) AS n_vecs,
-          round(CAST(s AS DOUBLE) / n, 6) AS c
-        FROM sums ORDER BY cell, pos""",
-    "q42_ann_ivf" -> {
-      s"""WITH $ivfCellSqlCtes,
-        qp AS (SELECT vec_id AS query_id, ci AS cell FROM (
-          SELECT vec_id, ci, row_number() OVER (PARTITION BY vec_id
-            ORDER BY s DESC, ci) AS pr FROM sims WHERE vec_id < 10)
-          WHERE pr <= 4),
-        sc AS (SELECT qp.query_id, cl.vec_id AS corpus_id,
-          ${cosSql("vq.e", "vc.e")} AS cosine
-          FROM qp JOIN cell cl ON cl.cell = qp.cell
-          JOIN v vq ON vq.vec_id = qp.query_id
-          JOIN v vc ON vc.vec_id = cl.vec_id
-          WHERE qp.query_id != cl.vec_id),
-        r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-          ORDER BY cosine DESC, corpus_id) AS rank FROM sc)
-        SELECT query_id, corpus_id, round(cosine, 6) AS cosine, rank
-        FROM r WHERE rank <= 5 ORDER BY query_id, rank"""
-    },
-    "q103_ann_ivfpq" -> q103Sql,
-    "q69_semantic_dedup" ->
-      s"""WITH $ivfCellSqlCtes,
-        cc AS (SELECT cl.vec_id, cl.cell, vv.e FROM cell cl
-          JOIN v vv ON vv.vec_id = cl.vec_id),
-        dups AS (SELECT a.vec_id AS id, min(b.vec_id) AS dup_of
-          FROM cc a JOIN cc b ON a.cell = b.cell AND b.vec_id < a.vec_id
-          WHERE ${cosSql("a.e", "b.e")} >= 0.3
-          GROUP BY 1)
-        SELECT cc.vec_id AS id, CAST(cc.cell AS BIGINT) AS cell,
-          dups.dup_of IS NULL AS kept, dups.dup_of
-        FROM cc LEFT JOIN dups ON dups.id = cc.vec_id
-        ORDER BY id""",
-    "q43_curate" -> {
-      val (scCols, langCase) = langIdSqlParts
-      val piiRed = graft.ops.Curation.PiiPatterns
-        .foldLeft("text") { case (acc, (_, re, tag)) =>
-          s"regexp_replace($acc, '$re', '$tag', 'g')"
-        }
-      val lsSql = """list_filter(list_transform(string_split(text,
-        chr(10)), x -> trim(x)), x -> x != '')"""
-      val dlpSql = s"""CAST(CASE WHEN len($lsSql) > 0
-        THEN ((len($lsSql) - len(list_distinct($lsSql))) * 1000000)
-          // len($lsSql) ELSE 0 END AS BIGINT)"""
-      val promo = "Click here to read more about this offer now"
-      s"""WITH RECURSIVE
-        b0 AS (SELECT doc_id, CAST(doc_id AS BIGINT) AS did,
-          text AS orig FROM documents),
-        synth AS (SELECT doc_id, concat_ws(chr(10)||chr(10),
-          CASE WHEN did % 3 = 0
-            THEN 'Subscribe to our newsletter for updates.' END,
-          CASE WHEN did % 17 = 0
-            THEN repeat('$promo' || chr(10), 7) || '$promo'
-          WHEN did % 10 < 2 THEN concat('the shared body ',
-            'g' || CAST(did // 10 AS VARCHAR), ' of group ',
-            'g' || CAST(did // 10 AS VARCHAR), ' is exactly ',
-            'g' || CAST(did // 10 AS VARCHAR), ' the same here ',
-            'g' || CAST(did // 10 AS VARCHAR))
-          WHEN did % 10 IN (4, 5) THEN concat('the near duplicate body ',
-            'g' || CAST(did // 10 AS VARCHAR), ' one two ',
-            'g' || CAST(did // 10 AS VARCHAR), ' three four ',
-            'g' || CAST(did // 10 AS VARCHAR), ' five six ',
-            'g' || CAST(did // 10 AS VARCHAR), ' ',
-            CASE WHEN did % 10 = 4 THEN 'alpha' ELSE 'beta' END)
-          ELSE orig END,
-          concat('Contact user', CAST(did % 7 AS VARCHAR),
-            '@example.com from ', CAST(did % 256 AS VARCHAR), '.0.0.1'),
-          CASE WHEN did % 5 = 0
-            THEN 'All rights reserved. Terms of use apply.' END) AS text
-          FROM b0),
-        scx AS (SELECT doc_id, text, $scCols FROM synth),
-        lg AS (SELECT doc_id, text, $langCase AS lang FROM scx),
-        gate0 AS (SELECT doc_id, lang, text FROM lg
-          WHERE lang != 'und' AND len($toksSql) >= 10
-            AND $dlpSql <= 300000),
-        gate AS (SELECT doc_id, lang, $piiRed AS text FROM gate0),
-        p0 AS (SELECT doc_id, lang,
-          list_filter(list_transform(regexp_split_to_array(text, '\n{2,}'),
-            p -> trim(p)), p -> p != '') AS paras FROM gate),
-        th AS (SELECT doc_id,
-          unnest(list_transform(paras, p -> md5(p))) AS ph,
-          unnest(range(1, len(paras) + 1)) AS pos FROM p0),
-        dup AS (SELECT ph FROM th GROUP BY ph
-          HAVING count(DISTINCT doc_id) >= 3),
-        dr AS (SELECT doc_id, list(pos) AS dp
-          FROM th JOIN dup USING (ph) GROUP BY doc_id),
-        clx AS (SELECT p0.doc_id, lang, array_to_string(list_filter(paras,
-          (p, i) -> NOT list_contains(
-            coalesce(dp, CAST([] AS BIGINT[])), i)),
-          chr(10)||chr(10)) AS ct
-          FROM p0 LEFT JOIN dr ON p0.doc_id = dr.doc_id),
-        ex AS (SELECT doc_id, lang, ct FROM (SELECT *, row_number()
-          OVER (PARTITION BY md5(ct) ORDER BY doc_id) AS rn FROM clx)
-          WHERE rn = 1),
-        dd AS (SELECT doc_id, lang, ct AS text FROM ex),
-        ${lshPairsCtesOver(3, 0, "dd")},
-        edges AS (SELECT a, b FROM pairs WHERE est_jaccard >= 0.5
-          UNION SELECT b, a FROM pairs WHERE est_jaccard >= 0.5),
-        comp(id, canon) AS (
-          SELECT doc_id, doc_id FROM dd
-          UNION
-          SELECT e.a, c.canon FROM edges e JOIN comp c ON c.id = e.b),
-        cn AS (SELECT id, MIN(canon) AS canonical FROM comp GROUP BY 1)
-        SELECT d.doc_id, d.lang,
-          CAST(len($toksSql) AS BIGINT) AS n_tokens,
-          md5(d.text) AS clean_md5
-        FROM dd d JOIN cn ON cn.id = d.doc_id AND cn.canonical = d.doc_id
-        ORDER BY doc_id"""
-    },
-    "q41_host_stats" ->
-      """WITH u AS (SELECT *, concat('https://', source, '-',
-          CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR),
-          '.example.com/doc/', CAST(doc_id AS VARCHAR)) AS url
-          FROM documents)
-        SELECT
-          regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)
-            AS host,
-          CAST(count(*) AS BIGINT) AS n_docs,
-          CAST(sum(len(list_filter(
-            regexp_split_to_array(trim(text), '\s+'), t -> t != '')))
-            AS BIGINT) AS total_tokens,
-          CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-          CAST(sum(n_chars) AS BIGINT) AS total_chars
-        FROM u GROUP BY 1 ORDER BY 1""",
-    // q55: same planted spans, same 8-gram unit and md5-prefix hash as
-    // the Spark side; covered-token mask recomputed with list lambdas
-    "q55_span_dedup" ->
-      s"""WITH corpus AS (SELECT doc_id,
-          (CASE WHEN CAST(doc_id AS BIGINT) % 13 = 5
-            THEN '$PlantCookie ' ELSE '' END) || text ||
-          (CASE WHEN CAST(doc_id AS BIGINT) % 7 = 2
-            THEN ' $PlantSubscribe' ELSE '' END) AS text
-          FROM documents),
-        t AS (SELECT doc_id, text, $toksSql AS toks FROM corpus),
-        g AS (SELECT doc_id, i - 1 AS pos,
-            CAST(('0x' || substr(md5(array_to_string(toks[i : i + 7],
-              ' ')), 1, 8)) AS BIGINT) AS gh
-          FROM (SELECT doc_id, toks,
-              unnest(generate_series(1, len(toks) - 7)) AS i
-            FROM t WHERE len(toks) >= 8)),
-        dup AS (SELECT gh FROM (SELECT gh, count(DISTINCT doc_id) AS c
-            FROM g GROUP BY gh) WHERE c >= 2),
-        fp AS (SELECT doc_id, list(pos) AS fps
-          FROM g JOIN dup USING (gh) GROUP BY doc_id),
-        k AS (SELECT t.doc_id, text, toks,
-            list_filter(range(0, len(toks)), j -> len(list_filter(
-              coalesce(fps, CAST([] AS BIGINT[])),
-              p -> p <= j AND j < p + 8)) = 0) AS keep
-          FROM t LEFT JOIN fp ON t.doc_id = fp.doc_id)
-        SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-          CAST(len(toks) - len(keep) AS BIGINT) AS n_removed,
-          CAST(CASE WHEN len(toks) > 0
-            THEN ((len(toks) - len(keep)) * 1000000) // len(toks)
-            ELSE 0 END AS BIGINT) AS removed_ppm,
-          md5(CASE WHEN len(keep) = len(toks) THEN text
-            ELSE coalesce(array_to_string(list_transform(keep,
-              j -> toks[j + 1]), ' '), '') END) AS clean_md5
-        FROM k ORDER BY doc_id""",
-    // q56: identical synthesized lines; keep = first occurrence of the
-    // trimmed line (1-based list_position == own position)
-    "q56_line_dedup" ->
-      """WITH aug AS (SELECT doc_id,
-          'home about contact navigation' || chr(10) ||
-          substr(text, 1, 80) || chr(10) ||
-          (CASE WHEN CAST(doc_id AS BIGINT) % 3 = 0
-            THEN 'home about contact navigation' || chr(10)
-            ELSE '' END) ||
-          substr(text, 81, 80) ||
-          (CASE WHEN CAST(doc_id AS BIGINT) % 4 = 1
-            THEN chr(10) || 'accept cookies' || chr(10) ||
-              'accept cookies' ELSE '' END) AS text
-          FROM documents),
-        lx AS (SELECT doc_id, list_filter(list_transform(
-            string_split(text, chr(10)), x -> trim(x)), x -> x != '')
-            AS lines FROM aug),
-        k AS (SELECT doc_id, lines,
-            list_filter(range(0, len(lines)),
-              i -> list_position(lines, lines[i + 1]) = i + 1) AS keep
-          FROM lx)
-        SELECT doc_id, CAST(len(lines) AS BIGINT) AS n_lines,
-          CAST(len(lines) - len(keep) AS BIGINT) AS n_line_dupes,
-          md5(coalesce(array_to_string(list_transform(keep,
-            i -> lines[i + 1]), chr(10)), '')) AS clean_md5
-        FROM k ORDER BY doc_id""",
-    // q57: identical split slot, bucket hash, integer-ppm DF odds and
-    // neutral-500000 scoring; // == Spark DIV on these non-negatives
-    "q57_token_clf" ->
-      s"""WITH $clfSqlCtes
-        SELECT d.doc_id,
-          CAST(COALESCE(n, 0) AS BIGINT) AS n_tokens_scored,
-          CAST(COALESCE(ss, 0) AS BIGINT) AS score_sum,
-          CAST(CASE WHEN COALESCE(n, 0) > 0 THEN ss // n ELSE 0 END
-            AS BIGINT) AS score_mean_ppm,
-          COALESCE(CASE WHEN COALESCE(n, 0) > 0 THEN ss // n ELSE 0 END
-            > 500000, FALSE) AS pred
-        FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-        ORDER BY d.doc_id""",
-    // q58: same synthesized URLs; blocked = any host suffix in the
-    // blocklist (both output columns pin both Spark paths)
-    "q58_blocklist" -> {
-      val inList = BlockedDomains.map(x => s"'$x'").mkString(", ")
-      s"""WITH u AS (SELECT doc_id, 'https://' || source || '-' ||
-          CAST(CAST(doc_id AS BIGINT) % 7 AS VARCHAR) || '.example' ||
-          CAST(CAST(doc_id AS BIGINT) % 3 AS VARCHAR) || '.com/doc/' ||
-          CAST(doc_id AS VARCHAR) AS url FROM documents),
-        h AS (SELECT doc_id, url, lower(regexp_extract(url,
-            '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)) AS host FROM u),
-        b AS (SELECT doc_id, url,
-            len(list_filter(list_transform(
-              generate_series(1, len(string_split(host, '.'))),
-              i -> array_to_string(string_split(host, '.')[i:], '.')),
-              sfx -> sfx IN ($inList))) > 0 AS blocked
-          FROM h)
-        SELECT doc_id, url, blocked AS blocked_lit, blocked
-        FROM b ORDER BY doc_id"""
-    },
-    // q59: EXACT decontamination semantics (same CTEs as q45) — the
-    // Bloom prefilter on the Spark side must not change the output
-    "q59_bloom_decontam" -> {
-      def itemSql(i: String): String =
-        s"""'evaluation benchmark item ' || $i ||
-          ' the quick brown fox number ' || $i ||
-          ' jumps over the lazy dog ' || $i"""
-      s"""WITH bench AS (SELECT
-          ${itemSql("CAST(doc_id AS VARCHAR)")} AS text
-          FROM documents WHERE doc_id < 10),
-        bg AS (SELECT DISTINCT
-            CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS gh
-          FROM (SELECT unnest(${shingleSql(8)}) AS g FROM bench)),
-        corpus AS (SELECT doc_id,
-          CASE WHEN doc_id % 11 = 3
-            THEN text || ' ' || (${itemSql("CAST(doc_id % 10 AS VARCHAR)")})
-            ELSE text END AS text
-          FROM documents),
-        cg AS (SELECT doc_id, ${shingleSql(8)} AS grams FROM corpus),
-        ex AS (SELECT doc_id,
-            CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS gh
-          FROM (SELECT doc_id, unnest(grams) AS g FROM cg)),
-        hits AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hit
-          FROM ex JOIN bg USING (gh) GROUP BY doc_id)
-        SELECT cg.doc_id, CAST(len(grams) AS BIGINT) AS n_grams,
-          CAST(COALESCE(n_hit, 0) AS BIGINT) AS n_hit,
-          COALESCE(n_hit, 0) > 0 AS contaminated
-        FROM cg LEFT JOIN hits ON cg.doc_id = hits.doc_id
-        ORDER BY cg.doc_id"""
-    },
-    // q61: same planted spam; retrain + rescore via the shared
-    // classifier CTEs over the planted corpus, re-derive the host-mean
-    // blocklist; the synthesized hosts are never suffixes of each
-    // other, so the Spark side's suffix semantics reduce to equality
-    "q61_host_blocklist" -> {
-      val srcIn = SpamSources.map(x => s"'$x'").mkString(", ")
-      val seedIn = SeedBadSources.map(x => s"'$x'").mkString(", ")
-      s"""WITH corpus AS (SELECT doc_id, source,
-          CASE WHEN source IN ($srcIn)
-            THEN text || ' $SpamPhrase' ELSE text END AS text
-          FROM documents),
-        ${clfSqlCtesOver("corpus", s"source IN ($seedIn)")},
-        scored AS (SELECT c.doc_id, c.source,
-            CAST(CASE WHEN COALESCE(n, 0) > 0 THEN ss // n ELSE 0 END
-              AS BIGINT) AS smp
-          FROM corpus c LEFT JOIN agg ON c.doc_id = agg.doc_id),
-        u AS (SELECT doc_id, smp,
-            source || '-' || CAST(CAST(doc_id AS BIGINT) % 3 AS VARCHAR)
-              || '.example.com' AS host
-          FROM scored),
-        bl AS (SELECT host FROM (
-            SELECT host, COUNT(*) AS nd, SUM(smp) AS ssum
-            FROM u GROUP BY host)
-          WHERE nd >= 3 AND ssum // nd >= $BlockMeanPpm)
-        SELECT u.doc_id, u.host, u.smp AS score_mean_ppm,
-          (bl.host IS NOT NULL) AS blocked
-        FROM u LEFT JOIN bl USING (host) ORDER BY u.doc_id"""
-    },
-    // q63: benchmark gram hashes (as q59) flag gram starts; the q55
-    // coverage mask recomputes the scrubbed text
-    "q63_scrub_contam" -> {
-      def itemSql(i: String): String =
-        s"""'evaluation benchmark item ' || $i ||
-          ' the quick brown fox number ' || $i ||
-          ' jumps over the lazy dog ' || $i"""
-      s"""WITH bench AS (SELECT
-          ${itemSql("CAST(doc_id AS VARCHAR)")} AS text
-          FROM documents WHERE doc_id < 10),
-        bg AS (SELECT DISTINCT
-            CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS gh
-          FROM (SELECT unnest(${shingleSql(8)}) AS g FROM bench)),
-        corpus AS (SELECT doc_id,
-          CASE WHEN doc_id % 11 = 3
-            THEN text || ' ' || (${itemSql("CAST(doc_id % 10 AS VARCHAR)")})
-            ELSE text END AS text
-          FROM documents),
-        t AS (SELECT doc_id, text, $toksSql AS toks FROM corpus),
-        g AS (SELECT doc_id, i - 1 AS pos,
-            CAST(('0x' || substr(md5(array_to_string(toks[i : i + 7],
-              ' ')), 1, 8)) AS BIGINT) AS gh
-          FROM (SELECT doc_id, toks,
-              unnest(generate_series(1, len(toks) - 7)) AS i
-            FROM t WHERE len(toks) >= 8)),
-        fp AS (SELECT doc_id, list(pos) AS fps
-          FROM g JOIN bg USING (gh) GROUP BY doc_id),
-        k AS (SELECT t.doc_id, text, toks,
-            list_filter(range(0, len(toks)), j -> len(list_filter(
-              coalesce(fps, CAST([] AS BIGINT[])),
-              p -> p <= j AND j < p + 8)) = 0) AS keep
-          FROM t LEFT JOIN fp ON t.doc_id = fp.doc_id)
-        SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-          CAST(len(toks) - len(keep) AS BIGINT) AS n_removed,
-          CAST(CASE WHEN len(toks) > 0
-            THEN ((len(toks) - len(keep)) * 1000000) // len(toks)
-            ELSE 0 END AS BIGINT) AS removed_ppm,
-          md5(CASE WHEN len(keep) = len(toks) THEN text
-            ELSE coalesce(array_to_string(list_transform(keep,
-              j -> toks[j + 1]), ' '), '') END) AS clean_md5
-        FROM k ORDER BY doc_id"""
-    },
-    // q66: same planted bodies; pairs from the shared LSH CTEs over the
-    // synthesized corpus, cross-side = (a < 400 <= b) since ids are
-    // disjoint and pairs are a < b; exact via fingerprint join
-    "q66_incr_dedup" -> {
-      def bodySql(k: String): String =
-        s"""'the archived corpus body ' || CAST($k AS VARCHAR) ||
-          ' alpha bravo charlie delta echo foxtrot golf hotel india' ||
-          ' juliet kilo lima mike november oscar papa'"""
-      s"""WITH corpus AS (SELECT doc_id, CASE
-          WHEN doc_id < 400 AND doc_id % 40 = 0
-            THEN ${bodySql("doc_id // 40")}
-          WHEN doc_id >= 400 AND doc_id % 10 = 0
-            THEN ${bodySql("(doc_id - 400) // 10")}
-          WHEN doc_id >= 400 AND doc_id % 10 = 1
-            THEN ${bodySql("(doc_id - 401) // 10")}
-              || ' with one extra trailing clause appended here'
-          ELSE text END AS text
-          FROM documents),
-        ${lshPairsCtesOver(3, 0, "corpus")},
-        cr AS (SELECT a, b FROM pairs WHERE est_jaccard >= 0.5
-          AND a < 400 AND b >= 400),
-        nr AS (SELECT b AS id, MIN(a) AS nd FROM cr GROUP BY b),
-        fps AS (SELECT doc_id, md5(text) AS fp FROM corpus),
-        ex AS (SELECT n.doc_id AS id, MIN(i.doc_id) AS xd
-          FROM fps n JOIN fps i ON n.fp = i.fp
-          WHERE n.doc_id >= 400 AND i.doc_id < 400 GROUP BY 1)
-        SELECT d.doc_id,
-          CASE WHEN xd IS NOT NULL THEN 'exact'
-            WHEN nd IS NOT NULL THEN 'near' ELSE 'new' END AS verdict,
-          COALESCE(xd, nd) AS dup_of
-        FROM (SELECT doc_id FROM corpus WHERE doc_id >= 400) d
-        LEFT JOIN ex ON d.doc_id = ex.id
-        LEFT JOIN nr ON d.doc_id = nr.id
-        ORDER BY d.doc_id"""
-    },
-    // q64: identical integer rank inequality ((rank−1)·1e6 < ppm·n)
-    "q64_top_quantile" ->
-      s"""WITH thin AS (SELECT doc_id, lang,
-          CAST(len($toksSql) AS BIGINT) AS n_toks FROM documents),
-        r AS (SELECT *, CAST(row_number() OVER (
-            PARTITION BY lang ORDER BY n_toks DESC, doc_id) AS BIGINT)
-            AS stratum_rank,
-          CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS stratum_n
-          FROM thin)
-        SELECT doc_id, lang, n_toks, stratum_rank, stratum_n,
-          (stratum_rank - 1) * 1000000 < 300000 * stratum_n AS kept
-        FROM r ORDER BY doc_id""",
-    // q65: same LSH candidate pairs + split slots; cross-split rows
-    // are the leakage
-    "q65_split_leakage" -> {
-      def slotSql(e: String) =
-        s"""CAST(('0x' || substr(md5(CAST($e AS VARCHAR) || ':split'),
-          1, 8)) AS BIGINT) % 10000"""
-      s"""WITH ${lshPairsCtesOver(3, maxBucket = 64)},
-        e AS (SELECT a, b FROM pairs WHERE est_jaccard >= 0.5),
-        sl AS (SELECT a, b, ${slotSql("a")} AS qa, ${slotSql("b")} AS qb
-          FROM e),
-        sp AS (SELECT
-            (CASE WHEN qa < 8000 THEN 'train' WHEN qa < 9000 THEN 'val'
-              ELSE 'test' END) AS sa,
-            (CASE WHEN qb < 8000 THEN 'train' WHEN qb < 9000 THEN 'val'
-              ELSE 'test' END) AS sb
-          FROM sl)
-        SELECT least(sa, sb) AS split_lo, greatest(sa, sb) AS split_hi,
-          CAST(count(*) AS BIGINT) AS n_pairs,
-          least(sa, sb) != greatest(sa, sb) AS leaks
-        FROM sp GROUP BY 1, 2 ORDER BY 1, 2"""
-    },
-    // q60: identical integer hour arithmetic; cutoff boundary included;
-    // micros computed arithmetically (no engine timestamp conversion)
-    "q60_snapshot" ->
-      """WITH t AS (SELECT doc_id,
-          'https://example.com/page/'
-            || CAST(CAST(doc_id AS BIGINT) % 50 AS VARCHAR) AS url_key,
-          (CAST(doc_id AS BIGINT) * 37) % 1000 AS h
-          FROM documents),
-        f AS (SELECT *, row_number() OVER (
-            PARTITION BY url_key ORDER BY h DESC, doc_id) AS rn
-          FROM t WHERE h <= 800)
-        SELECT doc_id, url_key,
-          CAST((1600000000 + h * 3600) * 1000000 AS BIGINT) AS ts_us
-        FROM f WHERE rn = 1 ORDER BY url_key, doc_id"""
-  )
+    specs.map(q => q.name -> { (s: SparkSession, d: String) =>
+      graft.ops.SessionTuning(s); q.build(s, d)
+    }).toMap
+
+  def oracleSql: Map[String, String] =
+    specs.flatMap(q => q.oracleSql.map(q.name -> _)).toMap
 }

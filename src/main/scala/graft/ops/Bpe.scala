@@ -297,16 +297,6 @@ object Bpe {
   def decode(bpeTokens: Column): Column =
     trim(replace(concat_ws("", bpeTokens), lit(EndOfWord), lit(" ")))
 
-  /** Merge table as a DataFrame (step, left, right, merged,
-    * pair_count) — the persistable tokenizer artifact.
-    */
-  def mergesDf(spark: org.apache.spark.sql.SparkSession,
-      merges: Seq[Merge]): DataFrame = {
-    import spark.implicits._
-    merges.map(m => (m.step, m.left, m.right, m.merged, m.pairCount))
-      .toDF("step", "left", "right", "merged", "pair_count")
-  }
-
   /** Release the RDD blocks behind a localCheckpoint'ed frame (safe
     * once nothing downstream re-reads it).
     */

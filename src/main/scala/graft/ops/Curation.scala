@@ -690,6 +690,41 @@ object Curation {
       scrubbed.select(col(idCol), col("lang"), col("clean_text"))
     }
 
+  /** The stage names [[curateStaged]] commits for one config. The
+    * scrub/fluency/readability config is CODED INTO the names
+    * (2b_spanscrub<N>, 2c_fluency<P>, 3_exact_s<N>_f<P>, …):
+    * re-running an already-complete output dir with different gating
+    * flags must not reuse downstream stages built from
+    * differently-gated input — with unsuffixed names the old 3_exact
+    * marker would silently win and the final corpus would not match
+    * the requested config.
+    */
+  final case class CurateStages(scrub: Option[String],
+      fluency: Option[String], readability: Option[String], exact: String,
+      pairs: String, nearDup: String, leakage: String) {
+    val gate = "1_gate"
+    val deboil = "2_deboil"
+
+    /** The stages a run without the leakage audit commits, in order. */
+    def run: Seq[String] = Seq(gate, deboil) ++ scrub ++ fluency ++
+      readability ++ Seq(exact, nearDup)
+  }
+
+  def curateStages(spanScrubN: Int = 0, spanScrubSa: Boolean = false,
+      maxRareBigramPpm: Long = -1L,
+      freBandMilli: Option[(Long, Long)] = None): CurateStages = {
+    val sfx = (if (spanScrubN <= 0) ""
+        else if (spanScrubSa) s"_sa$spanScrubN" else s"_s$spanScrubN") +
+      (if (maxRareBigramPpm < 0) "" else s"_f$maxRareBigramPpm") +
+      freBandMilli.map { case (lo, hi) => s"_r${lo}_$hi" }.getOrElse("")
+    CurateStages(Option.when(spanScrubN > 0)(
+        if (spanScrubSa) s"2b_sascrub$spanScrubN"
+        else s"2b_spanscrub$spanScrubN"),
+      Option.when(maxRareBigramPpm >= 0)(s"2c_fluency$maxRareBigramPpm"),
+      freBandMilli.map { case (lo, hi) => s"2d_read${lo}_$hi" },
+      s"3_exact$sfx", s"4a_pairs$sfx", s"4_neardup$sfx", s"5_leakage$sfx")
+  }
+
   /** `curate` with STAGE-level checkpoint/resume (io.StagedJob): each
     * of the four stages commits its output as a parquet table + atomic
     * marker under `out`; a rerun after a kill reuses every committed
@@ -715,56 +750,42 @@ object Curation {
       if (failAfterStage == done)
         throw new RuntimeException(s"injected failure after stage $done")
     warnIfConstraintPropagation(df)
-    val gate = graft.io.StagedJob.stage(spark, out, "1_gate",
+    val names = curateStages(spanScrubN, spanScrubSa, maxRareBigramPpm,
+      freBandMilli)
+    val gate = graft.io.StagedJob.stage(spark, out, names.gate,
         requiredCols = Seq(idCol, "lang", "_paras")) {
       gateStage(df, idCol, textCol, minTokens, maxDupLinePpm)
     }
     guard(1)
-    val deboiled = graft.io.StagedJob.stage(spark, out, "2_deboil",
+    val deboiled = graft.io.StagedJob.stage(spark, out, names.deboil,
         requiredCols = Seq(idCol, "lang", "clean_text")) {
       deboilStage(gate, idCol, paraMinDocs)
     }
     guard(2)
-    // the scrub/fluency config is CODED INTO the stage names
-    // (2b_spanscrub<N>, 2c_fluency<P>, 3_exact_s<N>_f<P>, …):
-    // re-running an already-complete output dir with different gating
-    // flags must not reuse downstream stages built from
-    // differently-gated input — with unsuffixed names the old 3_exact
-    // marker would silently win and the final corpus would not match
-    // the requested config
-    val sfx = (if (spanScrubN <= 0) ""
-        else if (spanScrubSa) s"_sa$spanScrubN" else s"_s$spanScrubN") +
-      (if (maxRareBigramPpm < 0) "" else s"_f$maxRareBigramPpm") +
-      freBandMilli.map { case (lo, hi) => s"_r${lo}_$hi" }.getOrElse("")
-    val scrubStage =
-      if (spanScrubSa) s"2b_sascrub$spanScrubN"
-      else s"2b_spanscrub$spanScrubN"
-    val scrubbed =
-      if (spanScrubN <= 0) deboiled
-      else graft.io.StagedJob.stage(spark, out, scrubStage,
+    val scrubbed = names.scrub.fold(deboiled) { name =>
+      graft.io.StagedJob.stage(spark, out, name,
           requiredCols = Seq(idCol, "lang", "clean_text")) {
         spanScrubStage(deboiled, idCol, spanScrubN, sa = spanScrubSa)
       }
+    }
     // optional bigram-fluency gate: drop garble BEFORE the expensive
     // LSH stages (rare-transition fraction over the corpus-trained
     // bigram model — the CCNet-perplexity-tail analogue)
-    val fluent =
-      if (maxRareBigramPpm < 0) scrubbed
-      else graft.io.StagedJob.stage(spark, out,
-          s"2c_fluency$maxRareBigramPpm",
+    val fluent = names.fluency.fold(scrubbed) { name =>
+      graft.io.StagedJob.stage(spark, out, name,
           requiredCols = Seq(idCol, "lang", "clean_text")) {
         bigramFluency(scrubbed, idCol, "clean_text")
           .filter(col("rare_bigram_ppm") <= maxRareBigramPpm)
           .select(col(idCol), col("lang"), col("clean_text"))
       }
+    }
     // optional readability band gate: the Flesch reading-ease window
     // (too high = word salad, strongly negative = degenerate run-ons)
     // — per-row, so it rides BEFORE the LSH stages like the fluency
     // gate; config coded into the stage name per the resume contract
-    val readable = freBandMilli match {
-      case None => fluent
-      case Some((lo, hi)) =>
-        graft.io.StagedJob.stage(spark, out, s"2d_read${lo}_$hi",
+    val readable = (freBandMilli, names.readability) match {
+      case (Some((lo, hi)), Some(name)) =>
+        graft.io.StagedJob.stage(spark, out, name,
             requiredCols = Seq(idCol, "lang", "clean_text")) {
           val fre = TextAnalysis
             .readability(fluent, idCol, "clean_text")
@@ -773,8 +794,9 @@ object Curation {
             .filter(col("fre_milli") >= lo && col("fre_milli") <= hi)
             .select(col(idCol), col("lang"), col("clean_text"))
         }
+      case _ => fluent
     }
-    val exact = graft.io.StagedJob.stage(spark, out, s"3_exact$sfx") {
+    val exact = graft.io.StagedJob.stage(spark, out, names.exact) {
       exactStage(readable, idCol)
     }
     guard(3)
@@ -782,13 +804,13 @@ object Curation {
     // committed stage so ONE candidate-generation pass serves both the
     // near-dup dedup and the final leakage audit
     val pairsOpt = auditSplits.map { _ =>
-      graft.io.StagedJob.stage(spark, out, s"4a_pairs$sfx") {
+      graft.io.StagedJob.stage(spark, out, names.pairs) {
         Dedup.minhashLshPairs(exact, idCol, "clean_text",
           k = 16, bands = 8, minEstJaccard = minEstJaccard,
           shingleN = shingleN, maxBucket = maxBucket)
       }
     }
-    val curated = graft.io.StagedJob.stage(spark, out, s"4_neardup$sfx") {
+    val curated = graft.io.StagedJob.stage(spark, out, names.nearDup) {
       nearDupStage(exact, idCol, shingleN, minEstJaccard, maxBucket,
         pairsOpt)
     }
@@ -798,7 +820,7 @@ object Curation {
     // remove), after_dedup = pairs whose BOTH endpoints survived (must
     // show zero cross-split rows if dedup-before-split worked)
     auditSplits.foreach { splits =>
-      graft.io.StagedJob.stage(spark, out, s"5_leakage$sfx") {
+      graft.io.StagedJob.stage(spark, out, names.leakage) {
         val pairs = pairsOpt.get
         val before = splitLeakageAuditFromPairs(pairs, splits)
           .withColumn("scope", lit("before_dedup"))

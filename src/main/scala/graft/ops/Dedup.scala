@@ -1,9 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact, MinHash(+LSH), SimHash, n-gram Jaccard, embedding-cosine.

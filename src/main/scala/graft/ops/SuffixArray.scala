@@ -123,10 +123,7 @@ object SuffixArray {
       // order by pos) — ONE exchange on id instead of the two the
       // (id, pos)/(id, pos−h) self-join paid, and the window partition
       // is document-bounded (≤ maxDocLen rows), never corpus-sized.
-      // The join form is kept for the (physically unreachable) case of
-      // a document longer than 2^31 tokens, where lead's int offset
-      // cannot express h.
-      if (dense && packable && 2 * h < maxLen && 2 * h <= Int.MaxValue) {
+      if (dense && packable && 2 * h < maxLen) {
         // FUSED quadrupling round — the composite h→2h packing and the
         // 2h→4h densify share ONE window exchange and ONE checkpoint:
         // `_p1 = _ra·(n+2) + lead(_ra,h) + 1` is exactly the composite
@@ -161,22 +158,12 @@ object SuffixArray {
         tables :+= (h -> r)
         dense = true
       } else {
-      val paired =
-        if (h <= Int.MaxValue) {
-          val wDoc = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("id")).orderBy(col("pos"))
-          r.select(col("id"), col("pos"), col("dl"),
-            col("rank").as("_ra"),
-            coalesce(lead(col("rank"), h.toInt).over(wDoc), lit(-1L))
-              .as("_rb"))
-        } else {
-          val shifted = r.select(col("id"), (col("pos") - h).as("pos"),
-            col("rank").as("_rb"))
-          r.join(shifted, Seq("id", "pos"), "left")
-            .select(col("id"), col("pos"), col("dl"),
-              col("rank").as("_ra"),
-              coalesce(col("_rb"), lit(-1L)).as("_rb"))
-        }
+      val wDoc = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("id")).orderBy(col("pos"))
+      val paired = r.select(col("id"), col("pos"), col("dl"),
+        col("rank").as("_ra"),
+        coalesce(lead(col("rank"), h.toInt).over(wDoc), lit(-1L))
+          .as("_rb"))
       if (dense && packable) {
         r = paired.select(col("id"), col("pos"), col("dl"),
           (col("_ra") * (n + 2L) + col("_rb") + 1L).as("rank"))

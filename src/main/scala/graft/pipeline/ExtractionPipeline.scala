@@ -4,7 +4,7 @@ import graft.extract.ContentExtractor
 import graft.model.{Page, PageText}
 import graft.rules.{RuleCompiler, RuleSet, RuleSets}
 import graft.textops.TextOps
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType

@@ -256,21 +256,6 @@ object ScalarRules {
       .map(_.output)
       .getOrElse(rs.txnFallback)
   }
-
-  /** (isFx, fxType) — FX-only subset, rule order preserved (fx_tf.py:32-59). */
-  def isFxTransaction(rowText: String, rs: RuleSet): (Boolean, String) = {
-    val rl = lower(rowText)
-    val fxTypes = Set("FX Spot", "FX Forward")
-    rs.txnTypeRules // NOTE: reference iterates in config order, not priority
-      .filter(r => fxTypes.contains(r.output))
-      .find { r =>
-        r.matchAny.exists(k => rl.contains(lower(k))) &&
-        !r.excludeIfContains.exists(e => rl.contains(lower(e)))
-      } match {
-      case Some(r) => (true, r.output)
-      case None    => (false, null)
-    }
-  }
 }
 
 /** Catalyst compiler: rule sets → pure `Column` when-chains. No UDFs —

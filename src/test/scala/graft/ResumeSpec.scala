@@ -200,6 +200,11 @@ class ResumeSpec extends AnyFunSuite {
       spanScrubSa = true))
     assert(graft.io.StagedJob.committed(saDir, "2b_sascrub8"))
     assert(graft.io.StagedJob.committed(saDir, "3_exact_sa8"))
+    val committed = new java.io.File(saDir).list().toSeq
+      .map(_.stripPrefix("stage_"))
+      .filter(graft.io.StagedJob.committed(saDir, _))
+    assert(graft.ops.Curation.curateStages(spanScrubN = 8,
+      spanScrubSa = true).run.sorted == committed.sorted)
     assert(sa === canon(graft.ops.Curation.curate(docs, "id", "text",
       minTokens = 5, paraMinDocs = 3, spanScrubN = 8,
       spanScrubSa = true)))

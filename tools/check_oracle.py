@@ -50,5 +50,11 @@ for name, sql in sorted(oracle.items()):
         print(f"{name}: VALUE MISMATCH ({len([1 for a,b in zip(w,g) if a!=b])} rows); first: {bad}")
         fails += 1; continue
     print(f"{name}: OK ({len(want)} rows)")
+# dumped queries that have no oracle entry are never compared; name them
+# (informational: they do not change pass/fail)
+unchecked = sorted(d.split("/")[-2] for d in glob.glob(f"{out_dir}/*/")
+                   if d.split("/")[-2] not in oracle)
+if unchecked:
+    print(f"NO ORACLE: {', '.join(unchecked)}")
 print(f"\n{'ALL OK' if fails == 0 else f'{fails} FAILURES'}")
 sys.exit(1 if fails else 0)
