@@ -43,7 +43,8 @@ import scala.sys.process._
   *    with nodes; the sandbox disk does not).
   *
   * Usage: BenchCluster <env: SPARK_GRAFT_*>
-  * Child mode: BenchCluster --child <pagesPath> <threads> <slice> <of>
+  * Child mode: BenchCluster --child <pagesPath> <threads> <slice> <of>,
+  * with SPARK_GRAFT_COORD_DIR set to the handshake directory
   */
 object BenchCluster {
 
@@ -67,44 +68,31 @@ object BenchCluster {
     }
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def measured(): (Double, Long, Double) = {
-      val c0 = osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
-      val n = job()
-      val sec = (System.nanoTime() - t0) / 1e9
-      ((sec, n, (osBean.getProcessCpuTime - c0) / 1e9))
-    }
     job() // warmup (JIT + codegen + parquet footers)
-    sys.env.get("SPARK_GRAFT_COORD_DIR") match {
-      case Some(coord) =>
-        // server mode: signal ready, then run one measured pass per
-        // `go_<of>_<k>` file until `stop` appears
-        val tag = of.toString
-        Files.write(Paths.get(s"$coord/ready_${tag}_$slice"),
-          Array.emptyByteArray)
-        var k = 0
-        var run = true
-        while (run) {
-          val go = Paths.get(s"$coord/go_${tag}_$k")
-          val stop = Paths.get(s"$coord/stop")
-          while (!Files.exists(go) && !Files.exists(stop)) Thread.sleep(50)
-          if (Files.exists(stop) && !Files.exists(go)) run = false
-          else {
-            val (sec, n, cpu) = measured()
-            val tmp = Paths.get(s"$coord/.res_${tag}_${slice}_$k")
-            Files.write(tmp, f"$sec%.3f $n $cpu%.3f".getBytes)
-            Files.move(tmp, Paths.get(s"$coord/res_${tag}_${slice}_$k"),
-              StandardCopyOption.ATOMIC_MOVE)
-            k += 1
-          }
-        }
-      case None =>
-        // legacy batch mode: fixed rep count, results on stdout
-        val reps = sys.env.getOrElse("SPARK_GRAFT_CHILD_REPS", "1").toInt
-        (0 until reps).foreach { r =>
-          val (sec, n, cpu) = measured()
-          println(f"CHILD_RESULT $slice $r $sec%.3f $n $cpu%.3f")
-        }
+    // signal ready, then run one measured pass per `go_<of>_<k>` file
+    // until `stop` appears
+    val coord = sys.env("SPARK_GRAFT_COORD_DIR")
+    val tag = of.toString
+    Files.write(Paths.get(s"$coord/ready_${tag}_$slice"), Array.emptyByteArray)
+    var k = 0
+    var run = true
+    while (run) {
+      val go = Paths.get(s"$coord/go_${tag}_$k")
+      val stop = Paths.get(s"$coord/stop")
+      while (!Files.exists(go) && !Files.exists(stop)) Thread.sleep(50)
+      if (Files.exists(stop) && !Files.exists(go)) run = false
+      else {
+        val c0 = osBean.getProcessCpuTime
+        val t0 = System.nanoTime()
+        val n = job()
+        val sec = (System.nanoTime() - t0) / 1e9
+        val cpu = (osBean.getProcessCpuTime - c0) / 1e9
+        val tmp = Paths.get(s"$coord/.res_${tag}_${slice}_$k")
+        Files.write(tmp, f"$sec%.3f $n $cpu%.3f".getBytes)
+        Files.move(tmp, Paths.get(s"$coord/res_${tag}_${slice}_$k"),
+          StandardCopyOption.ATOMIC_MOVE)
+        k += 1
+      }
     }
     spark.stop()
     sys.exit(0)
@@ -132,7 +120,11 @@ object BenchCluster {
     path
   }
 
-  private def addOpens: Seq[String] = Seq(
+  /** The JDK module opens Spark needs outside spark-submit, for every
+    * JVM the scaling harnesses launch (children, master, workers,
+    * executors).
+    */
+  val AddOpens: Seq[String] = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
     "java.base/java.net", "java.base/java.nio", "java.base/java.util",
@@ -171,7 +163,7 @@ object BenchCluster {
       val cmd = pin ++ Seq(javaBin, s"-Xmx$heap", s"-Xms$heap",
         s"-Xmn$young", "-XX:+AlwaysPreTouch",
         s"-XX:ActiveProcessorCount=$threads",
-        "-Dspark.ui.enabled=false") ++ addOpens ++
+        "-Dspark.ui.enabled=false") ++ AddOpens ++
         Seq("-cp", cp, "graft.BenchCluster", "--child", pagesPath,
           threads.toString, i.toString, executors.toString)
       Process(cmd, None, "SPARK_GRAFT_COORD_DIR" -> coordDir)
@@ -207,6 +199,9 @@ object BenchCluster {
     (wall, cpu / (wall * executors * threads))
   }
 
+  /** One time-adjacent (N, 4N) pair: wall seconds and CPU utilization
+    * of each side.
+    */
   case class Trial(tN: Double, t4N: Double, utilN: Double, util4N: Double) {
     def eff: Double = (tN / t4N) / 4.0
   }
@@ -283,40 +278,44 @@ object BenchCluster {
     */
   val UtilFloor = 0.5
 
-  /** Shared credibility selection for a set of N-vs-4N pairs (used by
-    * this harness, BenchStandalone, and BenchCurateScale so all
-    * headline scaling numbers in one Bench line obey the SAME rules):
-    * best = the max-efficiency pair with (a) eff ≤ 1.0 — eff > 1 is
-    * not superlinear scaling, it means the N-side measurement landed
-    * in a degraded host window — and (b) BOTH sides' cpu utilization ≥
+  /** Credibility selection for a set of N-vs-4N pairs, the SAME rule
+    * for every scaling number in one Bench line: best = the
+    * max-efficiency pair with (a) eff ≤ 1.0 — eff > 1 is not
+    * superlinear scaling, it means the N-side measurement landed in a
+    * degraded host window — and (b) BOTH sides' cpu utilization ≥
     * [[UtilFloor]] (the fleets actually received their cores). If no
     * pair passes the util floor the filter falls back to eff-only,
     * then to closest-to-1.
     */
-  def selectBest[A](xs: Seq[A])(eff: A => Double, utilN: A => Double,
-      util4N: A => Double): A = {
-    require(xs.nonEmpty, "no scaling pairs measured")
-    val utilOk = xs.filter(x => eff(x) <= 1.0 &&
-      utilN(x) >= UtilFloor && util4N(x) >= UtilFloor)
-    val credible = if (utilOk.nonEmpty) utilOk else xs.filter(eff(_) <= 1.0)
-    if (credible.nonEmpty) credible.maxBy(eff)
-    else xs.minBy(x => math.abs(math.log(eff(x))))
+  private def selectBest(ts: Seq[Trial]): Trial = {
+    require(ts.nonEmpty, "no scaling pairs measured")
+    val utilOk = ts.filter(t => t.eff <= 1.0 &&
+      t.utilN >= UtilFloor && t.util4N >= UtilFloor)
+    val credible = if (utilOk.nonEmpty) utilOk else ts.filter(_.eff <= 1.0)
+    if (credible.nonEmpty) credible.maxBy(_.eff)
+    else ts.minBy(t => math.abs(math.log(t.eff)))
   }
 
-  /** Scaling JSON: headline efficiency = the best CREDIBLE pair per
-    * [[selectBest]]. The median and every pair's numbers are reported
-    * alongside, with a `pinned` flag recording whether the fleets were
-    * taskset-pinned to disjoint cpusets.
+  /** The fields every scaling JSON ends with: the best credible pair
+    * per [[selectBest]] (its times, and `docs` over them as rates), the
+    * median efficiency, and every pair's numbers.
+    */
+  def pairsJson(docs: Long, ts: Seq[Trial]): String = {
+    val best = selectBest(ts)
+    val median = ts.map(_.eff).sorted.apply(ts.length / 2)
+    val trials = ts.map(t =>
+      f"""{"sec_N":${t.tN}%.3f,"sec_4N":${t.t4N}%.3f,"cpu_util_N":${t.utilN}%.2f,"cpu_util_4N":${t.util4N}%.2f,"efficiency":${t.eff}%.3f}""")
+      .mkString("[", ",", "]")
+    f""""sec_N":${best.tN}%.3f,"sec_4N":${best.t4N}%.3f,"docs_per_sec_N":${docs / best.tN}%.1f,"docs_per_sec_4N":${docs / best.t4N}%.1f,"scaling_efficiency":${best.eff}%.3f,"scaling_efficiency_median":$median%.3f,"trials":$trials"""
+  }
+
+  /** Extraction scaling JSON, with a `pinned` flag recording whether
+    * the fleets were taskset-pinned to disjoint cpusets.
     */
   def scalingJson(nPages: Long, boost: Int, execN: Int, threads: Int,
       ts: Seq[Trial]): String = {
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-    val best = selectBest(ts)(_.eff, _.utilN, _.util4N)
     val pinned = canPinFleet(execN * 4, threads, 0) &&
       canPinFleet(execN, threads, execN * 4 * threads)
-    val trialsJson = ts.map(t =>
-      f"""{"sec_N":${t.tN}%.3f,"sec_4N":${t.t4N}%.3f,"cpu_util_N":${t.utilN}%.2f,"cpu_util_4N":${t.util4N}%.2f,"efficiency":${t.eff}%.3f}""")
-      .mkString("[", ",", "]")
-    f"""{"mode":"multi-process-paired","pages":$nPages,"boost":$boost,"executors_N":$execN,"executors_4N":${execN * 4},"threads_per_exec":$threads,"pinned":$pinned,"sec_N":${best.tN}%.3f,"sec_4N":${best.t4N}%.3f,"docs_per_sec_N":${nPages / best.tN}%.1f,"docs_per_sec_4N":${nPages / best.t4N}%.1f,"scaling_efficiency":${best.eff}%.3f,"scaling_efficiency_median":${median(ts.map(_.eff))}%.3f,"trials":$trialsJson}"""
+    f"""{"mode":"multi-process-paired","pages":$nPages,"boost":$boost,"executors_N":$execN,"executors_4N":${execN * 4},"threads_per_exec":$threads,"pinned":$pinned,${pairsJson(nPages, ts)}}"""
   }
 }

@@ -62,15 +62,7 @@ object BenchCurateScale {
     val cmd = pin ++ Seq(javaBin, "-Xmx6g", "-Xms6g", "-Xmn4500m",
       "-XX:+AlwaysPreTouch",
       s"-XX:ActiveProcessorCount=$cpus", "-Dspark.ui.enabled=false") ++
-      Seq("--add-opens", "java.base/java.lang=ALL-UNNAMED",
-        "--add-opens", "java.base/java.lang.invoke=ALL-UNNAMED",
-        "--add-opens", "java.base/java.io=ALL-UNNAMED",
-        "--add-opens", "java.base/java.net=ALL-UNNAMED",
-        "--add-opens", "java.base/java.nio=ALL-UNNAMED",
-        "--add-opens", "java.base/java.util=ALL-UNNAMED",
-        "--add-opens", "java.base/java.util.concurrent=ALL-UNNAMED",
-        "--add-opens", "java.base/sun.nio.ch=ALL-UNNAMED",
-        "--add-opens", "java.base/sun.security.action=ALL-UNNAMED") ++
+      BenchCluster.AddOpens ++
       Seq("-cp", cp, "graft.BenchCurateScale", "--child",
         cpus.toString, nDocs.toString)
     val out = new StringBuilder
@@ -85,10 +77,6 @@ object BenchCurateScale {
       field("kept").toLong)
   }
 
-  case class Pair(tN: Double, t4N: Double, utilN: Double, util4N: Double) {
-    def eff: Double = (tN / t4N) / 4.0
-  }
-
   /** N cores for the small side; the wide side is 4N. Default 2-vs-8:
     * curation's string/array churn saturates this box's single memory
     * controller well below the 16 threads extraction tolerates (the
@@ -98,9 +86,9 @@ object BenchCurateScale {
   def coresN: Int = sys.env.getOrElse("SPARK_GRAFT_CURATE_CORES_N", "2").toInt
 
   /** Time-adjacent (N-core, 4N-core) pairs; same credibility rules as
-    * BenchCluster.scalingJson (eff ≤ 1 and both utils ≥ floor).
+    * BenchCluster.pairsJson (eff ≤ 1 and both utils ≥ floor).
     */
-  def pairedRuns(nDocs: Long, pairs: Int): (Seq[Pair], Long) = {
+  def pairedRuns(nDocs: Long, pairs: Int): (Seq[BenchCluster.Trial], Long) = {
     var kept = -1L
     val ps = (0 until pairs).map { k =>
       val n = runLevel(coresN, nDocs, coreOffset = coresN * 4)
@@ -109,7 +97,7 @@ object BenchCurateScale {
       require(n.kept == w.kept,
         s"parallelism changed the result: ${n.kept} vs ${w.kept}")
       kept = n.kept
-      val p = Pair(n.sec, w.sec, n.util, w.util)
+      val p = BenchCluster.Trial(n.sec, w.sec, n.util, w.util)
       System.err.println(f"[curate-scale] pair $k tN=${p.tN}%.2f " +
         f"t4N=${p.t4N}%.2f util=${p.utilN}%.2f/${p.util4N}%.2f " +
         f"eff=${p.eff}%.3f")
@@ -118,14 +106,8 @@ object BenchCurateScale {
     (ps, kept)
   }
 
-  def scalingJson(nDocs: Long, ps: Seq[Pair], kept: Long): String = {
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-    val best = BenchCluster.selectBest(ps)(_.eff, _.utilN, _.util4N)
-    val trials = ps.map(p =>
-      f"""{"sec_N":${p.tN}%.3f,"sec_4N":${p.t4N}%.3f,"cpu_util_N":${p.utilN}%.2f,"cpu_util_4N":${p.util4N}%.2f,"efficiency":${p.eff}%.3f}""")
-      .mkString("[", ",", "]")
-    f"""{"mode":"same-job-two-parallelisms","docs":$nDocs,"kept":$kept,"cores_N":$coresN,"cores_4N":${coresN * 4},"sec_N":${best.tN}%.3f,"sec_4N":${best.t4N}%.3f,"docs_per_sec_N":${nDocs / best.tN}%.1f,"docs_per_sec_4N":${nDocs / best.t4N}%.1f,"scaling_efficiency":${best.eff}%.3f,"scaling_efficiency_median":${median(ps.map(_.eff))}%.3f,"trials":$trials}"""
-  }
+  def scalingJson(nDocs: Long, ps: Seq[BenchCluster.Trial], kept: Long): String =
+    f"""{"mode":"same-job-two-parallelisms","docs":$nDocs,"kept":$kept,"cores_N":$coresN,"cores_4N":${coresN * 4},${BenchCluster.pairsJson(nDocs, ps)}}"""
 
   def main(args: Array[String]): Unit = {
     if (args.nonEmpty && args(0) == "--child") {

@@ -31,16 +31,6 @@ object BenchStandalone {
   private val MasterPort = 7077
   private def masterUrl = s"spark://localhost:$MasterPort"
 
-  private def addOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio", "java.base/java.util",
-    "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic", "java.base/sun.nio.ch",
-    "java.base/sun.nio.cs", "java.base/sun.security.action",
-    "java.base/sun.util.calendar")
-    .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   private def javaBin = s"${sys.props("java.home")}/bin/java"
   private def cp = sys.props("java.class.path")
 
@@ -79,7 +69,7 @@ object BenchStandalone {
 
   private def startMaster(): Process = {
     val cmd = Seq(javaBin, "-Xmx512m", "-XX:ActiveProcessorCount=2") ++
-      addOpens ++ Seq(
+      BenchCluster.AddOpens ++ Seq(
       "-cp", cp, "org.apache.spark.deploy.master.Master",
       "--host", "localhost", "--port", MasterPort.toString,
       "--webui-port", MasterUiPort.toString)
@@ -123,7 +113,7 @@ object BenchStandalone {
       new File(dir).mkdirs()
       val cmd = pin ++ Seq(javaBin, "-Xmx512m",
         s"-XX:ActiveProcessorCount=$cores",
-        "-Dspark.ui.enabled=false") ++ addOpens ++ Seq(
+        "-Dspark.ui.enabled=false") ++ BenchCluster.AddOpens ++ Seq(
         "-cp", cp, "org.apache.spark.deploy.worker.Worker",
         "--host", "localhost", "--cores", cores.toString,
         "--memory", mem, "--work-dir", dir, "--webui-port", "0",
@@ -197,7 +187,7 @@ object BenchStandalone {
         "spark.executor.extraJavaOptions" ->
           ("-Xmn1500m -XX:+AlwaysPreTouch " +
             s"-XX:ActiveProcessorCount=$cores " +
-            addOpens.mkString(" ")),
+            BenchCluster.AddOpens.mkString(" ")),
         "spark.cores.max" -> (workers * cores).toString,
         GraftSession.ScanSplits,
         "spark.local.dir" -> BenchCluster.ShmLocalDir,
@@ -250,10 +240,6 @@ object BenchStandalone {
     }
   }
 
-  case class Trial(tN: Double, t4N: Double, utilN: Double, util4N: Double) {
-    def eff: Double = (tN / t4N) / 4.0
-  }
-
   def main(args: Array[String]): Unit = {
     new File(BenchCluster.ShmLocalDir).mkdirs()
     val nPages = sys.env.getOrElse("SPARK_GRAFT_BENCH_PAGES", "800000").toLong
@@ -266,7 +252,7 @@ object BenchStandalone {
     val ts = (1 to trials).map { t =>
         val pN = runClusterSize(path, execN, cores, reps).minBy(_.sec)
         val p4N = runClusterSize(path, execN * 4, cores, reps).minBy(_.sec)
-        val tr = Trial(pN.sec, p4N.sec, pN.util, p4N.util)
+        val tr = BenchCluster.Trial(pN.sec, p4N.sec, pN.util, p4N.util)
         System.err.println(
           f"[standalone] trial $t tN=${tr.tN}%.2f t4N=${tr.t4N}%.2f " +
             f"utilN=${tr.utilN}%.2f util4N=${tr.util4N}%.2f " +
@@ -276,12 +262,7 @@ object BenchStandalone {
     // shared credibility rule (eff ≤ 1 + util floor; see
     // BenchCluster.selectBest): eff > 1.0 means the N side landed in a
     // degraded host window, not superlinear scaling — never headline it
-    val best = BenchCluster.selectBest(ts)(_.eff, _.utilN, _.util4N)
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-    val trialsJson = ts.map(t =>
-      f"""{"sec_N":${t.tN}%.3f,"sec_4N":${t.t4N}%.3f,"cpu_util_N":${t.utilN}%.2f,"cpu_util_4N":${t.util4N}%.2f,"efficiency":${t.eff}%.3f}""")
-      .mkString("[", ",", "]")
     println(
-      f"""{"mode":"standalone-cluster","pages":$nPages,"boost":$boost,"workers_N":$execN,"workers_4N":${execN * 4},"cores_per_worker":$cores,"sec_N":${best.tN}%.3f,"sec_4N":${best.t4N}%.3f,"docs_per_sec_N":${nPages / best.tN}%.1f,"docs_per_sec_4N":${nPages / best.t4N}%.1f,"scaling_efficiency":${best.eff}%.3f,"scaling_efficiency_median":${median(ts.map(_.eff))}%.3f,"trials":$trialsJson}""")
+      f"""{"mode":"standalone-cluster","pages":$nPages,"boost":$boost,"workers_N":$execN,"workers_4N":${execN * 4},"cores_per_worker":$cores,${BenchCluster.pairsJson(nPages, ts)}}""")
   }
 }

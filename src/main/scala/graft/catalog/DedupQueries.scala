@@ -27,15 +27,12 @@ object DedupQueries {
     // harness that clears all persistent RDDs between queries) cannot
     // be recomputed — lineage is truncated — so a stale view would
     // fail its next action; detect eviction and rebuild instead.
-    // Probe the LogicalRDD's OWN rdd: the frame's `.rdd` would wrap the
-    // checkpoint in a fresh deserialization RDD whose storage level is
-    // always NONE, which would misread every hit as evicted and
-    // silently rebuild the SA per call (measured: q156 0.35 → 11 s)
+    // Probing the frame's `.rdd` instead would misread every hit as
+    // evicted and silently rebuild the SA per call (measured: q156
+    // 0.35 → 11 s)
     val live = Some(view).filter(s.catalog.tableExists).map(s.table)
-      .filter(_.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
-      }.contains(true))
+      .filter(ops.Checkpoints.rdds(_).exists(
+        _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE))
     live.getOrElse {
       val sa = ops.SuffixArray.saWithLcp(t(s, d, "documents"), "doc_id",
         "text").localCheckpoint()

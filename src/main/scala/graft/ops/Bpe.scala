@@ -123,14 +123,14 @@ object Bpe {
           val next = syms
             .withColumn("syms", applyMerge(col("syms"), a, b))
             .localCheckpoint()
-          unpersistCheckpoint(syms)
+          Checkpoints.release(syms)
           syms = next
           step += 1
           done = step >= numMerges
         case None => done = true
       }
     }
-    unpersistCheckpoint(syms)
+    Checkpoints.release(syms)
     merges.result()
   }
 
@@ -296,12 +296,4 @@ object Bpe {
     */
   def decode(bpeTokens: Column): Column =
     trim(replace(concat_ws("", bpeTokens), lit(EndOfWord), lit(" ")))
-
-  /** Release the RDD blocks behind a localCheckpoint'ed frame (safe
-    * once nothing downstream re-reads it).
-    */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
 }

@@ -710,12 +710,12 @@ object Dedup {
             col("l.canonical_id")).as("_changed"))
         .localCheckpoint()
       converged = updated.filter(col("_changed")).isEmpty
-      unpersistCheckpoint(prev) // safe: `updated` is materialized
+      Checkpoints.release(prev) // safe: `updated` is materialized
       prev = updated
       labels = updated.drop("_changed")
       iter += 1
     }
-    unpersistCheckpoint(p) // labels no longer re-derives from the pairs
+    Checkpoints.release(p) // labels no longer re-derives from the pairs
     if (!converged)
       System.err.println(
         s"[graft] canonicalize: not converged after $maxIter iterations")
@@ -807,7 +807,7 @@ object Dedup {
         .localCheckpoint()
       // fused probe: one scan of the just-checkpointed blocks
       converged = next.filter(col("_ch")).isEmpty
-      unpersistCheckpoint(prev)
+      Checkpoints.release(prev)
       prev = next
       edges = next.drop("_ch")
       iter += 1
@@ -912,15 +912,6 @@ object Dedup {
           .otherwise(lit("new")).as("verdict"),
         coalesce(col("_xd"), col("_nd")).as("dup_of"))
   }
-
-  /** Release the RDD blocks behind a localCheckpoint'ed frame. Safe only
-    * once nothing downstream can re-read it (a truncated-lineage RDD
-    * cannot be recomputed after unpersist).
-    */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
 
   /** Duplicate-cluster survivor selection by QUALITY: within each
     * near-dup cluster keep the highest-scoring member instead of the

@@ -89,9 +89,7 @@ object SuffixArray {
       .select(col("id"), col("pos"), col("dl"), col("rank"))
       .localCheckpoint()
     // token strings are no longer needed once the h=1 ranks exist
-    pos.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
+    Checkpoints.release(pos)
     var tables = Seq(1L -> r)
     var h = 1L
     // Composite fast path: when the incoming ranks are DENSE (≤ n)

@@ -69,48 +69,10 @@ object WebGraph {
     * multi-edges (each contributes), matching the oracle's SQL twin.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int): DataFrame = {
-    require(iterations >= 0)
-    val teleport = (1000000L - DampingPpm) * (Scale / 1000000L)
-    val outDeg = edges.groupBy(col(srcCol).as("_pr_src"))
-      .agg(count(lit(1)).as("_pr_outdeg"))
-    // reused every round: (src, dst, outdeg) thin rows
-    val withDeg = edges.select(col(srcCol).as("_pr_src"),
-        col(dstCol).as("_pr_dst"))
-      .join(outDeg, Seq("_pr_src"))
-      .localCheckpoint()
-    val nodeTable = nodes(edges, srcCol, dstCol).localCheckpoint()
-    var ranks = nodeTable.withColumn("rank_ppb", lit(Scale))
-      .localCheckpoint()
-    var iter = 0
-    while (iter < iterations) {
-      val contribs = withDeg
-        .join(ranks.withColumnRenamed("node", "_pr_src"), Seq("_pr_src"))
-        // integral DIV — `/` on longs is DOUBLE division in Spark,
-        // which loses integer precision past 2^53 (DampingPpm × a
-        // corpus-scale contribution sum crosses that)
-        .select(col("_pr_dst").as("node"),
-          call_function("div", col("rank_ppb"), col("_pr_outdeg"))
-            .as("_pr_c"))
-        .groupBy(col("node"))
-        // decimal(38,0): DampingPpm × the contribution sum of a
-        // high-in-degree host (10^6 in-edges × ppb ranks) crosses 2^63
-        .agg(sum(col("_pr_c")).cast("decimal(38,0)").as("_pr_sum"))
-      val next = nodeTable
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(teleport) +
-            call_function("div",
-              lit(DampingPpm).cast("decimal(38,0)") *
-                coalesce(col("_pr_sum"), lit(0L).cast("decimal(38,0)")),
-              lit(1000000L))).as("rank_ppb"))
-        .localCheckpoint()
-      unpersistCheckpoint(ranks)
-      ranks = next
-      iter += 1
-    }
-    ranks
-  }
+      iterations: Int): DataFrame =
+    seededRank(edges, srcCol, dstCol,
+      nodes(edges, srcCol, dstCol).withColumn("_tr_seed", lit(true)),
+      iterations)
 
   /** `iterations` rounds of TrustRank (Gyöngyi, Garcia-Molina &
     * Pedersen, VLDB 2004, "Combating Web Spam with TrustRank") — the
@@ -134,22 +96,33 @@ object WebGraph {
     */
   def trustRank(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, iterations: Int): DataFrame = {
+    val seedFlag = seeds.select(col(seeds.columns.head).as("node"))
+      .distinct()
+      .withColumn("_tr_seed", lit(true))
+    seededRank(edges, srcCol, dstCol,
+      nodes(edges, srcCol, dstCol)
+        .join(broadcast(seedFlag), Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("_tr_seed"), lit(false)).as("_tr_seed")),
+      iterations)
+  }
+
+  /** The round loop of [[pageRank]] and [[trustRank]] over a
+    * (node, _tr_seed) table: seeds start at [[Scale]], everything else
+    * at 0, and only seeds receive the teleport mass each round.
+    */
+  private def seededRank(edges: DataFrame, srcCol: String, dstCol: String,
+      seededNodes: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 0)
     val teleport = (1000000L - DampingPpm) * (Scale / 1000000L)
     val outDeg = edges.groupBy(col(srcCol).as("_pr_src"))
       .agg(count(lit(1)).as("_pr_outdeg"))
+    // reused every round: (src, dst, outdeg) thin rows
     val withDeg = edges.select(col(srcCol).as("_pr_src"),
         col(dstCol).as("_pr_dst"))
       .join(outDeg, Seq("_pr_src"))
       .localCheckpoint()
-    val seedFlag = seeds.select(col(seeds.columns.head).as("node"))
-      .distinct()
-      .withColumn("_tr_seed", lit(true))
-    val nodeTable = nodes(edges, srcCol, dstCol)
-      .join(broadcast(seedFlag), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("_tr_seed"), lit(false)).as("_tr_seed"))
-      .localCheckpoint()
+    val nodeTable = seededNodes.localCheckpoint()
     var ranks = nodeTable
       .select(col("node"),
         when(col("_tr_seed"), lit(Scale)).otherwise(lit(0L))
@@ -159,10 +132,15 @@ object WebGraph {
     while (iter < iterations) {
       val contribs = withDeg
         .join(ranks.withColumnRenamed("node", "_pr_src"), Seq("_pr_src"))
+        // integral DIV — `/` on longs is DOUBLE division in Spark,
+        // which loses integer precision past 2^53 (DampingPpm × a
+        // corpus-scale contribution sum crosses that)
         .select(col("_pr_dst").as("node"),
           call_function("div", col("rank_ppb"), col("_pr_outdeg"))
             .as("_pr_c"))
         .groupBy(col("node"))
+        // decimal(38,0): DampingPpm × the contribution sum of a
+        // high-in-degree host (10^6 in-edges × ppb ranks) crosses 2^63
         .agg(sum(col("_pr_c")).cast("decimal(38,0)").as("_pr_sum"))
       val next = nodeTable
         .join(contribs, Seq("node"), "left")
@@ -173,7 +151,7 @@ object WebGraph {
                 coalesce(col("_pr_sum"), lit(0L).cast("decimal(38,0)")),
               lit(1000000L))).as("rank_ppb"))
         .localCheckpoint()
-      unpersistCheckpoint(ranks)
+      Checkpoints.release(ranks)
       ranks = next
       iter += 1
     }
@@ -226,13 +204,13 @@ object WebGraph {
         .groupBy(col("_ht_d").as("node"))
         .agg(sum(col("hub_ppb")).cast(dec).as("_raw"))
       val aNext = normalized(araw, "auth_ppb").localCheckpoint()
-      if (a != null) unpersistCheckpoint(a)
+      if (a != null) Checkpoints.release(a)
       a = aNext
       val hraw = e.join(a.withColumnRenamed("node", "_ht_d"), Seq("_ht_d"))
         .groupBy(col("_ht_s").as("node"))
         .agg(sum(col("auth_ppb")).cast(dec).as("_raw"))
       val hNext = normalized(hraw, "hub_ppb").localCheckpoint()
-      unpersistCheckpoint(h)
+      Checkpoints.release(h)
       h = hNext
       iter += 1
     }
@@ -324,7 +302,7 @@ object WebGraph {
           least(col("_rr_h") + coalesce(col("_rr_h2"), lit(0L)),
             lit(maxHops.toLong + 1L)).as("_rr_h"))
         .localCheckpoint()
-      unpersistCheckpoint(jump)
+      Checkpoints.release(jump)
       jump = next
       r += 1
     }
@@ -422,7 +400,7 @@ object WebGraph {
                 coalesce(col("_pr_sum"), lit(0L).cast(dec)),
               lit(1000000L))).as("rank_ppb"))
         .localCheckpoint()
-      unpersistCheckpoint(ranks)
+      Checkpoints.release(ranks)
       ranks = next
       iter += 1
     }
@@ -573,7 +551,7 @@ object WebGraph {
       // the previous round's blocks are dead weight — release them
       // (the canonicalize discipline; a 32-round peel would otherwise
       // hold 32 copies of the shrinking edge set)
-      unpersistCheckpoint(und)
+      Checkpoints.release(und)
       converged = nextCount == prevCount
       prevCount = nextCount
       und = next
@@ -637,7 +615,7 @@ object WebGraph {
         .groupBy(col("node"), col("reg"))
         .agg(max(col("rho_max")).cast("int").as("rho_max"))
         .localCheckpoint()
-      unpersistCheckpoint(cur)
+      Checkpoints.release(cur)
       cur = next
       out = out.unionByName(snap(r, cur))
     }
@@ -686,9 +664,4 @@ object WebGraph {
         col("round").cast("long").as("crossing_round"),
         col("thr_micro"), col("total_micro"))
   }
-
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
 }

@@ -28,65 +28,12 @@ case class FieldSpec(
     key: String = "")
 
 /** Per-section output-field → strategy maps (the two extraction
-  * families; Others emits row_text only, by design — others.py:48-59),
-  * plus the parsed `global_field_constraints` entries (field →
-  * constraint strings, docs/rule.json:766-845). Constraint SEMANTICS —
-  * digit caps, currency membership, ISIN shape/checksum, calendar
-  * dates — are enforced by the Stage-7 validator taxonomy
-  * (ExtractionPipeline.validationErrorsCol); the parsed entries are
-  * retained for introspection and config-identity tests.
+  * families; Others emits row_text only, by design — others.py:48-59).
+  * The reference's `global_field_constraints` (docs/rule.json:766-845)
+  * are not parsed: their semantics — digit caps, currency membership,
+  * ISIN shape/checksum, calendar dates — are enforced by the Stage-7
+  * validator taxonomy (ExtractionPipeline.validationErrorsCol).
   */
 case class ExtractionSpec(
     trade: Map[String, FieldSpec],
-    positions: Map[String, FieldSpec],
-    globalConstraints: Map[String, Seq[String]] = Map.empty)
-
-object ExtractionSpec {
-
-  private val Isin = FieldSpec("regex", "ISIN\\s+([A-Z0-9]{12})", group = 1)
-  private val Account =
-    FieldSpec("regex", "\\d{3}-\\d{6}\\.[A-Z0-9]+", group = 0)
-
-  /** Trade/Transaction/FXTF family defaults — field-for-field the
-    * semantics of trade_information.py:185-264 plus the J1 FX buy/sell
-    * correlation.
-    */
-  val TradeDefaults: Map[String, FieldSpec] = Map(
-    "client_name" -> FieldSpec("page_context", key = "client_name"),
-    "trade_date" -> FieldSpec("first_date"),
-    "settlement_date" -> FieldSpec("second_date_or_first"),
-    "transaction_type_raw" -> FieldSpec("cell_trim", index = 2),
-    "currency" -> FieldSpec("currency_token", index = 3),
-    "security_name" -> FieldSpec("cell", index = 4),
-    "securities_id" -> Isin,
-    "account_no" -> Account,
-    "foreign_unit_price" -> FieldSpec("cell", index = 5),
-    "foreign_gross_consideration" -> FieldSpec("cell", index = 8),
-    "foreign_net_consideration" ->
-      FieldSpec("amount_after_currency", index = 3),
-    "net_consideration" -> FieldSpec("amount_after_currency", index = 3),
-    "currency_buy" ->
-      FieldSpec("regex", "You bought ([A-Z]{3}) [0-9',\\. ]*\\d", group = 1),
-    "amount_buy" ->
-      FieldSpec("regex", "You bought [A-Z]{3} ([0-9',\\. ]*\\d)", group = 1),
-    "currency_sell" ->
-      FieldSpec("regex", "You sold ([A-Z]{3}) [0-9',\\. ]*\\d", group = 1),
-    "amount_sell" ->
-      FieldSpec("regex", "You sold [A-Z]{3} ([0-9',\\. ]*\\d)", group = 1))
-
-  /** Positions family defaults — positions.py:176-250. */
-  val PositionsDefaults: Map[String, FieldSpec] = Map(
-    "portfolio_no" -> FieldSpec("page_context", key = "portfolio_no"),
-    "valuation_date" -> FieldSpec("page_context", key = "as_of_date"),
-    "currency" -> FieldSpec("positions_currency"),
-    "quantity" -> FieldSpec("positions_quantity"),
-    "security_name" -> FieldSpec("positions_name"),
-    "securities_id" -> Isin,
-    "account_no" -> Account,
-    "market_price" -> FieldSpec("cell", index = 3),
-    "market_value" -> FieldSpec("cell", index = 5),
-    "cost_price" -> FieldSpec("cell", index = 5))
-
-  val default: ExtractionSpec =
-    ExtractionSpec(TradeDefaults, PositionsDefaults)
-}
+    positions: Map[String, FieldSpec])

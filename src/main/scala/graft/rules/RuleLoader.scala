@@ -18,11 +18,11 @@ import scala.jdk.CollectionConverters._
   *   "transaction_type_rules": [{"name", "priority", "match_any",
   *       "exclude_if_contains", "output", "fallback"}…] }
   * }}}
-  * Unknown keys (e.g. `sections`, `global_field_constraints`,
-  * `match_in`) are ignored, mirroring the reference classifiers which
-  * only read the fields above. The two built-in rule sets also ship as
-  * resources (`/graft/rules/plugin_rules.json`); the hardcoded
-  * [[RuleSets]] remain the defaults.
+  * plus `sections[].extraction_rules` (see [[ExtractionSpec]]). Other
+  * keys (e.g. `global_field_constraints`, `match_in`) are ignored,
+  * mirroring the reference classifiers which only read the fields
+  * above. The built-in [[RuleSets]] are loaded from the resource
+  * `/graft/rules/plugin_rules.json`.
   */
 object RuleLoader {
 
@@ -77,11 +77,11 @@ object RuleLoader {
       othersFallback, extraction = extractionOf(root))
   }
 
-  /** Parse `sections[].extraction_rules` + `global_field_constraints`
-    * (docs/rule.json:68-845 shape, machine-usable subset — see
-    * [[ExtractionSpec]]). A document without `sections` gets the
-    * built-in defaults, mirroring the reference classifiers which carry
-    * hardcoded extraction when the config is silent.
+  /** Parse `sections[].extraction_rules` (docs/rule.json:68-845 shape,
+    * machine-usable subset — see [[ExtractionSpec]]). A family without a
+    * section gets the built-in plugin set's fields, mirroring the
+    * reference classifiers which carry hardcoded extraction when the
+    * config is silent.
     */
   private def extractionOf(root: JsonNode): ExtractionSpec = {
     def fieldsOf(section: JsonNode): Map[String, FieldSpec] = {
@@ -94,29 +94,15 @@ object RuleLoader {
       }.toMap
     }
     val sections = rulesOf(root, "sections")
-    def family(f: String): Map[String, FieldSpec] =
+    // by-name: loading RuleSets.plugin itself must not read it
+    def family(f: String, builtIn: => Map[String, FieldSpec]) =
       sections.find(s => str(s, "family") == f).map(fieldsOf)
-        .getOrElse(
-          if (f == "positions") ExtractionSpec.PositionsDefaults
-          else ExtractionSpec.TradeDefaults)
-    val gfc = rulesOf(root, "global_field_constraints").map { c =>
-      str(c, "field_name") -> strSeq(c, "constraints")
-    }.toMap
-    // constraint parity with the built-in default keeps RuleSet case-
-    // class equality meaningful in the loader-identity tests
-    ExtractionSpec(family("trade"), family("positions"),
-      if (gfc.isEmpty) ExtractionSpec.default.globalConstraints else gfc)
+        .getOrElse(builtIn)
+    ExtractionSpec(family("trade", RuleSets.plugin.extraction.trade),
+      family("positions", RuleSets.plugin.extraction.positions))
   }
 
-  def fromFile(path: String, name: String = "loaded",
-      headerMode: HeaderMode = PluginHeader,
-      othersFallback: Boolean = false): RuleSet =
-    fromJson(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8), name, headerMode,
-      othersFallback)
-
-  /** The built-in set shipped as a classpath resource. */
+  /** A rule set shipped as a classpath resource. */
   def fromResource(resource: String, name: String,
       headerMode: HeaderMode = PluginHeader,
       othersFallback: Boolean = false): RuleSet = {
@@ -126,11 +112,4 @@ object RuleLoader {
     finally in.close()
     fromJson(json, name, headerMode, othersFallback)
   }
-
-  /** plugin_rules.json parsed back — must equal RuleSets.plugin
-    * (asserted in RulesSpec).
-    */
-  def pluginFromResource: RuleSet =
-    fromResource("/graft/rules/plugin_rules.json", "plugin", PluginHeader,
-      othersFallback = true)
 }

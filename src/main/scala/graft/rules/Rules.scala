@@ -86,10 +86,10 @@ case class RuleSet(
     othersFallback: Boolean = false,
     othersExcludedPrefixes: Seq[String] = RuleSet.DefaultOthersExcluded,
     /** Config-driven field extraction (docs/rule.json sections[]
-      * extraction_rules) — defaults reproduce the reference plugins'
-      * hardcoded extraction exactly (loader-identity golden test).
+      * extraction_rules); defaults to the built-in plugin set's, which
+      * reproduces the reference plugins' hardcoded extraction.
       */
-    extraction: ExtractionSpec = ExtractionSpec.default) {
+    extraction: ExtractionSpec = RuleSets.plugin.extraction) {
   // priority desc; fallback rules only set the default. The reference
   // loop reassigns the default on EVERY fallback rule it passes
   // (priority desc, page_classifier.py:22-24), so with several fallback
@@ -123,70 +123,19 @@ object RuleSet {
     "# Portfolio overview")
 }
 
-/** The two reference rule configurations, encoded as data (the rule
-  * semantics of soa_extractor/rules/rule.json:1-132 and
-  * docs/rule.json transaction_type_rules).
+/** The two reference rule configurations. Their rules live only in
+  * `plugin_rules.json` (the semantics of soa_extractor/rules/rule.json:1-132
+  * and docs/rule.json transaction_type_rules and sections[]); the soa
+  * variant shares them and differs only in header mode and fallback.
   */
 object RuleSets {
-  private val pageRules = Seq(
-    PageRule(10, "Trade", Seq("Trade information", "Transaction details")),
-    PageRule(10, "FXTF", Seq("FX & TF", "Foreign Exchange")),
-    PageRule(10, "Positions",
-      Seq("Portfolio", "Positions", "Holdings", "Statement of assets")),
-    // Transaction pages: the plugin orchestrator branches on page_type
-    // "Transaction" (orchestrator.py:139); the keyword set comes from
-    // docs/rule.json's Trade-information page identification
-    // ("Transaction list").
-    PageRule(9, "Transaction", Seq("Transaction list", "Transaction details")),
-    PageRule(0, "Ignore", fallback = true))
-
-  private val recordRules = Seq(
-    RecordRule(100, Seq("FX FORWARD"), "FX Forward", "FXTF"),
-    RecordRule(95, Seq("FX SPOT"), "FX Spot", "FXTF"),
-    RecordRule(90, Seq("SPOT"), "FX Spot", "FXTF"),
-    RecordRule(70, Seq("SOLD FOR YOU AS AGENT", "BOUGHT FROM YOU AS PRINCIPAL",
-      "FRAMEWORK REDEMPTION", "REDEMPTION", "YOUR SALE",
-      "SEC. DELIVERY AGAINST PAYMENT", "SALE SPOT", "SALE", "SELL"),
-      "Sell", "Trade"),
-    RecordRule(60, Seq("SOLD TO YOU AS PRINCIPAL", "BOUGHT FOR YOU AS AGENT",
-      "NEW ISSUE PURCHASE", "YOUR PURCHASE", "SEC. RECEIPT AGAINST PAYMENT",
-      "PURCHASE", "BUY"), "Buy", "Trade"),
-    RecordRule(40, Seq("REDUCTION", "REPAYMENT", "INTEREST CAP."),
-      "UBS Call Deposit", "Others"),
-    RecordRule(30, Seq("increase"), "Increase", "Positions"),
-    RecordRule(20, Seq("new investment", "new invest", "new inv"),
-      "New investment", "Positions"),
-    RecordRule(0, Nil, "Other", "Others", fallback = true))
-
-  private val txnRules = Seq(
-    TxnTypeRule("UBS Call Deposit", 110, Seq("UBS Call Deposit"),
-      output = "UBS Call Deposit"),
-    TxnTypeRule("FX Forward", 100, Seq("FX FORWARD"), output = "FX Forward"),
-    TxnTypeRule("FX Spot (explicit)", 95, Seq("FX SPOT"), output = "FX Spot"),
-    TxnTypeRule("FX Spot (implicit)", 90, Seq("SPOT"), Seq("SALE"), "FX Spot"),
-    TxnTypeRule("REDUCTION", 89, Seq("REDUCTION"), output = "REDUCTION"),
-    TxnTypeRule("REPAYMENT", 88, Seq("REPAYMENT"), output = "REPAYMENT"),
-    TxnTypeRule("INTEREST CAP.", 87, Seq("INTEREST CAP."),
-      output = "INTEREST CAP."),
-    TxnTypeRule("Sell", 70, Seq("SOLD FOR YOU AS AGENT",
-      "BOUGHT FROM YOU AS PRINCIPAL", "FRAMEWORK REDEMPTION", "REDEMPTION",
-      "YOUR SALE", "SEC. DELIVERY AGAINST PAYMENT", "SALE SPOT", "SALE",
-      "SELL"), output = "Sell"),
-    TxnTypeRule("Buy", 60, Seq("SOLD TO YOU AS PRINCIPAL",
-      "BOUGHT FOR YOU AS AGENT", "NEW ISSUE PURCHASE", "YOUR PURCHASE",
-      "SEC. RECEIPT AGAINST PAYMENT", "PURCHASE", "BUY"), output = "Buy"),
-    TxnTypeRule("Increase", 30, Seq("increase"), output = "Increase"),
-    TxnTypeRule("New investment", 20, Seq("new investment", "new invest",
-      "new inv"), output = "New investment"),
-    TxnTypeRule("Other", 0, fallback = true, output = "Other"))
-
   // Others-fallback is the plugin family's behavior (others.py:9-29);
   // the soa path drops fallback-classified pages (run.py:189-196).
-  val plugin: RuleSet =
-    RuleSet("plugin", PluginHeader, pageRules, recordRules, txnRules,
-      othersFallback = true)
+  val plugin: RuleSet = RuleLoader.fromResource(
+    "/graft/rules/plugin_rules.json", "plugin", PluginHeader,
+    othersFallback = true)
   val soa: RuleSet =
-    RuleSet("soa", SoaHeader, pageRules, recordRules, txnRules)
+    plugin.copy(name = "soa", headerMode = SoaHeader, othersFallback = false)
 }
 
 /** Scalar (non-Spark) rule evaluation — used by the golden evaluator and

@@ -38,18 +38,12 @@ object StreamingPipeline {
       }
   }
 
-  /** Watermarked event-time windowed aggregation over an events stream
-    * (ts, event_type, value): 5-minute tumbling windows, 10-minute
-    * watermark for late data.
-    */
   /** WARC-wave ingest chain: charset sniff + decode → page metadata →
     * admission verdict (noindex'd pages, soft-error shells and
     * unsupported charsets flagged). Stateless per-row Columns end to
     * end, so the SAME function serves the batch table and the
     * streaming source (one semantics, two execution modes) — no
-    * watermark, no state store.
-    */
-  /** Streaming ingest verdicts. `trustedHosts` (optional) arms the
+    * watermark, no state store. `trustedHosts` (optional) arms the
     * homoglyph spoof gate: a page whose HOST folds to a trusted
     * host's confusable skeleton under a different raw spelling is
     * rejected at the door (`spoofed` rides along for audit) — the
@@ -84,6 +78,10 @@ object StreamingPipeline {
         col("charset_supported") && !col("spoofed"))
   }
 
+  /** Watermarked event-time windowed aggregation over an events stream
+    * (ts, event_type, value): 5-minute tumbling windows, 10-minute
+    * watermark for late data.
+    */
   def windowedCounts(events: DataFrame): DataFrame =
     events
       .withColumn("ts", col("ts").cast("timestamp"))

@@ -138,16 +138,6 @@ class GoldenPipelineSpec extends AnyFunSuite {
     assert(a === b)
   }
 
-  test("loader-identity: JSON-config extraction == hardcoded, byte-identical") {
-    import spark.implicits._
-    val pages = spark.createDataset(pagesSeq.take(120))
-    val loaded = graft.rules.RuleLoader.pluginFromResource
-    assert(loaded.extraction === graft.rules.ExtractionSpec.default)
-    val a = sparkCanon(ExtractionPipeline.records(pages, RuleSets.plugin, 8))
-    val b = sparkCanon(ExtractionPipeline.records(pages, loaded, 8))
-    assert(a === b)
-  }
-
   test("config override: extraction rules are live data, not decoration") {
     import spark.implicits._
     val pages = spark.createDataset(pagesSeq.take(120))

@@ -93,10 +93,6 @@ class RulesSpec extends AnyFunSuite {
     assert(gotTxn === rows.map(ScalarRules.classifyTxnType(_, rs)))
   }
 
-  test("JSON loader: plugin_rules.json resource == hardcoded RuleSets.plugin") {
-    assert(RuleLoader.pluginFromResource === RuleSets.plugin)
-  }
-
   test("JSON loader: parses the reference rule.json field shapes") {
     val json = """{
       "page_classification": {"rules": [
@@ -137,5 +133,30 @@ class RulesSpec extends AnyFunSuite {
         PageRule(5, "HighFallback", Nil, fallback = true)))
     // fallbacks sorted desc: HighFallback(5), Ignore(0) → last = Ignore
     assert(two.pageFallback === "Ignore")
+  }
+
+  test("built-in rule sets are pinned: sha256 of plugin and soa") {
+    def strs(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def fields(m: Map[String, FieldSpec]) = m.toSeq.sortBy(_._1).map {
+      case (k, f) => s"$k=${f.strategy}|${f.pattern}|${f.group}|${f.index}|${f.key}"
+    }.mkString("\n")
+    def render(r: RuleSet) = Seq(
+      r.name, r.headerMode.toString,
+      r.pageRules.map(p => s"page ${p.priority} ${p.pageType} " +
+        s"${strs(p.containsAny)} ${p.fallback}").mkString("\n"),
+      r.recordRules.map(p => s"record ${p.priority} ${strs(p.matchAny)} " +
+        s"${p.output} ${p.outputGroup} ${p.fallback}").mkString("\n"),
+      r.txnTypeRules.map(p => s"txn ${p.name} ${p.priority} " +
+        s"${strs(p.matchAny)} ${strs(p.excludeIfContains)} ${p.output} " +
+        s"${p.fallback}").mkString("\n"),
+      r.othersFallback.toString, strs(r.othersExcludedPrefixes),
+      fields(r.extraction.trade), fields(r.extraction.positions)
+    ).mkString("\n")
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    Seq(RuleSets.plugin, RuleSets.soa).foreach(r =>
+      md.update((render(r) + "\u0000").getBytes("UTF-8")))
+    val hex = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    assert(hex ==
+      "43966d9ab8eadcd2394e1a749520335e2e85712fea6ca4531faa490b2a1b0152")
   }
 }
