@@ -499,6 +499,49 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows.head._3 === s"$good mail me at <EMAIL>")
   }
 
+  test("curation gate stream == batch gateStage survivors, redacted") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // no exact duplicates (before or after redaction), so the stream's
+    // dedup drops nothing and every batch survivor must appear
+    val good = "the quick brown fox jumps over the lazy dog today"
+    val feed = Seq(
+      (1L, s"$good mail me at a@b.org"),
+      (2L, Seq.fill(6)("the offer is here").mkString("\n")), // dup lines
+      (3L, "xqz qrp zzz vvv qqq www eee rrr"), // no stopwords → und
+      (4L, "der hund ist nicht in dem haus und die katze auch nicht"),
+      (5L, "the dog is"), // under the token floor
+      (6L, s"call 555-123-4567 and then $good"),
+      (7L, ""),
+      (8L, s"$good\nand the second line of it is not the same"))
+    val stream = MemoryStream[(java.sql.Timestamp, Long, String)]
+    val df = stream.toDF().toDF("ts", "doc_id", "text")
+    val q = StreamingPipeline
+      .curationGateStream(df, "doc_id", "text", minTokens = 5)
+      .writeStream.format("memory").queryName("cur_gate_eq_out")
+      .outputMode(OutputMode.Append).start()
+    def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
+    val (first, second) = feed.splitAt(4)
+    stream.addData(first.map { case (i, t) => (ts(1), i, t) }: _*)
+    q.processAllAvailable()
+    stream.addData(second.map { case (i, t) => (ts(2), i, t) }: _*)
+    q.processAllAvailable()
+    q.stop()
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+        .sortBy(_._1).toSeq
+    val got = rows(spark.table("cur_gate_eq_out")
+      .select("doc_id", "lang", "red_text"))
+    val docs = feed.toDF("doc_id", "text")
+    val batch = rows(graft.ops.Curation
+      .gateStage(docs, "doc_id", "text", 5, 300000L)
+      .join(docs, "doc_id")
+      .select(col("doc_id"), col("lang"),
+        graft.ops.Curation.piiRedact(col("text")).as("red_text")))
+    assert(got === batch)
+    assert(got.map(_._1) === Seq(1L, 4L, 6L, 8L))
+  }
+
   test("WARC ingestion stream: archive files arriving in waves parse " +
     "== batch readWarc") {
     import spark.implicits._
