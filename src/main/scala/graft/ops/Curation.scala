@@ -837,8 +837,11 @@ object Curation {
     curated
   }
 
-  /** Stage 1: language + repetition gate, then PII redaction.
-    * Output: (idCol, lang, _paras) — redacted text as a paragraph array.
+  /** The per-document language + repetition gate: the input rows whose
+    * language is identified, with at least `minTokens` tokens and at
+    * most `maxDupLinePpm` duplicated lines, plus their `lang`. Stateless
+    * per row, so the batch [[gateStage]] and the streaming curation
+    * gate both run it.
     *
     * The scan is the per-doc hot loop of the whole curation chain, so
     * every text-derived array is materialized exactly once per row:
@@ -849,26 +852,33 @@ object Curation {
     * row through the decision tree's repeated references; measured 2.4×
     * slower on the sf0.1 curation input.)
     */
-  private[graft] def gateStage(df: DataFrame, idCol: String,
-      textCol: String, minTokens: Int, maxDupLinePpm: Long): DataFrame = {
+  private[graft] def gateFilter(df: DataFrame, textCol: String,
+      minTokens: Int, maxDupLinePpm: Long): DataFrame = {
     val txt = col(textCol)
-    val withFeats = TextAnalysis.withLangId(
-      df.withColumn("_gtoks", Dedup.tokens(txt))
-        .withColumn("_glines", docLines(txt)),
-      textCol, "lang", toksCol = "_gtoks")
-    withFeats
+    TextAnalysis.withLangId(
+        df.withColumn("_gtoks", Dedup.tokens(txt))
+          .withColumn("_glines", docLines(txt)),
+        textCol, "lang", toksCol = "_gtoks")
       .withColumn("_toks", size(col("_gtoks")).cast("long"))
       .withColumn("_dlp", dupLinePpm(col("_glines")))
       .filter(col("lang") =!= "und" && col("_toks") >= minTokens &&
         col("_dlp") <= maxDupLinePpm)
+      .drop("_gtoks", "_glines", "_toks", "_dlp")
+  }
+
+  /** Stage 1: language + repetition gate, then PII redaction.
+    * Output: (idCol, lang, _paras) — redacted text as a paragraph array.
+    */
+  private[graft] def gateStage(df: DataFrame, idCol: String,
+      textCol: String, minTokens: Int, maxDupLinePpm: Long): DataFrame =
+    gateFilter(df, textCol, minTokens, maxDupLinePpm)
       // emit the redacted text ALREADY paragraph-split: the next stage
       // (corpus paragraph dedup) reads its input twice, and an
       // unmaterialized split would run twice — checkpointing the array
       // makes both reads an attribute fetch (same bytes stored either
       // way; the join string is fixed, so no information is lost)
       .select(col(idCol), col("lang"),
-        paragraphs(piiRedact(txt)).as("_paras"))
-  }
+        paragraphs(piiRedact(col(textCol))).as("_paras"))
 
   /** Stage 2: corpus-level boilerplate-paragraph removal.
     * Output: (idCol, lang, clean_text).
@@ -946,28 +956,54 @@ object Curation {
   def contaminationStats(corpus: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, benchTextCol: String,
       n: Int = 8, broadcastBench: Boolean = true): DataFrame = {
-    val benchGrams = bench
+    val hits = benchGramHits(corpus, Seq(idCol), textCol, bench,
+      benchTextCol, n, broadcastBench)
+    corpus
+      .withColumn("_toks", Dedup.tokens(col(textCol)))
+      .withColumn("_grams", gramsOf(col("_toks"), n))
+      .join(hits, Seq(idCol), "left")
+      .withColumn("n_grams", size(col("_grams")).cast("long"))
+      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
+      .withColumn("contamination_ppm",
+        when(col("n_grams") > 0, (col("n_hit") * 1000000L) / col("n_grams"))
+          .otherwise(lit(0L)).cast("long"))
+      .drop("_toks", "_grams")
+  }
+
+  /** Distinct 8-byte hashes of the benchmark's word n-grams — the
+    * benchmark side of every decontamination operator, batch and
+    * streaming. Eval suites are tiny next to the corpus, so callers
+    * broadcast it or collect it into a Bloom filter.
+    */
+  private def benchGramHashes(bench: DataFrame, benchTextCol: String,
+      n: Int): DataFrame =
+    bench
       .withColumn("_btoks", Dedup.tokens(col(benchTextCol)))
       .select(explode(gramsOf(col("_btoks"), n)).as("_g"))
       .select(Dedup.tokHash(col("_g")).as("_gh"))
       .distinct()
-    val bSide = if (broadcastBench) broadcast(benchGrams) else benchGrams
-    val withG = corpus
+
+  /** Per-document benchmark gram hits, grouped by `keys` — `Seq(idCol)`
+    * in batch, `Seq(idCol, tsCol)` on a watermarked stream: the doc's
+    * gram hashes explode into thin (keys, hash) rows, left-join the
+    * benchmark hash set and re-aggregate, so `n_hit` counts the gram
+    * occurrences found in the benchmark. explode_outer + left join keep
+    * every document, an empty one too, with n_hit = 0 — a stream cannot
+    * join its aggregate back to its input to recover them.
+    */
+  private[graft] def benchGramHits(docs: DataFrame, keys: Seq[String],
+      textCol: String, bench: DataFrame, benchTextCol: String, n: Int,
+      broadcastBench: Boolean): DataFrame = {
+    val benchGrams = benchGramHashes(bench, benchTextCol, n)
+      .withColumnRenamed("_gh", "_bh")
+    docs
       .withColumn("_toks", Dedup.tokens(col(textCol)))
-      .withColumn("_grams", gramsOf(col("_toks"), n))
-    val hits = withG
-      .select(col(idCol), explode(col("_grams")).as("_g"))
-      .select(col(idCol), Dedup.tokHash(col("_g")).as("_gh"))
-      .join(bSide, "_gh")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("_nh"))
-    withG
-      .join(hits, Seq(idCol), "left")
-      .withColumn("n_grams", size(col("_grams")).cast("long"))
-      .withColumn("n_hit", coalesce(col("_nh"), lit(0L)))
-      .withColumn("contamination_ppm",
-        when(col("n_grams") > 0, (col("n_hit") * 1000000L) / col("n_grams"))
-          .otherwise(lit(0L)).cast("long"))
-      .drop("_toks", "_grams", "_nh")
+      .select(keys.map(col) :+ explode_outer(transform(
+        gramsOf(col("_toks"), n), g => Dedup.tokHash(g))).as("_gh"): _*)
+      .join(if (broadcastBench) broadcast(benchGrams) else benchGrams,
+        col("_gh") === col("_bh"), "left")
+      .groupBy(keys.map(col): _*)
+      .agg(sum(when(col("_bh").isNotNull, 1L).otherwise(0L)).as("n_hit"))
   }
 
   /** Deterministic two-probe Bloom filter over 32-bit gram hashes,
@@ -1099,6 +1135,20 @@ object Curation {
       .select(col("key"), col("shard"))
   }
 
+  /** Distinct benchmark gram hashes plus their driver-built Bloom
+    * filter — the shared candidate machinery of [[decontaminateExact]]
+    * and [[removeBenchmarkSpans]]. The bench side is small by contract
+    * (eval suites): collected once for the filter; the returned frame
+    * is broadcast for the exact confirm.
+    */
+  private def benchGramFilter(bench: DataFrame, benchTextCol: String,
+      n: Int, bloomBits: Int): (DataFrame, Array[Long]) = {
+    val benchGrams = benchGramHashes(bench, benchTextCol, n)
+    val words = bloomBuild(
+      benchGrams.collect().iterator.map(_.getLong(0)), bloomBits)
+    (benchGrams, words)
+  }
+
   /** [[contaminationStats]] with a Bloom prefilter — the 100 TB shape
     * of decontamination: the benchmark's gram hashes compress to a
     * `bloomBits`-bit filter evaluated MAP-SIDE on every corpus gram, so
@@ -1113,24 +1163,6 @@ object Curation {
     * (16 MB, broadcast once per executor) holds ~10M benchmark grams
     * at fpr < 1%.
     */
-  /** Distinct benchmark gram hashes plus their driver-built Bloom
-    * filter — the shared candidate machinery of [[decontaminateExact]]
-    * and [[removeBenchmarkSpans]]. The bench side is small by contract
-    * (eval suites): collected once for the filter; the returned frame
-    * is broadcast for the exact confirm.
-    */
-  private def benchGramFilter(bench: DataFrame, benchTextCol: String,
-      n: Int, bloomBits: Int): (DataFrame, Array[Long]) = {
-    val benchGrams = bench
-      .withColumn("_btoks", Dedup.tokens(col(benchTextCol)))
-      .select(explode(gramsOf(col("_btoks"), n)).as("_g"))
-      .select(Dedup.tokHash(col("_g")).as("_gh"))
-      .distinct()
-    val words = bloomBuild(
-      benchGrams.collect().iterator.map(_.getLong(0)), bloomBits)
-    (benchGrams, words)
-  }
-
   def decontaminateExact(corpus: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, benchTextCol: String,
       n: Int = 8, bloomBits: Int = 1 << 20): DataFrame = {
@@ -2046,32 +2078,42 @@ object Curation {
     * scored neutral (500000). `pred` = mean > 500000. All integer, so
     * serving is engine-exact too.
     *
-    * Scale shape: thin (id, bucket) rows join the weight table —
-    * broadcast by default (≤ buckets rows); per-doc sums re-aggregate
-    * with partial aggregation. Text never shuffles.
+    * Scale shape: thin (id, bucket) rows join the broadcast weight
+    * table (≤ buckets rows); per-doc sums re-aggregate with partial
+    * aggregation. Text never shuffles.
     */
   def scoreByTokenWeights(df: DataFrame, weights: DataFrame,
-      idCol: String, textCol: String, buckets: Int = 1 << 18,
-      broadcastWeights: Boolean = true): DataFrame = {
-    val w = if (broadcastWeights) broadcast(weights) else weights
-    val thin = df
-      .select(col(idCol), explode(Dedup.tokens(col(textCol))).as("_t"))
-      .select(col(idCol),
-        pmod(Dedup.tokHash(col("_t")), lit(buckets)).as("bucket"))
-    val scored = thin.join(w, Seq("bucket"), "left")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("_ns"),
-        sum(coalesce(col("w"), lit(500000L))).as("_ss"))
-    df.join(scored, Seq(idCol), "left")
-      .withColumn("n_tokens_scored", coalesce(col("_ns"), lit(0L)))
-      .withColumn("score_sum", coalesce(col("_ss"), lit(0L)))
+      idCol: String, textCol: String,
+      buckets: Int = 1 << 18): DataFrame =
+    df.join(tokenWeightScores(df, Seq(idCol), textCol, weights, buckets),
+        Seq(idCol), "left")
+      .na.fill(0L, Seq("n_tokens_scored", "score_sum", "score_mean_ppm"))
+      .na.fill(false, Seq("pred"))
+
+  /** The [[scoreByTokenWeights]] kernel, grouped by `keys` —
+    * `Seq(idCol)` in batch, `Seq(idCol, tsCol)` on a watermarked
+    * stream. explode_outer keeps a document without tokens as one
+    * unscored row (all zeros), so every document gets a score row.
+    * Returns (keys, n_tokens_scored, score_sum, score_mean_ppm, pred).
+    */
+  private[graft] def tokenWeightScores(docs: DataFrame, keys: Seq[String],
+      textCol: String, weights: DataFrame, buckets: Int): DataFrame = {
+    val scored = col("bucket").isNotNull
+    docs
+      .select(keys.map(col) :+ explode_outer(transform(
+        Dedup.tokens(col(textCol)),
+        t => pmod(Dedup.tokHash(t), lit(buckets)))).as("bucket"): _*)
+      .join(broadcast(weights), Seq("bucket"), "left")
+      .groupBy(keys.map(col): _*)
+      .agg(sum(when(scored, 1L).otherwise(0L)).as("n_tokens_scored"),
+        sum(when(scored, coalesce(col("w"), lit(500000L))).otherwise(0L))
+          .as("score_sum"))
       // non-negative operands: Spark DIV (trunc) == DuckDB // (floor)
       .withColumn("score_mean_ppm",
         when(col("n_tokens_scored") > 0,
           expr("score_sum DIV n_tokens_scored"))
           .otherwise(lit(0L)).cast("long"))
       .withColumn("pred", col("score_mean_ppm") > 500000L)
-      .drop("_ns", "_ss")
   }
 
   /** Unsupervised bigram-fluency scoring — the integer-exact analogue
@@ -2115,16 +2157,20 @@ object Curation {
     */
   def bigramFluency(df: DataFrame, idCol: String, textCol: String,
       smoothing: Long = 8L, rareMax: Long = 2L): DataFrame = {
-    val thin = bigramThin(df, idCol, textCol)
-    val (bigrams, heads) = bigramTablesFromThin(thin)
-    scoreBigramThin(df, idCol, thin, bigrams, heads, smoothing, rareMax)
+    val (bigrams, heads) =
+      bigramTablesFromThin(bigramThin(df, Seq(idCol), textCol))
+    withBigramScores(df, idCol,
+      bigramScores(df, Seq(idCol), textCol, bigrams, heads, smoothing,
+        rareMax))
   }
 
-  /** Per-doc thin (id, _ph, _ch) bigram-hash rows — the shared explode
-    * behind training and serving.
+  /** Per-doc thin (keys, _ph, _ch) bigram-hash rows — the shared explode
+    * behind training and serving. `outer` keeps a document with < 2
+    * tokens as one (keys, null, null) row: the scoring form, which must
+    * emit every document.
     */
-  private def bigramThin(df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
+  private def bigramThin(df: DataFrame, keys: Seq[String],
+      textCol: String, outer: Boolean = false): DataFrame = {
     val withH = df
       .withColumn("_ftoks", Dedup.tokens(col(textCol)))
       .withColumn("_fhs",
@@ -2135,8 +2181,10 @@ object Curation {
         element_at(col("_fhs"), i + 1).as("c"))))
       .otherwise(array().cast("array<struct<p:bigint,c:bigint>>"))
     withH
-      .select(col(idCol), explode(pairArr).as("_bg"))
-      .select(col(idCol), col("_bg.p").as("_ph"), col("_bg.c").as("_ch"))
+      .select(keys.map(col) :+
+        (if (outer) explode_outer(pairArr) else explode(pairArr)).as("_bg"): _*)
+      .select(keys.map(col) ++
+        Seq(col("_bg.p").as("_ph"), col("_bg.c").as("_ch")): _*)
   }
 
   private def bigramTablesFromThin(
@@ -2277,10 +2325,10 @@ object Curation {
   def mooreLewis(df: DataFrame, idCol: String, textCol: String,
       target: DataFrame, pseudoVocab: Long = 65536L): DataFrame = {
     require(pseudoVocab > 0)
-    val thin = bigramThin(df, idCol, textCol).localCheckpoint()
+    val thin = bigramThin(df, Seq(idCol), textCol).localCheckpoint()
     val (bgG, hdG) = bigramTablesFromThin(thin)
     val (bgT, hdT) = bigramTablesFromThin(
-      bigramThin(target, idCol, textCol).localCheckpoint())
+      bigramThin(target, Seq(idCol), textCol).localCheckpoint())
     val v = lit(pseudoVocab.toDouble)
     def lp(bc: Column, pc: Column) =
       log((coalesce(bc, lit(0L)) + lit(1.0)) /
@@ -2317,7 +2365,7 @@ object Curation {
     // argument order every sibling operator uses — a silent
     // train-on-the-id-column trap. The synthetic label never shuffles.
     val frame = df.withColumn("_bt_id", monotonically_increasing_id())
-    bigramTablesFromThin(bigramThin(frame, "_bt_id", textCol))
+    bigramTablesFromThin(bigramThin(frame, Seq("_bt_id"), textCol))
   }
 
   /** Score documents against FROZEN [[bigramTables]] — new-batch /
@@ -2328,39 +2376,47 @@ object Curation {
   def scoreBigramFluency(df: DataFrame, idCol: String, textCol: String,
       bigrams: DataFrame, heads: DataFrame, smoothing: Long = 8L,
       rareMax: Long = 2L): DataFrame =
-    scoreBigramThin(df, idCol, bigramThin(df, idCol, textCol),
-      bigrams, heads, smoothing, rareMax, leftJoins = true)
+    withBigramScores(df, idCol,
+      bigramScores(df, Seq(idCol), textCol, bigrams, heads, smoothing,
+        rareMax))
 
-  private def scoreBigramThin(df: DataFrame, idCol: String,
-      thin: DataFrame, bigrams: DataFrame, heads: DataFrame,
-      smoothing: Long, rareMax: Long,
-      leftJoins: Boolean = false): DataFrame = {
-    // self-scoring: every transition exists in its own tables (inner
-    // join is exact). Frozen-model serving: unseen transitions/heads
-    // must NOT drop — they score 0 and count as rare
-    val how = if (leftJoins) "left" else "inner"
-    val scored = thin
-      .join(bigrams, Seq("_ph", "_ch"), how)
-      .join(heads, Seq("_ph"), how)
+  /** The bigram-fluency kernel, grouped by `keys` — `Seq(idCol)` in
+    * batch, `Seq(idCol, tsCol)` on a watermarked stream: the doc's
+    * transitions left-join the count tables, so a transition or head
+    * absent from the model scores 0 and counts as rare, and a document
+    * with < 2 tokens scores (0, 0, 0). Returns (keys, n_bigrams,
+    * rare_bigram_ppm, fluency_ppm).
+    */
+  private[graft] def bigramScores(docs: DataFrame, keys: Seq[String],
+      textCol: String, bigrams: DataFrame, heads: DataFrame,
+      smoothing: Long, rareMax: Long): DataFrame = {
+    val seen = col("_ph").isNotNull
+    bigramThin(docs, keys, textCol, outer = true)
+      .join(bigrams, Seq("_ph", "_ch"), "left")
+      .join(heads, Seq("_ph"), "left")
       .withColumn("_bc", coalesce(col("_bc"), lit(0L)))
       .withColumn("_pc", coalesce(col("_pc"), lit(0L)))
       // non-negative operands: Spark DIV (trunc) == DuckDB // (floor)
       .withColumn("_ppm", expr(s"(_bc * 1000000) DIV (_pc + $smoothing)"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("_nb"), sum(col("_ppm")).as("_sp"),
-        sum(when(col("_bc") <= rareMax, 1L).otherwise(0L)).as("_nr"))
-      .select(col(idCol).as("_bf_id"), col("_nb"), col("_sp"), col("_nr"))
-    df.join(scored, col(idCol) <=> col("_bf_id"), "left")
-      .drop("_bf_id")
-      .withColumn("n_bigrams", coalesce(col("_nb"), lit(0L)))
-      .withColumn("rare_bigram_ppm",
+      .groupBy(keys.map(col): _*)
+      .agg(sum(when(seen, 1L).otherwise(0L)).as("n_bigrams"),
+        sum(when(seen, col("_ppm")).otherwise(0L)).as("_sp"),
+        sum(when(seen && col("_bc") <= rareMax, 1L).otherwise(0L))
+          .as("_nr"))
+      .select(keys.map(col) ++ Seq(col("n_bigrams"),
         when(col("n_bigrams") > 0, expr("(_nr * 1000000) DIV n_bigrams"))
-          .otherwise(lit(0L)).cast("long"))
-      .withColumn("fluency_ppm",
+          .otherwise(lit(0L)).cast("long").as("rare_bigram_ppm"),
         when(col("n_bigrams") > 0, expr("_sp DIV n_bigrams"))
-          .otherwise(lit(0L)).cast("long"))
-      .drop("_nb", "_sp", "_nr")
+          .otherwise(lit(0L)).cast("long").as("fluency_ppm")): _*)
   }
+
+  /** Attach [[bigramScores]] to the batch input (null-safe on the id). */
+  private def withBigramScores(df: DataFrame, idCol: String,
+      scores: DataFrame): DataFrame =
+    df.join(scores.withColumnRenamed(idCol, "_bf_id"),
+        col(idCol) <=> col("_bf_id"), "left")
+      .drop("_bf_id")
+      .na.fill(0L, Seq("n_bigrams", "rare_bigram_ppm", "fluency_ppm"))
 
   /** Exact tie-aware rank AUC (= the Mann–Whitney U statistic,
     * normalized) of a score column against a boolean label — the
@@ -3181,12 +3237,10 @@ object Curation {
     */
   def dsirResample(df: DataFrame, weights: DataFrame, idCol: String,
       textCol: String, buckets: Int = 1 << 16,
-      scalePpm: Long = 1000000L, salt: String = "dsir",
-      broadcastWeights: Boolean = true): DataFrame = {
+      scalePpm: Long = 1000000L, salt: String = "dsir"): DataFrame = {
     require(buckets > 0 && scalePpm > 0)
-    val w = if (broadcastWeights) broadcast(weights) else weights
     val scored = dsirThin(df, idCol, textCol, buckets)
-      .join(w, Seq("bucket"), "left") // dense table: never misses
+      .join(broadcast(weights), Seq("bucket"), "left") // dense: never misses
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("_nf"), sum(col("w_ppm")).as("_ws"))
     df.join(scored, Seq(idCol), "left")

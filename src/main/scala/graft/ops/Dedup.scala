@@ -163,6 +163,10 @@ object Dedup {
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / k
 
+  /** The k flat perm columns m0..m{k-1} as one signature array. */
+  private[graft] def sigArray(k: Int): Column =
+    array((0 until k).map(i => col(s"m$i")): _*)
+
   /** Banded (band, bucket) signature table shared by minhashLshPairs
     * and the big-bucket accounting.
     */
@@ -171,7 +175,7 @@ object Dedup {
       shingleN: Int): DataFrame = {
     val sig = withMinhash(df.select(col(idCol).as("id"), col(textCol).as("t")),
       col("t"), k, seed, shingleN)
-      .withColumn("sig", array((0 until k).map(i => col(s"m$i")): _*))
+      .withColumn("sig", sigArray(k))
       .select(col("id"), col("sig"))
     bandedFromSig(sig, k, bands)
   }
@@ -882,7 +886,7 @@ object Dedup {
     val tagged = indexSigs.withColumn("_idx", lit(true))
       .unionByName(newSigs.withColumn("_idx", lit(false)))
     val sig = tagged.select(col("id"), col("_idx"), col("fp"),
-      array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+      sigArray(k).as("sig"))
     val capped = capBuckets(
       bandedFromSig(sig, k, bands)
         .select(col("id"), col("_idx"), col("sig"), col("band"),
@@ -906,12 +910,20 @@ object Dedup {
     newDocs.select(col(idCol))
       .join(exact, col(idCol) === col("_xnid"), "left")
       .join(near, col(idCol) === col("_nid"), "left")
-      .select(col(idCol),
-        when(col("_xd").isNotNull, lit("exact"))
-          .when(col("_nd").isNotNull, lit("near"))
-          .otherwise(lit("new")).as("verdict"),
-        coalesce(col("_xd"), col("_nd")).as("dup_of"))
+      .select(col(idCol) +: indexVerdict(col("_xd"), col("_nd")): _*)
   }
+
+  /** The incremental-dedup verdict from a document's min exact-match
+    * and min near-match index ids: exact beats near, else new; `dup_of`
+    * is the id that decided it. Shared by [[dedupAgainstIndexSigs]] and
+    * its streaming twin.
+    */
+  private[graft] def indexVerdict(exactOf: Column,
+      nearOf: Column): Seq[Column] = Seq(
+    when(exactOf.isNotNull, lit("exact"))
+      .when(nearOf.isNotNull, lit("near"))
+      .otherwise(lit("new")).as("verdict"),
+    coalesce(exactOf, nearOf).as("dup_of"))
 
   /** Duplicate-cluster survivor selection by QUALITY: within each
     * near-dup cluster keep the highest-scoring member instead of the

@@ -138,8 +138,8 @@ object ScaleWindow {
     * for prefix sums) — the pair must satisfy
     * local(last row of shard) == partialAgg(shard) for offsets to be
     * exact.
-    */
-  /** `boundedStrata` marks the stratum count as BOUNDED BY THE WORKLOAD
+    *
+    * `boundedStrata` marks the stratum count as BOUNDED BY THE WORKLOAD
     * (a query panel, a language set) rather than by the corpus: the
     * offsets table — strata × shards thin rows — is then provably
     * small, and broadcasting it replaces the offset-attach
@@ -157,7 +157,7 @@ object ScaleWindow {
       order: Seq[Column], partialAgg: Column,
       localOver: org.apache.spark.sql.expressions.WindowSpec => Column,
       outCol: String, totOut: String, shards: Int,
-      boundedStrata: Boolean = false): DataFrame = {
+      boundedStrata: Boolean): DataFrame = {
     val spark = df.sparkSession
     val p =
       if (shards > 0) shards

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.model.Page
 import graft.pipeline.ExtractionPipeline
 import graft.rules.{RuleSet, RuleSets}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
@@ -142,19 +142,18 @@ object StreamingPipeline {
   def dedupStream(docs: DataFrame, tsCol: String = "ts",
       textCol: String = "text", watermarkDelay: String = "10 minutes")
       : DataFrame =
-    docs
-      .withColumn(tsCol, col(tsCol).cast("timestamp"))
-      .withWatermark(tsCol, watermarkDelay)
+    watermarked(docs, tsCol, watermarkDelay)
       .withColumn("_h", md5(col(textCol)))
       .dropDuplicatesWithinWatermark("_h")
       .drop("_h")
 
   /** Streaming curation ingest: the per-document half of
     * Curation.curate (language + repetition gate, PII redaction) is
-    * stateless, so it runs unchanged on a stream — the shape of a
-    * live-crawl ingest front end. The corpus-global stages (paragraph
-    * dedup, near-dup clustering) are inherently batch barriers and run
-    * downstream over the landed table (curateStaged); the one streaming
+    * stateless, so the batch gate ([[graft.ops.Curation.gateFilter]])
+    * runs unchanged on a stream — the shape of a live-crawl ingest
+    * front end. The corpus-global stages (paragraph dedup, near-dup
+    * clustering) are inherently batch barriers and run downstream
+    * over the landed table (curateStaged); the one streaming
     * dedup that IS possible online — exact content dedup with bounded
     * state — composes here via `dedupStream`'s watermark contract.
     */
@@ -162,19 +161,9 @@ object StreamingPipeline {
       tsCol: String = "ts", minTokens: Int = 10,
       maxDupLinePpm: Long = 300000L,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    import graft.ops.{Curation, Dedup, TextAnalysis}
-    val txt = col(textCol)
-    // same materialize-once scan shape as the batch gateStage
-    val gated = TextAnalysis.withLangId(
-        docs.withColumn("_gtoks", Dedup.tokens(txt))
-          .withColumn("_glines", Curation.docLines(txt)),
-        textCol, "lang", toksCol = "_gtoks")
-      .withColumn("_toks", size(col("_gtoks")).cast("long"))
-      .withColumn("_dlp", Curation.dupLinePpm(col("_glines")))
-      .filter(col("lang") =!= "und" && col("_toks") >= minTokens &&
-        col("_dlp") <= maxDupLinePpm)
-      .withColumn("red_text", Curation.piiRedact(txt))
-      .drop("_gtoks", "_glines")
+    import graft.ops.Curation
+    val gated = Curation.gateFilter(docs, textCol, minTokens, maxDupLinePpm)
+      .withColumn("red_text", Curation.piiRedact(col(textCol)))
     dedupStream(gated, tsCol, "red_text", watermarkDelay)
       .select(col(idCol), col(tsCol), col("lang"), col("red_text"))
   }
@@ -182,15 +171,11 @@ object StreamingPipeline {
   /** Streaming benchmark decontamination: flag incoming documents that
     * share word n-grams with a STATIC eval corpus — a stream-static
     * join, the Structured Streaming shape for "check the live ingest
-    * against a fixed reference table". The benchmark side reduces to
-    * distinct 8-byte gram hashes exactly as the batch operator does
-    * (Curation.contaminationStats) and is joined per micro-batch; at
-    * scale Spark broadcasts it once per batch, so the stream is never
-    * shuffled.
-    *
-    * The doc's gram hashes explode into a thin (id, ts, hash) frame,
-    * left-join the benchmark, and re-aggregate per (id, ts) — the
-    * watermark bounds the streaming aggregation state. (Folding the
+    * against a fixed reference table". It runs the batch kernel of
+    * Curation.contaminationStats, [[graft.ops.Curation.benchGramHits]],
+    * grouped by (id, ts): the benchmark's distinct gram hashes
+    * broadcast once per micro-batch, so the stream is never shuffled,
+    * and the watermark bounds the per-doc aggregation state. (Folding the
     * membership test into a per-row Column would need the benchmark as
     * a literal array — fine for toy sets, not for a real eval suite;
     * the join form scales with the benchmark.)
@@ -200,39 +185,21 @@ object StreamingPipeline {
     */
   def decontamStream(docs: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, benchTextCol: String, tsCol: String = "ts",
-      n: Int = 8, watermarkDelay: String = "10 minutes"): DataFrame = {
-    import graft.ops.Dedup
-    val benchGrams = bench
-      .withColumn("_btoks", Dedup.tokens(col(benchTextCol)))
-      .select(explode(filter(Dedup.shinglesOf(col("_btoks"), n),
-        g => length(g) > 0)).as("_g"))
-      .select(Dedup.tokHash(col("_g")).as("_gh"))
-      .distinct()
-    val thin = docs
-      .withColumn(tsCol, col(tsCol).cast("timestamp"))
-      .withWatermark(tsCol, watermarkDelay)
-      .withColumn("_toks", Dedup.tokens(col(textCol)))
-      .select(col(idCol), col(tsCol),
-        explode_outer(transform(
-          filter(Dedup.shinglesOf(col("_toks"), n), g => length(g) > 0),
-          g => Dedup.tokHash(g))).as("_gh"))
-    thin
-      .join(broadcast(benchGrams.withColumnRenamed("_gh", "_bh")),
-        col("_gh") === col("_bh"), "left")
-      .groupBy(col(idCol), col(tsCol))
-      .agg(sum(when(col("_bh").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-  }
+      n: Int = 8, watermarkDelay: String = "10 minutes"): DataFrame =
+    graft.ops.Curation.benchGramHits(watermarked(docs, tsCol, watermarkDelay),
+      Seq(idCol, tsCol), textCol, bench, benchTextCol, n,
+      broadcastBench = true)
 
   /** Streaming quality-model serving: score the live ingest with a
     * STATIC [[graft.ops.Curation.tokenClassWeights]] table — the
     * deploy shape of the trained hashed linear classifier (train
-    * offline in batch, gate the stream with the frozen weights).
-    * Same stream-static join pattern as [[decontamStream]]: tokens
-    * explode to thin (id, ts, bucket) rows, the weight table
-    * broadcasts per micro-batch, and the watermark bounds the per-doc
-    * aggregation state. Scoring semantics are identical to the batch
-    * [[graft.ops.Curation.scoreByTokenWeights]] (unseen buckets score
-    * neutral 500000; integer mean; pred = mean > 500000).
+    * offline in batch, gate the stream with the frozen weights). It
+    * runs the kernel of the batch
+    * [[graft.ops.Curation.scoreByTokenWeights]],
+    * [[graft.ops.Curation.tokenWeightScores]], grouped by (id, ts): the
+    * weight table broadcasts per micro-batch, and the watermark bounds
+    * the per-doc aggregation state (unseen buckets score neutral
+    * 500000; integer mean; pred = mean > 500000).
     *
     * Returns (idCol, tsCol, n_tokens_scored, score_sum,
     * score_mean_ppm, pred) in update-mode semantics.
@@ -240,36 +207,17 @@ object StreamingPipeline {
   def classifierGateStream(docs: DataFrame, weights: DataFrame,
       idCol: String, textCol: String, tsCol: String = "ts",
       buckets: Int = 1 << 18,
-      watermarkDelay: String = "10 minutes"): DataFrame = {
-    import graft.ops.Dedup
-    val thin = docs
-      .withColumn(tsCol, col(tsCol).cast("timestamp"))
-      .withWatermark(tsCol, watermarkDelay)
-      .select(col(idCol), col(tsCol),
-        explode_outer(transform(Dedup.tokens(col(textCol)),
-          t => pmod(Dedup.tokHash(t), lit(buckets)))).as("_bk"))
-    thin
-      .join(broadcast(weights.select(col("bucket").as("_bk"),
-        col("w").as("_w"))), Seq("_bk"), "left")
-      .groupBy(col(idCol), col(tsCol))
-      .agg(
-        sum(when(col("_bk").isNotNull, 1L).otherwise(0L))
-          .as("n_tokens_scored"),
-        sum(when(col("_bk").isNotNull,
-          coalesce(col("_w"), lit(500000L))).otherwise(0L))
-          .as("score_sum"))
-      .withColumn("score_mean_ppm",
-        when(col("n_tokens_scored") > 0,
-          expr("score_sum DIV n_tokens_scored"))
-          .otherwise(lit(0L)).cast("long"))
-      .withColumn("pred", col("score_mean_ppm") > 500000L)
-  }
+      watermarkDelay: String = "10 minutes"): DataFrame =
+    graft.ops.Curation.tokenWeightScores(
+      watermarked(docs, tsCol, watermarkDelay), Seq(idCol, tsCol), textCol,
+      weights, buckets)
 
   /** Streaming NEAR-dup detection — the online counterpart of the
     * batch MinHash-LSH dedup, with keyed state instead of a self-join:
     * arrivals are minhash-signed (pure Columns, no UDFs), exploded to
-    * their (band, bucket) LSH keys, and each bucket's group keeps the
-    * signatures of the SURVIVORS seen so far in flatMapGroupsWithState;
+    * their (band, bucket) LSH keys by the batch
+    * [[graft.ops.Dedup.bandedFromSig]], and each bucket keeps the
+    * signatures of the SURVIVORS seen so far ([[survivorVerdicts]]);
     * an arrival whose estimated Jaccard vs any stored survivor ≥
     * `minEstJaccard` is flagged with that survivor's id (first-seen
     * survivor wins, matching the batch min-id canonical when docs
@@ -280,10 +228,6 @@ object StreamingPipeline {
     * streaming analogue of the batch `maxBucket` guard), and buckets
     * idle past the event-time watermark + `stateRetentionMs` are
     * evicted — the same watermark retention contract as dedupStream.
-    * (Event-time, NOT processing-time, timeouts: processing-time
-    * timers make the engine trigger continuous no-data batches to
-    * check them, which livelocks processAllAvailable and burns a core
-    * re-planning an idle stream.)
     *
     * Emits one verdict row PER BAND: (band, doc_id, dup_of nullable).
     * A document is a near-dup when ANY band flagged it — fold
@@ -300,67 +244,31 @@ object StreamingPipeline {
     val spark = docs.sparkSession
     import graft.ops.Dedup
     import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    val rowsPerBand = k / bands
-    val banded = Dedup.withMinhash(
+    val signed = Dedup.withMinhash(
         docs.select(col(idCol).cast("long").as("_id"),
           col(tsCol).cast("timestamp").as("_ts"), col(textCol).as("_t")),
         col("_t"), k, seed, shingleN)
-      .withColumn("sig", array((0 until k).map(i => col(s"m$i")): _*))
+      .select(col("_id"), col("_ts"), Dedup.sigArray(k).as("sig"))
       .withWatermark("_ts", watermarkDelay)
-      .select(col("_id"), col("_ts"), col("sig"),
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            md5(concat_ws(",", transform(
-              slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
-              x => x.cast("string")))).as("bucket"))
-        }: _*)).as("bb"))
-      .select(col("_id"), col("_ts"), col("sig"), col("bb.band"),
-        col("bb.bucket"))
-      .as[(Long, java.sql.Timestamp, Seq[Long], Int, String)]
-    def est(a: Seq[Long], b: Seq[Long]): Double =
-      a.iterator.zip(b.iterator).count { case (x, y) => x == y }.toDouble / k
-    banded
-      .groupByKey(r => (r._4, r._5))
-      .flatMapGroupsWithState[List[(Long, Seq[Long])], (Int, Long, Option[Long])](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout) {
-        case ((band, _), it, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var survivors = state.getOption.getOrElse(Nil)
-            // sort within the micro-batch for a deterministic verdict
-            // order (group iterators are unordered)
-            val rows = it.toSeq.sortBy(_._1)
-            val out = rows.map { case (id, _, sig, _, _) =>
-              val hit = survivors.reverseIterator
-                .find { case (_, s) => est(sig, s) >= minEstJaccard }
-              if (hit.isEmpty)
-                survivors = ((id, sig) :: survivors).take(maxState)
-              (band, id, hit.map(_._1))
-            }
-            state.update(survivors)
-            // retention anchored on the batch's max EVENT time, not the
-            // current watermark: the watermark lags a batch behind, and
-            // watermark(after batch) can already exceed
-            // watermark(before) + retention — which would evict the
-            // bucket immediately after its first batch
-            val maxTs = rows.iterator.map(_._2.getTime).max
-            state.setTimeoutTimestamp(math.max(maxTs + stateRetentionMs,
-              state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
+    val keyed = Dedup.bandedFromSig(signed, k, bands)
+      .select(struct(col("band").as("_1"), col("bucket").as("_2")),
+        col("_id"), col("_ts"), col("sig"))
+      .as[((Int, String), Long, java.sql.Timestamp, Seq[Long])]
+    survivorVerdicts(keyed, maxState, stateRetentionMs) { (a, b) =>
+        a.iterator.zip(b.iterator).count { case (x, y) => x == y }
+          .toDouble / k >= minEstJaccard
       }
-      .toDF("band", "doc_id", "dup_of")
+      .select(col("_1._1").as("band"), col("_2").as("doc_id"),
+        col("_3").as("dup_of"))
   }
 
   /** Streaming SemDeDup — online semantic dedup against a FROZEN
     * coarse quantizer (the batch-trained IVF centroids of
     * [[graft.ops.SimSearch.ivfCentroids]] / `centroidsFrom`): arrivals
     * are assigned their cell map-side with the exact batch assignment
-    * expression (plan-literal centroids, no state), and each cell's
-    * group keeps the embeddings of the SURVIVORS seen so far in
-    * flatMapGroupsWithState; an arrival with cosine ≥ `threshold` vs
+    * expression (plan-literal centroids, no state), and each cell
+    * keeps the embeddings of the SURVIVORS seen so far
+    * ([[survivorVerdicts]]); an arrival with cosine ≥ `threshold` vs
     * any stored survivor is flagged with that survivor's id
     * (first-seen survivor wins — matching the batch
     * [[graft.ops.Dedup.semanticDedup]] keep-lowest-id verdicts when
@@ -371,9 +279,7 @@ object StreamingPipeline {
     * Bounded-state contract: at most `maxState` survivor embeddings
     * per cell (oldest dropped — the streaming analogue of the batch
     * `maxCell` guard), and cells idle past the event-time watermark +
-    * `stateRetentionMs` are evicted (event-time timeouts, not
-    * processing-time, for the livelock reason documented on
-    * nearDupCandidatesStream).
+    * `stateRetentionMs` are evicted.
     *
     * Emits (doc_id, kept, dup_of) per arrival.
     */
@@ -384,14 +290,14 @@ object StreamingPipeline {
       stateRetentionMs: Long = 10L * 60 * 1000): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     val assigned = docs
       .select(col(idCol).cast("long").as("_id"),
         col(tsCol).cast("timestamp").as("_ts"),
         col(vecCol).cast("array<double>").as("_v"))
       .withWatermark("_ts", watermarkDelay)
-      .withColumn("_cell", graft.ops.SimSearch.ivfCell(col("_v"), cents))
-      .as[(Long, java.sql.Timestamp, Seq[Double], Int)]
+      .select(graft.ops.SimSearch.ivfCell(col("_v"), cents), col("_id"),
+        col("_ts"), col("_v"))
+      .as[(Int, Long, java.sql.Timestamp, Seq[Double])]
     def cos(a: Seq[Double], b: Seq[Double]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) {
@@ -399,36 +305,62 @@ object StreamingPipeline {
       }
       dot / (math.sqrt(na) * math.sqrt(nb))
     }
-    assigned
-      .groupByKey(_._4)
-      .flatMapGroupsWithState[List[(Long, Seq[Double])], (Long, Boolean, Option[Long])](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout) {
-        case (_, it, state) =>
+    survivorVerdicts(assigned, maxState, stateRetentionMs)(
+        cos(_, _) >= threshold)
+      .select(col("_2").as("doc_id"), col("_3").isNull.as("kept"),
+        col("_3").as("dup_of"))
+  }
+
+  /** The online survivor loop of [[nearDupCandidatesStream]] and
+    * [[semanticDedupStream]]: rows are (key, id, event ts, value); each
+    * key's group keeps the (id, value) of the SURVIVORS seen so far in
+    * keyed state, and an arrival `similar` to any stored
+    * survivor is flagged with that survivor's id (first-seen survivor
+    * wins), else it becomes a survivor. At most `maxState` survivors
+    * per key (oldest dropped); keys idle past the event-time watermark
+    * + `retentionMs` are evicted. Emits (key, id, dup_of) per row.
+    *
+    * Event-time, NOT processing-time, timeouts: processing-time timers
+    * make the engine trigger continuous no-data batches to check them,
+    * which livelocks processAllAvailable and burns a core re-planning
+    * an idle stream.
+    */
+  private def survivorVerdicts[K: Encoder, V](
+      rows: Dataset[(K, Long, java.sql.Timestamp, V)], maxState: Int,
+      retentionMs: Long)(similar: (V, V) => Boolean)(implicit
+      stateEnc: Encoder[List[(Long, V)]],
+      outEnc: Encoder[(K, Long, Option[Long])]): DataFrame =
+    rows
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[List[(Long, V)], (K, Long, Option[Long])](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
+        (key, it, state) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
             var survivors = state.getOption.getOrElse(Nil)
             // sort within the micro-batch for a deterministic verdict
             // order (group iterators are unordered)
-            val rows = it.toSeq.sortBy(_._1)
-            val out = rows.map { case (id, _, v, _) =>
+            val batch = it.toSeq.sortBy(_._2)
+            val out = batch.map { case (_, id, _, v) =>
               val hit = survivors.reverseIterator
-                .find { case (_, s) => cos(v, s) >= threshold }
+                .find { case (_, s) => similar(v, s) }
               if (hit.isEmpty)
                 survivors = ((id, v) :: survivors).take(maxState)
-              (id, hit.isEmpty, hit.map(_._1))
+              (key, id, hit.map(_._1))
             }
             state.update(survivors)
-            // retention anchored on the batch's max event time (see
-            // nearDupCandidatesStream for why not the watermark)
-            val maxTs = rows.iterator.map(_._2.getTime).max
-            state.setTimeoutTimestamp(math.max(maxTs + stateRetentionMs,
+            // retention anchored on the batch's max EVENT time, not the
+            // current watermark: the watermark lags a batch behind, and
+            // watermark(after batch) can already exceed
+            // watermark(before) + retention — which would evict the
+            // key immediately after its first batch
+            val maxTs = batch.iterator.map(_._3.getTime).max
+            state.setTimeoutTimestamp(math.max(maxTs + retentionMs,
               state.getCurrentWatermarkMs() + 1))
             out.iterator
           }
       }
-      .toDF("doc_id", "kept", "dup_of")
-  }
+      .toDF()
 
   /** Streaming incremental-ingestion dedup: classify a live ingest
     * feed against the PERSISTED corpus index signature table
@@ -458,21 +390,18 @@ object StreamingPipeline {
       broadcastIndex: Boolean = true): DataFrame = {
     import graft.ops.Dedup
     val idxSig = indexSigs.select(col("id").as("_iid"),
-      col("fp").as("_ifp"),
-      array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+      col("fp").as("_ifp"), Dedup.sigArray(k).as("sig"))
     val idxBanded = Dedup.bandedFromSig(idxSig, k, bands)
       .select(col("_iid"), col("sig").as("_isig"),
         col("band").as("_iband"), col("bucket").as("_ibucket"))
     val idxFp = idxSig.groupBy(col("_ifp"))
       .agg(min(col("_iid")).as("_xiid"))
     val sig = Dedup.withMinhash(
-      docs.withColumn(tsCol, col(tsCol).cast("timestamp"))
-        .withWatermark(tsCol, watermarkDelay)
-        .select(col(idCol), col(tsCol), col(textCol).as("_t")),
-      col("_t"), k, seed, shingleN)
-      .withColumn("sig", array((0 until k).map(i => col(s"m$i")): _*))
-      .withColumn("_fp", md5(col("_t")))
-      .select(col(idCol), col(tsCol), col("_fp"), col("sig"))
+        watermarked(docs, tsCol, watermarkDelay)
+          .select(col(idCol), col(tsCol), col(textCol).as("_t")),
+        col("_t"), k, seed, shingleN)
+      .select(col(idCol), col(tsCol), md5(col("_t")).as("_fp"),
+        Dedup.sigArray(k).as("sig"))
     val est = Dedup.estJaccardCol(col("sig"), col("_isig"), k)
     def side(df: DataFrame): DataFrame =
       if (broadcastIndex) broadcast(df) else df
@@ -485,23 +414,20 @@ object StreamingPipeline {
         when(col("_iid").isNotNull && est >= minEstJaccard, col("_iid")))
       .groupBy(col(idCol), col(tsCol))
       .agg(min(col("_xiid")).as("_xd"), min(col("_nd")).as("_ndm"))
-      .select(col(idCol), col(tsCol),
-        when(col("_xd").isNotNull, lit("exact"))
-          .when(col("_ndm").isNotNull, lit("near"))
-          .otherwise(lit("new")).as("verdict"),
-        coalesce(col("_xd"), col("_ndm")).as("dup_of"))
+      .select(Seq(col(idCol), col(tsCol)) ++
+        Dedup.indexVerdict(col("_xd"), col("_ndm")): _*)
   }
 
   /** Streaming bigram-fluency gate: score a live feed against FROZEN
     * [[graft.ops.Curation.bigramTables]] — the deploy shape of the
     * unsupervised CCNet-perplexity analogue (train the bigram model
-    * offline in batch, gate the stream with the frozen counts), same
-    * stream-static pattern as [[classifierGateStream]]. Scoring
-    * semantics identical to the batch
-    * [[graft.ops.Curation.scoreBigramFluency]]: unseen transitions
-    * score 0 and count rare; docs with < 2 tokens score (0, 0, 0)
-    * rather than disappearing (explode_outer). Update-mode output:
-    * (idCol, tsCol, n_bigrams, rare_bigram_ppm, fluency_ppm).
+    * offline in batch, gate the stream with the frozen counts). It
+    * runs the kernel of the batch
+    * [[graft.ops.Curation.scoreBigramFluency]],
+    * [[graft.ops.Curation.bigramScores]], grouped by (id, ts): unseen
+    * transitions score 0 and count rare; docs with < 2 tokens score
+    * (0, 0, 0). Update-mode output: (idCol, tsCol, n_bigrams,
+    * rare_bigram_ppm, fluency_ppm).
     *
     * `broadcastModel = false` for a web-corpus-trained model: the
     * bigram table is vocabulary²-bounded (billions of rows on a large
@@ -515,40 +441,18 @@ object StreamingPipeline {
       tsCol: String = "ts", smoothing: Long = 8L, rareMax: Long = 2L,
       watermarkDelay: String = "10 minutes",
       broadcastModel: Boolean = true): DataFrame = {
-    import graft.ops.Dedup
-    val withH = docs
-      .withColumn(tsCol, col(tsCol).cast("timestamp"))
-      .withWatermark(tsCol, watermarkDelay)
-      .withColumn("_fhs",
-        transform(Dedup.tokens(col(textCol)), t => Dedup.tokHash(t)))
-    val n = size(col("_fhs"))
-    val pairArr = when(n >= 2, transform(sequence(lit(1), n - 1),
-      i => struct(element_at(col("_fhs"), i).as("p"),
-        element_at(col("_fhs"), i + 1).as("c"))))
-      .otherwise(array().cast("array<struct<p:bigint,c:bigint>>"))
-    val seen = col("_ph").isNotNull
     def side(df: DataFrame): DataFrame =
       if (broadcastModel) broadcast(df) else df
-    withH
-      .select(col(idCol), col(tsCol), explode_outer(pairArr).as("_bg"))
-      .select(col(idCol), col(tsCol), col("_bg.p").as("_ph"),
-        col("_bg.c").as("_ch"))
-      .join(side(bigrams), Seq("_ph", "_ch"), "left")
-      .join(side(heads), Seq("_ph"), "left")
-      .withColumn("_bc", coalesce(col("_bc"), lit(0L)))
-      .withColumn("_pc", coalesce(col("_pc"), lit(0L)))
-      .withColumn("_ppm",
-        expr(s"(_bc * 1000000) DIV (_pc + $smoothing)"))
-      .groupBy(col(idCol), col(tsCol))
-      .agg(sum(when(seen, 1L).otherwise(0L)).as("n_bigrams"),
-        sum(when(seen, col("_ppm")).otherwise(0L)).as("_sp"),
-        sum(when(seen && col("_bc") <= rareMax, 1L).otherwise(0L))
-          .as("_nr"))
-      .select(col(idCol), col(tsCol), col("n_bigrams"),
-        when(col("n_bigrams") > 0,
-          expr("(_nr * 1000000) DIV n_bigrams"))
-          .otherwise(lit(0L)).cast("long").as("rare_bigram_ppm"),
-        when(col("n_bigrams") > 0, expr("_sp DIV n_bigrams"))
-          .otherwise(lit(0L)).cast("long").as("fluency_ppm"))
+    graft.ops.Curation.bigramScores(watermarked(docs, tsCol, watermarkDelay),
+      Seq(idCol, tsCol), textCol, side(bigrams), side(heads), smoothing,
+      rareMax)
   }
+
+  /** `docs` with `tsCol` as a timestamp carrying the event-time
+    * watermark that bounds a stream operator's per-document state.
+    */
+  private def watermarked(docs: DataFrame, tsCol: String,
+      watermarkDelay: String): DataFrame =
+    docs.withColumn(tsCol, col(tsCol).cast("timestamp"))
+      .withWatermark(tsCol, watermarkDelay)
 }
