@@ -18,6 +18,11 @@ import org.apache.spark.sql.Dataset
   * resumable extraction (url-hash bucketed, per-bucket lineage), writes
   * records partitioned by bucket + a `_metrics` events table. A killed
   * run re-invoked with the same output dir resumes from the lineage log.
+  *
+  * Prints one summary line: buckets committed by this run, committed
+  * records (the lineage `outputRows` sum, which equals the committed
+  * files' row count), committed events, and the extraction's wall
+  * seconds.
   */
 object GraftApp {
   def main(args: Array[String]): Unit = {
@@ -49,14 +54,14 @@ object GraftApp {
     // appending duplicates). Page-stage events re-run content extraction
     // just for the log, so they are opt-in (--page-events true) and go
     // to a separate table to keep _metrics overwrite-idempotent.
-    val recs = TableIO.readCommitted(spark, output)
     if (opts.get("page-events").contains("true"))
       ExtractionPipeline.classifyPages(
         ExtractionPipeline.pageTexts(pages), rs)
         .transform(ExtractionPipeline.events)
         .write.mode("overwrite").parquet(s"$output/_metrics_pages")
 
-    val n = if (recs.isEmpty) 0L else recs.count()
+    val n = TableIO.readLineage(output).values
+      .filter(_.status == "COMMITTED").map(_.outputRows).sum
     val ev = TableIO.readEvents(spark, output)
     val nEv = if (ev.isEmpty) 0L else ev.count()
     println(f"""{"buckets_done":$done,"records":$n,"events":$nEv,"sec":$sec%.2f}""")

@@ -3,7 +3,7 @@ package graft.io
 import graft.model.Page
 import graft.pipeline.ExtractionPipeline
 import graft.rules.{RuleSet, RuleSets}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
@@ -82,28 +82,37 @@ object TableIO {
     }
 
   /** Resumable extraction run: processes only buckets not yet COMMITTED,
-    * in WAVES of `waveSize` buckets — one Spark job per wave (not per
-    * bucket: a job per bucket would rescan the input `buckets` times; a
-    * single all-bucket job would make the commit unit the whole run).
-    * With a real Iceberg/partitioned source the wave filter prunes to
-    * just the wave's partitions; here it predicate-filters the scan.
+    * in WAVES of `waveSize` buckets — one extraction pass per wave (not
+    * per bucket: a pass per bucket would rescan the input `buckets`
+    * times; a single all-bucket pass would make the commit unit the
+    * whole run). With a real Iceberg/partitioned source the wave filter
+    * prunes to just the wave's partitions; here it predicate-filters the
+    * scan.
+    *
+    * A wave is three Spark jobs: the segmentation window exchange's map
+    * stage (pages are extracted inside the scan's own tasks, so no raw
+    * page bytes are shuffled), the data write, and the event write.
     *
     * Commit protocol per wave: delete stale (uncommitted) wave bucket
     * dirs, write all wave buckets in one job (each bucket an idempotent
-    * overwrite of its own directory), compute per-bucket output stats in
-    * ONE follow-up job over the written files, then atomically commit
+    * overwrite of its own directory) while an Observation in the write's
+    * result stage computes each bucket's `(count, bit_xor(xxhash64(url,
+    * row_text)))` over exactly the rows written, then atomically commit
     * one lineage file per bucket — including 0-row lineage for buckets
     * whose pages produced no records (a missing directory is a valid
     * outcome, not an error). A kill mid-wave leaves no lineage for the
-    * wave's buckets → the next run redoes exactly that wave.
+    * wave's buckets → the next run redoes exactly that wave. Observed
+    * metrics, like result-stage accumulator updates, count each
+    * partition once however often its task is retried.
     *
     * Input counts ride a per-bucket accumulator inside the extraction
-    * job — the input is scanned ONCE per wave. (Accumulators can
-    * over-count under task retries; counts are metrics-grade, the
-    * commit decision never depends on them.)
+    * job — the input is scanned ONCE per wave. (Those are updated in a
+    * shuffle map stage, where a retried task can count twice; input
+    * counts are metrics-grade, the commit decision never depends on
+    * them.)
     *
     * @param buckets   total url-hash buckets (the resume granularity)
-    * @param waveSize  buckets per Spark job
+    * @param waveSize  buckets per wave
     * @param failAfter TEST HOOK: abort (like a kill) after committing
     *                  this many buckets this run (-1 = never)
     * @return number of buckets committed this run
@@ -133,53 +142,50 @@ object TableIO {
       val nb = buckets
       val accs = wave.map(b =>
         b -> spark.sparkContext.longAccumulator(s"graft_in_$b")).toMap
-      val slice = pages.withColumn("_bucket", bucketOf)
-        .filter(col("_bucket").isin(wave: _*))
-        .drop("_bucket").as[Page](pages.encoder)
+      val slice = pages.filter(bucketOf.isin(wave: _*))
         .mapPartitions { it =>
           it.map { p => accs(bucketFor(p.url, nb)).add(1L); p }
         }(pages.encoder)
-      val recs = ExtractionPipeline.records(slice, rs,
-        partitions = math.max(4, waveSize * 4))
+      val recs = ExtractionPipeline.records(slice, rs, partitions = 0)
         .withColumn("bucket", bucketOf)
+      // per-bucket (count, content hash) of the rows the write consumes;
+      // a row is hashed only under its own bucket's test
+      val stats = Observation()
+      val hash = xxhash64(col("url"), col("row_text"))
+      val perBucket = wave.flatMap { b =>
+        val in = col("bucket") === b
+        // bit_xor: order-independent content hash, no ANSI overflow
+        Seq(count(when(in, 1)).as(s"n$b"), bit_xor(when(in, hash)).as(s"h$b"))
+      }
       // ONE write job for the wave; dynamic partition overwrite touches
       // only the wave's bucket directories (idempotent on retry)
-      recs.write.mode(SaveMode.Overwrite)
+      recs.observe(stats, perBucket.head, perBucket.tail: _*)
+        .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(s"$out/data")
-      // stats from what actually landed — ONE job over the wave's dirs
-      val writtenDirs = wave
-        .filter(b => Files.exists(Paths.get(s"$out/data/bucket=$b")))
-        .map(b => s"$out/data/bucket=$b")
-      val stats: Map[Int, (Long, Long)] =
-        if (writtenDirs.isEmpty) Map.empty
-        else spark.read.option("basePath", s"$out/data")
-          .parquet(writtenDirs: _*)
-          .groupBy(col("bucket"))
-          // bit_xor: order-independent content hash, no ANSI overflow
-          .agg(count(lit(1)).as("n"),
-            coalesce(expr("bit_xor(xxhash64(url, row_text))"), lit(0L))
-              .as("h"))
-          .collect()
-          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val observed = stats.get
+      val written = wave.filter(b =>
+        Files.exists(Paths.get(s"$out/data/bucket=$b")))
       // S10 event-log sink, resume-idempotent: record-stage events are
       // derived from the wave's FRESHLY-WRITTEN records (no second
-      // extraction pass) and land bucket-partitioned under _metrics with
-      // the same dynamic-overwrite semantics as the data — a resumed run
-      // reproduces exactly the killed run's missing event partitions,
-      // never appends duplicates
-      if (writtenDirs.nonEmpty)
+      // extraction pass; read with the records' known schema, so no
+      // footer-inference job) and land bucket-partitioned under _metrics
+      // with the same dynamic-overwrite semantics as the data — a resumed
+      // run reproduces exactly the killed run's missing event
+      // partitions, never appends duplicates
+      if (written.nonEmpty)
         ExtractionPipeline.recordEvents(
-          spark.read.option("basePath", s"$out/data")
-            .parquet(writtenDirs: _*))
+          spark.read.schema(recs.schema).option("basePath", s"$out/data")
+            .parquet(written.map(b => s"$out/data/bucket=$b"): _*))
           .withColumn("bucket", bucketOf)
           .write.mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("bucket")
           .parquet(s"$out/_metrics")
       wave.foreach { b =>
-        val (n, h) = stats.getOrElse(b, (0L, 0L))
+        val n = observed(s"n$b").asInstanceOf[Long]
+        val h = Option(observed(s"h$b")).fold(0L)(_.asInstanceOf[Long])
         writeLineage(out, Lineage(b, "COMMITTED",
           existing.get(b).map(_.attempt + 1).getOrElse(1),
           accs(b).value, n, h, t0, System.currentTimeMillis()))

@@ -8,11 +8,12 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import scala.collection.immutable.ListMap
 
 /** The Spark-native extraction pipeline (north_rule):
   *
   *   Dataset[Page]
-  *     → explicit url-hash repartition (X4)
+  *     → optional url-hash repartition (X4)
   *     → mapPartitions content extraction (X1 HTML / X2 PDF)   [typed map]
   *     → page classification (C1/C2)                           [Column]
   *     → table-row flatMap (P1/P2 + G3 header repair)          [generator]
@@ -22,13 +23,18 @@ import org.apache.spark.sql.types.DecimalType
   *     → field extraction (N5-N13)                             [Column]
   *     → validation/normalization (N14/N15, C12, J1)           [Column]
   *
-  * One shuffle for the explicit repartition, one for the window sort,
-  * one (partial-agg-collapsed) for the segment fold. Everything after
-  * the flatMap is pure Column expressions inside whole-stage codegen —
-  * no UDFs. Classification/extraction logic mirrors ScalarEvaluator
-  * (the golden twin) line for line.
+  * One shuffle for the optional repartition and one for the window
+  * sort; the segment fold reuses the window's url partitioning, so it
+  * adds no exchange. Everything after the flatMap is pure Column
+  * expressions inside whole-stage codegen — no UDFs.
+  * Classification/extraction logic mirrors ScalarEvaluator (the golden
+  * twin) line for line.
   */
 object ExtractionPipeline {
+
+  /** Page types whose tables [[segments]] enumerates. */
+  private val SegmentedTypes =
+    Set("Positions", "Transaction", "Trade", "FXTF", "Others")
 
   /** Projection carried into the segmentation flatMap. */
   case class PageForSeg(url: String, page_type: String, portfolio_no: String,
@@ -48,10 +54,11 @@ object ExtractionPipeline {
     val spark = pages.sparkSession
     import spark.implicits._
     // X4: explicit url-hash partitioning for balanced extraction work.
-    // partitions <= 0 skips the shuffle (use when the source is already
-    // evenly split by the scan — at 100 TB, shuffling raw page bytes is
-    // only worth it for skewed inputs; the later window shuffle moves
-    // only thin segmentation rows either way).
+    // partitions <= 0 skips the shuffle and extracts inside the scan's
+    // own tasks, so parallelism comes from the scan splits
+    // (GraftSession.ScanSplits). TableIO.runResumable's waves do this:
+    // shuffling raw page bytes only pays for skewed inputs, and the later
+    // window shuffle moves only thin segmentation rows either way.
     val balanced =
       if (partitions > 0) pages.repartition(partitions, col("url"))
       else pages
@@ -72,28 +79,46 @@ object ExtractionPipeline {
     */
   def classifyPagesDf(pt: DataFrame, rs: RuleSet = RuleSets.plugin): DataFrame = {
     val md = col("page_md")
-    // `_header` is materialized ONCE per row; the when-chain then only
-    // touches the attribute (otherwise Catalyst would duplicate the
-    // split/filter/concat header derivation into every keyword branch —
-    // measured 8× slowdown of this stage).
-    pt.toDF()
+    // `_header` and `_pt` are each materialized ONCE per row by a
+    // projection of their own; the when-chains then only touch the
+    // attribute (otherwise Catalyst would duplicate the split/filter/
+    // concat header derivation into every keyword branch — measured 8×
+    // slowdown of this stage).
+    val typed = pt.toDF()
       .withColumn("_header", RuleCompiler.headerCol(md, rs.headerMode))
       .withColumn("_pt",
         RuleCompiler.classifyPageFromHeader(col("_header"), rs))
+    layer(typed, ListMap(
       // Others-fallback re-test on the materialized attribute (empty
       // pages classify "Others" too but produce zero table rows)
-      .withColumn("page_type", RuleCompiler.othersFallbackCol(col("_pt"), md, rs))
-      .drop("_header", "_pt")
-      .withColumn("portfolio_no",
-        regexp_extract(md, "Portfolio number\\s+(\\d{3}-\\d{6}-\\d{2})", 1))
-      .withColumn("client_name",
+      "page_type" -> RuleCompiler.othersFallbackCol(col("_pt"), md, rs),
+      "portfolio_no" ->
+        regexp_extract(md, "Portfolio number\\s+(\\d{3}-\\d{6}-\\d{2})", 1),
+      "client_name" ->
         when(md.contains("Portfolio number") &&
           md.contains("Statement of assets"),
           trim(regexp_extract(md,
             "(?s)Portfolio number.*?\\n(.*?)\\n.*?Statement of assets", 1)))
-          .otherwise(lit("")))
-      .withColumn("as_of_date",
-        regexp_extract(md, "as of (\\d{2}\\.\\d{2}\\.\\d{4})", 1))
+          .otherwise(lit("")),
+      "as_of_date" ->
+        regexp_extract(md, "as of (\\d{2}\\.\\d{2}\\.\\d{4})", 1)),
+      "_header", "_pt")
+  }
+
+  /** `df.withColumns(cols).drop(dropped: _*)` as ONE projection. Spark
+    * analyzes and checks the whole plan for every Dataset built, so a
+    * plan grown a column at a time pays that cost per column; the
+    * pipeline grows it a dependent layer at a time. `cols` read only
+    * `df`'s columns.
+    */
+  private def layer(df: DataFrame, cols: ListMap[String, Column],
+      dropped: String*): DataFrame = {
+    val kept = df.columns.filterNot(dropped.contains)
+      .map(c => cols.get(c).fold(col(c))(_.as(c)))
+    val added = cols.collect {
+      case (n, c) if !df.columns.contains(n) => c.as(n)
+    }
+    df.select((kept ++ added).toIndexedSeq: _*)
   }
 
   // ---- Column helpers mirroring TextOps/ScalarEvaluator ----
@@ -216,14 +241,6 @@ object ExtractionPipeline {
       rs: RuleSet = RuleSets.plugin): DataFrame =
     recordsFromSegments(segments(classified), rs)
 
-  /** Stages 4-7 over an already-segmented frame — the seam that lets a
-    * caller compute [[segments]] ONCE (checkpointed) and feed both the
-    * record output and the stitch-event projection (see [[eventLog]]).
-    */
-  def recordsFromSegments(segs: DataFrame,
-      rs: RuleSet = RuleSets.plugin): DataFrame =
-    extractFields(segs.drop("n_rows"), rs)
-
   /** Stages 3a-3d: classified pages → stitched segments (one row per
     * record-to-be, with `n_rows` = how many table rows were folded in).
     */
@@ -232,15 +249,17 @@ object ExtractionPipeline {
     import spark.implicits._
 
     // Stage 3a: table-row flatMap (the Generator/UDTF slot) using the
-    // SAME shared kernel as the scalar evaluator (G3 repair inside).
+    // SAME shared kernel as the scalar evaluator (G3 repair inside). The
+    // page-type test runs in the closure: as a Column filter, Catalyst
+    // pushes it below classifyPagesDf's `_header` projection and inlines
+    // the header derivation into it once per keyword branch.
     val segRows: Dataset[SegRow] = classified
-      .filter(col("page_type")
-        .isin("Positions", "Transaction", "Trade", "FXTF", "Others"))
       .select("url", "page_type", "portfolio_no", "client_name",
         "as_of_date", "page_md")
       .as[PageForSeg]
       .flatMap { p =>
-        ScalarEvaluator.enumerateRows(p.page_type, p.page_md).map {
+        if (!SegmentedTypes.contains(p.page_type)) Nil
+        else ScalarEvaluator.enumerateRows(p.page_type, p.page_md).map {
           case (t, r, cells) =>
             SegRow(p.url, p.page_type, p.portfolio_no, p.client_name,
               p.as_of_date, t, r, cells)
@@ -259,24 +278,25 @@ object ExtractionPipeline {
     val withFlags = segRows.toDF()
       .withColumn("row_text",
         when(isPos, trim(rawJoin)).otherwise(rawJoin))
-      .withColumn("keep",
-        when(isPos,
-          col("row_text") =!= "" &&
-            !lower(col("row_text")).startsWith("total"))
-          .when(isOth,
-            size(filter(cells, c =>
-              trim(c) =!= "" && c.rlike("[a-zA-Z0-9]"))) >= 2)
-          .otherwise(
-            size(cells) > 0 &&
-              trim(element_at(cells, 1)).rlike("^" + DatePat) &&
-              size(cells) > 1 && trim(element_at(cells, 2)) =!= ""))
-      .withColumn("is_main",
-        when(isPos,
-          firstCol =!= "" &&
-            (substring(firstCol, 1, 1).rlike("^[0-9]$") ||
-              startsWithCurrencyCol(firstCol)) &&
-            !firstCol.rlike("^" + DatePat))
-          .otherwise(lit(true)))
+      .withColumns(ListMap(
+        "keep" ->
+          when(isPos,
+            col("row_text") =!= "" &&
+              !lower(col("row_text")).startsWith("total"))
+            .when(isOth,
+              size(filter(cells, c =>
+                trim(c) =!= "" && c.rlike("[a-zA-Z0-9]"))) >= 2)
+            .otherwise(
+              size(cells) > 0 &&
+                trim(element_at(cells, 1)).rlike("^" + DatePat) &&
+                size(cells) > 1 && trim(element_at(cells, 2)) =!= ""),
+        "is_main" ->
+          when(isPos,
+            firstCol =!= "" &&
+              (substring(firstCol, 1, 1).rlike("^[0-9]$") ||
+                startsWithCurrencyCol(firstCol)) &&
+              !firstCol.rlike("^" + DatePat))
+            .otherwise(lit(true))))
       .filter(col("keep"))
 
     // Stage 3c: G2 — window segment-id (running count of main rows per
@@ -293,7 +313,7 @@ object ExtractionPipeline {
     // Stage 3d: A5 — segment fold. sort_array makes the fold order-stable
     // under any partitioning; partial aggregation collapses each segment
     // locally (rows of a segment are contiguous post-window).
-    val segs = withSeg
+    val folded = withSeg
       .groupBy(col("url"), col("seg_id"))
       .agg(
         first(col("page_type")).as("page_type"),
@@ -303,20 +323,23 @@ object ExtractionPipeline {
         sort_array(collect_list(struct(
           col("table_idx"), col("row_idx"), col("row_text"), col("cells"))))
           .as("rows"))
-      .withColumn("mc", element_at(col("rows"), 1).getField("cells"))
-      .withColumn("stitched",
-        array_join(transform(col("rows"), r => r.getField("row_text")), " "))
-      .withColumn("n_rows", size(col("rows")))
-      .drop("rows")
-
-    segs
+    layer(folded, ListMap(
+      "mc" -> element_at(col("rows"), 1).getField("cells"),
+      "stitched" ->
+        array_join(transform(col("rows"), r => r.getField("row_text")), " "),
+      "n_rows" -> size(col("rows"))),
+      "rows")
   }
 
-  /** Stages 4-7 — routing + field extraction + validation as one wide
-    * Column projection (mirrors ScalarEvaluator.extractPositions /
-    * extractTrade / validate).
+  /** Stages 4-7 — routing + field extraction + validation as wide
+    * Column projections, one per dependent layer (mirrors
+    * ScalarEvaluator.extractPositions / extractTrade / validate), over
+    * an already-segmented frame: the seam that lets a caller compute
+    * [[segments]] ONCE (checkpointed) and feed both the record output
+    * and the stitch-event projection (see [[eventLog]]).
     */
-  private def extractFields(segs: DataFrame, rs: RuleSet): DataFrame = {
+  def recordsFromSegments(segs: DataFrame,
+      rs: RuleSet = RuleSets.plugin): DataFrame = {
     val isPos = col("page_type") === "Positions"
     // Others records carry row_text only — no field extraction, no page
     // context (others.py:48-59; scalar twin extractOthers)
@@ -372,13 +395,17 @@ object ExtractionPipeline {
         when(tokAlpha, rest).otherwise(c))
     }
 
-    def compile(fs: graft.rules.FieldSpec): Column = fs.strategy match {
+    // fields are defined in order, each seeing the ones before it:
+    // `prior` holds those, and a page_context key naming one of them
+    // reads that field's value, any other key the input column
+    def compile(fs: graft.rules.FieldSpec,
+        prior: Map[String, Column]): Column = fs.strategy match {
       case "regex"                 => regexp_extract(txt, fs.pattern, fs.group)
       case "cell"                  => cellAt(fs.index)
       case "cell_trim" =>
         when(size(mc) >= fs.index, trim(element_at(mc, fs.index)))
           .otherwise(lit(""))
-      case "page_context"          => col(fs.key)
+      case "page_context"          => prior.getOrElse(fs.key, col(fs.key))
       case "first_date"            => tradeDate
       case "second_date_or_first"  => settlement
       case "currency_token"        => currencySplit(fs.index)._1
@@ -392,76 +419,72 @@ object ExtractionPipeline {
     }
 
     val spec = rs.extraction
-    def tfield(name: String): Column =
-      spec.trade.get(name).map(compile).getOrElse(lit(""))
-    def pfield(name: String): Column =
-      spec.positions.get(name).map(compile).getOrElse(lit(""))
+    type Field = (String, Map[String, Column]) => Column
+    def tfield(name: String, prior: Map[String, Column]): Column =
+      spec.trade.get(name).map(compile(_, prior)).getOrElse(lit(""))
+    def pfield(name: String, prior: Map[String, Column]): Column =
+      spec.positions.get(name).map(compile(_, prior)).getOrElse(lit(""))
     // trade-family-only field (Positions/Others always blank)
-    def tOnly(name: String): Column =
-      when(isPos || isOth, lit("")).otherwise(tfield(name))
+    val tOnly: Field = (name, prior) =>
+      when(isPos || isOth, lit("")).otherwise(tfield(name, prior))
     // positions-only field
-    def pOnly(name: String): Column =
-      when(isPos, pfield(name)).otherwise(lit(""))
+    val pOnly: Field = (name, prior) =>
+      when(isPos, pfield(name, prior)).otherwise(lit(""))
     // extracted for both families, blank for Others
-    def bothField(name: String): Column =
+    val bothField: Field = (name, prior) =>
       when(isOth, lit(""))
-        .when(isPos, pfield(name)).otherwise(tfield(name))
+        .when(isPos, pfield(name, prior)).otherwise(tfield(name, prior))
 
-    val df = segs
-      .withColumn("_rl", lower(txt))
-      .withColumn("routed_section",
+    // routing + every record field as ONE projection over `_rl`, in
+    // output order: Spark analyzes the growing plan once per layer, not
+    // once per column
+    val fields = Seq[(String, Field)](
+      "client_name" -> tOnly, "portfolio_no" -> pOnly,
+      "trade_date" -> tOnly, "settlement_date" -> tOnly,
+      "transaction_type_raw" -> tOnly, "currency" -> bothField,
+      "quantity" -> bothField, "security_name" -> bothField,
+      "securities_id" -> bothField, "account_no" -> bothField,
+      "foreign_unit_price" -> tOnly, "foreign_gross_consideration" -> tOnly,
+      "foreign_net_consideration" -> tOnly, "net_consideration" -> tOnly,
+      "market_price" -> pOnly, "market_value" -> pOnly,
+      "cost_price" -> pOnly, "valuation_date" -> pOnly,
+      "currency_buy" -> tOnly, "amount_buy" -> tOnly,
+      "currency_sell" -> tOnly, "amount_sell" -> tOnly,
+    ).foldLeft(ListMap[String, Column](
+      "routed_section" ->
         when(isPos, lit("Positions")).when(isOth, lit("Others"))
-          .otherwise(routed.getField("txn_group")))
-      .withColumn("txn_type",
+          .otherwise(routed.getField("txn_group")),
+      "txn_type" ->
         when(isPos, lit("Positions")).when(isOth, lit("Other"))
-          .otherwise(routed.getField("txn_type")))
-      .withColumn("txn_type_detail",
+          .otherwise(routed.getField("txn_type")),
+      "txn_type_detail" ->
         when(isPos || isOth, lit(""))
-          .otherwise(RuleCompiler.classifyTxnTypeFromLower(col("_rl"), rs)))
-      .withColumn("row_text", txt)
-      .withColumn("client_name", tOnly("client_name"))
-      .withColumn("portfolio_no", pOnly("portfolio_no"))
-      .withColumn("trade_date", tOnly("trade_date"))
-      .withColumn("settlement_date", tOnly("settlement_date"))
-      .withColumn("transaction_type_raw", tOnly("transaction_type_raw"))
-      .withColumn("currency", bothField("currency"))
-      .withColumn("quantity", bothField("quantity"))
-      .withColumn("security_name", bothField("security_name"))
-      .withColumn("securities_id", bothField("securities_id"))
-      .withColumn("account_no", bothField("account_no"))
-      .withColumn("foreign_unit_price", tOnly("foreign_unit_price"))
-      .withColumn("foreign_gross_consideration",
-        tOnly("foreign_gross_consideration"))
-      .withColumn("foreign_net_consideration",
-        tOnly("foreign_net_consideration"))
-      .withColumn("net_consideration", tOnly("net_consideration"))
-      .withColumn("market_price", pOnly("market_price"))
-      .withColumn("market_value", pOnly("market_value"))
-      .withColumn("cost_price", pOnly("cost_price"))
-      .withColumn("valuation_date", pOnly("valuation_date"))
-      .withColumn("currency_buy", tOnly("currency_buy"))
-      .withColumn("amount_buy", tOnly("amount_buy"))
-      .withColumn("currency_sell", tOnly("currency_sell"))
-      .withColumn("amount_sell", tOnly("amount_sell"))
+          .otherwise(RuleCompiler.classifyTxnTypeFromLower(col("_rl"), rs)),
+      "row_text" -> txt)) { case (prior, (name, field)) =>
+      prior.updated(name, field(name, prior))
+    }
 
     // Stage 7: validation + normalization + C12 downgrade. The iso/num
-    // columns are materialized FIRST so validationErrorsCol references
-    // the attributes instead of re-evaluating the normalizers per check.
-    df
-      .withColumn("trade_date_iso", normalizeDateCol(col("trade_date")))
-      .withColumn("settlement_date_iso",
-        normalizeDateCol(col("settlement_date")))
-      .withColumn("net_consideration_num",
-        normalizeNumberCol(col("net_consideration")))
-      .withColumn("market_value_num", normalizeNumberCol(col("market_value")))
-      .withColumn("validation_errors", validationErrorsCol(
+    // columns are materialized FIRST (a layer of their own) so
+    // validationErrorsCol references the attributes instead of
+    // re-evaluating the normalizers per check.
+    val normalized = segs
+      .withColumn("_rl", lower(txt))
+      .withColumns(fields)
+      .withColumns(ListMap(
+        "trade_date_iso" -> normalizeDateCol(col("trade_date")),
+        "settlement_date_iso" -> normalizeDateCol(col("settlement_date")),
+        "net_consideration_num" -> normalizeNumberCol(col("net_consideration")),
+        "market_value_num" -> normalizeNumberCol(col("market_value"))))
+    layer(normalized, ListMap(
+      "validation_errors" -> validationErrorsCol(
         col("securities_id"),
         col("net_consideration"), col("net_consideration_num"),
         col("market_value"), col("market_value_num"),
         col("trade_date"), col("trade_date_iso"),
         col("settlement_date"), col("settlement_date_iso"),
-        col("currency")))
-      .withColumn("target_section",
+        col("currency")),
+      "target_section" ->
         when(col("routed_section") === "FXTF" &&
           (col("currency_buy") === "" || col("currency_sell") === ""),
           lit("Trade"))
@@ -469,8 +492,8 @@ object ExtractionPipeline {
             col("securities_id") === "", lit("Others"))
           .when(col("routed_section") === "Positions" &&
             col("market_value") === "", lit("Others"))
-          .otherwise(col("routed_section")))
-      .drop("mc", "stitched", "seg_id", "_rl", "as_of_date")
+          .otherwise(col("routed_section"))),
+      "mc", "stitched", "seg_id", "n_rows", "_rl", "as_of_date")
   }
 
   /** Full pipeline: pages → records. Record extraction needs only the
@@ -520,37 +543,34 @@ object ExtractionPipeline {
     * to the output.
     */
   def recordEvents(records: DataFrame): DataFrame = {
-    val recId = substring(md5(concat(col("url"), col("row_text"))), 1, 8)
-    val route = records.select(
-      current_timestamp().as("ts"),
-      lit("INFO").as("level"),
+    // one scan: each record explodes into its route event followed by
+    // one event per validation error (a null error list still yields
+    // the route event)
+    val route = struct(lit("INFO").as("level"),
       when(col("page_type").isin("Transaction", "Trade", "FXTF") &&
         col("routed_section") === "Others" && col("txn_type") === "Other",
         lit("REC_ROUTE_FALLBACK")).otherwise(lit("REC_ROUTE_OK")).as("code"),
-      lit("record_route").as("stage"),
-      col("url"),
-      lit(0).as("page"),
-      recId.as("record_id"),
-      col("routed_section").as("group"),
-      col("txn_type"),
-      lit("").as("message"))
-    val vals = records
+      lit("record_route").as("stage"))
+    val vals = transform(
+      coalesce(col("validation_errors"), array().cast("array<string>")),
+      v => struct(lit("WARN").as("level"), v.as("code"),
+        lit("validate").as("stage")))
+    records
       .select(col("url"), col("row_text"), col("routed_section"),
-        col("txn_type"),
-        explode(col("validation_errors")).as("verr"))
+        col("txn_type"), explode(concat(array(route), vals)).as("ev"))
       .select(
         current_timestamp().as("ts"),
-        lit("WARN").as("level"),
-        col("verr").as("code"),
-        lit("validate").as("stage"),
+        col("ev.level").as("level"),
+        col("ev.code").as("code"),
+        col("ev.stage").as("stage"),
         col("url"),
         lit(0).as("page"),
-        recId.as("record_id"),
+        substring(md5(concat(col("url"), col("row_text"))), 1, 8)
+          .as("record_id"),
         col("routed_section").as("group"),
         col("txn_type"),
-        lit("").as("message"))
-    route.unionByName(vals)
-      .withColumn("ref_code", ErrorCodes.refCodeCol(col("code")))
+        lit("").as("message"),
+        ErrorCodes.refCodeCol(col("ev.code")).as("ref_code"))
   }
 
   /** The full event stream — page-stage (extract) + record-stage

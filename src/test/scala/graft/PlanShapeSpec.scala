@@ -193,6 +193,21 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("extraction pipeline: no filter re-derives the page header from page_md") {
+    withPlainPlan {
+      val pages = graft.gen.PagesGen.pages(spark, 50, 42, 2)
+      val plan = graft.pipeline.ExtractionPipeline.records(pages,
+        partitions = 0).queryExecution.executedPlan
+      val filters = plan.collect {
+        case f: org.apache.spark.sql.execution.FilterExec => f
+      }
+      filters.foreach { f =>
+        assert(!f.condition.references.exists(_.name == "page_md"),
+          s"filter over page_md: ${f.condition.sql.take(200)}")
+      }
+    }
+  }
+
   test("bigramFluency: count-table shuffles carry only hashes") {
     withPlainPlan {
       val out = Curation.bigramFluency(docs, "doc_id", "text")

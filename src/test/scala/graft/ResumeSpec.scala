@@ -78,6 +78,54 @@ class ResumeSpec extends AnyFunSuite {
     assert(lineage.values.map(_.inputRows).sum === 300L)
   }
 
+  test("lineage (outputRows, contentHash) == per-bucket stats of the committed files") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val pages = spark.createDataset((0L until 300L).map(PagesGen.pageFor(_, 7)))
+    val out = Files.createTempDirectory("graft_lineage").toString
+    assert(TableIO.runResumable(pages, out, buckets = 8, waveSize = 3) === 8)
+    val files = TableIO.readCommitted(spark, out)
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)),
+        coalesce(bit_xor(xxhash64(col("url"), col("row_text"))), lit(0L)))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val lineage = TableIO.readLineage(out)
+    assert(lineage.size === 8)
+    lineage.values.foreach { l =>
+      assert(l.status === "COMMITTED")
+      assert((l.outputRows, l.contentHash) ===
+        files.getOrElse(l.bucket, (0L, 0L)), s"bucket ${l.bucket}")
+    }
+    assert(lineage.values.map(_.outputRows).sum > 0L)
+  }
+
+  test("one runResumable wave starts at most three Spark jobs") {
+    import spark.implicits._
+    val in = Files.createTempDirectory("graft_wave_in").toString
+    spark.createDataset((0L until 200L).map(PagesGen.pageFor(_, 11)))
+      .write.mode("overwrite").parquet(in)
+    // the input's schema is read here, before the count starts
+    val pages = spark.read.parquet(in).as[graft.model.Page]
+    val out = Files.createTempDirectory("graft_wave_out").toString
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      // one wave: the window exchange's map stage, the data write and
+      // the event write
+      assert(TableIO.runResumable(pages, out, buckets = 4, waveSize = 4) === 4)
+      org.apache.spark.TestBus.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    assert(jobs.get() <= 3, s"${jobs.get()} jobs in one wave")
+    assert(TableIO.readLineage(out).values.map(_.outputRows).sum > 0L)
+  }
+
   test("scala bucketFor == pmod(xxhash64(url), n) Column") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
