@@ -210,6 +210,101 @@ class ResumeSpec extends AnyFunSuite {
     // stage row accounting exposed via markers
     assert(graft.io.StagedJob.readRows(resumeDir, "4_neardup")
       .contains(resumed.size.toLong))
+    // every committed stage's marker rows == its table's row count
+    graft.ops.Curation.curateStages().run.foreach { s =>
+      assert(graft.io.StagedJob.readRows(resumeDir, s)
+        .contains(spark.read.parquet(s"$resumeDir/stage_$s").count()), s)
+    }
+  }
+
+  test("staged curation over empty docs commits every stage with 0 rows") {
+    import spark.implicits._
+    val docs = Seq.empty[(Long, String)].toDF("id", "text")
+    val dir = Files.createTempDirectory("graft_cur_empty").toString
+    val out = graft.ops.Curation.curateStaged(docs, "id", "text", dir,
+      minTokens = 5, paraMinDocs = 3)
+    assert(out.isEmpty)
+    graft.ops.Curation.curateStages().run.foreach { s =>
+      assert(graft.io.StagedJob.committed(dir, s), s)
+      assert(graft.io.StagedJob.readRows(dir, s).contains(0L), s)
+    }
+  }
+
+  /** Spark jobs `body` starts, counted after a listener-bus barrier. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      body
+      org.apache.spark.TestBus.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    jobs.get()
+  }
+
+  test("commit records: lineage file and stage marker bytes are pinned") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    def masked(p: java.nio.file.Path): String =
+      Files.readString(p).replaceAll(
+        "\"(startedMs|finishedMs|start_ms|end_ms)\":\\d+", "\"$1\":T")
+    val pages = spark.createDataset((0L until 20L).map(PagesGen.pageFor(_, 42)))
+    val out = Files.createTempDirectory("graft_pin").toString
+    assert(TableIO.runResumable(pages, out, buckets = 1, waveSize = 1) === 1)
+    assert(masked(java.nio.file.Paths.get(out, "_lineage", "bucket-0.json")) ===
+      """{"bucket":0,"status":"COMMITTED","attempt":1,"inputRows":20,""" +
+      """"outputRows":86,"contentHash":7894895428696758718,""" +
+      """"startedMs":T,"finishedMs":T}""")
+    val dir = Files.createTempDirectory("graft_pin_stage").toString
+    graft.io.StagedJob.stage(spark, dir, "1_gate") {
+      spark.range(0, 37, 1, 3).select(col("id"), lit("en").as("lang"))
+    }
+    assert(masked(graft.io.StagedJob.markerPath(dir, "1_gate")) ===
+      """{"stage":"1_gate","rows":37,"start_ms":T,"end_ms":T}""")
+    assert(graft.io.StagedJob.readRows(dir, "1_gate").contains(37L))
+  }
+
+  test("a fresh stage starts no more Spark jobs than its data write alone") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val docs = (0L until 200L).map(i => (i, s"doc $i")).toDF("id", "text")
+    def frame = docs.groupBy(col("id") % 13).agg(count(lit(1)).as("n"))
+    val plainDir = Files.createTempDirectory("graft_stage_plain").toString
+    val plain = jobsOf(frame.write.mode("overwrite").parquet(plainDir))
+    val dir = Files.createTempDirectory("graft_stage_budget").toString
+    var staged = Option.empty[org.apache.spark.sql.DataFrame]
+    val jobs = jobsOf {
+      staged = Some(graft.io.StagedJob.stage(spark, dir, "x")(frame))
+    }
+    assert(jobs <= plain, s"stage: $jobs jobs, its write alone: $plain")
+    assert(graft.io.StagedJob.readRows(dir, "x").contains(13L))
+    assert(staged.get.count() === 13L)
+  }
+
+  test("a reused stage starts at most one Spark job and does not evaluate f") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_stage_reuse").toString
+    graft.io.StagedJob.stage(spark, dir, "x")(
+      (0L until 50L).map(i => (i, "en")).toDF("id", "lang"))
+    var evaluated = false
+    var reused = Option.empty[org.apache.spark.sql.DataFrame]
+    val jobs = jobsOf {
+      reused = Some(graft.io.StagedJob.stage(spark, dir, "x",
+          requiredCols = Seq("id", "lang")) {
+        evaluated = true
+        spark.emptyDataFrame
+      })
+    }
+    assert(!evaluated, "a committed stage must not evaluate f")
+    assert(jobs <= 1, s"$jobs jobs to reuse a committed stage")
+    assert(reused.get.columns.toSeq === Seq("id", "lang"))
+    assert(reused.get.count() === 50L)
   }
 
   test("staged curation with span-scrub stage: resume matches in-memory") {
