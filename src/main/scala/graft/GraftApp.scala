@@ -52,11 +52,12 @@ object GraftApp {
     // (per wave, bucket-partitioned, resume-idempotent — a resumed run
     // rebuilds exactly the killed run's missing partitions instead of
     // appending duplicates). Page-stage events re-run content extraction
-    // just for the log, so they are opt-in (--page-events true) and go
-    // to a separate table to keep _metrics overwrite-idempotent.
+    // just for the log (inside the scan's tasks, like a wave: no raw-page
+    // shuffle), so they are opt-in (--page-events true) and go to a
+    // separate table to keep _metrics overwrite-idempotent.
     if (opts.get("page-events").contains("true"))
       ExtractionPipeline.classifyPages(
-        ExtractionPipeline.pageTexts(pages), rs)
+        ExtractionPipeline.pageTexts(pages, partitions = 0), rs)
         .transform(ExtractionPipeline.events)
         .write.mode("overwrite").parquet(s"$output/_metrics_pages")
 

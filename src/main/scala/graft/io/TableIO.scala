@@ -5,21 +5,22 @@ import graft.pipeline.ExtractionPipeline
 import graft.rules.{RuleSet, RuleSets}
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.{Try, Using}
 
 /** Iceberg-semantics emulation over partitioned Parquet (SURVEY §4.3):
-  * per-partition commit log (`_lineage/`) with atomic temp-file+rename
-  * commits, idempotent bucket outputs, and resume that skips COMMITTED
+  * per-partition commit log (`_lineage/`, one `CommitLog` record per
+  * bucket), idempotent bucket outputs, and resume that skips COMMITTED
   * buckets. The seam is deliberately small so a real Iceberg catalog
   * can replace it unchanged (no iceberg-spark-runtime jar ships in this
   * environment — verified absent).
   *
   * Layout:
   *   out/data/bucket=[id]/ parquet files (overwritten per attempt)
-  *   out/_lineage/bucket-[id].json       (atomic rename commit)
-  *   out/_metrics/                       (pipeline events, append)
+  *   out/_lineage/bucket-[id].json       (CommitLog record)
+  *   out/_metrics/bucket=[id]/           (record events, overwritten
+  *                                        per attempt like the data)
   */
 object TableIO {
 
@@ -32,37 +33,20 @@ object TableIO {
   def readLineage(out: String): Map[Int, Lineage] = {
     val dir = lineageDir(out)
     if (!Files.exists(dir)) return Map.empty
-    Files.list(dir).iterator().asScala
+    Using.resource(Files.list(dir))(_.iterator().asScala.toList)
       .filter(_.getFileName.toString.endsWith(".json"))
-      .flatMap { p =>
-        try {
-          val s = Files.readString(p)
-          def f(k: String): String =
-            s.split("\"" + k + "\":").last.takeWhile(c =>
-              c != ',' && c != '}').trim.stripPrefix("\"").stripSuffix("\"")
-          Some(Lineage(f("bucket").toInt, f("status"), f("attempt").toInt,
-            f("inputRows").toLong, f("outputRows").toLong,
-            f("contentHash").toLong, f("startedMs").toLong,
-            f("finishedMs").toLong))
-        } catch { case _: Exception => None }
-      }
+      .flatMap(p => CommitLog.read(p).flatMap(r => Try(Lineage(
+        r("bucket").toInt, r("status"), r("attempt").toInt,
+        r("inputRows").toLong, r("outputRows").toLong,
+        r("contentHash").toLong, r("startedMs").toLong,
+        r("finishedMs").toLong)).toOption))
       .map(l => l.bucket -> l).toMap
   }
 
-  /** Atomic write: temp file in the same directory + ATOMIC_MOVE rename. */
-  def writeLineage(out: String, l: Lineage): Unit = {
-    val dir = lineageDir(out)
-    Files.createDirectories(dir)
-    val json =
-      s"""{"bucket":${l.bucket},"status":"${l.status}","attempt":${l.attempt},""" +
-        s""""inputRows":${l.inputRows},"outputRows":${l.outputRows},""" +
-        s""""contentHash":${l.contentHash},"startedMs":${l.startedMs},""" +
-        s""""finishedMs":${l.finishedMs}}"""
-    val tmp = Files.createTempFile(dir, s".bucket-${l.bucket}", ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"bucket-${l.bucket}.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** One bucket's commit: its fields, in declaration order, as keys. */
+  private def writeLineage(out: String, l: Lineage): Unit =
+    CommitLog.write(lineageDir(out).resolve(s"bucket-${l.bucket}.json"),
+      l.productElementNames.zip(l.productIterator).toSeq)
 
   /** Scala twin of the `pmod(xxhash64(url), buckets)` Column — used for
     * accumulator bucketing inside the extraction job (equality with the

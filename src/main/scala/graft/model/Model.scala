@@ -44,41 +44,3 @@ case class PageText(
     n_blocks: Int,
     content_kind: String,
     error: String)
-
-/** One table parsed out of page_md (HTML `<table>` regex semantics of
-  * /root/reference/pipeline/utils.py:27-65, or markdown `|…|` lines of
-  * /root/reference/soa_extractor/run.py:33-47). Header kept separate so
-  * the header-as-data repair (G3) can be decided downstream.
-  */
-case class TableRow(
-    table_idx: Int,
-    row_idx: Int, // -1 for the header row
-    is_header: Boolean,
-    cells: Seq[String])
-
-/** Pipeline event row — same field set as the reference's JSONL event
-  * (/root/reference/soa_extractor/error_system.py:73-86).
-  */
-case class PipelineEvent(
-    ts: Timestamp,
-    level: String,
-    code: String,
-    stage: String,
-    url: String,
-    page: Int,
-    record_id: String,
-    group: String,
-    txn_type: String,
-    message: String)
-
-/** Per-partition commit-log row (Iceberg-emulation lineage, SURVEY §4.3). */
-case class LineageEntry(
-    partition_id: Int,
-    snapshot_id: String,
-    status: String, // RUNNING | COMMITTED | FAILED
-    attempt: Int,
-    input_rows: Long,
-    output_rows: Long,
-    content_hash: Long,
-    started_ts: Timestamp,
-    finished_ts: Timestamp)

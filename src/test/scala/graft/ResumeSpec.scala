@@ -285,6 +285,8 @@ class ResumeSpec extends AnyFunSuite {
     assert(jobs <= plain, s"stage: $jobs jobs, its write alone: $plain")
     assert(graft.io.StagedJob.readRows(dir, "x").contains(13L))
     assert(staged.get.count() === 13L)
+    // the returned frame reads the committed files as they are
+    assert(staged.get.schema === spark.read.parquet(s"$dir/stage_x").schema)
   }
 
   test("a reused stage starts at most one Spark job and does not evaluate f") {
