@@ -994,30 +994,48 @@ class OpsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("not converged"))
   }
 
-  test("star-contraction components == label propagation; converges in " +
-      "O(log n) rounds where label prop cannot") {
+  /** Reference components: min id per connected component, by a
+    * driver-side union-find over the same edges. */
+  private def unionFindCanon(nodes: Seq[Long],
+      edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nodes.map(n => n -> find(n)).toMap
+  }
+
+  test("canonicalize == driver-side union-find (chain, star, clique, 80-chain)") {
     import spark.implicits._
+    def labels(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // chain 0-..-9, star 20<-{21..25}, clique {30,31,32}, singletons
-    val edges = ((0L until 9L).map(i => (i, i + 1)) ++
+    val e = (0L until 9L).map(i => (i, i + 1)) ++
       (21L to 25L).map(i => (20L, i)) ++
-      Seq((30L, 31L), (31L, 32L), (30L, 32L))).toDF("a", "b")
-    val nodes = ((0L to 9L) ++ (20L to 25L) ++ (30L to 32L) ++
-      Seq(77L, 88L)).toDF("id")
-    val lp = Dedup.canonicalize(nodes, "id", edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val st = Dedup.canonicalizeStar(nodes, "id", edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(st === lp)
-    assert(st(9L) === 0L && st(25L) === 20L && st(32L) === 30L)
-    assert(st(77L) === 77L && st(88L) === 88L)
-    // adversarial diameter: an 80-chain (crawler-trap shape). Label
-    // propagation needs 80 rounds; star contraction lands inside 12.
-    val chain = (0L until 79L).map(i => (i, i + 1)).toDF("a", "b")
-    val cnodes = (0L until 80L).toDF("id")
-    val cst = Dedup.canonicalizeStar(cnodes, "id", chain, maxIter = 12)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((0L until 80L).forall(i => cst(i) === 0L),
-      "star contraction resolves the 80-chain to one component")
+      Seq((30L, 31L), (31L, 32L), (30L, 32L))
+    val n = (0L to 9L) ++ (20L to 25L) ++ (30L to 32L) ++ Seq(77L, 88L)
+    val ref = unionFindCanon(n, e)
+    assert(ref(9L) === 0L && ref(25L) === 20L && ref(32L) === 30L)
+    assert(ref(77L) === 77L && ref(88L) === 88L)
+    val (nodes, edges) = (n.toDF("id"), e.toDF("a", "b"))
+    assert(labels(Dedup.canonicalize(nodes, "id", edges)) === ref)
+    assert(labels(Dedup.canonicalizeStar(nodes, "id", edges)) === ref)
+    // adversarial diameter: an 80-chain (crawler-trap shape). Star
+    // contraction lands inside 12 rounds; label propagation needs 80.
+    val ce = (0L until 79L).map(i => (i, i + 1))
+    val cn = 0L until 80L
+    val cref = unionFindCanon(cn, ce)
+    assert(cref.values.toSet === Set(0L))
+    val (cnodes, chain) = (cn.toDF("id"), ce.toDF("a", "b"))
+    assert(labels(Dedup.canonicalizeStar(cnodes, "id", chain,
+      maxIter = 12)) === cref)
+    assert(labels(Dedup.canonicalize(cnodes, "id", chain,
+      maxIter = 100)) === cref)
   }
 
   test("bloom decontamination: output identical to exact path, even " +
