@@ -219,8 +219,9 @@ object DedupQueries {
           dups.dup_of IS NULL AS kept, dups.dup_of
         FROM cc LEFT JOIN dups ON dups.id = cc.vec_id
         ORDER BY id""")),
-    // dedup end-game: LSH candidate pairs → connected components →
-    // canonical survivor (min id). Oracle = recursive CTE in DuckDB.
+    // dedup end-game: LSH candidate pairs → connected components (star
+    // contraction, O(log n) rounds) → canonical survivor (min id).
+    // Oracle = recursive CTE in DuckDB.
     QuerySpec("q32_dedup_cluster", (s, d) => {
       val docs = t(s, d, "documents")
       // maxBucket=64: clustering rides the same capped candidate
@@ -236,22 +237,20 @@ object DedupQueries {
         .orderBy("doc_id")
     },
     Some(dedupClusterOracleSql)),
-    // dedup clustering, star-contraction path: same components as q32
-    // through large-star/small-star rounds (O(log n) convergence on
-    // adversarial chain-shaped clusters vs label propagation's
-    // diameter rounds) — same recursive-CTE oracle pins equality
+    // dedup clustering: now the same plan as q32 (one component kernel,
+    // Dedup.canonicalize); the name is kept and the same recursive-CTE
+    // oracle pins it
     QuerySpec("q62_dedup_star", (s, d) => {
       val docs = t(s, d, "documents")
       // maxBucket=64 — same capped chain as q32 (shared oracle)
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
         k = 16, bands = 8, minEstJaccard = 0.5, shingleN = 3,
         maxBucket = 64)
-      Dedup.canonicalizeStar(docs, "doc_id", pairs)
+      Dedup.canonicalize(docs, "doc_id", pairs)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
     },
-    // q62: the star-contraction path must produce the identical
-    // component labeling — same oracle
+    // q62: the same plan as q32 — same oracle
     Some(dedupClusterOracleSql)),
     // dedup at scale: exact n-gram Jaccard restricted to LSH candidates
     // (the composed operator — no all-pairs shingle self-join)
@@ -292,7 +291,7 @@ object DedupQueries {
       // fenced: the component-size self-join reads `lab` twice, and
       // unfenced each branch re-runs the contraction's final join
       // over the webEdges scan (the translationClusters discipline)
-      val lab = Dedup.canonicalizeStar(hosts, "host", e).localCheckpoint()
+      val lab = Dedup.canonicalize(hosts, "host", e).localCheckpoint()
       lab.join(
           lab.groupBy(col("canonical_id").as("component"))
             .agg(count(lit(1)).as("component_size")),
@@ -592,19 +591,17 @@ object DedupQueries {
         SELECT a, b, hamming FROM cand WHERE hamming <= 1
         ORDER BY a, b""")),
     // near-dup clustering through the simhash pigeonhole pairs — the
-    // one-long-per-doc alternative to the minhash path (q32/q62).
-    // STAR contraction, not label propagation: the 16-bit portable
-    // fingerprint's random hamming-collisions chain into
-    // long-diameter components — the adversarial shape whose round
-    // count star bounds at O(log n) where label prop pays diameter
-    // (q62's rationale; both paths pinned equal by this oracle, and
-    // at the production 64 bits the spurious chains vanish entirely)
+    // one-long-per-doc alternative to the minhash path (q32). The
+    // 16-bit portable fingerprint's random hamming-collisions chain
+    // into long-diameter components; canonicalize's star contraction
+    // bounds their rounds at O(log n), not diameter (at the
+    // production 64 bits the spurious chains vanish entirely)
     QuerySpec("q167_simhash_cluster", (s, d) => {
       val docs = t(s, d, "documents").select(
         col("doc_id").cast("long").as("doc_id"), col("text"))
       val pairs = Dedup.simhashNearDupPairs(docs, "doc_id", "text",
         bits = 16, nBlocks = 2, maxHamming = 1)
-      Dedup.canonicalizeStar(docs, "doc_id", pairs)
+      Dedup.canonicalize(docs, "doc_id", pairs)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
     },

@@ -28,10 +28,12 @@ object DocsGen {
     // (did, i) — did*a + i*b, or a Lehmer step of it — makes every
     // salad doc a shifted copy of every other (affine maps compose to
     // affine; mod 7000 preserves the collisions), which produced
-    // massive cross-doc shingle overlap, a near-dup component spanning
-    // half the corpus, and a label-propagation fixpoint legitimately
-    // needing > 20 iterations. xxhash64 breaks the linearity; cross-doc
-    // overlap becomes negligible, as real web text is.
+    // massive cross-doc shingle overlap and a near-dup component
+    // spanning half the corpus (its diameter outran a 20-round label
+    // propagation, which then truncated silently; Dedup.canonicalize
+    // now contracts in O(log n) rounds and throws, never truncates, if
+    // it runs out). xxhash64 breaks the linearity; cross-doc overlap
+    // becomes negligible, as real web text is.
     def wordIdx(i: org.apache.spark.sql.Column) =
       pmod(xxhash64(did, i), lit(7000L))
     // every 6th word is an English stopword so langId keeps the doc

@@ -649,101 +649,20 @@ object Dedup {
     * EVERY row of `df` — docs with no near-dup pair are their own
     * canonical; `filter(id === canonical_id)` keeps the survivors.
     *
-    * Min-id label propagation iterated to fixpoint: each step joins the
-    * current labels across the (small) edge set and takes the min over
-    * self + neighbors. At 100 TB the joins shuffle only (id, label)
-    * pairs and candidate edges — never text; iteration count = cluster
-    * graph diameter (near-dup components are tiny in practice, and the
-    * fixpoint loop is bounded by `maxIter` with a logged cap — no
-    * silent truncation).
-    */
-  def canonicalize(df: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 20): DataFrame = {
-    // Iterative fixpoint state is localCheckpoint'ed (truncated lineage,
-    // eager, per-run RDD blocks), NOT persist()'ed: persist keys the
-    // cache by analyzed-plan equality, so two runs of the same
-    // canonicalize (e.g. a warmup pass then a measured pass) silently
-    // SHARE cache entries, and each run's unpersist()/partial
-    // materialization corrupts the other's — the returned frame could
-    // re-run the whole candidate-pair generation on its next action.
-    // localCheckpoint is the single-process analogue of checkpoint(dir)
-    // on a real cluster (which a 100 TB run would use for the same
-    // lineage-truncation reason).
-    //
-    // undirected: propagate labels both ways. The checkpoint sits on
-    // the DIRECTED pairs, before the union: checkpointing the union
-    // would evaluate the (expensive) pair generation once per branch;
-    // deriving the union lazily from the materialized pairs makes it a
-    // cheap double scan of the checkpointed blocks.
-    val p = pairs.select(col("a"), col("b"))
-      .localCheckpoint() // eager: pair generation runs exactly once
-    val edges = p.union(p.select(col("b").as("a"), col("a").as("b")))
-    // The fixpoint iterates ONLY over vertices that appear in a
-    // candidate edge. Docs with no near-dup pair are their own
-    // canonical by definition, so carrying them through every
-    // iteration (join + checkpoint per step) multiplies each step's
-    // state by corpus/|candidates| for nothing — at 100 TB that is
-    // 10^12 rows of dead weight per iteration. They rejoin via one
-    // left join at the end.
-    val initial = edges.select(col("a").as("id")).distinct()
-      .withColumn("canonical_id", col("id"))
-      .localCheckpoint()
-    var labels = initial
-    // previous iteration's checkpointed frame: released once the next
-    // iteration has materialized (otherwise up to maxIter full label
-    // tables stay pinned in storage memory for the whole job)
-    var prev: DataFrame = initial
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val neighborMin = edges
-        .join(labels, edges("b") === labels("id"))
-        .groupBy(edges("a").as("nid"))
-        .agg(min(col("canonical_id")).as("nmin"))
-      // `_changed` rides the SAME join pass that produces the new
-      // labels, so the convergence probe is a limit-1 scan of the
-      // just-checkpointed blocks — NOT a second shuffle join per
-      // iteration (the round-2 control plan paid an extra join+count
-      // per fixpoint step; at scale that doubles the job count).
-      val updated = labels.as("l")
-        .join(neighborMin, col("l.id") === col("nid"), "left")
-        .select(col("l.id").as("id"),
-          least(col("l.canonical_id"),
-            coalesce(col("nmin"), col("l.canonical_id"))).as("canonical_id"),
-          (coalesce(col("nmin"), col("l.canonical_id")) <
-            col("l.canonical_id")).as("_changed"))
-        .localCheckpoint()
-      converged = updated.filter(col("_changed")).isEmpty
-      Checkpoints.release(prev) // safe: `updated` is materialized
-      prev = updated
-      labels = updated.drop("_changed")
-      iter += 1
-    }
-    Checkpoints.release(p) // labels no longer re-derives from the pairs
-    if (!converged)
-      System.err.println(
-        s"[graft] canonicalize: not converged after $maxIter iterations")
-    // singleton docs (no candidate edge) rejoin as their own canonical:
-    // one shuffle over the corpus, instead of maxIter of them
-    df.select(col(idCol).as("id"))
-      .join(labels.withColumnRenamed("canonical_id", "_c"),
-        Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("_c"), col("id")).as("canonical_id"))
-  }
-
-  /** [[canonicalize]] by large-star/small-star contraction (Kiveris et
-    * al. 2014, "Connected Components in MapReduce and Beyond") — the
-    * scale path for ADVERSARIAL component shapes: label propagation
-    * needs diameter rounds (a chain of 10^4 near-identical docs — a
-    * crawler trap — needs 10^4 joins), star contraction converges in
-    * O(log n) rounds on any shape. Per round: large-star hooks every
-    * larger neighbor of a node to its minimum, small-star re-hooks the
-    * smaller neighbors; both are one groupBy + one join over the edge
-    * set only (never the corpus).
+    * Large-star/small-star contraction (Kiveris et al. 2014, "Connected
+    * Components in MapReduce and Beyond"): O(log n) rounds on any
+    * component shape, where min-id label propagation needs diameter
+    * rounds (a chain of 10^4 near-identical docs — a crawler trap —
+    * would need 10^4 joins). Per round: large-star hooks every larger
+    * neighbor of a node to its minimum, small-star re-hooks the smaller
+    * neighbors; both are one groupBy + one join over the edge set only.
+    * The loop never carries the corpus: docs with no candidate edge
+    * are their own canonical by definition and rejoin via one left
+    * join at the end (at 100 TB, carrying them would add 10^12 rows of
+    * dead weight per round). Only (id, label) rows and candidate edges
+    * shuffle — never text.
     *
-    * Convergence probe is FUSED into the hooking passes (the same
-    * ride-along trick as [[canonicalize]]'s `_changed`): an output
+    * Convergence probe is FUSED into the hooking passes: an output
     * edge is flagged dirty when it was produced by a rewire — a
     * large-star hook with m ≠ c, or any small-star hook (a hooked
     * edge (m,n) always differs from its source (n,c) since m ≤ n < c)
@@ -761,18 +680,30 @@ object Dedup {
     * fixpoint would emit an inconsistent labeling — members mapped to
     * intermediates, one component split into several — and silently
     * keep duplicates downstream, which is strictly worse than failing
-    * loudly. Output contract identical to [[canonicalize]]:
-    * (id, canonical_id) for every row of `df`.
+    * loudly.
     */
-  def canonicalizeStar(df: DataFrame, idCol: String, pairs: DataFrame,
+  def canonicalize(df: DataFrame, idCol: String, pairs: DataFrame,
       maxIter: Int = 32): DataFrame = {
+    // Iterative fixpoint state is localCheckpoint'ed (truncated lineage,
+    // eager, per-run RDD blocks), NOT persist()'ed: persist keys the
+    // cache by analyzed-plan equality, so two runs of the same
+    // canonicalize (e.g. a warmup pass then a measured pass) silently
+    // SHARE cache entries, and each run's unpersist()/partial
+    // materialization corrupts the other's — the returned frame could
+    // re-run the whole candidate-pair generation on its next action.
+    // localCheckpoint is the single-process analogue of checkpoint(dir)
+    // on a real cluster (which a 100 TB run would use for the same
+    // lineage-truncation reason). Each round's checkpoint releases the
+    // previous one once it has materialized, so at most two edge sets
+    // stay pinned in storage memory.
+    //
     // canonical undirected edges (u < v), self-loops dropped
     var edges = pairs
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"),
         greatest(col("a"), col("b")).as("v"))
       .distinct()
-      .localCheckpoint()
+      .localCheckpoint() // eager: pair generation runs exactly once
     var prev = edges
     var iter = 0
     var converged = edges.isEmpty
@@ -818,7 +749,7 @@ object Dedup {
     }
     if (!converged && iter >= maxIter)
       throw new IllegalStateException(
-        s"canonicalizeStar: not converged after $maxIter rounds — a " +
+        s"canonicalize: not converged after $maxIter rounds — a " +
           "truncated edge set yields an inconsistent labeling " +
           "(duplicates silently kept); raise maxIter")
     // converged star forest: every edge is (root, member)
@@ -932,7 +863,7 @@ object Dedup {
     * differ only in boilerplate damage, min-id keeps a coin flip;
     * max-quality keeps the clean one).
     *
-    * `labels` is [[canonicalize]]/[[canonicalizeStar]] output
+    * `labels` is [[canonicalize]] output
     * (id, canonical_id) — singletons are their own cluster and survive
     * trivially. The survivor is argmax(score), ties broken by min id,
     * computed as TWO thin aggregations (max score per cluster, then min

@@ -322,7 +322,7 @@ object WebGraph {
     * directly or through a shared alternate target, declarations are
     * rarely symmetric in the wild — form one cluster, labeled by the
     * component's min url via the same O(log n)-round star contraction
-    * dedup clustering uses ([[graft.ops.Dedup.canonicalizeStar]]).
+    * dedup clustering uses ([[graft.ops.Dedup.canonicalize]]).
     * Nodes are BOTH sides of the edges, so a page that declares no
     * links itself still clusters when a sibling references it.
     * Returns (url, cluster, n_members) for every node.
@@ -346,7 +346,7 @@ object WebGraph {
       .localCheckpoint()
     val nodes = e.select(explode(array(col("a"), col("b"))).as("url"))
       .distinct()
-    val lab = Dedup.canonicalizeStar(nodes, "url", e).localCheckpoint()
+    val lab = Dedup.canonicalize(nodes, "url", e).localCheckpoint()
     lab.join(
         lab.groupBy(col("canonical_id").as("cluster"))
           .agg(count(lit(1)).as("n_members")),

@@ -982,14 +982,14 @@ class OpsSpec extends AnyFunSuite {
     assert(again === out)
   }
 
-  test("canonicalizeStar THROWS on non-convergence instead of emitting " +
+  test("canonicalize THROWS on non-convergence instead of emitting " +
       "an inconsistent labeling") {
     import spark.implicits._
     // an 80-chain cannot finish star contraction in one round
     val edges = (0L until 79L).map(i => (i, i + 1)).toDF("a", "b")
     val nodes = (0L until 80L).toDF("id")
     val e = intercept[IllegalStateException] {
-      Dedup.canonicalizeStar(nodes, "id", edges, maxIter = 1).count()
+      Dedup.canonicalize(nodes, "id", edges, maxIter = 1).count()
     }
     assert(e.getMessage.contains("not converged"))
   }
@@ -1024,18 +1024,16 @@ class OpsSpec extends AnyFunSuite {
     assert(ref(77L) === 77L && ref(88L) === 88L)
     val (nodes, edges) = (n.toDF("id"), e.toDF("a", "b"))
     assert(labels(Dedup.canonicalize(nodes, "id", edges)) === ref)
-    assert(labels(Dedup.canonicalizeStar(nodes, "id", edges)) === ref)
-    // adversarial diameter: an 80-chain (crawler-trap shape). Star
-    // contraction lands inside 12 rounds; label propagation needs 80.
+    // adversarial diameter: an 80-chain (crawler-trap shape): star
+    // contraction lands inside 12 rounds, where min-id label
+    // propagation would need 80
     val ce = (0L until 79L).map(i => (i, i + 1))
     val cn = 0L until 80L
     val cref = unionFindCanon(cn, ce)
     assert(cref.values.toSet === Set(0L))
     val (cnodes, chain) = (cn.toDF("id"), ce.toDF("a", "b"))
-    assert(labels(Dedup.canonicalizeStar(cnodes, "id", chain,
-      maxIter = 12)) === cref)
     assert(labels(Dedup.canonicalize(cnodes, "id", chain,
-      maxIter = 100)) === cref)
+      maxIter = 12)) === cref)
   }
 
   test("bloom decontamination: output identical to exact path, even " +

@@ -309,6 +309,25 @@ class ResumeSpec extends AnyFunSuite {
     assert(reused.get.count() === 50L)
   }
 
+  test("Dedup.canonicalize over a pairs-only graph starts at most 13 Spark jobs") {
+    import spark.implicits._
+    // disjoint pairs plus singletons: one contraction round settles it
+    val nodes = (0L until 40L).toDF("id")
+    val pairs = (0L until 20L by 2L).map(i => (i, i + 1)).toDF("a", "b")
+      .localCheckpoint()
+    var labels = Option.empty[org.apache.spark.sql.DataFrame]
+    // the edge checkpoint, its emptiness probe, one round's checkpoint
+    // (AQE runs each of its shuffle map stages as a job) and the fused
+    // convergence probe
+    val jobs = jobsOf {
+      labels = Some(graft.ops.Dedup.canonicalize(nodes, "id", pairs))
+    }
+    assert(jobs <= 13, s"$jobs jobs in canonicalize")
+    assert(labels.get.collect().map(r => r.getLong(0) -> r.getLong(1))
+      .toMap === (0L until 40L).map(i =>
+        i -> (if (i < 20L) i - i % 2L else i)).toMap)
+  }
+
   test("staged curation with span-scrub stage: resume matches in-memory") {
     import spark.implicits._
     val planted = "one two three four five six seven eight nine ten"
