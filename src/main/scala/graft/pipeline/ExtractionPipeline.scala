@@ -348,10 +348,6 @@ object ExtractionPipeline {
     val txt = col("stitched")
     val firstCol = trim(element_at(mc, 1))
 
-    // routing (C3) on the pre-lowered stitched text (materialized once —
-    // see classifyPages note on when-chain expression duplication)
-    val routed = RuleCompiler.classifyRecordFromLower(col("_rl"), rs)
-
     // ---- strategy compiler: rs.extraction (config-driven, default =
     // the reference plugins' hardcoded extraction) → Columns ----
 
@@ -435,9 +431,9 @@ object ExtractionPipeline {
       when(isOth, lit(""))
         .when(isPos, pfield(name, prior)).otherwise(tfield(name, prior))
 
-    // routing + every record field as ONE projection over `_rl`, in
-    // output order: Spark analyzes the growing plan once per layer, not
-    // once per column
+    // routing + every record field as ONE projection over `_rl` and
+    // `_route`, in output order: Spark analyzes the growing plan once
+    // per layer, not once per column
     val fields = Seq[(String, Field)](
       "client_name" -> tOnly, "portfolio_no" -> pOnly,
       "trade_date" -> tOnly, "settlement_date" -> tOnly,
@@ -453,10 +449,10 @@ object ExtractionPipeline {
     ).foldLeft(ListMap[String, Column](
       "routed_section" ->
         when(isPos, lit("Positions")).when(isOth, lit("Others"))
-          .otherwise(routed.getField("txn_group")),
+          .otherwise(col("_route").getField("txn_group")),
       "txn_type" ->
         when(isPos, lit("Positions")).when(isOth, lit("Other"))
-          .otherwise(routed.getField("txn_type")),
+          .otherwise(col("_route").getField("txn_type")),
       "txn_type_detail" ->
         when(isPos || isOth, lit(""))
           .otherwise(RuleCompiler.classifyTxnTypeFromLower(col("_rl"), rs)),
@@ -470,6 +466,12 @@ object ExtractionPipeline {
     // re-evaluating the normalizers per check.
     val normalized = segs
       .withColumn("_rl", lower(txt))
+      // routing (C3) on the pre-lowered stitched text: struct(txn_group,
+      // txn_type) in a layer of its own, so routed_section and txn_type
+      // read one attribute and the when-chain is built once (see
+      // classifyPages note on when-chain expression duplication)
+      .withColumn("_route",
+        RuleCompiler.classifyRecordFromLower(col("_rl"), rs))
       .withColumns(fields)
       .withColumns(ListMap(
         "trade_date_iso" -> normalizeDateCol(col("trade_date")),
@@ -493,7 +495,7 @@ object ExtractionPipeline {
           .when(col("routed_section") === "Positions" &&
             col("market_value") === "", lit("Others"))
           .otherwise(col("routed_section"))),
-      "mc", "stitched", "seg_id", "n_rows", "_rl", "as_of_date")
+      "mc", "stitched", "seg_id", "n_rows", "_rl", "_route", "as_of_date")
   }
 
   /** Full pipeline: pages → records. Record extraction needs only the

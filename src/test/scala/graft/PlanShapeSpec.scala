@@ -208,6 +208,29 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("extraction pipeline: the record-rule when-chain is built once per plan") {
+    // `routed_section` and `txn_type` both read the one routing struct;
+    // "framework redemption" is a keyword of exactly one record rule and
+    // one txn-type rule, so it occurs once per chain in the plan
+    val kw = "framework redemption"
+    val rs = graft.rules.RuleSets.plugin
+    def has(ks: Seq[String]) = ks.exists(_.equalsIgnoreCase(kw))
+    assert(rs.sortedRecordRules.count(r => has(r.matchAny)) === 1)
+    assert(rs.sortedTxnRules.count(r =>
+      has(r.matchAny ++ r.excludeIfContains)) === 1)
+    val pages = graft.gen.PagesGen.pages(spark, 20, 42, 2)
+    val plan = graft.pipeline.ExtractionPipeline.records(pages,
+      partitions = 0).queryExecution.optimizedPlan
+    val lit = org.apache.spark.unsafe.types.UTF8String.fromString(kw)
+    val hits = plan.collect { case node =>
+      node.expressions.map(_.collect {
+        case l: org.apache.spark.sql.catalyst.expressions.Literal
+          if l.value == lit => l
+      }.size).sum
+    }.sum
+    assert(hits === 2, s"'$kw' occurs $hits times in the optimized plan")
+  }
+
   test("bigramFluency: count-table shuffles carry only hashes") {
     withPlainPlan {
       val out = Curation.bigramFluency(docs, "doc_id", "text")
