@@ -37,7 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * expression does not re-tokenize, so the tokenization contract stays
   * in one place). Output: the flattened BPE symbol stream. Word
   * splits are code-point units (matching the Column fold's
-  * `substr`), with the standard `</w>` end-of-word marker.
+  * `substr`), with the standard `</w>` end-of-word marker. Null
+  * tokens are dropped: an array holding a null element encodes as if
+  * that element were absent (a null array stays null), unlike SQL
+  * collection functions that propagate or preserve nulls.
   *
   * The codec builds once on the driver and ships as a codegen
   * reference object; a per-task bounded memo caches encoded words
