@@ -1337,6 +1337,72 @@ class OpsSpec extends AnyFunSuite {
       out.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq)
   }
 
+  test("tokenBudgetAssign kept set == one Window.partitionBy(stratum) " +
+      "running sum in md5(id:budget) order, on a hot stratum") {
+    // 90% of the rows in one stratum: the shape a single stratum window
+    // funnels through one task, which the sharded form must reproduce
+    val rows = 3000L
+    val df = spark.range(0, rows, 1, 6)
+      .select(col("id"),
+        when(pmod(col("id"), lit(10)) < 9, lit("en"))
+          .otherwise(lit("de")).as("lang"),
+        (pmod(col("id") * 2654435761L, lit(200)) + 10L).as("n_toks"))
+    val budgets = Map("en" -> (rows * 20L), "de" -> (rows * 2L))
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("lang")).orderBy(col("_ord"), col("id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val budgetCol = budgets.toSeq.sortBy(_._1)
+      .foldLeft(lit(0L)) { case (els, (k, v)) =>
+        when(col("lang") === k, lit(v)).otherwise(els) }
+    val want = df
+      .withColumn("_ord", md5(concat(col("id").cast("string"), lit(":budget"))))
+      .withColumn("_cum", sum(col("n_toks")).over(w))
+      .filter(col("_cum") - col("n_toks") < budgetCol)
+      .select("id").collect().map(_.getLong(0)).sorted.toSeq
+    // both strata keep a strict, non-empty prefix
+    assert(want.nonEmpty && want.length < rows)
+    Seq(1, 3).foreach { hex =>
+      val got = Curation.tokenBudgetAssign(df, "id", "lang", "n_toks",
+        budgets, shardHexLen = hex)
+        .filter(col("kept")).select("id").collect().map(_.getLong(0))
+        .sorted.toSeq
+      assert(got === want, s"shardHexLen=$hex")
+    }
+  }
+
+  test("capBuckets survivors == count-over-window cap, AQE on and off") {
+    // one hot (band, bucket) per band, many small buckets, one bucket
+    // at exactly the cap and one just past it
+    val maxBucket = 50
+    val body = spark.range(0, 4000, 1, 6)
+      .select(col("id"),
+        pmod(col("id"), lit(4)).cast("int").as("band"),
+        when(pmod(col("id"), lit(100)) < 40, lit("HOT"))
+          .otherwise(concat(lit("b"),
+            pmod(col("id") * 2654435761L, lit(97)).cast("string")))
+          .as("bucket"))
+    val edge = spark.range(10000, 10000 + 2 * maxBucket + 1, 1, 2)
+      .select(col("id"), lit(0).as("band"),
+        when(col("id") < 10000 + maxBucket, lit("AT")).otherwise(lit("OVER"))
+          .as("bucket"))
+    val banded = body.unionByName(edge)
+    def ids(df: DataFrame): Seq[Long] =
+      df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    val want = ids(banded
+      .withColumn("_bsz", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("band"), col("bucket"))))
+      .filter(col("_bsz") <= maxBucket))
+    assert(want.contains(10000L) && !want.contains(10000L + 2 * maxBucket))
+    assert(!want.contains(0L) && want.length < 4000)
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    Seq("true", "false").foreach { aqe =>
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      try assert(ids(Dedup.capBuckets(banded, maxBucket)) === want, s"AQE $aqe")
+      finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
+  }
+
   test("temperatureResample: minority strata upweighted, p capped, stable") {
     import spark.implicits._
     // 900 docs of "big", 90 of "mid", 10 of "rare"
