@@ -73,9 +73,9 @@ object TableIO {
     * prunes to just the wave's partitions; here it predicate-filters the
     * scan.
     *
-    * A wave is three Spark jobs: the segmentation window exchange's map
-    * stage (pages are extracted inside the scan's own tasks, so no raw
-    * page bytes are shuffled), the data write, and the event write.
+    * A wave is two Spark jobs: the data write and the event write.
+    * Pages are extracted and segmented inside the scan's own tasks, so
+    * the data write has no shuffle at all.
     *
     * Commit protocol per wave: delete stale (uncommitted) wave bucket
     * dirs, write all wave buckets in one job (each bucket an idempotent
@@ -90,10 +90,11 @@ object TableIO {
     * partition once however often its task is retried.
     *
     * Input counts ride a per-bucket accumulator inside the extraction
-    * job — the input is scanned ONCE per wave. (Those are updated in a
-    * shuffle map stage, where a retried task can count twice; input
-    * counts are metrics-grade, the commit decision never depends on
-    * them.)
+    * — the input is scanned ONCE per wave. They are updated in the data
+    * write's result stage, where Spark applies a task's accumulator
+    * updates once per partition, so a retried task does not count twice.
+    * They stay metrics-grade all the same: the commit decision never
+    * depends on them.
     *
     * @param buckets   total url-hash buckets (the resume granularity)
     * @param waveSize  buckets per wave

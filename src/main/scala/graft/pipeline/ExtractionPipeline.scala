@@ -5,7 +5,6 @@ import graft.model.{Page, PageText}
 import graft.rules.{RuleCompiler, RuleSet, RuleSets}
 import graft.textops.TextOps
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import scala.collection.immutable.ListMap
@@ -16,33 +15,32 @@ import scala.collection.immutable.ListMap
   *     → optional url-hash repartition (X4)
   *     → mapPartitions content extraction (X1 HTML / X2 PDF)   [typed map]
   *     → page classification (C1/C2)                           [Column]
-  *     → table-row flatMap (P1/P2 + G3 header repair)          [generator]
-  *     → row filters (C9/C10/C11) + main-row detection (G1)    [Column]
-  *     → window segment-id + segment fold (G2/A5)              [window+agg]
+  *     → segmentation flatMap: table rows (P1/P2 + G3 header
+  *       repair), row filters (C9/C10/C11), main-row detection (G1)
+  *       and stitching (G2/A5), per page       [generator, shared kernel]
   *     → record routing (C3-C6)                                [Column]
   *     → field extraction (N5-N13)                             [Column]
   *     → validation/normalization (N14/N15, C12, J1)           [Column]
   *
-  * One shuffle for the optional repartition and one for the window
-  * sort; the segment fold reuses the window's url partitioning, so it
-  * adds no exchange. Everything after the flatMap is pure Column
-  * expressions inside whole-stage codegen — no UDFs.
-  * Classification/extraction logic mirrors ScalarEvaluator (the golden
-  * twin) line for line.
+  * The only shuffle is the optional repartition: segmentation keeps
+  * state within one page, so it runs inside the page's own task.
+  * Everything after the flatMap is pure Column expressions inside
+  * whole-stage codegen — no UDFs. Classification/extraction logic
+  * mirrors ScalarEvaluator (the golden twin) line for line; the
+  * segmentation flatMap calls its kernel, ScalarEvaluator.segmentsOf.
   */
 object ExtractionPipeline {
-
-  /** Page types whose tables [[segments]] enumerates. */
-  private val SegmentedTypes =
-    Set("Positions", "Transaction", "Trade", "FXTF", "Others")
 
   /** Projection carried into the segmentation flatMap. */
   case class PageForSeg(url: String, page_type: String, portfolio_no: String,
       client_name: String, as_of_date: String, page_md: String)
 
+  /** One stitched segment with its page context, as [[segments]]
+    * emits it.
+    */
   case class SegRow(url: String, page_type: String, portfolio_no: String,
-      client_name: String, as_of_date: String, table_idx: Int, row_idx: Int,
-      cells: Seq[String])
+      client_name: String, as_of_date: String, mc: Seq[String],
+      stitched: String, n_rows: Int)
 
   /** Stage 1: explicit url-hash partitioning + per-partition batched
     * content extraction. The kernel objects are JVM-static singletons,
@@ -57,8 +55,7 @@ object ExtractionPipeline {
     // partitions <= 0 skips the shuffle and extracts inside the scan's
     // own tasks, so parallelism comes from the scan splits
     // (GraftSession.ScanSplits). TableIO.runResumable's waves do this:
-    // shuffling raw page bytes only pays for skewed inputs, and the later
-    // window shuffle moves only thin segmentation rows either way.
+    // shuffling raw page bytes only pays for skewed inputs.
     val balanced =
       if (partitions > 0) pages.repartition(partitions, col("url"))
       else pages
@@ -241,94 +238,29 @@ object ExtractionPipeline {
       rs: RuleSet = RuleSets.plugin): DataFrame =
     recordsFromSegments(segments(classified), rs)
 
-  /** Stages 3a-3d: classified pages → stitched segments (one row per
-    * record-to-be, with `n_rows` = how many table rows were folded in).
+  /** Stage 3: classified pages → stitched segments, one row per
+    * record-to-be, with `n_rows` = how many table rows were folded in.
+    * One flatMap over pages runs the SAME segmentation kernel as the
+    * scalar evaluator (row filters, G3 header repair, main-row detection,
+    * stitching), so segmentation stays inside the page's own task. The
+    * page-type test runs in the closure: as a Column filter, Catalyst
+    * pushes it below classifyPagesDf's `_header` projection and inlines
+    * the header derivation into it once per keyword branch.
     */
   def segments(classified: DataFrame): DataFrame = {
     val spark = classified.sparkSession
     import spark.implicits._
-
-    // Stage 3a: table-row flatMap (the Generator/UDTF slot) using the
-    // SAME shared kernel as the scalar evaluator (G3 repair inside). The
-    // page-type test runs in the closure: as a Column filter, Catalyst
-    // pushes it below classifyPagesDf's `_header` projection and inlines
-    // the header derivation into it once per keyword branch.
-    val segRows: Dataset[SegRow] = classified
+    classified
       .select("url", "page_type", "portfolio_no", "client_name",
         "as_of_date", "page_md")
       .as[PageForSeg]
       .flatMap { p =>
-        if (!SegmentedTypes.contains(p.page_type)) Nil
-        else ScalarEvaluator.enumerateRows(p.page_type, p.page_md).map {
-          case (t, r, cells) =>
-            SegRow(p.url, p.page_type, p.portfolio_no, p.client_name,
-              p.as_of_date, t, r, cells)
+        ScalarEvaluator.segmentsOf(p.page_type, p.page_md).map { s =>
+          SegRow(p.url, p.page_type, p.portfolio_no, p.client_name,
+            p.as_of_date, s.cells, s.text, s.nRows)
         }
       }
-
-    val isPos = col("page_type") === "Positions"
-    val isOth = col("page_type") === "Others"
-    val cells = col("cells")
-    val rawJoin = concat_ws(" ", cells) // mkString(" ") — empties kept
-    val firstCol = trim(element_at(cells, 1))
-
-    // Stage 3b: row filters + main-row detection, all Columns.
-    // Others keep = the C10 noise filter: ≥2 cells non-empty with an
-    // ASCII alphanumeric (others.py:41-47; scalar twin identical).
-    val withFlags = segRows.toDF()
-      .withColumn("row_text",
-        when(isPos, trim(rawJoin)).otherwise(rawJoin))
-      .withColumns(ListMap(
-        "keep" ->
-          when(isPos,
-            col("row_text") =!= "" &&
-              !lower(col("row_text")).startsWith("total"))
-            .when(isOth,
-              size(filter(cells, c =>
-                trim(c) =!= "" && c.rlike("[a-zA-Z0-9]"))) >= 2)
-            .otherwise(
-              size(cells) > 0 &&
-                trim(element_at(cells, 1)).rlike("^" + DatePat) &&
-                size(cells) > 1 && trim(element_at(cells, 2)) =!= ""),
-        "is_main" ->
-          when(isPos,
-            firstCol =!= "" &&
-              (substring(firstCol, 1, 1).rlike("^[0-9]$") ||
-                startsWithCurrencyCol(firstCol)) &&
-              !firstCol.rlike("^" + DatePat))
-            .otherwise(lit(true))))
-      .filter(col("keep"))
-
-    // Stage 3c: G2 — window segment-id (running count of main rows per
-    // page, ordered by (table_idx, row_idx)); continuation rows before
-    // the first main row get segId 0 and are dropped, exactly like the
-    // reference's `if records:` guard (orchestrator.py:135-140).
-    val w = Window.partitionBy(col("url"))
-      .orderBy(col("table_idx"), col("row_idx"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withSeg = withFlags
-      .withColumn("seg_id", sum(col("is_main").cast("int")).over(w))
-      .filter(col("seg_id") > 0)
-
-    // Stage 3d: A5 — segment fold. sort_array makes the fold order-stable
-    // under any partitioning; partial aggregation collapses each segment
-    // locally (rows of a segment are contiguous post-window).
-    val folded = withSeg
-      .groupBy(col("url"), col("seg_id"))
-      .agg(
-        first(col("page_type")).as("page_type"),
-        first(col("portfolio_no")).as("portfolio_no"),
-        first(col("client_name")).as("client_name"),
-        first(col("as_of_date")).as("as_of_date"),
-        sort_array(collect_list(struct(
-          col("table_idx"), col("row_idx"), col("row_text"), col("cells"))))
-          .as("rows"))
-    layer(folded, ListMap(
-      "mc" -> element_at(col("rows"), 1).getField("cells"),
-      "stitched" ->
-        array_join(transform(col("rows"), r => r.getField("row_text")), " "),
-      "n_rows" -> size(col("rows"))),
-      "rows")
+      .toDF()
   }
 
   /** Stages 4-7 — routing + field extraction + validation as wide
@@ -495,7 +427,7 @@ object ExtractionPipeline {
           .when(col("routed_section") === "Positions" &&
             col("market_value") === "", lit("Others"))
           .otherwise(col("routed_section"))),
-      "mc", "stitched", "seg_id", "n_rows", "_rl", "_route", "as_of_date")
+      "mc", "stitched", "n_rows", "_rl", "_route", "as_of_date")
   }
 
   /** Full pipeline: pages → records. Record extraction needs only the

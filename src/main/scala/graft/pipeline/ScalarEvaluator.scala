@@ -9,9 +9,10 @@ import scala.collection.mutable.ArrayBuffer
 /** Non-Spark reference evaluator of the full pipeline semantics —
   * the second implementation behind the golden byte-identity tests
   * (SURVEY §5.2-3). Shares the scalar kernels (ContentExtractor,
-  * TextOps, ScalarRules) with the Spark path; everything the Spark path
-  * expresses as Columns/windows is re-implemented here as plain loops,
-  * mirroring the reference's Python
+  * TextOps, ScalarRules) and the segmentation kernel [[segmentsOf]]
+  * with the Spark path; everything the Spark path expresses as Columns
+  * (classification, routing, field extraction, validation) is
+  * re-implemented here as plain code, mirroring the reference's Python
   * (/root/reference/pipeline/orchestrator.py:51-188).
   */
 object ScalarEvaluator {
@@ -19,23 +20,23 @@ object ScalarEvaluator {
   private val BuyPat = "You bought ([A-Z]{3}) ([0-9',\\. ]*\\d)".r
   private val SellPat = "You sold ([A-Z]{3}) ([0-9',\\. ]*\\d)".r
 
-  private case class Seg(cells: Seq[String], var text: String,
-      tableIdx: Int, rowIdx: Int)
+  /** One record-to-be of a page: the main row's cells, the row texts
+    * of the main row and its continuation rows joined by " ", and how
+    * many table rows were folded in.
+    */
+  case class Segment(cells: Seq[String], text: String, nRows: Int)
 
   def tablesOf(pageMd: String): Seq[ParsedTable] =
     TextOps.parseHtmlTables(pageMd) ++ TextOps.parseMarkdownTables(pageMd)
 
-  /** Enumerate table rows with header-as-data repair (G3) applied —
-    * SHARED by this evaluator and the Spark pipeline's flatMap, so both
-    * paths see identical rows by construction. Positions repair:
-    * header[0] starts with digit/currency (orchestrator.py:73-87);
-    * Transaction repair: header[0] contains a DD.MM.YYYY date
-    * (orchestrator.py:144-155).
+  /** Enumerate table rows, in table then row order, with header-as-data
+    * repair (G3) applied. Positions repair: header[0] starts with
+    * digit/currency (orchestrator.py:73-87); Transaction repair:
+    * header[0] contains a DD.MM.YYYY date (orchestrator.py:144-155).
     */
-  def enumerateRows(pageType: String, pageMd: String)
-      : Seq[(Int, Int, Seq[String])] =
-    tablesOf(pageMd).zipWithIndex.flatMap { case (t, tIdx) =>
-      val rows: Seq[Seq[String]] = pageType match {
+  def enumerateRows(pageType: String, pageMd: String): Seq[Seq[String]] =
+    tablesOf(pageMd).flatMap { t =>
+      pageType match {
         case "Positions" if t.headers.nonEmpty =>
           val firstH = t.headers.head.trim
           if (firstH.nonEmpty && (firstH.head.isDigit ||
@@ -50,7 +51,63 @@ object ScalarEvaluator {
         // Others iterates data rows only (others.py:43), like default
         case _ => t.rows
       }
-      rows.zipWithIndex.map { case (cells, rIdx) => (tIdx, rIdx, cells) }
+    }
+
+  /** Segmentation of one page: the page-type row filters (C9-C11),
+    * main-row detection (G1) and continuation stitching (G2/A5), folded
+    * in [[enumerateRows]] order. The ONE segmentation kernel: this
+    * evaluator and the Spark pipeline's flatMap
+    * (ExtractionPipeline.segments) both call it, so segmentation needs
+    * no cross-row Spark operator. Page types without records (Ignore,
+    * Unknown) yield none (orchestrator.py:20-21).
+    */
+  def segmentsOf(pageType: String, pageMd: String): Seq[Segment] =
+    pageType match {
+      case "Positions" =>
+        // orchestrator.py:58-137 — stateful main/continuation stitching;
+        // continuation rows before the first main row are dropped, like
+        // the reference's `if records:` guard (orchestrator.py:135-140)
+        val segs = ArrayBuffer.empty[Segment]
+        enumerateRows(pageType, pageMd).foreach { cells =>
+          val rowText = cells.mkString(" ").trim
+          if (rowText.nonEmpty && !TextOps.lower(rowText).startsWith("total")) {
+            val firstCol = cells.headOption.getOrElse("").trim
+            // ASCII digit only: a documented deviation from Python's
+            // Unicode isdigit
+            val isMain = firstCol.nonEmpty &&
+              ((firstCol.head >= '0' && firstCol.head <= '9') ||
+                TextOps.startsWithCurrency(firstCol)) &&
+              !TextOps.startsWithDate(firstCol)
+            if (isMain) segs += Segment(cells, rowText, 1)
+            else if (segs.nonEmpty) {
+              val s = segs.last
+              segs(segs.length - 1) =
+                Segment(s.cells, s.text + " " + rowText, s.nRows + 1)
+            }
+          }
+        }
+        segs.toSeq
+      case "Transaction" | "Trade" | "FXTF" =>
+        // orchestrator.py:139-188 — one record per dated row with a
+        // type cell. Trade/FXTF pages share the transaction-row shape
+        // (trade_information.py:81-85).
+        enumerateRows(pageType, pageMd).collect {
+          case cells if cells.nonEmpty &&
+              TextOps.startsWithDate(cells.head.trim) &&
+              cells.length > 1 && cells(1).trim.nonEmpty =>
+            Segment(cells, cells.mkString(" "), 1)
+        }
+      case "Others" =>
+        // OthersPlugin.extract (others.py:33-63): keep rows with ≥2
+        // cells that are non-empty and contain an ASCII alphanumeric
+        // (C10 noise filter)
+        enumerateRows(pageType, pageMd).collect {
+          case cells if cells.count(c => c.trim.nonEmpty &&
+              c.exists(ch => (ch >= 'a' && ch <= 'z') ||
+                (ch >= 'A' && ch <= 'Z') || (ch >= '0' && ch <= '9'))) >= 2 =>
+            Segment(cells, cells.mkString(" "), 1)
+        }
+      case _ => Nil
     }
 
   /** Full pipeline for one page: extract → classify → segment → route →
@@ -64,64 +121,23 @@ object ScalarEvaluator {
   def processMd(url: String, pageMd: String, rs: RuleSet): Seq[ExtractedRecord] = {
     if (pageMd.isEmpty) return Nil
     val pageType = ScalarRules.effectivePageType(pageMd, rs)
-
     val portfolioNo = TextOps.extractPortfolioNo(pageMd).getOrElse("")
     val clientName = TextOps.extractClientName(pageMd).getOrElse("")
     val asOfDate = TextOps.extractAsOfDate(pageMd).getOrElse("")
-    val out = ArrayBuffer.empty[ExtractedRecord]
-
-    pageType match {
-      case "Positions" =>
-        // orchestrator.py:58-137 — stateful main/continuation stitching
-        val segs = ArrayBuffer.empty[Seg]
-        enumerateRows(pageType, pageMd).foreach { case (tIdx, rIdx, cells) =>
-          val rowText = cells.mkString(" ").trim
-          if (rowText.nonEmpty && !TextOps.lower(rowText).startsWith("total")) {
-            val firstCol = cells.headOption.getOrElse("").trim
-            // ASCII digit, matching the Column twin's `^[0-9]` exactly
-            // (deviation from Python's Unicode isdigit, documented:
-            // the parity contract between the two backends wins)
-            val isMain = firstCol.nonEmpty &&
-              ((firstCol.head >= '0' && firstCol.head <= '9') ||
-                TextOps.startsWithCurrency(firstCol)) &&
-              !TextOps.startsWithDate(firstCol)
-            if (isMain) segs += Seg(cells, rowText, tIdx, rIdx)
-            else if (segs.nonEmpty) segs.last.text += " " + rowText
-          }
-        }
-        segs.foreach { s =>
-          out += extractPositions(url, pageType, s.cells, s.text, portfolioNo,
+    segmentsOf(pageType, pageMd).map { s =>
+      validate(pageType match {
+        case "Positions" =>
+          extractPositions(url, pageType, s.cells, s.text, portfolioNo,
             asOfDate)
-        }
-      case "Transaction" | "Trade" | "FXTF" =>
-        // orchestrator.py:139-188 — per-row records. Trade/FXTF pages
-        // share the transaction-row shape (trade_information.py:81-85);
-        // per-row classify_record routes FX rows regardless of page type.
-        enumerateRows(pageType, pageMd).foreach { case (_, _, cells) =>
-          if (cells.nonEmpty) {
-            val validDate = TextOps.startsWithDate(cells.head.trim)
-            val hasType = cells.length > 1 && cells(1).trim.nonEmpty
-            if (validDate && hasType) {
-              val rowText = cells.mkString(" ")
-              val (group, ttype) = ScalarRules.classifyRecord(rowText, rs)
-              out += extractTrade(url, pageType, group, ttype, cells, rowText,
-                clientName, rs)
-            }
-          }
-        }
-      case "Others" =>
-        // OthersPlugin.extract (others.py:33-63): all table rows; keep
-        // rows with ≥2 cells that are non-empty and contain an ASCII
-        // alphanumeric (C10 noise filter; ASCII to match the Column twin)
-        enumerateRows(pageType, pageMd).foreach { case (_, _, cells) =>
-          val content = cells.count(c => c.trim.nonEmpty &&
-            c.exists(ch => (ch >= 'a' && ch <= 'z') ||
-              (ch >= 'A' && ch <= 'Z') || (ch >= '0' && ch <= '9')))
-          if (content >= 2) out += extractOthers(url, pageType, cells)
-        }
-      case _ => // Ignore / Unknown — no records (orchestrator.py:20-21)
+        case "Others" => extractOthers(url, pageType, s.cells)
+        // per-record classify_record routes FX rows regardless of the
+        // page type
+        case _ =>
+          val (group, ttype) = ScalarRules.classifyRecord(s.text, rs)
+          extractTrade(url, pageType, group, ttype, s.cells, s.text,
+            clientName, rs)
+      })
     }
-    out.toSeq.map(validate)
   }
 
   /** OthersPlugin row record (others.py:48-59): generic columns only —

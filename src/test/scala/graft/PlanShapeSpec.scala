@@ -3,7 +3,7 @@ package graft
 import graft.ops.{Curation, Retrieval}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -178,18 +178,16 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("extraction pipeline: no shuffle carries raw html or page text") {
+  test("extraction pipeline: the records(partitions = 0) plan has no Exchange") {
     withPlainPlan {
       val pages = graft.gen.PagesGen.pages(spark, 50, 42, 2)
-      val out = graft.pipeline.ExtractionPipeline.records(pages,
-        partitions = 0) // partitions=0: no input repartition, so any
-                        // html in a shuffle would be a pipeline leak
-      val shuffles = shuffledNames(out)
-      assert(shuffles.nonEmpty, "expected the segmentation window shuffle")
-      shuffles.foreach { s =>
-        assert(!s.contains("html") && !s.contains("page_md") &&
-          !s.contains("main_text"), s"page bytes shuffled: $s")
-      }
+      // partitions=0: no input repartition, and segmentation runs per
+      // page inside the scan's tasks, so no operator may move rows —
+      // in particular no shuffle can carry html or page text
+      val plan = graft.pipeline.ExtractionPipeline.records(pages,
+        partitions = 0).queryExecution.executedPlan
+      val exchanges = plan.collect { case e: Exchange => e.nodeName }
+      assert(exchanges.isEmpty, s"exchanges in the records plan: $exchanges")
     }
   }
 
