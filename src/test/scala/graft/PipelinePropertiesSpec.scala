@@ -1,0 +1,136 @@
+package graft
+
+import graft.extract.ContentExtractor
+import graft.gen.PagesGen
+import graft.pipeline.{ExtractionPipeline, ScalarEvaluator}
+import graft.rules.{RuleSets, ScalarRules}
+import graft.textops.TextOps
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.util.Pretty
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Fixed-seed scalacheck properties of the extraction pipeline over
+  * generated inputs: the Spark records equal the scalar evaluator's at
+  * any partitioning, and the segmentation kernel folds every kept
+  * Positions row into exactly one segment.
+  */
+class PipelinePropertiesSpec extends AnyFunSuite {
+  lazy val spark = SparkTestBase.spark
+
+  /** GoldenPipelineSpec's canonical record forms (canon / sparkCanon). */
+  private val golden = new GoldenPipelineSpec
+
+  private def check(p: Prop, trials: Int): Unit = {
+    val res = Test.check(Test.Parameters.default
+      .withInitialSeed(20261019L).withMinSuccessfulTests(trials)
+      .withWorkers(1), p)
+    assert(res.passed, Pretty.pretty(res))
+  }
+
+  // ---- (a) Spark records == ScalarEvaluator.process ----
+
+  /** (PagesGen seed, distinct page indices, `records` partitions). */
+  private val pageSets: Gen[(Long, Seq[Long], Int)] = for {
+    seed <- Gen.choose(0L, 1000000L)
+    n <- Gen.choose(1, 60)
+    idx <- Gen.containerOfN[Set, Long](n, Gen.choose(0L, 100000L))
+    parts <- Gen.oneOf(0, 1, 4)
+  } yield (seed, idx.toSeq.sorted, parts)
+
+  test("property: Spark records == scalar records on generated page sets, " +
+      "partitions in {0, 1, 4}") {
+    import spark.implicits._
+    check(Prop.forAllNoShrink(pageSets) { case (seed, idx, parts) =>
+      val pages = idx.map(PagesGen.pageFor(_, seed))
+      val got = golden.sparkCanon(ExtractionPipeline.records(
+        spark.createDataset(pages), RuleSets.plugin, parts))
+      val want = pages.flatMap(ScalarEvaluator.process(_, RuleSets.plugin))
+        .map(golden.canon).sorted
+      Prop(got == want) :| s"seed=$seed pages=${idx.size} partitions=$parts"
+    }, trials = 10)
+  }
+
+  // ---- (b) segmentation of Positions pages ----
+
+  private def rowText(cells: Seq[String]): String = cells.mkString(" ").trim
+
+  /** C9: Positions drops blank rows and "total" rows. */
+  private def kept(cells: Seq[String]): Boolean = {
+    val t = rowText(cells)
+    t.nonEmpty && !TextOps.lower(t).startsWith("total")
+  }
+
+  /** G1: a main row's first cell starts with an ASCII digit or a
+    * currency code and is not a DD.MM.YYYY date.
+    */
+  private def isMain(cells: Seq[String]): Boolean = {
+    val f = cells.headOption.getOrElse("").trim
+    f.nonEmpty && ((f.head >= '0' && f.head <= '9') ||
+      TextOps.startsWithCurrency(f)) && !TextOps.startsWithDate(f)
+  }
+
+  private val firstCells: Gen[String] = Gen.oneOf(
+    Gen.choose(1, 5000).map(q => s"$q Nestle SA"),         // main
+    Gen.oneOf(TextOps.Currencies).map(c => s"$c 0.00 Cash"), // main
+    Gen.oneOf(TextOps.Currencies),                          // main
+    Gen.const("ISIN CH0012345678"),                         // continuation
+    Gen.const("12.03.2024 coupon"),                         // date: continuation
+    Gen.const("Account 123-456789.01"),                     // continuation
+    Gen.oneOf("Total", "TOTAL assets", ""))                 // dropped or blank
+
+  private val rows: Gen[Seq[String]] = for {
+    first <- firstCells
+    n <- Gen.choose(0, 4)
+    rest <- Gen.listOfN(n, Gen.oneOf("", "USD", "101.25", "1'250.00",
+      "ISIN US0000000001", "note"))
+  } yield first +: rest
+
+  /** One pipe table: a label header, a data-like header (G3 repair) or
+    * none, then 0-12 rows.
+    */
+  private val tables: Gen[String] = for {
+    header <- Gen.oneOf(Some("Description"), Some("250 Roche Holding"),
+      Some("CHF"), None)
+    body <- Gen.choose(0, 12).flatMap(Gen.listOfN(_, rows))
+  } yield {
+    def line(cells: Seq[String]) = cells.mkString("| ", " | ", " |")
+    (header.toSeq.flatMap(h => Seq(line(Seq(h, "Ccy")), "|---|---|")) ++
+      body.map(line)).mkString("\n")
+  }
+
+  /** Markdown pages of 0-3 tables, plus the page_md of PagesGen's
+    * Positions-classified pages (HTML and PDF).
+    */
+  private val positionsMds: Gen[String] = Gen.frequency(
+    3 -> Gen.choose(0, 3).flatMap(Gen.listOfN(_, tables))
+      .map(ts => ("# Statement of assets" +: ts).mkString("\n\ntext\n")),
+    1 -> Gen.choose(0L, 100000L).map { i =>
+      ContentExtractor.extract(PagesGen.pageFor(i, i % 7).html).page_md
+    }.suchThat(md =>
+      ScalarRules.effectivePageType(md, RuleSets.plugin) == "Positions"))
+
+  test("property: segmentsOf on Positions pages returns one segment per " +
+      "main row") {
+    check(Prop.forAllNoShrink(positionsMds) { md =>
+      val want = ScalarEvaluator.enumerateRows("Positions", md)
+        .filter(r => kept(r) && isMain(r))
+      val got = ScalarEvaluator.segmentsOf("Positions", md)
+      Prop(got.map(_.cells) == want) :| s"page_md:\n$md"
+    }, trials = 300)
+  }
+
+  test("property: every kept Positions row after the first main row lands " +
+      "in exactly one segment") {
+    check(Prop.forAllNoShrink(positionsMds) { md =>
+      val keptRows = ScalarEvaluator.enumerateRows("Positions", md)
+        .filter(kept)
+      val stitched = keptRows.dropWhile(!isMain(_))
+      val segs = ScalarEvaluator.segmentsOf("Positions", md)
+      // the count, and the same rows in order: segment texts joined are
+      // the joined row texts from the first main row on
+      (Prop(segs.map(_.nRows).sum == stitched.length) &&
+        Prop(segs.map(_.text).mkString(" ") ==
+          stitched.map(rowText).mkString(" "))) :| s"page_md:\n$md"
+    }, trials = 300)
+  }
+}
