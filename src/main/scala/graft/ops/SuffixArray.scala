@@ -78,18 +78,23 @@ object SuffixArray {
     // initial rank (distinct, range sampling, join-back) — four corpus
     // text passes before the first round. The checkpoint is the same
     // magnitude as each round table (thin rows + token strings) and is
-    // released as soon as the h=1 ranks are materialized.
-    val pos = positions(df, idCol, textCol).localCheckpoint()
-    val agg0 = pos.agg(max(col("dl")), count(lit(1))).collect()(0)
-    // empty / all-empty-text corpus: max(dl) is null — one vacuous
-    // round over the empty position table, empty results downstream
-    val maxLen = if (agg0.isNullAt(0)) 0L else agg0.getLong(0)
-    val n = agg0.getLong(1)
-    var r = denseRank(pos, Seq("tok"), "rank", shards)
-      .select(col("id"), col("pos"), col("dl"), col("rank"))
-      .localCheckpoint()
-    // token strings are no longer needed once the h=1 ranks exist
-    Checkpoints.release(pos)
+    // released as soon as the h=1 ranks are materialized. `pos` lives
+    // only inside this block, so no line after its release can read the
+    // released table (its lineage is truncated: a later read would fail,
+    // not recompute).
+    val (maxLen, n, ranks1) = {
+      val pos = positions(df, idCol, textCol).localCheckpoint()
+      val agg0 = pos.agg(max(col("dl")), count(lit(1))).collect()(0)
+      val ranks = denseRank(pos, Seq("tok"), "rank", shards)
+        .select(col("id"), col("pos"), col("dl"), col("rank"))
+        .localCheckpoint()
+      // token strings are no longer needed once the h=1 ranks exist
+      Checkpoints.release(pos)
+      // empty / all-empty-text corpus: max(dl) is null — one vacuous
+      // round over the empty position table, empty results downstream
+      (if (agg0.isNullAt(0)) 0L else agg0.getLong(0), agg0.getLong(1), ranks)
+    }
+    var r = ranks1
     var tables = Seq(1L -> r)
     var h = 1L
     // Composite fast path: when the incoming ranks are DENSE (≤ n)
