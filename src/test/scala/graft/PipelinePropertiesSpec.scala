@@ -2,17 +2,21 @@ package graft
 
 import graft.extract.ContentExtractor
 import graft.gen.PagesGen
+import graft.io.TableIO
 import graft.pipeline.{ExtractionPipeline, ScalarEvaluator}
 import graft.rules.{RuleSets, ScalarRules}
 import graft.textops.TextOps
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
+import scala.util.Try
 
 /** Fixed-seed scalacheck properties of the extraction pipeline over
   * generated inputs: the Spark records equal the scalar evaluator's at
-  * any partitioning, and the segmentation kernel folds every kept
-  * Positions row into exactly one segment.
+  * any partitioning, the segmentation kernel folds every kept Positions
+  * row into exactly one segment, and a resumable run killed part way
+  * and resumed equals an uninterrupted one.
   */
 class PipelinePropertiesSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -132,5 +136,56 @@ class PipelinePropertiesSpec extends AnyFunSuite {
         Prop(segs.map(_.text).mkString(" ") ==
           stitched.map(rowText).mkString(" "))) :| s"page_md:\n$md"
     }, trials = 300)
+  }
+
+  // ---- (c) runResumable: kill, resume == uninterrupted ----
+
+  /** A run's output in comparable form: the committed records in
+    * GoldenPipelineSpec's canon form, each bucket's lineage
+    * `(inputRows, outputRows, contentHash)` and the event log without
+    * its `ts`. A run that committed no records reads as empty frames.
+    */
+  private def snapshot(out: String) = {
+    val recs = TableIO.readCommitted(spark, out)
+    val ev = TableIO.readEvents(spark, out)
+    (if (recs.columns.isEmpty) Nil else golden.sparkCanon(recs),
+      TableIO.readLineage(out).map { case (b, l) =>
+        b -> (l.inputRows, l.outputRows, l.contentHash)
+      },
+      if (ev.columns.isEmpty) Nil
+      else ev.drop("ts").collect().map(_.toString).toSeq.sorted)
+  }
+
+  /** (page set, buckets, waveSize, failAfter). The kill lands before
+    * the first wave that starts with at least `failAfter` buckets
+    * committed, so `failAfter` stays at or below the last wave's start;
+    * it is 0 (nothing committed) only when there is one wave.
+    */
+  private val resumeRuns: Gen[(Long, Seq[Long], Int, Int, Int)] = for {
+    (seed, idx, _) <- pageSets
+    buckets <- Gen.choose(1, 8)
+    wave <- Gen.choose(1, 4)
+    lastStart = (buckets - 1) / wave * wave
+    failAfter <- Gen.choose(math.min(1, lastStart), lastStart)
+  } yield (seed, idx, buckets, wave, failAfter)
+
+  test("property: runResumable killed after a random bucket count, then " +
+      "resumed == an uninterrupted run") {
+    import spark.implicits._
+    check(Prop.forAllNoShrink(resumeRuns) {
+      case (seed, idx, buckets, wave, failAfter) =>
+        val pages = spark.createDataset(idx.map(PagesGen.pageFor(_, seed)))
+        val clean = Files.createTempDirectory("graft_prop_clean").toString
+        val killed = Files.createTempDirectory("graft_prop_kill").toString
+        TableIO.runResumable(pages, clean, buckets, wave)
+        val died = Try(TableIO.runResumable(pages, killed, buckets, wave,
+          failAfter = failAfter)).isFailure
+        val before = TableIO.readLineage(killed).size
+        val resumed = TableIO.runResumable(pages, killed, buckets, wave)
+        (Prop(died) && Prop(before + resumed == buckets) &&
+          Prop(snapshot(killed) == snapshot(clean))) :|
+          s"seed=$seed pages=${idx.size} buckets=$buckets wave=$wave " +
+          s"failAfter=$failAfter died=$died committed=$before"
+    }, trials = 4)
   }
 }
