@@ -3,6 +3,7 @@ package graft
 import graft.extract.ContentExtractor
 import graft.gen.PagesGen
 import graft.io.TableIO
+import graft.model.Span
 import graft.pipeline.{ExtractionPipeline, ScalarEvaluator}
 import graft.rules.{RuleSets, ScalarRules}
 import graft.textops.TextOps
@@ -13,10 +14,10 @@ import java.nio.file.Files
 import scala.util.Try
 
 /** Fixed-seed scalacheck properties of the extraction pipeline over
-  * generated inputs: the Spark records equal the scalar evaluator's at
-  * any partitioning, the segmentation kernel folds every kept Positions
-  * row into exactly one segment, and a resumable run killed part way
-  * and resumed equals an uninterrupted one.
+  * generated inputs: the Spark records and main texts equal their
+  * scalar twins' at any partitioning, the segmentation kernel folds
+  * every kept Positions row into exactly one segment, and a resumable
+  * run killed part way and resumed equals an uninterrupted one.
   */
 class PipelinePropertiesSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -31,7 +32,7 @@ class PipelinePropertiesSpec extends AnyFunSuite {
     assert(res.passed, Pretty.pretty(res))
   }
 
-  // ---- (a) Spark records == ScalarEvaluator.process ----
+  // ---- (a) Spark records and main texts == their scalar twins ----
 
   /** (PagesGen seed, distinct page indices, `records` partitions). */
   private val pageSets: Gen[(Long, Seq[Long], Int)] = for {
@@ -50,6 +51,22 @@ class PipelinePropertiesSpec extends AnyFunSuite {
         spark.createDataset(pages), RuleSets.plugin, parts))
       val want = pages.flatMap(ScalarEvaluator.process(_, RuleSets.plugin))
         .map(golden.canon).sorted
+      Prop(got == want) :| s"seed=$seed pages=${idx.size} partitions=$parts"
+    }, trials = 10)
+  }
+
+  test("property: Spark mainTexts == ContentExtractor.extract on every " +
+      "page, partitions in {0, 1, 4}") {
+    import spark.implicits._
+    check(Prop.forAllNoShrink(pageSets) { case (seed, idx, parts) =>
+      val pages = idx.map(PagesGen.pageFor(_, seed))
+      val got = ExtractionPipeline.mainTexts(spark.createDataset(pages), parts)
+        .as[(String, String, Seq[Span], String, Int, String)]
+        .collect().toSeq.sortBy(_._1)
+      val want = pages.map { p =>
+        val c = ContentExtractor.extract(p.html, needMain = true)
+        (p.url, c.main_text, c.spans, c.content_kind, c.n_blocks, c.error)
+      }.sortBy(_._1)
       Prop(got == want) :| s"seed=$seed pages=${idx.size} partitions=$parts"
     }, trials = 10)
   }
