@@ -15,14 +15,15 @@ import org.apache.spark.sql.Dataset
   *     --output <dir> [--buckets 64] [--wave 8] [--variant plugin|soa]
   *
   * Reads the pages table (url, warc_ts, html, text, lang), runs the
-  * resumable extraction (url-hash bucketed, per-bucket lineage), writes
-  * records partitioned by bucket + a `_metrics` events table. A killed
-  * run re-invoked with the same output dir resumes from the lineage log.
+  * resumable extraction (url-hash bucketed, per-bucket lineage) and
+  * writes records partitioned by bucket. A killed run re-invoked with
+  * the same output dir resumes from the lineage log. The record-event
+  * log is a view over the committed records (`TableIO.readEvents`).
   *
   * Prints one summary line: buckets committed by this run, committed
   * records (the lineage `outputRows` sum, which equals the committed
-  * files' row count), committed events, and the extraction's wall
-  * seconds.
+  * files' row count), committed record events, and the extraction's
+  * wall seconds.
   */
 object GraftApp {
   def main(args: Array[String]): Unit = {
@@ -48,13 +49,10 @@ object GraftApp {
     val done = TableIO.runResumable(pages, output, buckets, wave, rs)
     val sec = (System.nanoTime() - t0) / 1e9
 
-    // record-stage events land in $output/_metrics inside runResumable
-    // (per wave, bucket-partitioned, resume-idempotent — a resumed run
-    // rebuilds exactly the killed run's missing partitions instead of
-    // appending duplicates). Page-stage events re-run content extraction
-    // just for the log (inside the scan's tasks, like a wave: no raw-page
-    // shuffle), so they are opt-in (--page-events true) and go to a
-    // separate table to keep _metrics overwrite-idempotent.
+    // record-stage events need no write: TableIO.readEvents derives
+    // them from the committed records. Page-stage events re-run content
+    // extraction just for the log (inside the scan's tasks, like a wave:
+    // no raw-page shuffle), so they are opt-in (--page-events true).
     if (opts.get("page-events").contains("true"))
       ExtractionPipeline.classifyPages(
         ExtractionPipeline.pageTexts(pages, partitions = 0), rs)
@@ -63,8 +61,7 @@ object GraftApp {
 
     val n = TableIO.readLineage(output).values
       .filter(_.status == "COMMITTED").map(_.outputRows).sum
-    val ev = TableIO.readEvents(spark, output)
-    val nEv = if (ev.isEmpty) 0L else ev.count()
+    val nEv = TableIO.readEvents(spark, output).count()
     println(f"""{"buckets_done":$done,"records":$n,"events":$nEv,"sec":$sec%.2f}""")
     spark.stop()
   }

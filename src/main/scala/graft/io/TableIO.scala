@@ -19,8 +19,9 @@ import scala.util.{Try, Using}
   * Layout:
   *   out/data/bucket=[id]/ parquet files (overwritten per attempt)
   *   out/_lineage/bucket-[id].json       (CommitLog record)
-  *   out/_metrics/bucket=[id]/           (record events, overwritten
-  *                                        per attempt like the data)
+  *
+  * The record-event log is not stored: [[readEvents]] derives it from
+  * the committed records.
   */
 object TableIO {
 
@@ -73,9 +74,8 @@ object TableIO {
     * prunes to just the wave's partitions; here it predicate-filters the
     * scan.
     *
-    * A wave is two Spark jobs: the data write and the event write.
-    * Pages are extracted and segmented inside the scan's own tasks, so
-    * the data write has no shuffle at all.
+    * A wave is one Spark job: the data write. Pages are extracted and
+    * segmented inside the scan's own tasks, so it has no shuffle at all.
     *
     * Commit protocol per wave: delete stale (uncommitted) wave bucket
     * dirs, write all wave buckets in one job (each bucket an idempotent
@@ -117,13 +117,10 @@ object TableIO {
       if (failAfter >= 0 && done >= failAfter)
         throw new RuntimeException(s"injected failure after $done buckets")
       val t0 = System.currentTimeMillis()
-      // stale dirs from a failed attempt carry no lineage; removing them
-      // makes the post-write listing exactly this attempt's output even
-      // when the retry produces zero rows for a previously-written bucket
-      wave.foreach { b =>
-        deleteRecursively(Paths.get(s"$out/data/bucket=$b"))
-        deleteRecursively(Paths.get(s"$out/_metrics/bucket=$b"))
-      }
+      // stale dirs from a failed attempt carry no lineage; dynamic
+      // overwrite replaces only the buckets this attempt writes rows to,
+      // so a bucket the retry leaves empty would read back stale rows
+      wave.foreach(b => deleteRecursively(Paths.get(s"$out/data/bucket=$b")))
       val nb = buckets
       val accs = wave.map(b =>
         b -> spark.sparkContext.longAccumulator(s"graft_in_$b")).toMap
@@ -150,24 +147,6 @@ object TableIO {
         .partitionBy("bucket")
         .parquet(s"$out/data")
       val observed = stats.get
-      val written = wave.filter(b =>
-        Files.exists(Paths.get(s"$out/data/bucket=$b")))
-      // S10 event-log sink, resume-idempotent: record-stage events are
-      // derived from the wave's FRESHLY-WRITTEN records (no second
-      // extraction pass; read with the records' known schema, so no
-      // footer-inference job) and land bucket-partitioned under _metrics
-      // with the same dynamic-overwrite semantics as the data — a resumed
-      // run reproduces exactly the killed run's missing event
-      // partitions, never appends duplicates
-      if (written.nonEmpty)
-        ExtractionPipeline.recordEvents(
-          spark.read.schema(recs.schema).option("basePath", s"$out/data")
-            .parquet(written.map(b => s"$out/data/bucket=$b"): _*))
-          .withColumn("bucket", bucketOf)
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket")
-          .parquet(s"$out/_metrics")
       wave.foreach { b =>
         val n = observed(s"n$b").asInstanceOf[Long]
         val h = Option(observed(s"h$b")).fold(0L)(_.asInstanceOf[Long])
@@ -185,20 +164,32 @@ object TableIO {
     * error.
     */
   def readCommitted(spark: SparkSession, out: String): DataFrame =
-    readPartitioned(spark, s"$out/data", committedBuckets(out))
+    readData(spark, out, committed(out).map(_.bucket))
 
-  /** Read the committed event log (record-stage events written per wave
-    * by runResumable). Same committed-bucket pruning as readCommitted.
+  /** The committed record-event log (S10): [[ExtractionPipeline.recordEvents]]
+    * over [[readCommitted]], with each record's `bucket`. An event's `ts`
+    * is its bucket's commit time (lineage `finishedMs`), so the log reads
+    * the same every time and a resumed bucket's events carry the
+    * resume's commit time.
     */
-  def readEvents(spark: SparkSession, out: String): DataFrame =
-    readPartitioned(spark, s"$out/_metrics", committedBuckets(out))
+  def readEvents(spark: SparkSession, out: String): DataFrame = {
+    val lineage = committed(out)
+    val recs = readData(spark, out, lineage.map(_.bucket))
+    if (recs.columns.isEmpty) recs
+    else {
+      val commitMs = typedLit(lineage.map(l => l.bucket -> l.finishedMs).toMap)
+      ExtractionPipeline.recordEvents(recs,
+        timestamp_millis(element_at(commitMs, col("bucket"))), "bucket")
+    }
+  }
 
-  private def committedBuckets(out: String): Seq[Int] =
-    readLineage(out).values
-      .filter(_.status == "COMMITTED").map(_.bucket).toSeq.sorted
+  private def committed(out: String): Seq[Lineage] =
+    readLineage(out).values.filter(_.status == "COMMITTED")
+      .toSeq.sortBy(_.bucket)
 
-  private def readPartitioned(spark: SparkSession, base: String,
+  private def readData(spark: SparkSession, out: String,
       buckets: Seq[Int]): DataFrame = {
+    val base = s"$out/data"
     val paths = buckets.map(b => s"$base/bucket=$b")
       .filter(p => Files.exists(Paths.get(p)))
     if (paths.isEmpty) spark.emptyDataFrame

@@ -475,8 +475,12 @@ object ExtractionPipeline {
     * page) and one validate event per validation error. record_id is a
     * stable content hash, so the log is deterministic and joinable back
     * to the output.
+    *
+    * @param ts   the event time, evaluated per record
+    * @param keep record columns appended unchanged to each of the
+    *             record's events (e.g. the table's partition column)
     */
-  def recordEvents(records: DataFrame): DataFrame = {
+  def recordEvents(records: DataFrame, ts: Column, keep: String*): DataFrame = {
     // one scan: each record explodes into its route event followed by
     // one event per validation error (a null error list still yields
     // the route event)
@@ -489,11 +493,13 @@ object ExtractionPipeline {
       coalesce(col("validation_errors"), array().cast("array<string>")),
       v => struct(lit("WARN").as("level"), v.as("code"),
         lit("validate").as("stage")))
+    val kept = keep.map(col)
     records
-      .select(col("url"), col("row_text"), col("routed_section"),
-        col("txn_type"), explode(concat(array(route), vals)).as("ev"))
-      .select(
-        current_timestamp().as("ts"),
+      .select(Seq(ts.as("ts"), col("url"), col("row_text"),
+        col("routed_section"), col("txn_type"),
+        explode(concat(array(route), vals)).as("ev")) ++ kept: _*)
+      .select(Seq(
+        col("ts"),
         col("ev.level").as("level"),
         col("ev.code").as("code"),
         col("ev.stage").as("stage"),
@@ -504,7 +510,7 @@ object ExtractionPipeline {
         col("routed_section").as("group"),
         col("txn_type"),
         lit("").as("message"),
-        ErrorCodes.refCodeCol(col("ev.code")).as("ref_code"))
+        ErrorCodes.refCodeCol(col("ev.code")).as("ref_code")) ++ kept: _*)
   }
 
   /** The full event stream — page-stage (extract) + record-stage
@@ -520,21 +526,17 @@ object ExtractionPipeline {
     val classified = classified0.localCheckpoint()
     val segs = segments(classified).localCheckpoint()
     events(classified)
-      .unionByName(recordEvents(recordsFromSegments(segs, rs)))
+      .unionByName(recordEvents(recordsFromSegments(segs, rs),
+        current_timestamp()))
       .unionByName(stitchEventsFromSegments(segs))
   }
 
-  /** Stitch-stage events (reference REC_STITCH, error_system.py:19-43):
+  /** Stitch-stage events (reference REC_STITCH, error_system.py:19-43)
+    * over a segment frame (see [[recordsFromSegments]] / [[eventLog]]):
     * one event per segment folded from >1 table row (a main row plus
     * continuation rows). record_id matches recordEvents' content hash
     * (the record's row_text IS the stitched text), so stitch events are
     * joinable to route/validate events and to the output records.
-    */
-  def stitchEvents(classified: DataFrame): DataFrame =
-    stitchEventsFromSegments(segments(classified))
-
-  /** stitchEvents over an already-computed segment frame (see
-    * [[recordsFromSegments]] / [[eventLog]]).
     */
   def stitchEventsFromSegments(segs: DataFrame): DataFrame =
     segs

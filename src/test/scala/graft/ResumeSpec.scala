@@ -2,6 +2,7 @@ package graft
 
 import graft.gen.PagesGen
 import graft.io.TableIO
+import graft.SparkTestBase.jobsOf
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -48,9 +49,8 @@ class ResumeSpec extends AnyFunSuite {
         .collect().map(_.toString).toSeq.sorted
     assert(canon(resumeDir) === canon(cleanDir))
 
-    // the _metrics event log is also identical (modulo wall-clock ts):
-    // a resumed run rebuilds exactly the killed run's missing event
-    // partitions — no duplicates from re-appending committed buckets
+    // the event log is also identical (modulo commit-time ts): a
+    // resumed run adds exactly the killed run's missing buckets
     def canonEvents(dir: String): Seq[String] =
       TableIO.readEvents(spark, dir)
         .select("level", "code", "stage", "url", "record_id", "group",
@@ -63,6 +63,18 @@ class ResumeSpec extends AnyFunSuite {
     assert(TableIO.readEvents(spark, resumeDir)
       .filter(org.apache.spark.sql.functions.col("stage") === "record_route")
       .count() === TableIO.readCommitted(spark, resumeDir).count())
+
+    // an event's ts is its bucket's commit time, the one from the run
+    // that committed the bucket, so two reads of the log are identical
+    val events = TableIO.readEvents(spark, resumeDir)
+    val finished = events.select("bucket", "ts").distinct().collect()
+      .map(r => r.getInt(0) -> r.getTimestamp(1).getTime).toMap
+    assert(finished === lineage.collect {
+      case (b, l) if l.outputRows > 0 => b -> l.finishedMs
+    })
+    assert(events.collect().toSeq.map(_.toString).sorted ===
+      TableIO.readEvents(spark, resumeDir).collect().toSeq.map(_.toString)
+        .sorted)
 
     // re-running a complete output is a no-op
     assert(TableIO.runResumable(pages, resumeDir, buckets = 8) === 0)
@@ -99,7 +111,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(lineage.values.map(_.outputRows).sum > 0L)
   }
 
-  test("one runResumable wave starts at most two Spark jobs") {
+  test("one runResumable wave starts one Spark job and writes no _metrics") {
     import spark.implicits._
     val in = Files.createTempDirectory("graft_wave_in").toString
     spark.createDataset((0L until 200L).map(PagesGen.pageFor(_, 11)))
@@ -107,23 +119,14 @@ class ResumeSpec extends AnyFunSuite {
     // the input's schema is read here, before the count starts
     val pages = spark.read.parquet(in).as[graft.model.Page]
     val out = Files.createTempDirectory("graft_wave_out").toString
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestBus.drain(sc)
-    sc.addSparkListener(counter)
-    try {
-      // one wave: the data write and the event write (pages are
-      // extracted and segmented inside the scan's own tasks)
+    // one wave is its data write: pages are extracted and segmented
+    // inside the scan's own tasks, and the event log is read as a view
+    val jobs = jobsOf {
       assert(TableIO.runResumable(pages, out, buckets = 4, waveSize = 4) === 4)
-      org.apache.spark.TestBus.drain(sc)
-    } finally sc.removeSparkListener(counter)
-    assert(jobs.get() <= 2, s"${jobs.get()} jobs in one wave")
+    }
+    assert(jobs <= 1, s"$jobs jobs in one wave")
     assert(TableIO.readLineage(out).values.map(_.outputRows).sum > 0L)
+    assert(!Files.exists(java.nio.file.Paths.get(out, "_metrics")))
   }
 
   test("scala bucketFor == pmod(xxhash64(url), n) Column") {
@@ -228,24 +231,6 @@ class ResumeSpec extends AnyFunSuite {
       assert(graft.io.StagedJob.committed(dir, s), s)
       assert(graft.io.StagedJob.readRows(dir, s).contains(0L), s)
     }
-  }
-
-  /** Spark jobs `body` starts, counted after a listener-bus barrier. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestBus.drain(sc)
-    sc.addSparkListener(counter)
-    try {
-      body
-      org.apache.spark.TestBus.drain(sc)
-    } finally sc.removeSparkListener(counter)
-    jobs.get()
   }
 
   test("commit records: lineage file and stage marker bytes are pinned") {
