@@ -134,9 +134,14 @@ object Dedup {
     * straggler materializing gigabytes before dropping them). Instead,
     * pass 1 is a map-side-combinable groupBy whose output is only the
     * over-cap bucket set — small by construction (hot buckets are the
-    * rare tail); pass 2 removes their members with a broadcast
-    * anti-join. Callers fence `banded` (localCheckpoint) so both
-    * passes share one signature computation.
+    * rare tail); pass 2 removes their members with a left anti-join.
+    * No broadcast is forced (the set's worst case, totalRows/maxBucket
+    * rows, could pass the 8 GB broadcast cap and fail the job): the plan
+    * assumes AQE (`spark.sql.adaptive.enabled`, the default) sees the
+    * set's runtime size and broadcasts the usual few rows. With AQE off
+    * it is a sort-merge anti-join that shuffles the banded signatures.
+    * Callers fence `banded` (localCheckpoint) so both passes share one
+    * signature computation.
     */
   private[graft] def capBuckets(banded: DataFrame,
       maxBucket: Int): DataFrame =
@@ -146,12 +151,6 @@ object Dedup {
         .agg(count(lit(1)).as("_bsz"))
         .filter(col("_bsz") > maxBucket)
         .select(col("band"), col("bucket"))
-      // no forced broadcast: the over-cap set is small in every sane
-      // corpus, but its worst case is totalRows/maxBucket rows, and a
-      // forced broadcast past the 8 GB relation cap fails the job
-      // where a shuffle anti-join would merely be slower — let AQE
-      // pick the strategy from the aggregate's actual runtime size
-      // (it broadcasts the usual few-row set anyway)
       banded.join(over, Seq("band", "bucket"), "left_anti")
     }
 

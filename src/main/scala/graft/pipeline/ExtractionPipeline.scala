@@ -54,8 +54,8 @@ object ExtractionPipeline {
     // X4: explicit url-hash partitioning for balanced extraction work.
     // partitions <= 0 skips the shuffle and extracts inside the scan's
     // own tasks, so parallelism comes from the scan splits
-    // (GraftSession.ScanSplits). TableIO.runResumable's waves do this:
-    // shuffling raw page bytes only pays for skewed inputs.
+    // (GraftSession.ScanSplits). TableIO's waves (buckets and stream
+    // micro-batches) do this: shuffling raw pages pays only for skew.
     val balanced =
       if (partitions > 0) pages.repartition(partitions, col("url"))
       else pages

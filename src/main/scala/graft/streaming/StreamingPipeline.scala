@@ -1,9 +1,9 @@
 package graft.streaming
 
+import graft.io.TableIO
 import graft.model.Page
-import graft.pipeline.ExtractionPipeline
 import graft.rules.{RuleSet, RuleSets}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
@@ -17,26 +17,25 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
   */
 object StreamingPipeline {
 
-  /** Incremental extraction: each micro-batch runs the SAME batch
-    * pipeline (one semantics, two execution modes) and appends to the
-    * output path partitioned by target_section.
+  /** Incremental extraction: each micro-batch is one TableIO commit
+    * unit, `bucket=<batchId>` with its `_lineage` record, written by the
+    * SAME extraction wave as `runResumable` (one semantics, two callers).
+    * A replayed batch (sink write done, `commits/N` not) whose unit is
+    * COMMITTED is skipped, reading only that unit's record: exactly-once.
+    * `partitions` means what it does in `ExtractionPipeline.records`.
     */
   def extractStream(pages: DataFrame, outPath: String,
       checkpoint: String, rs: RuleSet = RuleSets.plugin,
-      partitions: Int = 8): DataStreamWriter[org.apache.spark.sql.Row] = {
+      partitions: Int = 0): DataStreamWriter[org.apache.spark.sql.Row] =
     pages.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val recs = ExtractionPipeline.records(batch.as[Page], rs, partitions)
-          .withColumn("_batch_id", lit(batchId))
-        recs.write.mode("append")
-          .partitionBy("target_section")
-          .parquet(outPath)
+        val unit = Math.toIntExact(batchId)
+        if (!TableIO.isCommitted(outPath, unit))
+          TableIO.commitWave(batch.as(Encoders.product[Page]), outPath,
+            Seq(unit), lit(unit), _ => unit, rs, partitions)
       }
-  }
 
   /** WARC-wave ingest chain: charset sniff + decode → page metadata →
     * admission verdict (noindex'd pages, soft-error shells and

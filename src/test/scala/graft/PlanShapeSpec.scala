@@ -2,10 +2,13 @@ package graft
 
 import graft.ops.{Curation, Retrieval}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression tests for the SCALE-CRITICAL plan properties the
@@ -189,6 +192,40 @@ class PlanShapeSpec extends AnyFunSuite {
       val exchanges = plan.collect { case e: Exchange => e.nodeName }
       assert(exchanges.isEmpty, s"exchanges in the records plan: $exchanges")
     }
+  }
+
+  test("extraction stream: a micro-batch's write plan has no Exchange " +
+      "at the default partitions") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.exists(_.isInstanceOf[DataWritingCommandExec]))
+          writes.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft_ps_stream")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ps_ckpt")
+    withPlainPlan {
+      // the query's session is cloned at start, with this listener
+      spark.listenerManager.register(listener)
+      try {
+        val stream = MemoryStream[graft.model.Page]
+        val q = graft.streaming.StreamingPipeline
+          .extractStream(stream.toDF(), out.toString, ckpt.toString).start()
+        try {
+          stream.addData((0L until 30L).map(graft.gen.PagesGen.pageFor(_, 42)))
+          q.processAllAvailable()
+        } finally q.stop()
+        org.apache.spark.TestBus.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val plans = writes.toArray(Array.empty[SparkPlan]).toSeq
+    assert(plans.size === 1, s"one write per micro-batch: $plans")
+    val exchanges = plans.head.collect { case e: Exchange => e.nodeName }
+    assert(exchanges.isEmpty, s"exchanges in the stream's write plan: $exchanges")
   }
 
   test("extraction pipeline: no filter re-derives the page header from page_md") {

@@ -1,13 +1,19 @@
 package graft
 
 import graft.gen.PagesGen
+import graft.io.TableIO
+import graft.model.Page
+import graft.pipeline.ExtractionPipeline
 import graft.streaming.StreamingPipeline
 import graft.streaming.StreamingPipeline.Ev
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, encode, md5}
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -38,6 +44,76 @@ class StreamingSpec extends AnyFunSuite {
       .map(_.toString).sorted
     assert(streamed.length === batch.length)
     assert(streamed.toSeq === batch.toSeq)
+  }
+
+  test("foreachBatch extraction is exactly-once: a replayed batch is " +
+      "skipped, a batch without its commit record is redone") {
+    import spark.implicits._
+    val pages = (0L until 60L).map(PagesGen.pageFor(_, 7))
+    val watch = Files.createTempDirectory("graft_xo_watch")
+    val out = Files.createTempDirectory("graft_xo_out").toString
+    val ckpt = Files.createTempDirectory("graft_xo_ckpt")
+    val stage = Files.createTempDirectory("graft_xo_stage")
+    // three parquet files, oldest first: one micro-batch each
+    pages.grouped(20).zipWithIndex.foreach { case (slice, i) =>
+      val staged = stage.resolve(s"s$i").toString
+      spark.createDataset(slice).coalesce(1).write.parquet(staged)
+      val part = Files.list(Paths.get(staged)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val f = Files.move(part, watch.resolve(s"p$i.parquet"))
+      Files.setLastModifiedTime(f, FileTime.fromMillis(1000000L * (i + 1)))
+    }
+    val src = spark.readStream.schema(Encoders.product[Page].schema)
+      .option("maxFilesPerTrigger", 1).parquet(watch.toString)
+    def run(): Unit = {
+      val q = StreamingPipeline.extractStream(src, out, ckpt.toString).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    def canon(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def lineage = TableIO.readLineage(out)
+    def stats = lineage.map { case (b, l) =>
+      b -> (l.inputRows, l.outputRows, l.contentHash) }
+    def eventTsMatchLineage(): Unit = {
+      val ts = TableIO.readEvents(spark, out).select("bucket", "ts")
+        .distinct().collect()
+        .map(r => r.getInt(0) -> r.getTimestamp(1).getTime).toMap
+      assert(ts === lineage.collect {
+        case (b, l) if l.outputRows > 0 => b -> l.finishedMs })
+    }
+
+    run()
+    val want = canon(TableIO.readCommitted(spark, out))
+    val first = lineage
+    val wantStats = stats
+    val batchRows = ExtractionPipeline.records(spark.createDataset(pages))
+      .count()
+    assert(wantStats.keySet === Set(0, 1, 2))
+    assert(wantStats.values.map(_._1).sum === 60L)
+    assert(want.size.toLong === batchRows && batchRows > 0)
+    eventTsMatchLineage()
+
+    def crash(dropRecord: Boolean): Unit = {
+      val commit = ckpt.resolve("commits").resolve("2")
+      Files.delete(commit)
+      Files.deleteIfExists(ckpt.resolve("commits").resolve(".2.crc"))
+      if (dropRecord)
+        Files.delete(Paths.get(out, "_lineage", "bucket-2.json"))
+      val before = lineage
+      run()
+      // the restart re-ran batch 2: its offsets commit is back
+      assert(Files.exists(commit))
+      assert(canon(TableIO.readCommitted(spark, out)) === want)
+      assert(spark.read.parquet(out).count() === batchRows)
+      assert(stats === wantStats)
+      if (!dropRecord) assert(lineage === before) // skipped, not redone
+      else assert(lineage(2).startedMs >= first(2).finishedMs) // redone
+      eventTsMatchLineage()
+    }
+    // (a) the sink wrote, the batch commit did not happen
+    crash(dropRecord = false)
+    // (b) the batch's commit record is gone too: the write is redone
+    crash(dropRecord = true)
   }
 
   test("C4 cleaning on a stream == batch (stateless per-row gate)") {
