@@ -4,7 +4,7 @@ import graft.extract.ContentExtractor
 import graft.model.{Page, PageText}
 import graft.rules.{RuleCompiler, RuleSet, RuleSets}
 import graft.textops.TextOps
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import scala.collection.immutable.ListMap
@@ -51,16 +51,18 @@ object ExtractionPipeline {
       needMain: Boolean = true): Dataset[PageText] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    // X4: explicit url-hash partitioning for balanced extraction work.
-    // partitions <= 0 skips the shuffle and extracts inside the scan's
-    // own tasks, so parallelism comes from the scan splits
-    // (GraftSession.ScanSplits). TableIO's waves (buckets and stream
-    // micro-batches) do this: shuffling raw pages pays only for skew.
-    val balanced =
-      if (partitions > 0) pages.repartition(partitions, col("url"))
-      else pages
-    balanced.mapPartitions(_.map(ContentExtractor.extractPage(_, needMain)))
+    balanced(pages, partitions)
+      .mapPartitions(_.map(ContentExtractor.extractPage(_, needMain)))
   }
+
+  /** X4: explicit url-hash partitioning for balanced extraction work.
+    * partitions <= 0 skips the shuffle and extracts inside the scan's
+    * own tasks, so parallelism comes from the scan splits
+    * (GraftSession.ScanSplits). TableIO's waves (buckets and stream
+    * micro-batches) do this: shuffling raw pages pays only for skew.
+    */
+  private def balanced(pages: Dataset[Page], partitions: Int): Dataset[Page] =
+    if (partitions > 0) pages.repartition(partitions, col("url")) else pages
 
   /** Stage 2: page-level classification + page-context extraction (G4:
     * computed BEFORE the row explode — broadcast-by-construction).
@@ -430,14 +432,16 @@ object ExtractionPipeline {
       "mc", "stitched", "n_rows", "_rl", "_route", "as_of_date")
   }
 
-  /** Full pipeline: pages → records. Record extraction needs only the
-    * page_md transcription, so the boilerplate-scored main_text is not
-    * assembled here (needMain=false).
+  /** Full pipeline: pages → records, in [[PageKernel.Schema]]. After
+    * the optional url-hash repartition, one typed mapPartitions runs
+    * the [[PageKernel]] on each page.
     */
   def records(pages: Dataset[Page], rs: RuleSet = RuleSets.plugin,
-      partitions: Int = 32): DataFrame =
-    recordsFromClassified(
-      classifyPages(pageTexts(pages, partitions, needMain = false), rs), rs)
+      partitions: Int = 32): DataFrame = {
+    val kernel = new PageKernel(rs)
+    balanced(pages, partitions).mapPartitions(_.flatMap(kernel.pageRecords))(
+      Encoders.row(PageKernel.Schema))
+  }
 
   /** Byte-identity artifact: url → (main_text, spans). */
   def mainTexts(pages: Dataset[Page], partitions: Int = 32): DataFrame =

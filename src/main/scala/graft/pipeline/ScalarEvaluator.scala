@@ -9,11 +9,11 @@ import scala.collection.mutable.ArrayBuffer
 /** Non-Spark reference evaluator of the full pipeline semantics —
   * the second implementation behind the golden byte-identity tests
   * (SURVEY §5.2-3). Shares the scalar kernels (ContentExtractor,
-  * TextOps, ScalarRules) and the segmentation kernel [[segmentsOf]]
-  * with the Spark path; everything the Spark path expresses as Columns
-  * (classification, routing, field extraction, validation) is
-  * re-implemented here as plain code, mirroring the reference's Python
-  * (/root/reference/pipeline/orchestrator.py:51-188).
+  * TextOps, ScalarRules), the segmentation kernel [[segmentsOf]] and
+  * the validator [[validation]] with the Spark path's [[PageKernel]].
+  * The field extraction, which the kernel compiles from the rule set's
+  * ExtractionSpec, is hand-coded here instead, mirroring the
+  * reference's Python (/root/reference/pipeline/orchestrator.py:51-188).
   */
 object ScalarEvaluator {
 
@@ -56,9 +56,8 @@ object ScalarEvaluator {
   /** Segmentation of one page: the page-type row filters (C9-C11),
     * main-row detection (G1) and continuation stitching (G2/A5), folded
     * in [[enumerateRows]] order. The ONE segmentation kernel: this
-    * evaluator and the Spark pipeline's flatMap
-    * (ExtractionPipeline.segments) both call it, so segmentation needs
-    * no cross-row Spark operator. Page types without records (Ignore,
+    * evaluator and the Spark pipeline's [[PageKernel]] both call it, so
+    * segmentation needs no cross-row Spark operator. Page types without records (Ignore,
     * Unknown) yield none (orchestrator.py:20-21).
     */
   def segmentsOf(pageType: String, pageMd: String): Seq[Segment] =
@@ -240,55 +239,73 @@ object ScalarEvaluator {
       amount_sell = sellM.map(_.group(2)).getOrElse(""))
   }
 
+  /** Stage 7 of one record: its C12 target section, ISO dates, parsed
+    * numbers (scale 6, half-up, like a decimal(38,6) cast) and
+    * validation error codes.
+    */
+  case class Validation(targetSection: String, tradeIso: String,
+      settlementIso: String, netNum: Option[BigDecimal],
+      mvNum: Option[BigDecimal], errors: Seq[String])
+
   /** Validation + normalization (N14/N15, C12 downgrade, strict ISIN,
     * and the reference's full VAL taxonomy — error_system.py:37-43:
     * VAL_DATE (impossible calendar date), VAL_CURR (currency-list
     * membership), VAL_RANGE (max 12 integer / 2 decimal digits,
     * docs/rule_2.txt number constraints), VAL_CONFLICT (settlement
-    * before trade date). Code order here is the contract the Column
-    * twin reproduces exactly.
+    * before trade date). Code order here is the contract the catalog's
+    * Column form (ExtractionPipeline.validationErrorsCol) reproduces.
+    * The one validator of the golden twin and the page kernel.
     */
-  def validate(r: ExtractedRecord): ExtractedRecord = {
+  def validation(routedSection: String, securitiesId: String,
+      netConsideration: String, marketValue: String, tradeDate: String,
+      settlementDate: String, currency: String, currencyBuy: String,
+      currencySell: String): Validation = {
     val errs = ArrayBuffer.empty[String]
-    if (r.securities_id.nonEmpty && !TextOps.isValidIsin(r.securities_id))
+    if (securitiesId.nonEmpty && !TextOps.isValidIsin(securitiesId))
       errs += "VAL_ISIN_SHAPE"
-    else if (r.securities_id.nonEmpty &&
-        !graft.functions.IsinValid.check(r.securities_id))
+    else if (securitiesId.nonEmpty &&
+        !graft.functions.IsinValid.check(securitiesId))
       errs += "VAL_ISIN_CHECKSUM" // shape OK, ISO 6166 Luhn digit wrong
-    val netNum = TextOps.normalizeNumber(r.net_consideration)
-    if (r.net_consideration.nonEmpty && netNum.isEmpty)
-      errs += "VAL_NUM_NET"
-    val mvNum = TextOps.normalizeNumber(r.market_value)
-    if (r.market_value.nonEmpty && mvNum.isEmpty) errs += "VAL_NUM_MV"
+    val netNum = TextOps.normalizeNumber(netConsideration)
+    if (netConsideration.nonEmpty && netNum.isEmpty) errs += "VAL_NUM_NET"
+    val mvNum = TextOps.normalizeNumber(marketValue)
+    if (marketValue.nonEmpty && mvNum.isEmpty) errs += "VAL_NUM_MV"
     // VAL_RANGE: parses, but violates the 12-integer/2-decimal digit cap
-    if (netNum.isDefined && !TextOps.numberInRange(r.net_consideration))
+    if (netNum.isDefined && !TextOps.numberInRange(netConsideration))
       errs += "VAL_RANGE_NET"
-    if (mvNum.isDefined && !TextOps.numberInRange(r.market_value))
+    if (mvNum.isDefined && !TextOps.numberInRange(marketValue))
       errs += "VAL_RANGE_MV"
-    val tIso = TextOps.normalizeDate(r.trade_date).getOrElse("")
-    val sIso = TextOps.normalizeDate(r.settlement_date).getOrElse("")
+    val tIso = TextOps.normalizeDate(tradeDate).getOrElse("")
+    val sIso = TextOps.normalizeDate(settlementDate).getOrElse("")
     // VAL_DATE: present but lexically unparseable OR calendar-impossible
     val tOk = TextOps.isValidCalendarDate(tIso)
     val sOk = TextOps.isValidCalendarDate(sIso)
-    if (r.trade_date.nonEmpty && !tOk) errs += "VAL_DATE_TRADE"
-    if (r.settlement_date.nonEmpty && !sOk) errs += "VAL_DATE_SETTLE"
-    if (r.currency.nonEmpty && !TextOps.Currencies.contains(r.currency))
+    if (tradeDate.nonEmpty && !tOk) errs += "VAL_DATE_TRADE"
+    if (settlementDate.nonEmpty && !sOk) errs += "VAL_DATE_SETTLE"
+    if (currency.nonEmpty && !TextOps.Currencies.contains(currency))
       errs += "VAL_CURR"
     // VAL_CONFLICT: both dates valid and settlement precedes trade
     if (tOk && sOk && sIso < tIso) errs += "VAL_CONFLICT"
     // C12 downgrade (docs/rule_2.txt:390-418)
     val section =
-      if (r.routed_section == "FXTF" &&
-          (r.currency_buy.isEmpty || r.currency_sell.isEmpty)) "Trade"
-      else if (r.routed_section == "Trade" && r.securities_id.isEmpty)
-        "Others"
-      else if (r.routed_section == "Positions" && r.market_value.isEmpty)
-        "Others"
-      else r.routed_section
-    r.copy(target_section = section,
-      trade_date_iso = tIso, settlement_date_iso = sIso,
-      net_consideration_num = netNum.map(_.setScale(6)),
-      market_value_num = mvNum.map(_.setScale(6)),
-      validation_errors = errs.toSeq)
+      if (routedSection == "FXTF" &&
+          (currencyBuy.isEmpty || currencySell.isEmpty)) "Trade"
+      else if (routedSection == "Trade" && securitiesId.isEmpty) "Others"
+      else if (routedSection == "Positions" && marketValue.isEmpty) "Others"
+      else routedSection
+    def scaled(n: Option[BigDecimal]) =
+      n.map(_.setScale(6, BigDecimal.RoundingMode.HALF_UP))
+    Validation(section, tIso, sIso, scaled(netNum), scaled(mvNum), errs.toSeq)
+  }
+
+  /** [[validation]] applied to a record. */
+  def validate(r: ExtractedRecord): ExtractedRecord = {
+    val v = validation(r.routed_section, r.securities_id,
+      r.net_consideration, r.market_value, r.trade_date, r.settlement_date,
+      r.currency, r.currency_buy, r.currency_sell)
+    r.copy(target_section = v.targetSection,
+      trade_date_iso = v.tradeIso, settlement_date_iso = v.settlementIso,
+      net_consideration_num = v.netNum, market_value_num = v.mvNum,
+      validation_errors = v.errors)
   }
 }
