@@ -54,8 +54,8 @@ object GraftApp {
     // extraction just for the log (inside the scan's tasks, like a wave:
     // no raw-page shuffle), so they are opt-in (--page-events true).
     if (opts.get("page-events").contains("true"))
-      ExtractionPipeline.classifyPages(
-        ExtractionPipeline.pageTexts(pages, partitions = 0), rs)
+      ExtractionPipeline.classifyPages(ExtractionPipeline.pageTexts(pages,
+        partitions = 0, needMain = false), rs)
         .transform(ExtractionPipeline.events)
         .write.mode("overwrite").parquet(s"$output/_metrics_pages")
 

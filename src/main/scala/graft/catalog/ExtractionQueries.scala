@@ -172,7 +172,7 @@ object ExtractionQueries {
 
   /** Record-classification CASE (txn_type side). The same priority-desc
     * whens as [[recordGroupSql]], so one rule decides both fields —
-    * exactly like classifyRecordFromLower's single find.
+    * exactly like ScalarRules.classifyRecord's single find.
     */
   private def recordTxnSql(rlExpr: String, rs: RuleSet): String = {
     val whens = rs.sortedRecordRules.filterNot(_.fallback).map { r =>

@@ -8,20 +8,13 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** The page kernel: all of one page's records from one scalar pass —
-  * content extraction (X1/X2), page classification (C1/C2), page
-  * context (G4), segmentation (P1/P2, G1-G3, C9-C11: the shared
-  * [[ScalarEvaluator.segmentsOf]]), record routing and transaction-type
-  * rules (C3-C6), field extraction (N5-N13, compiled from
-  * `rs.extraction`) and validation (N14/N15, C12, J1:
-  * [[ScalarEvaluator.validation]]). Every stage keeps its state inside
-  * the page, so a Spark pipeline runs the kernel in one typed
-  * `mapPartitions` with no operator between pages.
-  *
-  * The rule set is compiled once, where the kernel is built (so a bad
-  * extraction spec fails before any task runs), and ships with the
-  * task. The golden twin, [[ScalarEvaluator.process]], shares the
-  * classification, segmentation and validation kernels but hand-codes
-  * the field extraction this kernel compiles from config.
+  * content extraction (X1/X2), classification (C1/C2), page context
+  * (G4), segmentation ([[ScalarEvaluator.segmentsOf]]), routing and
+  * transaction-type rules (C3-C6), fields (N5-N13, compiled from
+  * `rs.extraction`) and validation ([[ScalarEvaluator.validate]]).
+  * No stage reads another page, so Spark runs it in one typed map.
+  * The extraction spec is compiled where the kernel is built, so a bad
+  * spec fails before any task runs.
   */
 final class PageKernel(rs: RuleSet) extends Serializable {
   import PageKernel._
@@ -56,14 +49,6 @@ final class PageKernel(rs: RuleSet) extends Serializable {
   private def record(url: String, pageType: String, portfolioNo: String,
       clientName: String, asOfDate: String,
       s: ScalarEvaluator.Segment): Seq[Any] = {
-    val v = new Array[String](Slots)
-    v(0) = url
-    v(1) = pageType
-    // the page's values until the fields of the same name replace them
-    v(Slot("portfolio_no")) = portfolioNo
-    v(Slot("client_name")) = clientName
-    v(Slot("as_of_date")) = asOfDate
-    v(Slot("row_text")) = s.text
     val (group, ttype, detail, fields) = pageType match {
       case "Positions" => ("Positions", "Positions", "", positions)
       // Others records carry row_text only (others.py:48-59)
@@ -72,50 +57,28 @@ final class PageKernel(rs: RuleSet) extends Serializable {
         val (g, t) = ScalarRules.classifyRecord(s.text, rs)
         (g, t, ScalarRules.classifyTxnType(s.text, rs), trade)
     }
-    v(Slot("routed_section")) = group
-    v(Slot("txn_type")) = ttype
-    v(Slot("txn_type_detail")) = detail
+    // the page's portfolio_no and client_name until the fields replace them
+    val v = Array.fill(Slot.size)("")
+    Seq(url, pageType, portfolioNo, clientName, group, ttype, detail, s.text)
+      .copyToArray(v)
+    v(Slot("as_of_date")) = asOfDate
     val in = FieldInput(s.cells, s.text, v)
     fields.foreach { case (slot, f) => v(slot) = f(in) }
     def at(n: String) = v(Slot(n))
-    val ok = ScalarEvaluator.validation(group, at("securities_id"),
-      at("net_consideration"), at("market_value"), at("trade_date"),
-      at("settlement_date"), at("currency"), at("currency_buy"),
-      at("currency_sell"))
-    v(Slot("trade_date_iso")) = ok.tradeIso
-    v(Slot("settlement_date_iso")) = ok.settlementIso
-    v.toSeq.take(Strings.length) ++ Seq(ok.netNum.map(_.bigDecimal).orNull,
-      ok.mvNum.map(_.bigDecimal).orNull, ok.errors, ok.targetSection)
+    val ok = ScalarEvaluator.validate(ExtractedRecord.empty(url, pageType)
+      .copy(routed_section = group, securities_id = at("securities_id"),
+        net_consideration = at("net_consideration"),
+        market_value = at("market_value"), trade_date = at("trade_date"),
+        settlement_date = at("settlement_date"), currency = at("currency"),
+        currency_buy = at("currency_buy"), currency_sell = at("currency_sell")))
+    v.toSeq.take(Strings.length - 2) ++ Seq(ok.trade_date_iso,
+      ok.settlement_date_iso, ok.net_consideration_num.map(_.bigDecimal).orNull,
+      ok.market_value_num.map(_.bigDecimal).orNull, ok.validation_errors,
+      ok.target_section)
   }
 }
 
 object PageKernel {
-
-  /** The string columns of a record, in output order. */
-  private val Strings = Seq("url", "page_type", "portfolio_no",
-    "client_name", "routed_section", "txn_type", "txn_type_detail",
-    "row_text", "trade_date", "settlement_date", "transaction_type_raw",
-    "currency", "quantity", "security_name", "securities_id", "account_no",
-    "foreign_unit_price", "foreign_gross_consideration",
-    "foreign_net_consideration", "net_consideration", "market_price",
-    "market_value", "cost_price", "valuation_date", "currency_buy",
-    "amount_buy", "currency_sell", "amount_sell", "trade_date_iso",
-    "settlement_date_iso")
-
-  /** The records' schema: columns, types and nullability. */
-  val Schema: StructType = StructType(Strings.map(n => StructField(n,
-    StringType, nullable = !Set("routed_section", "txn_type",
-      "txn_type_detail")(n))) ++ Seq(
-    StructField("net_consideration_num", DecimalType(38, 6)),
-    StructField("market_value_num", DecimalType(38, 6)),
-    StructField("validation_errors", ArrayType(StringType, containsNull = false),
-      nullable = false),
-    StructField("target_section", StringType, nullable = false)))
-
-  /** A record's string values by name, plus the page's as_of_date. */
-  private val Slot: Map[String, Int] =
-    (Strings :+ "as_of_date").zipWithIndex.toMap
-  private val Slots = Slot.size
 
   /** The extracted fields in evaluation order: a `page_context` key
     * naming one of them reads it only from a later field.
@@ -132,7 +95,25 @@ object PageKernel {
   private val BothFamilies = Set("currency", "quantity", "security_name",
     "securities_id", "account_no")
 
-  /** What any field's `page_context` can read besides earlier fields. */
+  /** The string columns of a record, in output order. */
+  private val Strings = Seq("url", "page_type", "portfolio_no",
+    "client_name", "routed_section", "txn_type", "txn_type_detail",
+    "row_text") ++ Fields.drop(2) ++ Seq("trade_date_iso", "settlement_date_iso")
+
+  /** The records' columns, types and nullability. */
+  val Schema: StructType = StructType(Strings.map(n => StructField(n,
+    StringType, nullable = !Set("routed_section", "txn_type",
+      "txn_type_detail")(n))) ++ Seq(
+    StructField("net_consideration_num", DecimalType(38, 6)),
+    StructField("market_value_num", DecimalType(38, 6)),
+    StructField("validation_errors", ArrayType(StringType, containsNull = false),
+      nullable = false),
+    StructField("target_section", StringType, nullable = false)))
+
+  /** A record's string values by name, plus the page's as_of_date. */
+  private val Slot = (Strings :+ "as_of_date").zipWithIndex.toMap
+
+  /** What a `page_context` key can name besides an earlier field. */
   val ContextKeys: Seq[String] = Seq("url", "page_type", "portfolio_no",
     "client_name", "as_of_date", "routed_section", "txn_type",
     "txn_type_detail", "row_text")
@@ -140,16 +121,16 @@ object PageKernel {
   private val Blank: FieldInput => String = _ => ""
   private val NoFields = Fields.map(n => (Slot(n), Blank)).toArray
 
-  /** One family's fields as (slot, extractor), in evaluation order. A
+  /** One family's fields as (slot, extractor), in evaluation order; a
     * field the family does not read, or its spec leaves out, is blank.
     */
   private def family(spec: Map[String, FieldSpec],
       reads: String => Boolean): Array[(Int, FieldInput => String)] =
     Fields.zipWithIndex.map { case (n, i) =>
-      val readable = ContextKeys.toSet ++ Fields.take(i)
       def slotOf(key: String): Int = {
-        require(readable(key), s"field $n: page_context key '$key' names " +
-          "neither a page attribute nor an earlier field")
+        require(ContextKeys.contains(key) || Fields.take(i).contains(key),
+          s"field $n: page_context key '$key' names neither a page " +
+            "attribute nor an earlier field")
         Slot(key)
       }
       Slot(n) -> spec.get(n).filter(_ => reads(n))

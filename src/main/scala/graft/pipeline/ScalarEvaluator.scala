@@ -10,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   * the second implementation behind the golden byte-identity tests
   * (SURVEY §5.2-3). Shares the scalar kernels (ContentExtractor,
   * TextOps, ScalarRules), the segmentation kernel [[segmentsOf]] and
-  * the validator [[validation]] with the Spark path's [[PageKernel]].
+  * the validator [[validate]] with the Spark path's [[PageKernel]].
   * The field extraction, which the kernel compiles from the rule set's
   * ExtractionSpec, is hand-coded here instead, mirroring the
   * reference's Python (/root/reference/pipeline/orchestrator.py:51-188).
@@ -19,6 +19,7 @@ object ScalarEvaluator {
 
   private val BuyPat = "You bought ([A-Z]{3}) ([0-9',\\. ]*\\d)".r
   private val SellPat = "You sold ([A-Z]{3}) ([0-9',\\. ]*\\d)".r
+  private val HalfUp = BigDecimal.RoundingMode.HALF_UP
 
   /** One record-to-be of a page: the main row's cells, the row texts
     * of the main row and its continuation rows joined by " ", and how
@@ -57,8 +58,8 @@ object ScalarEvaluator {
     * main-row detection (G1) and continuation stitching (G2/A5), folded
     * in [[enumerateRows]] order. The ONE segmentation kernel: this
     * evaluator and the Spark pipeline's [[PageKernel]] both call it, so
-    * segmentation needs no cross-row Spark operator. Page types without records (Ignore,
-    * Unknown) yield none (orchestrator.py:20-21).
+    * segmentation needs no cross-row Spark operator. Page types without
+    * records (Ignore, Unknown) yield none (orchestrator.py:20-21).
     */
   def segmentsOf(pageType: String, pageMd: String): Seq[Segment] =
     pageType match {
@@ -113,11 +114,8 @@ object ScalarEvaluator {
     * extract fields → validate. Returns the per-page records.
     */
   def process(page: Page, rs: RuleSet): Seq[ExtractedRecord] = {
-    val content = ContentExtractor.extract(page.html)
-    processMd(page.url, content.page_md, rs)
-  }
-
-  def processMd(url: String, pageMd: String, rs: RuleSet): Seq[ExtractedRecord] = {
+    val url = page.url
+    val pageMd = ContentExtractor.extract(page.html).page_md
     if (pageMd.isEmpty) return Nil
     val pageType = ScalarRules.effectivePageType(pageMd, rs)
     val portfolioNo = TextOps.extractPortfolioNo(pageMd).getOrElse("")
@@ -239,14 +237,6 @@ object ScalarEvaluator {
       amount_sell = sellM.map(_.group(2)).getOrElse(""))
   }
 
-  /** Stage 7 of one record: its C12 target section, ISO dates, parsed
-    * numbers (scale 6, half-up, like a decimal(38,6) cast) and
-    * validation error codes.
-    */
-  case class Validation(targetSection: String, tradeIso: String,
-      settlementIso: String, netNum: Option[BigDecimal],
-      mvNum: Option[BigDecimal], errors: Seq[String])
-
   /** Validation + normalization (N14/N15, C12 downgrade, strict ISIN,
     * and the reference's full VAL taxonomy — error_system.py:37-43:
     * VAL_DATE (impossible calendar date), VAL_CURR (currency-list
@@ -254,58 +244,50 @@ object ScalarEvaluator {
     * docs/rule_2.txt number constraints), VAL_CONFLICT (settlement
     * before trade date). Code order here is the contract the catalog's
     * Column form (ExtractionPipeline.validationErrorsCol) reproduces.
-    * The one validator of the golden twin and the page kernel.
+    * Numbers take scale 6, half-up, like a decimal(38,6) cast. The one
+    * validator of the golden twin and the page kernel.
     */
-  def validation(routedSection: String, securitiesId: String,
-      netConsideration: String, marketValue: String, tradeDate: String,
-      settlementDate: String, currency: String, currencyBuy: String,
-      currencySell: String): Validation = {
+  def validate(r: ExtractedRecord): ExtractedRecord = {
     val errs = ArrayBuffer.empty[String]
-    if (securitiesId.nonEmpty && !TextOps.isValidIsin(securitiesId))
+    if (r.securities_id.nonEmpty && !TextOps.isValidIsin(r.securities_id))
       errs += "VAL_ISIN_SHAPE"
-    else if (securitiesId.nonEmpty &&
-        !graft.functions.IsinValid.check(securitiesId))
+    else if (r.securities_id.nonEmpty &&
+        !graft.functions.IsinValid.check(r.securities_id))
       errs += "VAL_ISIN_CHECKSUM" // shape OK, ISO 6166 Luhn digit wrong
-    val netNum = TextOps.normalizeNumber(netConsideration)
-    if (netConsideration.nonEmpty && netNum.isEmpty) errs += "VAL_NUM_NET"
-    val mvNum = TextOps.normalizeNumber(marketValue)
-    if (marketValue.nonEmpty && mvNum.isEmpty) errs += "VAL_NUM_MV"
+    val netNum = TextOps.normalizeNumber(r.net_consideration)
+    if (r.net_consideration.nonEmpty && netNum.isEmpty)
+      errs += "VAL_NUM_NET"
+    val mvNum = TextOps.normalizeNumber(r.market_value)
+    if (r.market_value.nonEmpty && mvNum.isEmpty) errs += "VAL_NUM_MV"
     // VAL_RANGE: parses, but violates the 12-integer/2-decimal digit cap
-    if (netNum.isDefined && !TextOps.numberInRange(netConsideration))
+    if (netNum.isDefined && !TextOps.numberInRange(r.net_consideration))
       errs += "VAL_RANGE_NET"
-    if (mvNum.isDefined && !TextOps.numberInRange(marketValue))
+    if (mvNum.isDefined && !TextOps.numberInRange(r.market_value))
       errs += "VAL_RANGE_MV"
-    val tIso = TextOps.normalizeDate(tradeDate).getOrElse("")
-    val sIso = TextOps.normalizeDate(settlementDate).getOrElse("")
+    val tIso = TextOps.normalizeDate(r.trade_date).getOrElse("")
+    val sIso = TextOps.normalizeDate(r.settlement_date).getOrElse("")
     // VAL_DATE: present but lexically unparseable OR calendar-impossible
     val tOk = TextOps.isValidCalendarDate(tIso)
     val sOk = TextOps.isValidCalendarDate(sIso)
-    if (tradeDate.nonEmpty && !tOk) errs += "VAL_DATE_TRADE"
-    if (settlementDate.nonEmpty && !sOk) errs += "VAL_DATE_SETTLE"
-    if (currency.nonEmpty && !TextOps.Currencies.contains(currency))
+    if (r.trade_date.nonEmpty && !tOk) errs += "VAL_DATE_TRADE"
+    if (r.settlement_date.nonEmpty && !sOk) errs += "VAL_DATE_SETTLE"
+    if (r.currency.nonEmpty && !TextOps.Currencies.contains(r.currency))
       errs += "VAL_CURR"
     // VAL_CONFLICT: both dates valid and settlement precedes trade
     if (tOk && sOk && sIso < tIso) errs += "VAL_CONFLICT"
     // C12 downgrade (docs/rule_2.txt:390-418)
     val section =
-      if (routedSection == "FXTF" &&
-          (currencyBuy.isEmpty || currencySell.isEmpty)) "Trade"
-      else if (routedSection == "Trade" && securitiesId.isEmpty) "Others"
-      else if (routedSection == "Positions" && marketValue.isEmpty) "Others"
-      else routedSection
-    def scaled(n: Option[BigDecimal]) =
-      n.map(_.setScale(6, BigDecimal.RoundingMode.HALF_UP))
-    Validation(section, tIso, sIso, scaled(netNum), scaled(mvNum), errs.toSeq)
-  }
-
-  /** [[validation]] applied to a record. */
-  def validate(r: ExtractedRecord): ExtractedRecord = {
-    val v = validation(r.routed_section, r.securities_id,
-      r.net_consideration, r.market_value, r.trade_date, r.settlement_date,
-      r.currency, r.currency_buy, r.currency_sell)
-    r.copy(target_section = v.targetSection,
-      trade_date_iso = v.tradeIso, settlement_date_iso = v.settlementIso,
-      net_consideration_num = v.netNum, market_value_num = v.mvNum,
-      validation_errors = v.errors)
+      if (r.routed_section == "FXTF" &&
+          (r.currency_buy.isEmpty || r.currency_sell.isEmpty)) "Trade"
+      else if (r.routed_section == "Trade" && r.securities_id.isEmpty)
+        "Others"
+      else if (r.routed_section == "Positions" && r.market_value.isEmpty)
+        "Others"
+      else r.routed_section
+    r.copy(target_section = section,
+      trade_date_iso = tIso, settlement_date_iso = sIso,
+      net_consideration_num = netNum.map(_.setScale(6, HalfUp)),
+      market_value_num = mvNum.map(_.setScale(6, HalfUp)),
+      validation_errors = errs.toSeq)
   }
 }

@@ -32,18 +32,15 @@ case class FieldSpec(
     index: Int = 0,
     key: String = "")
 
-/** One record as the field strategies see it: its main row's cells, its
-  * stitched row text, and its column values so far, which `page_context`
-  * reads by slot.
-  */
+/** A record as its field strategies see it: main-row cells, stitched
+  * row text, and the column values `page_context` reads by slot. */
 final case class FieldInput(cells: Seq[String], text: String,
     values: Array[String])
 
-/** Scalar compiler of [[FieldSpec]]s. Each strategy mirrors the
-  * reference plugins' hand-coded field code, as the golden twin
-  * (ScalarEvaluator.extractTrade / extractPositions) spells it out:
-  * whitespace splits are Python's `str.split()` (runs, no empty tokens)
-  * and trims are Java's (every char <= ' ').
+/** Scalar compiler of [[FieldSpec]]s. Each strategy mirrors the golden
+  * twin's hand-coded field code (ScalarEvaluator.extractTrade /
+  * extractPositions): whitespace splits are Python's `str.split()`
+  * (runs, no empty tokens), trims are Java's (every char <= ' ').
   */
 object FieldSpec {
 
@@ -78,7 +75,7 @@ object FieldSpec {
       case "amount_after_currency" =>
         val c = cell(fs.index); in => currencySplit(c(in))._2
       case "positions_currency"    => in => {
-        val first = firstCell(in)
+        val first = firstCell(in).trim
         if (currencyHead(first)) first
         else TextOps.sniffCurrency(in.cells).getOrElse("")
       }
@@ -92,17 +89,14 @@ object FieldSpec {
   /** 1-based cell, "" past the end of the row. */
   private def cell(i: Int): FieldInput => String = {
     require(i >= 1, s"cell index $i: cells are numbered from 1")
-    in => if (in.cells.length >= i) in.cells(i - 1) else ""
+    in => in.cells.lift(i - 1).getOrElse("")
   }
 
-  private def firstCell(in: FieldInput): String =
-    in.cells.headOption.getOrElse("").trim
+  private def firstCell(in: FieldInput) = in.cells.headOption.getOrElse("")
 
   /** The first cell when it starts with a DD.MM.YYYY date, else "". */
-  private def firstDate(in: FieldInput): String = {
-    val c0 = in.cells.headOption.getOrElse("")
-    if (TextOps.startsWithDate(c0)) c0 else ""
-  }
+  private def firstDate(in: FieldInput): String =
+    Some(firstCell(in)).filter(TextOps.startsWithDate).getOrElse("")
 
   /** (leading alphabetic token, the tokens after it) of a cell, or
     * ("", cell) when its first token is not alphabetic.
@@ -118,20 +112,16 @@ object FieldSpec {
   private def currencyHead(first: String): Boolean =
     TextOps.startsWithCurrency(first) && first.length <= 4
 
-  /** (quantity, name): split of cell 2 after a currency head, else of
-    * cell 1 (positions.py:206-223).
+  /** (quantity, name) from the first run of whitespace in cell 2 after a
+    * currency head, else in cell 1 (positions.py:206-223).
     */
   private def positionsSplit(in: FieldInput): (String, String) = {
-    val first = firstCell(in)
-    if (currencyHead(first)) {
-      if (in.cells.length < 2) ("", "")
-      else TextOps.splitFirst(in.cells(1)) match {
-        case (q, Some(name)) => (q, name)
-        case _               => ("", in.cells(1))
-      }
-    } else TextOps.splitFirst(first) match {
+    val first = firstCell(in).trim
+    val head = currencyHead(first)
+    val c = if (head) in.cells.lift(1).getOrElse("") else first
+    TextOps.splitFirst(c) match {
       case (q, Some(name)) => (q, name)
-      case _               => (first, "")
+      case _               => if (head) ("", c) else (first, "")
     }
   }
 }

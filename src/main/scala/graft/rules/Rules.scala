@@ -7,9 +7,7 @@ import org.apache.spark.sql.functions._
 /** Condition algebra of the reference's rule engine
   * (/root/reference/pipeline/extractors/base.py:31-54):
   * str ⇒ substring contains; list ⇒ AND; {all_of} / {any_of} /
-  * {none_of} / {contains}. Compiled both to a scalar predicate (used by
-  * the golden evaluator) and to a Catalyst `Column` (used by the Spark
-  * pipeline) — two backends, one semantics.
+  * {none_of} / {contains}, as a scalar predicate.
   */
 sealed trait Cond
 object Cond {
@@ -23,13 +21,6 @@ object Cond {
     case AllOf(cs)   => cs.forall(eval(text, _))
     case AnyOf(cs)   => cs.exists(eval(text, _))
     case NoneOf(cs)  => !cs.exists(eval(text, _))
-  }
-
-  def toColumn(text: Column, c: Cond): Column = c match {
-    case Contains(s) => text.contains(lit(s))
-    case AllOf(cs)   => cs.map(toColumn(text, _)).reduceOption(_ && _).getOrElse(lit(true))
-    case AnyOf(cs)   => cs.map(toColumn(text, _)).reduceOption(_ || _).getOrElse(lit(false))
-    case NoneOf(cs)  => !cs.map(toColumn(text, _)).reduceOption(_ || _).getOrElse(lit(false))
   }
 }
 
@@ -267,11 +258,9 @@ object RuleCompiler {
         .otherwise(pageType)
     }
 
-  /** struct(txn_group, txn_type) from a pre-lowered row-text column
-    * (materialize `lower(text)` once in hot paths — see
-    * classifyPageFromHeader note).
-    */
-  def classifyRecordFromLower(rl: Column, rs: RuleSet): Column = {
+  /** row text → struct(txn_group, txn_type). */
+  def classifyRecord(rowText: Column, rs: RuleSet): Column = {
+    val rl = lower(rowText)
     val (fg, ft) = rs.recordFallback
     val fallbackCol = struct(lit(fg).as("txn_group"), lit(ft).as("txn_type"))
     rs.sortedRecordRules.filterNot(_.fallback).foldRight(fallbackCol) {
@@ -282,21 +271,14 @@ object RuleCompiler {
     }
   }
 
-  /** row text → struct(txn_group, txn_type). */
-  def classifyRecord(rowText: Column, rs: RuleSet): Column =
-    classifyRecordFromLower(lower(rowText), rs)
-
-  /** txn type (with exclude_if_contains) from a pre-lowered column. */
-  def classifyTxnTypeFromLower(rl: Column, rs: RuleSet): Column = {
-    val fb = lit(rs.txnFallback)
-    rs.sortedTxnRules.filterNot(_.fallback).foldRight(fb) { (r, elseCol) =>
-      val hit = containsAnyLower(rl, r.matchAny) &&
-        !containsAnyLower(rl, r.excludeIfContains)
-      when(hit, lit(r.output)).otherwise(elseCol)
+  /** row text → transaction type (with exclude_if_contains). */
+  def classifyTxnType(rowText: Column, rs: RuleSet): Column = {
+    val rl = lower(rowText)
+    rs.sortedTxnRules.filterNot(_.fallback).foldRight(lit(rs.txnFallback)) {
+      (r, elseCol) =>
+        val hit = containsAnyLower(rl, r.matchAny) &&
+          !containsAnyLower(rl, r.excludeIfContains)
+        when(hit, lit(r.output)).otherwise(elseCol)
     }
   }
-
-  /** row text → transaction type (with exclude_if_contains). */
-  def classifyTxnType(rowText: Column, rs: RuleSet): Column =
-    classifyTxnTypeFromLower(lower(rowText), rs)
 }

@@ -243,27 +243,46 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("extraction pipeline: the record-rule when-chain is built once per plan") {
-    // `routed_section` and `txn_type` both read the one routing struct;
-    // "framework redemption" is a keyword of exactly one record rule and
-    // one txn-type rule, so it occurs once per chain in the plan
-    val kw = "framework redemption"
+  test("extraction pipeline: records(partitions = 0) is one typed map " +
+      "over the scan, with no rule keyword in the plan") {
+    // the page kernel runs every stage of a page inside one mapPartitions
+    // in the scan's tasks: no operator moves, windows or explodes rows,
+    // and the rule set lives in the kernel, not in plan expressions
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec,
+      MapPartitionsExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.unsafe.types.UTF8String
+    import spark.implicits._
     val rs = graft.rules.RuleSets.plugin
-    def has(ks: Seq[String]) = ks.exists(_.equalsIgnoreCase(kw))
-    assert(rs.sortedRecordRules.count(r => has(r.matchAny)) === 1)
-    assert(rs.sortedTxnRules.count(r =>
-      has(r.matchAny ++ r.excludeIfContains)) === 1)
-    val pages = graft.gen.PagesGen.pages(spark, 20, 42, 2)
-    val plan = graft.pipeline.ExtractionPipeline.records(pages,
-      partitions = 0).queryExecution.optimizedPlan
-    val lit = org.apache.spark.unsafe.types.UTF8String.fromString(kw)
-    val hits = plan.collect { case node =>
-      node.expressions.map(_.collect {
-        case l: org.apache.spark.sql.catalyst.expressions.Literal
-          if l.value == lit => l
-      }.size).sum
-    }.sum
-    assert(hits === 2, s"'$kw' occurs $hits times in the optimized plan")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ps_pages")
+      .resolve("pages").toString
+    graft.gen.PagesGen.pages(spark, 20, 42, 2).write.parquet(dir)
+    withPlainPlan {
+      val plan = graft.pipeline.ExtractionPipeline.records(
+        spark.read.parquet(dir).as[graft.model.Page], rs, partitions = 0)
+        .queryExecution.executedPlan
+      val maps = plan.collect { case m: MapPartitionsExec => m }
+      assert(maps.size === 1, s"typed maps in the records plan:\n$plan")
+      assert(maps.head.collect { case f: FileSourceScanExec => f }.size === 1,
+        s"the typed map does not run over the scan:\n$plan")
+      val moving = plan.collect {
+        case e: Exchange => e.nodeName
+        case w: WindowExec => w.nodeName
+        case g: GenerateExec => g.nodeName
+      }
+      assert(moving.isEmpty, s"row-moving operators in the records plan: $moving")
+      val keywords = (rs.recordRules.flatMap(_.matchAny) ++
+        rs.txnTypeRules.flatMap(r => r.matchAny ++ r.excludeIfContains))
+        .flatMap(k => Seq(k, k.toLowerCase(java.util.Locale.ROOT)))
+        .map(UTF8String.fromString).toSet[Any]
+      val hits = plan.collect { case node =>
+        node.expressions.flatMap(_.collect {
+          case l: Literal if keywords.contains(l.value) => l.sql
+        })
+      }.flatten
+      assert(hits.isEmpty, s"record-rule keywords in the plan: $hits")
+    }
   }
 
   test("bigramFluency: count-table shuffles carry only hashes") {

@@ -159,4 +159,96 @@ class RulesSpec extends AnyFunSuite {
     assert(hex ==
       "43966d9ab8eadcd2394e1a749520335e2e85712fea6ca4531faa490b2a1b0152")
   }
+
+  // ---- the scalar FieldSpec compiler (the page kernel's field stage) ----
+
+  private def field(fs: FieldSpec, cells: Seq[String], text: String = "",
+      values: Array[String] = Array.empty): String =
+    FieldSpec.compile(fs, _ => 0)(FieldInput(cells, text, values))
+
+  test("field strategies: an index past the row reads blank") {
+    val row = Seq("12.03.2024", "BUY", "USD 100")
+    for (s <- Seq("cell", "cell_trim", "currency_token",
+        "amount_after_currency"))
+      assert(field(FieldSpec(s, index = 9), row) === "", s)
+    assert(field(FieldSpec("cell", index = 3), row) === "USD 100")
+  }
+
+  test("field strategies: whitespace splits and trims follow the twin") {
+    // Python str.split(): runs of whitespace, no empty tokens, so a
+    // leading or repeated run still yields the currency token
+    val cell = Seq("12.03.2024", "BUY", "  USD   1'000  000 ")
+    assert(field(FieldSpec("currency_token", index = 3), cell) === "USD")
+    assert(field(FieldSpec("amount_after_currency", index = 3), cell) ===
+      "1'000 000")
+    // a non-alphabetic first token keeps the whole cell as the amount
+    val num = Seq("x", "y", " 1'000  CHF")
+    assert(field(FieldSpec("currency_token", index = 3), num) === "")
+    assert(field(FieldSpec("amount_after_currency", index = 3), num) ===
+      " 1'000  CHF")
+    // Java trim: tabs and carriage returns go too
+    assert(field(FieldSpec("cell_trim", index = 1), Seq("\t BUY \r")) === "BUY")
+    // positions: split at the first run, the rest kept as is
+    val pos = Seq(" 100   Nestle  SA ", "x")
+    assert(field(FieldSpec("positions_quantity"), pos) === "100")
+    assert(field(FieldSpec("positions_name"), pos) === "Nestle  SA")
+    val cur = Seq("CHF", "\t250\tRoche Holding", "x")
+    assert(field(FieldSpec("positions_currency"), cur) === "CHF")
+    assert(field(FieldSpec("positions_quantity"), cur) === "250")
+    assert(field(FieldSpec("positions_name"), cur) === "Roche Holding")
+  }
+
+  test("field strategies: regex without a match or without its group") {
+    val text = "12.03.2024 YOUR PURCHASE USD 100 ISIN CH0038863350"
+    assert(field(FieldSpec("regex", "ISIN\\s+([A-Z0-9]{12})", group = 1),
+      Nil, text) === "CH0038863350")
+    assert(field(FieldSpec("regex", "NEVERMATCH(\\d+)", group = 1),
+      Nil, text) === "")
+    // group 1 takes no part in the match: blank, like regexp_extract
+    assert(field(FieldSpec("regex", "(x)?(USD|CHF)", group = 1),
+      Nil, text) === "")
+    assert(field(FieldSpec("regex", "(x)?(USD|CHF)", group = 2),
+      Nil, text) === "USD")
+  }
+
+  test("field strategies: const and page_context") {
+    assert(field(FieldSpec("const", key = "K"), Nil) === "K")
+    assert(FieldSpec.compile(FieldSpec("page_context", key = "k"),
+      Map("k" -> 1))(FieldInput(Nil, "", Array("a", "b"))) === "b")
+  }
+
+  test("field strategies: specs that cannot be evaluated fail at compile") {
+    def fails(fs: FieldSpec) = intercept[IllegalArgumentException](
+      FieldSpec.compile(fs, _ => 0))
+    fails(FieldSpec("no_such_strategy"))
+    fails(FieldSpec("cell"))            // index 0: cells count from 1
+    fails(FieldSpec("regex", "(a)", group = 2))
+  }
+
+  test("page kernel: page_context reads an earlier field, and only an " +
+      "earlier one") {
+    import graft.pipeline.PageKernel
+    val md = Seq("# Transaction list",
+      "| Date | Type | Amount | Security |", "|---|---|---|---|",
+      "| 12.03.2024 | YOUR PURCHASE | USD 1'000.00 | Nestle SA |")
+      .mkString("\n")
+    def rec(trade: Map[String, FieldSpec]) = {
+      val k = new PageKernel(rs.copy(extraction =
+        rs.extraction.copy(trade = rs.extraction.trade ++ trade)))
+      val rows = k.classifiedRecords("u", "Transaction", "", "Client X", "",
+        md).toSeq
+      assert(rows.size === 1)
+      (n: String) => rows.head.getString(PageKernel.Schema.fieldIndex(n))
+    }
+    val r = rec(Map(
+      "quantity" -> FieldSpec("page_context", key = "transaction_type_raw"),
+      "account_no" -> FieldSpec("page_context", key = "client_name"),
+      "security_name" -> FieldSpec("page_context", key = "txn_type")))
+    assert(r("quantity") === "YOUR PURCHASE")
+    assert(r("account_no") === "Client X")
+    assert(r("security_name") === "Buy")
+    // a field evaluated later is not readable
+    intercept[IllegalArgumentException](rec(Map(
+      "client_name" -> FieldSpec("page_context", key = "security_name"))))
+  }
 }
