@@ -83,7 +83,7 @@ object PageKernel {
   /** The extracted fields in evaluation order: a `page_context` key
     * naming one of them reads it only from a later field.
     */
-  val Fields: Seq[String] = Seq("client_name", "portfolio_no",
+  private val Fields = Seq("client_name", "portfolio_no",
     "trade_date", "settlement_date", "transaction_type_raw", "currency",
     "quantity", "security_name", "securities_id", "account_no",
     "foreign_unit_price", "foreign_gross_consideration",
@@ -114,7 +114,7 @@ object PageKernel {
   private val Slot = (Strings :+ "as_of_date").zipWithIndex.toMap
 
   /** What a `page_context` key can name besides an earlier field. */
-  val ContextKeys: Seq[String] = Seq("url", "page_type", "portfolio_no",
+  private val ContextKeys = Seq("url", "page_type", "portfolio_no",
     "client_name", "as_of_date", "routed_section", "txn_type",
     "txn_type_detail", "row_text")
 

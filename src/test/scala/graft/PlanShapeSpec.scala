@@ -243,8 +243,7 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("extraction pipeline: records(partitions = 0) is one typed map " +
-      "over the scan, with no rule keyword in the plan") {
+  test("extraction pipeline: records(partitions = 0) is one typed map over the scan") {
     // the page kernel runs every stage of a page inside one mapPartitions
     // in the scan's tasks: no operator moves, windows or explodes rows,
     // and the rule set lives in the kernel, not in plan expressions
