@@ -71,6 +71,7 @@ final class PageKernel(rs: RuleSet) extends Serializable {
         market_value = at("market_value"), trade_date = at("trade_date"),
         settlement_date = at("settlement_date"), currency = at("currency"),
         currency_buy = at("currency_buy"), currency_sell = at("currency_sell")))
+    // the string columns up to the ISO dates, then validate's columns
     v.toSeq.take(Strings.length - 2) ++ Seq(ok.trade_date_iso,
       ok.settlement_date_iso, ok.net_consideration_num.map(_.bigDecimal).orNull,
       ok.market_value_num.map(_.bigDecimal).orNull, ok.validation_errors,
