@@ -3,8 +3,8 @@ package catalog
 
 import graft.gen.PagesGen
 import graft.ops.{Layout, Multimodal}
-import graft.pipeline.ExtractionPipeline
-import graft.rules.{PageRule, PluginHeader, RuleCompiler, RuleSet, RuleSets}
+import graft.pipeline.{ExtractedRecord, ExtractionPipeline, ScalarEvaluator}
+import graft.rules.{PageRule, PluginHeader, RuleSet, RuleSets, ScalarRules}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import Shared._
@@ -14,8 +14,8 @@ import Shared._
   * ([[graft.ops.Layout]]: Z-order, zone maps, shard assignment).
   */
 object ExtractionQueries {
-  /** Rule set for the documents-table classification demo (q10) — same
-    * compiler as the page classifier, domain-specific keywords.
+  /** Rule set for the documents-table classification demo (q10) — the
+    * page classifier's engine, domain-specific keywords.
     */
   private val docRules = RuleSet("docs", PluginHeader,
     pageRules = Seq(
@@ -441,12 +441,16 @@ object ExtractionQueries {
   }
 
   def specs: Seq[QuerySpec] = Seq(
-    // C1/X3: rule-compiled classification (when-chain) over documents
-    QuerySpec("q10_classify", (s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          RuleCompiler.classifyPage(col("text"), docRules).as("doc_class"))
-        .orderBy("doc_id"),
+    // C1/X3: rule-set classification over documents, by the page
+    // classifier's scalar engine in a typed map
+    QuerySpec("q10_classify", (s, d) => {
+      import s.implicits._
+      t(s, d, "documents").select("doc_id", "text").as[(Long, String)]
+        .map { case (id, text) =>
+          (id, ScalarRules.classifyPage(text, docRules)) }
+        .toDF("doc_id", "doc_class")
+        .orderBy("doc_id")
+    },
     Some {
       // mirror the PluginHeader slice ('#'-prefixed lines, else first 10
       // lines) instead of classifying over the full text — the two only
@@ -512,7 +516,7 @@ object ExtractionQueries {
         when(isEmptyPage, lit("empty")).otherwise(lit("html"))
           .as("content_kind"),
         lit("").as("error"))
-      ExtractionPipeline.eventLog(ExtractionPipeline.classifyPagesDf(pt))
+      ExtractionPipeline.eventLog(ExtractionPipeline.classifyPages(pt))
         .groupBy(col("level"), col("code"), col("stage"))
         .agg(count(lit(1)).as("n"))
         .orderBy("level", "code", "stage")
@@ -520,9 +524,10 @@ object ExtractionQueries {
     Some(q30Sql)),
     // C1+C3+C10+P1+S8 routing, oracle-checked: pages synthesized from
     // `documents` rows (identical construction in the oracle), classified
-    // by the COMPILED rule chains incl. the Others fallback, pipe rows
+    // by the scalar rule engine incl. the Others fallback, pipe rows
     // exploded, routed per row, counted per (page_type, sheet)
     QuerySpec("q31_route_records", (s, d) => {
+      import s.implicits._
       val rs = RuleSets.plugin
       val did = col("doc_id").cast("long")
       def booking(shift: Int): Column =
@@ -538,10 +543,9 @@ object ExtractionQueries {
         transform(slice(parts, lit(2), size(parts) - 2), c => trim(c))
       }
       t(s, d, "documents")
-        .select(col("doc_id"), page.as("page"))
-        .withColumn("_pt", RuleCompiler.classifyPage(col("page"), rs))
-        .withColumn("page_type",
-          RuleCompiler.othersFallbackCol(col("_pt"), col("page"), rs))
+        .select(page.as("page")).as[String]
+        .map(p => (p, ScalarRules.effectivePageType(p, rs)))
+        .toDF("page", "page_type")
         .filter(col("page_type")
           .isin("Transaction", "Trade", "FXTF", "Others"))
         .withColumn("line", explode(
@@ -555,11 +559,11 @@ object ExtractionQueries {
               element_at(col("cells"), 1).rlike("^\\d{2}\\.\\d{2}\\.\\d{4}") &&
                 size(col("cells")) > 1 && element_at(col("cells"), 2) =!= ""))
         .filter(col("keep"))
-        .withColumn("section",
-          when(isOth, lit("Others"))
-            .otherwise(RuleCompiler
-              .classifyRecord(concat_ws(" ", col("cells")), rs)
-              .getField("txn_group")))
+        .select("page_type", "cells").as[(String, Seq[String])]
+        .map { case (pt, cells) => (pt,
+          if (pt == "Others") "Others"
+          else ScalarRules.classifyRecord(cells.mkString(" "), rs)._1) }
+        .toDF("page_type", "section")
         .withColumn("sheet", sheetNameCol(col("section")))
         .groupBy(col("page_type"), col("section"), col("sheet"))
         .agg(count(lit(1)).as("n"))
@@ -602,9 +606,10 @@ object ExtractionQueries {
     }),
     // full reference validator taxonomy (error_system.py:37-43:
     // VAL_ISIN/NUM/RANGE/DATE/CURR/CONFLICT) over documents-synthesized
-    // field values; the same validationErrorsCol the extraction
-    // pipeline's Stage 7 uses
+    // field values; the same ScalarEvaluator.validate the page kernel
+    // runs on every record
     QuerySpec("q36_validate", (s, d) => {
+      import s.implicits._
       val did = col("doc_id").cast("long")
       t(s, d, "documents")
         .select(col("doc_id"),
@@ -614,25 +619,18 @@ object ExtractionQueries {
           pickCol(did, ValNets, 3).as("net_consideration"),
           pickCol(did, ValMvs, 4).as("market_value"),
           pickCol(did, ValIsins, 5).as("securities_id"))
-        .withColumn("trade_date_iso",
-          ExtractionPipeline.normalizeDateCol(col("trade_date")))
-        .withColumn("settlement_date_iso",
-          ExtractionPipeline.normalizeDateCol(col("settlement_date")))
-        .withColumn("net_num",
-          ExtractionPipeline.normalizeNumberCol(col("net_consideration"))
-            .cast("double"))
-        .withColumn("errs", array_join(
-          ExtractionPipeline.validationErrorsCol(
-            col("securities_id"),
-            col("net_consideration"),
-            ExtractionPipeline.normalizeNumberCol(col("net_consideration")),
-            col("market_value"),
-            ExtractionPipeline.normalizeNumberCol(col("market_value")),
-            col("trade_date"), col("trade_date_iso"),
-            col("settlement_date"), col("settlement_date_iso"),
-            col("currency")), ","))
-        .select("doc_id", "trade_date_iso", "settlement_date_iso",
-          "net_num", "errs")
+        .as[(Long, String, String, String, String, String, String)]
+        .map { case (id, trade, settle, ccy, net, mv, isin) =>
+          val v = ScalarEvaluator.validate(ExtractedRecord.empty("", "")
+            .copy(trade_date = trade, settlement_date = settle,
+              currency = ccy, net_consideration = net, market_value = mv,
+              securities_id = isin))
+          (id, v.trade_date_iso, v.settlement_date_iso,
+            v.net_consideration_num.map(_.toDouble),
+            v.validation_errors.mkString(","))
+        }
+        .toDF("doc_id", "trade_date_iso", "settlement_date_iso", "net_num",
+          "errs")
         .orderBy("doc_id")
     },
     Some(q36Sql)),

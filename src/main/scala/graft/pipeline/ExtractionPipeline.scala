@@ -2,11 +2,10 @@ package graft.pipeline
 
 import graft.extract.ContentExtractor
 import graft.model.{Page, PageText}
-import graft.rules.{RuleCompiler, RuleSet, RuleSets}
-import graft.textops.TextOps
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import graft.rules.{RuleSet, RuleSets, ScalarRules}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, IntegerType}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 
 /** The Spark-native extraction pipeline (north_rule):
   *
@@ -28,8 +27,10 @@ import org.apache.spark.sql.types.{DecimalType, IntegerType}
   * optimize or codegen beyond it. [[PageKernel]] holds the stages;
   * ScalarEvaluator (the golden twin) shares its classification,
   * segmentation and validation and hand-codes the field extraction the
-  * kernel compiles from config. The Column forms below serve page-level
-  * views (page events, the catalog's oracle-checked queries).
+  * kernel compiles from config. Page events ([[classifyPages]]) run
+  * the same scalar classification and page context, also as one typed
+  * map: `rules/` and `pipeline/` hold one implementation of each rule
+  * and validation decision.
   */
 object ExtractionPipeline {
 
@@ -55,144 +56,26 @@ object ExtractionPipeline {
   private def balanced(pages: Dataset[Page], partitions: Int): Dataset[Page] =
     if (partitions > 0) pages.repartition(partitions, col("url")) else pages
 
-  /** Page-level classification + page-context extraction (G4) as
-    * Columns over extracted pages — the page-event log's input. The
-    * record path classifies inside [[PageKernel]] instead.
+  /** Page-level classification + page context (G4) — the page-event
+    * log's input: the input columns plus `page_type`, `portfolio_no`,
+    * `client_name` and `as_of_date`, from the page kernel's own calls
+    * ([[ScalarRules.effectivePageType]], [[PageKernel.context]]) in one
+    * typed map, so a page's events and its records agree. `pt` needs a
+    * string `page_md` column: extracted pages ([[pageTexts]]) or pages
+    * a caller synthesizes (the event-statistics query builds them from
+    * `documents` rows).
     */
-  def classifyPages(pt: Dataset[PageText], rs: RuleSet = RuleSets.plugin): DataFrame =
-    classifyPagesDf(pt.toDF(), rs)
-
-  /** [[classifyPages]] over an untyped frame — the seam for callers
-    * that enter the pipeline AFTER content extraction with synthesized
-    * page text (needs `url`, `page_md`, `content_kind`, `error`
-    * columns; e.g. the oracle-checked event-statistics query builds
-    * pages from `documents` rows).
-    */
-  def classifyPagesDf(pt: DataFrame, rs: RuleSet = RuleSets.plugin): DataFrame = {
-    val md = col("page_md")
-    // `_header` and `_pt` are each materialized ONCE per row by a
-    // projection of their own; the when-chains then only touch the
-    // attribute (otherwise Catalyst would duplicate the split/filter/
-    // concat header derivation into every keyword branch — measured 8×
-    // slowdown of this stage).
-    pt.withColumn("_header", RuleCompiler.headerCol(md, rs.headerMode))
-      .withColumn("_pt",
-        RuleCompiler.classifyPageFromHeader(col("_header"), rs))
-      .select(pt.columns.toIndexedSeq.map(col) ++ Seq(
-        // Others-fallback re-test on the materialized attribute (empty
-        // pages classify "Others" too but produce zero table rows)
-        RuleCompiler.othersFallbackCol(col("_pt"), md, rs).as("page_type"),
-        regexp_extract(md, "Portfolio number\\s+(\\d{3}-\\d{6}-\\d{2})", 1)
-          .as("portfolio_no"),
-        when(md.contains("Portfolio number") &&
-          md.contains("Statement of assets"),
-          trim(regexp_extract(md,
-            "(?s)Portfolio number.*?\\n(.*?)\\n.*?Statement of assets", 1)))
-          .otherwise(lit("")).as("client_name"),
-        regexp_extract(md, "as of (\\d{2}\\.\\d{2}\\.\\d{4})", 1)
-          .as("as_of_date")): _*)
-  }
-
-  // ---- Column helpers mirroring TextOps/ScalarEvaluator ----
-
-  /** Number normalization (N14): thousands separators (, ' space),
-    * parentheses-negative XOR leading minus — mirrors
-    * TextOps.normalizeNumber. Null when unparseable.
-    */
-  def normalizeNumberCol(c: Column): Column = {
-    val (cleaned, negFlip) = cleanedNumberCol(c)
-    val ok = cleaned.rlike("^\\d+(\\.\\d+)?$")
-    val num = cleaned.cast(DecimalType(38, 6))
-    when(ok, when(negFlip, -num).otherwise(num))
-      .otherwise(lit(null).cast(DecimalType(38, 6)))
-  }
-
-  /** (separator-stripped digit string, negate?) — shared cleaning step
-    * behind normalizeNumberCol and the VAL_RANGE check (mirrors
-    * TextOps.cleanNumberString).
-    */
-  private def cleanedNumberCol(c: Column): (Column, Column) = {
-    val t = trim(c)
-    val paren = t.startsWith("(") && t.endsWith(")")
-    val inner0 = when(paren, substring(t, lit(2), greatest(length(t) - 2, lit(0))))
-      .otherwise(t)
-    val negLead = inner0.startsWith("-")
-    val inner1 = when(negLead, substring(inner0, lit(2), length(inner0)))
-      .otherwise(inner0)
-    (regexp_replace(inner1, "[',\\s]", ""), paren =!= negLead)
-  }
-
-  /** VAL_RANGE twin of TextOps.numberInRange: ≤12 integer digits, ≤2
-    * decimals, over the cleaned digit string.
-    */
-  def numberInRangeCol(c: Column): Column =
-    cleanedNumberCol(c)._1.rlike("^\\d{1,12}(\\.\\d{1,2})?$")
-
-  /** VAL_DATE twin of TextOps.isValidCalendarDate over an ISO string —
-    * pure arithmetic (no engine date parser), identical in the DuckDB
-    * oracle.
-    */
-  def calendarOkCol(iso: Column): Column = {
-    // every cast sits under a shape-checking when(): with ANSI mode ON
-    // (Spark 4 default) a bare cast('' as int) throws, and relying on
-    // && short-circuit order would be one optimizer rule away from a
-    // runtime error. CaseWhen branches are guaranteed lazy.
-    val shaped = iso.rlike("^\\d{4}-\\d{2}-\\d{2}$")
-    val y = when(shaped, substring(iso, 1, 4).cast("int"))
-    val m = when(shaped, substring(iso, 6, 2).cast("int"))
-    val d = when(shaped, substring(iso, 9, 2).cast("int"))
-    val leap = (y % 4 === 0 && y % 100 =!= 0) || y % 400 === 0
-    val dim = when(m.isin(1, 3, 5, 7, 8, 10, 12), 31)
-      .when(m.isin(4, 6, 9, 11), 30)
-      .when(m === 2, when(leap, 29).otherwise(28))
-      .otherwise(0)
-    coalesce(shaped && m >= 1 && m <= 12 && d >= 1 && d <= dim, lit(false))
-  }
-
-  /** The full validator taxonomy as one Column (reference
-    * error_system.py:37-43; scalar form ScalarEvaluator.validate —
-    * identical code order). `netNum`/`mvNum` take the already-
-    * normalized numeric columns so callers that materialize them don't
-    * re-evaluate the parse.
-    */
-  def validationErrorsCol(securitiesId: Column,
-      netConsideration: Column, netNum: Column,
-      marketValue: Column, mvNum: Column,
-      tradeDate: Column, tradeIso: Column,
-      settlementDate: Column, settlementIso: Column,
-      currency: Column): Column = {
-    val isinShapeOk = securitiesId.rlike("^[A-Z]{2}[A-Z0-9]{9}[0-9]$")
-    val tOk = calendarOkCol(tradeIso)
-    val sOk = calendarOkCol(settlementIso)
-    array_compact(array(
-      when(securitiesId =!= "" && !isinShapeOk, lit("VAL_ISIN_SHAPE")),
-      // shape OK but ISO 6166 Luhn digit wrong — native IsinValid expr
-      when(securitiesId =!= "" && isinShapeOk &&
-        !graft.functions.IsinValid(securitiesId), lit("VAL_ISIN_CHECKSUM")),
-      when(netConsideration =!= "" && netNum.isNull, lit("VAL_NUM_NET")),
-      when(marketValue =!= "" && mvNum.isNull, lit("VAL_NUM_MV")),
-      when(netNum.isNotNull && !numberInRangeCol(netConsideration),
-        lit("VAL_RANGE_NET")),
-      when(mvNum.isNotNull && !numberInRangeCol(marketValue),
-        lit("VAL_RANGE_MV")),
-      when(tradeDate =!= "" && !tOk, lit("VAL_DATE_TRADE")),
-      when(settlementDate =!= "" && !sOk, lit("VAL_DATE_SETTLE")),
-      when(currency =!= "" && !currency.isin(TextOps.Currencies: _*),
-        lit("VAL_CURR")),
-      when(tOk && sOk && settlementIso < tradeIso, lit("VAL_CONFLICT"))))
-  }
-
-  /** Date normalization (N15) to ISO — mirrors TextOps.normalizeDate;
-    * "" when unparseable (full-match semantics).
-    */
-  def normalizeDateCol(c: Column): Column = {
-    val t = trim(c)
-    when(t.rlike("^\\d{2}\\.\\d{2}\\.\\d{4}$"),
-      regexp_replace(t, "(\\d{2})\\.(\\d{2})\\.(\\d{4})", "$3-$2-$1"))
-      .when(t.rlike("^\\d{2}/\\d{2}/\\d{4}$"),
-        regexp_replace(t, "(\\d{2})/(\\d{2})/(\\d{4})", "$3-$2-$1"))
-      .when(t.rlike("^\\d{4}-\\d{2}-\\d{2}$"), t)
-      .otherwise(lit(""))
+  def classifyPages(pt: Dataset[_], rs: RuleSet = RuleSets.plugin): DataFrame = {
+    val in = pt.toDF()
+    val md = in.schema.fieldIndex("page_md")
+    val out = Seq("page_type", "portfolio_no", "client_name", "as_of_date")
+      .foldLeft(in.schema)(_.add(_, StringType, nullable = false))
+    in.mapPartitions(_.map { r =>
+      val text = r.getString(md)
+      val (portfolioNo, clientName, asOfDate) = PageKernel.context(text)
+      Row.fromSeq(r.toSeq ++ Seq(ScalarRules.effectivePageType(text, rs),
+        portfolioNo, clientName, asOfDate))
+    })(Encoders.row(out))
   }
 
   /** Full pipeline: pages → records, in [[PageKernel.Schema]]. After
@@ -282,7 +165,7 @@ object ExtractionPipeline {
 
   /** The full event stream — page-stage (extract) + record-stage
     * (route/validate) + stitch-stage — over classified pages (see
-    * [[classifyPagesDf]]), with the page kernel run on each page's own
+    * [[classifyPages]]), with the page kernel run on each page's own
     * classification and context. The classified frame and the records
     * are localCheckpoint'ed, so the projections share one pass.
     */

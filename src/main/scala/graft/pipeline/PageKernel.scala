@@ -30,9 +30,7 @@ final class PageKernel(rs: RuleSet) extends Serializable {
     val segs = ScalarEvaluator.segmentsOf(pageType, md)
     if (segs.isEmpty) Iterator.empty
     else {
-      val portfolioNo = TextOps.extractPortfolioNo(md).getOrElse("")
-      val clientName = TextOps.extractClientName(md).getOrElse("")
-      val asOfDate = TextOps.extractAsOfDate(md).getOrElse("")
+      val (portfolioNo, clientName, asOfDate) = context(md)
       segs.iterator.map(s => Row.fromSeq(
         record(p.url, pageType, portfolioNo, clientName, asOfDate, s)))
     }
@@ -80,6 +78,14 @@ final class PageKernel(rs: RuleSet) extends Serializable {
 }
 
 object PageKernel {
+
+  /** A page's context (G4): its portfolio_no, client_name and
+    * as_of_date, each "" when the page has none.
+    */
+  def context(md: String): (String, String, String) =
+    (TextOps.extractPortfolioNo(md).getOrElse(""),
+      TextOps.extractClientName(md).getOrElse(""),
+      TextOps.extractAsOfDate(md).getOrElse(""))
 
   /** The extracted fields in evaluation order: a `page_context` key
     * naming one of them reads it only from a later field.

@@ -242,10 +242,10 @@ object ScalarEvaluator {
     * VAL_DATE (impossible calendar date), VAL_CURR (currency-list
     * membership), VAL_RANGE (max 12 integer / 2 decimal digits,
     * docs/rule_2.txt number constraints), VAL_CONFLICT (settlement
-    * before trade date). Code order here is the contract the catalog's
-    * Column form (ExtractionPipeline.validationErrorsCol) reproduces.
-    * Numbers take scale 6, half-up, like a decimal(38,6) cast. The one
-    * validator of the golden twin and the page kernel.
+    * before trade date). Codes are listed in the order checked here,
+    * which q36's oracle SQL reproduces. Numbers take scale 6, half-up,
+    * like a decimal(38,6) cast. The one validator: the golden twin, the
+    * page kernel and q36 call it.
     */
   def validate(r: ExtractedRecord): ExtractedRecord = {
     val errs = ArrayBuffer.empty[String]

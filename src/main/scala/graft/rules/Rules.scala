@@ -1,28 +1,6 @@
 package graft.rules
 
 import java.util.Locale
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
-/** Condition algebra of the reference's rule engine
-  * (/root/reference/pipeline/extractors/base.py:31-54):
-  * str ⇒ substring contains; list ⇒ AND; {all_of} / {any_of} /
-  * {none_of} / {contains}, as a scalar predicate.
-  */
-sealed trait Cond
-object Cond {
-  case class Contains(s: String) extends Cond
-  case class AllOf(cs: Seq[Cond]) extends Cond
-  case class AnyOf(cs: Seq[Cond]) extends Cond
-  case class NoneOf(cs: Seq[Cond]) extends Cond
-
-  def eval(text: String, c: Cond): Boolean = c match {
-    case Contains(s) => text.contains(s)
-    case AllOf(cs)   => cs.forall(eval(text, _))
-    case AnyOf(cs)   => cs.exists(eval(text, _))
-    case NoneOf(cs)  => !cs.exists(eval(text, _))
-  }
-}
 
 /** Page-classification rule
   * (/root/reference/soa_extractor/rules/rule.json:2-39): match is
@@ -129,8 +107,11 @@ object RuleSets {
     plugin.copy(name = "soa", headerMode = SoaHeader, othersFallback = false)
 }
 
-/** Scalar (non-Spark) rule evaluation — used by the golden evaluator and
-  * unit tests. Mirrors the Python loops exactly.
+/** The rule engine: priority-ordered, first-match-wins keyword rules
+  * for pages, records and transaction types. Mirrors the Python loops
+  * exactly. The one implementation: the page kernel, the page-event
+  * log, the golden evaluator and the catalog's extraction queries all
+  * call it.
   */
 object ScalarRules {
   private def lower(s: String) = s.toLowerCase(Locale.ROOT)
@@ -157,8 +138,8 @@ object ScalarRules {
   }
 
   /** OthersPlugin.identify (others.py:9-29): a fallback-classified page
-    * is claimed by "Others" unless its text (leading ASCII whitespace
-    * stripped, matching the Column twin's regexp `^\s+`) starts with an
+    * is claimed by "Others" unless its text, with leading ASCII
+    * whitespace (space, tab, LF, CR, VT, FF) stripped, starts with an
     * excluded header.
     */
   def isOthersPage(text: String, rs: RuleSet): Boolean = {
@@ -195,90 +176,5 @@ object ScalarRules {
       }
       .map(_.output)
       .getOrElse(rs.txnFallback)
-  }
-}
-
-/** Catalyst compiler: rule sets → pure `Column` when-chains. No UDFs —
-  * classification stays inside whole-stage codegen and is pushdown-able.
-  * `when` order encodes priority (highest first), matching the Python
-  * first-match-wins loop.
-  */
-object RuleCompiler {
-
-  /** Header slice as a Column over the page text. */
-  def headerCol(text: Column, mode: HeaderMode): Column = {
-    val lines = split(text, "\n", -1)
-    val sliceCol = mode match {
-      case SoaHeader => slice(lines, 1, 20)
-      case PluginHeader =>
-        val hashLines = filter(lines, l => startswith(ltrim(l), lit("#")))
-        when(size(hashLines) > 0, hashLines).otherwise(slice(lines, 1, 10))
-    }
-    lower(concat_ws("\n", sliceCol))
-  }
-
-  private def containsAnyLower(text: Column, kws: Seq[String]): Column =
-    kws.map(k => text.contains(lit(k.toLowerCase(Locale.ROOT))))
-      .reduceOption(_ || _).getOrElse(lit(false))
-
-  /** page_type from an ALREADY-MATERIALIZED lowercased header column.
-    * IMPORTANT: pass an attribute (withColumn-materialized), not an
-    * expression — the when-chain references it once per keyword and
-    * Catalyst would otherwise duplicate the whole header computation
-    * into every branch (CollapseProject re-inlines cheap-looking
-    * aliases; HOF-bearing header derivation is not codegen-CSE'd).
-    */
-  def classifyPageFromHeader(header: Column, rs: RuleSet): Column =
-    rs.sortedPageRules.filterNot(_.fallback).foldRight(lit(rs.pageFallback)) {
-      (r, elseCol) =>
-        when(containsAnyLower(header, r.containsAny), lit(r.pageType))
-          .otherwise(elseCol)
-    }
-
-  /** page text → page_type column (single-expression form — fine for
-    * small/one-off projections; prefer materializing headerCol +
-    * classifyPageFromHeader in hot paths).
-    */
-  def classifyPage(text: Column, rs: RuleSet): Column =
-    classifyPageFromHeader(headerCol(text, rs.headerMode), rs)
-
-  /** Others-fallback re-test (ScalarRules.effectivePageType twin):
-    * `pageType` must be an ALREADY-MATERIALIZED classification attribute
-    * (see classifyPageFromHeader note). Identity when the rule set has
-    * othersFallback disabled.
-    */
-  def othersFallbackCol(pageType: Column, md: Column, rs: RuleSet): Column =
-    if (!rs.othersFallback) pageType
-    else {
-      val stripped = regexp_replace(md, "^\\s+", "")
-      val excluded = rs.othersExcludedPrefixes
-        .map(p => stripped.startsWith(lit(p)))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      when(pageType === lit(rs.pageFallback) && !excluded, lit("Others"))
-        .otherwise(pageType)
-    }
-
-  /** row text → struct(txn_group, txn_type). */
-  def classifyRecord(rowText: Column, rs: RuleSet): Column = {
-    val rl = lower(rowText)
-    val (fg, ft) = rs.recordFallback
-    val fallbackCol = struct(lit(fg).as("txn_group"), lit(ft).as("txn_type"))
-    rs.sortedRecordRules.filterNot(_.fallback).foldRight(fallbackCol) {
-      (r, elseCol) =>
-        when(containsAnyLower(rl, r.matchAny),
-          struct(lit(r.outputGroup).as("txn_group"),
-            lit(r.output).as("txn_type"))).otherwise(elseCol)
-    }
-  }
-
-  /** row text → transaction type (with exclude_if_contains). */
-  def classifyTxnType(rowText: Column, rs: RuleSet): Column = {
-    val rl = lower(rowText)
-    rs.sortedTxnRules.filterNot(_.fallback).foldRight(lit(rs.txnFallback)) {
-      (r, elseCol) =>
-        val hit = containsAnyLower(rl, r.matchAny) &&
-          !containsAnyLower(rl, r.excludeIfContains)
-        when(hit, lit(r.output)).otherwise(elseCol)
-    }
   }
 }

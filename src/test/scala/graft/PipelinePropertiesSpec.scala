@@ -3,19 +3,22 @@ package graft
 import graft.extract.ContentExtractor
 import graft.gen.PagesGen
 import graft.io.TableIO
-import graft.model.Span
+import graft.model.{Page, Span}
 import graft.pipeline.{ExtractionPipeline, ScalarEvaluator}
 import graft.rules.{RuleSets, ScalarRules}
 import graft.textops.TextOps
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.util.Pretty
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import scala.util.Try
 
 /** Fixed-seed scalacheck properties of the extraction pipeline over
   * generated inputs: the Spark records and main texts equal their
-  * scalar twins' at any partitioning, the segmentation kernel folds
+  * scalar twins' at any partitioning, page events classify each page
+  * as its records do, the segmentation kernel folds
   * every kept Positions row into exactly one segment, and a resumable
   * run killed part way and resumed equals an uninterrupted one.
   */
@@ -68,6 +71,71 @@ class PipelinePropertiesSpec extends AnyFunSuite {
         (p.url, c.main_text, c.spans, c.content_kind, c.n_blocks, c.error)
       }.sortBy(_._1)
       Prop(got == want) :| s"seed=$seed pages=${idx.size} partitions=$parts"
+    }, trials = 10)
+  }
+
+  /** Page events' classification and context per url:
+    * (page_type, portfolio_no, client_name, as_of_date).
+    */
+  private def classified(pages: Dataset[Page],
+      parts: Int): Map[String, (String, String, String, String)] = {
+    import spark.implicits._
+    ExtractionPipeline.classifyPages(ExtractionPipeline.pageTexts(pages,
+        parts, needMain = false), RuleSets.plugin)
+      .select("url", "page_type", "portfolio_no", "client_name", "as_of_date")
+      .as[(String, String, String, String, String)].collect()
+      .map { case (u, pt, pn, cn, asOf) => u -> (pt, pn, cn, asOf) }.toMap
+  }
+
+  test("page events: classifyPages agrees with records on a tab-indented " +
+      "'#' line and a tab-padded client name") {
+    import spark.implicits._
+    // both lines sit in the table's verbatim markup, so page_md keeps
+    // their tabs; the header's only other '#' line matches no page rule
+    val html = "<html><body><h1>Account statement</h1><table>\n" +
+      "Portfolio number 123-456789-01\n\tJane Doe\t\n" +
+      "\t# Trade information\n" +
+      "<thead><tr><th>Date</th><th>Type</th><th>Amount</th></tr></thead>" +
+      "<tbody><tr><td>01.02.2024</td><td>YOUR PURCHASE</td>" +
+      "<td>USD 1'000.00</td></tr></tbody></table>" +
+      "<p>Statement of assets</p></body></html>"
+    val pages = spark.createDataset(Seq(Page("doc://tabs",
+      new java.sql.Timestamp(0L), html.getBytes(UTF_8), "", "en")))
+    val recs = ExtractionPipeline.records(pages, RuleSets.plugin, 0)
+      .select("page_type", "client_name").as[(String, String)]
+      .collect().toSeq
+    val (pt, _, cn, _) = classified(pages, 0)("doc://tabs")
+    assert(recs.nonEmpty && recs.forall(_ == ((pt, cn))),
+      s"records $recs, page event ($pt, $cn)")
+    assert((pt, cn) === (("Trade", "Jane Doe")))
+  }
+
+  test("property: classifyPages == the scalar twin per page, and agrees " +
+      "with the page's records, partitions in {0, 1, 4}") {
+    import spark.implicits._
+    check(Prop.forAllNoShrink(pageSets) { case (seed, idx, parts) =>
+      val pages = idx.map(PagesGen.pageFor(_, seed))
+      val got = classified(spark.createDataset(pages), parts)
+      val byPage = pages.map { p =>
+        val md = ContentExtractor.extract(p.html).page_md
+        val want = (ScalarRules.effectivePageType(md, RuleSets.plugin),
+          TextOps.extractPortfolioNo(md).getOrElse(""),
+          TextOps.extractClientName(md).getOrElse(""),
+          TextOps.extractAsOfDate(md).getOrElse(""))
+        val (pt, pn, cn, asOf) = got(p.url)
+        // each record carries its page's type and the context its
+        // family reads (Others records read none)
+        val recsAgree = ScalarEvaluator.process(p, RuleSets.plugin).forall { r =>
+          r.page_type == pt && (pt match {
+            case "Positions" => r.portfolio_no == pn && r.valuation_date == asOf
+            case "Others"    => true
+            case _           => r.client_name == cn
+          })
+        }
+        Prop(got(p.url) == want && recsAgree) :| s"url=${p.url}"
+      }
+      (Prop(got.size == pages.size) && Prop.all(byPage: _*)) :|
+        s"seed=$seed pages=${idx.size} partitions=$parts"
     }, trials = 10)
   }
 

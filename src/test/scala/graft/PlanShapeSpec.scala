@@ -228,18 +228,39 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(exchanges.isEmpty, s"exchanges in the stream's write plan: $exchanges")
   }
 
-  test("extraction pipeline: no filter re-derives the page header from page_md") {
+  test("page events: classifyPages is typed maps over the scan, no " +
+      "page-rule keyword") {
+    // classification and page context run the page kernel's scalar calls
+    // in a typed map after extraction's: no operator moves rows, and no
+    // page rule is compiled into a plan expression
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec}
+    import org.apache.spark.unsafe.types.UTF8String
+    import spark.implicits._
+    val rs = graft.rules.RuleSets.plugin
+    val ep = graft.pipeline.ExtractionPipeline
+    val dir = java.nio.file.Files.createTempDirectory("graft_ps_events")
+      .resolve("pages").toString
+    graft.gen.PagesGen.pages(spark, 20, 42, 2).write.parquet(dir)
     withPlainPlan {
-      val pages = graft.gen.PagesGen.pages(spark, 50, 42, 2)
-      val plan = graft.pipeline.ExtractionPipeline.records(pages,
-        partitions = 0).queryExecution.executedPlan
-      val filters = plan.collect {
-        case f: org.apache.spark.sql.execution.FilterExec => f
-      }
-      filters.foreach { f =>
-        assert(!f.condition.references.exists(_.name == "page_md"),
-          s"filter over page_md: ${f.condition.sql.take(200)}")
-      }
+      val plan = ep.classifyPages(ep.pageTexts(
+        spark.read.parquet(dir).as[graft.model.Page], partitions = 0,
+        needMain = false), rs).queryExecution.executedPlan
+      val maps = plan.collect { case m: MapPartitionsExec => m }
+      assert(maps.size === 2, s"typed maps in the page-events plan:\n$plan")
+      assert(maps.head.collect { case f: FileSourceScanExec => f }.size === 1,
+        s"the typed maps do not run over the scan:\n$plan")
+      val exchanges = plan.collect { case e: Exchange => e.nodeName }
+      assert(exchanges.isEmpty, s"exchanges in the page-events plan: $exchanges")
+      val keywords = rs.pageRules.flatMap(_.containsAny)
+        .flatMap(k => Seq(k, k.toLowerCase(java.util.Locale.ROOT)))
+        .map(UTF8String.fromString).toSet[Any]
+      val hits = plan.collect { case node =>
+        node.expressions.flatMap(_.collect {
+          case l: Literal if keywords.contains(l.value) => l.sql
+        })
+      }.flatten
+      assert(hits.isEmpty, s"page-rule keywords in the plan: $hits")
     }
   }
 

@@ -57,42 +57,6 @@ class RulesSpec extends AnyFunSuite {
     assert(ScalarRules.classifyTxnType("SPOT SALE deal", rs) === "Sell")
   }
 
-  test("condition algebra") {
-    import Cond._
-    val c = AllOf(Seq(Contains("a"), AnyOf(Seq(Contains("b"), Contains("c"))),
-      NoneOf(Seq(Contains("z")))))
-    assert(Cond.eval("xaxbx", c))
-    assert(!Cond.eval("xaxbz", c))
-    assert(!Cond.eval("xax", c))
-  }
-
-  test("Column compiler matches scalar on a corpus") {
-    val spark = SparkTestBase.spark
-    import spark.implicits._
-    val texts = Seq(
-      "# Detailed positions\nstuff", "# Transaction list\nrows",
-      "# FX & TF\n", "plain text\nPortfolio number", "# Other\nnothing",
-      "# trade INFORMATION\n", ("y\n" * 12) + "Holdings")
-    val df = texts.toDF("t")
-    for (r <- Seq(RuleSets.plugin, RuleSets.soa)) {
-      val got = df.select(RuleCompiler.classifyPage($"t", r)).as[String]
-        .collect().toSeq
-      val want = texts.map(ScalarRules.classifyPage(_, r))
-      assert(got === want, s"variant ${r.name}")
-    }
-    val rows = Seq("FX FORWARD SALE", "YOUR SALE", "SPOT x", "SPOT SALE",
-      "buy low", "nothing", "REPAYMENT", "new invest")
-    val df2 = rows.toDF("t")
-    val rec = RuleCompiler.classifyRecord($"t", rs)
-    val gotRec = df2
-      .select(rec.getField("txn_group"), rec.getField("txn_type"))
-      .as[(String, String)].collect().toSeq
-    assert(gotRec === rows.map(ScalarRules.classifyRecord(_, rs)))
-    val gotTxn = df2.select(RuleCompiler.classifyTxnType($"t", rs))
-      .as[String].collect().toSeq
-    assert(gotTxn === rows.map(ScalarRules.classifyTxnType(_, rs)))
-  }
-
   test("JSON loader: parses the reference rule.json field shapes") {
     val json = """{
       "page_classification": {"rules": [

@@ -1,7 +1,6 @@
 package graft
 
 import graft.textops.TextOps
-import graft.pipeline.ExtractionPipeline
 import org.scalatest.funsuite.AnyFunSuite
 
 class TextOpsSpec extends AnyFunSuite {
@@ -105,27 +104,6 @@ class TextOpsSpec extends AnyFunSuite {
     assert(TextOps.splitFirst("100 ACME Bond") === ("100", Some("ACME Bond")))
     assert(TextOps.splitFirst("solo") === ("solo", None))
     assert(TextOps.splitFirst("a   b  c") === ("a", Some("b  c")))
-  }
-
-  test("Column normalizers match scalar kernels on a corpus") {
-    val spark = SparkTestBase.spark
-    import spark.implicits._
-    val nums = Seq("1'234,567.89", "(500.25)", "-42", "(-42)", "12 345.00",
-      "abc", "", "0.1", "999", "1,000", "((5))", "(abc)", "5.5.5", " 77 ")
-    val gotNum = nums.toDF("x")
-      .select(ExtractionPipeline.normalizeNumberCol($"x"))
-      .collect().map(r => Option(r.get(0)).map(_.toString))
-    val wantNum = nums.map(TextOps.normalizeNumber(_)
-      .map(_.setScale(6).bigDecimal.toPlainString))
-    gotNum.zip(wantNum).zip(nums).foreach { case ((g, w), n) =>
-      assert(g === w, s"input '$n'")
-    }
-    val dates = Seq("01.02.2024", "01/02/2024", "2024-02-01", "1.2.2024",
-      "", "x", "01.02.20245")
-    val gotDate = dates.toDF("x")
-      .select(ExtractionPipeline.normalizeDateCol($"x")).as[String]
-      .collect().toSeq
-    assert(gotDate === dates.map(TextOps.normalizeDate(_).getOrElse("")))
   }
 
   test("property: normalizeNumber round-trips plain decimals (seeded)") {
