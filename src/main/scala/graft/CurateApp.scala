@@ -1,7 +1,12 @@
 package graft
 
-import graft.io.StagedJob
+import graft.functions.Md5Prefix32
+import graft.gen.PagesGen
+import graft.io.{StagedJob, Warc}
+import graft.model.Page
 import graft.ops.Curation
+import graft.pipeline.ExtractionPipeline
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point for the corpus-curation pipeline (the
@@ -14,11 +19,15 @@ import org.apache.spark.sql.functions._
   *     --output <dir> \
   *     [--id doc_id] [--text text] [--min-tokens 10] [--para-min-docs 3] \
   *     [--span-scrub-n 8 | --sa-scrub-n 8] [--max-rare-bigram-ppm 400000] \
+  *     [--fre-band lo:hi] \
   *     [--audit-leakage true] [--write-index true | --index <priorOut>] \
-  *     [--resample-keep 0.5 [--resample-alpha 0.5]] [--seq-len 2048 [--shards 64]]
-  *     [--zorder true [--zorder-files 16]]
-  *     [--mix-budget 20000 [--mix-weights en:400000,de:200000,...]]
+  *     [--resample-keep 0.5 [--resample-alpha 0.5]] [--seq-len 2048 [--shards 64]] \
+  *     [--zorder true [--zorder-files 16]] \
+  *     [--mix-budget 20000 [--mix-weights en:400000,de:200000,...]] \
   *     [--hll-stats true]
+  *
+  * An unknown option or an option without a value fails before the
+  * session starts, listing the known options.
   *
   * Incremental ingestion: a bootstrap run with --write-index true
   * persists <out>/index_sigs; a later batch run with --index <priorOut>
@@ -27,14 +36,17 @@ import org.apache.spark.sql.functions._
   * --audit-leakage true adds the split-leakage audit as a final stage
   * fed by the near-dup stage's own LSH pairs.
   *
-  * The `pages:` input forms run the HTML boilerplate-strip extraction
-  * front end first (ExtractionPipeline.pageTexts) and curate its
-  * main_text — raw crawl HTML → curated, packed training sequences in
-  * one submit. The `warc:` forms do the same but ingest the pages from
-  * a WARC-subset archive directory (io/Warc splittable read);
-  * `warc:synth:N` serializes N generator pages through a real archive
-  * under $output first, so one submit exercises the full crawl-dump
-  * path: archive write → splittable read → extract → curate → pack.
+  * The `pages:` input forms start with one more committed stage,
+  * [[extractedTexts]]: the HTML boilerplate-strip extraction
+  * (ExtractionPipeline.pageTexts, inside the scan's tasks) lands each
+  * page's main_text under $output/stage_0_extract, and curation reads
+  * that table — raw crawl HTML → curated, packed training sequences in
+  * one submit, with each page extracted once across reruns. The `warc:`
+  * forms do the same but ingest the pages from a WARC-subset archive
+  * directory (io/Warc splittable read); `warc:synth:N` serializes N
+  * generator pages through a real archive under $output first, so one
+  * submit exercises the full crawl-dump path: archive write →
+  * splittable read → extract → curate → pack.
   *
   * Runs Curation.curateStaged (4 stage-checkpointed corpus-global
   * stages; a killed run resumes from the first uncommitted stage), then
@@ -44,13 +56,76 @@ import org.apache.spark.sql.functions._
   * into fixed-length training sequences, landing the thin assignment
   * table under $output/packed. Re-invoking on a complete output is a
   * no-op apart from the final writes — the full corpus → training-
-  * sequences pipeline in one submit.
+  * sequences pipeline in one submit. The summary's `rows_in` counts
+  * the input documents, or the committed extraction stage's rows.
   */
 object CurateApp {
+
+  /** The options `main` reads. */
+  private val Known = Seq("input", "output", "id", "text", "min-tokens",
+    "para-min-docs", "span-scrub-n", "sa-scrub-n", "max-rare-bigram-ppm",
+    "fre-band", "audit-leakage", "write-index", "index", "resample-keep",
+    "resample-alpha", "seq-len", "shards", "zorder", "zorder-files",
+    "mix-budget", "mix-weights", "hll-stats")
+
+  /** The committed stage that holds the extracted page texts. */
+  val ExtractStage = "0_extract"
+
+  /** The `pages:`/`warc:` front end: each page's boilerplate-stripped
+    * main text, extracted inside the scan's tasks (no raw-page shuffle)
+    * and committed under `out` as stage [[ExtractStage]] (SURVEY S6:
+    * the extracted text is persisted and is the resume point). `pages`
+    * is evaluated only when that stage is not committed yet, so a
+    * resumed or repeated run extracts no page again. Output:
+    * (doc_id, lang, text), doc_id being the portable 32-bit url hash.
+    */
+  def extractedTexts(spark: SparkSession, out: String)
+      (pages: => Dataset[Page]): DataFrame =
+    StagedJob.stage(spark, out, ExtractStage,
+        requiredCols = Seq("doc_id", "lang", "text")) {
+      ExtractionPipeline.pageTexts(pages, partitions = 0)
+        .select(Md5Prefix32(col("url")).as("doc_id"), col("lang"),
+          col("main_text").as("text"))
+    }
+
+  /** The pages of a `pages:` or `warc:` input. WARC payloads are the raw
+    * page HTML. `warc:synth:N` serializes N generator pages through a
+    * real archive under `out` first, the full crawl-dump path (write →
+    * splittable read → parse); the archive epoch stands in for
+    * per-record WARC-Date, which the subset parser does not surface.
+    */
+  private def inputPages(spark: SparkSession, input: String,
+      out: String): Dataset[Page] = {
+    import spark.implicits._
+    if (input.startsWith("warc:")) {
+      val src = input.stripPrefix("warc:")
+      val dir =
+        if (src.startsWith("synth:")) {
+          val d = s"$out/_warc_synth"
+          Warc.writeWarc(
+            PagesGen.pages(spark, src.stripPrefix("synth:").toLong)
+              .select(col("url"), col("html").cast("string").as("payload"))
+              .repartition(8, col("url")),
+            "url", "payload", d)
+          d
+        } else src
+      Warc.readWarc(spark, dir)
+        .select(col("url"),
+          lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+            .as("warc_ts"),
+          col("payload").cast("binary").as("html"),
+          lit("").as("text"), lit("").as("lang"))
+        .as[Page]
+    } else {
+      val src = input.stripPrefix("pages:")
+      if (src.startsWith("synth:"))
+        PagesGen.pages(spark, src.stripPrefix("synth:").toLong)
+      else spark.read.parquet(src).as[Page]
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val opts = AppOptions.parse("CurateApp", args.toSeq, Known)
     val input = opts.getOrElse("input", "/root/testdata/sf0.01/documents.parquet")
     val output = opts.getOrElse("output", "/tmp/graft_curate_out")
     val idCol = opts.getOrElse("id", "doc_id")
@@ -59,49 +134,10 @@ object CurateApp {
     val spark = GraftSession.submit("graft-curate")
 
     val (docs, idCol0, textCol0) =
-      if (input.startsWith("pages:") || input.startsWith("warc:")) {
-        import spark.implicits._
-        val pages: org.apache.spark.sql.Dataset[graft.model.Page] =
-          if (input.startsWith("warc:")) {
-            // WARC archive ingestion: payloads are the raw page HTML.
-            // warc:synth:N serializes N generator pages through a real
-            // archive under $output first — the full crawl-dump path
-            // (write → splittable read → parse) in one submit; the
-            // archive epoch stands in for per-record WARC-Date (the
-            // subset parser doesn't surface it)
-            val src = input.stripPrefix("warc:")
-            val dir =
-              if (src.startsWith("synth:")) {
-                val d = s"$output/_warc_synth"
-                graft.io.Warc.writeWarc(
-                  graft.gen.PagesGen.pages(spark,
-                      src.stripPrefix("synth:").toLong)
-                    .select(col("url"),
-                      col("html").cast("string").as("payload"))
-                    .repartition(8, col("url")),
-                  "url", "payload", d)
-                d
-              } else src
-            graft.io.Warc.readWarc(spark, dir)
-              .select(col("url"),
-                lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
-                  .as("warc_ts"),
-                col("payload").cast("binary").as("html"),
-                lit("").as("text"), lit("").as("lang"))
-              .as[graft.model.Page]
-          } else {
-            val src = input.stripPrefix("pages:")
-            if (src.startsWith("synth:"))
-              graft.gen.PagesGen.pages(spark, src.stripPrefix("synth:").toLong)
-            else spark.read.parquet(src).as[graft.model.Page]
-          }
-        // extraction front end: boilerplate-stripped main text; doc id
-        // = the portable 32-bit url hash (stable, engine-reproducible)
-        val texts = graft.pipeline.ExtractionPipeline.pageTexts(pages)
-          .select(graft.functions.Md5Prefix32(col("url")).as("doc_id"),
-            col("lang"), col("main_text").as("text"))
-        (texts.toDF(), "doc_id", "text")
-      } else (spark.read.parquet(input), idCol, textCol)
+      if (input.startsWith("pages:") || input.startsWith("warc:"))
+        (extractedTexts(spark, output)(inputPages(spark, input, output)),
+          "doc_id", "text")
+      else (spark.read.parquet(input), idCol, textCol)
     val t0 = System.nanoTime()
     // --span-scrub-n 8: corpus-level exact-substring scrub stage
     // (single parse: the curateStaged call and the stage accounting

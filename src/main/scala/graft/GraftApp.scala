@@ -12,13 +12,17 @@ import org.apache.spark.sql.Dataset
   * Usage:
   *   spark-submit --class graft.GraftApp <jar> \
   *     --input <pages parquet path | synth:N> \
-  *     --output <dir> [--buckets 64] [--wave 8] [--variant plugin|soa]
+  *     --output <dir> [--buckets 64] [--wave 8] [--variant plugin|soa] \
+  *     [--page-events true]
   *
   * Reads the pages table (url, warc_ts, html, text, lang), runs the
   * resumable extraction (url-hash bucketed, per-bucket lineage) and
   * writes records partitioned by bucket. A killed run re-invoked with
   * the same output dir resumes from the lineage log. The record-event
   * log is a view over the committed records (`TableIO.readEvents`).
+  *
+  * An unknown option, an option without a value or a `--variant` other
+  * than plugin or soa fails before the session starts.
   *
   * Prints one summary line: buckets committed by this run, committed
   * records (the lineage `outputRows` sum, which equals the committed
@@ -27,15 +31,18 @@ import org.apache.spark.sql.Dataset
   */
 object GraftApp {
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val opts = AppOptions.parse("GraftApp", args.toSeq, Seq("input",
+      "output", "buckets", "wave", "variant", "page-events"))
     val input = opts.getOrElse("input", "synth:10000")
     val output = opts.getOrElse("output", "/tmp/graft_out")
     val buckets = opts.getOrElse("buckets", "64").toInt
     val wave = opts.getOrElse("wave", "8").toInt
-    val rs = if (opts.getOrElse("variant", "plugin") == "soa") RuleSets.soa
-      else RuleSets.plugin
+    val rs = opts.getOrElse("variant", "plugin") match {
+      case "plugin" => RuleSets.plugin
+      case "soa"    => RuleSets.soa
+      case v => throw new IllegalArgumentException(
+        s"GraftApp: --variant is plugin or soa, got '$v'")
+    }
 
     val spark = GraftSession.submit("graft-extract")
     import spark.implicits._

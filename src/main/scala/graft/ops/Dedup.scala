@@ -893,28 +893,6 @@ object Dedup {
         (col("id") === col("_bid")).as("survivor"))
   }
 
-  /** REC_DUP events (reference error_system.py:23, stage record_dedup):
-    * one WARN event per document dropped by dedup — every canonicalize
-    * output row whose id is not its own canonical survivor. Same column
-    * set as the extraction pipeline's event log, so the two streams
-    * union into one A3 stats table.
-    */
-  def dupEvents(labels: DataFrame): DataFrame =
-    labels.filter(col("id") =!= col("canonical_id"))
-      .select(
-        current_timestamp().as("ts"),
-        lit("WARN").as("level"),
-        lit("REC_DUP").as("code"),
-        lit("record_dedup").as("stage"),
-        col("id").cast("string").as("url"),
-        lit(0).as("page"),
-        lit("").as("record_id"),
-        lit("dedup").as("group"),
-        lit("").as("txn_type"),
-        concat(lit("canonical="), col("canonical_id").cast("string"))
-          .as("message"),
-        lit("SOA-REC-DUP-004").as("ref_code"))
-
   /** Embedding near-duplicate pairs: cosine ≥ threshold, bucketed by
     * random-hyperplane LSH so the pairwise work stays within buckets.
     *

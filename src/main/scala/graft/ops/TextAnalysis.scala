@@ -61,13 +61,6 @@ object TextAnalysis {
           .otherwise(zero).cast("long"))
   }
 
-  /** BPE-ish subword count: letter runs, digit runs, single punctuation —
-    * the standard pre-tokenizer regex family.
-    */
-  def subwordCount(text: Column): Column =
-    size(regexp_extract_all(lower(text),
-      lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0)))
-
   /** Stopword-list hits for a language: whitespace-tokenize once, count
     * list membership. One split per row regardless of list size — the
     * per-word regex-scan form costs |words| regex passes over the full
@@ -244,41 +237,6 @@ object TextAnalysis {
     df.withColumns((hitCols ++ scCols).toMap)
       .withColumn(out, langDecision(textRaw, hits, sc))
       .drop(tmp ++ (hitCols ++ scCols).map(_._1): _*)
-  }
-
-  /** Quality features: length, token stats, character-class ratios,
-    * stopword ratio — the usual pretraining-corpus filters.
-    */
-  def qualityFeatures(text: Column): Seq[(String, Column)] = {
-    val len = length(text).cast("double")
-    val toks = tokenCount(text).cast("double")
-    val letters = length(regexp_replace(lower(text), "[^a-z]", ""))
-      .cast("double")
-    val digits = length(regexp_replace(text, "[^0-9]", "")).cast("double")
-    val punct = length(regexp_replace(text, "[a-zA-Z0-9\\s]", ""))
-      .cast("double")
-    val stops = stopwordHits(lower(text), StopEn).cast("double")
-    Seq(
-      "n_chars_m" -> len,
-      "n_tokens" -> toks,
-      "mean_token_len" ->
-        when(toks > 0, round(len / toks, 6)).otherwise(lit(0.0)),
-      "alpha_ratio" -> when(len > 0, round(letters / len, 6))
-        .otherwise(lit(0.0)),
-      "digit_ratio" -> when(len > 0, round(digits / len, 6))
-        .otherwise(lit(0.0)),
-      "punct_ratio" -> when(len > 0, round(punct / len, 6))
-        .otherwise(lit(0.0)),
-      "stopword_ratio" -> when(toks > 0, round(stops / toks, 6))
-        .otherwise(lit(0.0)))
-  }
-
-  /** Composite quality score in [0,1] (deterministic linear blend). */
-  def qualityScore(text: Column): Column = {
-    val f = qualityFeatures(text).toMap
-    round(least(lit(1.0), greatest(lit(0.0),
-      f("alpha_ratio") * 0.5 + f("stopword_ratio") * 0.3 +
-        when(f("n_tokens") >= 20, 0.2).otherwise(f("n_tokens") / 100.0))), 6)
   }
 
   /** Character-level Shannon entropy of the text, in bits/char

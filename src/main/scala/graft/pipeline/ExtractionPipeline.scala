@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
 /** The Spark-native extraction pipeline (north_rule):
   *
   *   Dataset[Page]
-  *     → optional url-hash repartition (X4)
+  *     → url-hash repartition (X4), only when the caller asks
   *     → mapPartitions: the page kernel, per page          [typed map]
   *         content extraction (X1 HTML / X2 PDF)
   *         → page classification (C1/C2) + page context (G4)
@@ -34,12 +34,13 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
   */
 object ExtractionPipeline {
 
-  /** Stage 1: explicit url-hash partitioning + per-partition batched
-    * content extraction. The kernel objects are JVM-static singletons,
+  /** Stage 1: per-partition batched content extraction, inside the
+    * scan's tasks unless the caller asks for the url-hash repartition
+    * ([[balanced]]). The kernel objects are JVM-static singletons,
     * reused across all rows of a partition (the reference's
     * model-resident-per-process analogue, run.py:133-137).
     */
-  def pageTexts(pages: Dataset[Page], partitions: Int = 32,
+  def pageTexts(pages: Dataset[Page], partitions: Int = 0,
       needMain: Boolean = true): Dataset[PageText] = {
     val spark = pages.sparkSession
     import spark.implicits._
@@ -47,11 +48,13 @@ object ExtractionPipeline {
       .mapPartitions(_.map(ContentExtractor.extractPage(_, needMain)))
   }
 
-  /** X4: explicit url-hash partitioning for balanced extraction work.
-    * partitions <= 0 skips the shuffle and extracts inside the scan's
-    * own tasks, so parallelism comes from the scan splits
-    * (GraftSession.ScanSplits). TableIO's waves (buckets and stream
-    * micro-batches) do this: shuffling raw pages pays only for skew.
+  /** X4: explicit url-hash partitioning for balanced extraction work,
+    * only when a caller asks for it (partitions > 0): shuffling raw
+    * pages pays only for skew. The default, partitions <= 0, skips the
+    * shuffle and extracts inside the scan's own tasks, so parallelism
+    * comes from the scan splits (GraftSession.ScanSplits); TableIO's
+    * waves, stream micro-batches and CurateApp's extraction stage all
+    * run this way.
     */
   private def balanced(pages: Dataset[Page], partitions: Int): Dataset[Page] =
     if (partitions > 0) pages.repartition(partitions, col("url")) else pages
@@ -83,14 +86,14 @@ object ExtractionPipeline {
     * the [[PageKernel]] on each page.
     */
   def records(pages: Dataset[Page], rs: RuleSet = RuleSets.plugin,
-      partitions: Int = 32): DataFrame = {
+      partitions: Int = 0): DataFrame = {
     val kernel = new PageKernel(rs)
     balanced(pages, partitions).mapPartitions(_.flatMap(kernel.pageRecords))(
       Encoders.row(PageKernel.Schema))
   }
 
   /** Byte-identity artifact: url → (main_text, spans). */
-  def mainTexts(pages: Dataset[Page], partitions: Int = 32): DataFrame =
+  def mainTexts(pages: Dataset[Page], partitions: Int = 0): DataFrame =
     pageTexts(pages, partitions).toDF()
       .select("url", "main_text", "spans", "content_kind", "n_blocks", "error")
 

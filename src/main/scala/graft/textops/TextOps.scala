@@ -18,12 +18,6 @@ case class ParsedTable(headers: Seq[String], rows: Seq[Seq[String]])
   */
 object TextOps {
 
-  /** Collapse whitespace runs to single spaces
-    * (pipeline/utils.py:4-10 — `" ".join(text.split())`).
-    */
-  def normalizeText(text: String): String =
-    if (text == null) "" else text.split("\\s+").filter(_.nonEmpty).mkString(" ")
-
   /** Strip tags and decode the four entities the reference decodes
     * (pipeline/utils.py:13-24), then trim.
     */
@@ -69,15 +63,6 @@ object TextOps {
       }
       ParsedTable(headers, rows)
     }
-
-  /** Markdown pipe-table rows: lines starting AND ending with `|`,
-    * skipping `---` separator rows (soa_extractor/run.py:33-47).
-    * Returns the raw row lines.
-    */
-  def markdownTableLines(text: String): Seq[String] =
-    text.split("\n", -1).iterator.map(_.trim)
-      .filter(l => l.startsWith("|") && l.endsWith("|") && !l.contains("---"))
-      .toSeq
 
   /** Split one markdown `|a|b|` row line into trimmed cells. */
   def markdownRowCells(line: String): Seq[String] = {
@@ -226,8 +211,7 @@ object TextOps {
   /** VAL_DATE spec: an ISO yyyy-MM-dd string that is also a possible
     * proleptic-Gregorian calendar date (month 1-12, day within the
     * month, Feb 29 only in leap years). Pure arithmetic — identical in
-    * the Column twin and the DuckDB oracle, no engine date-parser
-    * divergence.
+    * the DuckDB oracle, no engine date-parser divergence.
     */
   def isValidCalendarDate(iso: String): Boolean = {
     if (iso == null || !iso.matches("\\d{4}-\\d{2}-\\d{2}")) return false

@@ -313,19 +313,6 @@ class OpsSpec extends AnyFunSuite {
     assert(labels === Map(10L -> 10L, 11L -> 11L, 12L -> 11L, 13L -> 11L))
   }
 
-  test("dupEvents: one REC_DUP per dropped duplicate, survivors silent") {
-    import spark.implicits._
-    val ids = Seq(10L, 11L, 12L, 13L).toDF("id")
-    val chain = Seq((11L, 12L), (12L, 13L)).toDF("a", "b")
-    val ev = Dedup.dupEvents(Dedup.canonicalize(ids, "id", chain)).collect()
-    assert(ev.length === 2) // 12 and 13 dropped in favor of 11
-    assert(ev.forall(r => r.getAs[String]("code") === "REC_DUP" &&
-      r.getAs[String]("stage") === "record_dedup" &&
-      r.getAs[String]("message") === "canonical=11" &&
-      r.getAs[String]("ref_code") === "SOA-REC-DUP-004"))
-    assert(ev.map(_.getAs[String]("url")).sorted.toSeq === Seq("12", "13"))
-  }
-
   test("langId picks the language with most stopword hits") {
     import spark.implicits._
     val r = Seq("the cat and the dog is here",
@@ -346,17 +333,12 @@ class OpsSpec extends AnyFunSuite {
       "pl", "sv", "da", "id", "tr", "und"))
   }
 
-  test("quality score and token counts behave") {
+  test("token counts behave") {
     import spark.implicits._
     val df = Seq("the quick brown fox is in the house with the dog",
       "@#$% 1234 !!").toDF("t")
-    val q = df.select(TextAnalysis.qualityScore(col("t")).as[Double])
-      .collect()
-    assert(q(0) > q(1))
     val tc = df.select(TextAnalysis.tokenCount(col("t")).as[Int]).collect()
     assert(tc(0) === 11)
-    val sw = df.select(TextAnalysis.subwordCount(col("t")).as[Int]).collect()
-    assert(sw(1) === 7) // @ # $ % + "1234" + ! ! → 7 pieces
   }
 
   test("multimodal: decode stub round-trips header metadata; frames sampled") {

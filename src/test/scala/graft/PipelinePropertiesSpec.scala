@@ -45,17 +45,67 @@ class PipelinePropertiesSpec extends AnyFunSuite {
     parts <- Gen.oneOf(0, 1, 4)
   } yield (seed, idx.toSeq.sorted, parts)
 
-  test("property: Spark records == scalar records on generated page sets, " +
-      "partitions in {0, 1, 4}") {
+  /** Whitespace that `String.trim`, regex `\\s`, `Character.isWhitespace`
+    * and Spark's trims disagree on: tab, CR, NBSP and U+2000-U+200A.
+    */
+  private val Spaces = Seq('\t', '\r', '\u00a0') ++ ('\u2000' to '\u200a')
+
+  private val CellOrHeading = "<(td|th|h1|h2)>([^<]*)</(td|th|h1|h2)>".r
+
+  /** `p` with whitespace variants in its HTML's table cells and heading
+    * lines: each cell or heading gets a variant drawn by `rng` before
+    * its text, after it, in place of its first space, or none. PDFs and
+    * empty payloads stay as generated (`gen.PagesGen` writes only
+    * spaces and newlines).
+    */
+  private def withSpaces(p: Page, rng: scala.util.Random): Page =
+    if (p.html.isEmpty || graft.extract.PdfExtractor.isPdf(p.html)) p
+    else p.copy(html = CellOrHeading.replaceAllIn(
+      new String(p.html, UTF_8), { m =>
+        val ws = Spaces(rng.nextInt(Spaces.size)).toString
+        val body = m.group(2)
+        val mutated = rng.nextInt(4) match {
+          case 0 => ws + body
+          case 1 => body + ws
+          case 2 => body.replaceFirst(" ", ws)
+          case _ => body
+        }
+        scala.util.matching.Regex.quoteReplacement(
+          s"<${m.group(1)}>$mutated</${m.group(3)}>")
+      }).getBytes(UTF_8))
+
+  /** `pageSets`' pages, plain or with whitespace variants (a mutation
+    * seed per set).
+    */
+  private def pagesOf(seed: Long, idx: Seq[Long],
+      spaces: Boolean): Seq[Page] = {
+    val rng = new scala.util.Random(seed * 31 + idx.size)
+    idx.map { i =>
+      val p = PagesGen.pageFor(i, seed)
+      if (spaces) withSpaces(p, rng) else p
+    }
+  }
+
+  private def recordsMatchScalar(spaces: Boolean): Unit = {
     import spark.implicits._
     check(Prop.forAllNoShrink(pageSets) { case (seed, idx, parts) =>
-      val pages = idx.map(PagesGen.pageFor(_, seed))
+      val pages = pagesOf(seed, idx, spaces)
       val got = golden.sparkCanon(ExtractionPipeline.records(
         spark.createDataset(pages), RuleSets.plugin, parts))
       val want = pages.flatMap(ScalarEvaluator.process(_, RuleSets.plugin))
         .map(golden.canon).sorted
       Prop(got == want) :| s"seed=$seed pages=${idx.size} partitions=$parts"
     }, trials = 10)
+  }
+
+  test("property: Spark records == scalar records on generated page sets, " +
+      "partitions in {0, 1, 4}") {
+    recordsMatchScalar(spaces = false)
+  }
+
+  test("property: Spark records == scalar records on page sets with tab, " +
+      "CR, NBSP and U+2000-U+200A in cells and headings") {
+    recordsMatchScalar(spaces = true)
   }
 
   test("property: Spark mainTexts == ContentExtractor.extract on every " +
@@ -110,11 +160,10 @@ class PipelinePropertiesSpec extends AnyFunSuite {
     assert((pt, cn) === (("Trade", "Jane Doe")))
   }
 
-  test("property: classifyPages == the scalar twin per page, and agrees " +
-      "with the page's records, partitions in {0, 1, 4}") {
+  private def classifyMatchesRecords(spaces: Boolean): Unit = {
     import spark.implicits._
     check(Prop.forAllNoShrink(pageSets) { case (seed, idx, parts) =>
-      val pages = idx.map(PagesGen.pageFor(_, seed))
+      val pages = pagesOf(seed, idx, spaces)
       val got = classified(spark.createDataset(pages), parts)
       val byPage = pages.map { p =>
         val md = ContentExtractor.extract(p.html).page_md
@@ -137,6 +186,17 @@ class PipelinePropertiesSpec extends AnyFunSuite {
       (Prop(got.size == pages.size) && Prop.all(byPage: _*)) :|
         s"seed=$seed pages=${idx.size} partitions=$parts"
     }, trials = 10)
+  }
+
+  test("property: classifyPages == the scalar twin per page, and agrees " +
+      "with the page's records, partitions in {0, 1, 4}") {
+    classifyMatchesRecords(spaces = false)
+  }
+
+  test("property: classifyPages == the scalar twin per page and agrees " +
+      "with its records on page sets with tab, CR, NBSP and U+2000-U+200A " +
+      "in cells and headings") {
+    classifyMatchesRecords(spaces = true)
   }
 
   // ---- (b) segmentation of Positions pages ----

@@ -194,6 +194,42 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("extraction: CurateApp's extraction stage and the default records " +
+      "and pageTexts plans have no Exchange") {
+    // pages are extracted inside the scan's tasks unless a caller asks
+    // for the url-hash repartition: no default plan shuffles raw html
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.exists(_.isInstanceOf[DataWritingCommandExec]))
+          writes.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val ep = graft.pipeline.ExtractionPipeline
+    val pages = graft.gen.PagesGen.pages(spark, 40, 42, 2)
+    val out = java.nio.file.Files.createTempDirectory("graft_ps_curate")
+    withPlainPlan {
+      spark.listenerManager.register(listener)
+      try {
+        CurateApp.extractedTexts(spark, out.toString)(pages)
+        org.apache.spark.TestBus.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      val plans = writes.toArray(Array.empty[SparkPlan]).toSeq
+      assert(plans.size === 1, s"one write for the extraction stage: $plans")
+      assert(plans.head.exists(_.isInstanceOf[MapPartitionsExec]),
+        s"no extraction in the stage's write plan:\n${plans.head}")
+      Seq("extraction stage" -> plans.head,
+        "records" -> ep.records(pages).queryExecution.executedPlan,
+        "pageTexts" -> ep.pageTexts(pages).queryExecution.executedPlan)
+        .foreach { case (name, plan) =>
+          val exchanges = plan.collect { case e: Exchange => e.nodeName }
+          assert(exchanges.isEmpty, s"exchanges in the $name plan: $exchanges")
+        }
+    }
+  }
+
   test("extraction stream: a micro-batch's write plan has no Exchange " +
       "at the default partitions") {
     import spark.implicits._

@@ -385,4 +385,36 @@ class ResumeSpec extends AnyFunSuite {
     val gate = spark.read.parquet(s"$dir/stage_1_gate")
     assert(gate.columns.contains("_paras"))
   }
+
+  test("CurateApp pages: a committed extraction stage is the resume " +
+      "point, so a resumed run extracts no page again") {
+    import spark.implicits._
+    val pages = spark.createDataset((0L until 160L).map(PagesGen.pageFor(_, 42)))
+    // any page the resumed run evaluates fails it
+    val poisoned = pages.map { p =>
+      if (p != null) throw new IllegalStateException(s"${p.url} re-extracted")
+      p
+    }
+    def curated(dir: String)(in: => org.apache.spark.sql.Dataset[graft.model.Page]) =
+      graft.ops.Curation.curateStaged(CurateApp.extractedTexts(spark, dir)(in),
+          "doc_id", "text", dir, minTokens = 5, paraMinDocs = 3)
+        .select("doc_id", "lang", "n_tokens", "clean_text")
+        .collect().map(_.toString).toSeq.sorted
+    val cleanDir = Files.createTempDirectory("graft_x_clean").toString
+    val ref = curated(cleanDir)(pages)
+    assert(ref.nonEmpty)
+
+    // the killed run: the extraction stage commits, then the run stops
+    // before the gate
+    val resumeDir = Files.createTempDirectory("graft_x_resume").toString
+    CurateApp.extractedTexts(spark, resumeDir)(pages)
+    assert(graft.io.StagedJob.readRows(resumeDir, CurateApp.ExtractStage)
+      .contains(160L))
+    assert(!graft.io.StagedJob.committed(resumeDir, "1_gate"))
+    assert(intercept[Exception](poisoned.count()).getMessage
+      .contains("re-extracted"))
+
+    // resumed over pages whose evaluation throws: the same curated rows
+    assert(curated(resumeDir)(poisoned) === ref)
+  }
 }

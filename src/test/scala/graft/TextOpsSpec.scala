@@ -5,11 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class TextOpsSpec extends AnyFunSuite {
 
-  test("normalizeText collapses whitespace") {
-    assert(TextOps.normalizeText("  a\t b\n\nc ") === "a b c")
-    assert(TextOps.normalizeText(null) === "")
-  }
-
   test("cleanHtmlText strips tags + entities") {
     assert(TextOps.cleanHtmlText("<b>a &amp; b</b>&nbsp;c") === "a & b c")
   }
@@ -33,11 +28,6 @@ class TextOpsSpec extends AnyFunSuite {
     assert(ts.length === 1)
     assert(ts(0).headers === Seq("A", "B"))
     assert(ts(0).rows === Seq(Seq("1", "2"), Seq("3", "4")))
-  }
-
-  test("markdownTableLines skips separators (run.py:33-47)") {
-    val md = "| a |\n|---|\n| b |\nno"
-    assert(TextOps.markdownTableLines(md) === Seq("| a |", "| b |"))
   }
 
   test("field regexes: ISIN, account, portfolio, dates, client") {
